@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.domain._
 
@@ -34,34 +33,22 @@ object DomainBench {
     // the remainder split percent (it IS unique per order — checked at
     // sf0.01 and sf0.1).
     //
-    // Default path: hash-agg (cnt + max(struct(tiebreak))) + equi join
-    // back — two hash shuffles, NO sort; the row equal to the per-order
-    // max struct is the remainder carrier, bit-equal to rn==cnt under a
-    // unique tiebreak. Measured at sf0.1 vs the shared-sort WindowExec
-    // twin (SPARK_GRAFT_SYNTH=window): see NOTES round 10. At 100 TB the
-    // agg form also partial-aggregates map-side, where a window must
-    // shuffle every row to its order's partition and sort it.
-    val withCnt =
-      if (sys.env.get("SPARK_GRAFT_SYNTH").contains("window")) {
-        val ordered = Window.partitionBy(col("l_orderkey"))
-          .orderBy(col("l_linenumber"), col("l_suppkey"), col("l_partkey"))
-        li.withColumn("cnt", count(lit(1)).over(
-            ordered.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-          .withColumn("rn", row_number().over(ordered))
-          .withColumn("base_pct", floor(lit(10000) / col("cnt")) / 100.0)
-          .withColumn("split_pct",
-            when(col("rn") < col("cnt"), col("base_pct"))
-              .otherwise(round(lit(100.0) - col("base_pct") * (col("cnt") - 1), 2)))
-      } else {
-        val tiebreak = struct(col("l_linenumber"), col("l_suppkey"), col("l_partkey"))
-        val perOrder = li.groupBy(col("l_orderkey"))
-          .agg(count(lit(1)).as("cnt"), max(tiebreak).as("__last"))
-        li.join(perOrder, Seq("l_orderkey"))
-          .withColumn("base_pct", floor(lit(10000) / col("cnt")) / 100.0)
-          .withColumn("split_pct",
-            when(tiebreak =!= col("__last"), col("base_pct"))
-              .otherwise(round(lit(100.0) - col("base_pct") * (col("cnt") - 1), 2)))
-      }
+    // Hash-agg (cnt + max(struct(tiebreak))) + equi join back — two hash
+    // shuffles, NO sort; the row equal to the per-order max struct is the
+    // remainder carrier, bit-equal to a per-order row_number == count
+    // under a unique tiebreak. Against the shared-sort WindowExec form it
+    // was a dead heat (sf0.1 10.91 vs 10.94 s; 10x min-of-3 54.4 vs
+    // 54.5 s — NOTES round 10); it is kept because at 100 TB the agg form
+    // partial-aggregates map-side, where a window must shuffle every row
+    // to its order's partition and sort it.
+    val tiebreak = struct(col("l_linenumber"), col("l_suppkey"), col("l_partkey"))
+    val perOrder = li.groupBy(col("l_orderkey"))
+      .agg(count(lit(1)).as("cnt"), max(tiebreak).as("__last"))
+    val withCnt = li.join(perOrder, Seq("l_orderkey"))
+      .withColumn("base_pct", floor(lit(10000) / col("cnt")) / 100.0)
+      .withColumn("split_pct",
+        when(tiebreak =!= col("__last"), col("base_pct"))
+          .otherwise(round(lit(100.0) - col("base_pct") * (col("cnt") - 1), 2)))
     withCnt.select(
       col("l_orderkey").as("cert_id"),
       concat(lit("G"), pmod(col("l_orderkey"), lit(3079))).as("group_id"),
@@ -101,26 +88,18 @@ object DomainBench {
   def glInputs(spark: SparkSession, sfDir: String): Calc.CalcInputs = {
     def mat(df: DataFrame): DataFrame = graft.Mat(df)
     val certs = mat(synthCertificates(spark, sfDir))
-    // Fused one-shuffle hash build is the DEFAULT (bit-equal to the
-    // two-phase build — ProposalsSpec; measured 9.3-9.6 s vs 10.7-11.2 s
-    // flagship at sf0.1): per-split rows explode back out of the fused
-    // frame instead of paying a second aggregate's shuffle.
-    // SPARK_GRAFT_FUSED=0 restores the two-phase build for comparison.
-    val (hh, cfg) =
-      if (!sys.env.get("SPARK_GRAFT_FUSED").contains("0")) {
-        val fused = mat(Proposals.fusedHashes(certs))
-        (Proposals.fusedSplitRows(fused),
-          mat(Proposals.routeGroups(
-            Proposals.flagNonConformant(fused.select(col("cert_id"),
-              col("group_id"), col("config_hash"), col("total_split_pct"),
-              col("n_splits"))),
-            maxUniqueRatio = 1.0, maxEntropy = 99.0, minDominantPct = 0.0)))
-      } else {
-        val h = mat(Proposals.hierarchyHashes(certs))
-        (h, mat(Proposals.routeGroups(
-          Proposals.flagNonConformant(Proposals.configHashes(h)),
-          maxUniqueRatio = 1.0, maxEntropy = 99.0, minDominantPct = 0.0)))
-      }
+    // Fused one-shuffle hash build (bit-equal to the two-phase
+    // hierarchyHashes -> configHashes build — ProposalsSpec; measured
+    // 9.3-9.6 s vs 10.7-11.2 s flagship at sf0.1): per-split rows explode
+    // back out of the fused frame instead of paying a second aggregate's
+    // shuffle.
+    val fused = mat(Proposals.fusedHashes(certs))
+    val hh = Proposals.fusedSplitRows(fused)
+    val cfg = mat(Proposals.routeGroups(
+      Proposals.flagNonConformant(fused.select(col("cert_id"),
+        col("group_id"), col("config_hash"), col("total_split_pct"),
+        col("n_splits"))),
+      maxUniqueRatio = 1.0, maxEntropy = 99.0, minDominantPct = 0.0))
     val props = mat(Proposals.normalizeDateRanges(Proposals.buildProposals(cfg, certs)))
     // multi-version flow: splits reference the business slot (group x seq)
     // and the calc's as-of join resolves the slot's version island active
@@ -167,8 +146,8 @@ object DomainBench {
 
     // persist the fan-in frames: certs feeds hashing + calc-cert derivation,
     // hierarchy hashes feed configs + splits + hierarchy dedup, configs feed
-    // proposals + splits — without persistence the synth lineage (two windows
-    // over lineitem) re-executes once per consumer
+    // proposals + splits — without persistence the synth lineage
+    // (aggregate + join over lineitem) re-executes once per consumer
     val certs = synthCertificates(spark, sfDir).persist()
     val nCertRows = certs.count() // input scale, forces the synth
 

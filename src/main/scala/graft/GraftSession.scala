@@ -35,16 +35,12 @@ object GraftSession {
       // shuffled-hash join (no per-side sort) when its size conditions
       // hold — the planner's own stats gate plus AQE skew-join splitting
       // still guard the build side, so sort-merge remains the fallback
-      // for anything big or skewed. Adopted in r14 after a 4-round
-      // interleaved A/B at sf0.1 (OPTIMIZATION_r14.md): consistent wins
-      // on the iterative graph family and the calc composites (d_kcore
-      // 4.41→3.58, d_modularity 4.55→4.04, d_prefix_jaccard 3.38→2.86,
-      // g_incremental_gl 17.6→15.8 — each beyond what any SMJ round
-      // matched), no reproducible loss on any join-bearing family.
-      // SPARK_GRAFT_PREFER_SMJ=1 restores Spark's default.
-      .config("spark.sql.join.preferSortMergeJoin",
-        if (sys.env.get("SPARK_GRAFT_PREFER_SMJ").contains("1")) "true"
-        else "false")
+      // for anything big or skewed. Kept on those grounds, not on a local
+      // win: r14's calibration-clean interleaved A/B over the 12 heaviest
+      // join-bearing queries found the two postures indistinguishable at
+      // sf0.1 (pass totals 85.0/70.2/70.3/85.8 s SHJ/SMJ/SHJ/SMJ, per-query
+      // min-of-2 split 6/6 by sign; OPTIMIZATION_r14.md).
+      .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.extensions", "graft.sql.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")

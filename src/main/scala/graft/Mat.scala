@@ -22,8 +22,10 @@ import org.apache.spark.sql.DataFrame
   */
 object Mat {
   /** Mode: the `graft.mat` system property (tests) falls back to the
-    * `SPARK_GRAFT_MAT` env var (the driver's contract). */
-  private def mode: Option[String] =
+    * `SPARK_GRAFT_MAT` env var (the deployment setting). Operators that
+    * fold extra work into their materializing action (connected
+    * components' edge signature) branch on this same value. */
+  private[graft] def mode: Option[String] =
     sys.props.get("graft.mat").orElse(sys.env.get("SPARK_GRAFT_MAT"))
 
   def apply(df: DataFrame): DataFrame = mode match {
@@ -41,30 +43,5 @@ object Mat {
       org.apache.spark.sql.GraftPlanBridge.rddRoot(p)
     case Some("none") => df
     case _ => df.localCheckpoint(true)
-  }
-
-  /** Materialize `df` hash-partitioned on `keys` — AND KEEP THE LAYOUT
-    * VISIBLE to the planner. Iterative operators join/aggregate their
-    * materialized edge frames on the same key every round; plain
-    * [[apply]] cannot help them because `Dataset.localCheckpoint` (and
-    * `LogicalRDD.fromDataset`) capture outputPartitioning off the
-    * adaptive root BEFORE the final plan exists, so the leaf comes back
-    * `UnknownPartitioning` and every round re-exchanges it (probed on
-    * 4.1.2 — see GraftPlanBridge.reRootKeyed). The partition count is
-    * pinned to spark.sql.shuffle.partitions: an AQE-coalescible width
-    * could never co-partition with the sibling exchanges of later joins.
-    * Callers must only use this where results are partitioning-invariant
-    * (graph rounds here are exact aggregates over exact joins). */
-  def keyed(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
-    val n = df.sparkSession.sessionState.conf.numShufflePartitions
-    val r = df.repartition(n, keys: _*)
-    mode match {
-      case Some("none") => r
-      case Some("persist") =>
-        val p = r.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        org.apache.spark.sql.GraftPlanBridge.reRootKeyed(p, localCkpt = false)
-      case _ =>
-        org.apache.spark.sql.GraftPlanBridge.reRootKeyed(r, localCkpt = true)
-    }
   }
 }

@@ -3115,16 +3115,12 @@ object SparkEntry {
       // here (once inside the base-ledger Mat, once in the delta run's
       // final action). Interleaved A/B at sf0.1 in a calibration-clean
       // window (min-of-3 each): Mat'd 17.2/17.9/21.5 s vs lazy
-      // 27.7/27.8/26.3 s. SPARK_GRAFT_INC_MAT_VP=0 restores the lazy
-      // shape for comparison.
-      val matVp = !sys.env.get("SPARK_GRAFT_INC_MAT_VP").contains("0")
+      // 27.7/27.8/26.3 s.
       val in = in0.copy(
         certificates = graft.Mat(in0.certificates),
         splits = graft.Mat(in0.splits),
-        hierarchyVersions =
-          if (matVp) graft.Mat(in0.hierarchyVersions) else in0.hierarchyVersions,
-        participants =
-          if (matVp) graft.Mat(in0.participants) else in0.participants)
+        hierarchyVersions = graft.Mat(in0.hierarchyVersions),
+        participants = graft.Mat(in0.participants))
       val base = in.copy(premiums =
         in.premiums.filter(pmod(col("premium_id"), lit(7)) =!= 0))
       val delta = in.copy(premiums =
@@ -8878,12 +8874,9 @@ object SparkEntry {
       // within-cell pairs grow quadratically with the corpus (measured
       // at 10x vectors: 19.2 s at nlist=16 vs 9.7 s adaptive, the
       // latter with a colder JVM; nlist 16 vs 31 tie at 1x).
-      // SPARK_GRAFT_KNN_NLIST pins the cell count for experiments
       val e = emb(s, d)
-      val nl = sys.env.get("SPARK_GRAFT_KNN_NLIST").map(_.toInt)
-        .getOrElse(Similarity.adaptiveNlist(e.count()))
       Similarity.mutualKnnGraph(e, col("vec_id"), col("embedding"),
-        k = 3, nlist = nl)
+        k = 3, nlist = Similarity.adaptiveNlist(e.count()))
     },
       Some("""WITH e AS (SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings),
               nl AS (SELECT greatest(16, floor(sqrt(count(*) / 2.0))::BIGINT) AS nlist

@@ -41,7 +41,7 @@ object Tables {
     * when the input layout undercuts the session's parallelism. Fan-out
     * width follows the session's shuffle partitioning (which GraftSession
     * pins to SPARK_GRAFT_CPUS), so the driver's low-core bench run keeps
-    * its contract. SPARK_GRAFT_SCAN_FANOUT=0 disables.
+    * its contract.
     * Determinism: round-robin repartition sorts rows before distributing
     * (spark.sql.execution.sortBeforeRepartition, on by default), so the
     * row→partition assignment is a pure function of row content.
@@ -59,7 +59,6 @@ object Tables {
     * untouched, which is also the right call structurally: a frame that
     * already crossed a shuffle is session-parallel. */
   def fanOut(df: DataFrame): DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_SCAN_FANOUT").contains("0")) return df
     val allowed = Set("Project", "Filter", "LogicalRelation", "LogicalRDD",
       "LocalRelation", "DataSourceV2Relation", "DataSourceV2ScanRelation")
     val scanRooted = df.queryExecution.optimizedPlan.collect {

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
 
 /** The dirty-data cleaning kit.
   *
@@ -34,10 +33,6 @@ object Cleaning {
     when(t === "" || upper(t) === "NULL" || upper(t) === "N/A", lit(null))
       .otherwise(t)
   }
-
-  /** Safe typed cast (`TRY_CAST`/`TRY_CONVERT`, null on failure —
-    * `sql/02-input-tables.sql:245-251`). */
-  def tryCastClean(c: Column, dt: DataType): Column = cleanStr(c).try_cast(dt)
 
   /** Plan/product-code sanitization: null-ish -> the `'*'` wildcard
     * (`sql/transforms/08-analyze-conformance.sql:37-43`). */

@@ -17,35 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
-  /** Materialize an edge frame, optionally hash-partitioned on its
-    * per-round join key ([[graft.Mat.keyed]]) so the layout is
-    * established ONCE at build and every round's join/aggregate keyed
-    * the same way reuses it instead of re-exchanging the frame per
-    * round (guide §2.4).
-    *
-    * `SPARK_GRAFT_EDGE_LAYOUT=keyed` opts in — the DOCUMENTED DEFAULT
-    * FOR CLUSTER DEPLOYMENTS (set it in any multi-executor profile):
-    * there the per-round score/label frames are node-sized and the
-    * joins run sort-merge/shuffled-hash, so a reusable edge layout
-    * saves one full edge exchange per round. Correctness of the claimed
-    * layout under non-broadcast joins is spec-bound (MatSpec "keyed:
-    * non-broadcast join reuses the layout and keeps values" — values
-    * identical, exactly one probe-side exchange — plus the keyed-vs-
-    * default LPA bit-equality case; r14 also rewrites the claimed
-    * partitioning into the logical exprIds with an UnknownPartitioning
-    * fallback, so a mismatch can only de-optimize, never mis-place).
-    * The LOCAL default stays an unkeyed Mat: at sf0.1 every per-round
-    * small side broadcasts (the edge side never shuffles at all), so
-    * the build-time exchange plus the pinned non-coalescible width only
-    * cost — interleaved A/B: d_components 4.3-4.8 s → 8.4 s,
-    * d_ppr_seeds 3.4-4.2 → 4.9 s keyed. */
-  private def keyed(df: DataFrame, key: String): DataFrame =
-    if (sys.props.get("graft.edge.layout")
-        .orElse(sys.env.get("SPARK_GRAFT_EDGE_LAYOUT")).contains("keyed"))
-      graft.Mat.keyed(df, col(key))
-    else graft.Mat(df)
-
-
   /** Simplified PageRank (the original non-normalized formulation:
     * `r' = (1-d) + d * Σ_in r/outdeg`, no dangling-mass redistribution)
     * over a directed edge list, for a FIXED number of iterations —
@@ -65,11 +36,11 @@ object Components {
   def pageRank(
       edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, damping: Double = 0.85): DataFrame = {
-    // edge frame keyed on src once: the per-iteration contribution join
-    // and the out-degree aggregate both key on src (guide §2.4); nodes
-    // materialized so the per-iteration left join rebuilds neither
-    val e = keyed(edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct(), "src")
+    // edge frame and node set materialized once: the per-iteration
+    // contribution join, out-degree aggregate and left join read them
+    // without rebuilding either
+    val e = graft.Mat(edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst")).distinct())
     val nodes = graft.Mat(e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct())
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).cast("double").as("outdeg"))
@@ -115,9 +86,9 @@ object Components {
       .select(least(col(a), col(b)).cast("long").as("u"),
         greatest(col(a), col(b)).cast("long").as("v"))
       .filter(col("u") =!= col("v")).distinct()
-    val dir = keyed(
+    val dir = graft.Mat(
       e0.select(col("u").as("src"), col("v").as("dst"))
-        .unionByName(e0.select(col("v").as("src"), col("u").as("dst"))), "src")
+        .unionByName(e0.select(col("v").as("src"), col("u").as("dst"))))
     val outDeg = dir.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     val nodes = dir.select(col("src").as("node")).distinct()
     val sd = seeds.select(col("node").cast("long").as("node")).distinct()
@@ -177,44 +148,36 @@ object Components {
       .filter(col("u") =!= col("v"))
     def symmetrize(e: DataFrame): DataFrame =
       e.unionByName(e.select(col("v").as("u"), col("u").as("v"))).distinct()
-    val keyedMode = sys.props.get("graft.edge.layout")
-      .orElse(sys.env.get("SPARK_GRAFT_EDGE_LAYOUT")).contains("keyed")
-    val matMode = sys.props.get("graft.mat").orElse(sys.env.get("SPARK_GRAFT_MAT"))
-    // Materialize a round's edge frame keyed on u (both consumers — the
-    // per-node min aggregate and the equi join against it — key on u,
-    // guide §2.4) AND compute its order-independent edge-set signature
-    // (n_edges, Σ xxhash64(u, v)) — equal signatures across a round =
-    // fixed point — IN THE SAME ACTION (GraftPlanBridge.reRootEdgeSig):
-    // one driver round-trip per half-round instead of a materialize job
-    // PLUS a signature job (r14; the r13 shape re-scanned the fresh
-    // checkpoint blocks once per round just for the signature). Also
-    // returns the round's RDD so the PREVIOUS round's blocks can be
-    // freed as soon as its last consumer ran (guide §5 "unpersist when
-    // done" — before r14 every round's blocks lived until session end).
-    def matSig(df: DataFrame): (DataFrame, () => Unit, (Long, BigInt)) = {
-      val in = if (keyedMode)
-        df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, col("u"))
-      else df
-      matMode match {
+    // Materialize a round's edge frame AND compute its order-independent
+    // edge-set signature (n_edges, Σ xxhash64(u, v)) — equal signatures
+    // across a round = fixed point — IN THE SAME ACTION
+    // (GraftPlanBridge.reRootEdgeSig): one driver round-trip per
+    // half-round instead of a materialize job PLUS a signature job (r14;
+    // the r13 shape re-scanned the fresh checkpoint blocks once per round
+    // just for the signature). Also returns a release for the round's
+    // blocks so the PREVIOUS round's can be freed as soon as its last
+    // consumer ran (guide §5 "unpersist when done" — before r14 every
+    // round's blocks lived until session end). Mode is graft.Mat's.
+    def matSig(df: DataFrame): (DataFrame, () => Unit, (Long, BigInt)) =
+      graft.Mat.mode match {
         case Some("none") =>
           // no materialization in this mode by contract: signature runs as
           // its own aggregate over the (recomputed) frame, as before r14
-          val r = in.agg(count(lit(1)),
+          val r = df.agg(count(lit(1)),
             sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).first()
           val sig = if (r.isNullAt(1)) (0L, BigInt(0))
             else (r.getLong(0), BigInt(r.getDecimal(1).toBigInteger))
-          (in, () => (), sig)
+          (df, () => (), sig)
         case Some("persist") =>
-          val p = in.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           val (d, _, n, h) = org.apache.spark.sql.GraftPlanBridge
-            .reRootEdgeSig(p, localCkpt = false, claimLayout = keyedMode)
+            .reRootEdgeSig(p, localCkpt = false)
           (d, () => { p.unpersist(false); () }, (n, h))
         case _ =>
           val (d, rdd, n, h) = org.apache.spark.sql.GraftPlanBridge
-            .reRootEdgeSig(in, localCkpt = true, claimLayout = keyedMode)
+            .reRootEdgeSig(df, localCkpt = true)
           (d, () => { rdd.unpersist(false); () }, (n, h))
       }
-    }
     var (e, eFree, sig) = matSig(symmetrize(edges0))
     var converged = sig._1 == 0L
     var i = 0
@@ -276,11 +239,6 @@ object Components {
       iters: Int): DataFrame = {
     val e = graft.Mat(edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst")).distinct())
-    // NOT pre-keyed per orientation: the half-steps alternate join keys
-    // (src then dst), so one layout cannot serve both, and an A/B at
-    // sf0.1 showed two keyed copies cost more in build materialization
-    // than the per-iteration joins saved (scores frames broadcast at
-    // this scale, so the edge side never shuffles anyway).
     val nodes = graft.Mat(e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct())
     def l1norm(df: DataFrame, c: String): DataFrame = {
@@ -338,9 +296,9 @@ object Components {
       .select(least(col(a), col(b)).cast("long").as("u"),
         greatest(col(a), col(b)).cast("long").as("v"))
       .filter(col("u") =!= col("v")).distinct()
-    val dir = keyed(
+    val dir = graft.Mat(
       e0.select(col("u").as("src"), col("v").as("dst"))
-        .unionByName(e0.select(col("v").as("src"), col("u").as("dst"))), "src")
+        .unionByName(e0.select(col("v").as("src"), col("u").as("dst"))))
     def survivors(alive: DataFrame): DataFrame =
       dir
         .join(alive.select(col("node").as("src")), Seq("src"), "left_semi")
@@ -552,9 +510,9 @@ object Components {
       .select(least(col(a), col(b)).cast("long").as("u"),
         greatest(col(a), col(b)).cast("long").as("v"))
       .filter(col("u") =!= col("v")).distinct()
-    val dir = keyed(
+    val dir = graft.Mat(
       e0.select(col("u").as("src"), col("v").as("dst"))
-        .unionByName(e0.select(col("v").as("src"), col("u").as("dst"))), "src")
+        .unionByName(e0.select(col("v").as("src"), col("u").as("dst"))))
     // sources outside the graph still seed with dist 0 (they just have
     // no edges to relax over)
     var dist = graft.Mat(sources.select(col("node").cast("long").as("node"))
@@ -601,9 +559,9 @@ object Components {
       .select(least(col(a), col(b)).cast("long").as("u"),
         greatest(col(a), col(b)).cast("long").as("v"))
       .filter(col("u") =!= col("v")).distinct()
-    val dir = keyed(
+    val dir = graft.Mat(
       e0.select(col("u").as("src"), col("v").as("dst"))
-        .unionByName(e0.select(col("v").as("src"), col("u").as("dst"))), "dst")
+        .unionByName(e0.select(col("v").as("src"), col("u").as("dst"))))
     var labels = graft.Mat(
       dir.select(col("src").as("node")).distinct()
         .withColumn("lab", col("node")))
@@ -665,9 +623,9 @@ object Components {
       .select(least(col(a), col(b)).cast("long").as("u"),
         greatest(col(a), col(b)).cast("long").as("v"))
       .filter(col("u") =!= col("v")).distinct())
-    val dir = keyed(
+    val dir = graft.Mat(
       e0.select(col("u").as("src"), col("v").as("dst"))
-        .unionByName(e0.select(col("v").as("src"), col("u").as("dst"))), "src")
+        .unionByName(e0.select(col("v").as("src"), col("u").as("dst"))))
     val deg = dir.groupBy(col("src").as("x")).agg(count(lit(1)).as("d"))
     val centers = dir
       .join(deg.select(col("x").as("src"), col("d").as("dz")), Seq("src"))
@@ -716,13 +674,10 @@ object Components {
       edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
-    // keyed on src: the per-round live-src semi join reuses the layout;
-    // only the dst-side membership check re-exchanges, and the
-    // hasIncoming distinct then rides that dst layout for free
-    val e0 = keyed(edges
+    val e0 = graft.Mat(edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct(), "src")
+      .filter(col("src") =!= col("dst")).distinct())
     val nodes = e0.select(col("src").as("node"))
       .unionByName(e0.select(col("dst").as("node"))).distinct()
     // peeled: (node, peel_round) accumulated; live = nodes not yet peeled

@@ -31,10 +31,9 @@ object Dedup {
       df: DataFrame, id: Column, text: Column, n: Int): DataFrame =
     // native Generator when registered: tokenize + shingle + dedupe in one
     // pass inside GenerateExec, no document-sized intermediate arrays in
-    // the projection; row-equal to the HOF fallback below.
-    // SPARK_GRAFT_SHINGLE_GEN=0 forces the fallback for A/B timing.
-    if (!sys.env.get("SPARK_GRAFT_SHINGLE_GEN").contains("0") &&
-        df.sparkSession.catalog.functionExists("shingle_explode"))
+    // the projection; row-equal to the HOF fallback below, which serves
+    // sessions without GraftExtensions.
+    if (df.sparkSession.catalog.functionExists("shingle_explode"))
       df.select(id.cast("long").as("doc_id"),
         call_function("shingle_explode", text, lit(n)).as("sh"))
     else
@@ -222,19 +221,6 @@ object Dedup {
     * Replicable in any engine (unlike Murmur3 `hash()`). */
   def md5Int(c: Column): Column = conv(substring(md5(c), 1, 8), 16, 10).cast("long")
 
-  /** MinHash signature: for each of `numHashes` permutations
-    * h_i(x) = (a_i * md5int(x) + b_i) mod p, signature_i = min over the
-    * doc's shingles. a/b derived from the hash index — deterministic. */
-  def minHashSignature(shingles: Column, numHashes: Int): Column = {
-    val p = 4294967311L // smallest prime > 2^32
-    val hashes = (0 until numHashes).map { i =>
-      val a = 1L + 2L * i // odd multipliers
-      val b = 11L * i + 7L
-      array_min(transform(shingles, s => (md5Int(s) * a + b) % p))
-    }
-    array(hashes: _*)
-  }
-
   /** MinHash + LSH banding: docs sharing any band bucket are candidates;
     * exact Jaccard is then computed only on candidates. Returns candidate
     * pairs with their estimated (signature-agreement) similarity.
@@ -276,26 +262,13 @@ object Dedup {
     // and the materialized frame is doc_id + numHashes longs — orders of
     // magnitude narrower than the text it replaces (guide §5, §2.3).
     val docs = graft.Mat(sigs).filter(size(col("sig")) > 0)
-    val banded0 = docs.select(col("doc_id"), col("sig"),
+    val banded = docs.select(col("doc_id"), col("sig"),
       explode(sequence(lit(0), lit(bands - 1))).as("band"))
       .withColumn("bucket",
         concat_ws(",", col("band").cast("string"),
           array_join(transform(
             slice(col("sig"), col("band") * rowsPerBand + 1, lit(rowsPerBand)),
             x => x.cast("string")), ",")))
-    // cluster posture (SPARK_GRAFT_EDGE_LAYOUT=keyed, same env as the
-    // graph family's edge layout): materialize the banded frame
-    // hash-partitioned on bucket so the candidate self-join consumes ONE
-    // exchange-established layout from both sides (zero join-time
-    // exchanges — MatSpec's non-broadcast keyed-join case is the
-    // correctness spec) instead of exchanging the corpus-sized banded
-    // frame once per side. The LOCAL default stays lazy: at bench scale
-    // the join broadcasts and the pinned-width exchange would only cost.
-    val banded =
-      if (sys.props.get("graft.edge.layout")
-          .orElse(sys.env.get("SPARK_GRAFT_EDGE_LAYOUT")).contains("keyed"))
-        graft.Mat.keyed(banded0, col("bucket"))
-      else banded0
     // est_jaccard is computed BEFORE the pair dedup and folded into the
     // dedup key: it is a pure function of the pair's two signatures, so
     // grouping on (id_a, id_b, est) returns exactly the old

@@ -24,33 +24,8 @@ object GraftPlanBridge {
     classic.Dataset.ofRows(c.sparkSession, plan)
   }
 
-  /** Eager localCheckpoint that KEEPS the frame's physical partitioning
-    * and ordering. `Dataset.localCheckpoint` (and `LogicalRDD.fromDataset`)
-    * capture `outputPartitioning` from the AdaptiveSparkPlanExec root
-    * BEFORE the final plan exists, so every materialized frame comes back
-    * `UnknownPartitioning(0)` (probed on 4.1.2) and iterative operators
-    * re-exchange their edge frames every round even when the layout was
-    * established once up front. This variant materializes first, then
-    * reads the partitioning off the FINAL adaptive plan.
-    *
-    * The final plan's output exprIds are NOT assumed to equal the logical
-    * output's (r13 ADVICE: dedup'd self-join attrs or command-wrapped
-    * plans can diverge, and a partitioning expressed in stale exprIds
-    * would silently never satisfy a downstream distribution). Mirroring
-    * upstream `LogicalRDD.fromDataset`'s stats path: build the positional
-    * output association (schema-checked by `buildOutputAssocForRewrite`)
-    * and rewrite the partitioning/ordering expressions into the logical
-    * attributes; on any mismatch fall back to UnknownPartitioning — a
-    * correct de-optimization, never a wrong layout claim. */
-  def reRootKeyed(df: DataFrame, localCkpt: Boolean): DataFrame = {
-    val c = df.asInstanceOf[classic.Dataset[Row]]
-    val rdd = prepRdd(c, localCkpt)
-    rdd.count() // materialize now so the adaptive plan is final below
-    wrapFinal(c, rdd, claimLayout = true)
-  }
-
-  /** Materialize like [[reRootKeyed]] (or like plain Mat when
-    * `claimLayout` is false) AND compute an order-independent edge-set
+  /** Materialize like plain Mat (a localCheckpoint, or a re-root over a
+    * persisted frame's cache) AND compute an order-independent edge-set
     * signature — (row count, Σ xxhash64(col0, col1)) — DURING the
     * materializing action, instead of a second job per round. This is
     * the convergence check of the BSP connected-components loop folded
@@ -61,10 +36,18 @@ object GraftPlanBridge {
     * values match what the old `sum(xxhash64(u, v))` aggregate produced.
     * Returns the re-rooted frame, its RDD (so callers can free the
     * round's blocks explicitly once consumed), and the signature. */
-  def reRootEdgeSig(df: DataFrame, localCkpt: Boolean, claimLayout: Boolean)
+  def reRootEdgeSig(df: DataFrame, localCkpt: Boolean)
       : (DataFrame, org.apache.spark.rdd.RDD[_], Long, BigInt) = {
     val c = df.asInstanceOf[classic.Dataset[Row]]
-    val rdd = prepRdd(c, localCkpt)
+    // the per-row copy is only needed to make localCheckpoint's block
+    // caching safe (reused UnsafeRow buffers); in persist mode the rows
+    // come out of the dataset-level cache already copy-safe, and the map
+    // would both hide the cache from downstream actions and pay an
+    // unnecessary per-row copy (r13 ADVICE)
+    val rdd =
+      if (localCkpt) {
+        val r = c.queryExecution.toRdd.map(_.copy()); r.localCheckpoint(); r
+      } else c.queryExecution.toRdd
     // ONE job: computes the frame (filling the localCheckpoint blocks /
     // dataset-level cache as a side effect of first computation) while
     // folding every row into the signature. The hash-sum accumulates as a
@@ -84,62 +67,11 @@ object GraftPlanBridge {
       }
       Iterator.single((cnt, sum))
     }.fold((0L, 0L)) { case ((c1, s1), (c2, s2)) => (c1 + c2, s1 + s2) }
-    (wrapFinal(c, rdd, claimLayout), rdd, n, BigInt(h))
-  }
-
-  private def prepRdd(c: classic.Dataset[Row], localCkpt: Boolean)
-      : org.apache.spark.rdd.RDD[catalyst.InternalRow] =
-    // the per-row copy is only needed to make localCheckpoint's block
-    // caching safe (reused UnsafeRow buffers); in persist mode the rows
-    // come out of the dataset-level cache already copy-safe, and the map
-    // would both hide the cache from downstream actions and pay an
-    // unnecessary per-row copy (r13 ADVICE)
-    if (localCkpt) {
-      val r = c.queryExecution.toRdd.map(_.copy()); r.localCheckpoint(); r
-    } else c.queryExecution.toRdd
-
-  /** Wrap an already-materialized RDD as a LogicalRDD leaf; with
-    * `claimLayout`, carry the FINAL adaptive plan's partitioning/ordering
-    * across (exprId-rewritten — see [[reRootKeyed]]'s doc). */
-  private def wrapFinal(
-      c: classic.Dataset[Row],
-      rdd: org.apache.spark.rdd.RDD[catalyst.InternalRow],
-      claimLayout: Boolean): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder}
-    import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection, UnknownPartitioning}
-    val fin = c.queryExecution.executedPlan match {
-      case a: execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    // first leaf of a PartitioningCollection, as upstream fromDataset does
-    def firstLeaf(p: Partitioning): Partitioning = p match {
-      case pc: PartitioningCollection => firstLeaf(pc.partitionings.head)
-      case other => other
-    }
-    val assoc =
-      if (claimLayout)
-        execution.LogicalRDD
-          .buildOutputAssocForRewrite(fin.output, c.logicalPlan.output)
-      else None
-    val (part, ord) = assoc match {
-      case Some(m) =>
-        var missed = false
-        def rw[E <: Expression](e: E): E =
-          e.transform {
-            case a: Attribute => m.getOrElse(a, { missed = true; a })
-          }.asInstanceOf[E]
-        val p = firstLeaf(fin.outputPartitioning) match {
-          case e: Expression with Partitioning => rw(e).asInstanceOf[Partitioning]
-          case other => other
-        }
-        val o = fin.outputOrdering.map(so => rw(so: SortOrder))
-        if (missed) (UnknownPartitioning(rdd.getNumPartitions), Nil)
-        else (p, o)
-      case None => (UnknownPartitioning(rdd.getNumPartitions), Nil)
-    }
-    val plan = execution.LogicalRDD(
-      c.logicalPlan.output, rdd, part, ord,
+    // the leaf claims no partitioning, like `Dataset.localCheckpoint`'s
+    // leaf under AQE: consumers plan exactly as they do after plain Mat
+    val plan = execution.LogicalRDD(c.logicalPlan.output, rdd,
+      catalyst.plans.physical.UnknownPartitioning(rdd.getNumPartitions), Nil,
       isStreaming = false)(c.sparkSession, None, None)
-    classic.Dataset.ofRows(c.sparkSession, plan)
+    (classic.Dataset.ofRows(c.sparkSession, plan), rdd, n, BigInt(h))
   }
 }

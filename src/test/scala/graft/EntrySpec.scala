@@ -23,6 +23,33 @@ class EntrySpec extends SparkSpec {
     }
   }
 
+  test("src/main reads exactly the eight documented settings") {
+    // every env var / system property the engine reads is listed in the
+    // README's Configuration section; a new switch must be added there
+    // (and here) on purpose, not ship as an undocumented A/B toggle
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", sys.props("user.dir")),
+      "src", "main", "scala")
+    val files = {
+      val s = java.nio.file.Files.walk(root)
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
+      finally s.close()
+    }
+    assert(files.nonEmpty, s"no sources under $root")
+    val env = "SPARK_GRAFT_[A-Z_]+".r
+    val prop = """sys\.props(?:\.get)?\(\s*"(graft\.[\w.]+)"""".r
+    val found = files.flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      env.findAllIn(text).toSeq ++ prop.findAllMatchIn(text).map(_.group(1))
+    }.toSet
+    val allowed = Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_MAT", "SPARK_GRAFT_SF_DIR",
+      "SPARK_GRAFT_ONLY", "SPARK_GRAFT_REPEAT", "SPARK_GRAFT_BENCH_OUT",
+      "SPARK_GRAFT_REPO_DIR", "graft.mat")
+    assert(found == allowed,
+      s"unlisted: ${found -- allowed}; listed but unread: ${allowed -- found}")
+  }
+
   test("approx_count_distinct within 5% of exact") {
     val rows = SparkEntry.queries("a10_approx_distinct")(spark, sf001)
       .select(col("within_5pct")).collect()

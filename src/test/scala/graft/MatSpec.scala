@@ -43,78 +43,25 @@ class MatSpec extends SparkSpec {
     assert(a == 5050L && b == 50L)
   }
 
-  test("keyed: layout visible to the planner, rows identical, all modes") {
-    val base = (1 to 1000).toDF("v")
-      .select((col("v") % 97).as("k"), col("v").as("x"))
-    val expect = base.groupBy("k").agg(sum("x")).collect().toSet
-    for (mode <- Seq(None, Some("persist"), Some("none"))) {
-      def run() = {
-        val m = Mat.keyed(base, col("k"))
-        // the whole point of keyed: downstream ops clustered on k plan
-        // WITHOUT a fresh Exchange (plain Mat comes back UnknownPartitioning)
-        val agg = m.groupBy("k").agg(sum("x"))
-        val hasExchange = agg.queryExecution.executedPlan.toString
-          .contains("Exchange hashpartitioning")
-        (agg.collect().toSet, hasExchange)
-      }
-      val (rows, hasExchange) = mode.map(withMode(_)(run())).getOrElse(run())
-      assert(rows == expect, s"rows diverged in mode $mode")
-      if (mode != Some("none")) // none keeps the lazy repartition in-plan
-        assert(!hasExchange, s"mode $mode re-exchanged a keyed frame")
+  test("components: CC and LPA rows identical across Mat modes") {
+    // i -- i % 37: 37 star components rooted at 0..36, so every node's
+    // component is node % 37. Persist mode takes connectedComponents'
+    // edge-signature path over a persisted frame, none mode its separate
+    // signature aggregate; all three must agree row for row.
+    val pairs = (1 to 400).map(i => (i.toLong, (i % 37).toLong)).toDF("u", "v")
+    def run() = (
+      graft.operators.Components.connectedComponents(pairs, "u", "v")
+        .collect().toSet,
+      graft.operators.Components.labelPropagation(pairs, "u", "v", iters = 3)
+        .collect().toSet)
+    val (cc, lpa) = run()
+    assert(cc.map(r => (r.getLong(0), r.getLong(1))) ==
+      (0L to 400L).map(n => (n, n % 37)).toSet)
+    for (m <- Seq("persist", "none")) {
+      val (ccM, lpaM) = withMode(m)(run())
+      assert(ccM == cc, s"connectedComponents diverged in mode $m")
+      assert(lpaM == lpa, s"labelPropagation diverged in mode $m")
     }
-  }
-
-  test("keyed: non-broadcast join reuses the layout and keeps values (cluster posture)") {
-    // the 100 TB posture: per-round frames too big to broadcast, the join
-    // runs sort-merge/shuffled-hash — the keyed side must satisfy the
-    // join's distribution from its CLAIMED layout (zero re-exchange of
-    // that side) and the values must match plain compute. This is the
-    // spec the r13 verdict required before recommending
-    // SPARK_GRAFT_EDGE_LAYOUT=keyed as the cluster default: a stale
-    // exprId in the claimed partitioning would either no-op the layout
-    // (extra exchange) or, if it mis-lined-up, mis-place rows.
-    val left = (1 to 2000).toDF("v")
-      .select((col("v") % 131).as("k"), col("v").as("x"))
-    val right = (1 to 500).toDF("v")
-      .select((col("v") % 131).as("k"), (col("v") * 10).as("y"))
-    val expect = left.join(right, Seq("k")).groupBy("k")
-      .agg(sum(col("x") + col("y"))).collect().toSet
-    val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      for (mode <- Seq(None, Some("persist"))) {
-        def run() = {
-          val m = Mat.keyed(left, col("k"))
-          val j = m.join(right, Seq("k")).groupBy("k")
-            .agg(sum(col("x") + col("y")))
-          val rows = j.collect().toSet
-          // final adaptive plan: exactly ONE keyed exchange (the right,
-          // unkeyed side) — the keyed side joins from its claimed layout.
-          // AQE's toString repeats the plan under "== Initial Plan ==";
-          // count in the final section only.
-          val p = j.queryExecution.executedPlan.toString
-            .split("== Initial Plan ==").head
-          val nEx = "Exchange hashpartitioning".r.findAllIn(p).size
-          (rows, nEx, p)
-        }
-        val (rows, nEx, p) = mode.map(withMode(_)(run())).getOrElse(run())
-        assert(rows == expect, s"values diverged under keyed layout, mode $mode")
-        assert(nEx == 1, s"mode $mode: expected 1 exchange (probe side only):\n$p")
-      }
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
-  }
-
-  test("components edge layout: keyed mode replays the default bit-for-bit") {
-    val pairs = (1 to 400).flatMap(i => Seq((i.toLong, (i % 37).toLong)))
-      .toDF("u", "v")
-    val dflt = graft.operators.Components
-      .labelPropagation(pairs, "u", "v", iters = 3).collect().toSet
-    sys.props("graft.edge.layout") = "keyed"
-    try {
-      val keyed = graft.operators.Components
-        .labelPropagation(pairs, "u", "v", iters = 3).collect().toSet
-      assert(keyed == dflt)
-    } finally sys.props.remove("graft.edge.layout")
   }
 
   test("default (localCheckpoint) and none modes still compute correctly") {
