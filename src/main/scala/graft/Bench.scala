@@ -54,10 +54,13 @@ object Bench {
       (System.nanoTime() - t0) / 1e6
     }
     val forensics = scala.collection.mutable.LinkedHashMap[String, String]()
+    // queries whose run threw: their timings are not valid samples, so
+    // they are named in the artifact and counted on the JSON line
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       def once(): Double = {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        try { fn(spark, sfDir).count() } catch { case _: Throwable => failed += name; -1L }
         val s = (System.nanoTime() - t0) / 1e9
         // free persisted/localCheckpoint blocks a query left behind so the
         // next query's timing isn't degraded by memory pressure
@@ -116,7 +119,9 @@ object Bench {
       val forJson = forensics.toSeq.sortBy(_._1)
         .map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("\"forensics\":{", ",", "}")
-      val detail = "{\"sf\":\"" + sfDir + "\"," + queriesJson + "," + forJson + "}"
+      val failedJson = failed.map("\"" + _ + "\"").mkString("\"failed\":[", ",", "]")
+      val detail = "{\"sf\":\"" + sfDir + "\"," + queriesJson + "," + forJson + "," +
+        failedJson + "}"
       java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
         detail.getBytes("UTF-8"))
     } catch { case _: Throwable => () } // artifact write never fails the bench
@@ -125,7 +130,7 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val flagship = results.collectFirst { case ("domain_e2e_gl", v) => f(v) }.getOrElse("null")
-    println(s"""{"queries":$qs,"other_queries_n":${fast.size},"other_queries_total":${f(fast.map(_._2).sum)},"sf":"$sfDir","n_queries":${results.size},"flagship_domain_e2e_gl_sec":$flagship,"metric":"total","value":${f(total)},"unit":"sec"}""")
+    println(s"""{"queries":$qs,"other_queries_n":${fast.size},"other_queries_total":${f(fast.map(_._2).sum)},"sf":"$sfDir","n_queries":${results.size},"flagship_domain_e2e_gl_sec":$flagship,"n_failed":${failed.size},"metric":"total","value":${f(total)},"unit":"sec"}""")
     spark.stop()
   }
 }

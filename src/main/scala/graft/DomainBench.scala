@@ -85,9 +85,18 @@ object DomainBench {
     * flagship run and the incremental (base + delta batch) maintenance
     * twin, which must share EXACT inputs for the batch-identity oracle
     * to hold. */
-  def glInputs(spark: SparkSession, sfDir: String): Calc.CalcInputs = {
+  def glInputs(spark: SparkSession, sfDir: String): Calc.CalcInputs =
+    glBuild(spark, sfDir, graft.Mat(synthCertificates(spark, sfDir))).inputs
+
+  /** [[glInputs]] plus the frames [[main]]'s consolidation and
+    * resolution-validation steps read: the routed configs and the full
+    * proposals (hashes, product and plan sets). */
+  private case class GlBuild(inputs: Calc.CalcInputs, cfg: DataFrame, props: DataFrame)
+
+  /** The [[glInputs]] build over materialized certificates `certs`; the
+    * fan-in frames materialize through [[graft.Mat]]. */
+  private def glBuild(spark: SparkSession, sfDir: String, certs: DataFrame): GlBuild = {
     def mat(df: DataFrame): DataFrame = graft.Mat(df)
-    val certs = mat(synthCertificates(spark, sfDir))
     // Fused one-shuffle hash build (bit-equal to the two-phase
     // hierarchyHashes -> configHashes build — ProposalsSpec; measured
     // 9.3-9.6 s vs 10.7-11.2 s flagship at sf0.1): per-split rows explode
@@ -95,6 +104,9 @@ object DomainBench {
     // shuffle.
     val fused = mat(Proposals.fusedHashes(certs))
     val hh = Proposals.fusedSplitRows(fused)
+    // synthetic configs are near-unique per cert, so entropy routing is
+    // relaxed (it would route almost every group); the 2% split-sum
+    // carve-out still exercises the non-conformance path
     val cfg = mat(Proposals.routeGroups(
       Proposals.flagNonConformant(fused.select(col("cert_id"),
         col("group_id"), col("config_hash"), col("total_split_pct"),
@@ -132,79 +144,30 @@ object DomainBench {
       Seq.empty[(String, String, Double, java.sql.Date, java.sql.Date)]
         .toDF("broker_id", "recipient_id", "assigned_pct", "eff_from", "eff_to")
     }
-    Calc.CalcInputs(
+    GlBuild(Calc.CalcInputs(
       premiums, calcCerts,
       props.select(col("proposal_id"), col("group_id"),
         col("eff_from").cast("date").as("eff_from"), col("eff_to").cast("date").as("eff_to")),
-      splits, versions.drop("hierarchy_hash"), participants, rates, assignments)
+      splits, versions.drop("hierarchy_hash"), participants, rates, assignments), cfg, props)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.getOrCreate("graft-domain-bench")
     val t0 = System.nanoTime()
-
-    // persist the fan-in frames: certs feeds hashing + calc-cert derivation,
-    // hierarchy hashes feed configs + splits + hierarchy dedup, configs feed
-    // proposals + splits — without persistence the synth lineage
-    // (aggregate + join over lineitem) re-executes once per consumer
-    val certs = synthCertificates(spark, sfDir).persist()
-    val nCertRows = certs.count() // input scale, forces the synth
+    val certs = graft.Mat(synthCertificates(spark, sfDir))
+    val nCertRows = certs.count() // input scale
 
     val t1 = System.nanoTime()
-    // fused one-shuffle hash build, same as glPipeline's default
-    val fused = Proposals.fusedHashes(certs).persist()
-    val hh = Proposals.fusedSplitRows(fused)
-    // synthetic configs are near-unique per cert, so entropy routing is
-    // relaxed here (it would route almost every group); the 2% split-sum
-    // carve-out still exercises the non-conformance path
-    val cfg = Proposals.routeGroups(
-      Proposals.flagNonConformant(fused.select(col("cert_id"), col("group_id"),
-        col("config_hash"), col("total_split_pct"), col("n_splits"))),
-      maxUniqueRatio = 1.0, maxEntropy = 99.0, minDominantPct = 0.0).persist()
-    val props = Proposals.normalizeDateRanges(Proposals.buildProposals(cfg, certs))
-      .persist()
-    val splits = Proposals.splitConfigsVersioned(props, cfg, hh)
-    val (versions, participants) = Proposals.hierarchyEntitiesVersioned(certs)
     def phase[T](name: String)(f: => T): T = {
       val s = System.nanoTime(); val r = f
       System.err.println(f"[phase] $name: ${(System.nanoTime() - s) / 1e9}%.2f s"); r
     }
-    phase("cache fused hashes")(fused.count())
-    phase("cache cfg")(cfg.count())
+    // the glInputs build: hashes, configs and proposals materialize here
+    val GlBuild(in, cfg, props) = phase("inputs")(glBuild(spark, sfDir, certs))
     val nProposals = phase("proposals")(props.count())
-
-    val premiums = Tables.orders(spark, sfDir).select(
-      col("o_orderkey").as("premium_id"), col("o_orderkey").as("cert_id"),
-      concat(lit("G"), pmod(col("o_orderkey"), lit(3079))).as("group_id"),
-      col("o_totalprice").as("amount"),
-      date_add(to_date(col("o_orderdate")), 400).as("txn_date"))
-    val calcCerts = certs.groupBy(col("cert_id"))
-      .agg(first(col("group_id")).as("group_id"), first(col("product_code")).as("product_code"),
-        first(col("plan_code")).as("plan_code"))
-      .withColumn("state", lit("TX"))
-      .withColumn("group_size", lit(null).cast("int"))
-      .withColumn("real_rate", lit(null).cast("double"))
-    val rates = {
-      import spark.implicits._
-      (0 until 50).map(i => (s"SCHED$i", "*", "*",
-        null.asInstanceOf[java.lang.Integer], null.asInstanceOf[java.lang.Integer],
-        5.0 + (i % 10) * 0.5))
-        .toDF("schedule_code", "product_code", "state", "size_from", "size_to", "rate")
-    }
-    val assignments = {
-      import spark.implicits._
-      Seq.empty[(String, String, Double, java.sql.Date, java.sql.Date)]
-        .toDF("broker_id", "recipient_id", "assigned_pct", "eff_from", "eff_to")
-    }
-    val fin = Calc.run(Calc.CalcInputs(
-      premiums, calcCerts,
-      props.select(col("proposal_id"), col("group_id"),
-        col("eff_from").cast("date").as("eff_from"), col("eff_to").cast("date").as("eff_to")),
-      splits, versions, participants, rates, assignments)).persist()
-    phase("splits")(splits.persist().count())
-    phase("hierarchy entities")(versions.persist().count() + participants.persist().count())
-    val nGl = phase("calc+gl")(Calc.glEntries(fin).count())
+    val fin = phase("calc")(graft.Mat(Calc.run(in)))
+    val nGl = phase("gl")(Calc.glEntries(fin).count())
     val nTraced = phase("traceability")(Calc.traceability(fin).count())
     // the typed per-group state machine at scale: consolidate the built
     // proposals (3,079 groups) through flatMapGroups
@@ -220,7 +183,7 @@ object DomainBench {
       ResolutionValidator.summarize(ResolutionValidator.validate(
         certs, cfg,
         props.select(col("group_id"), col("config_hash"), col("proposal_id")),
-        splits, versions, participants, sampleMod = 20)))
+        in.splits, in.hierarchyVersions, in.participants, sampleMod = 20)))
     val secs = (System.nanoTime() - t1) / 1e9
     val total = (System.nanoTime() - t0) / 1e9
     val rps = (nCertRows / secs).toLong

@@ -14,9 +14,8 @@ import graft.streaming.StreamOps
   * (names carry the survey ids: s*, p*, j*, a*, w*, set*, f*, g*) or one of
   * the beyond-parity corpus operators (d* dedup, v* vectors, x* text,
   * m* multimodal, st* streaming-in-batch, iv* intervals). `oracleSql` holds
-  * the DuckDB-equivalent SQL for the driver's correctness gate; entries
-  * without SQL-expressible semantics (LSH planes, decode stubs) are
-  * rows-only by design.
+  * the DuckDB-equivalent SQL for the driver's correctness gate; every
+  * query has one (GateContractSpec asserts it).
   */
 object SparkEntry {
 
@@ -52,15 +51,83 @@ object SparkEntry {
   private def emb(s: SparkSession, d: String) = Tables.embeddings(s, d)
   private def ev(s: SparkSession, d: String)  = Tables.events(s, d)
 
+  /** The sparsified part co-occurrence graph: part pairs (u < v) sharing
+    * an order, kept by a 4% md5 slice so graph algorithms see real
+    * structure on the uniform synthetic data. Pair expansion is bounded
+    * by the per-order part count, so the self-join is order-local. */
+  private def partPairs(s: SparkSession, d: String): DataFrame = {
+    val p = li(s, d).select(col("l_orderkey").as("o"),
+      col("l_partkey").as("p")).distinct()
+    p.as("x").join(p.as("y"),
+        col("x.o") === col("y.o") && col("x.p") < col("y.p"))
+      .select(col("x.p").as("u"), col("y.p").as("v")).distinct()
+      .filter(pmod(graft.operators.Dedup.md5Int(
+        concat(col("u").cast("string"), lit(":"), col("v").cast("string"))),
+        lit(1000)) < 40)
+  }
+
+  /** Seed nodes for walks over [[partPairs]]: the part keys divisible by 997. */
+  private def seedParts(s: SparkSession, d: String): DataFrame =
+    li(s, d).select(col("l_partkey").as("node")).distinct()
+      .filter(pmod(col("node"), lit(997)) === 0)
+
+  /** One proposal per order (product set {status}, plan set `planCodes`)
+    * through the consolidation state machine, flattened to scalars. */
+  private def consolidateOrders(s: SparkSession, d: String, planCodes: Column): DataFrame = {
+    val props = ord(s, d).select(
+      concat(lit("G"), col("o_custkey")).as("group_id"),
+      concat(lit("P"), col("o_orderkey")).as("proposal_id"),
+      md5(col("o_orderpriority")).as("config_md5"),
+      to_date(col("o_orderdate")).cast("string").as("eff_from"),
+      when(col("o_orderstatus") === "O", lit(null).cast("string"))
+        .otherwise(date_add(to_date(col("o_orderdate")), 30).cast("string")).as("eff_to"),
+      array(col("o_orderstatus")).as("product_codes"),
+      planCodes.as("plan_codes"))
+    graft.domain.Consolidate.consolidate(props)
+      .select(col("group_id"), col("consolidated_id"), col("config_md5"),
+        col("eff_from"), col("eff_to"),
+        array_join(col("product_codes"), ",").as("products"),
+        array_join(col("plan_codes"), ",").as("plans"),
+        col("n_merged"))
+  }
+
+  /** Signature-change versions of each customer's order priority. */
+  private def orderPriorityVersions(s: SparkSession, d: String): DataFrame = {
+    val obs = ord(s, d).select(
+      concat(lit("G"), col("o_custkey")).as("key"),
+      to_date(col("o_orderdate")).as("observed_at"),
+      col("o_orderpriority").as("signature"))
+    graft.domain.HierarchyVersioning.versionsFromObservations(
+      obs, col("key"), col("observed_at"), col("signature"))
+  }
+
+  /** A 30-day coverage window per order, keyed by customer. */
+  private def orderCoverage(s: SparkSession, d: String): DataFrame =
+    ord(s, d).select(col("o_custkey"), col("o_orderdate"),
+      (col("o_orderdate") + expr("INTERVAL 30 DAY")).as("o_end"))
+
+  /** The j16 typo generator over part(p_partkey, p_name): delete, swap or
+    * substitute one character at a key-derived position; every 17th name
+    * is reversed (unmatchable noise). */
+  private def typoPartName: Column = {
+    val name = col("p_name")
+    val len = length(name)
+    val pos = (pmod(col("p_partkey"), (len - 2).cast("long")) + 2).cast("int")
+    val kind = pmod(col("p_partkey"), lit(3))
+    val del = concat(name.substr(lit(1), pos - 1), name.substr(pos + 1, len))
+    val swp = concat(name.substr(lit(1), pos - 1),
+      name.substr(pos + 1, lit(1)), name.substr(pos, lit(1)),
+      name.substr(pos + 2, len))
+    val sub = concat(name.substr(lit(1), pos - 1), lit("x"),
+      name.substr(pos + 1, len))
+    when(pmod(col("p_partkey"), lit(17)) === 0, reverse(name))
+      .when(kind === 0, del).when(kind === 1, swp)
+      .otherwise(sub)
+  }
+
   private type QFn = (SparkSession, String) => DataFrame
   private case class Q(name: String, fn: QFn, oracle: Option[String])
 
-  /** Generated unigram-LM oracle CTEs (the x_bpe_deep pattern applied to
-    * Kudo-2018 Viterbi segmentation): head = word frequencies, substring
-    * candidates, the frequency-seeded vocab `v0`; then one CTE per prefix
-    * length replaying the DP step (extend best paths at positions
-    * `p-maxPieceLen..p-1` by the connecting vocab piece, keep the
-    * rounded-score / longest-piece winner per word). */
   /** Generated Poisson-bootstrap oracle: one uniform + one inverse-CDF
     * weight column per resample, 2B conditional sums, in-row sort of the
     * B means — mirrors `Stats.poissonBootstrapCi` expression for
@@ -94,6 +161,12 @@ object SparkEntry {
        |       $b AS n_resamples FROM m""".stripMargin
   }
 
+  /** Generated unigram-LM oracle CTEs (the x_bpe_deep pattern applied to
+    * Kudo-2018 Viterbi segmentation): head = word frequencies, substring
+    * candidates, the frequency-seeded vocab `v0`; then one CTE per prefix
+    * length replaying the DP step (extend best paths at positions
+    * `p-maxPieceLen..p-1` by the connecting vocab piece, keep the
+    * rounded-score / longest-piece winner per word). */
   private def unigramHeadCtes(pLen: Int, vSize: Int, wLen: Int): String =
     s"""WITH toks AS (SELECT unnest(string_split_regex(trim(text), '\\s+')) AS term
        |  FROM documents),
@@ -268,6 +341,450 @@ object SparkEntry {
     s"$head$steps"
   }
 
+  // ------------------------------------------------ shared oracle fragments
+  //
+  // CTE text that two or more oracles replay verbatim, and generators for
+  // numbered iteration chains. Each fragment is a run of `name AS (...)`
+  // CTEs with no trailing comma; callers join fragments with ",\n" and
+  // supply the WITH (unless the fragment's doc says it starts with one)
+  // and the readout.
+
+  /** Flagship cert rows: per-order split count `cnt` and row rank `rn`
+    * under the full (linenumber, suppkey, partkey) tiebreak, plus the
+    * equal-share `base_pct` (DomainBench.synthCertificates). */
+  private val certSplitCtes: String = """li AS (
+                SELECT l_orderkey, l_linenumber, l_suppkey, l_shipdate,
+                       count(*) OVER (PARTITION BY l_orderkey) AS cnt,
+                       row_number() OVER (PARTITION BY l_orderkey
+                         ORDER BY l_linenumber, l_suppkey, l_partkey) AS rn
+                FROM lineitem),
+              c0 AS (SELECT *, floor(10000 / cnt) / 100.0 AS base_pct FROM li)"""
+
+  /** Hierarchy hash per (cert, split) and config hash per cert over
+    * `rows0(cert_id, group_id, split_seq, split_pct, item)`, with the
+    * split-sum non-conformance flag (Proposals.hierarchyHashes /
+    * configHashes / flagNonConformant). */
+  private val hierarchyConfigCtes: String = """hh AS (
+                SELECT cert_id, group_id, split_seq, split_pct,
+                       upper(sha256(group_id || '!' || split_pct::VARCHAR || '!' ||
+                         string_agg(item, '|' ORDER BY item))) AS hierarchy_hash
+                FROM rows0 GROUP BY 1, 2, 3, 4),
+              cfg AS (
+                SELECT cert_id, group_id,
+                       upper(sha256(string_agg(
+                         split_pct::VARCHAR || ':' || hierarchy_hash, '|'
+                         ORDER BY split_pct::VARCHAR || ':' || hierarchy_hash)))
+                         AS config_hash,
+                       abs(sum(split_pct) - 100.0) > 0.001 AS nonconformant
+                FROM hh GROUP BY 1, 2)"""
+
+  /** MinHash signatures of word-trigram shingles over `toks(doc_id, w)`:
+    * 16 universal hashes, as Dedup.minHashLshPairs draws them. */
+  private val minHashSigCtes: String = """sh AS (SELECT doc_id,
+                       unnest(list_distinct([array_to_string(w[i:i+2], ' ')
+                                             for i in generate_series(1, len(w) - 2)])) AS s
+                     FROM toks WHERE len(w) >= 3),
+              h AS (SELECT doc_id, i,
+                      min((('0x' || substr(md5(s), 1, 8))::BIGINT * (1 + 2 * i) + (11 * i + 7))
+                          % 4294967311) AS m
+                    FROM sh, (SELECT unnest(generate_series(0, 15)) AS i)
+                    GROUP BY 1, 2),
+              sig AS (SELECT doc_id, list(m ORDER BY i) AS sig FROM h GROUP BY 1)"""
+
+  /** 4x4 LSH banding of [[minHashSigCtes]], the candidate pairs, and their
+    * connected components `comp(node, component = min member)` by
+    * recursive reachability (needs WITH RECURSIVE). */
+  private val lshComponentCtes: String = """banded AS (SELECT doc_id,
+                           b::VARCHAR || ',' || array_to_string(sig[b*4+1:b*4+4], ',') AS bucket
+                         FROM sig, (SELECT unnest(generate_series(0, 3)) AS b)),
+              cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+                       FROM banded a JOIN banded b
+                         ON a.bucket = b.bucket AND a.doc_id < b.doc_id),
+              edges AS (SELECT id_a AS src, id_b AS dst FROM cand
+                        UNION SELECT id_b, id_a FROM cand),
+              nodes AS (SELECT DISTINCT src AS node FROM edges),
+              reach AS (SELECT node, node AS rch FROM nodes
+                        UNION
+                        SELECT reach.node, edges.dst
+                        FROM reach JOIN edges ON reach.rch = edges.src),
+              comp AS (SELECT node, min(rch) AS component FROM reach GROUP BY node)"""
+
+  /** `qual(doc_id, quality)`: TextFunctions.qualityScore over `documents`. */
+  private val qualityCtes: String = """b0 AS (SELECT doc_id, text,
+                (CASE WHEN length(trim(text)) = 0 THEN 0
+                      ELSE len(string_split_regex(trim(text), '\s+')) END)::INT AS n_tok_ws,
+                (length(text) - length(regexp_replace(text, '[.,;:!?''"()\[\]{}-]', '', 'g')))::INT AS n_punct,
+                len(regexp_extract_all(lower(text),
+                  '\b(the|a|an|and|or|of|to|in|is|it|that|for|on|with|as)\b'))::INT AS n_stop
+              FROM documents),
+              qual AS (SELECT doc_id,
+                round(least(greatest(
+                  least(n_tok_ws / 100.0, 1.0) * 0.4
+                  + least((CASE WHEN n_tok_ws > 0 THEN n_stop / n_tok_ws::DOUBLE ELSE 0 END) * 4.0, 1.0) * 0.4
+                  + (1.0 - least((CASE WHEN length(text) > 0 THEN n_punct / length(text)::DOUBLE ELSE 0 END) * 10.0, 1.0)) * 0.2,
+                  0.0), 1.0), 6) AS quality
+              FROM b0)"""
+
+  /** Deterministic seed centroids for IVF cells and k-means: the lowest
+    * `id` of each `id % cells` residue class of `e(id, v)`, as CTE `name`. */
+  private def seedCentroidsCte(name: String, id: String, cells: String): String =
+    s"""$name AS (SELECT m.cell, e.v AS centroid
+       |  FROM (SELECT $id % $cells AS cell, min($id) AS mvid
+       |    FROM e GROUP BY 1) m
+       |  JOIN e ON e.$id = m.mvid)""".stripMargin
+
+  /** Nearest-centroid cell of every `e(id, v)` row against the centroid
+    * CTE `cents` (rounded cosine desc, cell asc), as CTE `name`. */
+  private def assignCellCte(name: String, id: String, cents: String): String =
+    s"""$name AS (SELECT $id, v, cell FROM (
+       |  SELECT e.$id, e.v, c.cell,
+       |    row_number() OVER (PARTITION BY e.$id
+       |      ORDER BY round(list_cosine_similarity(e.v, c.centroid), 6) DESC,
+       |        c.cell) AS rn
+       |  FROM e CROSS JOIN $cents c) WHERE rn = 1)""".stripMargin
+
+  /** IVF cells as Similarity.ivfCosineTopK builds them: seed centroids
+    * `cent` and the cell assignment `asg(id, v, cell)`. */
+  private def ivfCellCtes(id: String, cells: String): String =
+    seedCentroidsCte("cent", id, cells) + ",\n" + assignCellCte("asg", id, "cent")
+
+  /** The v_ann_ivf index (16 cells over `e(vec_id, v)`) plus `probes`:
+    * the 4 nearest cells of each query `vec_id < 20`. */
+  private val ivfProbeCtes: String = ivfCellCtes("vec_id", "16") +
+    """,
+      |probes AS (SELECT vec_id AS query_id, v AS qv, cell FROM (
+      |  SELECT e.vec_id, e.v, c.cell,
+      |    row_number() OVER (PARTITION BY e.vec_id
+      |      ORDER BY round(list_cosine_similarity(e.v, c.centroid), 6) DESC,
+      |        c.cell) AS rn
+      |  FROM e CROSS JOIN cent c WHERE e.vec_id < 20) WHERE rn <= 4)""".stripMargin
+
+  /** Generated Lloyd k-means oracle CTEs (Clustering.kMeansAssign, k = 8,
+    * 64 dims): seeds `c0`, then per iteration the assignment `aI`, the
+    * rounded per-dimension means `mI` and the centroids `cI`. Starts
+    * with WITH `e`; ends in `c<iters>`. */
+  private def kMeansCtes(iters: Int): String = {
+    val steps = (1 to iters).map { i =>
+      s""",
+         |${assignCellCte(s"a$i", "vec_id", s"c${i - 1}")},
+         |m$i AS (SELECT cell, i, round(avg(v[i + 1]), 6) AS m
+         |  FROM a$i, range(64) r(i) GROUP BY 1, 2),
+         |c$i AS (SELECT cell, list(m ORDER BY i) AS centroid FROM m$i GROUP BY 1)""".stripMargin
+    }.mkString
+    "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),\n" +
+      seedCentroidsCte("c0", "vec_id", "8") + steps
+  }
+
+  /** The LSH family's 8 x 64 md5-derived hyperplanes (seed 42; first 8
+    * digest bytes as a signed long / Long.MaxValue) and the embeddings
+    * `e(vec_id, v)`. Starts with WITH. */
+  private val lshPlanesCtes: String = """WITH planes AS (
+                SELECT p, d,
+                       (('0x' || substr(md5('42:' || p::VARCHAR || ':' || d::VARCHAR), 1, 16))::UBIGINT::HUGEINT
+                        - CASE WHEN ('0x' || substr(md5('42:' || p::VARCHAR || ':' || d::VARCHAR), 1, 16))::UBIGINT
+                                    >= 9223372036854775808::UBIGINT
+                               THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END)::DOUBLE
+                       / 9223372036854775807 AS pval
+                FROM (SELECT unnest(generate_series(0, 7)) AS p),
+                     (SELECT unnest(generate_series(0, 63)) AS d)),
+              e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"""
+
+  /** [[lshPlanesCtes]] plus each vector's sign-bit bucket (dot products
+    * rounded at 9 decimals before the sign). */
+  private val lshBucketCtes: String = lshPlanesCtes + """,
+              dots AS (SELECT e.vec_id, pl.p,
+                              round(sum(e.v[pl.d + 1] * pl.pval), 9) AS dt
+                       FROM e CROSS JOIN planes pl GROUP BY 1, 2),
+              buckets AS (SELECT vec_id,
+                                 sum(CASE WHEN dt >= 0 THEN 1::BIGINT << p ELSE 0 END) AS bucket
+                          FROM dots GROUP BY 1)"""
+
+  /** Generated NN-descent oracle CTEs (Similarity.nnDescentGraph, k = 3):
+    * md5-seeded random init scored into `g0`, then per round the k-capped
+    * bidirected adjacency `uR`, neighbor-of-neighbor candidates `cR`,
+    * their scores `scR` and the top-k graph `gR`. Starts with WITH `e`;
+    * ends in `g<rounds>`, materialized when `materializeLast`. */
+  private def nnDescentCtes(rounds: Int, materializeLast: Boolean): String = {
+    def topK(r: Int, mat: Boolean): String =
+      s"""sc$r AS (SELECT c.vid, c.cand,
+         |  round(list_cosine_similarity(a.v, b.v), 6) AS cos
+         |  FROM c$r c JOIN e a ON a.vid = c.vid
+         |    JOIN e b ON b.vid = c.cand),
+         |g$r AS ${if (mat) "MATERIALIZED " else ""}(SELECT vid, cand, cos, rn FROM (
+         |  SELECT vid, cand, cos, row_number() OVER (
+         |    PARTITION BY vid ORDER BY cos DESC, cand) AS rn
+         |  FROM sc$r) z WHERE rn <= 3)""".stripMargin
+    val init =
+      """WITH e AS MATERIALIZED (
+        |  SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings),
+        |nn AS (SELECT count(*) AS n FROM e),
+        |c0 AS (SELECT DISTINCT vid, cand FROM (
+        |  SELECT e.vid,
+        |    ('0x' || substr(md5(e.vid::VARCHAR || '#nnd' || j::VARCHAR), 1, 8))::BIGINT
+        |      % (SELECT n FROM nn) AS cand
+        |  FROM e CROSS JOIN range(1, 4) t(j)) z
+        |  WHERE cand <> vid),
+        |""".stripMargin + topK(0, mat = true)
+    val steps = (1 to rounds).map { r =>
+      s""",
+         |u$r AS (SELECT DISTINCT src, dst FROM (
+         |  SELECT vid AS src, cand AS dst FROM g${r - 1}
+         |  UNION ALL
+         |  SELECT cand AS src, vid AS dst FROM (
+         |    SELECT vid, cand, row_number() OVER (
+         |      PARTITION BY cand ORDER BY cos DESC, vid) AS rr
+         |    FROM g${r - 1}) z WHERE rr <= 3) w),
+         |c$r AS (SELECT DISTINCT vid, cand FROM (
+         |  SELECT x.src AS vid, y.dst AS cand FROM u$r x JOIN u$r y
+         |    ON x.dst = y.src AND x.src <> y.dst
+         |  UNION ALL SELECT vid, cand FROM g${r - 1}) w),
+         |""".stripMargin + topK(r, mat = r < rounds || materializeLast)
+    }.mkString
+    init + steps
+  }
+
+  /** Generated greedy best-first walk (Similarity.greedySearchOverEdges)
+    * over the digraph `ed(src, dst)` and vectors `e(vid, v)`: entry node
+    * min(vid), queries `vid < 20`, then per hop the move to the
+    * most-similar neighbor while it strictly improves. Ends in the
+    * readout of hop `hops`. */
+  private def greedyWalkOracle(hops: Int): String = {
+    val steps = (1 to hops).map { h =>
+      s""",
+         |s$h AS MATERIALIZED (SELECT s.query_id, s.qv,
+         |  CASE WHEN b.bsim > s.sim THEN b.bnode ELSE s.cur END AS cur,
+         |  CASE WHEN b.bsim > s.sim THEN b.bsim ELSE s.sim END AS sim,
+         |  s.moves + CASE WHEN b.bsim > s.sim THEN 1 ELSE 0 END AS moves
+         |  FROM s${h - 1} s LEFT JOIN (
+         |    SELECT query_id, bnode, bsim FROM (
+         |      SELECT t.query_id, ev.vid AS bnode,
+         |        round(list_cosine_similarity(t.qv, ev.v), 6) AS bsim,
+         |        row_number() OVER (PARTITION BY t.query_id
+         |          ORDER BY round(list_cosine_similarity(t.qv, ev.v), 6) DESC,
+         |            ev.vid) AS rn
+         |      FROM s${h - 1} t JOIN ed ON ed.src = t.cur
+         |      JOIN e ev ON ev.vid = ed.dst) z WHERE rn = 1) b
+         |  USING (query_id))""".stripMargin
+    }.mkString
+    """ent AS (SELECT min(vid) AS cur FROM e),
+      |q AS (SELECT vid AS query_id, v AS qv FROM e WHERE vid < 20),
+      |s0 AS MATERIALIZED (SELECT query_id, qv, cur,
+      |    round(list_cosine_similarity(qv, ev.v), 6) AS sim, 0 AS moves
+      |  FROM q CROSS JOIN ent JOIN e ev ON ev.vid = cur)""".stripMargin + steps +
+      s"\nSELECT query_id, cur AS node_id, sim, moves FROM s$hops"
+  }
+
+  /** SQL twin of [[partPairs]]: order-local parts `p`, the md5-sliced
+    * undirected edge list `b(u, v)` and its bidirected form
+    * `<edges>(src, dst)`. Starts with WITH. */
+  private def partGraphCtes(edges: String): String =
+    s"""WITH p AS MATERIALIZED (
+       |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+       |b AS MATERIALIZED (
+       |  SELECT u, v FROM (
+       |    SELECT DISTINCT least(x.p, y.p) AS u, greatest(x.p, y.p) AS v
+       |    FROM p x JOIN p y ON x.o = y.o AND x.p < y.p) b0
+       |  WHERE ('0x' || substring(md5(u::VARCHAR || ':' || v::VARCHAR),
+       |    1, 8))::BIGINT % 1000 < 40),
+       |$edges AS MATERIALIZED (
+       |  SELECT u AS src, v AS dst FROM b
+       |  UNION ALL SELECT v, u FROM b)""".stripMargin
+
+  /** Generated label-propagation CTEs over `e(src, dst)`
+    * (Components.labelPropagation): `l0` labels each node by itself; each
+    * round takes the most frequent neighbor label, min label on ties.
+    * Ends in `l<iters>`. */
+  private def lpaCtes(iters: Int): String =
+    "l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS lab FROM e)" +
+      (1 to iters).map { i =>
+        s""",
+           |l$i AS MATERIALIZED (SELECT node, lab FROM (
+           |  SELECT e.src AS node, l.lab, count(*) AS c,
+           |    row_number() OVER (PARTITION BY e.src
+           |      ORDER BY count(*) DESC, l.lab) AS rn
+           |  FROM e JOIN l${i - 1} l ON e.dst = l.node GROUP BY 1, 2) q WHERE rn = 1)""".stripMargin
+      }.mkString
+
+  /** Generated k-core peeling CTEs over `e(src, dst)` (Components.kCore):
+    * each synchronous round keeps the nodes with at least `k` neighbors
+    * inside the previous round's set. Ends in `a<rounds>`. */
+  private def kCoreCtes(k: Int, rounds: Int): String =
+    "a0 AS MATERIALIZED (SELECT DISTINCT src AS node FROM e)" +
+      (1 to rounds).map { i =>
+        s""",
+           |a$i AS MATERIALIZED (SELECT e.src AS node FROM e
+           |  JOIN a${i - 1} s ON e.src = s.node JOIN a${i - 1} t ON e.dst = t.node
+           |  GROUP BY 1 HAVING count(*) >= $k)""".stripMargin
+      }.mkString
+
+  /** Generated multi-source BFS CTEs over `e(src, dst)`
+    * (Components.bfsLevels) from the `l_partkey % 997 = 0` seeds: one
+    * unit-weight relaxation per round. Ends in `d<rounds>`. */
+  private def bfsCtes(rounds: Int): String =
+    """d0 AS MATERIALIZED (SELECT DISTINCT l_partkey AS node, 0 AS dist
+      |  FROM lineitem WHERE l_partkey % 997 = 0)""".stripMargin +
+      (1 to rounds).map { i =>
+        s""",
+           |d$i AS MATERIALIZED (SELECT node, min(dist)::INT AS dist FROM (
+           |  SELECT node, dist FROM d${i - 1} UNION ALL
+           |  SELECT e.dst, d.dist + 1 FROM e JOIN d${i - 1} d ON e.src = d.node) z
+           |  GROUP BY 1)""".stripMargin
+      }.mkString
+
+  /** Generated PageRank iteration CTEs over `e(src, dst)`
+    * (Components.pageRank, damping 0.85): node set `n`, out-degrees `od`,
+    * uniform `r0`, then one round-9 rank CTE per iteration. Ends in
+    * `r<iters>`. */
+  private def pageRankCtes(iters: Int): String =
+    """n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
+      |od AS (SELECT src, count(*)::DOUBLE AS outdeg FROM e GROUP BY 1),
+      |r0 AS (SELECT node, 1.0::DOUBLE AS rank FROM n)""".stripMargin +
+      (1 to iters).map { i =>
+        s""",
+           |r$i AS (SELECT n.node, round(0.15 + 0.85 * coalesce(s.in_sum, 0.0), 9) AS rank
+           |  FROM n LEFT JOIN (
+           |    SELECT e.dst AS node, sum(r.rank / od.outdeg) AS in_sum
+           |    FROM e JOIN r${i - 1} r ON r.node = e.src JOIN od ON od.src = e.src
+           |    GROUP BY 1) s USING (node))""".stripMargin
+      }.mkString
+
+  /** Generated personalized-PageRank iteration CTEs
+    * (Components.personalizedPageRank) over `ed(src, dst)`, out-degrees
+    * `dg` and restart mass `bs(node, e)`, quantized with the explicit
+    * floor(x*1e9+0.5)/1e9 of the operator. Ends in `r<iters>`. */
+  private def pprCtes(iters: Int): String =
+    (1 to iters).map { i =>
+      s"""r$i AS MATERIALIZED (SELECT b2.node,
+         |    floor((0.15 * b2.e + 0.85 * coalesce(c.insum, 0.0)) * 1e9 + 0.5) / 1e9 AS rank
+         |  FROM bs b2 LEFT JOIN (
+         |    SELECT ed.dst AS node,
+         |      sum((floor(r.rank / dg.outdeg * 1e9 + 0.5) / 1e9)::DECIMAL(28,9))::DOUBLE AS insum
+         |    FROM ed JOIN r${i - 1} r ON ed.src = r.node
+         |    JOIN dg ON dg.src = ed.src GROUP BY 1) c USING (node))""".stripMargin
+    }.mkString(",\n")
+
+  /** Relational replay of the consolidation state machine over one
+    * proposal per order: islands of equal config per group (plus the
+    * `extraBreak` predicate lines, each starting with a newline), sticky
+    * null end dates. `propCols` ends the `props` projection; `readout`
+    * ends the final SELECT from its products column on. */
+  private def consolidateOracle(
+      propCols: String, extraBreak: String, readout: String): String =
+    s"""WITH props AS (
+       |  SELECT 'G' || o_custkey::VARCHAR AS group_id,
+       |    'P' || o_orderkey::VARCHAR AS proposal_id,
+       |    md5(o_orderpriority) AS config_md5,
+       |    o_orderdate::DATE::VARCHAR AS eff_from,
+       |    CASE WHEN o_orderstatus = 'O' THEN NULL
+       |      ELSE (o_orderdate::DATE + 30)::VARCHAR END AS eff_to,
+       |    $propCols
+       |  FROM orders),
+       |s AS (
+       |  SELECT *, CASE WHEN lag(config_md5) OVER w IS DISTINCT FROM config_md5$extraBreak
+       |      THEN 1 ELSE 0 END AS brk
+       |  FROM props
+       |  WINDOW w AS (PARTITION BY group_id
+       |    ORDER BY eff_from, config_md5, proposal_id)),
+       |i AS (
+       |  SELECT *, sum(brk) OVER (PARTITION BY group_id
+       |    ORDER BY eff_from, config_md5, proposal_id
+       |    ROWS UNBOUNDED PRECEDING) AS island
+       |  FROM s)
+       |SELECT group_id,
+       |  group_id || '-C' || island::VARCHAR AS consolidated_id,
+       |  config_md5, min(eff_from) AS eff_from,
+       |  CASE WHEN count(*) FILTER (WHERE eff_to IS NULL) > 0 THEN NULL
+       |    ELSE max(eff_to) END AS eff_to,
+       |""".stripMargin + readout
+
+  /** Signature-change versions of each customer's order priority (the
+    * SQL twin of [[orderPriorityVersions]], before the lead-closed end
+    * dates): observations `obs`, change flags `f`, version numbers `v`
+    * and per-version start dates `g`. */
+  private val orderVersionCtes: String = """obs AS (
+                SELECT DISTINCT 'G' || o_custkey::VARCHAR AS key,
+                       o_orderdate::DATE AS observed_at,
+                       o_orderpriority AS signature
+                FROM orders),
+              f AS (
+                SELECT *, CASE WHEN lag(signature) OVER w IS NULL
+                                 OR lag(signature) OVER w <> signature
+                               THEN 1 ELSE 0 END AS chg
+                FROM obs
+                WINDOW w AS (PARTITION BY key ORDER BY observed_at, signature)),
+              v AS (
+                SELECT *, sum(chg) OVER (PARTITION BY key
+                            ORDER BY observed_at, signature
+                            ROWS UNBOUNDED PRECEDING)::BIGINT AS version_seq
+                FROM f),
+              g AS (SELECT key, version_seq, signature, min(observed_at) AS eff_from
+                    FROM v GROUP BY 1, 2, 3)"""
+
+  /** Merged 30-day coverage islands per customer (Intervals): windows
+    * `s(key, f, t)`, running max end `x` and island ids `y`. */
+  private val coverageIslandCtes: String = """s AS (SELECT o_custkey AS key, o_orderdate AS f,
+                                o_orderdate + INTERVAL 30 DAY AS t FROM orders),
+              x AS (SELECT key, f, t,
+                      max(t) OVER (PARTITION BY key ORDER BY f, t
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS mx
+                    FROM s),
+              y AS (SELECT key, f, t,
+                      sum(CASE WHEN mx IS NULL OR f > mx THEN 1 ELSE 0 END)
+                        OVER (PARTITION BY key ORDER BY f, t ROWS UNBOUNDED PRECEDING) AS isl
+                    FROM x)"""
+
+  /** Per-doc adjacent word pairs `pairs(doc_id, w1, w2)` and the corpus
+    * bigram LM's negative log-likelihood `lm(w1, w2, nll)` as exact
+    * DECIMAL (TextFunctions.perplexityFilter). */
+  private val bigramNllCtes: String = """toks AS (SELECT doc_id,
+                unnest(string_split_regex(trim(text), '\s+')) AS w,
+                generate_subscripts(string_split_regex(trim(text), '\s+'), 1) AS pos
+              FROM documents),
+              p AS (SELECT doc_id, w AS w1,
+                      lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
+                    FROM toks WHERE w <> ''),
+              pairs AS (SELECT doc_id, w1, w2 FROM p WHERE w2 IS NOT NULL),
+              c AS (SELECT w1, w2, count(*)::BIGINT AS cnt FROM pairs GROUP BY 1, 2),
+              lm AS (SELECT w1, w2,
+                       round(-ln(round(cnt / (sum(cnt) OVER (PARTITION BY w1)), 6)), 9)
+                         ::DECIMAL(12,9) AS nll
+                     FROM c)"""
+
+  /** `sc(<score>, y)`: TextFunctions.qualityScore as a predictor of
+    * `lang = 'en'`; `scoreAs` casts and names the score column. */
+  private def enQualityCtes(scoreAs: String): String = """b AS (SELECT lang,
+                (CASE WHEN length(trim(text)) = 0 THEN 0
+                      ELSE len(string_split_regex(trim(text), '\s+')) END)::INT AS n_tok_ws,
+                (length(text) - length(regexp_replace(text, '[.,;:!?''"()\[\]{}-]', '', 'g')))::INT AS n_punct,
+                len(regexp_extract_all(lower(text),
+                  '\b(the|a|an|and|or|of|to|in|is|it|that|for|on|with|as)\b'))::INT AS n_stop,
+                length(text) AS n_ch
+              FROM documents),
+              sc AS (SELECT round(least(greatest(
+                  least(n_tok_ws / 100.0, 1.0) * 0.4
+                  + least((CASE WHEN n_tok_ws > 0 THEN n_stop / n_tok_ws::DOUBLE ELSE 0 END) * 4.0, 1.0) * 0.4
+                  + (1.0 - least((CASE WHEN n_ch > 0 THEN n_punct / n_ch::DOUBLE ELSE 0 END) * 10.0, 1.0)) * 0.2,
+                  0.0), 1.0), 6)""" + scoreAs + """,
+                (CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS y
+              FROM b)"""
+
+  /** SQL twin of [[typoPartName]]: `base` derives the edit position and
+    * kind; `dirty` selects `cols` then the typo'd name as `alias`. */
+  private def typoPartCtes(cols: String, alias: String): String =
+    s"""base AS (SELECT p_partkey, p_name,
+       |    (p_partkey % (length(p_name) - 2) + 2)::INT AS pos,
+       |    p_partkey % 3 AS kind FROM part),
+       |dirty AS (SELECT ${cols}CASE
+       |    WHEN p_partkey % 17 = 0 THEN reverse(p_name)
+       |    WHEN kind = 0 THEN substr(p_name, 1, pos - 1)
+       |      || substr(p_name, pos + 1, length(p_name))
+       |    WHEN kind = 1 THEN substr(p_name, 1, pos - 1)
+       |      || substr(p_name, pos + 1, 1) || substr(p_name, pos, 1)
+       |      || substr(p_name, pos + 2, length(p_name))
+       |    ELSE substr(p_name, 1, pos - 1) || 'x'
+       |      || substr(p_name, pos + 1, length(p_name)) END AS $alias
+       |  FROM base)""".stripMargin
+
   /** Repo root for committed fixtures — env-overridable so a checkout at a
     * different location resolves the same files. Note: the value is baked
     * into the rendered oracle SQL, so the Spark side and the oracle engine
@@ -280,13 +797,7 @@ object SparkEntry {
     * `domain_e2e_gl` and the incremental-maintenance twin
     * `g_incremental_gl`, whose batch-identity contract is exactly "equals
     * this from-scratch result". */
-  private val domainGlOracleSql: String = """WITH li AS (
-                SELECT l_orderkey, l_linenumber, l_suppkey, l_shipdate,
-                       count(*) OVER (PARTITION BY l_orderkey) AS cnt,
-                       row_number() OVER (PARTITION BY l_orderkey
-                         ORDER BY l_linenumber, l_suppkey, l_partkey) AS rn
-                FROM lineitem),
-              c0 AS (SELECT *, floor(10000 / cnt) / 100.0 AS base_pct FROM li),
+  private val domainGlOracleSql: String = "WITH " + certSplitCtes + """,
               rows0 AS (
                 SELECT l_orderkey AS cert_id,
                        'G' || (l_orderkey % 3079)::VARCHAR AS group_id,
@@ -301,19 +812,7 @@ object SparkEntry {
                        'P' || l_suppkey::VARCHAR AS broker_id,
                        l_suppkey % 50 AS sched_k
                 FROM c0),
-              hh AS (
-                SELECT cert_id, group_id, split_seq, split_pct,
-                       upper(sha256(group_id || '!' || split_pct::VARCHAR || '!' ||
-                         string_agg(item, '|' ORDER BY item))) AS hierarchy_hash
-                FROM rows0 GROUP BY 1, 2, 3, 4),
-              cfg AS (
-                SELECT cert_id, group_id,
-                       upper(sha256(string_agg(
-                         split_pct::VARCHAR || ':' || hierarchy_hash, '|'
-                         ORDER BY split_pct::VARCHAR || ':' || hierarchy_hash)))
-                         AS config_hash,
-                       abs(sum(split_pct) - 100.0) > 0.001 AS nonconformant
-                FROM hh GROUP BY 1, 2),
+""" + hierarchyConfigCtes + """,
               certdates AS (SELECT l_orderkey AS cert_id, min(l_shipdate::DATE) AS eff_date
                             FROM lineitem GROUP BY 1),
               props0 AS (
@@ -423,12 +922,13 @@ object SparkEntry {
   // -------------------------------------------------------------- the queries
 
   /** DuckDB replay of the full curation funnel over a `documents`
-    * relation (doc_id, text, lang, source) - shared by
-    * docs_e2e_curation (the driver parquet table) and
-    * docs_html_funnel (an HTML-extraction CTE standing in for
-    * `documents`). Body only: callers prepend "WITH RECURSIVE" and
-    * any CTEs of their own. */
-  private val curationFunnelOracle: String = """              corpus0 AS (SELECT * FROM documents WHERE doc_id % 97 <> 0),
+    * relation (doc_id, text, lang, source), ending in the per-doc stage
+    * flags `fin2` - shared by docs_e2e_curation and docs_html_funnel (an
+    * HTML-extraction CTE standing in for `documents`) through
+    * [[curationFunnelOracle]], and by d_curation_log's per-doc verdicts.
+    * Body only: callers prepend "WITH RECURSIVE" and any CTEs of their
+    * own. */
+  private val curationFunnelCtes: String = """              corpus0 AS (SELECT * FROM documents WHERE doc_id % 97 <> 0),
               b0 AS (SELECT doc_id, source, lang, text,
                 (CASE WHEN length(trim(text)) = 0 THEN 0
                       ELSE len(string_split_regex(trim(text), '\s+')) END)::INT AS n_tok_ws,
@@ -465,30 +965,7 @@ object SparkEntry {
                        ON f.fp = m.fp AND f.doc_id = m.k),
               s3 AS (SELECT s2.* FROM s2 JOIN ek USING (doc_id)),
               toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM s3),
-              sh AS (SELECT doc_id,
-                       unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-                                             for i in generate_series(1, len(w) - 2)])) AS s
-                     FROM toks WHERE len(w) >= 3),
-              h AS (SELECT doc_id, i,
-                      min((('0x' || substr(md5(s), 1, 8))::BIGINT * (1 + 2 * i) + (11 * i + 7))
-                          % 4294967311) AS m
-                    FROM sh, (SELECT unnest(generate_series(0, 15)) AS i)
-                    GROUP BY 1, 2),
-              sig AS (SELECT doc_id, list(m ORDER BY i) AS sig FROM h GROUP BY 1),
-              banded AS (SELECT doc_id,
-                           b::VARCHAR || ',' || array_to_string(sig[b*4+1:b*4+4], ',') AS bucket
-                         FROM sig, (SELECT unnest(generate_series(0, 3)) AS b)),
-              cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-                       FROM banded a JOIN banded b
-                         ON a.bucket = b.bucket AND a.doc_id < b.doc_id),
-              edges AS (SELECT id_a AS src, id_b AS dst FROM cand
-                        UNION SELECT id_b, id_a FROM cand),
-              nodes AS (SELECT DISTINCT src AS node FROM edges),
-              reach AS (SELECT node, node AS rch FROM nodes
-                        UNION
-                        SELECT reach.node, edges.dst
-                        FROM reach JOIN edges ON reach.rch = edges.src),
-              comp AS (SELECT node, min(rch) AS component FROM reach GROUP BY node),
+""" + minHashSigCtes + ",\n" + lshComponentCtes + """,
               keepn AS (SELECT component, node AS keep_id FROM (
                           SELECT c.component, c.node,
                                  row_number() OVER (PARTITION BY c.component
@@ -519,7 +996,10 @@ object SparkEntry {
                          (s3ok0 AND doc_id NOT IN (SELECT doc_id FROM neard)) AS s4ok,
                          (s3ok0 AND doc_id NOT IN (SELECT doc_id FROM neard)
                           AND doc_id NOT IN (SELECT doc_id FROM contam)) AS s5ok
-                       FROM fin)
+                       FROM fin)"""
+
+  /** The funnel's per-(source, lang) stage counts and retention. */
+  private val curationFunnelOracle: String = curationFunnelCtes + """
               SELECT source, lang, count(*)::BIGINT AS n_docs,
                 sum(pass_q::INT)::BIGINT AS n_quality,
                 sum(pass_l::INT)::BIGINT AS n_lang,
@@ -1086,36 +1566,11 @@ object SparkEntry {
       // ONE distinct-aggregate; matching runs on vocabulary-sized frames
       // over an equi length-bucket join (lossless: lev >= |len diff|)
       val p = prt(s, d).select(col("p_partkey"), col("p_name"))
-      val name = col("p_name")
-      val len = length(name)
-      val pos = (pmod(col("p_partkey"), (len - 2).cast("long")) + 2).cast("int")
-      val kind = pmod(col("p_partkey"), lit(3))
-      val del = concat(name.substr(lit(1), pos - 1), name.substr(pos + 1, len))
-      val swp = concat(name.substr(lit(1), pos - 1),
-        name.substr(pos + 1, lit(1)), name.substr(pos, lit(1)),
-        name.substr(pos + 2, len))
-      val sub = concat(name.substr(lit(1), pos - 1), lit("x"),
-        name.substr(pos + 1, len))
-      val dirty = p.select(
-        when(pmod(col("p_partkey"), lit(17)) === 0, reverse(name))
-          .when(kind === 0, del).when(kind === 1, swp)
-          .otherwise(sub).as("dirty_name"))
+      val dirty = p.select(typoPartName.as("dirty_name"))
       Joins.fuzzyLookup(dirty, col("dirty_name"),
         prt(s, d), col("p_name"), maxDist = 2)
     },
-      Some("""WITH base AS (SELECT p_partkey, p_name,
-                       (p_partkey % (length(p_name) - 2) + 2)::INT AS pos,
-                       p_partkey % 3 AS kind FROM part),
-              dirty AS (SELECT CASE
-                  WHEN p_partkey % 17 = 0 THEN reverse(p_name)
-                  WHEN kind = 0 THEN substr(p_name, 1, pos - 1)
-                       || substr(p_name, pos + 1, length(p_name))
-                  WHEN kind = 1 THEN substr(p_name, 1, pos - 1)
-                       || substr(p_name, pos + 1, 1) || substr(p_name, pos, 1)
-                       || substr(p_name, pos + 2, length(p_name))
-                  ELSE substr(p_name, 1, pos - 1) || 'x'
-                       || substr(p_name, pos + 1, length(p_name)) END AS dirty_name
-                FROM base),
+      Some("WITH " + typoPartCtes("", "dirty_name") + """,
               dn AS (SELECT dirty_name, count(*)::BIGINT AS n_rows
                      FROM dirty GROUP BY 1),
               vn AS (SELECT DISTINCT p_name AS match_cand FROM part),
@@ -1141,37 +1596,12 @@ object SparkEntry {
       // closure via large-star/small-star components, one rollup row per
       // entity (reversed every-17th names stay singleton noise entities)
       val p = prt(s, d).select(col("p_partkey"), col("p_name"))
-      val name = col("p_name")
-      val len = length(name)
-      val pos = (pmod(col("p_partkey"), (len - 2).cast("long")) + 2).cast("int")
-      val kind = pmod(col("p_partkey"), lit(3))
-      val del = concat(name.substr(lit(1), pos - 1), name.substr(pos + 1, len))
-      val swp = concat(name.substr(lit(1), pos - 1),
-        name.substr(pos + 1, lit(1)), name.substr(pos, lit(1)),
-        name.substr(pos + 2, len))
-      val sub = concat(name.substr(lit(1), pos - 1), lit("x"),
-        name.substr(pos + 1, len))
-      val dirty = p.select((col("p_partkey") * 2 + 1).as("rid"),
-        when(pmod(col("p_partkey"), lit(17)) === 0, reverse(name))
-          .when(kind === 0, del).when(kind === 1, swp)
-          .otherwise(sub).as("nm"))
-      val recs = p.select((col("p_partkey") * 2).as("rid"), name.as("nm"))
+      val dirty = p.select((col("p_partkey") * 2 + 1).as("rid"), typoPartName.as("nm"))
+      val recs = p.select((col("p_partkey") * 2).as("rid"), col("p_name").as("nm"))
         .unionByName(dirty)
       Joins.fuzzyEntities(recs, col("rid"), col("nm"), maxDist = 2)
     },
-      Some("""WITH RECURSIVE base AS (SELECT p_partkey, p_name,
-                       (p_partkey % (length(p_name) - 2) + 2)::INT AS pos,
-                       p_partkey % 3 AS kind FROM part),
-              dirty AS (SELECT p_partkey * 2 + 1 AS rid, CASE
-                  WHEN p_partkey % 17 = 0 THEN reverse(p_name)
-                  WHEN kind = 0 THEN substr(p_name, 1, pos - 1)
-                       || substr(p_name, pos + 1, length(p_name))
-                  WHEN kind = 1 THEN substr(p_name, 1, pos - 1)
-                       || substr(p_name, pos + 1, 1) || substr(p_name, pos, 1)
-                       || substr(p_name, pos + 2, length(p_name))
-                  ELSE substr(p_name, 1, pos - 1) || 'x'
-                       || substr(p_name, pos + 1, length(p_name)) END AS nm
-                FROM base),
+      Some("WITH RECURSIVE " + typoPartCtes("p_partkey * 2 + 1 AS rid, ", "nm") + """,
               recs AS (SELECT p_partkey * 2 AS rid, p_name AS nm FROM part
                        UNION ALL SELECT rid, nm FROM dirty),
               names AS MATERIALIZED (SELECT nm, min(rid) AS nid,
@@ -1804,51 +2234,13 @@ object SparkEntry {
       // under a conflict-free restriction (wildcard plans never conflict):
       // runs of identical config per group = gaps-and-islands, with the
       // sticky-null end date and product-set union rules fully exercised
-      val props = ord(s, d).select(
-        concat(lit("G"), col("o_custkey")).as("group_id"),
-        concat(lit("P"), col("o_orderkey")).as("proposal_id"),
-        md5(col("o_orderpriority")).as("config_md5"),
-        to_date(col("o_orderdate")).cast("string").as("eff_from"),
-        when(col("o_orderstatus") === "O", lit(null).cast("string"))
-          .otherwise(date_add(to_date(col("o_orderdate")), 30).cast("string")).as("eff_to"),
-        array(col("o_orderstatus")).as("product_codes"),
-        array(lit("*")).as("plan_codes"))
-      graft.domain.Consolidate.consolidate(props)
-        .select(col("group_id"), col("consolidated_id"), col("config_md5"),
-          col("eff_from"), col("eff_to"),
-          array_join(col("product_codes"), ",").as("products"),
-          array_join(col("plan_codes"), ",").as("plans"),
-          col("n_merged"))
+      consolidateOrders(s, d, array(lit("*")))
     },
-      Some("""WITH props AS (
-                SELECT 'G' || o_custkey::VARCHAR AS group_id,
-                       'P' || o_orderkey::VARCHAR AS proposal_id,
-                       md5(o_orderpriority) AS config_md5,
-                       o_orderdate::DATE::VARCHAR AS eff_from,
-                       CASE WHEN o_orderstatus = 'O' THEN NULL
-                            ELSE (o_orderdate::DATE + 30)::VARCHAR END AS eff_to,
-                       o_orderstatus AS prod
-                FROM orders),
-              s AS (
-                SELECT *, CASE WHEN lag(config_md5) OVER w IS DISTINCT FROM config_md5
-                               THEN 1 ELSE 0 END AS brk
-                FROM props
-                WINDOW w AS (PARTITION BY group_id
-                             ORDER BY eff_from, config_md5, proposal_id)),
-              i AS (
-                SELECT *, sum(brk) OVER (PARTITION BY group_id
-                            ORDER BY eff_from, config_md5, proposal_id
-                            ROWS UNBOUNDED PRECEDING) AS island
-                FROM s)
-              SELECT group_id,
-                     group_id || '-C' || island::VARCHAR AS consolidated_id,
-                     config_md5, min(eff_from) AS eff_from,
-                     CASE WHEN count(*) FILTER (WHERE eff_to IS NULL) > 0 THEN NULL
-                          ELSE max(eff_to) END AS eff_to,
-                     array_to_string(list_sort(list(DISTINCT prod)), ',') AS products,
-                     '*' AS plans,
-                     count(*)::INT AS n_merged
-              FROM i GROUP BY group_id, island, config_md5""")),
+      Some(consolidateOracle("o_orderstatus AS prod", "",
+        """array_to_string(list_sort(list(DISTINCT prod)), ',') AS products,
+          |'*' AS plans,
+          |count(*)::INT AS n_merged
+          |FROM i GROUP BY group_id, island, config_md5""".stripMargin))),
 
     Q("g_consolidate_conflicts", (s, d) => {
       // rule 3 (plan conflict) exercised for real: two-element CONCRETE
@@ -1857,85 +2249,25 @@ object SparkEntry {
       // (inter = {priority} != union) -> conflict -> close. Islands
       // therefore break on (config, status) change, which the oracle
       // replicates relationally.
-      val props = ord(s, d).select(
-        concat(lit("G"), col("o_custkey")).as("group_id"),
-        concat(lit("P"), col("o_orderkey")).as("proposal_id"),
-        md5(col("o_orderpriority")).as("config_md5"),
-        to_date(col("o_orderdate")).cast("string").as("eff_from"),
-        when(col("o_orderstatus") === "O", lit(null).cast("string"))
-          .otherwise(date_add(to_date(col("o_orderdate")), 30).cast("string")).as("eff_to"),
-        array(col("o_orderstatus")).as("product_codes"),
-        array(col("o_orderstatus"), col("o_orderpriority")).as("plan_codes"))
-      graft.domain.Consolidate.consolidate(props)
-        .select(col("group_id"), col("consolidated_id"), col("config_md5"),
-          col("eff_from"), col("eff_to"),
-          array_join(col("product_codes"), ",").as("products"),
-          array_join(col("plan_codes"), ",").as("plans"),
-          col("n_merged"))
+      consolidateOrders(s, d, array(col("o_orderstatus"), col("o_orderpriority")))
     },
-      Some("""WITH props AS (
-                SELECT 'G' || o_custkey::VARCHAR AS group_id,
-                       'P' || o_orderkey::VARCHAR AS proposal_id,
-                       md5(o_orderpriority) AS config_md5,
-                       o_orderdate::DATE::VARCHAR AS eff_from,
-                       CASE WHEN o_orderstatus = 'O' THEN NULL
-                            ELSE (o_orderdate::DATE + 30)::VARCHAR END AS eff_to,
-                       o_orderstatus AS st, o_orderpriority AS pri
-                FROM orders),
-              s AS (
-                SELECT *, CASE WHEN lag(config_md5) OVER w IS DISTINCT FROM config_md5
-                                 OR lag(st) OVER w IS DISTINCT FROM st
-                               THEN 1 ELSE 0 END AS brk
-                FROM props
-                WINDOW w AS (PARTITION BY group_id
-                             ORDER BY eff_from, config_md5, proposal_id)),
-              i AS (
-                SELECT *, sum(brk) OVER (PARTITION BY group_id
-                            ORDER BY eff_from, config_md5, proposal_id
-                            ROWS UNBOUNDED PRECEDING) AS island
-                FROM s)
-              SELECT group_id,
-                     group_id || '-C' || island::VARCHAR AS consolidated_id,
-                     config_md5, min(eff_from) AS eff_from,
-                     CASE WHEN count(*) FILTER (WHERE eff_to IS NULL) > 0 THEN NULL
-                          ELSE max(eff_to) END AS eff_to,
-                     st AS products,
-                     array_to_string(list_sort([st, pri]), ',') AS plans,
-                     count(*)::INT AS n_merged
-              FROM i GROUP BY group_id, island, config_md5, st, pri""")),
+      Some(consolidateOracle("o_orderstatus AS st, o_orderpriority AS pri",
+        "\nOR lag(st) OVER w IS DISTINCT FROM st",
+        """st AS products,
+          |array_to_string(list_sort([st, pri]), ',') AS plans,
+          |count(*)::INT AS n_merged
+          |FROM i GROUP BY group_id, island, config_md5, st, pri""".stripMargin))),
 
     Q("g_hierarchy_versions", (s, d) => {
       // temporal hierarchy versioning (07-deprecated-hierarchies.sql):
       // signature-change islands per key with lead-closed ranges and the
       // 2099 open-end sentinel on the latest version
-      val obs = ord(s, d).select(
-        concat(lit("G"), col("o_custkey")).as("key"),
-        to_date(col("o_orderdate")).as("observed_at"),
-        col("o_orderpriority").as("signature"))
-      graft.domain.HierarchyVersioning.versionsFromObservations(
-        obs, col("key"), col("observed_at"), col("signature"))
+      orderPriorityVersions(s, d)
         .select(col("key"), col("version_seq"), col("signature"),
           col("eff_from").cast("date").as("eff_from"),
           col("eff_to").cast("date").as("eff_to"))
     },
-      Some("""WITH obs AS (
-                SELECT DISTINCT 'G' || o_custkey::VARCHAR AS key,
-                       o_orderdate::DATE AS observed_at,
-                       o_orderpriority AS signature
-                FROM orders),
-              f AS (
-                SELECT *, CASE WHEN lag(signature) OVER w IS NULL
-                                 OR lag(signature) OVER w <> signature
-                               THEN 1 ELSE 0 END AS chg
-                FROM obs
-                WINDOW w AS (PARTITION BY key ORDER BY observed_at, signature)),
-              v AS (
-                SELECT *, sum(chg) OVER (PARTITION BY key
-                            ORDER BY observed_at, signature
-                            ROWS UNBOUNDED PRECEDING)::BIGINT AS version_seq
-                FROM f),
-              g AS (SELECT key, version_seq, signature, min(observed_at) AS eff_from
-                    FROM v GROUP BY 1, 2, 3)
+      Some("WITH " + orderVersionCtes + """
               SELECT key, version_seq, signature, eff_from,
                      coalesce(lead(eff_from) OVER (PARTITION BY key
                                 ORDER BY eff_from, version_seq) - 1,
@@ -3178,13 +3510,7 @@ object SparkEntry {
           Seq("group_id", "proposal_id"),
           Seq("config_hash", "eff_from", "n_certs"))))
     },
-      Some("""WITH li AS (
-                SELECT l_orderkey, l_linenumber, l_suppkey, l_shipdate,
-                       count(*) OVER (PARTITION BY l_orderkey) AS cnt,
-                       row_number() OVER (PARTITION BY l_orderkey
-                         ORDER BY l_linenumber, l_suppkey, l_partkey) AS rn
-                FROM lineitem),
-              c0 AS (SELECT *, floor(10000 / cnt) / 100.0 AS base_pct FROM li),
+      Some("WITH " + certSplitCtes + """,
               rows0 AS (
                 SELECT l_orderkey AS cert_id,
                        'G' || (l_orderkey % 3079)::VARCHAR AS group_id,
@@ -3196,19 +3522,7 @@ object SparkEntry {
                        '0001:P' || l_suppkey::VARCHAR || ':SCHED'
                          || (l_suppkey % 50)::VARCHAR AS item
                 FROM c0),
-              hh AS (
-                SELECT cert_id, group_id, split_seq, split_pct,
-                       upper(sha256(group_id || '!' || split_pct::VARCHAR || '!' ||
-                         string_agg(item, '|' ORDER BY item))) AS hierarchy_hash
-                FROM rows0 GROUP BY 1, 2, 3, 4),
-              cfg AS (
-                SELECT cert_id, group_id,
-                       upper(sha256(string_agg(
-                         split_pct::VARCHAR || ':' || hierarchy_hash, '|'
-                         ORDER BY split_pct::VARCHAR || ':' || hierarchy_hash)))
-                         AS config_hash,
-                       abs(sum(split_pct) - 100.0) > 0.001 AS nonconformant
-                FROM hh GROUP BY 1, 2),
+""" + hierarchyConfigCtes + """,
               props0 AS (
                 SELECT group_id, config_hash
                 FROM cfg WHERE NOT nonconformant GROUP BY 1, 2),
@@ -3296,16 +3610,7 @@ object SparkEntry {
         shingleWords = 3, numHashes = 16, bands = 4),
       Some("""WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
                             FROM documents),
-              sh AS (SELECT doc_id,
-                       unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-                                             for i in generate_series(1, len(w) - 2)])) AS s
-                     FROM toks WHERE len(w) >= 3),
-              h AS (SELECT doc_id, i,
-                      min((('0x' || substr(md5(s), 1, 8))::BIGINT * (1 + 2 * i) + (11 * i + 7))
-                          % 4294967311) AS m
-                    FROM sh, (SELECT unnest(generate_series(0, 15)) AS i)
-                    GROUP BY 1, 2),
-              sig AS (SELECT doc_id, list(m ORDER BY i) AS sig FROM h GROUP BY 1),
+""" + minHashSigCtes + """,
               banded AS (SELECT doc_id, sig,
                            b::VARCHAR || ',' || array_to_string(sig[b*4+1:b*4+4], ',') AS bucket
                          FROM sig, (SELECT unnest(generate_series(0, 3)) AS b)),
@@ -3466,16 +3771,7 @@ object SparkEntry {
       Dedup.embeddingNearDupPairs(emb(s, d), col("vec_id"), col("embedding"),
         threshold = 0.35, nlist = 16),
       Some("""WITH e AS (SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings),
-              cent AS (SELECT m.cell, e.v AS centroid
-                       FROM (SELECT vid % 16 AS cell, min(vid) AS mvid
-                             FROM e GROUP BY 1) m
-                       JOIN e ON e.vid = m.mvid),
-              asg AS (SELECT vid, v, cell FROM (
-                        SELECT e.vid, e.v, c.cell,
-                               row_number() OVER (PARTITION BY e.vid
-                                 ORDER BY round(list_cosine_similarity(e.v, c.centroid), 6) DESC,
-                                          c.cell) AS rn
-                        FROM e CROSS JOIN cent c) WHERE rn = 1)
+""" + ivfCellCtes("vid", "16") + """
               SELECT a.vid AS id_a, b.vid AS id_b,
                      round(list_cosine_similarity(a.v, b.v), 6) AS cos
               FROM asg a JOIN asg b ON a.cell = b.cell AND a.vid < b.vid
@@ -3525,16 +3821,7 @@ object SparkEntry {
     },
       Some("""WITH RECURSIVE
               e AS (SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings),
-              cent AS (SELECT m.cell, e.v AS centroid
-                       FROM (SELECT vid % 16 AS cell, min(vid) AS mvid
-                             FROM e GROUP BY 1) m
-                       JOIN e ON e.vid = m.mvid),
-              asg AS (SELECT vid, v, cell FROM (
-                        SELECT e.vid, e.v, c.cell,
-                               row_number() OVER (PARTITION BY e.vid
-                                 ORDER BY round(list_cosine_similarity(e.v, c.centroid), 6) DESC,
-                                          c.cell) AS rn
-                        FROM e CROSS JOIN cent c) WHERE rn = 1),
+""" + ivfCellCtes("vid", "16") + """,
               prs AS (SELECT a.vid AS id_a, b.vid AS id_b
                       FROM asg a JOIN asg b ON a.cell = b.cell AND a.vid < b.vid
                       WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.35),
@@ -3571,44 +3858,7 @@ object SparkEntry {
       Some("""WITH RECURSIVE
               toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
                        FROM documents),
-              sh AS (SELECT doc_id,
-                       unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-                                             for i in generate_series(1, len(w) - 2)])) AS s
-                     FROM toks WHERE len(w) >= 3),
-              h AS (SELECT doc_id, i,
-                      min((('0x' || substr(md5(s), 1, 8))::BIGINT * (1 + 2 * i) + (11 * i + 7))
-                          % 4294967311) AS m
-                    FROM sh, (SELECT unnest(generate_series(0, 15)) AS i)
-                    GROUP BY 1, 2),
-              sig AS (SELECT doc_id, list(m ORDER BY i) AS sig FROM h GROUP BY 1),
-              banded AS (SELECT doc_id,
-                           b::VARCHAR || ',' || array_to_string(sig[b*4+1:b*4+4], ',') AS bucket
-                         FROM sig, (SELECT unnest(generate_series(0, 3)) AS b)),
-              cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-                       FROM banded a JOIN banded b
-                         ON a.bucket = b.bucket AND a.doc_id < b.doc_id),
-              edges AS (SELECT id_a AS src, id_b AS dst FROM cand
-                        UNION SELECT id_b, id_a FROM cand),
-              nodes AS (SELECT DISTINCT src AS node FROM edges),
-              reach AS (SELECT node, node AS rch FROM nodes
-                        UNION
-                        SELECT reach.node, edges.dst
-                        FROM reach JOIN edges ON reach.rch = edges.src),
-              comp AS (SELECT node, min(rch) AS component FROM reach GROUP BY node),
-              b0 AS (SELECT doc_id, text,
-                (CASE WHEN length(trim(text)) = 0 THEN 0
-                      ELSE len(string_split_regex(trim(text), '\s+')) END)::INT AS n_tok_ws,
-                (length(text) - length(regexp_replace(text, '[.,;:!?''"()\[\]{}-]', '', 'g')))::INT AS n_punct,
-                len(regexp_extract_all(lower(text),
-                  '\b(the|a|an|and|or|of|to|in|is|it|that|for|on|with|as)\b'))::INT AS n_stop
-              FROM documents),
-              qual AS (SELECT doc_id,
-                round(least(greatest(
-                  least(n_tok_ws / 100.0, 1.0) * 0.4
-                  + least((CASE WHEN n_tok_ws > 0 THEN n_stop / n_tok_ws::DOUBLE ELSE 0 END) * 4.0, 1.0) * 0.4
-                  + (1.0 - least((CASE WHEN length(text) > 0 THEN n_punct / length(text)::DOUBLE ELSE 0 END) * 10.0, 1.0)) * 0.2,
-                  0.0), 1.0), 6) AS quality
-              FROM b0),
+""" + minHashSigCtes + ",\n" + lshComponentCtes + ",\n" + qualityCtes + """,
               mem AS (SELECT c.component, c.node, q.quality
                       FROM comp c JOIN qual q ON q.doc_id = c.node),
               keep AS (SELECT component, node AS keep_id, quality AS keep_quality FROM (
@@ -3851,22 +4101,7 @@ object SparkEntry {
       // signed big-endian long / Long.MaxValue); dot products are rounded
       // at 9 decimals before the sign on both sides, so bucket ids match
       // bit-for-bit despite different accumulation orders
-      Some("""WITH planes AS (
-                SELECT p, d,
-                       (('0x' || substr(md5('42:' || p::VARCHAR || ':' || d::VARCHAR), 1, 16))::UBIGINT::HUGEINT
-                        - CASE WHEN ('0x' || substr(md5('42:' || p::VARCHAR || ':' || d::VARCHAR), 1, 16))::UBIGINT
-                                    >= 9223372036854775808::UBIGINT
-                               THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END)::DOUBLE
-                       / 9223372036854775807 AS pval
-                FROM (SELECT unnest(generate_series(0, 7)) AS p),
-                     (SELECT unnest(generate_series(0, 63)) AS d)),
-              e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-              dots AS (SELECT e.vec_id, pl.p,
-                              round(sum(e.v[pl.d + 1] * pl.pval), 9) AS dt
-                       FROM e CROSS JOIN planes pl GROUP BY 1, 2),
-              buckets AS (SELECT vec_id,
-                                 sum(CASE WHEN dt >= 0 THEN 1::BIGINT << p ELSE 0 END) AS bucket
-                          FROM dots GROUP BY 1),
+      Some(lshBucketCtes + """,
               q AS (SELECT e.vec_id, e.v, b.bucket FROM e JOIN buckets b USING (vec_id)
                     WHERE e.vec_id < 20),
               c AS (SELECT e.vec_id, e.v, b.bucket FROM e JOIN buckets b USING (vec_id))
@@ -3886,22 +4121,7 @@ object SparkEntry {
     },
       // the v_ann_lsh replica plus Hamming-1 probe expansion on the query
       // side (xor over generate_series) and pair dedupe before ranking
-      Some("""WITH planes AS (
-                SELECT p, d,
-                       (('0x' || substr(md5('42:' || p::VARCHAR || ':' || d::VARCHAR), 1, 16))::UBIGINT::HUGEINT
-                        - CASE WHEN ('0x' || substr(md5('42:' || p::VARCHAR || ':' || d::VARCHAR), 1, 16))::UBIGINT
-                                    >= 9223372036854775808::UBIGINT
-                               THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END)::DOUBLE
-                       / 9223372036854775807 AS pval
-                FROM (SELECT unnest(generate_series(0, 7)) AS p),
-                     (SELECT unnest(generate_series(0, 63)) AS d)),
-              e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-              dots AS (SELECT e.vec_id, pl.p,
-                              round(sum(e.v[pl.d + 1] * pl.pval), 9) AS dt
-                       FROM e CROSS JOIN planes pl GROUP BY 1, 2),
-              buckets AS (SELECT vec_id,
-                                 sum(CASE WHEN dt >= 0 THEN 1::BIGINT << p ELSE 0 END) AS bucket
-                          FROM dots GROUP BY 1),
+      Some(lshBucketCtes + """,
               qb AS (SELECT e.vec_id, e.v, b.bucket FROM e JOIN buckets b USING (vec_id)
                      WHERE e.vec_id < 20),
               probes AS (SELECT vec_id, v, bucket FROM qb
@@ -3926,22 +4146,7 @@ object SparkEntry {
       // full replica: deterministic centroids (lowest vec_id per id-residue
       // class), rounded-similarity cell assignment and probe ranking
       Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-              cent AS (SELECT m.cell, e.v AS centroid
-                       FROM (SELECT vec_id % 16 AS cell, min(vec_id) AS mvid
-                             FROM e GROUP BY 1) m
-                       JOIN e ON e.vec_id = m.mvid),
-              asg AS (SELECT vec_id, v, cell FROM (
-                        SELECT e.vec_id, e.v, c.cell,
-                               row_number() OVER (PARTITION BY e.vec_id
-                                 ORDER BY round(list_cosine_similarity(e.v, c.centroid), 6) DESC,
-                                          c.cell) AS rn
-                        FROM e CROSS JOIN cent c) WHERE rn = 1),
-              probes AS (SELECT vec_id AS query_id, v AS qv, cell FROM (
-                           SELECT e.vec_id, e.v, c.cell,
-                                  row_number() OVER (PARTITION BY e.vec_id
-                                    ORDER BY round(list_cosine_similarity(e.v, c.centroid), 6) DESC,
-                                             c.cell) AS rn
-                           FROM e CROSS JOIN cent c WHERE e.vec_id < 20) WHERE rn <= 4)
+""" + ivfProbeCtes + """
               SELECT p.query_id, a.vec_id AS neighbor_id,
                      round(list_cosine_similarity(p.qv, a.v), 6) AS cos,
                      (row_number() OVER (PARTITION BY p.query_id
@@ -3965,22 +4170,7 @@ object SparkEntry {
         "vec_id", "embedding", "vec_id", "embedding", k = 5)
     },
       Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-              cent AS (SELECT m.cell, e.v AS centroid
-                       FROM (SELECT vec_id % 16 AS cell, min(vec_id) AS mvid
-                             FROM e GROUP BY 1) m
-                       JOIN e ON e.vec_id = m.mvid),
-              asg AS (SELECT vec_id, v, cell FROM (
-                        SELECT e.vec_id, e.v, c.cell,
-                               row_number() OVER (PARTITION BY e.vec_id
-                                 ORDER BY round(list_cosine_similarity(e.v, c.centroid), 6) DESC,
-                                          c.cell) AS rn
-                        FROM e CROSS JOIN cent c) WHERE rn = 1),
-              probes AS (SELECT vec_id AS query_id, v AS qv, cell FROM (
-                           SELECT e.vec_id, e.v, c.cell,
-                                  row_number() OVER (PARTITION BY e.vec_id
-                                    ORDER BY round(list_cosine_similarity(e.v, c.centroid), 6) DESC,
-                                             c.cell) AS rn
-                           FROM e CROSS JOIN cent c WHERE e.vec_id < 20) WHERE rn <= 4),
+""" + ivfProbeCtes + """,
               ivf AS (SELECT p.query_id, a.vec_id AS neighbor_id,
                              (row_number() OVER (PARTITION BY p.query_id
                                 ORDER BY round(list_cosine_similarity(p.qv, a.v), 6) DESC,
@@ -4013,29 +4203,7 @@ object SparkEntry {
       Clustering.kMeansAssign(emb(s, d), col("vec_id"), col("embedding"),
         k = 8, iters = 2)
     },
-      Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-              c0 AS (SELECT m.cell, e.v AS centroid
-                     FROM (SELECT vec_id % 8 AS cell, min(vec_id) AS mvid
-                           FROM e GROUP BY 1) m
-                     JOIN e ON e.vec_id = m.mvid),
-              a1 AS (SELECT vec_id, v, cell FROM (
-                       SELECT e.vec_id, e.v, c.cell,
-                              row_number() OVER (PARTITION BY e.vec_id
-                                ORDER BY round(list_cosine_similarity(e.v, c.centroid), 6) DESC,
-                                         c.cell) AS rn
-                       FROM e CROSS JOIN c0 c) WHERE rn = 1),
-              m1 AS (SELECT cell, i, round(avg(v[i + 1]), 6) AS m
-                     FROM a1, range(64) r(i) GROUP BY 1, 2),
-              c1 AS (SELECT cell, list(m ORDER BY i) AS centroid FROM m1 GROUP BY 1),
-              a2 AS (SELECT vec_id, v, cell FROM (
-                       SELECT e.vec_id, e.v, c.cell,
-                              row_number() OVER (PARTITION BY e.vec_id
-                                ORDER BY round(list_cosine_similarity(e.v, c.centroid), 6) DESC,
-                                         c.cell) AS rn
-                       FROM e CROSS JOIN c1 c) WHERE rn = 1),
-              m2 AS (SELECT cell, i, round(avg(v[i + 1]), 6) AS m
-                     FROM a2, range(64) r(i) GROUP BY 1, 2),
-              c2 AS (SELECT cell, list(m ORDER BY i) AS centroid FROM m2 GROUP BY 1)
+      Some(kMeansCtes(2) + """
               SELECT vec_id AS point_id, cell AS cluster, cos FROM (
                 SELECT e.vec_id, c.cell,
                        round(list_cosine_similarity(e.v, c.centroid), 6) AS cos,
@@ -4057,16 +4225,7 @@ object SparkEntry {
         case (p, i) => p.as(s"p$i")
       }: _*)
     },
-      Some("""WITH planes AS (
-                SELECT p, d,
-                       (('0x' || substr(md5('42:' || p::VARCHAR || ':' || d::VARCHAR), 1, 16))::UBIGINT::HUGEINT
-                        - CASE WHEN ('0x' || substr(md5('42:' || p::VARCHAR || ':' || d::VARCHAR), 1, 16))::UBIGINT
-                                    >= 9223372036854775808::UBIGINT
-                               THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END)::DOUBLE
-                       / 9223372036854775807 AS pval
-                FROM (SELECT unnest(generate_series(0, 7)) AS p),
-                     (SELECT unnest(generate_series(0, 63)) AS d)),
-              e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      Some(lshPlanesCtes + """,
               dots AS (SELECT e.vec_id, pl.p, round(sum(e.v[pl.d + 1] * pl.pval), 6) AS dt
                        FROM e CROSS JOIN planes pl GROUP BY 1, 2)
               SELECT vec_id,
@@ -4089,20 +4248,7 @@ object SparkEntry {
         assigned.select(col("point_id"), col("cluster")),
         Seq(col("cluster")), col("point_id"), k = 10)
     },
-      Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-              c0 AS (SELECT m.cell, e.v AS centroid
-                     FROM (SELECT vec_id % 8 AS cell, min(vec_id) AS mvid
-                           FROM e GROUP BY 1) m
-                     JOIN e ON e.vec_id = m.mvid),
-              a1 AS (SELECT vec_id, v, cell FROM (
-                       SELECT e.vec_id, e.v, c.cell,
-                              row_number() OVER (PARTITION BY e.vec_id
-                                ORDER BY round(list_cosine_similarity(e.v, c.centroid), 6) DESC,
-                                         c.cell) AS rn
-                       FROM e CROSS JOIN c0 c) WHERE rn = 1),
-              m1 AS (SELECT cell, i, round(avg(v[i + 1]), 6) AS m
-                     FROM a1, range(64) r(i) GROUP BY 1, 2),
-              c1 AS (SELECT cell, list(m ORDER BY i) AS centroid FROM m1 GROUP BY 1),
+      Some(kMeansCtes(1) + """,
               fin AS (SELECT vec_id AS point_id, cell AS cluster FROM (
                         SELECT e.vec_id, c.cell,
                                row_number() OVER (PARTITION BY e.vec_id
@@ -4207,19 +4353,7 @@ object SparkEntry {
       // corpus's own LM (DECIMAL-exact sums), keep the low-perplexity band
       TextFunctions.perplexityFilter(doc(s, d), col("doc_id"), col("text"),
         doc(s, d), col("doc_id"), col("text"), keepBelow = 3.2),
-      Some("""WITH toks AS (SELECT doc_id,
-                unnest(string_split_regex(trim(text), '\s+')) AS w,
-                generate_subscripts(string_split_regex(trim(text), '\s+'), 1) AS pos
-              FROM documents),
-              p AS (SELECT doc_id, w AS w1,
-                      lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
-                    FROM toks WHERE w <> ''),
-              pairs AS (SELECT doc_id, w1, w2 FROM p WHERE w2 IS NOT NULL),
-              c AS (SELECT w1, w2, count(*)::BIGINT AS cnt FROM pairs GROUP BY 1, 2),
-              lm AS (SELECT w1, w2,
-                       round(-ln(round(cnt / (sum(cnt) OVER (PARTITION BY w1)), 6)), 9)
-                         ::DECIMAL(12,9) AS nll
-                     FROM c)
+      Some("WITH " + bigramNllCtes + """
               SELECT doc_id, count(*)::BIGINT AS n_pairs,
                      round(sum(nll)::DOUBLE / count(*), 6) AS avg_nll,
                      round(sum(nll)::DOUBLE / count(*), 6) <= 3.2 AS keep
@@ -4233,19 +4367,7 @@ object SparkEntry {
       // integer div — no corpus-wide sort), per-(lang, band) rollup
       TextFunctions.ccnetBuckets(doc(s, d), col("doc_id"), col("text"),
         col("lang")),
-      Some("""WITH toks AS (SELECT doc_id,
-                unnest(string_split_regex(trim(text), '\s+')) AS w,
-                generate_subscripts(string_split_regex(trim(text), '\s+'), 1) AS pos
-              FROM documents),
-              p AS (SELECT doc_id, w AS w1,
-                      lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
-                    FROM toks WHERE w <> ''),
-              pairs AS (SELECT doc_id, w1, w2 FROM p WHERE w2 IS NOT NULL),
-              c AS (SELECT w1, w2, count(*)::BIGINT AS cnt FROM pairs GROUP BY 1, 2),
-              lm AS (SELECT w1, w2,
-                       round(-ln(round(cnt / (sum(cnt) OVER (PARTITION BY w1)), 6)), 9)
-                         ::DECIMAL(12,9) AS nll
-                     FROM c),
+      Some("WITH " + bigramNllCtes + """,
               sc0 AS (SELECT doc_id,
                         round(sum(nll)::DOUBLE / count(*), 6) AS avg_nll
                       FROM pairs JOIN lm USING (w1, w2) GROUP BY 1),
@@ -4370,24 +4492,7 @@ object SparkEntry {
                          FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
               e AS (SELECT c AS src, p AS dst FROM b
                     UNION SELECT p AS src, c AS dst FROM b),
-              n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-              od AS (SELECT src, count(*)::DOUBLE AS outdeg FROM e GROUP BY 1),
-              r0 AS (SELECT node, 1.0::DOUBLE AS rank FROM n),
-              r1 AS (SELECT n.node, round(0.15 + 0.85 * coalesce(s.in_sum, 0.0), 9) AS rank
-                     FROM n LEFT JOIN (
-                       SELECT e.dst AS node, sum(r.rank / od.outdeg) AS in_sum
-                       FROM e JOIN r0 r ON r.node = e.src JOIN od ON od.src = e.src
-                       GROUP BY 1) s USING (node)),
-              r2 AS (SELECT n.node, round(0.15 + 0.85 * coalesce(s.in_sum, 0.0), 9) AS rank
-                     FROM n LEFT JOIN (
-                       SELECT e.dst AS node, sum(r.rank / od.outdeg) AS in_sum
-                       FROM e JOIN r1 r ON r.node = e.src JOIN od ON od.src = e.src
-                       GROUP BY 1) s USING (node)),
-              r3 AS (SELECT n.node, round(0.15 + 0.85 * coalesce(s.in_sum, 0.0), 9) AS rank
-                     FROM n LEFT JOIN (
-                       SELECT e.dst AS node, sum(r.rank / od.outdeg) AS in_sum
-                       FROM e JOIN r2 r ON r.node = e.src JOIN od ON od.src = e.src
-                       GROUP BY 1) s USING (node))
+""" + pageRankCtes(3) + """
               SELECT node, rank FROM r3""")),
 
     Q("d_redirect_loops", (s, d) => {
@@ -4445,60 +4550,10 @@ object SparkEntry {
       // cascades on the uniform synthetic data). 10 rounds covers the
       // measured fixpoint depth (7/5/7 at the three SFs) with margin;
       // `converged` asserts the peel bottomed out rather than trusting
-      // the budget. Pair expansion is bounded by per-order part count
-      // (<= a few lineitems), so the self-join is order-local
-      val p = li(s, d).select(col("l_orderkey").as("o"),
-        col("l_partkey").as("p")).distinct()
-      val pairs = p.as("x").join(p.as("y"),
-          col("x.o") === col("y.o") && col("x.p") < col("y.p"))
-        .select(col("x.p").as("u"), col("y.p").as("v")).distinct()
-        .filter(pmod(graft.operators.Dedup.md5Int(
-          concat(col("u").cast("string"), lit(":"), col("v").cast("string"))),
-          lit(1000)) < 40)
-      graft.operators.Components.kCore(pairs, "u", "v", k = 3, rounds = 10)
+      // the budget
+      graft.operators.Components.kCore(partPairs(s, d), "u", "v", k = 3, rounds = 10)
     },
-      Some("""WITH p AS MATERIALIZED (
-                SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-              b AS MATERIALIZED (
-                SELECT u, v FROM (
-                  SELECT DISTINCT least(x.p, y.p) AS u, greatest(x.p, y.p) AS v
-                  FROM p x JOIN p y ON x.o = y.o AND x.p < y.p) b0
-                WHERE ('0x' || substring(md5(u::VARCHAR || ':' || v::VARCHAR),
-                  1, 8))::BIGINT % 1000 < 40),
-              e AS MATERIALIZED (
-                SELECT u AS src, v AS dst FROM b
-                UNION ALL SELECT v, u FROM b),
-              a0 AS MATERIALIZED (SELECT DISTINCT src AS node FROM e),
-              a1 AS MATERIALIZED (SELECT e.src AS node FROM e
-                JOIN a0 s ON e.src = s.node JOIN a0 t ON e.dst = t.node
-                GROUP BY 1 HAVING count(*) >= 3),
-              a2 AS MATERIALIZED (SELECT e.src AS node FROM e
-                JOIN a1 s ON e.src = s.node JOIN a1 t ON e.dst = t.node
-                GROUP BY 1 HAVING count(*) >= 3),
-              a3 AS MATERIALIZED (SELECT e.src AS node FROM e
-                JOIN a2 s ON e.src = s.node JOIN a2 t ON e.dst = t.node
-                GROUP BY 1 HAVING count(*) >= 3),
-              a4 AS MATERIALIZED (SELECT e.src AS node FROM e
-                JOIN a3 s ON e.src = s.node JOIN a3 t ON e.dst = t.node
-                GROUP BY 1 HAVING count(*) >= 3),
-              a5 AS MATERIALIZED (SELECT e.src AS node FROM e
-                JOIN a4 s ON e.src = s.node JOIN a4 t ON e.dst = t.node
-                GROUP BY 1 HAVING count(*) >= 3),
-              a6 AS MATERIALIZED (SELECT e.src AS node FROM e
-                JOIN a5 s ON e.src = s.node JOIN a5 t ON e.dst = t.node
-                GROUP BY 1 HAVING count(*) >= 3),
-              a7 AS MATERIALIZED (SELECT e.src AS node FROM e
-                JOIN a6 s ON e.src = s.node JOIN a6 t ON e.dst = t.node
-                GROUP BY 1 HAVING count(*) >= 3),
-              a8 AS MATERIALIZED (SELECT e.src AS node FROM e
-                JOIN a7 s ON e.src = s.node JOIN a7 t ON e.dst = t.node
-                GROUP BY 1 HAVING count(*) >= 3),
-              a9 AS MATERIALIZED (SELECT e.src AS node FROM e
-                JOIN a8 s ON e.src = s.node JOIN a8 t ON e.dst = t.node
-                GROUP BY 1 HAVING count(*) >= 3),
-              a10 AS MATERIALIZED (SELECT e.src AS node FROM e
-                JOIN a9 s ON e.src = s.node JOIN a9 t ON e.dst = t.node
-                GROUP BY 1 HAVING count(*) >= 3),
+      Some(partGraphCtes("e") + ",\n" + kCoreCtes(k = 3, rounds = 10) + """,
               core AS (SELECT e.src AS node, count(*)::INT AS core_deg FROM e
                 JOIN a10 s ON e.src = s.node JOIN a10 t ON e.dst = t.node
                 GROUP BY 1),
@@ -4621,29 +4676,7 @@ object SparkEntry {
                       FROM (SELECT DISTINCT a AS w FROM eu)),
               e AS (SELECT ia.wid AS src, ib.wid AS dst
                     FROM eu JOIN ids ia ON eu.a = ia.w JOIN ids ib ON eu.b = ib.w),
-              n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-              od AS (SELECT src, count(*)::DOUBLE AS outdeg FROM e GROUP BY 1),
-              r0 AS (SELECT node, 1.0::DOUBLE AS rank FROM n),
-              r1 AS (SELECT n.node, round(0.15 + 0.85 * coalesce(s.in_sum, 0.0), 9) AS rank
-                     FROM n LEFT JOIN (
-                       SELECT e.dst AS node, sum(r.rank / od.outdeg) AS in_sum
-                       FROM e JOIN r0 r ON r.node = e.src JOIN od ON od.src = e.src
-                       GROUP BY 1) s USING (node)),
-              r2 AS (SELECT n.node, round(0.15 + 0.85 * coalesce(s.in_sum, 0.0), 9) AS rank
-                     FROM n LEFT JOIN (
-                       SELECT e.dst AS node, sum(r.rank / od.outdeg) AS in_sum
-                       FROM e JOIN r1 r ON r.node = e.src JOIN od ON od.src = e.src
-                       GROUP BY 1) s USING (node)),
-              r3 AS (SELECT n.node, round(0.15 + 0.85 * coalesce(s.in_sum, 0.0), 9) AS rank
-                     FROM n LEFT JOIN (
-                       SELECT e.dst AS node, sum(r.rank / od.outdeg) AS in_sum
-                       FROM e JOIN r2 r ON r.node = e.src JOIN od ON od.src = e.src
-                       GROUP BY 1) s USING (node)),
-              r4 AS (SELECT n.node, round(0.15 + 0.85 * coalesce(s.in_sum, 0.0), 9) AS rank
-                     FROM n LEFT JOIN (
-                       SELECT e.dst AS node, sum(r.rank / od.outdeg) AS in_sum
-                       FROM e JOIN r3 r ON r.node = e.src JOIN od ON od.src = e.src
-                       GROUP BY 1) s USING (node))
+""" + pageRankCtes(4) + """
               SELECT word, rank, rk FROM (
                 SELECT ids.w AS word, r4.rank,
                        row_number() OVER (ORDER BY r4.rank DESC, ids.w)::INT AS rk
@@ -6850,19 +6883,8 @@ object SparkEntry {
     Q("iv_gaps", (s, d) =>
       // coverage holes between merged order-coverage windows per customer
       Intervals.coverageGaps(
-        ord(s, d).select(col("o_custkey"), col("o_orderdate"),
-          (col("o_orderdate") + expr("INTERVAL 30 DAY")).as("o_end")),
-        col("o_custkey"), col("o_orderdate"), col("o_end")),
-      Some("""WITH s AS (SELECT o_custkey AS key, o_orderdate AS f,
-                                o_orderdate + INTERVAL 30 DAY AS t FROM orders),
-              x AS (SELECT key, f, t,
-                      max(t) OVER (PARTITION BY key ORDER BY f, t
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS mx
-                    FROM s),
-              y AS (SELECT key, f, t,
-                      sum(CASE WHEN mx IS NULL OR f > mx THEN 1 ELSE 0 END)
-                        OVER (PARTITION BY key ORDER BY f, t ROWS UNBOUNDED PRECEDING) AS isl
-                    FROM x),
+        orderCoverage(s, d), col("o_custkey"), col("o_orderdate"), col("o_end")),
+      Some("WITH " + coverageIslandCtes + """,
               m AS (SELECT key, min(f) AS range_from, max(t) AS range_to
                     FROM y GROUP BY key, isl),
               g AS (SELECT key, range_to AS gap_from,
@@ -6981,19 +7003,8 @@ object SparkEntry {
 
     Q("iv_merge_intervals", (s, d) =>
       Intervals.mergeIntervals(
-        ord(s, d).select(col("o_custkey"), col("o_orderdate"),
-          (col("o_orderdate") + expr("INTERVAL 30 DAY")).as("o_end")),
-        col("o_custkey"), col("o_orderdate"), col("o_end")),
-      Some("""WITH s AS (SELECT o_custkey AS key, o_orderdate AS f,
-                                o_orderdate + INTERVAL 30 DAY AS t FROM orders),
-              x AS (SELECT key, f, t,
-                      max(t) OVER (PARTITION BY key ORDER BY f, t
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS mx
-                    FROM s),
-              y AS (SELECT key, f, t,
-                      sum(CASE WHEN mx IS NULL OR f > mx THEN 1 ELSE 0 END)
-                        OVER (PARTITION BY key ORDER BY f, t ROWS UNBOUNDED PRECEDING) AS isl
-                    FROM x)
+        orderCoverage(s, d), col("o_custkey"), col("o_orderdate"), col("o_end")),
+      Some("WITH " + coverageIslandCtes + """
               SELECT key, min(f) AS range_from, max(t) AS range_to, count(*)::INT AS n_merged
               FROM y GROUP BY key, isl""")),
 
@@ -7001,36 +7012,14 @@ object SparkEntry {
       // SCD2 as-of snapshot: the versioned-hierarchy table filtered to the
       // rows effective at one date — a pure pushdown-able filter that on a
       // date-partitioned dimension prunes to the straddling files
-      val obs = ord(s, d).select(
-        concat(lit("G"), col("o_custkey")).as("key"),
-        to_date(col("o_orderdate")).as("observed_at"),
-        col("o_orderpriority").as("signature"))
-      val v = graft.domain.HierarchyVersioning.versionsFromObservations(
-        obs, col("key"), col("observed_at"), col("signature"))
+      val v = orderPriorityVersions(s, d)
       Intervals.snapshotAt(v, col("eff_from"), col("eff_to"),
           lit("1995-06-01").cast("date"))
         .select(col("key"), col("version_seq"), col("signature"),
           col("eff_from").cast("date").as("eff_from"),
           col("eff_to").cast("date").as("eff_to"))
     },
-      Some("""WITH obs AS (
-                SELECT DISTINCT 'G' || o_custkey::VARCHAR AS key,
-                       o_orderdate::DATE AS observed_at,
-                       o_orderpriority AS signature
-                FROM orders),
-              f AS (
-                SELECT *, CASE WHEN lag(signature) OVER w IS NULL
-                                 OR lag(signature) OVER w <> signature
-                               THEN 1 ELSE 0 END AS chg
-                FROM obs
-                WINDOW w AS (PARTITION BY key ORDER BY observed_at, signature)),
-              v AS (
-                SELECT *, sum(chg) OVER (PARTITION BY key
-                            ORDER BY observed_at, signature
-                            ROWS UNBOUNDED PRECEDING)::BIGINT AS version_seq
-                FROM f),
-              g AS (SELECT key, version_seq, signature, min(observed_at) AS eff_from
-                    FROM v GROUP BY 1, 2, 3),
+      Some("WITH " + orderVersionCtes + """,
               ver AS (
                 SELECT key, version_seq, signature, eff_from,
                        coalesce(lead(eff_from) OVER (PARTITION BY key
@@ -7115,20 +7104,7 @@ object SparkEntry {
       // cosine >= 0.35. Pairwise work stays within cells (O(n^2/k))
       Dedup.semDedup(emb(s, d), col("vec_id"), col("embedding"),
         k = 8, iters = 1, threshold = 0.35),
-      Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-              c0 AS (SELECT m.cell, e.v AS centroid
-                     FROM (SELECT vec_id % 8 AS cell, min(vec_id) AS mvid
-                           FROM e GROUP BY 1) m
-                     JOIN e ON e.vec_id = m.mvid),
-              a1 AS (SELECT vec_id, v, cell FROM (
-                       SELECT e.vec_id, e.v, c.cell,
-                              row_number() OVER (PARTITION BY e.vec_id
-                                ORDER BY round(list_cosine_similarity(e.v, c.centroid), 6) DESC,
-                                         c.cell) AS rn
-                       FROM e CROSS JOIN c0 c) WHERE rn = 1),
-              m1 AS (SELECT cell, i, round(avg(v[i + 1]), 6) AS m
-                     FROM a1, range(64) r(i) GROUP BY 1, 2),
-              c1 AS (SELECT cell, list(m ORDER BY i) AS centroid FROM m1 GROUP BY 1),
+      Some(kMeansCtes(1) + """,
               fin AS (SELECT vec_id, v, cell AS cluster FROM (
                         SELECT e.vec_id, e.v, c.cell,
                                row_number() OVER (PARTITION BY e.vec_id
@@ -8551,44 +8527,7 @@ object SparkEntry {
       Some("""WITH RECURSIVE
               toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
                        FROM documents),
-              sh AS (SELECT doc_id,
-                       unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-                                             for i in generate_series(1, len(w) - 2)])) AS s
-                     FROM toks WHERE len(w) >= 3),
-              h AS (SELECT doc_id, i,
-                      min((('0x' || substr(md5(s), 1, 8))::BIGINT * (1 + 2 * i) + (11 * i + 7))
-                          % 4294967311) AS m
-                    FROM sh, (SELECT unnest(generate_series(0, 15)) AS i)
-                    GROUP BY 1, 2),
-              sig AS (SELECT doc_id, list(m ORDER BY i) AS sig FROM h GROUP BY 1),
-              banded AS (SELECT doc_id,
-                           b::VARCHAR || ',' || array_to_string(sig[b*4+1:b*4+4], ',') AS bucket
-                         FROM sig, (SELECT unnest(generate_series(0, 3)) AS b)),
-              cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-                       FROM banded a JOIN banded b
-                         ON a.bucket = b.bucket AND a.doc_id < b.doc_id),
-              edges AS (SELECT id_a AS src, id_b AS dst FROM cand
-                        UNION SELECT id_b, id_a FROM cand),
-              nodes AS (SELECT DISTINCT src AS node FROM edges),
-              reach AS (SELECT node, node AS rch FROM nodes
-                        UNION
-                        SELECT reach.node, edges.dst
-                        FROM reach JOIN edges ON reach.rch = edges.src),
-              comp AS (SELECT node, min(rch) AS component FROM reach GROUP BY node),
-              b0 AS (SELECT doc_id, text,
-                (CASE WHEN length(trim(text)) = 0 THEN 0
-                      ELSE len(string_split_regex(trim(text), '\s+')) END)::INT AS n_tok_ws,
-                (length(text) - length(regexp_replace(text, '[.,;:!?''"()\[\]{}-]', '', 'g')))::INT AS n_punct,
-                len(regexp_extract_all(lower(text),
-                  '\b(the|a|an|and|or|of|to|in|is|it|that|for|on|with|as)\b'))::INT AS n_stop
-              FROM documents),
-              qual AS (SELECT doc_id,
-                round(least(greatest(
-                  least(n_tok_ws / 100.0, 1.0) * 0.4
-                  + least((CASE WHEN n_tok_ws > 0 THEN n_stop / n_tok_ws::DOUBLE ELSE 0 END) * 4.0, 1.0) * 0.4
-                  + (1.0 - least((CASE WHEN length(text) > 0 THEN n_punct / length(text)::DOUBLE ELSE 0 END) * 10.0, 1.0)) * 0.2,
-                  0.0), 1.0), 6) AS quality
-              FROM b0),
+""" + minHashSigCtes + ",\n" + lshComponentCtes + ",\n" + qualityCtes + """,
               keepn AS (SELECT component, node AS keep_id FROM (
                           SELECT c.component, c.node,
                                  row_number() OVER (PARTITION BY c.component
@@ -8762,99 +8701,7 @@ object SparkEntry {
         docs.filter(col("doc_id") % 97 === 0),
         col("doc_id"), col("text"), col("source"), col("lang"))
     },
-      Some("""WITH RECURSIVE
-              corpus0 AS (SELECT * FROM documents WHERE doc_id % 97 <> 0),
-              b0 AS (SELECT doc_id, source, lang, text,
-                (CASE WHEN length(trim(text)) = 0 THEN 0
-                      ELSE len(string_split_regex(trim(text), '\s+')) END)::INT AS n_tok_ws,
-                (length(text) - length(regexp_replace(text, '[.,;:!?''"()\[\]{}-]', '', 'g')))::INT AS n_punct,
-                len(regexp_extract_all(lower(text),
-                  '\b(the|a|an|and|or|of|to|in|is|it|that|for|on|with|as)\b'))::INT AS n_stop,
-                len(regexp_extract_all(lower(text), '\b(the|and|of|is|was|that|with)\b')) AS s_en,
-                len(regexp_extract_all(lower(text), '\b(el|la|los|las|es|que|con|para)\b')) AS s_es,
-                len(regexp_extract_all(lower(text), '\b(le|la|les|est|que|avec|pour|dans)\b')) AS s_fr,
-                len(regexp_extract_all(lower(text), '\b(der|die|das|ist|und|mit|nicht)\b')) AS s_de
-              FROM corpus0),
-              flags AS (SELECT doc_id, source, lang, text, n_tok_ws,
-                round(least(greatest(
-                  least(n_tok_ws / 100.0, 1.0) * 0.4
-                  + least((CASE WHEN n_tok_ws > 0 THEN n_stop / n_tok_ws::DOUBLE ELSE 0 END) * 4.0, 1.0) * 0.4
-                  + (1.0 - least((CASE WHEN length(text) > 0 THEN n_punct / length(text)::DOUBLE ELSE 0 END) * 10.0, 1.0)) * 0.2,
-                  0.0), 1.0), 6) AS quality,
-                CASE WHEN greatest(s_en, s_es, s_fr, s_de) <= 0 THEN 'und'
-                     WHEN s_en = greatest(s_en, s_es, s_fr, s_de) THEN 'en'
-                     WHEN s_es = greatest(s_en, s_es, s_fr, s_de) THEN 'es'
-                     WHEN s_fr = greatest(s_en, s_es, s_fr, s_de) THEN 'fr'
-                     WHEN s_de = greatest(s_en, s_es, s_fr, s_de) THEN 'de'
-                     ELSE 'und' END AS pred_lang
-              FROM b0),
-              fl2 AS (SELECT *, quality >= 0.5 AS pass_q,
-                        (quality >= 0.5 AND pred_lang = lang) AS pass_l
-                      FROM flags),
-              s2 AS (SELECT * FROM fl2 WHERE pass_l),
-              fps AS (SELECT doc_id,
-                        md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp
-                      FROM s2),
-              ek AS (SELECT f.doc_id FROM fps f
-                     JOIN (SELECT fp, min(doc_id) AS k FROM fps GROUP BY 1) m
-                       ON f.fp = m.fp AND f.doc_id = m.k),
-              s3 AS (SELECT s2.* FROM s2 JOIN ek USING (doc_id)),
-              toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM s3),
-              sh AS (SELECT doc_id,
-                       unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-                                             for i in generate_series(1, len(w) - 2)])) AS s
-                     FROM toks WHERE len(w) >= 3),
-              h AS (SELECT doc_id, i,
-                      min((('0x' || substr(md5(s), 1, 8))::BIGINT * (1 + 2 * i) + (11 * i + 7))
-                          % 4294967311) AS m
-                    FROM sh, (SELECT unnest(generate_series(0, 15)) AS i)
-                    GROUP BY 1, 2),
-              sig AS (SELECT doc_id, list(m ORDER BY i) AS sig FROM h GROUP BY 1),
-              banded AS (SELECT doc_id,
-                           b::VARCHAR || ',' || array_to_string(sig[b*4+1:b*4+4], ',') AS bucket
-                         FROM sig, (SELECT unnest(generate_series(0, 3)) AS b)),
-              cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-                       FROM banded a JOIN banded b
-                         ON a.bucket = b.bucket AND a.doc_id < b.doc_id),
-              edges AS (SELECT id_a AS src, id_b AS dst FROM cand
-                        UNION SELECT id_b, id_a FROM cand),
-              nodes AS (SELECT DISTINCT src AS node FROM edges),
-              reach AS (SELECT node, node AS rch FROM nodes
-                        UNION
-                        SELECT reach.node, edges.dst
-                        FROM reach JOIN edges ON reach.rch = edges.src),
-              comp AS (SELECT node, min(rch) AS component FROM reach GROUP BY node),
-              keepn AS (SELECT component, node AS keep_id FROM (
-                          SELECT c.component, c.node,
-                                 row_number() OVER (PARTITION BY c.component
-                                   ORDER BY f.quality DESC, c.node ASC) AS rn
-                          FROM comp c JOIN fl2 f ON f.doc_id = c.node) WHERE rn = 1),
-              neard AS (SELECT c.node AS doc_id
-                        FROM comp c JOIN keepn k USING (component)
-                        WHERE c.node <> k.keep_id),
-              s4 AS (SELECT * FROM s3
-                     WHERE doc_id NOT IN (SELECT doc_id FROM neard)),
-              t4 AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w4 FROM s4),
-              g4 AS (SELECT doc_id,
-                       unnest(list_distinct([array_to_string(w4[i:i+4], ' ')
-                                             for i in generate_series(1, len(w4) - 4)])) AS g
-                     FROM t4 WHERE len(w4) >= 5),
-              tp AS (SELECT string_split_regex(trim(text), '\s+') AS wp
-                     FROM documents WHERE doc_id % 97 = 0),
-              probe AS (SELECT DISTINCT unnest([array_to_string(wp[i:i+4], ' ')
-                                               for i in generate_series(1, len(wp) - 4)]) AS g
-                        FROM tp WHERE len(wp) >= 5),
-              contam AS (SELECT DISTINCT doc_id FROM g4
-                         WHERE g IN (SELECT g FROM probe)),
-              fin AS (SELECT f.*,
-                        (f.doc_id IN (SELECT doc_id FROM ek)) AS s3ok0
-                      FROM fl2 f),
-              fin2 AS (SELECT *,
-                         s3ok0 AS s3ok,
-                         (s3ok0 AND doc_id NOT IN (SELECT doc_id FROM neard)) AS s4ok,
-                         (s3ok0 AND doc_id NOT IN (SELECT doc_id FROM neard)
-                          AND doc_id NOT IN (SELECT doc_id FROM contam)) AS s5ok
-                       FROM fin)
+      Some("WITH RECURSIVE\n" + curationFunnelCtes + """
                             SELECT doc_id, source, lang, quality, pred_lang,
                 n_tok_ws::BIGINT AS n_tok,
                 CASE WHEN NOT pass_q THEN 'quality'
@@ -8881,16 +8728,7 @@ object SparkEntry {
       Some("""WITH e AS (SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings),
               nl AS (SELECT greatest(16, floor(sqrt(count(*) / 2.0))::BIGINT) AS nlist
                      FROM e),
-              cent AS (SELECT m.cell, e.v AS centroid
-                       FROM (SELECT vid % (SELECT nlist FROM nl) AS cell, min(vid) AS mvid
-                             FROM e GROUP BY 1) m
-                       JOIN e ON e.vid = m.mvid),
-              asg AS (SELECT vid, v, cell FROM (
-                        SELECT e.vid, e.v, c.cell,
-                               row_number() OVER (PARTITION BY e.vid
-                                 ORDER BY round(list_cosine_similarity(e.v, c.centroid), 6) DESC,
-                                          c.cell) AS rn
-                        FROM e CROSS JOIN cent c) WHERE rn = 1),
+""" + ivfCellCtes("vid", "(SELECT nlist FROM nl)") + """,
               dg AS (SELECT a.vid AS src, b.vid AS dst,
                        round(list_cosine_similarity(a.v, b.v), 6) AS cos
                      FROM asg a JOIN asg b ON a.cell = b.cell AND a.vid <> b.vid),
@@ -8914,61 +8752,7 @@ object SparkEntry {
       Similarity.nnDescentGraph(e, col("vec_id"), col("embedding"),
         k = 3, rounds = 2, n = e.count())
     },
-      Some("""WITH e AS MATERIALIZED (
-                SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings),
-              nn AS (SELECT count(*) AS n FROM e),
-              c0 AS (SELECT DISTINCT vid, cand FROM (
-                       SELECT e.vid,
-                         ('0x' || substr(md5(e.vid::VARCHAR || '#nnd' || j::VARCHAR), 1, 8))::BIGINT
-                           % (SELECT n FROM nn) AS cand
-                       FROM e CROSS JOIN range(1, 4) t(j)) z
-                     WHERE cand <> vid),
-              sc0 AS (SELECT c.vid, c.cand,
-                        round(list_cosine_similarity(a.v, b.v), 6) AS cos
-                      FROM c0 c JOIN e a ON a.vid = c.vid
-                                JOIN e b ON b.vid = c.cand),
-              g0 AS MATERIALIZED (SELECT vid, cand, cos, rn FROM (
-                      SELECT vid, cand, cos, row_number() OVER (
-                        PARTITION BY vid ORDER BY cos DESC, cand) AS rn
-                      FROM sc0) z WHERE rn <= 3),
-              u1 AS (SELECT DISTINCT src, dst FROM (
-                       SELECT vid AS src, cand AS dst FROM g0
-                       UNION ALL
-                       SELECT cand AS src, vid AS dst FROM (
-                         SELECT vid, cand, row_number() OVER (
-                           PARTITION BY cand ORDER BY cos DESC, vid) AS rr
-                         FROM g0) z WHERE rr <= 3) w),
-              c1 AS (SELECT DISTINCT vid, cand FROM (
-                       SELECT x.src AS vid, y.dst AS cand FROM u1 x JOIN u1 y
-                         ON x.dst = y.src AND x.src <> y.dst
-                       UNION ALL SELECT vid, cand FROM g0) w),
-              sc1 AS (SELECT c.vid, c.cand,
-                        round(list_cosine_similarity(a.v, b.v), 6) AS cos
-                      FROM c1 c JOIN e a ON a.vid = c.vid
-                                JOIN e b ON b.vid = c.cand),
-              g1 AS MATERIALIZED (SELECT vid, cand, cos, rn FROM (
-                      SELECT vid, cand, cos, row_number() OVER (
-                        PARTITION BY vid ORDER BY cos DESC, cand) AS rn
-                      FROM sc1) z WHERE rn <= 3),
-              u2 AS (SELECT DISTINCT src, dst FROM (
-                       SELECT vid AS src, cand AS dst FROM g1
-                       UNION ALL
-                       SELECT cand AS src, vid AS dst FROM (
-                         SELECT vid, cand, row_number() OVER (
-                           PARTITION BY cand ORDER BY cos DESC, vid) AS rr
-                         FROM g1) z WHERE rr <= 3) w),
-              c2 AS (SELECT DISTINCT vid, cand FROM (
-                       SELECT x.src AS vid, y.dst AS cand FROM u2 x JOIN u2 y
-                         ON x.dst = y.src AND x.src <> y.dst
-                       UNION ALL SELECT vid, cand FROM g1) w),
-              sc2 AS (SELECT c.vid, c.cand,
-                        round(list_cosine_similarity(a.v, b.v), 6) AS cos
-                      FROM c2 c JOIN e a ON a.vid = c.vid
-                                JOIN e b ON b.vid = c.cand),
-              g2 AS (SELECT vid, cand, cos, rn FROM (
-                      SELECT vid, cand, cos, row_number() OVER (
-                        PARTITION BY vid ORDER BY cos DESC, cand) AS rn
-                      FROM sc2) z WHERE rn <= 3)
+      Some(nnDescentCtes(2, materializeLast = false) + """
               SELECT vid AS src_id, cand AS nbr_id, cos, rn::INT AS rank
               FROM g2""")),
 
@@ -9311,28 +9095,10 @@ object SparkEntry {
       // Jaccard / Adamic-Adar for distance-2 non-edges; wedge centers
       // degree-capped (df-cap pattern) so candidate volume stays
       // sum(deg^2)-bounded
-      val p = li(s, d).select(col("l_orderkey").as("o"),
-        col("l_partkey").as("p")).distinct()
-      val pairs = p.as("x").join(p.as("y"),
-          col("x.o") === col("y.o") && col("x.p") < col("y.p"))
-        .select(col("x.p").as("u"), col("y.p").as("v")).distinct()
-        .filter(pmod(graft.operators.Dedup.md5Int(
-          concat(col("u").cast("string"), lit(":"), col("v").cast("string"))),
-          lit(1000)) < 40)
-      graft.operators.Components.linkPrediction(pairs, "u", "v",
+      graft.operators.Components.linkPrediction(partPairs(s, d), "u", "v",
         minCommon = 2, maxHubDeg = 30)
     },
-      Some("""WITH p AS MATERIALIZED (
-                SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-              b AS MATERIALIZED (
-                SELECT u, v FROM (
-                  SELECT DISTINCT least(x.p, y.p) AS u, greatest(x.p, y.p) AS v
-                  FROM p x JOIN p y ON x.o = y.o AND x.p < y.p) b0
-                WHERE ('0x' || substring(md5(u::VARCHAR || ':' || v::VARCHAR),
-                  1, 8))::BIGINT % 1000 < 40),
-              e AS MATERIALIZED (
-                SELECT u AS src, v AS dst FROM b
-                UNION ALL SELECT v, u FROM b),
+      Some(partGraphCtes("e") + """,
               deg AS MATERIALIZED (
                 SELECT src AS x, count(*)::BIGINT AS d FROM e GROUP BY 1),
               c AS (SELECT e.src, e.dst, deg.d AS dz FROM e
@@ -9427,48 +9193,9 @@ object SparkEntry {
       // min-label winner) over the sparsified part co-occurrence graph —
       // deterministic community detection between components and
       // modularity methods
-      val p = li(s, d).select(col("l_orderkey").as("o"),
-        col("l_partkey").as("p")).distinct()
-      val pairs = p.as("x").join(p.as("y"),
-          col("x.o") === col("y.o") && col("x.p") < col("y.p"))
-        .select(col("x.p").as("u"), col("y.p").as("v")).distinct()
-        .filter(pmod(graft.operators.Dedup.md5Int(
-          concat(col("u").cast("string"), lit(":"), col("v").cast("string"))),
-          lit(1000)) < 40)
-      graft.operators.Components.labelPropagation(pairs, "u", "v", iters = 4)
+      graft.operators.Components.labelPropagation(partPairs(s, d), "u", "v", iters = 4)
     },
-      Some("""WITH p AS MATERIALIZED (
-                SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-              b AS MATERIALIZED (
-                SELECT u, v FROM (
-                  SELECT DISTINCT least(x.p, y.p) AS u, greatest(x.p, y.p) AS v
-                  FROM p x JOIN p y ON x.o = y.o AND x.p < y.p) b0
-                WHERE ('0x' || substring(md5(u::VARCHAR || ':' || v::VARCHAR),
-                  1, 8))::BIGINT % 1000 < 40),
-              e AS MATERIALIZED (
-                SELECT u AS src, v AS dst FROM b
-                UNION ALL SELECT v, u FROM b),
-              l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS lab FROM e),
-              l1 AS MATERIALIZED (SELECT node, lab FROM (
-                SELECT e.src AS node, l.lab, count(*) AS c,
-                  row_number() OVER (PARTITION BY e.src
-                    ORDER BY count(*) DESC, l.lab) AS rn
-                FROM e JOIN l0 l ON e.dst = l.node GROUP BY 1, 2) q WHERE rn = 1),
-              l2 AS MATERIALIZED (SELECT node, lab FROM (
-                SELECT e.src AS node, l.lab, count(*) AS c,
-                  row_number() OVER (PARTITION BY e.src
-                    ORDER BY count(*) DESC, l.lab) AS rn
-                FROM e JOIN l1 l ON e.dst = l.node GROUP BY 1, 2) q WHERE rn = 1),
-              l3 AS MATERIALIZED (SELECT node, lab FROM (
-                SELECT e.src AS node, l.lab, count(*) AS c,
-                  row_number() OVER (PARTITION BY e.src
-                    ORDER BY count(*) DESC, l.lab) AS rn
-                FROM e JOIN l2 l ON e.dst = l.node GROUP BY 1, 2) q WHERE rn = 1),
-              l4 AS MATERIALIZED (SELECT node, lab FROM (
-                SELECT e.src AS node, l.lab, count(*) AS c,
-                  row_number() OVER (PARTITION BY e.src
-                    ORDER BY count(*) DESC, l.lab) AS rn
-                FROM e JOIN l3 l ON e.dst = l.node GROUP BY 1, 2) q WHERE rn = 1),
+      Some(partGraphCtes("e") + ",\n" + lpaCtes(4) + """,
               sz AS (SELECT lab, count(*)::BIGINT AS community_size
                      FROM l4 GROUP BY 1)
               SELECT node, l4.lab AS community, community_size
@@ -9513,68 +9240,7 @@ object SparkEntry {
                   ON x.src = y.dst AND x.dst = y.src AND x.src < x.dst),
               ed AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM mu
                 UNION ALL SELECT id_b, id_a FROM mu),
-              ent AS (SELECT min(vid) AS cur FROM e),
-              q AS (SELECT vid AS query_id, v AS qv FROM e WHERE vid < 20),
-              s0 AS MATERIALIZED (SELECT query_id, qv, cur,
-                      round(list_cosine_similarity(qv, ev.v), 6) AS sim, 0 AS moves
-                    FROM q CROSS JOIN ent JOIN e ev ON ev.vid = cur),
-              s1 AS MATERIALIZED (SELECT s.query_id, s.qv,
-                  CASE WHEN b.bsim > s.sim THEN b.bnode ELSE s.cur END AS cur,
-                  CASE WHEN b.bsim > s.sim THEN b.bsim ELSE s.sim END AS sim,
-                  s.moves + CASE WHEN b.bsim > s.sim THEN 1 ELSE 0 END AS moves
-                FROM s0 s LEFT JOIN (
-                  SELECT query_id, bnode, bsim FROM (
-                    SELECT t.query_id, ev.vid AS bnode,
-                      round(list_cosine_similarity(t.qv, ev.v), 6) AS bsim,
-                      row_number() OVER (PARTITION BY t.query_id
-                        ORDER BY round(list_cosine_similarity(t.qv, ev.v), 6) DESC,
-                                 ev.vid) AS rn
-                    FROM s0 t JOIN ed ON ed.src = t.cur
-                    JOIN e ev ON ev.vid = ed.dst) z WHERE rn = 1) b
-                USING (query_id)),
-              s2 AS MATERIALIZED (SELECT s.query_id, s.qv,
-                  CASE WHEN b.bsim > s.sim THEN b.bnode ELSE s.cur END AS cur,
-                  CASE WHEN b.bsim > s.sim THEN b.bsim ELSE s.sim END AS sim,
-                  s.moves + CASE WHEN b.bsim > s.sim THEN 1 ELSE 0 END AS moves
-                FROM s1 s LEFT JOIN (
-                  SELECT query_id, bnode, bsim FROM (
-                    SELECT t.query_id, ev.vid AS bnode,
-                      round(list_cosine_similarity(t.qv, ev.v), 6) AS bsim,
-                      row_number() OVER (PARTITION BY t.query_id
-                        ORDER BY round(list_cosine_similarity(t.qv, ev.v), 6) DESC,
-                                 ev.vid) AS rn
-                    FROM s1 t JOIN ed ON ed.src = t.cur
-                    JOIN e ev ON ev.vid = ed.dst) z WHERE rn = 1) b
-                USING (query_id)),
-              s3 AS MATERIALIZED (SELECT s.query_id, s.qv,
-                  CASE WHEN b.bsim > s.sim THEN b.bnode ELSE s.cur END AS cur,
-                  CASE WHEN b.bsim > s.sim THEN b.bsim ELSE s.sim END AS sim,
-                  s.moves + CASE WHEN b.bsim > s.sim THEN 1 ELSE 0 END AS moves
-                FROM s2 s LEFT JOIN (
-                  SELECT query_id, bnode, bsim FROM (
-                    SELECT t.query_id, ev.vid AS bnode,
-                      round(list_cosine_similarity(t.qv, ev.v), 6) AS bsim,
-                      row_number() OVER (PARTITION BY t.query_id
-                        ORDER BY round(list_cosine_similarity(t.qv, ev.v), 6) DESC,
-                                 ev.vid) AS rn
-                    FROM s2 t JOIN ed ON ed.src = t.cur
-                    JOIN e ev ON ev.vid = ed.dst) z WHERE rn = 1) b
-                USING (query_id)),
-              s4 AS MATERIALIZED (SELECT s.query_id, s.qv,
-                  CASE WHEN b.bsim > s.sim THEN b.bnode ELSE s.cur END AS cur,
-                  CASE WHEN b.bsim > s.sim THEN b.bsim ELSE s.sim END AS sim,
-                  s.moves + CASE WHEN b.bsim > s.sim THEN 1 ELSE 0 END AS moves
-                FROM s3 s LEFT JOIN (
-                  SELECT query_id, bnode, bsim FROM (
-                    SELECT t.query_id, ev.vid AS bnode,
-                      round(list_cosine_similarity(t.qv, ev.v), 6) AS bsim,
-                      row_number() OVER (PARTITION BY t.query_id
-                        ORDER BY round(list_cosine_similarity(t.qv, ev.v), 6) DESC,
-                                 ev.vid) AS rn
-                    FROM s3 t JOIN ed ON ed.src = t.cur
-                    JOIN e ev ON ev.vid = ed.dst) z WHERE rn = 1) b
-                USING (query_id))
-              SELECT query_id, cur AS node_id, sim, moves FROM s4""")),
+""" + greedyWalkOracle(4))),
 
     Q("v_nnd_search", (s, d) => {
       // greedy best-first routing over the NN-DESCENT graph — the same
@@ -9591,127 +9257,12 @@ object SparkEntry {
       Similarity.greedySearchOverEdges(e.filter(col("vec_id") < 20), e,
         "vec_id", "embedding", "vec_id", "embedding", ed, hops = 4)
     },
-      Some("""WITH e AS MATERIALIZED (
-                SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings),
-              nn AS (SELECT count(*) AS n FROM e),
-              c0 AS (SELECT DISTINCT vid, cand FROM (
-                       SELECT e.vid,
-                         ('0x' || substr(md5(e.vid::VARCHAR || '#nnd' || j::VARCHAR), 1, 8))::BIGINT
-                           % (SELECT n FROM nn) AS cand
-                       FROM e CROSS JOIN range(1, 4) t(j)) z
-                     WHERE cand <> vid),
-              sc0 AS (SELECT c.vid, c.cand,
-                        round(list_cosine_similarity(a.v, b.v), 6) AS cos
-                      FROM c0 c JOIN e a ON a.vid = c.vid
-                                JOIN e b ON b.vid = c.cand),
-              g0 AS MATERIALIZED (SELECT vid, cand, cos, rn FROM (
-                      SELECT vid, cand, cos, row_number() OVER (
-                        PARTITION BY vid ORDER BY cos DESC, cand) AS rn
-                      FROM sc0) z WHERE rn <= 3),
-              u1 AS (SELECT DISTINCT src, dst FROM (
-                       SELECT vid AS src, cand AS dst FROM g0
-                       UNION ALL
-                       SELECT cand AS src, vid AS dst FROM (
-                         SELECT vid, cand, row_number() OVER (
-                           PARTITION BY cand ORDER BY cos DESC, vid) AS rr
-                         FROM g0) z WHERE rr <= 3) w),
-              c1 AS (SELECT DISTINCT vid, cand FROM (
-                       SELECT x.src AS vid, y.dst AS cand FROM u1 x JOIN u1 y
-                         ON x.dst = y.src AND x.src <> y.dst
-                       UNION ALL SELECT vid, cand FROM g0) w),
-              sc1 AS (SELECT c.vid, c.cand,
-                        round(list_cosine_similarity(a.v, b.v), 6) AS cos
-                      FROM c1 c JOIN e a ON a.vid = c.vid
-                                JOIN e b ON b.vid = c.cand),
-              g1 AS MATERIALIZED (SELECT vid, cand, cos, rn FROM (
-                      SELECT vid, cand, cos, row_number() OVER (
-                        PARTITION BY vid ORDER BY cos DESC, cand) AS rn
-                      FROM sc1) z WHERE rn <= 3),
-              u2 AS (SELECT DISTINCT src, dst FROM (
-                       SELECT vid AS src, cand AS dst FROM g1
-                       UNION ALL
-                       SELECT cand AS src, vid AS dst FROM (
-                         SELECT vid, cand, row_number() OVER (
-                           PARTITION BY cand ORDER BY cos DESC, vid) AS rr
-                         FROM g1) z WHERE rr <= 3) w),
-              c2 AS (SELECT DISTINCT vid, cand FROM (
-                       SELECT x.src AS vid, y.dst AS cand FROM u2 x JOIN u2 y
-                         ON x.dst = y.src AND x.src <> y.dst
-                       UNION ALL SELECT vid, cand FROM g1) w),
-              sc2 AS (SELECT c.vid, c.cand,
-                        round(list_cosine_similarity(a.v, b.v), 6) AS cos
-                      FROM c2 c JOIN e a ON a.vid = c.vid
-                                JOIN e b ON b.vid = c.cand),
-              g2 AS MATERIALIZED (SELECT vid, cand, cos, rn FROM (
-                      SELECT vid, cand, cos, row_number() OVER (
-                        PARTITION BY vid ORDER BY cos DESC, cand) AS rn
-                      FROM sc2) z WHERE rn <= 3),
+      Some(nnDescentCtes(2, materializeLast = true) + """,
               ed AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
                       SELECT vid AS src, cand AS dst FROM g2
                       UNION ALL
                       SELECT cand AS src, vid AS dst FROM g2) w),
-              ent AS (SELECT min(vid) AS cur FROM e),
-              q AS (SELECT vid AS query_id, v AS qv FROM e WHERE vid < 20),
-              s0 AS MATERIALIZED (SELECT query_id, qv, cur,
-                      round(list_cosine_similarity(qv, ev.v), 6) AS sim, 0 AS moves
-                    FROM q CROSS JOIN ent JOIN e ev ON ev.vid = cur),
-              s1 AS MATERIALIZED (SELECT s.query_id, s.qv,
-                  CASE WHEN b.bsim > s.sim THEN b.bnode ELSE s.cur END AS cur,
-                  CASE WHEN b.bsim > s.sim THEN b.bsim ELSE s.sim END AS sim,
-                  s.moves + CASE WHEN b.bsim > s.sim THEN 1 ELSE 0 END AS moves
-                FROM s0 s LEFT JOIN (
-                  SELECT query_id, bnode, bsim FROM (
-                    SELECT t.query_id, ev.vid AS bnode,
-                      round(list_cosine_similarity(t.qv, ev.v), 6) AS bsim,
-                      row_number() OVER (PARTITION BY t.query_id
-                        ORDER BY round(list_cosine_similarity(t.qv, ev.v), 6) DESC,
-                                 ev.vid) AS rn
-                    FROM s0 t JOIN ed ON ed.src = t.cur
-                    JOIN e ev ON ev.vid = ed.dst) z WHERE rn = 1) b
-                USING (query_id)),
-              s2 AS MATERIALIZED (SELECT s.query_id, s.qv,
-                  CASE WHEN b.bsim > s.sim THEN b.bnode ELSE s.cur END AS cur,
-                  CASE WHEN b.bsim > s.sim THEN b.bsim ELSE s.sim END AS sim,
-                  s.moves + CASE WHEN b.bsim > s.sim THEN 1 ELSE 0 END AS moves
-                FROM s1 s LEFT JOIN (
-                  SELECT query_id, bnode, bsim FROM (
-                    SELECT t.query_id, ev.vid AS bnode,
-                      round(list_cosine_similarity(t.qv, ev.v), 6) AS bsim,
-                      row_number() OVER (PARTITION BY t.query_id
-                        ORDER BY round(list_cosine_similarity(t.qv, ev.v), 6) DESC,
-                                 ev.vid) AS rn
-                    FROM s1 t JOIN ed ON ed.src = t.cur
-                    JOIN e ev ON ev.vid = ed.dst) z WHERE rn = 1) b
-                USING (query_id)),
-              s3 AS MATERIALIZED (SELECT s.query_id, s.qv,
-                  CASE WHEN b.bsim > s.sim THEN b.bnode ELSE s.cur END AS cur,
-                  CASE WHEN b.bsim > s.sim THEN b.bsim ELSE s.sim END AS sim,
-                  s.moves + CASE WHEN b.bsim > s.sim THEN 1 ELSE 0 END AS moves
-                FROM s2 s LEFT JOIN (
-                  SELECT query_id, bnode, bsim FROM (
-                    SELECT t.query_id, ev.vid AS bnode,
-                      round(list_cosine_similarity(t.qv, ev.v), 6) AS bsim,
-                      row_number() OVER (PARTITION BY t.query_id
-                        ORDER BY round(list_cosine_similarity(t.qv, ev.v), 6) DESC,
-                                 ev.vid) AS rn
-                    FROM s2 t JOIN ed ON ed.src = t.cur
-                    JOIN e ev ON ev.vid = ed.dst) z WHERE rn = 1) b
-                USING (query_id)),
-              s4 AS MATERIALIZED (SELECT s.query_id, s.qv,
-                  CASE WHEN b.bsim > s.sim THEN b.bnode ELSE s.cur END AS cur,
-                  CASE WHEN b.bsim > s.sim THEN b.bsim ELSE s.sim END AS sim,
-                  s.moves + CASE WHEN b.bsim > s.sim THEN 1 ELSE 0 END AS moves
-                FROM s3 s LEFT JOIN (
-                  SELECT query_id, bnode, bsim FROM (
-                    SELECT t.query_id, ev.vid AS bnode,
-                      round(list_cosine_similarity(t.qv, ev.v), 6) AS bsim,
-                      row_number() OVER (PARTITION BY t.query_id
-                        ORDER BY round(list_cosine_similarity(t.qv, ev.v), 6) DESC,
-                                 ev.vid) AS rn
-                    FROM s3 t JOIN ed ON ed.src = t.cur
-                    JOIN e ev ON ev.vid = ed.dst) z WHERE rn = 1) b
-                USING (query_id))
-              SELECT query_id, cur AS node_id, sim, moves FROM s4""")),
+""" + greedyWalkOracle(4))),
 
     Q("x_stupid_backoff", (s, d) =>
       // stupid-backoff trigram scoring of the odd-doc half under counts
@@ -9770,55 +9321,10 @@ object SparkEntry {
       // shortest hop distance from the p%997==0 seed parts, 6 synchronous
       // unit-weight relaxation rounds; `converged` asserts the frontier
       // emptied inside the budget
-      val p = li(s, d).select(col("l_orderkey").as("o"),
-        col("l_partkey").as("p")).distinct()
-      val pairs = p.as("x").join(p.as("y"),
-          col("x.o") === col("y.o") && col("x.p") < col("y.p"))
-        .select(col("x.p").as("u"), col("y.p").as("v")).distinct()
-        .filter(pmod(graft.operators.Dedup.md5Int(
-          concat(col("u").cast("string"), lit(":"), col("v").cast("string"))),
-          lit(1000)) < 40)
-      val sources = li(s, d).select(col("l_partkey").as("node")).distinct()
-        .filter(pmod(col("node"), lit(997)) === 0)
-      graft.operators.Components.bfsLevels(pairs, "u", "v", sources, rounds = 6)
+      graft.operators.Components.bfsLevels(partPairs(s, d), "u", "v", seedParts(s, d),
+        rounds = 6)
     },
-      Some("""WITH p AS MATERIALIZED (
-                SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-              b AS MATERIALIZED (
-                SELECT u, v FROM (
-                  SELECT DISTINCT least(x.p, y.p) AS u, greatest(x.p, y.p) AS v
-                  FROM p x JOIN p y ON x.o = y.o AND x.p < y.p) b0
-                WHERE ('0x' || substring(md5(u::VARCHAR || ':' || v::VARCHAR),
-                  1, 8))::BIGINT % 1000 < 40),
-              e AS MATERIALIZED (
-                SELECT u AS src, v AS dst FROM b
-                UNION ALL SELECT v, u FROM b),
-              d0 AS MATERIALIZED (SELECT DISTINCT l_partkey AS node, 0 AS dist
-                FROM lineitem WHERE l_partkey % 997 = 0),
-              d1 AS MATERIALIZED (SELECT node, min(dist)::INT AS dist FROM (
-                SELECT node, dist FROM d0 UNION ALL
-                SELECT e.dst, d.dist + 1 FROM e JOIN d0 d ON e.src = d.node) z
-                GROUP BY 1),
-              d2 AS MATERIALIZED (SELECT node, min(dist)::INT AS dist FROM (
-                SELECT node, dist FROM d1 UNION ALL
-                SELECT e.dst, d.dist + 1 FROM e JOIN d1 d ON e.src = d.node) z
-                GROUP BY 1),
-              d3 AS MATERIALIZED (SELECT node, min(dist)::INT AS dist FROM (
-                SELECT node, dist FROM d2 UNION ALL
-                SELECT e.dst, d.dist + 1 FROM e JOIN d2 d ON e.src = d.node) z
-                GROUP BY 1),
-              d4 AS MATERIALIZED (SELECT node, min(dist)::INT AS dist FROM (
-                SELECT node, dist FROM d3 UNION ALL
-                SELECT e.dst, d.dist + 1 FROM e JOIN d3 d ON e.src = d.node) z
-                GROUP BY 1),
-              d5 AS MATERIALIZED (SELECT node, min(dist)::INT AS dist FROM (
-                SELECT node, dist FROM d4 UNION ALL
-                SELECT e.dst, d.dist + 1 FROM e JOIN d4 d ON e.src = d.node) z
-                GROUP BY 1),
-              d6 AS MATERIALIZED (SELECT node, min(dist)::INT AS dist FROM (
-                SELECT node, dist FROM d5 UNION ALL
-                SELECT e.dst, d.dist + 1 FROM e JOIN d5 d ON e.src = d.node) z
-                GROUP BY 1),
+      Some(partGraphCtes("e") + ",\n" + bfsCtes(6) + """,
               conv AS (SELECT CASE WHEN (SELECT count(*) FROM d5)
                   = (SELECT count(*) FROM d6) THEN 1 ELSE 0 END AS converged)
               SELECT node, dist, converged FROM d6 CROSS JOIN conv""")),
@@ -10135,55 +9641,17 @@ object SparkEntry {
       // part co-occurrence graph: Newman-Girvan Q from two label equi
       // joins + one community aggregate — closes the community loop
       // (detect with d_lpa_communities, score here)
-      val p = li(s, d).select(col("l_orderkey").as("o"),
-        col("l_partkey").as("p")).distinct()
       // materialized: the sparsified wedge-join pair build feeds BOTH the
       // LPA detection pass and the modularity scorer — left lazy it runs
       // twice (the r13 before-plan carried the whole self-join lineage in
       // every modularity aggregate)
-      val pairs = graft.Mat(p.as("x").join(p.as("y"),
-          col("x.o") === col("y.o") && col("x.p") < col("y.p"))
-        .select(col("x.p").as("u"), col("y.p").as("v")).distinct()
-        .filter(pmod(graft.operators.Dedup.md5Int(
-          concat(col("u").cast("string"), lit(":"), col("v").cast("string"))),
-          lit(1000)) < 40))
+      val pairs = graft.Mat(partPairs(s, d))
       val lab = graft.operators.Components
         .labelPropagation(pairs, "u", "v", iters = 4)
         .select(col("node"), col("community"))
       graft.operators.Components.modularity(pairs, "u", "v", lab)
     },
-      Some("""WITH p AS MATERIALIZED (
-                SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-              b AS MATERIALIZED (
-                SELECT u, v FROM (
-                  SELECT DISTINCT least(x.p, y.p) AS u, greatest(x.p, y.p) AS v
-                  FROM p x JOIN p y ON x.o = y.o AND x.p < y.p) b0
-                WHERE ('0x' || substring(md5(u::VARCHAR || ':' || v::VARCHAR),
-                  1, 8))::BIGINT % 1000 < 40),
-              e AS MATERIALIZED (
-                SELECT u AS src, v AS dst FROM b
-                UNION ALL SELECT v, u FROM b),
-              l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS lab FROM e),
-              l1 AS MATERIALIZED (SELECT node, lab FROM (
-                SELECT e.src AS node, l.lab, count(*) AS c,
-                  row_number() OVER (PARTITION BY e.src
-                    ORDER BY count(*) DESC, l.lab) AS rn
-                FROM e JOIN l0 l ON e.dst = l.node GROUP BY 1, 2) q WHERE rn = 1),
-              l2 AS MATERIALIZED (SELECT node, lab FROM (
-                SELECT e.src AS node, l.lab, count(*) AS c,
-                  row_number() OVER (PARTITION BY e.src
-                    ORDER BY count(*) DESC, l.lab) AS rn
-                FROM e JOIN l1 l ON e.dst = l.node GROUP BY 1, 2) q WHERE rn = 1),
-              l3 AS MATERIALIZED (SELECT node, lab FROM (
-                SELECT e.src AS node, l.lab, count(*) AS c,
-                  row_number() OVER (PARTITION BY e.src
-                    ORDER BY count(*) DESC, l.lab) AS rn
-                FROM e JOIN l2 l ON e.dst = l.node GROUP BY 1, 2) q WHERE rn = 1),
-              l4 AS MATERIALIZED (SELECT node, lab FROM (
-                SELECT e.src AS node, l.lab, count(*) AS c,
-                  row_number() OVER (PARTITION BY e.src
-                    ORDER BY count(*) DESC, l.lab) AS rn
-                FROM e JOIN l3 l ON e.dst = l.node GROUP BY 1, 2) q WHERE rn = 1),
+      Some(partGraphCtes("e") + ",\n" + lpaCtes(4) + """,
               tg AS MATERIALIZED (SELECT b.u, b.v, lu.lab AS cu, lv.lab AS cv
                 FROM b JOIN l4 lu ON b.u = lu.node
                 JOIN l4 lv ON b.v = lv.node),
@@ -10303,30 +9771,10 @@ object SparkEntry {
       // sparsified co-occurrence graph (random walk with restart — the
       // graph-retrieval relevance primitive): 3 iterations, per-edge
       // contributions round-9 into DECIMAL sums, restart mass 1/|S|
-      val p = li(s, d).select(col("l_orderkey").as("o"),
-        col("l_partkey").as("p")).distinct()
-      val pairs = p.as("x").join(p.as("y"),
-          col("x.o") === col("y.o") && col("x.p") < col("y.p"))
-        .select(col("x.p").as("u"), col("y.p").as("v")).distinct()
-        .filter(pmod(graft.operators.Dedup.md5Int(
-          concat(col("u").cast("string"), lit(":"), col("v").cast("string"))),
-          lit(1000)) < 40)
-      val seeds = li(s, d).select(col("l_partkey").as("node")).distinct()
-        .filter(pmod(col("node"), lit(997)) === 0)
       graft.operators.Components.personalizedPageRank(
-        pairs, "u", "v", seeds, iters = 3)
+        partPairs(s, d), "u", "v", seedParts(s, d), iters = 3)
     },
-      Some("""WITH p AS MATERIALIZED (
-                SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-              b AS MATERIALIZED (
-                SELECT u, v FROM (
-                  SELECT DISTINCT least(x.p, y.p) AS u, greatest(x.p, y.p) AS v
-                  FROM p x JOIN p y ON x.o = y.o AND x.p < y.p) b0
-                WHERE ('0x' || substring(md5(u::VARCHAR || ':' || v::VARCHAR),
-                  1, 8))::BIGINT % 1000 < 40),
-              ed AS MATERIALIZED (
-                SELECT u AS src, v AS dst FROM b
-                UNION ALL SELECT v, u FROM b),
+      Some(partGraphCtes("ed") + """,
               dg AS (SELECT src, count(*)::BIGINT AS outdeg FROM ed GROUP BY 1),
               nd AS (SELECT DISTINCT src AS node FROM ed),
               sd AS (SELECT DISTINCT l_partkey AS node FROM lineitem
@@ -10336,27 +9784,7 @@ object SparkEntry {
                       (CASE WHEN sd.node IS NOT NULL THEN ns.sm ELSE 0.0 END)::DOUBLE AS e
                     FROM nd LEFT JOIN sd ON nd.node = sd.node CROSS JOIN ns),
               r0 AS MATERIALIZED (SELECT node, e AS rank FROM bs),
-              r1 AS MATERIALIZED (SELECT b2.node,
-                  floor((0.15 * b2.e + 0.85 * coalesce(c.insum, 0.0)) * 1e9 + 0.5) / 1e9 AS rank
-                FROM bs b2 LEFT JOIN (
-                  SELECT ed.dst AS node,
-                    sum((floor(r.rank / dg.outdeg * 1e9 + 0.5) / 1e9)::DECIMAL(28,9))::DOUBLE AS insum
-                  FROM ed JOIN r0 r ON ed.src = r.node
-                  JOIN dg ON dg.src = ed.src GROUP BY 1) c USING (node)),
-              r2 AS MATERIALIZED (SELECT b2.node,
-                  floor((0.15 * b2.e + 0.85 * coalesce(c.insum, 0.0)) * 1e9 + 0.5) / 1e9 AS rank
-                FROM bs b2 LEFT JOIN (
-                  SELECT ed.dst AS node,
-                    sum((floor(r.rank / dg.outdeg * 1e9 + 0.5) / 1e9)::DECIMAL(28,9))::DOUBLE AS insum
-                  FROM ed JOIN r1 r ON ed.src = r.node
-                  JOIN dg ON dg.src = ed.src GROUP BY 1) c USING (node)),
-              r3 AS MATERIALIZED (SELECT b2.node,
-                  floor((0.15 * b2.e + 0.85 * coalesce(c.insum, 0.0)) * 1e9 + 0.5) / 1e9 AS rank
-                FROM bs b2 LEFT JOIN (
-                  SELECT ed.dst AS node,
-                    sum((floor(r.rank / dg.outdeg * 1e9 + 0.5) / 1e9)::DECIMAL(28,9))::DOUBLE AS insum
-                  FROM ed JOIN r2 r ON ed.src = r.node
-                  JOIN dg ON dg.src = ed.src GROUP BY 1) c USING (node))
+""" + pprCtes(3) + """
               SELECT node, rank FROM r3""")),
 
     Q("a59_roc_auc", (s, d) =>
@@ -10368,21 +9796,7 @@ object SparkEntry {
       graft.operators.Stats.rocAuc(doc(s, d),
         TextFunctions.qualityScore(col("text")),
         (col("lang") === "en").cast("int")),
-      Some("""WITH b AS (SELECT lang,
-                (CASE WHEN length(trim(text)) = 0 THEN 0
-                      ELSE len(string_split_regex(trim(text), '\s+')) END)::INT AS n_tok_ws,
-                (length(text) - length(regexp_replace(text, '[.,;:!?''"()\[\]{}-]', '', 'g')))::INT AS n_punct,
-                len(regexp_extract_all(lower(text),
-                  '\b(the|a|an|and|or|of|to|in|is|it|that|for|on|with|as)\b'))::INT AS n_stop,
-                length(text) AS n_ch
-              FROM documents),
-              sc AS (SELECT round(least(greatest(
-                  least(n_tok_ws / 100.0, 1.0) * 0.4
-                  + least((CASE WHEN n_tok_ws > 0 THEN n_stop / n_tok_ws::DOUBLE ELSE 0 END) * 4.0, 1.0) * 0.4
-                  + (1.0 - least((CASE WHEN n_ch > 0 THEN n_punct / n_ch::DOUBLE ELSE 0 END) * 10.0, 1.0)) * 0.2,
-                  0.0), 1.0), 6) AS x,
-                (CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS y
-              FROM b),
+      Some("WITH " + enQualityCtes(" AS x") + """,
               per AS (SELECT x, sum(y)::BIGINT AS c1, sum(1 - y)::BIGINT AS c0
                       FROM sc GROUP BY 1),
               cum AS (SELECT c0, c1, sum(c0 + c1) OVER (ORDER BY x) - c0 - c1 AS cb
@@ -10406,21 +9820,7 @@ object SparkEntry {
       graft.operators.Stats.calibrationReport(doc(s, d),
         TextFunctions.qualityScore(col("text")),
         (col("lang") === "en").cast("int"), bins = 10),
-      Some("""WITH b AS (SELECT lang,
-                (CASE WHEN length(trim(text)) = 0 THEN 0
-                      ELSE len(string_split_regex(trim(text), '\s+')) END)::INT AS n_tok_ws,
-                (length(text) - length(regexp_replace(text, '[.,;:!?''"()\[\]{}-]', '', 'g')))::INT AS n_punct,
-                len(regexp_extract_all(lower(text),
-                  '\b(the|a|an|and|or|of|to|in|is|it|that|for|on|with|as)\b'))::INT AS n_stop,
-                length(text) AS n_ch
-              FROM documents),
-              sc AS (SELECT round(least(greatest(
-                  least(n_tok_ws / 100.0, 1.0) * 0.4
-                  + least((CASE WHEN n_tok_ws > 0 THEN n_stop / n_tok_ws::DOUBLE ELSE 0 END) * 4.0, 1.0) * 0.4
-                  + (1.0 - least((CASE WHEN n_ch > 0 THEN n_punct / n_ch::DOUBLE ELSE 0 END) * 10.0, 1.0)) * 0.2,
-                  0.0), 1.0), 6)::DECIMAL(8,6) AS p,
-                (CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS y
-              FROM b),
+      Some("WITH " + enQualityCtes("::DECIMAL(8,6) AS p") + """,
               pb AS (SELECT least(floor(p::DOUBLE * 10), 9)::BIGINT AS bin,
                        count(*)::BIGINT AS n_b,
                        sum(p)::DECIMAL(38,6) AS sum_p,
@@ -10537,22 +9937,7 @@ object SparkEntry {
         "vec_id", "embedding", "vec_id", "embedding", k = 5)
     },
       Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
-              cent AS (SELECT m.cell, e.v AS centroid
-                       FROM (SELECT vec_id % 16 AS cell, min(vec_id) AS mvid
-                             FROM e GROUP BY 1) m
-                       JOIN e ON e.vec_id = m.mvid),
-              asg AS (SELECT vec_id, v, cell FROM (
-                        SELECT e.vec_id, e.v, c.cell,
-                               row_number() OVER (PARTITION BY e.vec_id
-                                 ORDER BY round(list_cosine_similarity(e.v, c.centroid), 6) DESC,
-                                          c.cell) AS rn
-                        FROM e CROSS JOIN cent c) WHERE rn = 1),
-              probes AS (SELECT vec_id AS query_id, v AS qv, cell FROM (
-                           SELECT e.vec_id, e.v, c.cell,
-                                  row_number() OVER (PARTITION BY e.vec_id
-                                    ORDER BY round(list_cosine_similarity(e.v, c.centroid), 6) DESC,
-                                             c.cell) AS rn
-                           FROM e CROSS JOIN cent c WHERE e.vec_id < 20) WHERE rn <= 4),
+""" + ivfProbeCtes + """,
               ivf AS (SELECT p.query_id, a.vec_id AS neighbor_id,
                              round(list_cosine_similarity(p.qv, a.v), 6) AS cos,
                              (row_number() OVER (PARTITION BY p.query_id

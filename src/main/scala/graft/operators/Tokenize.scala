@@ -274,21 +274,7 @@ object Tokenize {
       v = graft.Mat(unigramMStep(unigramViterbi(words, v, maxPieceLen, maxWordLen), v))
     val enc = unigramViterbi(words, v, maxPieceLen, maxWordLen)
       .select(col("word"), size(split(col("pieces"), " ")).as("n_sym"))
-    val occ = df.select(group.as("grp"),
-        explode(split(trim(text), "\\s+")).as("term"))
-      .filter(col("term") =!= "")
-      .groupBy(col("grp"), col("term"))
-      .agg(count(lit(1)).as("cnt"))
-    occ.join(enc, occ("term") === enc("word"))
-      .groupBy(col("grp"))
-      .agg(
-        sum(col("cnt")).as("n_words"),
-        sum(col("cnt") * col("n_sym")).as("n_tokens"),
-        sum(col("cnt") * length(col("word"))).as("n_chars"))
-      .select(col("grp"),
-        col("n_words"), col("n_tokens"),
-        round(col("n_tokens") / col("n_words"), 6).as("fertility"),
-        round(col("n_chars") / col("n_tokens"), 6).as("chars_per_token"))
+    encodeStats(df, text, group, enc)
   }
 
   /** WordPiece tokenizer (Wu et al. 2016; the BERT family) — the third
@@ -408,6 +394,14 @@ object Tokenize {
       nMerges: Int, matEvery: Int): DataFrame = {
     val enc = bpeMerges(df, id, text, nMerges, matEvery)
       .select(col("word"), size(split(col("seg"), " ")).as("n_sym"))
+    encodeStats(df, text, group, enc)
+  }
+
+  /** Per-`group` fertility and chars/token of the encoded distinct-word
+    * frame `enc(word, n_sym)`: one equi join of per-(group, word)
+    * occurrence counts, then a group-sized aggregate. */
+  private def encodeStats(
+      df: DataFrame, text: Column, group: Column, enc: DataFrame): DataFrame = {
     val occ = df.select(group.as("grp"),
         explode(split(trim(text), "\\s+")).as("term"))
       .filter(col("term") =!= "")

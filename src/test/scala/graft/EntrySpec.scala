@@ -3,17 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Smoke: the driver contract — entry() has rows, every registered query
-  * runs at sf0.001, oracle keys are a subset of query keys. */
+  * runs at sf0.001 — plus source-tree guards over `src/main/scala`. */
 class EntrySpec extends SparkSpec {
 
   test("entry returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
-  }
-
-  test("oracleSql keys all have matching queries") {
-    val qs = SparkEntry.queries.keySet
-    val extra = SparkEntry.oracleSql.keySet -- qs
-    assert(extra.isEmpty, s"oracle without query: $extra")
   }
 
   test("every query executes at sf0.001") {
@@ -48,6 +42,36 @@ class EntrySpec extends SparkSpec {
       "SPARK_GRAFT_REPO_DIR", "graft.mat")
     assert(found == allowed,
       s"unlisted: ${found -- allowed}; listed but unread: ${allowed -- found}")
+  }
+
+  test("src/main repeats no run of 12 lines") {
+    // each shared query input or oracle fragment has one definition: a
+    // run of 12 consecutive lines (each trimmed, >= 240 characters in
+    // all) that appears twice in the tree is a copy to fold into a helper
+    import scala.jdk.CollectionConverters._
+    val repo = java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", sys.props("user.dir")))
+    val root = repo.resolve("src/main/scala")
+    val files = {
+      val s = java.nio.file.Files.walk(root)
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector.sortBy(_.toString)
+      finally s.close()
+    }
+    assert(files.nonEmpty, s"no sources under $root")
+    val window = 12
+    val seen = scala.collection.mutable.LinkedHashMap[Seq[String], List[String]]()
+    for (f <- files) {
+      val lines = java.nio.file.Files.readAllLines(f).asScala.map(_.trim).toVector
+      for (i <- 0 to lines.length - window) {
+        val w = lines.slice(i, i + window)
+        if (w.map(_.length).sum >= 240)
+          seen(w) = seen.getOrElse(w, Nil) :+ s"${repo.relativize(f)}:${i + 1}"
+      }
+    }
+    val repeated = seen.values.filter(_.size > 1).toSeq
+    if (repeated.nonEmpty)
+      fail(s"${repeated.size} repeated $window-line windows, e.g.\n" +
+        repeated.take(10).map(_.mkString(" = ")).mkString("\n"))
   }
 
   test("approx_count_distinct within 5% of exact") {
