@@ -53,6 +53,12 @@ object Bench {
       if (h == 42L) System.err.println("calib sentinel")
       (System.nanoTime() - t0) / 1e6
     }
+    // generated classes compiled so far in this JVM (one histogram update
+    // per compilation): its delta over a warm sample counts the classes
+    // the codegen cache evicted and recompiled. Read outside the timed
+    // region; artifact-only.
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val forensics = scala.collection.mutable.LinkedHashMap[String, String]()
     // queries whose run threw: their timings are not valid samples, so
     // they are named in the artifact and counted on the JSON line
@@ -70,7 +76,9 @@ object Bench {
       }
       val (st0, id0, tot0) = procStat()
       val cal0 = calibMs()
+      val cc0 = compiles()
       val first = once()
+      val cc1 = compiles()
       // heavier queries get more samples: their timings are the ones the
       // judge compares round-over-round, and this VM's CPU-steal windows
       // are long enough that two samples can BOTH land in a slow window
@@ -83,12 +91,14 @@ object Bench {
         if (first < 1.0) Seq(first)
         else first +: (2 to n).map(_ => once())
       val secs = samples.min
+      val cc2 = compiles()
       val (st1, id1, tot1) = procStat()
       val cal1 = calibMs()
       def f3(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
       forensics(name) = samples.map(f3).mkString("{\"samples\":[", ",", "]") +
         s""","steal_jiffies":${st1 - st0},"idle_jiffies":${id1 - id0},"total_jiffies":${tot1 - tot0}""" +
-        s""","calib_ms_before":${f3(cal0)},"calib_ms_after":${f3(cal1)}}"""
+        s""","calib_ms_before":${f3(cal0)},"calib_ms_after":${f3(cal1)}""" +
+        s""","compiles":{"first":${cc1 - cc0},"later":${cc2 - cc1}}}"""
       name -> secs
     }
     // One JSON line, sized to SURVIVE the archiver: the harness keeps only

@@ -12,6 +12,22 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
+  /** Entries in Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). The cache is an
+    * LRU, so a working set above its size evicts every class before its
+    * next use and each repeated pass recompiles all of them (~198
+    * compilations per warm `domain_e2e_gl` pass at sf0.01 under the
+    * default), each fresh class also losing its JIT state. Class working
+    * sets measured on 4 cores: `domain_e2e_gl` 199 at sf0.01, 261 with
+    * `g_incremental_gl`; the benchmark's query mix 271 at sf0.001; all
+    * registry queries at sf0.001, less the six that write fixed `/tmp`
+    * paths, 3,570. 8,192 holds all of them with room to spare; with all
+    * of them retained, Metaspace use peaked at 216 MiB. The cache is one
+    * JVM-wide object sized from the conf that the process's first code
+    * generation sees, so every session the engine or its specs build
+    * sets this. */
+  val CodegenCacheEntries = 8192
+
   def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
@@ -41,6 +57,7 @@ object GraftSession {
       // sf0.1 (pass totals 85.0/70.2/70.3/85.8 s SHJ/SMJ/SHJ/SMJ, per-query
       // min-of-2 split 6/6 by sign; OPTIMIZATION_r14.md).
       .config("spark.sql.join.preferSortMergeJoin", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.extensions", "graft.sql.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")

@@ -18,11 +18,18 @@ object Verify {
       case Some(names) => SparkEntry.queries.filter(q => names(q._1))
       case None        => SparkEntry.queries
     }
+    // queries that threw: their dump is deleted, so a stale one left in a
+    // reused outDir cannot compare as current, and they are named in
+    // failed.json and counted on stdout
+    val failed = scala.collection.mutable.ArrayBuffer[String]()
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
+        val dump = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+        dump.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dump, true)
       }
       // free per-query persisted/localCheckpoint blocks
       spark.catalog.clearCache()
@@ -52,6 +59,9 @@ object Verify {
       .filter { case (k, _) => selectedNames(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/failed.json"),
+      failed.map(q).mkString("[", ",", "]"))
+    println(s"""{"n_failed":${failed.size}}""")
     spark.stop()
   }
 }

@@ -194,7 +194,7 @@ object Calc {
   /** Several rules may match one participant row: keep the most specific
     * (exact product > exact state > double wildcard), deterministically,
     * then resolve the three-level rate priority. Expects the caller's
-    * caller's per-row key and the rules-side `__spec` rank. */
+    * per-row key and the rules-side `__spec` rank. */
   private def resolveBest(joined: DataFrame, keys: Seq[Column]): DataFrame = {
     val best = Joins.top1PerGroup(
       joined.withColumn("__spec", coalesce(col("__spec"), lit(9))),

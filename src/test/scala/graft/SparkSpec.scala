@@ -12,6 +12,9 @@ trait SparkSpec extends AnyFunSuite {
     // same extensions as the shipped GraftSession config: tests must
     // exercise the native expressions + optimizer rules users get
     .config("spark.sql.extensions", "graft.sql.GraftExtensions")
+    // the codegen cache is JVM-wide and sized by the first session, so
+    // the specs must size it as GraftSession does
+    .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries.toString)
     .config("spark.ui.enabled", "false")
     .config("spark.driver.host", "127.0.0.1")
     .getOrCreate()
