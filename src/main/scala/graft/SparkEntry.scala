@@ -4218,9 +4218,7 @@ object SparkEntry {
       // values instead of sign bits; one scalar column per output dim
       val e = emb(s, d).select(col("vec_id"),
         VectorFunctions.toDoubleArray(col("embedding")).as("v"))
-      val native = e.sparkSession.catalog.functionExists("dot_product")
-      val projs = VectorFunctions.randomProjection(
-        col("v"), dim = 64, nOut = 8, native = native)
+      val projs = VectorFunctions.randomProjection(col("v"), dim = 64, nOut = 8)
       e.select(col("vec_id") +: projs.zipWithIndex.map {
         case (p, i) => p.as(s"p$i")
       }: _*)

@@ -184,14 +184,16 @@ object Ingest {
     } finally in.close()
   }
 
-  /** One row of the ingest plan: where a file routes and whether its
-    * headers conform. `reason` is null for loadable files. `path` is the
-    * full input path (routing keys on the basename, but two inputs may
-    * share a basename across directories — loads must key on the path). */
+  /** One row of the ingest plan: where a file routes, its sanitized
+    * headers and whether they conform. `reason` is null for loadable
+    * files. `path` is the full input path (routing keys on the basename,
+    * but two inputs may share a basename across directories — loads must
+    * key on the path). */
   final case class IngestAction(
-      file: String, path: String, table: Option[String], nColumns: Int,
+      file: String, path: String, table: Option[String], headers: Seq[String],
       missing: Seq[String], extra: Seq[String], reason: Option[String]) {
     def loadable: Boolean = reason.isEmpty
+    def nColumns: Int = headers.size
   }
 
   /** Dry-run plan (`--dry-run`): route each file by prefix, validate its
@@ -202,24 +204,27 @@ object Ingest {
       val base = f.substring(f.lastIndexOf('/') + 1)
       routeFile(base) match {
         case None =>
-          IngestAction(base, f, None, 0, Nil, Nil, Some("no routing prefix matches"))
+          IngestAction(base, f, None, Nil, Nil, Nil, Some("no routing prefix matches"))
         case Some(table) =>
           val headers = readCsvHeaders(spark, f)
           val expected = expectedColumns(table)
           if (skipValidation || expected.isEmpty)
-            IngestAction(base, f, Some(table), headers.size, Nil, Nil, None)
+            IngestAction(base, f, Some(table), headers, Nil, Nil, None)
           else {
             val v = validateHeaders(headers, expected)
             val reason =
               if (v.valid) None
               else Some(s"missing columns: ${v.missing.mkString(", ")}")
-            IngestAction(base, f, Some(table), headers.size, v.missing, v.extra, reason)
+            IngestAction(base, f, Some(table), headers, v.missing, v.extra, reason)
           }
       }
     }
 
-  /** Execute an ingest plan: all-string CSV reads per loadable file
-    * (unioned per target table), preview mode caps each table at
+  /** Execute an ingest plan: all-string CSV reads per loadable file, each
+    * renamed to the sanitized headers its validation saw (Spark keeps
+    * padding in header names: `"CertificateId "` would pass validation,
+    * then fail to resolve or union into a separate column), unioned per
+    * target table; preview mode caps each table at
     * `previewRows` (`--preview`, `ingest-raw-data.ts:576`). Returns the
     * loaded frames plus the quarantine report (file, table, reason) as a
     * DataFrame so DQ failures land in a queryable sink, not a log. */
@@ -228,16 +233,22 @@ object Ingest {
                   skipValidation: Boolean = false)
       : (Map[String, DataFrame], DataFrame) = {
     val plan = ingestPlan(spark, files, skipValidation)
-    val byTable = plan.filter(_.loadable).groupBy(_.table.get)
-    val loaded = byTable.map { case (table, actions) =>
-      val df = actions.map(a => readRawCsv(spark, a.path))
+    // Spark's line-based reader splits a header holding a quoted newline
+    // into fewer fields than the RFC-4180 header read; such a file would
+    // load shifted columns, so it is quarantined like a header mismatch
+    val (readable, misread) = plan.filter(_.loadable)
+      .map(a => a -> readRawCsv(spark, a.path))
+      .partition { case (a, raw) => raw.columns.length == a.nColumns }
+    val loaded = readable.groupBy(_._1.table.get).map { case (table, reads) =>
+      val df = reads.map { case (a, raw) => raw.toDF(a.headers: _*) }
         .reduce(_ unionByName (_, allowMissingColumns = true))
       table -> (if (preview) df.limit(previewRows) else df)
     }
     import spark.implicits._
-    val quarantine = plan.filterNot(_.loadable)
-      .map(a => (a.file, a.table.orNull, a.reason.get))
-      .toDF("file", "table", "reason")
+    val quarantine = (plan.filterNot(_.loadable).map(a => (a.file, a.table.orNull, a.reason.get)) ++
+      misread.map { case (a, raw) =>
+        (a.file, a.table.orNull, s"header read as ${raw.columns.length} fields, not ${a.nColumns}")
+      }).toDF("file", "table", "reason")
     (loaded, quarantine)
   }
 }

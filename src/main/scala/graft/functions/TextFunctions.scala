@@ -658,13 +658,12 @@ object TextFunctions {
     * plagiarism-style matching. Emits one (doc_id, fp) row per selected
     * hash.
     *
-    * Relational formulation on purpose: positions are EXPLODED to rows so
-    * each k-gram is hashed exactly once inside whole-stage codegen, and
-    * the sliding minimum is a rows-between window frame. The
-    * array/higher-order form re-evaluates the whole md5 array per window
-    * position once the optimizer collapses the projections (HOFs are
-    * interpreted with no subexpression elimination) — O(n*w) md5s per
-    * document and a 100x slowdown observed at sf0.1. */
+    * Fully native: every k-gram is hashed in one pass (`hash="poly"` = the
+    * O(1)-per-position Rabin–Karp rolling kernel; "md5" = the digest
+    * kernel), window minima come from the O(n) monotonic-deque
+    * `sliding_min`, and the dedupe is in-row — a row-local projection
+    * with NO per-position rows, no doc-keyed shuffle and no WindowExec.
+    * What leaves the row is the (small) fingerprint set itself. */
   def winnowFingerprints(
       df: org.apache.spark.sql.DataFrame, id: Column, text: Column,
       k: Int, w: Int, hash: String = "md5"): org.apache.spark.sql.DataFrame = {
@@ -672,45 +671,10 @@ object TextFunctions {
     // fanned out: the whole fingerprint computation is row-local work
     // fused into the scan stage — single-task over one-row-group local
     // fixtures, no-op at real scale (A/B at sf0.1: x_winnow 1.7 -> 0.7 s)
-    val base = graft.Tables.fanOut(df.filter(length(text) >= k + w - 1))
-    val nativeFn = s"kgram_${hash}_hashes"
-    val catalog = df.sparkSession.catalog
-    // fully native path (GraftExtensions registered): hash every k-gram in
-    // one pass (`hash="poly"` = the O(1)-per-position Rabin–Karp rolling
-    // kernel; "md5" = the digest kernel), take window minima with the
-    // O(n) monotonic-deque sliding_min, dedupe in-row — the whole
-    // fingerprint computation is a row-local projection with NO
-    // per-position rows, no doc-keyed shuffle and no WindowExec. What
-    // leaves the row is the (small) fingerprint set itself. Values are
-    // bit-equal to the composable form below, so oracles agree either way.
-    if (catalog.functionExists(nativeFn) && catalog.functionExists("sliding_min"))
-      return base.select(id.cast("long").as("doc_id"),
+    graft.Tables.fanOut(df.filter(length(text) >= k + w - 1))
+      .select(id.cast("long").as("doc_id"),
         explode(array_distinct(call_function("sliding_min",
-          call_function(nativeFn, text, lit(k)), lit(w)))).as("fp"))
-    val positions =
-      {
-        val exploded = base
-          .select(id.cast("long").as("doc_id"), text.as("__t"),
-            (length(text) - (k - 1)).as("__npos"))
-          .select(col("doc_id"), col("__npos"),
-            explode(sequence(lit(1), col("__npos"))).as("pos"), col("__t"))
-        val gram = col("__t").substr(col("pos"), lit(k))
-        val h =
-          if (hash == "md5") graft.operators.Dedup.md5Int(gram)
-          else
-            // composable Rabin–Karp twin: fold (acc*B + codepoint) mod M
-            // over the gram's characters; bit-equal to the native kernel
-            aggregate(split(gram, ""), lit(0L), (acc, ch) =>
-              (acc * graft.sql.PolyHash.B + ascii(ch)) % graft.sql.PolyHash.M)
-        exploded.select(col("doc_id"), col("__npos"), col("pos"), h.as("h"))
-      }
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("pos")).rowsBetween(0, w - 1)
-    positions
-      .withColumn("wmin", min(col("h")).over(win))
-      .filter(col("pos") <= col("__npos") - (w - 1)) // full windows only
-      .select(col("doc_id"), col("wmin").as("fp"))
-      .distinct()
+          call_function(s"kgram_${hash}_hashes", text, lit(k)), lit(w)))).as("fp"))
   }
 
   /** Per-source corpus card — the one-row-per-source report a dataset

@@ -9,7 +9,10 @@ import org.apache.spark.sql.functions._
   *
   * Element order is preserved by `zip_with`+`aggregate` (sequential fold),
   * so results are bit-deterministic for a given input — important for
-  * oracle parity and for reproducible ANN buckets at scale.
+  * oracle parity and for reproducible ANN buckets at scale. [[dot]],
+  * [[norm2]] and [[cosine]] are the composable references; the cosine,
+  * LSH and projection helpers call the bit-identical native kernels
+  * that `graft.sql.GraftExtensions` registers.
   */
 object VectorFunctions {
 
@@ -62,12 +65,11 @@ object VectorFunctions {
     * The dot product is rounded to 9 decimals before taking the sign so a
     * vector numerically ON the plane (|dot| below accumulation error)
     * cannot land in different buckets across engines or fold orders.
-    * `native` uses the codegen'd dot_product expression (bit-identical —
-    * same accumulation order — but one fused loop instead of an
-    * interpreted per-element lambda). */
-  def projectSign(v: Column, plane: Seq[Double], native: Boolean = false): Column = {
-    val planeCol = array(plane.map(lit): _*)
-    val d = if (native) call_function("dot_product", v, planeCol) else dot(v, planeCol)
+    * The dot is the codegen'd `dot_product` expression (bit-identical to
+    * [[dot]] — same accumulation order — but one fused loop instead of
+    * an interpreted per-element lambda). */
+  def projectSign(v: Column, plane: Seq[Double]): Column = {
+    val d = call_function("dot_product", v, array(plane.map(lit): _*))
     when(round(d, 9) >= 0, lit(1)).otherwise(lit(0))
   }
 
@@ -85,10 +87,9 @@ object VectorFunctions {
 
   /** LSH bucket id from `nPlanes` deterministic pseudo-random hyperplanes
     * ([[planeValues]]). */
-  def lshBucket(v: Column, dim: Int, nPlanes: Int, seed: Int = 42,
-      native: Boolean = false): Column =
+  def lshBucket(v: Column, dim: Int, nPlanes: Int, seed: Int = 42): Column =
     (0 until nPlanes).map { p =>
-      projectSign(v, planeValues(seed, p, dim), native) * lit(1 << p)
+      projectSign(v, planeValues(seed, p, dim)) * lit(1 << p)
     }.reduce(_ + _)
 
   /** Random-projection dimensionality reduction (Johnson–Lindenstrauss
@@ -96,11 +97,8 @@ object VectorFunctions {
     * hyperplane p, rounded at 6 decimals. The value-bearing sibling of
     * [[lshBucket]] — same planes, values instead of sign bits. Returns
     * one column per output dimension so callers keep scalar outputs. */
-  def randomProjection(v: Column, dim: Int, nOut: Int, seed: Int = 42,
-      native: Boolean = false): Seq[Column] =
+  def randomProjection(v: Column, dim: Int, nOut: Int, seed: Int = 42): Seq[Column] =
     (0 until nOut).map { p =>
-      val planeCol = array(planeValues(seed, p, dim).map(lit): _*)
-      val d = if (native) call_function("dot_product", v, planeCol) else dot(v, planeCol)
-      round(d, 6)
+      round(call_function("dot_product", v, array(planeValues(seed, p, dim).map(lit): _*)), 6)
     }
 }

@@ -27,11 +27,6 @@ import graft.functions.VectorFunctions
   */
 object Clustering {
 
-  private def cosineCol(df: DataFrame)(a: Column, b: Column): Column =
-    if (df.sparkSession.catalog.functionExists("cosine_sim"))
-      VectorFunctions.cosineNative(a, b)
-    else VectorFunctions.cosine(a, b)
-
   /** Deterministic seeds: lowest-id vector per `id % k` class. */
   private def seedCentroids(points: DataFrame, k: Int): DataFrame =
     Joins.top1PerGroup(
@@ -43,7 +38,7 @@ object Clustering {
   private def assign(points: DataFrame, centroids: DataFrame): DataFrame =
     Joins.top1PerGroup(
       points.crossJoin(broadcast(centroids))
-        .withColumn("cos", round(cosineCol(points)(col("__v"), col("centroid")), 6)),
+        .withColumn("cos", round(VectorFunctions.cosineNative(col("__v"), col("centroid")), 6)),
       Seq(col("__id")), Seq(col("cos").desc, col("cell").asc))
       .select(col("__id"), col("__v"), col("cell"), col("cos"))
 

@@ -18,30 +18,14 @@ import graft.functions.TextFunctions
   */
 object Dedup {
 
-  /** Distinct word n-gram shingles, exploded to (doc_id, sh) rows.
-    *
-    * Deliberately two projection steps: `toks` is materialized as a row
-    * column and referenced via cheap `get()` lookups, because referencing
-    * `split()` inside a higher-order-function lambda re-evaluates the
-    * split per array element (HOFs are interpreted, no subexpression
-    * elimination) — O(len^2) tokenization. CollapseProject keeps the
-    * boundary since `toks` is referenced more than once.
-    */
+  /** Distinct word n-gram shingles, exploded to (doc_id, sh) rows, via the
+    * native `shingle_explode` Generator: tokenize + shingle + dedupe in one
+    * pass inside GenerateExec, no document-sized intermediate arrays in
+    * the projection. */
   private[operators] def explodedWordShingles(
       df: DataFrame, id: Column, text: Column, n: Int): DataFrame =
-    // native Generator when registered: tokenize + shingle + dedupe in one
-    // pass inside GenerateExec, no document-sized intermediate arrays in
-    // the projection; row-equal to the HOF fallback below, which serves
-    // sessions without GraftExtensions.
-    if (df.sparkSession.catalog.functionExists("shingle_explode"))
-      df.select(id.cast("long").as("doc_id"),
-        call_function("shingle_explode", text, lit(n)).as("sh"))
-    else
-      df.select(id.cast("long").as("doc_id"), split(trim(text), "\\s+").as("toks"))
-        .filter(size(col("toks")) >= n)
-        .select(col("doc_id"), explode(array_distinct(
-          transform(sequence(lit(0), size(col("toks")) - n),
-            i => concat_ws(" ", (0 until n).map(j => get(col("toks"), i + j)): _*)))).as("sh"))
+    df.select(id.cast("long").as("doc_id"),
+      call_function("shingle_explode", text, lit(n)).as("sh"))
 
   /** Public surface for the exploded distinct word-shingle table
     * (doc_id, sh) — the shared substrate of the shingle-blocked
@@ -224,34 +208,16 @@ object Dedup {
   /** MinHash + LSH banding: docs sharing any band bucket are candidates;
     * exact Jaccard is then computed only on candidates. Returns candidate
     * pairs with their estimated (signature-agreement) similarity.
-    *
-    * Signatures are built by exploding shingles and taking the 16
-    * permutation-mins in ONE hash aggregate: md5 runs once per shingle
-    * (the array-expression form re-evaluates it per permutation —
-    * CollapseProject inlines any intermediate column), and the map-side
-    * partial min makes the shuffle tiny at scale.
     */
   def minHashLshPairs(
       df: DataFrame, id: Column, text: Column,
       shingleWords: Int = 3, numHashes: Int = 16, bands: Int = 4): DataFrame = {
     val rowsPerBand = numHashes / bands
-    val p = 4294967311L
-    // native kernel when registered: the signature is built inside the
-    // row (one md5 per shingle, permutation minima folded in-place), so
-    // signature construction needs NO explode and NO shuffle — bit-equal
-    // to the composable aggregate below, which remains the fallback
-    val sigs =
-      if (df.sparkSession.catalog.functionExists("minhash_sig"))
-        df.select(id.cast("long").as("doc_id"),
-            call_function("minhash_sig", text, lit(shingleWords), lit(numHashes)).as("sig"))
-      else {
-        val exploded = explodedWordShingles(df, id, text, shingleWords)
-          .withColumn("h", md5Int(col("sh")))
-        exploded.groupBy(col("doc_id"))
-          .agg(array((0 until numHashes).map { i =>
-            min((col("h") * (1L + 2L * i) + (11L * i + 7L)) % p)
-          }: _*).as("sig"))
-      }
+    // native kernel: the signature is built inside the row (one md5 per
+    // shingle, permutation minima folded in-place), so signature
+    // construction needs NO explode and NO shuffle
+    val sigs = df.select(id.cast("long").as("doc_id"),
+      call_function("minhash_sig", text, lit(shingleWords), lit(numHashes)).as("sig"))
     // signatures materialized ONCE (r14): before this Mat the kernel ran
     // FOUR times per document — the empties filter was pushed below the
     // projection and re-evaluated it per row (guide §4.4's duplicated
@@ -284,11 +250,6 @@ object Dedup {
       .dropDuplicates("id_a", "id_b", "est_jaccard")
   }
 
-  private def cosineCol(df: DataFrame)(a: Column, b: Column): Column =
-    if (df.sparkSession.catalog.functionExists("cosine_sim"))
-      graft.functions.VectorFunctions.cosineNative(a, b)
-    else graft.functions.VectorFunctions.cosine(a, b)
-
   /** Embedding-cosine near-duplicate pairs, IVF-cell blocked — the default
     * and the 100 TB shape: assign every vector to its nearest of `nlist`
     * deterministic centroids (lowest-id vector per id-residue class, no
@@ -300,7 +261,7 @@ object Dedup {
   def embeddingNearDupPairs(
       df: DataFrame, id: Column, vec: Column, threshold: Double,
       nlist: Int = 16): DataFrame = {
-    val cos = cosineCol(df) _
+    val cos = graft.functions.VectorFunctions.cosineNative _
     val e = df.select(id.cast("long").as("vid"),
       graft.functions.VectorFunctions.toDoubleArray(vec).as("v"))
     val centroids = broadcast(Joins.top1PerGroup(
@@ -326,7 +287,7 @@ object Dedup {
     * baseline for specs/oracles only — never the corpus-scale path. */
   def embeddingNearDupPairsExact(
       df: DataFrame, id: Column, vec: Column, threshold: Double): DataFrame = {
-    val cos = cosineCol(df) _
+    val cos = graft.functions.VectorFunctions.cosineNative _
     val e = df.select(id.cast("long").as("vid"),
       graft.functions.VectorFunctions.toDoubleArray(vec).as("v"))
     e.select(col("vid").as("id_a"), col("v").as("va"))
@@ -336,8 +297,7 @@ object Dedup {
       .select("id_a", "id_b", "cos")
   }
 
-  /** SimHash as a set operator: explode tokens, hash each ONCE, then one
-    * hash-aggregate computes every bit-sum with map-side partial combine —
+  /** SimHash fingerprints per doc via the native `simhash_sig` kernel —
     * the scale form of [[simHash]] (whose per-row HOF fold re-hashes per
     * bit and stays interpreted). Same fingerprint values. */
   def simHashDocs(df: DataFrame, id: Column, text: Column, bits: Int = 32): DataFrame = {
@@ -346,24 +306,10 @@ object Dedup {
     // local fixtures (no-op at real scale — Tables.fanOut's gate).
     // A/B at sf0.1: d_simhash_pairs 2.8 -> 0.7 s.
     val in = graft.Tables.fanOut(df)
-    // native kernel when registered: one md5 per token, all bit counters
-    // folded inside the row — a pure projection, no explode, no shuffle;
-    // bit-equal to the aggregate fallback below
-    if (in.sparkSession.catalog.functionExists("simhash_sig"))
-      return in.select(id.cast("long").as("doc_id"),
-        call_function("simhash_sig", text, lit(bits)).as("simhash"))
-    val toks = in.select(id.cast("long").as("doc_id"),
-        explode(split(trim(text), "\\s+")).as("tok"))
-      .withColumn("h", md5Int(col("tok")))
-    val bitSums = (0 until bits).map { b =>
-      sum(shiftright(col("h"), b % 32).bitwiseAND(1) * 2 - 1).as(s"s$b")
-    }
-    toks.groupBy(col("doc_id")).agg(bitSums.head, bitSums.tail: _*)
-      .withColumn("simhash",
-        (0 until bits).map { b =>
-          when(col(s"s$b") > 0, shiftleft(lit(1L), b)).otherwise(lit(0L))
-        }.reduce((a, c) => a.bitwiseOR(c)))
-      .select(col("doc_id"), col("simhash"))
+    // native kernel: one md5 per token, all bit counters folded inside
+    // the row — a pure projection, no explode, no shuffle
+    in.select(id.cast("long").as("doc_id"),
+      call_function("simhash_sig", text, lit(bits)).as("simhash"))
   }
 
   /** SimHash near-dup pairs: band-blocked Hamming matching. Fingerprints
@@ -825,7 +771,7 @@ object Dedup {
   def semDedup(
       df: DataFrame, id: Column, vec: Column,
       k: Int, iters: Int, threshold: Double): DataFrame = {
-    val cos = cosineCol(df) _
+    val cos = graft.functions.VectorFunctions.cosineNative _
     val pts = df.select(id.cast("long").as("doc_id"),
       graft.functions.VectorFunctions.toDoubleArray(vec).as("v"))
     val assigned = Clustering.kMeansAssign(df, id, vec, k, iters)

@@ -14,14 +14,6 @@ import graft.functions.VectorFunctions
   */
 object Similarity {
 
-  /** Uses the codegen'd native cosine_sim expression when GraftExtensions
-    * is on the session, the composable HOF fold otherwise — results are
-    * bit-identical (same accumulation order). */
-  private def cosineCol(df: DataFrame)(a: Column, b: Column): Column =
-    if (df.sparkSession.catalog.functionExists("cosine_sim"))
-      VectorFunctions.cosineNative(a, b)
-    else VectorFunctions.cosine(a, b)
-
   /** Exact cosine top-k: for each query vector, the k nearest corpus
     * vectors by cosine similarity. Query set should be small enough to
     * broadcast (driver enforces nothing — caller picks the side).
@@ -36,7 +28,7 @@ object Similarity {
       VectorFunctions.toDoubleArray(col(cVec)).as("cv"))
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", round(cosineCol(corpus)(col("qv"), col("cv")), 6))
+      .withColumn("cos", round(VectorFunctions.cosineNative(col("qv"), col("cv")), 6))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))
@@ -68,20 +60,20 @@ object Similarity {
     // and engine-replicable (float ties cannot flip cells across engines)
     val assigned = Joins.top1PerGroup(
       c.crossJoin(centroids)
-        .withColumn("cdist", round(cosineCol(corpus)(col("cv"), col("centroid")), 6)),
+        .withColumn("cdist", round(VectorFunctions.cosineNative(col("cv"), col("centroid")), 6)),
       Seq(col("neighbor_id")), Seq(col("cdist").desc, col("cell").asc))
       .select(col("neighbor_id"), col("cv"), col("cell"))
     val q = queries.select(col(qId).as("query_id"),
       VectorFunctions.toDoubleArray(col(qVec)).as("qv"))
     val probes = q.crossJoin(centroids)
-      .withColumn("cdist", round(cosineCol(corpus)(col("qv"), col("centroid")), 6))
+      .withColumn("cdist", round(VectorFunctions.cosineNative(col("qv"), col("centroid")), 6))
       .withColumn("__rn", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(col("cdist").desc, col("cell").asc)))
       .filter(col("__rn") <= nprobe)
       .select(col("query_id"), col("qv"), col("cell"))
     val scored = assigned.join(broadcast(probes), Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", round(cosineCol(corpus)(col("qv"), col("cv")), 6))
+      .withColumn("cos", round(VectorFunctions.cosineNative(col("qv"), col("cv")), 6))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))
@@ -98,23 +90,20 @@ object Similarity {
       queries: DataFrame, corpus: DataFrame,
       qId: String, qVec: String, cId: String, cVec: String,
       k: Int, dim: Int, nPlanes: Int = 8): DataFrame = {
-    val nativeDot = corpus.sparkSession.catalog.functionExists("dot_product")
     val q = queries.select(col(qId).as("query_id"),
         VectorFunctions.toDoubleArray(col(qVec)).as("qv"))
-      .withColumn("bucket",
-        VectorFunctions.lshBucket(col("qv"), dim, nPlanes, native = nativeDot))
+      .withColumn("bucket", VectorFunctions.lshBucket(col("qv"), dim, nPlanes))
       .withColumn("probe", explode(array(
         col("bucket") +: (0 until nPlanes).map(p =>
           col("bucket").bitwiseXOR(lit(1 << p))): _*)))
       .select(col("query_id"), col("qv"), col("probe").as("bucket"))
     val c = corpus.select(col(cId).as("neighbor_id"),
         VectorFunctions.toDoubleArray(col(cVec)).as("cv"))
-      .withColumn("bucket",
-        VectorFunctions.lshBucket(col("cv"), dim, nPlanes, native = nativeDot))
+      .withColumn("bucket", VectorFunctions.lshBucket(col("cv"), dim, nPlanes))
     val scored = c.join(broadcast(q), Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        round(cosineCol(corpus)(col("qv"), col("cv")), 6).as("cos"))
+        round(VectorFunctions.cosineNative(col("qv"), col("cv")), 6).as("cos"))
       .distinct() // a pair can match via several probes; score is identical
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id").asc)
@@ -130,18 +119,15 @@ object Similarity {
       queries: DataFrame, corpus: DataFrame,
       qId: String, qVec: String, cId: String, cVec: String,
       k: Int, dim: Int, nPlanes: Int = 8): DataFrame = {
-    val nativeDot = corpus.sparkSession.catalog.functionExists("dot_product")
     val q = queries.select(col(qId).as("query_id"),
         VectorFunctions.toDoubleArray(col(qVec)).as("qv"))
-      .withColumn("bucket",
-        VectorFunctions.lshBucket(col("qv"), dim, nPlanes, native = nativeDot))
+      .withColumn("bucket", VectorFunctions.lshBucket(col("qv"), dim, nPlanes))
     val c = corpus.select(col(cId).as("neighbor_id"),
         VectorFunctions.toDoubleArray(col(cVec)).as("cv"))
-      .withColumn("bucket",
-        VectorFunctions.lshBucket(col("cv"), dim, nPlanes, native = nativeDot))
+      .withColumn("bucket", VectorFunctions.lshBucket(col("cv"), dim, nPlanes))
     val scored = c.join(broadcast(q), Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", round(cosineCol(corpus)(col("qv"), col("cv")), 6))
+      .withColumn("cos", round(VectorFunctions.cosineNative(col("qv"), col("cv")), 6))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))
@@ -172,7 +158,7 @@ object Similarity {
     val perTok = c.crossJoin(broadcast(q))
       .filter(col("doc_id") =!= col("query_doc"))
       .groupBy(col("query_doc"), col("__qtok"), col("doc_id"))
-      .agg(max(round(cosineCol(corpus)(col("qv"), col("cv")), 6))
+      .agg(max(round(VectorFunctions.cosineNative(col("qv"), col("cv")), 6))
         .cast("decimal(10,6)").as("__mx"))
     val scored = perTok.groupBy(col("query_doc"), col("doc_id"))
       .agg(sum(col("__mx")).as("__score"))
@@ -201,7 +187,7 @@ object Similarity {
       .orderBy(col("cos").desc, col("neg_id").asc)
     c.crossJoin(broadcast(q))
       .filter(col("__ql") =!= col("neg_label") && col("query_id") =!= col("neg_id"))
-      .withColumn("cos", round(cosineCol(corpus)(col("qv"), col("cv")), 6))
+      .withColumn("cos", round(VectorFunctions.cosineNative(col("qv"), col("cv")), 6))
       .withColumn("rank", row_number().over(w).cast("int"))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neg_id"), col("neg_label"), col("cos"))
@@ -510,7 +496,7 @@ object Similarity {
   def mutualKnnGraph(
       df: DataFrame, id: Column, vec: Column, k: Int,
       nlist: Int = 16): DataFrame = {
-    val cos = cosineCol(df) _
+    val cos = VectorFunctions.cosineNative _
     val e = df.select(id.cast("long").as("vid"),
       VectorFunctions.toDoubleArray(vec).as("v"))
     val centroids = broadcast(Joins.top1PerGroup(
@@ -568,7 +554,7 @@ object Similarity {
     require(k >= 1, s"k must be positive, got $k")
     require(rounds >= 0, s"rounds must be non-negative, got $rounds")
     require(n > 1, s"need at least 2 vectors, got $n")
-    val cos = cosineCol(df) _
+    val cos = VectorFunctions.cosineNative _
     val e = graft.Mat(df.select(id.cast("long").as("vid"),
       VectorFunctions.toDoubleArray(vec).as("v")))
     val init = e.select(col("vid"), explode(array((1 to k).map(j =>
@@ -691,7 +677,7 @@ object Similarity {
       queries: DataFrame, corpus: DataFrame,
       qId: String, qVec: String, cId: String, cVec: String,
       edges: DataFrame, hops: Int): DataFrame = {
-    val cos = cosineCol(corpus) _
+    val cos = VectorFunctions.cosineNative _
     val e = corpus.select(col(cId).cast("long").as("vid"),
       VectorFunctions.toDoubleArray(col(cVec)).as("v"))
     val ed = graft.Mat(edges.select(col("src"), col("dst")))
@@ -803,13 +789,8 @@ object Similarity {
     val nVec = e.count()
     var v = Array.fill(dim)(1.0 / math.sqrt(dim.toDouble))
     var eigen = 0.0
-    val native = spark.catalog.functionExists("dot_product")
     for (_ <- 1 to iters) {
-      val vLit = typedLit(v.toSeq)
-      val s = round(
-        if (native) call_function("dot_product", col("v"), vLit)
-        else aggregate(zip_with(col("v"), vLit, (a, b) => a * b),
-          lit(0.0), (acc, x) => acc + x), 9)
+      val s = round(call_function("dot_product", col("v"), typedLit(v.toSeq)), 9)
       // X^T s as ONE aggregate with dim columns (sum(round(s*x_d, 9)) as
       // DECIMAL per dimension): no explode, no dim-keyed shuffle — each
       // partition collapses to a single partial row before the exchange

@@ -2,13 +2,16 @@ package graft.sql
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, LongType, StringType}
 
 /** Session extensions registering graft's native Catalyst expressions.
   *
   * Wire up with `.config("spark.sql.extensions", "graft.sql.GraftExtensions")`
   * (works under spark-submit too) — then `cosine_sim(a, b)` resolves in
-  * SQL and via `functions.call_function`.
+  * SQL and via `functions.call_function`. The engine's operators call
+  * these functions directly: a session without the extension fails at
+  * analysis with an `AnalysisException` naming the missing function.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -19,173 +22,53 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => graft.plans.MvRewrite)
     // plans graft.plans.AsOfJoinPlan as the native sort-merge as-of exec
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    ext.injectFunction((
-      FunctionIdentifier("l2_norm"),
-      new ExpressionInfo(classOf[L2Norm].getName, "l2_norm"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "l2_norm expects 1 argument")
-        import org.apache.spark.sql.catalyst.expressions.Cast
-        import org.apache.spark.sql.types.{ArrayType, DoubleType}
-        val c = children.head
-        L2Norm(c.dataType match {
-          case ArrayType(DoubleType, _) => c
-          case _ => Cast(c, ArrayType(DoubleType))
-        })
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2, "dot_product expects 2 arguments")
-        import org.apache.spark.sql.catalyst.expressions.Cast
-        import org.apache.spark.sql.types.{ArrayType, DoubleType}
-        val target = ArrayType(DoubleType)
-        def coerce(e: org.apache.spark.sql.catalyst.expressions.Expression) =
-          e.dataType match {
-            case ArrayType(DoubleType, _) => e
-            case _ => Cast(e, target)
-          }
-        DotProduct(coerce(children.head), coerce(children(1)))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("kgram_md5_hashes"),
-      new ExpressionInfo(classOf[KgramMd5Hashes].getName, "kgram_md5_hashes"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2, "kgram_md5_hashes expects 2 arguments")
-        import org.apache.spark.sql.catalyst.expressions.Cast
-        import org.apache.spark.sql.types.{IntegerType, StringType}
-        def coerce(e: org.apache.spark.sql.catalyst.expressions.Expression, t: org.apache.spark.sql.types.DataType) =
-          if (e.dataType == t) e else Cast(e, t)
-        KgramMd5Hashes(coerce(children.head, StringType), coerce(children(1), IntegerType))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("kgram_poly_hashes"),
-      new ExpressionInfo(classOf[KgramPolyHashes].getName, "kgram_poly_hashes"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2, "kgram_poly_hashes expects 2 arguments")
-        import org.apache.spark.sql.catalyst.expressions.Cast
-        import org.apache.spark.sql.types.{IntegerType, StringType}
-        def coerce(e: org.apache.spark.sql.catalyst.expressions.Expression, t: org.apache.spark.sql.types.DataType) =
-          if (e.dataType == t) e else Cast(e, t)
-        KgramPolyHashes(coerce(children.head, StringType), coerce(children(1), IntegerType))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("sliding_min"),
-      new ExpressionInfo(classOf[SlidingMin].getName, "sliding_min"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2, "sliding_min expects 2 arguments")
-        import org.apache.spark.sql.catalyst.expressions.Cast
-        import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
-        val arr = children.head.dataType match {
-          case ArrayType(LongType, _) => children.head // nullability-agnostic
-          case _ => Cast(children.head, ArrayType(LongType))
-        }
-        val w = if (children(1).dataType == IntegerType) children(1)
-          else Cast(children(1), IntegerType)
-        SlidingMin(arr, w)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("image_meta"),
-      new ExpressionInfo(classOf[ImageMeta].getName, "image_meta"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "image_meta expects 1 argument")
-        import org.apache.spark.sql.catalyst.expressions.Cast
-        import org.apache.spark.sql.types.BinaryType
-        val c = children.head
-        ImageMeta(if (c.dataType == BinaryType) c else Cast(c, BinaryType))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("audio_meta"),
-      new ExpressionInfo(classOf[AudioMeta].getName, "audio_meta"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "audio_meta expects 1 argument")
-        import org.apache.spark.sql.catalyst.expressions.Cast
-        import org.apache.spark.sql.types.BinaryType
-        val c = children.head
-        AudioMeta(if (c.dataType == BinaryType) c else Cast(c, BinaryType))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("video_meta"),
-      new ExpressionInfo(classOf[VideoMeta].getName, "video_meta"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "video_meta expects 1 argument")
-        import org.apache.spark.sql.catalyst.expressions.Cast
-        import org.apache.spark.sql.types.BinaryType
-        val c = children.head
-        VideoMeta(if (c.dataType == BinaryType) c else Cast(c, BinaryType))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 3, "minhash_sig expects 3 arguments")
-        import org.apache.spark.sql.catalyst.expressions.Cast
-        import org.apache.spark.sql.types.{IntegerType, StringType}
-        def coerce(e: org.apache.spark.sql.catalyst.expressions.Expression,
-            t: org.apache.spark.sql.types.DataType) =
-          if (e.dataType == t) e else Cast(e, t)
-        MinHashSig(coerce(children.head, StringType),
-          coerce(children(1), IntegerType), coerce(children(2), IntegerType))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("simhash_sig"),
-      new ExpressionInfo(classOf[SimHashSig].getName, "simhash_sig"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2, "simhash_sig expects 2 arguments")
-        import org.apache.spark.sql.catalyst.expressions.Cast
-        import org.apache.spark.sql.types.{IntegerType, StringType}
-        def coerce(e: org.apache.spark.sql.catalyst.expressions.Expression,
-            t: org.apache.spark.sql.types.DataType) =
-          if (e.dataType == t) e else Cast(e, t)
-        SimHashSig(coerce(children.head, StringType), coerce(children(1), IntegerType))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("shingle_explode"),
-      new ExpressionInfo(classOf[ShingleExplode].getName, "shingle_explode"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2, "shingle_explode expects 2 arguments")
-        import org.apache.spark.sql.catalyst.expressions.Cast
-        import org.apache.spark.sql.types.{IntegerType, StringType}
-        def coerce(e: org.apache.spark.sql.catalyst.expressions.Expression,
-            t: org.apache.spark.sql.types.DataType) =
-          if (e.dataType == t) e else Cast(e, t)
-        ShingleExplode(coerce(children.head, StringType),
-          coerce(children(1), IntegerType))
-      }))
-    ext.injectFunction((
-      // Spark's native bloom-membership predicate is optimizer-internal
-      // (not in the public registry); expose it so Joins.bloomSemiJoin can
-      // stay whole-stage-codegen instead of a per-row Scala UDF. The bloom
-      // binary must be foldable (a literal) — the build side serializes the
-      // distributed-aggregate filter into one.
-      FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "bloom_might_contain"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2, "bloom_might_contain expects 2 arguments")
-        import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast}
-        import org.apache.spark.sql.types.LongType
-        val v = if (children(1).dataType == LongType) children(1)
-          else Cast(children(1), LongType)
-        BloomFilterMightContain(children.head, v)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2, "cosine_sim expects 2 arguments")
-        // cast here (array<float> inputs etc.) — the expression itself
-        // demands array<double>
-        import org.apache.spark.sql.catalyst.expressions.Cast
-        import org.apache.spark.sql.types.{ArrayType, DoubleType}
-        val target = ArrayType(DoubleType)
-        def coerce(e: org.apache.spark.sql.catalyst.expressions.Expression) =
-          e.dataType match {
-            case ArrayType(DoubleType, _) => e
-            case _ => Cast(e, target)
-          }
-        CosineSimilarity(coerce(children.head), coerce(children(1)))
-      }))
+
+    def fn(name: String, cls: Class[_], arity: Int)(build: Seq[Expression] => Expression): Unit =
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+        (children: Seq[Expression]) => {
+          require(children.length == arity,
+            s"$name expects $arity argument${if (arity == 1) "" else "s"}")
+          build(children)
+        }))
+
+    // the vector kernels demand array<double>: array<float> inputs etc.
+    // are cast here
+    fn("l2_norm", classOf[L2Norm], 1)(c => L2Norm(arrayOf(c(0), DoubleType)))
+    fn("dot_product", classOf[DotProduct], 2)(c =>
+      DotProduct(arrayOf(c(0), DoubleType), arrayOf(c(1), DoubleType)))
+    fn("kgram_md5_hashes", classOf[KgramMd5Hashes], 2)(c =>
+      KgramMd5Hashes(as(c(0), StringType), as(c(1), IntegerType)))
+    fn("kgram_poly_hashes", classOf[KgramPolyHashes], 2)(c =>
+      KgramPolyHashes(as(c(0), StringType), as(c(1), IntegerType)))
+    fn("sliding_min", classOf[SlidingMin], 2)(c =>
+      SlidingMin(arrayOf(c(0), LongType), as(c(1), IntegerType)))
+    fn("image_meta", classOf[ImageMeta], 1)(c => ImageMeta(as(c(0), BinaryType)))
+    fn("audio_meta", classOf[AudioMeta], 1)(c => AudioMeta(as(c(0), BinaryType)))
+    fn("video_meta", classOf[VideoMeta], 1)(c => VideoMeta(as(c(0), BinaryType)))
+    fn("minhash_sig", classOf[MinHashSig], 3)(c =>
+      MinHashSig(as(c(0), StringType), as(c(1), IntegerType), as(c(2), IntegerType)))
+    fn("simhash_sig", classOf[SimHashSig], 2)(c =>
+      SimHashSig(as(c(0), StringType), as(c(1), IntegerType)))
+    fn("shingle_explode", classOf[ShingleExplode], 2)(c =>
+      ShingleExplode(as(c(0), StringType), as(c(1), IntegerType)))
+    // Spark's native bloom-membership predicate is optimizer-internal
+    // (not in the public registry); expose it so Joins.bloomSemiJoin can
+    // stay whole-stage-codegen instead of a per-row Scala UDF. The bloom
+    // binary must be foldable (a literal) — the build side serializes the
+    // distributed-aggregate filter into one.
+    fn("bloom_might_contain", classOf[BloomFilterMightContain], 2)(c =>
+      BloomFilterMightContain(c(0), as(c(1), LongType)))
+    fn("cosine_sim", classOf[CosineSimilarity], 2)(c =>
+      CosineSimilarity(arrayOf(c(0), DoubleType), arrayOf(c(1), DoubleType)))
+  }
+
+  private def as(e: Expression, t: DataType): Expression =
+    if (e.dataType == t) e else Cast(e, t)
+
+  /** Array of `elem`, whatever its element nullability; any other type is
+    * cast to `array<elem>`. */
+  private def arrayOf(e: Expression, elem: DataType): Expression = e.dataType match {
+    case ArrayType(`elem`, _) => e
+    case _ => Cast(e, ArrayType(elem))
   }
 }

@@ -1,11 +1,27 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 /** Smoke: the driver contract — entry() has rows, every registered query
   * runs at sf0.001, a warm flagship pass reuses its generated classes —
   * plus source-tree guards over `src/main/scala`. */
 class EntrySpec extends SparkSpec {
+
+  /** The repo root and every `.scala` file under its `src/main/scala`,
+    * in path order. */
+  private def mainSources(): (Path, Vector[Path]) = {
+    val repo = Paths.get(sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", sys.props("user.dir")))
+    val root = repo.resolve("src/main/scala")
+    val files = {
+      val s = Files.walk(root)
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector.sortBy(_.toString)
+      finally s.close()
+    }
+    assert(files.nonEmpty, s"no sources under $root")
+    (repo, files)
+  }
 
   test("entry returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
@@ -42,20 +58,11 @@ class EntrySpec extends SparkSpec {
     // every env var / system property the engine reads is listed in the
     // README's Configuration section; a new switch must be added there
     // (and here) on purpose, not ship as an undocumented A/B toggle
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", sys.props("user.dir")),
-      "src", "main", "scala")
-    val files = {
-      val s = java.nio.file.Files.walk(root)
-      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
-      finally s.close()
-    }
-    assert(files.nonEmpty, s"no sources under $root")
+    val (_, files) = mainSources()
     val env = "SPARK_GRAFT_[A-Z_]+".r
     val prop = """sys\.props(?:\.get)?\(\s*"(graft\.[\w.]+)"""".r
     val found = files.flatMap { f =>
-      val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      val text = new String(Files.readAllBytes(f), "UTF-8")
       env.findAllIn(text).toSeq ++ prop.findAllMatchIn(text).map(_.group(1))
     }.toSet
     val allowed = Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_MAT", "SPARK_GRAFT_SF_DIR",
@@ -69,20 +76,11 @@ class EntrySpec extends SparkSpec {
     // each shared query input or oracle fragment has one definition: a
     // run of 12 consecutive lines (each trimmed, >= 240 characters in
     // all) that appears twice in the tree is a copy to fold into a helper
-    import scala.jdk.CollectionConverters._
-    val repo = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", sys.props("user.dir")))
-    val root = repo.resolve("src/main/scala")
-    val files = {
-      val s = java.nio.file.Files.walk(root)
-      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector.sortBy(_.toString)
-      finally s.close()
-    }
-    assert(files.nonEmpty, s"no sources under $root")
+    val (repo, files) = mainSources()
     val window = 12
     val seen = scala.collection.mutable.LinkedHashMap[Seq[String], List[String]]()
     for (f <- files) {
-      val lines = java.nio.file.Files.readAllLines(f).asScala.map(_.trim).toVector
+      val lines = Files.readAllLines(f).asScala.map(_.trim).toVector
       for (i <- 0 to lines.length - window) {
         val w = lines.slice(i, i + window)
         if (w.map(_.length).sum >= 240)
@@ -93,6 +91,19 @@ class EntrySpec extends SparkSpec {
     if (repeated.nonEmpty)
       fail(s"${repeated.size} repeated $window-line windows, e.g.\n" +
         repeated.take(10).map(_.mkString(" = ")).mkString("\n"))
+  }
+
+  test("src/main does not branch on functionExists") {
+    // every session installs GraftExtensions, so each native kernel has
+    // one call path: a session without it fails loudly at analysis rather
+    // than quietly taking an untested composed fallback
+    val (repo, files) = mainSources()
+    val forks = for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("functionExists")
+    } yield s"${repo.relativize(f)}:${i + 1}"
+    assert(forks.isEmpty, s"${forks.size} functionExists forks: ${forks.mkString(", ")}")
   }
 
   test("approx_count_distinct within 5% of exact") {

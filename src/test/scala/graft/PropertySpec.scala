@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.operators.Intervals
-import graft.domain.Consolidate
+import graft.domain.{Consolidate, Ingest}
 
 /** Property-based invariants (SURVEY §5 item 4 analog): generated inputs,
   * algebraic postconditions. Seeded ScalaCheck generators, deterministic
@@ -536,6 +536,64 @@ class PropertySpec extends SparkSpec {
           assert(d >= q && q >= l && l >= e && e >= nr && nr >= k, s"seed=$seed")
           assert(r >= 0.0 && r <= 1.0, s"seed=$seed")
         }
+    }
+  }
+
+  /** CertificateInfo CSVs as they arrive in the wild: optional BOM,
+    * space-padded header names, ragged short/long rows, sentinel dates and
+    * junk in the numeric and date columns (no quotes, commas or newlines
+    * inside a field, so every generated line is one raw row). */
+  private val hostileCertCsvGen: Gen[(String, List[List[String]])] = {
+    val pad = Gen.oneOf("", " ", "  ")
+    def padded(g: Gen[String]) = for (a <- pad; v <- g; b <- pad) yield a + v + b
+    val junk = Gen.oneOf("", "abc", "n/a", "$5", "1e400", "99999999999999999999")
+    val num = Gen.frequency(3 -> Gen.choose(0, 100).map(_.toString), 1 -> junk,
+      1 -> Gen.oneOf("12.3.4", "2147483648"))
+    val date = Gen.oneOf("2020-01-15", "1900-01-01", "9999-12-31", "0001-01-01",
+      "2020-13-45", "not-a-date", "")
+    def field(i: Int): Gen[String] = padded(i match {
+      case 0 => Gen.frequency(3 -> Gen.choose(1, 99999).map(_.toString), 1 -> junk)
+      case 1 => Gen.oneOf("G1", "G2", "", " ")
+      case 4 => date
+      case 8 | 9 | 10 | 11 => num
+      case _ => Gen.oneOf("A", "PRODA", "TX", "")
+    })
+    val row = for {
+      len <- Gen.frequency(3 -> Gen.const(15), 1 -> Gen.choose(2, 14), 1 -> Gen.choose(16, 18))
+      fs <- (0 until len).foldLeft(Gen.const(List.empty[String])) { (acc, i) =>
+        for (l <- acc; f <- field(i)) yield l :+ f
+      }
+    } yield fs
+    for {
+      bom <- Gen.oneOf("", "\uFEFF")
+      names <- Ingest.certificateSpec.map(_._1).foldLeft(Gen.const(List.empty[String])) {
+        (acc, n) => for (l <- acc; p <- padded(Gen.const(n))) yield l :+ p
+      }
+      n <- Gen.choose(1, 12)
+      rows <- Gen.listOfN(n, row)
+    } yield (bom + names.mkString(","), rows)
+  }
+
+  test("hostile CertificateInfo CSVs: ingest -> typed pass -> gate loses no row (5 seeds)") {
+    (50L to 54L).foreach { seed =>
+      val (header, rows) = sample(hostileCertCsvGen, seed)
+      val dir = java.nio.file.Files.createTempDirectory("graft_hostile").toFile
+      val f = new java.io.File(dir, "CertificateInfo_hostile.csv")
+      java.nio.file.Files.writeString(f.toPath, (header +: rows.map(_.mkString(","))).mkString("\n"))
+      val (loaded, quarantine) = Ingest.ingestFiles(spark, Seq(f.getAbsolutePath))
+      assert(quarantine.count() == 0, s"seed=$seed header rejected: $header")
+      val typed = Ingest.typedPass(loaded("raw_certificate_info"), Ingest.certificateSpec)
+      val (ok, quarantined) = Ingest.gate(typed, Seq("cert_id", "group_id"))
+      val nTyped = typed.count()
+      assert(nTyped == rows.size, s"seed=$seed typed $nTyped of ${rows.size} raw rows")
+      assert(ok.count() + quarantined.count() == nTyped, s"seed=$seed gate lost rows")
+      // a row conforms iff its id parses as a bigint and its group is non-blank
+      val expectedOk = rows.count { r =>
+        val id = r.head.trim
+        id.nonEmpty && id.forall(_.isDigit) && BigInt(id) <= Long.MaxValue &&
+          r(1).trim.nonEmpty
+      }
+      assert(ok.count() == expectedOk, s"seed=$seed conformant rows")
     }
   }
 }

@@ -118,6 +118,40 @@ class IngestSpec extends SparkSpec {
     assert(ids.toSeq == Seq(s"F-${d1.getName}", s"F-${d2.getName}"))
   }
 
+  test("BOM / padded headers load under the sanitized names validation used") {
+    val dir = Files.createTempDirectory("graft_bom").toFile
+    val names = Ingest.certificateSpec.map(_._1)
+    def row(id: Int) =
+      s"$id,G1,PRODA,PL1,2020-01-15,TX,A,A,10.00,1,100.00,1,P1,P1,SCHED1"
+    // Spark strips the BOM but keeps the padding: the raw column would be
+    // "CertificateId ", which passes validation (sanitized) but neither
+    // resolves in the typed pass nor unions with the clean file's column
+    Files.writeString(new java.io.File(dir, "CertificateInfo_padded.csv").toPath,
+      (("\uFEFF" + names.map(n => s"$n ").mkString(",")) +: Seq(row(1), row(2))).mkString("\n"))
+    Files.writeString(new java.io.File(dir, "CertificateInfo_clean.csv").toPath,
+      (names.mkString(",") +: Seq(row(3), row(4))).mkString("\n"))
+    val files = dir.listFiles.map(_.getAbsolutePath).toSeq.sorted
+    assert(Ingest.ingestPlan(spark, files).forall(_.loadable))
+    val (loaded, _) = Ingest.ingestFiles(spark, files)
+    val raw = loaded("raw_certificate_info")
+    assert(raw.columns.toSeq == names, raw.columns.mkString(","))
+    val typed = Ingest.typedPass(raw, Ingest.certificateSpec)
+      .select(col("cert_id"), col("group_id")).as[(Long, String)].collect().sorted
+    assert(typed.toSeq == (1L to 4L).map(i => (i, "G1")))
+  }
+
+  test("a header Spark's line reader splits differently is quarantined, not loaded") {
+    val dir = Files.createTempDirectory("graft_split_hdr").toFile
+    val f = new java.io.File(dir, "Fees_multi.csv")
+    // Spark reads the header as FeeId|Amount and the rows as shifted
+    // fragments; the RFC-4180 header read finds three fields
+    Files.writeString(f.toPath, "FeeId,\"Amount\nUSD\",Status\nF1,10,A")
+    val (loaded, quarantine) = Ingest.ingestFiles(spark, Seq(f.getAbsolutePath))
+    assert(loaded.isEmpty, loaded.keySet)
+    assert(quarantine.as[(String, String, String)].collect().toSeq ==
+      Seq(("Fees_multi.csv", "raw_fees", "header read as 2 fields, not 3")))
+  }
+
   test("readCsvHeaders honors RFC-4180 quoted newlines in header fields") {
     val dir = Files.createTempDirectory("graft_hdr").toFile
     val f = new java.io.File(dir, "Fees_multi.csv")

@@ -50,9 +50,8 @@ class KgramMd5HashesSpec extends SparkSpec {
     val nat = graft.functions.TextFunctions
       .winnowFingerprints(docs, col("doc_id"), col("text"), 5, 4)
       .as[(Long, Long)].collect().toSet
-    // force the fallback by running through a session-independent check:
-    // the fallback branch is chosen when the function is absent; emulate
-    // it by calling the composable pipeline directly
+    // reference: the composable explode + rows-between window form,
+    // spelled out here (winnowFingerprints itself is native-only)
     val base = docs.filter(length(col("text")) >= 5 + 4 - 1)
       .select(col("doc_id").cast("long").as("doc_id"), col("text").as("__t"),
         (length(col("text")) - 4).as("__npos"))

@@ -57,9 +57,8 @@ class KgramPolyHashesSpec extends SparkSpec {
       (2L, "completely different content here entirely")).toDF("doc_id", "text")
     val native = TextFunctions.winnowFingerprints(df, col("doc_id"), col("text"),
       k = 5, w = 4, hash = "poly").as[(Long, Long)].collect().toSet
-    // simulate the fallback by a session without the function? The
-    // fallback branch keys off functionExists; instead assert the native
-    // result equals the naive winnow computed here
+    // reference: the naive winnow computed here (winnowFingerprints
+    // itself is native-only)
     val naiveFps = Seq((1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "completely different content here entirely")).flatMap { case (id, s) =>
       val hs = naive(s, 5)

@@ -34,13 +34,18 @@ class RewriteHofCosineSpec extends SparkSpec {
   }
 
   test("native dot_product is bit-identical to the HOF dot; LSH buckets agree") {
-    import graft.functions.VectorFunctions
     val planeVec = vecs.select(col("id"), col("a"))
-    val hofBuckets = planeVec
-      .select(col("id"), VectorFunctions.lshBucket(col("a"), 3, 4).as("b"))
+    // HOF reference bucket: the same planes and sign rule over the
+    // composable `dot` fold
+    val hofBucket = (0 until 4).map { p =>
+      val plane = array(VectorFunctions.planeValues(42, p, 3).map(lit): _*)
+      when(round(VectorFunctions.dot(col("a"), plane), 9) >= 0, lit(1))
+        .otherwise(lit(0)) * lit(1 << p)
+    }.reduce(_ + _)
+    val hofBuckets = planeVec.select(col("id"), hofBucket.as("b"))
       .as[(Long, Int)].collect().toMap
     val nativeBuckets = planeVec
-      .select(col("id"), VectorFunctions.lshBucket(col("a"), 3, 4, native = true).as("b"))
+      .select(col("id"), VectorFunctions.lshBucket(col("a"), 3, 4).as("b"))
       .as[(Long, Int)].collect().toMap
     assert(hofBuckets == nativeBuckets)
     val hofDot = vecs.select(VectorFunctions.dot(col("a"), col("b"))).as[Double].collect()

@@ -19,7 +19,8 @@ class SimHashSigSpec extends SparkSpec {
     val native = df.select(col("doc_id"),
         call_function("simhash_sig", col("text"), lit(32)).as("simhash"))
       .as[(Long, Long)].collect().toMap
-    // the aggregate fallback, inlined (simHashDocs would pick the kernel)
+    // the composable explode + aggregate form, inlined as the bit-equality
+    // reference (simHashDocs calls the kernel)
     val toks = df.select(col("doc_id"),
         explode(split(trim(col("text")), "\\s+")).as("tok"))
       .withColumn("h", graft.operators.Dedup.md5Int(col("tok")))
