@@ -2,15 +2,16 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // same session config as Verify/PlanCheck (AQE advisory size, skew join,
-    // UTC, extensions) so the bench measures the tuned configuration
+    // SPARK_GRAFT_ONLY=q1,q2 to time a subset while iterating; an unknown
+    // name fails here, before the session starts
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
+    // same session config as Verify/ExplainDump (AQE advisory size, skew
+    // join, UTC, extensions) so the bench measures the tuned configuration
     val spark = GraftSession.getOrCreate("graft-bench")
     // Warm the JVM (codegen, parquet reader, shuffle paths) so the first
     // measured query doesn't absorb session startup.
     spark.range(1000).selectExpr("sum(id)").collect()
     SparkEntry.entry(spark).count()
-    // SPARK_GRAFT_ONLY=q1,q2 to time a subset while iterating
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // min over N runs per query (SPARK_GRAFT_REPEAT, default 2): this host
     // is a VM with heavy CPU steal from co-tenants — a single sample can
     // read 3-4x slow; the minimum is the reproducible cost of the plan.
@@ -19,7 +20,6 @@ object Bench {
     // and a loaded host must not push the whole bench past a harness
     // timeout just to de-noise 0.2 s entries.
     val repeat = sys.env.get("SPARK_GRAFT_REPEAT").map(_.toInt).getOrElse(2).max(1)
-    val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
     // noise forensics (ADDITIONS ONLY — the timed region and the sampling
     // policy below are byte-identical to prior rounds): per-query raw
     // sample list plus a /proc/stat (steal, idle, total) jiffy snapshot
@@ -68,10 +68,9 @@ object Bench {
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() } catch { case _: Throwable => failed += name; -1L }
         val s = (System.nanoTime() - t0) / 1e9
-        // free persisted/localCheckpoint blocks a query left behind so the
-        // next query's timing isn't degraded by memory pressure
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        // free the blocks a query left behind so the next query's timing
+        // isn't degraded by memory pressure
+        Mat.releaseAll(spark)
         s
       }
       val (st0, id0, tot0) = procStat()

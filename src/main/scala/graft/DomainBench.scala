@@ -4,10 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.domain._
 
-/** End-to-end commissions-domain throughput bench, comparable to
-  * BASELINE.md: the reference processes 400,688 cert rows in 238.8 s
-  * end-to-end (~1,700 rows/s) / 2.0 s in-memory transform (~200 K rows/s)
-  * on a single Node process.
+/** The commissions flagship's inputs and lineage, as the `domain_e2e_gl`
+  * and `g_incremental_gl` queries build them (BASELINE.md: the reference
+  * processes 400,688 cert rows in 238.8 s end-to-end on a single Node
+  * process).
   *
   * Synthesizes reference-shaped certificate/premium inputs
   * deterministically from the TPC-H-ish testdata (lineitem rows become
@@ -15,7 +15,7 @@ import graft.domain._
   * inference + calculation lineage: hierarchy/config hashing ->
   * non-conformance + entropy routing -> proposal construction ->
   * split/hierarchy derivation -> premium transactions -> 8-stage calc ->
-  * GL + traceability. Prints one JSON line.
+  * GL. `perfbench/run.py --trace 1` profiles this lineage stage by stage.
   */
 object DomainBench {
 
@@ -85,18 +85,9 @@ object DomainBench {
     * flagship run and the incremental (base + delta batch) maintenance
     * twin, which must share EXACT inputs for the batch-identity oracle
     * to hold. */
-  def glInputs(spark: SparkSession, sfDir: String): Calc.CalcInputs =
-    glBuild(spark, sfDir, graft.Mat(synthCertificates(spark, sfDir))).inputs
-
-  /** [[glInputs]] plus the frames [[main]]'s consolidation and
-    * resolution-validation steps read: the routed configs and the full
-    * proposals (hashes, product and plan sets). */
-  private case class GlBuild(inputs: Calc.CalcInputs, cfg: DataFrame, props: DataFrame)
-
-  /** The [[glInputs]] build over materialized certificates `certs`; the
-    * fan-in frames materialize through [[graft.Mat]]. */
-  private def glBuild(spark: SparkSession, sfDir: String, certs: DataFrame): GlBuild = {
+  def glInputs(spark: SparkSession, sfDir: String): Calc.CalcInputs = {
     def mat(df: DataFrame): DataFrame = graft.Mat(df)
+    val certs = mat(synthCertificates(spark, sfDir))
     // Fused one-shuffle hash build (bit-equal to the two-phase
     // hierarchyHashes -> configHashes build — ProposalsSpec; measured
     // 9.3-9.6 s vs 10.7-11.2 s flagship at sf0.1): per-split rows explode
@@ -144,55 +135,10 @@ object DomainBench {
       Seq.empty[(String, String, Double, java.sql.Date, java.sql.Date)]
         .toDF("broker_id", "recipient_id", "assigned_pct", "eff_from", "eff_to")
     }
-    GlBuild(Calc.CalcInputs(
+    Calc.CalcInputs(
       premiums, calcCerts,
       props.select(col("proposal_id"), col("group_id"),
         col("eff_from").cast("date").as("eff_from"), col("eff_to").cast("date").as("eff_to")),
-      splits, versions.drop("hierarchy_hash"), participants, rates, assignments), cfg, props)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.getOrCreate("graft-domain-bench")
-    val t0 = System.nanoTime()
-    val certs = graft.Mat(synthCertificates(spark, sfDir))
-    val nCertRows = certs.count() // input scale
-
-    val t1 = System.nanoTime()
-    def phase[T](name: String)(f: => T): T = {
-      val s = System.nanoTime(); val r = f
-      System.err.println(f"[phase] $name: ${(System.nanoTime() - s) / 1e9}%.2f s"); r
-    }
-    // the glInputs build: hashes, configs and proposals materialize here
-    val GlBuild(in, cfg, props) = phase("inputs")(glBuild(spark, sfDir, certs))
-    val nProposals = phase("proposals")(props.count())
-    val fin = phase("calc")(graft.Mat(Calc.run(in)))
-    val nGl = phase("gl")(Calc.glEntries(fin).count())
-    val nTraced = phase("traceability")(Calc.traceability(fin).count())
-    // the typed per-group state machine at scale: consolidate the built
-    // proposals (3,079 groups) through flatMapGroups
-    val nConsolidated = phase("consolidation")(
-      Consolidate.consolidate(props.select(
-        col("group_id"), col("proposal_id"),
-        col("config_hash").as("config_md5"),
-        col("eff_from").cast("string").as("eff_from"),
-        col("eff_to").cast("string").as("eff_to"),
-        col("product_codes"), col("plan_codes"))).count())
-    // the reference's >= 95% certificate-resolution pass bar, at scale
-    val vSummary = phase("resolution validation")(
-      ResolutionValidator.summarize(ResolutionValidator.validate(
-        certs, cfg,
-        props.select(col("group_id"), col("config_hash"), col("proposal_id")),
-        in.splits, in.hierarchyVersions, in.participants, sampleMod = 20)))
-    val secs = (System.nanoTime() - t1) / 1e9
-    val total = (System.nanoTime() - t0) / 1e9
-    val rps = (nCertRows / secs).toLong
-    println(s"""{"metric":"domain_e2e","value":$secs,"unit":"sec","cert_rows":$nCertRows,""" +
-      s""""proposals":$nProposals,"gl_entries":$nGl,"premiums_traced":$nTraced,""" +
-      s""""rows_per_sec":$rps,"consolidated":$nConsolidated,""" +
-      s""""validation_sampled":${vSummary.sampled},""" +
-      s""""validation_pass_rate":${vSummary.passRate},""" +
-      s""""total_incl_synth":$total,"sf":"$sfDir"}""")
-    spark.stop()
+      splits, versions.drop("hierarchy_hash"), participants, rates, assignments)
   }
 }

@@ -63,6 +63,7 @@ object GraftSession {
       .config("spark.driver.host", "127.0.0.1")
 
   def getOrCreate(appName: String = "graft"): SparkSession = {
+    Mat.persist // a bad SPARK_GRAFT_MAT fails here, before any query runs
     val s = builder(appName).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shared materializer for iterative/fan-in frames — the ONE place where
   * "truncate lineage here" policy lives, switched by `SPARK_GRAFT_MAT`:
@@ -13,23 +13,29 @@ import org.apache.spark.sql.DataFrame
   *  - `persist`: eagerly-counted `persist(MEMORY_AND_DISK)` — survives
   *    executor loss (recompute from lineage) at the cost of keeping the
   *    lineage around. The right setting for a 1000-executor run.
-  *  - `none`: no materialization — rely on ReuseExchange for identical
-  *    subplans. Only for shallow plans / plan-shape inspection.
+  *
+  * Any other value is rejected, so a typo cannot quietly fall back to the
+  * non-durable default on a cluster.
   *
   * Iterative operators (connected components, deep BPE) and the domain
   * pipeline's fan-in frames all route through here, so one env var moves
   * the whole engine between single-JVM and cluster-durable materialization.
   */
 object Mat {
-  /** Mode: the `graft.mat` system property (tests) falls back to the
-    * `SPARK_GRAFT_MAT` env var (the deployment setting). Operators that
-    * fold extra work into their materializing action (connected
-    * components' edge signature) branch on this same value. */
-  private[graft] def mode: Option[String] =
-    sys.props.get("graft.mat").orElse(sys.env.get("SPARK_GRAFT_MAT"))
+  /** Whether the mode is `persist`: the `graft.mat` system property
+    * (tests) falls back to the `SPARK_GRAFT_MAT` env var (the deployment
+    * setting). Connected components, which folds its edge signature into
+    * the materializing action, branches on this same value. */
+  private[graft] def persist: Boolean =
+    sys.props.get("graft.mat").orElse(sys.env.get("SPARK_GRAFT_MAT")) match {
+      case None => false
+      case Some("persist") => true
+      case Some(v) => throw new IllegalArgumentException(
+        s"SPARK_GRAFT_MAT (graft.mat) = '$v': accepted values are unset (localCheckpoint) or 'persist'")
+    }
 
-  def apply(df: DataFrame): DataFrame = mode match {
-    case Some("persist") =>
+  def apply(df: DataFrame): DataFrame =
+    if (persist) {
       val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       p.count() // eager: a lazy persist consumed by two branches of one
                 // action computes twice before the cache fills
@@ -41,7 +47,13 @@ object Mat {
       // truncates the SQL plan; the RDD underneath keeps its lineage, so
       // executor loss still recomputes instead of failing the job.
       org.apache.spark.sql.GraftPlanBridge.rddRoot(p)
-    case Some("none") => df
-    case _ => df.localCheckpoint(true)
+    } else df.localCheckpoint(true)
+
+  /** Free every cached/persisted block the session holds — what a query's
+    * `Mat` calls (or its own caching) left behind — so the next query of a
+    * driver run starts without the last one's memory pressure. */
+  def releaseAll(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
   }
 }

@@ -9969,6 +9969,21 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     defs.map(q => q.name -> q.fn).toMap
 
+  /** The queries a driver run covers: all of them when `only` (the
+    * `SPARK_GRAFT_ONLY` value, comma-separated names) is unset, else the
+    * named ones. Names are trimmed and empty ones dropped; a list naming
+    * no query, or a name the registry does not hold, throws before any
+    * query runs, so a typo cannot pass for a short run. */
+  def select(only: Option[String]): Map[String, (SparkSession, String) => DataFrame] =
+    only.fold(queries) { spec =>
+      val names = spec.split(',').map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names -- queries.keySet
+      require(names.nonEmpty, s"SPARK_GRAFT_ONLY='$spec' names no query")
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_ONLY names queries not in the registry: ${unknown.toSeq.sorted.mkString(", ")}")
+      queries.filter { case (n, _) => names(n) }
+    }
+
   def oracleSql: Map[String, String] =
     defs.flatMap(q => q.oracle.map(o => q.name -> o.linesIterator.map(_.trim).mkString(" "))).toMap
 }

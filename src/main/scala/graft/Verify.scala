@@ -6,18 +6,15 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // same session config as Bench/PlanCheck (AQE, UTC, extensions):
+    // Optional comma-separated filter for fast local iteration on a
+    // single query (same contract as Bench's SPARK_GRAFT_ONLY); an
+    // unknown name fails here, before the session starts.
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    val selected = SparkEntry.select(only)
+    // same session config as Bench/ExplainDump (AQE, UTC, extensions):
     // correctness must be measured under the configuration we ship
     val spark = GraftSession.getOrCreate("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // Optional comma-separated filter for fast local iteration on a
-    // single query (same contract as Bench's SPARK_GRAFT_ONLY).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(q => names(q._1))
-      case None        => SparkEntry.queries
-    }
     // queries that threw: their dump is deleted, so a stale one left in a
     // reused outDir cannot compare as current, and they are named in
     // failed.json and counted on stdout
@@ -31,9 +28,7 @@ object Verify {
         val dump = new org.apache.hadoop.fs.Path(s"$outDir/$name")
         dump.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dump, true)
       }
-      // free per-query persisted/localCheckpoint blocks
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      Mat.releaseAll(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

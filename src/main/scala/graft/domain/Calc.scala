@@ -65,7 +65,7 @@ object Calc {
     // pass tagOrdinal=false and key the rank-1 restoration on those
     // columns directly, skipping the row_number sort of the dim frame.
     val sp =
-      if (!tagOrdinal || splits.columns.contains("__sseq")) splits
+      if (!tagOrdinal) splits
       else {
         val ordCols = splits.columns.map(c => col(c).asc_nulls_first)
         splits.withColumn("__sseq", row_number().over(
@@ -139,63 +139,9 @@ object Calc {
           (tagged("group_size") >= sr("size_from") && tagged("group_size") <= sr("size_to"))),
       "left")
       .drop(sr("schedule_code")).drop(sr("product_code")).drop(sr("state"))
-    resolveBest(joined, keys)
-  }
-
-  /** Scale path for stage 7: [[expandScheduleRates]] + a FULL 3-part equi
-    * join. [[lookupRate]]'s wildcard OR-conditions leave only
-    * schedule_code (~50-700 distinct values) as the extractable equi key —
-    * at a scale where the rates no longer broadcast, that caps join
-    * parallelism and invites skew (SURVEY §2.3 J6 note). Identical
-    * results to [[lookupRate]] on the same rules (CalcSpec asserts) for
-    * facts with NON-NULL product/state — a null fact key matches nothing
-    * here, while the wildcard path lets it match `'*'` rows; coalesce
-    * fact keys to a sentinel before using this path. */
-  def lookupRateExpanded(exploded: DataFrame, expandedRates: DataFrame,
-      rowKey: Seq[Column] = Nil): DataFrame = {
-    val er = expandedRates
-    val (tagged, keys) =
-      if (rowKey.nonEmpty) (exploded, rowKey)
-      else (graft.operators.Joins.deterministicRowKey(exploded),
-        Seq(col("__rh"), col("__ro")))
-    val joined = tagged.join(er,
-      tagged("schedule_code") === er("schedule_code") &&
-        tagged("product_code") === er("product_code") &&
-        tagged("state") === er("state") &&
-        (er("size_from").isNull ||
-          (tagged("group_size") >= er("size_from") && tagged("group_size") <= er("size_to"))),
-      "left")
-      .drop(er("schedule_code")).drop(er("product_code")).drop(er("state"))
-    resolveBest(joined, keys)
-  }
-
-  /** Expand wildcard rule rows over the OBSERVED product/state domains so
-    * the lookup join can carry the exact (schedule, product, state) key.
-    * Expanded rows keep their source row's specificity rank, so the
-    * most-specific-rule-wins tiebreak is unchanged; the domains are
-    * config-sized (distinct products/states), so the cross joins
-    * broadcast. */
-  def expandScheduleRates(scheduleRates: DataFrame, facts: DataFrame): DataFrame = {
-    val prods = facts.select(col("product_code")).distinct()
-      .filter(col("product_code").isNotNull)
-    val states = facts.select(col("state")).distinct()
-      .filter(col("state").isNotNull)
-    val sr = scheduleRates.withColumn("__spec",
-      when(col("product_code") =!= "*", 0).otherwise(2) +
-        when(col("state") =!= "*", 0).otherwise(1))
-    val pExpanded = sr.filter(col("product_code") === "*").drop("product_code")
-      .crossJoin(broadcast(prods))
-      .unionByName(sr.filter(col("product_code") =!= "*"))
-    pExpanded.filter(col("state") === "*").drop("state")
-      .crossJoin(broadcast(states))
-      .unionByName(pExpanded.filter(col("state") =!= "*"))
-  }
-
-  /** Several rules may match one participant row: keep the most specific
-    * (exact product > exact state > double wildcard), deterministically,
-    * then resolve the three-level rate priority. Expects the caller's
-    * per-row key and the rules-side `__spec` rank. */
-  private def resolveBest(joined: DataFrame, keys: Seq[Column]): DataFrame = {
+    // several rules may match one participant row: keep the most specific
+    // (exact product > exact state > double wildcard), deterministically,
+    // then resolve the three-level rate priority
     val best = Joins.top1PerGroup(
       joined.withColumn("__spec", coalesce(col("__spec"), lit(9))),
       keys, Seq(col("__spec").asc, col("rate").desc_nulls_last))

@@ -61,7 +61,7 @@ object Proposals {
     * frame disappears; per-split rows come back via a shuffle-free
     * explode of `splits`). The lambda bodies run interpreted (HOFs get
     * no codegen), so this trades per-row CPU for a stage. The flagship
-    * build (`DomainBench.glBuild`) uses this form: 9.3-9.6 s against
+    * build (`DomainBench.glInputs`) uses this form: 9.3-9.6 s against
     * 10.7-11.2 s for the two-phase build at sf0.1. The two-phase form
     * stays for `ResolutionValidator` and `g_pha_entities`, and as the
     * reference that `ProposalsSpec` and `g_shadow_compare` check this one

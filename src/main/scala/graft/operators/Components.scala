@@ -159,24 +159,15 @@ object Components {
     // consumer ran (guide §5 "unpersist when done" — before r14 every
     // round's blocks lived until session end). Mode is graft.Mat's.
     def matSig(df: DataFrame): (DataFrame, () => Unit, (Long, BigInt)) =
-      graft.Mat.mode match {
-        case Some("none") =>
-          // no materialization in this mode by contract: signature runs as
-          // its own aggregate over the (recomputed) frame, as before r14
-          val r = df.agg(count(lit(1)),
-            sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).first()
-          val sig = if (r.isNullAt(1)) (0L, BigInt(0))
-            else (r.getLong(0), BigInt(r.getDecimal(1).toBigInteger))
-          (df, () => (), sig)
-        case Some("persist") =>
-          val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val (d, _, n, h) = org.apache.spark.sql.GraftPlanBridge
-            .reRootEdgeSig(p, localCkpt = false)
-          (d, () => { p.unpersist(false); () }, (n, h))
-        case _ =>
-          val (d, rdd, n, h) = org.apache.spark.sql.GraftPlanBridge
-            .reRootEdgeSig(df, localCkpt = true)
-          (d, () => { rdd.unpersist(false); () }, (n, h))
+      if (graft.Mat.persist) {
+        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val (d, _, n, h) = org.apache.spark.sql.GraftPlanBridge
+          .reRootEdgeSig(p, localCkpt = false)
+        (d, () => { p.unpersist(false); () }, (n, h))
+      } else {
+        val (d, rdd, n, h) = org.apache.spark.sql.GraftPlanBridge
+          .reRootEdgeSig(df, localCkpt = true)
+        (d, () => { rdd.unpersist(false); () }, (n, h))
       }
     var (e, eFree, sig) = matSig(symmetrize(edges0))
     var converged = sig._1 == 0L

@@ -26,8 +26,7 @@ object ExplainDump {
       Files.write(Paths.get(outDir, s"${name}_$tag.txt"), txt.getBytes("UTF-8"))
       println(s"wrote $name")
       // Mat() inside query builders may persist/localCheckpoint; free it
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      graft.Mat.releaseAll(spark)
     }
     spark.stop()
   }

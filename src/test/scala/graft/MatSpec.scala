@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Materializer contracts across the three modes — above all the r13
+/** Materializer contracts across the two modes — above all the r13
   * persist-mode fix: an iterative operator that Mats every round must
   * keep its catalyst plan BOUNDED in rounds (pre-fix, persist nested
   * each round's whole plan inside the next; 30-round compositions blew
@@ -46,8 +46,8 @@ class MatSpec extends SparkSpec {
   test("components: CC and LPA rows identical across Mat modes") {
     // i -- i % 37: 37 star components rooted at 0..36, so every node's
     // component is node % 37. Persist mode takes connectedComponents'
-    // edge-signature path over a persisted frame, none mode its separate
-    // signature aggregate; all three must agree row for row.
+    // edge-signature path over a persisted frame; both modes must agree
+    // row for row.
     val pairs = (1 to 400).map(i => (i.toLong, (i % 37).toLong)).toDF("u", "v")
     def run() = (
       graft.operators.Components.connectedComponents(pairs, "u", "v")
@@ -57,20 +57,26 @@ class MatSpec extends SparkSpec {
     val (cc, lpa) = run()
     assert(cc.map(r => (r.getLong(0), r.getLong(1))) ==
       (0L to 400L).map(n => (n, n % 37)).toSet)
-    for (m <- Seq("persist", "none")) {
-      val (ccM, lpaM) = withMode(m)(run())
-      assert(ccM == cc, s"connectedComponents diverged in mode $m")
-      assert(lpaM == lpa, s"labelPropagation diverged in mode $m")
-    }
+    val (ccP, lpaP) = withMode("persist")(run())
+    assert(ccP == cc, "connectedComponents diverged in persist mode")
+    assert(lpaP == lpa, "labelPropagation diverged in persist mode")
   }
 
-  test("default (localCheckpoint) and none modes still compute correctly") {
-    val (d1, _) = iterate(5) // default
-    assert(d1.agg(sum("v")).as[Long].head == (1 to 64).map(_ + 5L).sum)
-    val (d2, sizes) = withMode("none") { iterate(5) }
-    assert(d2.agg(sum("v")).as[Long].head == (1 to 64).map(_ + 5L).sum)
-    // none mode does NOT truncate: plan grows with rounds (the contract
-    // that makes it only fit for shallow plans)
-    assert(sizes.last > sizes.head)
+  test("default (localCheckpoint) mode computes correctly") {
+    val (d, sizes) = iterate(5)
+    assert(d.agg(sum("v")).as[Long].head == (1 to 64).map(_ + 5L).sum)
+    // each round re-roots on the checkpoint: the plan does not nest
+    assert(sizes.distinct.size == 1, s"plan sizes grew: $sizes")
+  }
+
+  test("an unknown SPARK_GRAFT_MAT value is rejected, naming it") {
+    // the retired `none` and typos must not fall back to localCheckpoint
+    for (bad <- Seq("none", "persit", "Persist", "")) {
+      val e = intercept[IllegalArgumentException] {
+        withMode(bad) { Mat((1 to 3).toDF("v")) }
+      }
+      assert(e.getMessage.contains(s"'$bad'") && e.getMessage.contains("'persist'"),
+        e.getMessage)
+    }
   }
 }

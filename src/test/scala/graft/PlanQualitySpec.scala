@@ -2,7 +2,7 @@ package graft
 
 /** Plan-quality regression guards: the physical plans the scale design
   * depends on (broadcasts, pushdown, no accidental nested loops) —
-  * asserted, not just eyeballed via PlanCheck. */
+  * asserted, not just eyeballed in `tools.ExplainDump` output. */
 class PlanQualitySpec extends SparkSpec {
 
   private def plan(name: String): String =

@@ -85,7 +85,7 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("expandScheduleRates: no wildcards remain; expanded lookup equals wildcard lookup (3 seeds)") {
+  test("lookupRate equals a driver-side most-specific-rule replay (3 seeds)") {
     import graft.domain.Calc
     val ratesGen: Gen[List[(String, String, String, Option[Int], Option[Int], Double)]] = for {
       n <- Gen.choose(1, 8)
@@ -96,26 +96,34 @@ class PropertySpec extends SparkSpec {
         r <- Gen.choose(1, 99)
       } yield (sch, p, st, None: Option[Int], None: Option[Int], r.toDouble))
     } yield rows
+    // one fact per (schedule, product, state) the rules can name
+    val factRows = for {
+      ((sch, p, st), i) <- (for (sch <- Seq("S1", "S2"); p <- Seq("PA", "PB");
+        st <- Seq("TX", "CA")) yield (sch, p, st)).zipWithIndex
+    } yield (i + 1L, 1, "V", 1, s"B${i + 1}", sch, p, st, 10)
     (30L to 32L).foreach { seed =>
-      val rates = sample(ratesGen, seed)
+      val rules = sample(ratesGen, seed)
+      val rates = rules
         .toDF("schedule_code", "product_code", "state", "size_from", "size_to", "rate")
-      val facts = Seq(
-        (1L, 1, "V", 1, "B1", "S1", "PA", "TX", 10),
-        (2L, 1, "V", 1, "B2", "S1", "PB", "CA", 10),
-        (3L, 1, "V", 1, "B3", "S2", "PA", "CA", 10),
-        (4L, 1, "V", 1, "B4", "S2", "PB", "TX", 10))
+      val facts = factRows
         .toDF("premium_id", "split_seq", "version_id", "tier_level", "broker_id",
           "schedule_code", "product_code", "state", "group_size")
         .withColumn("real_rate", lit(null).cast("double"))
         .withColumn("participant_rate", lit(null).cast("double"))
-      val expanded = Calc.expandScheduleRates(rates, facts)
-      assert(expanded.filter(col("product_code") === "*" || col("state") === "*").count() == 0,
-        s"seed=$seed wildcards remain")
-      def shape(df: org.apache.spark.sql.DataFrame) =
-        df.select(col("premium_id"), col("resolved_rate").cast("double"), col("rate_source"))
-          .as[(Long, Option[Double], String)].collect().toSet
-      assert(shape(Calc.lookupRate(facts, rates)) ==
-        shape(Calc.lookupRateExpanded(facts, expanded)), s"seed=$seed mismatch")
+      // replay: among the rules matching a fact's schedule, product and
+      // state (or a '*'), exact product beats exact state beats double
+      // wildcard; ties go to the higher rate; no match is NoRate
+      val want = factRows.map { f =>
+        val matching = rules.filter(r =>
+          r._1 == f._6 && (r._2 == "*" || r._2 == f._7) && (r._3 == "*" || r._3 == f._8))
+        val best = matching.sortBy(r =>
+          ((if (r._2 != "*") 0 else 2) + (if (r._3 != "*") 0 else 1), -r._6)).headOption
+        (f._1, best.map(_._6), if (best.isDefined) "ScheduleLookup" else "NoRate")
+      }.toSet
+      val got = Calc.lookupRate(facts, rates)
+        .select(col("premium_id"), col("resolved_rate").cast("double"), col("rate_source"))
+        .as[(Long, Option[Double], String)].collect().toSet
+      assert(got == want, s"seed=$seed rules=$rules")
     }
   }
 

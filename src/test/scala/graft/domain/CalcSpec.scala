@@ -98,7 +98,7 @@ class CalcSpec extends SparkSpec {
     assert(out == Seq((Some(2.0), "ScheduleLookup")))
   }
 
-  test("expanded-rates path matches the wildcard path exactly") {
+  test("lookupRate: banded exact rule, double wildcard and NoRate") {
     val facts = Seq(
       (300L, 1, "V1", 1, "B1", "S3", "PRODA", "ST", 25), // banded exact wins (2.0)
       (301L, 1, "V1", 1, "B2", "S3", "PRODB", "TX", 10), // only double wildcard (9.0)
@@ -115,13 +115,10 @@ class CalcSpec extends SparkSpec {
     def shape(df: DataFrame) = df.select(col("premium_id"), col("broker_id"),
       col("resolved_rate").cast("double"), col("rate_source"))
       .as[(Long, String, Option[Double], String)].collect().toSet
-    val viaWildcard = shape(Calc.lookupRate(facts, rates))
-    val viaExpanded = shape(
-      Calc.lookupRateExpanded(facts, Calc.expandScheduleRates(rates, facts)))
-    assert(viaWildcard == viaExpanded)
-    assert(viaWildcard.exists(r => r._1 == 300L && r._3.contains(2.0)))
-    assert(viaWildcard.exists(r => r._1 == 301L && r._3.contains(9.0)))
-    assert(viaWildcard.exists(r => r._1 == 302L && r._4 == "NoRate"))
+    val got = shape(Calc.lookupRate(facts, rates))
+    assert(got.exists(r => r._1 == 300L && r._3.contains(2.0)))
+    assert(got.exists(r => r._1 == 301L && r._3.contains(9.0)))
+    assert(got.exists(r => r._1 == 302L && r._4 == "NoRate"))
   }
 
   test("commissions: round(split*rate/100, 2) per participant") {
