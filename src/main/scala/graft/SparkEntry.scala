@@ -51,6 +51,29 @@ object SparkEntry {
   private def emb(s: SparkSession, d: String) = Tables.embeddings(s, d)
   private def ev(s: SparkSession, d: String)  = Tables.events(s, d)
 
+  /** The d_incremental_dedup split of `documents`: the new batch `newb`
+    * (every 10th doc) and the standing corpus `corp`, with the batch's
+    * content fingerprints `nfp(doc_id, fp)` and the corpus's distinct
+    * `cfp(fp)` (TextFunctions.fingerprint). Starts with WITH. */
+  private val batchFingerprintCtes: String =
+    """WITH newb AS (SELECT * FROM documents WHERE doc_id % 10 = 0),
+              corp AS (SELECT * FROM documents WHERE doc_id % 10 <> 0),
+              nfp AS (SELECT doc_id,
+                        md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp
+                      FROM newb),
+              cfp AS (SELECT DISTINCT
+                        md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp
+                      FROM corp)"""
+
+  /** The supplier co-supply graph: pairs (sa < sb) of suppliers on one
+    * order, over the 1-in-20 order slice. */
+  private def coSupplyPairs(s: SparkSession, d: String): DataFrame =
+    li(s, d).filter(pmod(col("l_orderkey"), lit(20)) === 0).as("a")
+      .join(li(s, d).filter(pmod(col("l_orderkey"), lit(20)) === 0).as("b"),
+        col("a.l_orderkey") === col("b.l_orderkey") &&
+          col("a.l_suppkey") < col("b.l_suppkey"))
+      .select(col("a.l_suppkey").as("sa"), col("b.l_suppkey").as("sb"))
+
   /** The sparsified part co-occurrence graph: part pairs (u < v) sharing
     * an order, kept by a 4% md5 slice so graph algorithms see real
     * structure on the uniform synthetic data. Pair expansion is bounded
@@ -360,6 +383,28 @@ object SparkEntry {
                 FROM lineitem),
               c0 AS (SELECT *, floor(10000 / cnt) / 100.0 AS base_pct FROM li)"""
 
+  /** `rows0`: one row per certificate split over `c0` ([[certSplitCtes]]):
+    * cert and group ids, split_seq, then the `pre` columns, split_pct
+    * (every 50th cert over-allocated by 1.0) and the schedule item, then
+    * the `post` columns (DomainBench.synthCertificates). */
+  private def certRowsCte(pre: String, post: String): String =
+    """rows0 AS (
+                SELECT l_orderkey AS cert_id,
+                       'G' || (l_orderkey % 3079)::VARCHAR AS group_id,
+                       l_linenumber AS split_seq,""" + pre + """
+                       (CASE WHEN rn < cnt THEN base_pct
+                             ELSE round(100.0 - base_pct * (cnt - 1), 2) END
+                        + CASE WHEN l_orderkey % 50 = 0 THEN 1.0 ELSE 0.0 END)
+                         AS split_pct,
+                       '0001:P' || l_suppkey::VARCHAR || ':SCHED'
+                         || (l_suppkey % 50)::VARCHAR AS item""" + post + """
+                FROM c0)"""
+
+  /** [[certRowsCte]]'s `post` columns for the cert's broker and schedule. */
+  private val brokerCols: String = """,
+                       'P' || l_suppkey::VARCHAR AS broker_id,
+                       l_suppkey % 50 AS sched_k"""
+
   /** Hierarchy hash per (cert, split) and config hash per cert over
     * `rows0(cert_id, group_id, split_seq, split_pct, item)`, with the
     * split-sum non-conformance flag (Proposals.hierarchyHashes /
@@ -378,12 +423,44 @@ object SparkEntry {
                        abs(sum(split_pct) - 100.0) > 0.001 AS nonconformant
                 FROM hh GROUP BY 1, 2)"""
 
-  /** MinHash signatures of word-trigram shingles over `toks(doc_id, w)`:
-    * 16 universal hashes, as Dedup.minHashLshPairs draws them. */
-  private val minHashSigCtes: String = """sh AS (SELECT doc_id,
+  /** Distinct word-trigram shingles `name(doc_id, s)` of every
+    * `toks(doc_id, w)` row (Dedup.wordShingles at n = 3). */
+  private def trigramShinglesCte(name: String): String = name + """ AS (SELECT doc_id,
                        unnest(list_distinct([array_to_string(w[i:i+2], ' ')
                                              for i in generate_series(1, len(w) - 2)])) AS s
-                     FROM toks WHERE len(w) >= 3),
+                     FROM toks WHERE len(w) >= 3)"""
+
+  /** Trigram shingles `sh` without those in more than 50 docs (the
+    * `maxDf = Some(50)` cap), over [[trigramShinglesCte]] `sh0`. */
+  private val cappedShinglesCtes: String = trigramShinglesCte("sh0") + """,
+              sh AS (SELECT * FROM sh0
+                     WHERE s IN (SELECT s FROM sh0 GROUP BY s HAVING count(*) <= 50))"""
+
+  /** Dedup's shared-shingle core over `documents`: `toks`, the shingle
+    * CTEs `shingles` (ending in `sh`), per-doc `sizes(doc_id, n_sh)` and
+    * `pairs(id_a, id_b, n_common)` of docs sharing a shingle. */
+  private def sharedShingleCtes(shingles: String): String =
+    """WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
+                            FROM documents),
+              """ + shingles + """,
+              sizes AS (SELECT doc_id, count(*)::INT AS n_sh FROM sh GROUP BY 1),
+              pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*)::BIGINT AS n_common
+                        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+                        GROUP BY 1, 2)"""
+
+  /** Exact shingle-Jaccard pairs at or above `threshold` over
+    * [[sharedShingleCtes]]. */
+  private def shingleJaccardOracle(shingles: String, threshold: String): String =
+    sharedShingleCtes(shingles) + """
+              SELECT id_a, id_b,
+                     round(n_common / (sa.n_sh + sb.n_sh - n_common), 6) AS jaccard
+              FROM pairs JOIN sizes sa ON sa.doc_id = id_a
+                         JOIN sizes sb ON sb.doc_id = id_b
+              WHERE round(n_common / (sa.n_sh + sb.n_sh - n_common), 6) >= """ + threshold
+
+  /** MinHash signatures of word-trigram shingles over `toks(doc_id, w)`:
+    * 16 universal hashes, as Dedup.minHashLshPairs draws them. */
+  private val minHashSigCtes: String = trigramShinglesCte("sh") + """,
               h AS (SELECT doc_id, i,
                       min((('0x' || substr(md5(s), 1, 8))::BIGINT * (1 + 2 * i) + (11 * i + 7))
                           % 4294967311) AS m
@@ -733,13 +810,49 @@ object SparkEntry {
                         OVER (PARTITION BY key ORDER BY f, t ROWS UNBOUNDED PRECEDING) AS isl
                     FROM x)"""
 
+  /** The stopword-count language guess over `s_en`..`s_de`
+    * (TextFunctions.langId): the argmax language, 'und' when none hit. */
+  private val langArgmaxSql: String = """CASE WHEN greatest(s_en, s_es, s_fr, s_de) <= 0 THEN 'und'
+                     WHEN s_en = greatest(s_en, s_es, s_fr, s_de) THEN 'en'
+                     WHEN s_es = greatest(s_en, s_es, s_fr, s_de) THEN 'es'
+                     WHEN s_fr = greatest(s_en, s_es, s_fr, s_de) THEN 'fr'
+                     WHEN s_de = greatest(s_en, s_es, s_fr, s_de) THEN 'de'
+                     ELSE 'und' END"""
+
+  /** `p(<label>, <guess>)`: [[langArgmaxSql]] for every document. */
+  private def langGuessCte(label: String, guess: String): String =
+    "p AS (SELECT " + label + ",\n" + langArgmaxSql + " AS " + guess + """
+              FROM (SELECT lang,
+                      len(regexp_extract_all(lower(text),
+                        '\b(the|and|of|is|was|that|with)\b')) AS s_en,
+                      len(regexp_extract_all(lower(text),
+                        '\b(el|la|los|las|es|que|con|para)\b')) AS s_es,
+                      len(regexp_extract_all(lower(text),
+                        '\b(le|la|les|est|que|avec|pour|dans)\b')) AS s_fr,
+                      len(regexp_extract_all(lower(text),
+                        '\b(der|die|das|ist|und|mit|nicht)\b')) AS s_de
+                    FROM documents))"""
+
+  /** `toks(doc_id, <word>, pos)`: every whitespace token of `documents`
+    * with its 1-based position (posexplode). */
+  private def posToksCte(word: String): String = """toks AS (SELECT doc_id,
+                unnest(string_split_regex(trim(text), '\s+')) AS """ + word + """,
+                generate_subscripts(string_split_regex(trim(text), '\s+'), 1) AS pos
+              FROM documents)"""
+
+  /** Adjacent word pairs `p(doc_id, pos, w, w2)` (TextFunctions'
+    * `adjacentPairs`) and their corpus counts `c(w1, w2, cnt)`. */
+  private val bigramCountCtes: String = posToksCte("w") + """,
+              p AS (SELECT doc_id, pos, w,
+                      lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
+                    FROM toks WHERE w <> ''),
+              c AS (SELECT w AS w1, w2, count(*)::BIGINT AS cnt
+                    FROM p WHERE w2 IS NOT NULL GROUP BY 1, 2)"""
+
   /** Per-doc adjacent word pairs `pairs(doc_id, w1, w2)` and the corpus
     * bigram LM's negative log-likelihood `lm(w1, w2, nll)` as exact
     * DECIMAL (TextFunctions.perplexityFilter). */
-  private val bigramNllCtes: String = """toks AS (SELECT doc_id,
-                unnest(string_split_regex(trim(text), '\s+')) AS w,
-                generate_subscripts(string_split_regex(trim(text), '\s+'), 1) AS pos
-              FROM documents),
+  private val bigramNllCtes: String = posToksCte("w") + """,
               p AS (SELECT doc_id, w AS w1,
                       lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
                     FROM toks WHERE w <> ''),
@@ -797,22 +910,8 @@ object SparkEntry {
     * `domain_e2e_gl` and the incremental-maintenance twin
     * `g_incremental_gl`, whose batch-identity contract is exactly "equals
     * this from-scratch result". */
-  private val domainGlOracleSql: String = "WITH " + certSplitCtes + """,
-              rows0 AS (
-                SELECT l_orderkey AS cert_id,
-                       'G' || (l_orderkey % 3079)::VARCHAR AS group_id,
-                       l_linenumber AS split_seq,
-                       l_shipdate::DATE AS eff_date,
-                       (CASE WHEN rn < cnt THEN base_pct
-                             ELSE round(100.0 - base_pct * (cnt - 1), 2) END
-                        + CASE WHEN l_orderkey % 50 = 0 THEN 1.0 ELSE 0.0 END)
-                         AS split_pct,
-                       '0001:P' || l_suppkey::VARCHAR || ':SCHED'
-                         || (l_suppkey % 50)::VARCHAR AS item,
-                       'P' || l_suppkey::VARCHAR AS broker_id,
-                       l_suppkey % 50 AS sched_k
-                FROM c0),
-""" + hierarchyConfigCtes + """,
+  private val domainGlOracleSql: String = "WITH " + certSplitCtes + ",\n" +
+    certRowsCte("\nl_shipdate::DATE AS eff_date,", brokerCols) + ",\n" + hierarchyConfigCtes + """,
               certdates AS (SELECT l_orderkey AS cert_id, min(l_shipdate::DATE) AS eff_date
                             FROM lineitem GROUP BY 1),
               props0 AS (
@@ -946,12 +1045,7 @@ object SparkEntry {
                   + least((CASE WHEN n_tok_ws > 0 THEN n_stop / n_tok_ws::DOUBLE ELSE 0 END) * 4.0, 1.0) * 0.4
                   + (1.0 - least((CASE WHEN length(text) > 0 THEN n_punct / length(text)::DOUBLE ELSE 0 END) * 10.0, 1.0)) * 0.2,
                   0.0), 1.0), 6) AS quality,
-                CASE WHEN greatest(s_en, s_es, s_fr, s_de) <= 0 THEN 'und'
-                     WHEN s_en = greatest(s_en, s_es, s_fr, s_de) THEN 'en'
-                     WHEN s_es = greatest(s_en, s_es, s_fr, s_de) THEN 'es'
-                     WHEN s_fr = greatest(s_en, s_es, s_fr, s_de) THEN 'fr'
-                     WHEN s_de = greatest(s_en, s_es, s_fr, s_de) THEN 'de'
-                     ELSE 'und' END AS pred_lang
+                """ + langArgmaxSql + """ AS pred_lang
               FROM b0),
               fl2 AS (SELECT *, quality >= 0.5 AS pass_q,
                         (quality >= 0.5 AND pred_lang = lang) AS pass_l
@@ -2504,19 +2598,7 @@ object SparkEntry {
                          ORDER BY l_linenumber, l_suppkey, l_partkey) AS rn
                 FROM lineitem WHERE l_orderkey % 10 = 0),
               c0 AS (SELECT *, floor(10000 / cnt) / 100.0 AS base_pct FROM li),
-              rows0 AS (
-                SELECT l_orderkey AS cert_id,
-                       'G' || (l_orderkey % 3079)::VARCHAR AS group_id,
-                       l_linenumber AS split_seq,
-                       (CASE WHEN rn < cnt THEN base_pct
-                             ELSE round(100.0 - base_pct * (cnt - 1), 2) END
-                        + CASE WHEN l_orderkey % 50 = 0 THEN 1.0 ELSE 0.0 END)
-                         AS split_pct,
-                       '0001:P' || l_suppkey::VARCHAR || ':SCHED'
-                         || (l_suppkey % 50)::VARCHAR AS item,
-                       'P' || l_suppkey::VARCHAR AS broker_id,
-                       l_suppkey % 50 AS sched_k
-                FROM c0),
+""" + certRowsCte("", brokerCols) + """,
               hh AS (
                 SELECT cert_id, group_id, split_seq, split_pct
                 FROM rows0 GROUP BY 1, 2, 3, 4),
@@ -3510,19 +3592,8 @@ object SparkEntry {
           Seq("group_id", "proposal_id"),
           Seq("config_hash", "eff_from", "n_certs"))))
     },
-      Some("WITH " + certSplitCtes + """,
-              rows0 AS (
-                SELECT l_orderkey AS cert_id,
-                       'G' || (l_orderkey % 3079)::VARCHAR AS group_id,
-                       l_linenumber AS split_seq,
-                       (CASE WHEN rn < cnt THEN base_pct
-                             ELSE round(100.0 - base_pct * (cnt - 1), 2) END
-                        + CASE WHEN l_orderkey % 50 = 0 THEN 1.0 ELSE 0.0 END)
-                         AS split_pct,
-                       '0001:P' || l_suppkey::VARCHAR || ':SCHED'
-                         || (l_suppkey % 50)::VARCHAR AS item
-                FROM c0),
-""" + hierarchyConfigCtes + """,
+      Some("WITH " + certSplitCtes + ",\n" + certRowsCte("", "") + ",\n" +
+        hierarchyConfigCtes + """,
               props0 AS (
                 SELECT group_id, config_hash
                 FROM cfg WHERE NOT nonconformant GROUP BY 1, 2),
@@ -3560,23 +3631,7 @@ object SparkEntry {
       // the oracle applies the identical cap
       Dedup.ngramJaccardPairs(doc(s, d), col("doc_id"), col("text"),
         n = 3, threshold = 0.1, maxDf = Some(50)),
-      Some("""WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
-                            FROM documents),
-              sh0 AS (SELECT doc_id,
-                       unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-                                             for i in generate_series(1, len(w) - 2)])) AS s
-                     FROM toks WHERE len(w) >= 3),
-              sh AS (SELECT * FROM sh0
-                     WHERE s IN (SELECT s FROM sh0 GROUP BY s HAVING count(*) <= 50)),
-              sizes AS (SELECT doc_id, count(*)::INT AS n_sh FROM sh GROUP BY 1),
-              pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*)::BIGINT AS n_common
-                        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2)
-              SELECT id_a, id_b,
-                     round(n_common / (sa.n_sh + sb.n_sh - n_common), 6) AS jaccard
-              FROM pairs JOIN sizes sa ON sa.doc_id = id_a
-                         JOIN sizes sb ON sb.doc_id = id_b
-              WHERE round(n_common / (sa.n_sh + sb.n_sh - n_common), 6) >= 0.1""")),
+      Some(shingleJaccardOracle(cappedShinglesCtes, "0.1"))),
 
     Q("d_prefix_jaccard", (s, d) =>
       // prefix-filtered similarity join: the oracle is the PLAIN exact
@@ -3589,21 +3644,7 @@ object SparkEntry {
       // corpus (measured 5.5M candidate pairs at sf0.1 vs 193K here)
       Dedup.prefixJaccardPairs(doc(s, d), col("doc_id"), col("text"),
         n = 3, threshold = 0.6),
-      Some("""WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
-                            FROM documents),
-              sh AS (SELECT doc_id,
-                       unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-                                             for i in generate_series(1, len(w) - 2)])) AS s
-                     FROM toks WHERE len(w) >= 3),
-              sizes AS (SELECT doc_id, count(*)::INT AS n_sh FROM sh GROUP BY 1),
-              pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*)::BIGINT AS n_common
-                        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2)
-              SELECT id_a, id_b,
-                     round(n_common / (sa.n_sh + sb.n_sh - n_common), 6) AS jaccard
-              FROM pairs JOIN sizes sa ON sa.doc_id = id_a
-                         JOIN sizes sb ON sb.doc_id = id_b
-              WHERE round(n_common / (sa.n_sh + sb.n_sh - n_common), 6) >= 0.6""")),
+      Some(shingleJaccardOracle(trigramShinglesCte("sh"), "0.6"))),
 
     Q("d_minhash_lsh", (s, d) =>
       Dedup.minHashLshPairs(doc(s, d), col("doc_id"), col("text"),
@@ -3642,10 +3683,7 @@ object SparkEntry {
                               1, 8))::BIGINT % kk.k = 0),
               toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
                             FROM docs),
-              sh AS (SELECT doc_id,
-                       unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-                                             for i in generate_series(1, len(w) - 2)])) AS s
-                     FROM toks WHERE len(w) >= 3),
+""" + trigramShinglesCte("sh") + """,
               sizes AS (SELECT doc_id, count(*)::INT AS n_sh FROM sh GROUP BY 1),
               prs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                         count(*)::BIGINT AS n_common
@@ -3714,18 +3752,7 @@ object SparkEntry {
       // symmetric Jaccard dilutes away; df-capped like d_ngram_jaccard
       Dedup.containmentPairs(doc(s, d), col("doc_id"), col("text"),
         n = 3, threshold = 0.8, maxDf = Some(50)),
-      Some("""WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
-                            FROM documents),
-              sh0 AS (SELECT doc_id,
-                       unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-                                             for i in generate_series(1, len(w) - 2)])) AS s
-                     FROM toks WHERE len(w) >= 3),
-              sh AS (SELECT * FROM sh0
-                     WHERE s IN (SELECT s FROM sh0 GROUP BY s HAVING count(*) <= 50)),
-              sizes AS (SELECT doc_id, count(*)::INT AS n_sh FROM sh GROUP BY 1),
-              pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*)::BIGINT AS n_common
-                        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2),
+      Some(sharedShingleCtes(cappedShinglesCtes) + """,
               ws AS (SELECT id_a, id_b, n_common, sa.n_sh AS n_a, sb.n_sh AS n_b
                      FROM pairs JOIN sizes sa ON sa.doc_id = id_a
                                 JOIN sizes sb ON sb.doc_id = id_b)
@@ -3782,11 +3809,7 @@ object SparkEntry {
       // (suppliers sharing an order, 1-in-20 order slice): degree-ordered
       // orientation -> wedge join -> one equi closing join
       graft.operators.Components.triangleCounts(
-        li(s, d).filter(pmod(col("l_orderkey"), lit(20)) === 0).as("a")
-          .join(li(s, d).filter(pmod(col("l_orderkey"), lit(20)) === 0).as("b"),
-            col("a.l_orderkey") === col("b.l_orderkey") &&
-              col("a.l_suppkey") < col("b.l_suppkey"))
-          .select(col("a.l_suppkey").as("sa"), col("b.l_suppkey").as("sb")),
+        coSupplyPairs(s, d),
         col("sa"), col("sb")),
       Some("""WITH li AS (SELECT l_orderkey, l_suppkey FROM lineitem
                           WHERE l_orderkey % 20 = 0),
@@ -4306,15 +4329,7 @@ object SparkEntry {
       // corpus bigram LM: ordered-pair counts + P(w2|w1); adjacency from
       // one lead window over exploded positions (no self-join)
       TextFunctions.bigramLm(doc(s, d), col("doc_id"), col("text")),
-      Some("""WITH toks AS (SELECT doc_id,
-                unnest(string_split_regex(trim(text), '\s+')) AS w,
-                generate_subscripts(string_split_regex(trim(text), '\s+'), 1) AS pos
-              FROM documents),
-              p AS (SELECT doc_id, pos, w,
-                      lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
-                    FROM toks WHERE w <> ''),
-              c AS (SELECT w AS w1, w2, count(*)::BIGINT AS cnt
-                    FROM p WHERE w2 IS NOT NULL GROUP BY 1, 2)
+      Some("WITH " + bigramCountCtes + """
               SELECT w1, w2, cnt,
                      round(cnt / (sum(cnt) OVER (PARTITION BY w1)), 6) AS p_cond
               FROM c""")),
@@ -4335,10 +4350,7 @@ object SparkEntry {
     },
       Some("""WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
                             FROM documents),
-              sh AS (SELECT doc_id,
-                       unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-                                             for i in generate_series(1, len(w) - 2)])) AS s
-                     FROM toks WHERE len(w) >= 3),
+""" + trigramShinglesCte("sh") + """,
               dfq AS (SELECT s, count(*)::BIGINT AS df FROM sh GROUP BY 1)
               SELECT doc_id, count(*)::BIGINT AS n_shingles,
                      sum(CASE WHEN df = 1 THEN 1 ELSE 0 END)::BIGINT AS n_unique,
@@ -4659,10 +4671,7 @@ object SparkEntry {
       top.withColumn("rk", row_number().over(
         Window.orderBy(col("rank").desc, col("word"))).cast("int"))
     },
-      Some("""WITH toks AS (SELECT doc_id,
-                unnest(string_split_regex(trim(text), '\s+')) AS w0,
-                generate_subscripts(string_split_regex(trim(text), '\s+'), 1) AS pos
-              FROM documents),
+      Some("WITH " + posToksCte("w0") + """,
               cw AS (SELECT doc_id, pos, lower(w0) AS w FROM toks
                      WHERE regexp_matches(lower(w0), '^[a-z]{4,}$')),
               adj AS (SELECT w, lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
@@ -4688,10 +4697,7 @@ object SparkEntry {
       graft.operators.Tokenize.encodeWithVocab(docs, col("doc_id"), col("text"),
         graft.operators.Tokenize.vocabTopN(docs, col("doc_id"), col("text"), v = 50))
     },
-      Some("""WITH toks AS (SELECT doc_id,
-                unnest(string_split_regex(trim(text), '\s+')) AS term,
-                generate_subscripts(string_split_regex(trim(text), '\s+'), 1) AS pos
-              FROM documents),
+      Some("WITH " + posToksCte("term") + """,
               t AS (SELECT * FROM toks WHERE term <> ''),
               cf AS (SELECT term, count(*)::BIGINT AS cf FROM t GROUP BY 1),
               vocab AS (SELECT term,
@@ -4983,10 +4989,7 @@ object SparkEntry {
       // phrase terms before the (doc, pos+i) adjacency joins
       graft.operators.InvertedIndex.phraseSearch(doc(s, d),
         col("doc_id"), col("text"), Seq("join", "table")),
-      Some("""WITH toks AS (SELECT doc_id,
-                unnest(string_split_regex(trim(text), '\s+')) AS term,
-                generate_subscripts(string_split_regex(trim(text), '\s+'), 1) AS pos
-              FROM documents),
+      Some("WITH " + posToksCte("term") + """,
               a AS (SELECT doc_id, pos FROM toks WHERE term = 'join'),
               b AS (SELECT doc_id, pos FROM toks WHERE term = 'table')
               SELECT a.doc_id, count(*)::BIGINT AS n_occurrences
@@ -5161,12 +5164,7 @@ object SparkEntry {
                 len(regexp_extract_all(lower(text), '\b(der|die|das|ist|und|mit|nicht)\b')) AS s_de
               FROM documents),
               p AS (SELECT doc_id, lang,
-                CASE WHEN greatest(s_en, s_es, s_fr, s_de) <= 0 THEN 'und'
-                     WHEN s_en = greatest(s_en, s_es, s_fr, s_de) THEN 'en'
-                     WHEN s_es = greatest(s_en, s_es, s_fr, s_de) THEN 'es'
-                     WHEN s_fr = greatest(s_en, s_es, s_fr, s_de) THEN 'fr'
-                     WHEN s_de = greatest(s_en, s_es, s_fr, s_de) THEN 'de'
-                     ELSE 'und' END AS pred_lang
+                """ + langArgmaxSql + """ AS pred_lang
               FROM sc)
               SELECT doc_id, pred_lang, pred_lang = lang AS agrees FROM p""")),
 
@@ -5642,23 +5640,7 @@ object SparkEntry {
             round(col("n") / col("__t"), 6).as("share"),
             when(col("lang") === col("pred"), 1).otherwise(0).as("is_correct"))
       },
-      Some("""WITH p AS (SELECT lang,
-                CASE WHEN greatest(s_en, s_es, s_fr, s_de) <= 0 THEN 'und'
-                     WHEN s_en = greatest(s_en, s_es, s_fr, s_de) THEN 'en'
-                     WHEN s_es = greatest(s_en, s_es, s_fr, s_de) THEN 'es'
-                     WHEN s_fr = greatest(s_en, s_es, s_fr, s_de) THEN 'fr'
-                     WHEN s_de = greatest(s_en, s_es, s_fr, s_de) THEN 'de'
-                     ELSE 'und' END AS pred
-              FROM (SELECT lang,
-                      len(regexp_extract_all(lower(text),
-                        '\b(the|and|of|is|was|that|with)\b')) AS s_en,
-                      len(regexp_extract_all(lower(text),
-                        '\b(el|la|los|las|es|que|con|para)\b')) AS s_es,
-                      len(regexp_extract_all(lower(text),
-                        '\b(le|la|les|est|que|avec|pour|dans)\b')) AS s_fr,
-                      len(regexp_extract_all(lower(text),
-                        '\b(der|die|das|ist|und|mit|nicht)\b')) AS s_de
-                    FROM documents)),
+      Some("WITH " + langGuessCte("lang", "pred") + """,
               cells AS (SELECT lang, pred, count(*)::BIGINT AS n FROM p GROUP BY 1, 2),
               t AS (SELECT lang, sum(n)::BIGINT AS tt FROM cells GROUP BY 1)
               SELECT cells.lang, pred, n,
@@ -5685,12 +5667,7 @@ object SparkEntry {
                   + least((CASE WHEN n_tok > 0 THEN n_stop / n_tok::DOUBLE ELSE 0 END) * 4.0, 1.0) * 0.4
                   + (1.0 - least((CASE WHEN length(text) > 0 THEN n_punct / length(text)::DOUBLE ELSE 0 END) * 10.0, 1.0)) * 0.2,
                   0.0), 1.0), 6)::DECIMAL(10,6) AS qv,
-                (CASE WHEN greatest(s_en, s_es, s_fr, s_de) <= 0 THEN 'und'
-                      WHEN s_en = greatest(s_en, s_es, s_fr, s_de) THEN 'en'
-                      WHEN s_es = greatest(s_en, s_es, s_fr, s_de) THEN 'es'
-                      WHEN s_fr = greatest(s_en, s_es, s_fr, s_de) THEN 'fr'
-                      WHEN s_de = greatest(s_en, s_es, s_fr, s_de) THEN 'de'
-                      ELSE 'und' END) AS pred
+                (""" + langArgmaxSql + """) AS pred
               FROM (SELECT *,
                       len(regexp_extract_all(lt, '\b(the|and|of|is|was|that|with)\b')) AS s_en,
                       len(regexp_extract_all(lt, '\b(el|la|los|las|es|que|con|para)\b')) AS s_es,
@@ -5830,15 +5807,7 @@ object SparkEntry {
       // the continuation-probability redistribution is what separates it
       // from x_bigram_lm's MLE estimates
       TextFunctions.kneserNeyBigram(doc(s, d), col("doc_id"), col("text")),
-      Some("""WITH toks AS (SELECT doc_id,
-                unnest(string_split_regex(trim(text), '\s+')) AS w,
-                generate_subscripts(string_split_regex(trim(text), '\s+'), 1) AS pos
-              FROM documents),
-              p AS (SELECT doc_id, pos, w,
-                      lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
-                    FROM toks WHERE w <> ''),
-              c AS (SELECT w AS w1, w2, count(*)::BIGINT AS cnt
-                    FROM p WHERE w2 IS NOT NULL GROUP BY 1, 2),
+      Some("WITH " + bigramCountCtes + """,
               fw AS (SELECT w1, sum(cnt)::BIGINT AS c1, count(*)::BIGINT AS n1fw
                      FROM c GROUP BY 1),
               bw AS (SELECT w2, count(*)::BIGINT AS n1bw FROM c GROUP BY 1),
@@ -8152,14 +8121,7 @@ object SparkEntry {
       Dedup.incrementalDedup(newB, corp, col("doc_id"), col("text"),
         n = 3, threshold = 0.1, maxDf = Some(50))
     },
-      Some("""WITH newb AS (SELECT * FROM documents WHERE doc_id % 10 = 0),
-              corp AS (SELECT * FROM documents WHERE doc_id % 10 <> 0),
-              nfp AS (SELECT doc_id,
-                        md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp
-                      FROM newb),
-              cfp AS (SELECT DISTINCT
-                        md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp
-                      FROM corp),
+      Some(batchFingerprintCtes + """,
               ex AS (SELECT doc_id FROM nfp WHERE fp IN (SELECT fp FROM cfp)),
               shn0 AS (SELECT doc_id,
                         unnest(list_distinct([array_to_string(w[i:i+2], ' ')
@@ -8207,14 +8169,7 @@ object SparkEntry {
         docs.filter(pmod(col("doc_id"), lit(10)) =!= 0),
         col("doc_id"), col("text"), mBits = 1 << 18, k = 3)
     },
-      Some("""WITH newb AS (SELECT * FROM documents WHERE doc_id % 10 = 0),
-              corp AS (SELECT * FROM documents WHERE doc_id % 10 <> 0),
-              nfp AS (SELECT doc_id,
-                        md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp
-                      FROM newb),
-              cfp AS (SELECT DISTINCT
-                        md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp
-                      FROM corp),
+      Some(batchFingerprintCtes + """,
               bits AS (SELECT DISTINCT
                          ('0x' || substr(md5(fp || ':' || i::VARCHAR), 1, 8))::BIGINT
                            % 262144 AS pos
@@ -8979,10 +8934,7 @@ object SparkEntry {
       // four-term ln sum on exact integer counts, rounded at 6
       TextFunctions.pmiCollocations(doc(s, d), col("doc_id"), col("text"),
         minCount = 5L, topN = 20),
-      Some("""WITH toks AS (SELECT doc_id,
-                unnest(string_split_regex(trim(text), '\s+')) AS w,
-                generate_subscripts(string_split_regex(trim(text), '\s+'), 1) AS pos
-              FROM documents),
+      Some("WITH " + posToksCte("w") + """,
               pr AS (SELECT doc_id, w AS w1,
                        lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
                      FROM toks WHERE w <> ''),
@@ -9526,11 +9478,7 @@ object SparkEntry {
       // instances — hubs-to-hubs vs hub-and-spoke in one number; all
       // five sums exact DECIMAL from one edge aggregate
       graft.operators.Components.assortativity(
-        li(s, d).filter(pmod(col("l_orderkey"), lit(20)) === 0).as("a")
-          .join(li(s, d).filter(pmod(col("l_orderkey"), lit(20)) === 0).as("b"),
-            col("a.l_orderkey") === col("b.l_orderkey") &&
-              col("a.l_suppkey") < col("b.l_suppkey"))
-          .select(col("a.l_suppkey").as("sa"), col("b.l_suppkey").as("sb")),
+        coSupplyPairs(s, d),
         "sa", "sb"),
       Some("""WITH li AS (SELECT l_orderkey, l_suppkey FROM lineitem
                           WHERE l_orderkey % 20 = 0),
@@ -9565,11 +9513,7 @@ object SparkEntry {
       // C = 3T/W and the Watts-Strogatz average local coefficient;
       // triangles ride the degree-oriented wedge join (m^1.5 bound)
       graft.operators.Components.clusteringCoefficient(
-        li(s, d).filter(pmod(col("l_orderkey"), lit(20)) === 0).as("a")
-          .join(li(s, d).filter(pmod(col("l_orderkey"), lit(20)) === 0).as("b"),
-            col("a.l_orderkey") === col("b.l_orderkey") &&
-              col("a.l_suppkey") < col("b.l_suppkey"))
-          .select(col("a.l_suppkey").as("sa"), col("b.l_suppkey").as("sb")),
+        coSupplyPairs(s, d),
         "sa", "sb"),
       Some("""WITH li AS (SELECT l_orderkey, l_suppkey FROM lineitem
                           WHERE l_orderkey % 20 = 0),
@@ -9844,23 +9788,7 @@ object SparkEntry {
       // first agg
       graft.operators.Stats.cohensKappa(doc(s, d),
         TextFunctions.langId(col("text")), col("lang")),
-      Some("""WITH p AS (SELECT lang AS b,
-                CASE WHEN greatest(s_en, s_es, s_fr, s_de) <= 0 THEN 'und'
-                     WHEN s_en = greatest(s_en, s_es, s_fr, s_de) THEN 'en'
-                     WHEN s_es = greatest(s_en, s_es, s_fr, s_de) THEN 'es'
-                     WHEN s_fr = greatest(s_en, s_es, s_fr, s_de) THEN 'fr'
-                     WHEN s_de = greatest(s_en, s_es, s_fr, s_de) THEN 'de'
-                     ELSE 'und' END AS a
-              FROM (SELECT lang,
-                      len(regexp_extract_all(lower(text),
-                        '\b(the|and|of|is|was|that|with)\b')) AS s_en,
-                      len(regexp_extract_all(lower(text),
-                        '\b(el|la|los|las|es|que|con|para)\b')) AS s_es,
-                      len(regexp_extract_all(lower(text),
-                        '\b(le|la|les|est|que|avec|pour|dans)\b')) AS s_fr,
-                      len(regexp_extract_all(lower(text),
-                        '\b(der|die|das|ist|und|mit|nicht)\b')) AS s_de
-                    FROM documents)),
+      Some("WITH " + langGuessCte("lang AS b", "a") + """,
               cells AS (SELECT a, b, count(*)::BIGINT AS o FROM p GROUP BY 1, 2),
               tot AS (SELECT sum(o)::BIGINT AS n,
                         sum(CASE WHEN a = b THEN o ELSE 0 END)::BIGINT AS diag

@@ -61,7 +61,7 @@ object Calc {
     // contract forbids duplicate split rows) — `__sseq` makes each
     // exploded row addressable by lineage key alone. Callers whose splits
     // are provably unique per proposal on their natural columns (the
-    // `Proposals.splitConfigs*` outputs are: they project a groupBy key)
+    // `Proposals.splitConfigsVersioned` outputs are: they project a groupBy key)
     // pass tagOrdinal=false and key the rank-1 restoration on those
     // columns directly, skipping the row_number sort of the dim frame.
     val sp =
@@ -95,7 +95,7 @@ object Calc {
     * not collapse, run-calculation.sql:194). */
   def explodeParticipants(withVersion: DataFrame, participants: DataFrame): DataFrame = {
     // generators that know the ordinal emit `__pseq` for free (the
-    // `Proposals.hierarchyEntities*` posexplode position); only untagged
+    // `Proposals.hierarchyEntitiesVersioned` posexplode position); only untagged
     // inputs pay the row_number sort here
     val p =
       if (participants.columns.contains("__pseq")) participants
@@ -233,7 +233,7 @@ object Calc {
   def run(in: CalcInputs): DataFrame = {
     val e = enrich(in.premiums, in.certificates)
     val p = resolveProposal(e, in.proposals)
-    // splits from Proposals.splitConfigs* are unique per proposal on
+    // splits from Proposals.splitConfigsVersioned are unique per proposal on
     // (split_seq, split_pct, hierarchy_id) — they project a groupBy key —
     // so those natural columns discriminate the split fan-out and no
     // __sseq tagging sort is needed

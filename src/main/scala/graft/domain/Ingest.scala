@@ -41,13 +41,39 @@ object Ingest {
       case (prefix, table) if fileName.startsWith(prefix) => table
     }
 
+  /** Reason column of a data row whose field count differs from its
+    * header's: "<n> fields, header has <m>", null on rows that match. */
+  val FieldsReason = "reason_fields"
+
   /** All-string CSV scan — the raw layer is deliberately untyped
-    * (`sql/01-raw-tables.sql:4-5`); typing is a separate, testable pass. */
-  def readRawCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read
+    * (`sql/01-raw-tables.sql:4-5`); typing is a separate, testable pass.
+    *
+    * Spark keeps a ragged row (more or fewer fields than the header) with
+    * its fields cut or null-padded to the header's count. So that such a
+    * row cannot pass as clean, a file holding one gains the string column
+    * [[FieldsReason]], which [[typedPass]] carries and [[gate]]
+    * quarantines on; a file without one reads as the header's columns
+    * only. Deciding which costs one scan of the file. (Spark rejects a
+    * scan that reads [[FieldsReason]] and no other column.) */
+  def readRawCsv(spark: SparkSession, path: String): DataFrame = {
+    val reader = spark.read
       .option("header", "true")
       .option("inferSchema", "false") // everything NVARCHAR-equivalent
+    val header = reader.csv(path).schema
+    val line = "__raw_line" // Spark's corrupt-record column: a ragged row's text
+    val nFields = udf((l: String) => splitCsvLine(l).size)
+    // columnPruning off: a query reading a few columns still tokenizes the
+    // whole line, so the field count is checked under any projection
+    val checked = reader.schema(header.add(line, StringType))
+      .option("columnNameOfCorruptRecord", line)
+      .option("columnPruning", "false")
       .csv(path)
+      .withColumn(FieldsReason, when(col(line).isNotNull, concat(
+        nFields(col(line)).cast("string"), lit(s" fields, header has ${header.length}"))))
+      .drop(line)
+    if (checked.filter(col(FieldsReason).isNotNull).head(1).nonEmpty) checked
+    else checked.drop(FieldsReason)
+  }
 
   /** Column spec for the typed pass: (rawName, outName, sqlType). A null
     * sqlType keeps the (trimmed) string. */
@@ -59,12 +85,22 @@ object Ingest {
     raw.select(spec.map { case (rawName, outName, sqlType) =>
       val cleaned = Cleaning.cleanStr(col(rawName))
       (if (sqlType == null) cleaned else cleaned.try_cast(sqlType)).as(outName)
-    }: _*)
+    } ++ raw.columns.filter(_ == FieldsReason).map(col): _*)
 
   /** Conformance gate (S5): rows with null required keys -> quarantine
-    * with per-column reason flags (`sql/02-input-tables.sql:319-348`). */
-  def gate(typed: DataFrame, requiredKeys: Seq[String]): (DataFrame, DataFrame) =
-    Routing.conformanceGate(typed, requiredKeys)
+    * with per-column reason flags (`sql/02-input-tables.sql:319-348`).
+    * A ragged row ([[FieldsReason]] set) is quarantined too, its reason
+    * kept; conformant rows drop the column. */
+  def gate(typed: DataFrame, requiredKeys: Seq[String]): (DataFrame, DataFrame) = {
+    val (ok, bad) = Routing.conformanceGate(typed, requiredKeys)
+    if (!typed.columns.contains(FieldsReason)) (ok, bad)
+    else {
+      // a ragged row whose keys are present: quarantined for its field count
+      val ragged = requiredKeys.foldLeft(ok.filter(col(FieldsReason).isNotNull))(
+        (d, c) => d.withColumn(s"reason_$c", lit(false)))
+      (ok.filter(col(FieldsReason).isNull).drop(FieldsReason), bad.unionByName(ragged))
+    }
+  }
 
   /** Certificate-info spec (`sql/02-input-tables.sql:94-119`). */
   val certificateSpec: CastSpec = Seq(
@@ -238,16 +274,18 @@ object Ingest {
     // load shifted columns, so it is quarantined like a header mismatch
     val (readable, misread) = plan.filter(_.loadable)
       .map(a => a -> readRawCsv(spark, a.path))
-      .partition { case (a, raw) => raw.columns.length == a.nColumns }
+      .partition { case (a, raw) => raw.columns.count(_ != FieldsReason) == a.nColumns }
     val loaded = readable.groupBy(_._1.table.get).map { case (table, reads) =>
-      val df = reads.map { case (a, raw) => raw.toDF(a.headers: _*) }
+      val df = reads.map { case (a, raw) =>
+          raw.toDF(a.headers ++ raw.columns.filter(_ == FieldsReason): _*) }
         .reduce(_ unionByName (_, allowMissingColumns = true))
       table -> (if (preview) df.limit(previewRows) else df)
     }
     import spark.implicits._
     val quarantine = (plan.filterNot(_.loadable).map(a => (a.file, a.table.orNull, a.reason.get)) ++
       misread.map { case (a, raw) =>
-        (a.file, a.table.orNull, s"header read as ${raw.columns.length} fields, not ${a.nColumns}")
+        (a.file, a.table.orNull,
+          s"header read as ${raw.columns.count(_ != FieldsReason)} fields, not ${a.nColumns}")
       }).toDF("file", "table", "reason")
     (loaded, quarantine)
   }

@@ -196,41 +196,27 @@ object Proposals {
       Seq(col("cert_id"), col("split_seq")))
       .select(col("hierarchy_hash"), col("group_id"), col("split_pct"), col("tiers"))
 
-  /** Split configurations per proposal, taken from the representative
-    * (lowest-id) certificate of each (group, config) — legitimate because
-    * the config hash guarantees every member cert carries the same split
-    * structure (`proposal-builder.ts:886-1011`). */
-  def splitConfigs(
-      proposals: DataFrame, routedConfigs: DataFrame, hierHashes: DataFrame): DataFrame = {
-    val rep = Joins.top1PerGroup(
-      routedConfigs.filter(!col("route_pha")),
-      Seq(col("group_id"), col("config_hash")), Seq(col("cert_id")))
-      .select(col("group_id"), col("config_hash"), col("cert_id"))
-    proposals.select(col("proposal_id"), col("group_id"), col("config_hash"))
-      .join(rep, Seq("group_id", "config_hash"))
-      .join(hierHashes.select(col("cert_id"), col("split_seq"), col("split_pct"),
-        col("hierarchy_hash")), Seq("cert_id"))
-      .select(col("proposal_id"), col("split_seq"), col("split_pct"),
-        hierKey(col("hierarchy_hash")).as("hierarchy_id"))
-  }
-
   /** Compact 60-bit join key from the content hash: shuffling/sorting
     * 64-char hex strings is the dominant cost at hundreds of thousands of
     * hierarchies; the full hash remains the content address
     * ([[hashCollisions]] audits content collisions, [[hierKeyCollisions]]
     * audits truncated-prefix collisions). */
   def hierKey(hash: Column): Column =
-    conv(substring(hash, 1, 15), 16, 10).cast("long")
+    conv(substring(hash, 1, 15), 16, 10).cast("long") // conv reads either hex case
 
   /** 60-bit key for the BUSINESS hierarchy slot (group x split position) —
     * the stable identity whose structure evolves over time
     * (`sql/transforms/07-deprecated-hierarchies.sql`). */
   def businessHierKey(group: Column, splitSeq: Column): Column =
-    hierKey(upper(sha2(concat_ws("#", group, splitSeq), 256)))
+    hierKey(sha2(concat_ws("#", group, splitSeq), 256))
 
-  /** [[splitConfigs]] with the business-slot key as hierarchy_id, for the
-    * multi-version flow: the calc's as-of join then resolves the slot's
-    * version active at the transaction date. */
+  /** Split configurations per proposal, taken from the representative
+    * (lowest-id) certificate of each (group, config) — legitimate because
+    * the config hash guarantees every member cert carries the same split
+    * structure (`proposal-builder.ts:886-1011`). The hierarchy_id is the
+    * business-slot key ([[businessHierKey]]), so the calc's as-of join
+    * resolves the slot's version active at the transaction date
+    * ([[hierarchyEntitiesVersioned]]). */
   def splitConfigsVersioned(
       proposals: DataFrame, routedConfigs: DataFrame, hierHashes: DataFrame): DataFrame = {
     val rep = Joins.top1PerGroup(
@@ -267,9 +253,8 @@ object Proposals {
       obs, col("key"), col("observed_at"), col("signature"),
       assumeDistinct = true) // structureSignature groups by (key, observed_at)
     val versions = mat(v.select(
-      hierKey(upper(sha2(col("key"), 256))).as("hierarchy_id"),
-      hierKey(upper(sha2(concat_ws("#", col("key"), col("version_seq")), 256)))
-        .as("version_id"),
+      hierKey(sha2(col("key"), 256)).as("hierarchy_id"),
+      hierKey(sha2(concat_ws("#", col("key"), col("version_seq")), 256)).as("version_id"),
       col("signature"),
       col("eff_from").cast("date").as("eff_from"),
       col("eff_to").cast("date").as("eff_to")))
@@ -288,28 +273,6 @@ object Proposals {
         lit(null).cast("double").as("participant_rate"),
         (col("__pseq") + 1).cast("int").as("__pseq"))
     (versions.drop("signature"), participants)
-  }
-
-  /** Hierarchy versions + participants from the deduped hierarchies —
-    * id `{hash}-V1`, open-ended effectivity (versioning begins at the
-    * epoch; succession appends new versions). */
-  def hierarchyEntities(deduped: DataFrame): (DataFrame, DataFrame) = {
-    val versions = deduped.select(
-      hierKey(col("hierarchy_hash")).as("hierarchy_id"),
-      hierKey(col("hierarchy_hash")).as("version_id"), // V1 per hierarchy
-      col("hierarchy_hash"),
-      to_date(lit("1900-01-01")).as("eff_from"),
-      lit(null).cast("date").as("eff_to"))
-    val participants = deduped
-      .select(col("hierarchy_hash"), posexplode(col("tiers")).as(Seq("__pseq", "t")))
-      .select(
-        hierKey(col("hierarchy_hash")).as("version_id"),
-        col("t.tier_level").as("tier_level"),
-        col("t.broker_id").as("broker_id"),
-        col("t.schedule_code").as("schedule_code"),
-        lit(null).cast("double").as("participant_rate"),
-        (col("__pseq") + 1).cast("int").as("__pseq"))
-    (versions, participants)
   }
 
   /** Hash-collision audit (`proposal-builder.ts:1972-1984`): same hash,

@@ -177,6 +177,19 @@ object TextFunctions {
       .select(col("doc_id"), col("term"), col("tf"), col("tfidf"), col("rnk"))
   }
 
+  /** Adjacent whitespace-token pairs (doc_id, pos, w, w2) of every doc,
+    * empty tokens dropped, adjacency from one `lead` window keyed on the
+    * doc: the bigram stream of [[bigramLm]], [[pmiCollocations]],
+    * [[kneserNeyBigram]] and [[perplexityFilter]]. */
+  private def adjacentPairs(df: DataFrame, id: Column, text: Column): DataFrame =
+    df.select(id.as("doc_id"),
+        posexplode(split(trim(text), "\\s+")).as(Seq("pos", "w")))
+      .filter(col("w") =!= "")
+      .withColumn("w2", lead(col("w"), 1).over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy(col("doc_id")).orderBy(col("pos"))))
+      .filter(col("w2").isNotNull)
+
   /** Corpus bigram language model: count of each ordered token pair and
     * the conditional probability P(w2 | w1) = c(w1,w2) / Σ_w2 c(w1,w2)
     * (the denominator is occurrences of w1 as a predecessor, so rows per
@@ -191,18 +204,11 @@ object TextFunctions {
   def bigramLm(
       df: org.apache.spark.sql.DataFrame, id: Column, text: Column
   ): org.apache.spark.sql.DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-    val toks = df.select(id.as("doc_id"),
-        posexplode(split(trim(text), "\\s+")).as(Seq("pos", "w")))
-      .filter(col("w") =!= "")
-    val pairs = toks
-      .withColumn("w2", lead(col("w"), 1).over(
-        w.partitionBy(col("doc_id")).orderBy(col("pos"))))
-      .filter(col("w2").isNotNull)
-    pairs.groupBy(col("w").as("w1"), col("w2"))
+    adjacentPairs(df, id, text)
+      .groupBy(col("w").as("w1"), col("w2"))
       .agg(count(lit(1)).as("cnt"))
-      .withColumn("p_cond",
-        round(col("cnt") / sum(col("cnt")).over(w.partitionBy(col("w1"))), 6))
+      .withColumn("p_cond", round(col("cnt") / sum(col("cnt")).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("w1"))), 6))
   }
 
   /** Flesch–Kincaid readability (grade level + reading ease) — the
@@ -368,13 +374,7 @@ object TextFunctions {
       df: DataFrame, id: Column, text: Column,
       minCount: Long = 5L, topN: Int = 20): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-    val toks = df.select(id.as("doc_id"),
-        posexplode(split(trim(text), "\\s+")).as(Seq("pos", "w")))
-      .filter(col("w") =!= "")
-    val pairs = toks
-      .withColumn("w2", lead(col("w"), 1).over(
-        w.partitionBy(col("doc_id")).orderBy(col("pos"))))
-      .filter(col("w2").isNotNull)
+    val pairs = adjacentPairs(df, id, text)
       .select(col("w").as("w1"), col("w2"))
     val big = pairs.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c_xy"))
@@ -472,15 +472,7 @@ object TextFunctions {
   def kneserNeyBigram(
       df: DataFrame, id: Column, text: Column,
       discount: Double = 0.75): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-    val toks = df.select(id.as("doc_id"),
-        posexplode(split(trim(text), "\\s+")).as(Seq("pos", "w")))
-      .filter(col("w") =!= "")
-    val pairs = toks
-      .withColumn("w2", lead(col("w"), 1).over(
-        w.partitionBy(col("doc_id")).orderBy(col("pos"))))
-      .filter(col("w2").isNotNull)
-    val c = pairs.groupBy(col("w").as("w1"), col("w2"))
+    val c = adjacentPairs(df, id, text).groupBy(col("w").as("w1"), col("w2"))
       .agg(count(lit(1)).as("cnt"))
     val fw = c.groupBy(col("w1"))
       .agg(sum(col("cnt")).as("c1"), count(lit(1)).as("n1fw"))
@@ -557,16 +549,10 @@ object TextFunctions {
       df: DataFrame, id: Column, text: Column,
       lmDf: DataFrame, lmId: Column, lmText: Column,
       keepBelow: Double): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
     val lm = bigramLm(lmDf, lmId, lmText)
       .select(col("w1"), col("w2"),
         round(-log(col("p_cond")), 9).cast("decimal(12,9)").as("__nll"))
-    val pairs = df.select(id.as("doc_id"),
-        posexplode(split(trim(text), "\\s+")).as(Seq("pos", "w")))
-      .filter(col("w") =!= "")
-      .withColumn("w2", lead(col("w"), 1).over(
-        w.partitionBy(col("doc_id")).orderBy(col("pos"))))
-      .filter(col("w2").isNotNull)
+    val pairs = adjacentPairs(df, id, text)
       .select(col("doc_id"), col("w").as("w1"), col("w2"))
     pairs.join(lm, Seq("w1", "w2"), "inner")
       .groupBy(col("doc_id"))

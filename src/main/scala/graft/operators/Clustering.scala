@@ -9,12 +9,12 @@ import graft.functions.VectorFunctions
   *
   * Lloyd's k-means with cosine assignment, fully deterministic:
   *
-  *  - seed centroids are the lowest-id vector per id-residue class (the
-  *    same RNG-free scheme as `Similarity.ivfCosineTopK`), so every run —
-  *    and every engine replicating the recipe — starts identically;
-  *  - assignment ranks on the ROUNDED similarity with a cell-id tiebreak,
-  *    so float noise at the 7th decimal cannot flip a point's cell across
-  *    engines or fold orders;
+  *  - seed centroids are the lowest-id vector per id-residue class
+  *    ([[seedCentroids]], RNG-free), so every run — and every engine
+  *    replicating the recipe — starts identically;
+  *  - assignment ranks on the ROUNDED similarity with a cell-id tiebreak
+  *    ([[assign]]), so float noise at the 7th decimal cannot flip a
+  *    point's cell across engines or fold orders;
   *  - centroid updates are element-wise means rounded at 6 decimals, so
   *    the next iteration's input is identical on both sides of the oracle.
   *
@@ -24,23 +24,34 @@ import graft.functions.VectorFunctions
   * followed by one shuffle on (cell, pos) for the mean. Nothing collects
   * to the driver; iteration count is a small constant (the caller's
   * convergence budget), so the lineage stays shallow.
+  *
+  * [[seedCentroids]] and [[assign]] are also the engine's one IVF cell
+  * assignment: `Similarity.ivfCosineTopK` and `Similarity.mutualKnnGraph`
+  * and `Dedup.embeddingNearDupPairs` block their candidates on these
+  * cells. (`Similarity.ivfPqTopK`'s coarse quantizer ranks by squared L2
+  * and keeps its own.)
   */
 object Clustering {
 
-  /** Deterministic seeds: lowest-id vector per `id % k` class. */
-  private def seedCentroids(points: DataFrame, k: Int): DataFrame =
+  /** Deterministic seeds: the lowest-`id` row of each `id % k` class, as
+    * (cell, centroid = its `vec`). The engine's one IVF/k-means seeding. */
+  private[operators] def seedCentroids(
+      points: DataFrame, id: String, vec: String, k: Int): DataFrame =
     Joins.top1PerGroup(
-      points.withColumn("cell", pmod(col("__id"), lit(k))),
-      Seq(col("cell")), Seq(col("__id")))
-      .select(col("cell"), col("__v").as("centroid"))
+      points.withColumn("cell", pmod(col(id), lit(k))),
+      Seq(col("cell")), Seq(col(id)))
+      .select(col("cell"), col(vec).as("centroid"))
 
-  /** Nearest-centroid assignment: rounded cosine, cell-asc tiebreak. */
-  private def assign(points: DataFrame, centroids: DataFrame): DataFrame =
+  /** Nearest-centroid cell of every (`id`, `vec`) point: cosine rounded at
+    * 6, ties to the lower cell, so float noise cannot flip a cell across
+    * engines. Returns (id, vec, cell, cos). */
+  private[operators] def assign(
+      points: DataFrame, centroids: DataFrame, id: String, vec: String): DataFrame =
     Joins.top1PerGroup(
       points.crossJoin(broadcast(centroids))
-        .withColumn("cos", round(VectorFunctions.cosineNative(col("__v"), col("centroid")), 6)),
-      Seq(col("__id")), Seq(col("cos").desc, col("cell").asc))
-      .select(col("__id"), col("__v"), col("cell"), col("cos"))
+        .withColumn("cos", round(VectorFunctions.cosineNative(col(vec), col("centroid")), 6)),
+      Seq(col(id)), Seq(col("cos").desc, col("cell").asc))
+      .select(col(id), col(vec), col("cell"), col("cos"))
 
   /** Element-wise mean of each cell's members, rounded at 6 decimals and
     * re-assembled in position order. The explode shuffles on (cell, pos)
@@ -63,10 +74,10 @@ object Clustering {
     require(k > 0 && iters >= 0, "k and iters must be positive")
     val points = df.select(id.cast("long").as("__id"),
       VectorFunctions.toDoubleArray(vec).as("__v"))
-    var centroids = seedCentroids(points, k)
+    var centroids = seedCentroids(points, "__id", "__v", k)
     for (_ <- 1 to iters)
-      centroids = meanCentroids(assign(points, centroids))
-    assign(points, centroids)
+      centroids = meanCentroids(assign(points, centroids, "__id", "__v"))
+    assign(points, centroids, "__id", "__v")
       .select(col("__id").as("point_id"), col("cell").as("cluster"), col("cos"))
   }
 

@@ -14,8 +14,31 @@ import org.apache.spark.sql.functions._
   * propagation). Each half-round is one hash aggregate + one equi join
   * keyed on node id; the per-round driver read is ONE aggregated
   * signature row (convergence check), not data.
+  *
+  * The other undirected-graph operators share one edge preparation:
+  * `canonicalEdges` (u < v, no self-loops, distinct), `bothWays` (each
+  * edge in both directions) and `undirected` (the two, materialized).
+  * [[connectedComponents]] keeps its own: it symmetrizes every round.
   */
 object Components {
+
+  /** The canonical undirected edge set of a pair list: (u, v) long ids
+    * with u < v, self-loops dropped, one row per edge. Every undirected
+    * operator here except [[connectedComponents]] starts from it. */
+  private def canonicalEdges(pairs: DataFrame, a: Column, b: Column): DataFrame =
+    pairs
+      .select(least(a, b).cast("long").as("u"), greatest(a, b).cast("long").as("v"))
+      .filter(col("u") =!= col("v")).distinct()
+
+  /** Both directions (src, dst) of each canonical edge. */
+  private def bothWays(e0: DataFrame): DataFrame =
+    e0.select(col("u").as("src"), col("v").as("dst"))
+      .unionByName(e0.select(col("v").as("src"), col("u").as("dst")))
+
+  /** The materialized two-direction frame of `pairs`' canonical edges:
+    * the per-round input of PPR, k-core, BFS and label propagation. */
+  private def undirected(pairs: DataFrame, a: String, b: String): DataFrame =
+    graft.Mat(bothWays(canonicalEdges(pairs, col(a), col(b))))
 
   /** Simplified PageRank (the original non-normalized formulation:
     * `r' = (1-d) + d * Σ_in r/outdeg`, no dangling-mass redistribution)
@@ -82,13 +105,7 @@ object Components {
     // overriding one without the other would silently leak/inflate mass.
     require(math.abs(damping + restart - 1.0) < 1e-12,
       s"damping + restart must equal 1.0 exactly, got $damping + $restart")
-    val e0 = pairs
-      .select(least(col(a), col(b)).cast("long").as("u"),
-        greatest(col(a), col(b)).cast("long").as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-    val dir = graft.Mat(
-      e0.select(col("u").as("src"), col("v").as("dst"))
-        .unionByName(e0.select(col("v").as("src"), col("u").as("dst"))))
+    val dir = undirected(pairs, a, b)
     val outDeg = dir.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     val nodes = dir.select(col("src").as("node")).distinct()
     val sd = seeds.select(col("node").cast("long").as("node")).distinct()
@@ -283,13 +300,7 @@ object Components {
   def kCore(
       pairs: DataFrame, a: String, b: String,
       k: Int, rounds: Int): DataFrame = {
-    val e0 = pairs
-      .select(least(col(a), col(b)).cast("long").as("u"),
-        greatest(col(a), col(b)).cast("long").as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-    val dir = graft.Mat(
-      e0.select(col("u").as("src"), col("v").as("dst"))
-        .unionByName(e0.select(col("v").as("src"), col("u").as("dst"))))
+    val dir = undirected(pairs, a, b)
     def survivors(alive: DataFrame): DataFrame =
       dir
         .join(alive.select(col("node").as("src")), Seq("src"), "left_semi")
@@ -328,10 +339,7 @@ object Components {
     * it is canonicalized first. Output: (vertex, n_tri) for every vertex
     * in at least one triangle. */
   def triangleCounts(edges: DataFrame, src: Column, dst: Column): DataFrame = {
-    val e0 = edges
-      .select(least(src, dst).cast("long").as("u"),
-        greatest(src, dst).cast("long").as("v"))
-      .filter(col("u") =!= col("v")).distinct()
+    val e0 = canonicalEdges(edges, src, dst)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = e0.select(col("u").as("x")).unionAll(e0.select(col("v").as("x")))
       .groupBy(col("x")).agg(count(lit(1)).as("d"))
@@ -365,10 +373,7 @@ object Components {
     * (n_communities, n_edges, modularity). */
   def modularity(
       pairs: DataFrame, a: String, b: String, labels: DataFrame): DataFrame = {
-    val e0 = pairs
-      .select(least(col(a), col(b)).cast("long").as("u"),
-        greatest(col(a), col(b)).cast("long").as("v"))
-      .filter(col("u") =!= col("v")).distinct()
+    val e0 = canonicalEdges(pairs, col(a), col(b))
     val lab = labels.select(col("node").cast("long").as("node"),
       col("community").cast("long").as("c"))
     // materialized: tagged feeds THREE aggregates (edge total, within-
@@ -411,12 +416,8 @@ object Components {
     * float chain, rounded at 6. A degree-regular graph has zero
     * variance → r is null. Returns 1 row: (n_nodes, n_edges, r). */
   def assortativity(pairs: DataFrame, a: String, b: String): DataFrame = {
-    val e0 = pairs
-      .select(least(col(a), col(b)).cast("long").as("u"),
-        greatest(col(a), col(b)).cast("long").as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-    val dir = e0.select(col("u").as("src"), col("v").as("dst"))
-      .unionByName(e0.select(col("v").as("src"), col("u").as("dst")))
+    val e0 = canonicalEdges(pairs, col(a), col(b))
+    val dir = bothWays(e0)
     val deg = dir.groupBy(col("src").as("x")).agg(count(lit(1)).as("d"))
     def d38(c: Column) = c.cast("decimal(38,0)")
     val j = dir
@@ -453,10 +454,7 @@ object Components {
     * the two global divisions round at 6. Returns 1 row:
     * (n_vertices, n_triangles, n_wedges, global_cc, avg_local_cc). */
   def clusteringCoefficient(pairs: DataFrame, a: String, b: String): DataFrame = {
-    val e0 = pairs
-      .select(least(col(a), col(b)).cast("long").as("u"),
-        greatest(col(a), col(b)).cast("long").as("v"))
-      .filter(col("u") =!= col("v")).distinct()
+    val e0 = canonicalEdges(pairs, col(a), col(b))
     val deg = e0.select(col("u").as("x")).unionAll(e0.select(col("v").as("x")))
       .groupBy(col("x")).agg(count(lit(1)).as("d"))
     val tri = triangleCounts(e0, col("u"), col("v"))
@@ -497,13 +495,7 @@ object Components {
   def bfsLevels(
       pairs: DataFrame, a: String, b: String,
       sources: DataFrame, rounds: Int): DataFrame = {
-    val e0 = pairs
-      .select(least(col(a), col(b)).cast("long").as("u"),
-        greatest(col(a), col(b)).cast("long").as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-    val dir = graft.Mat(
-      e0.select(col("u").as("src"), col("v").as("dst"))
-        .unionByName(e0.select(col("v").as("src"), col("u").as("dst"))))
+    val dir = undirected(pairs, a, b)
     // sources outside the graph still seed with dist 0 (they just have
     // no edges to relax over)
     var dist = graft.Mat(sources.select(col("node").cast("long").as("node"))
@@ -546,13 +538,7 @@ object Components {
     * d_hits lesson). Returns (node, community, community_size). */
   def labelPropagation(
       pairs: DataFrame, a: String, b: String, iters: Int): DataFrame = {
-    val e0 = pairs
-      .select(least(col(a), col(b)).cast("long").as("u"),
-        greatest(col(a), col(b)).cast("long").as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-    val dir = graft.Mat(
-      e0.select(col("u").as("src"), col("v").as("dst"))
-        .unionByName(e0.select(col("v").as("src"), col("u").as("dst"))))
+    val dir = undirected(pairs, a, b)
     var labels = graft.Mat(
       dir.select(col("src").as("node")).distinct()
         .withColumn("lab", col("node")))
@@ -610,13 +596,8 @@ object Components {
     // consumer — the r14 100x profile measured that duplicated pipeline
     // at ~60-165 s per pass (619 MB -> 1.4 GB shuffle, twice) against a
     // 15 MB materialized result. Mat (guide §5) computes it once.
-    val e0 = graft.Mat(pairs
-      .select(least(col(a), col(b)).cast("long").as("u"),
-        greatest(col(a), col(b)).cast("long").as("v"))
-      .filter(col("u") =!= col("v")).distinct())
-    val dir = graft.Mat(
-      e0.select(col("u").as("src"), col("v").as("dst"))
-        .unionByName(e0.select(col("v").as("src"), col("u").as("dst"))))
+    val e0 = graft.Mat(canonicalEdges(pairs, col(a), col(b)))
+    val dir = graft.Mat(bothWays(e0))
     val deg = dir.groupBy(col("src").as("x")).agg(count(lit(1)).as("d"))
     val centers = dir
       .join(deg.select(col("x").as("src"), col("d").as("dz")), Seq("src"))

@@ -15,6 +15,12 @@ import graft.functions.TextFunctions
   *    SimHash band), so the only shuffles are hash-joins on those keys;
   *  - all hashing is content-derived (md5-based), so results are
   *    deterministic across executors and runs.
+  *
+  * Shared pieces: [[ngramJaccardPairs]] and [[containmentPairs]] count
+  * shared shingles through one df-capped core (`sharedShingleCounts`);
+  * [[segmentDedup]] and [[indocDedup]] cut documents with one
+  * `wordSegments`; [[embeddingNearDupPairs]] blocks on the engine's IVF
+  * cells ([[Clustering.seedCentroids]] + [[Clustering.assign]]).
   */
 object Dedup {
 
@@ -43,23 +49,13 @@ object Dedup {
       .withColumn("is_duplicate", col("dup_rank") > 1)
   }
 
-  /** Candidate pairs by shared shingle + exact n-gram Jaccard.
-    *
-    * jaccard(A,B) = |A∩B| / (|A|+|B|-|A∩B|), computed by exploding each
-    * doc's distinct shingles, self-joining on the shingle (the blocking
-    * key), counting common shingles per pair, and joining back the set
-    * sizes. Returns pairs with id_a < id_b and jaccard >= threshold.
-    */
-  /** `maxDf`: drop blocking shingles present in more than `maxDf` docs
-    * before the self-join. A stop-shingle ("of the and") is a hot key
-    * whose candidate set grows quadratically — at corpus scale it is the
-    * skew-killer. Sizes and Jaccard are computed over the capped shingle
-    * universe, so the semantics stay well-defined (df-capped Jaccard,
-    * the standard stop-shingle removal) and an oracle applying the same
-    * cap stays bit-identical. */
-  def ngramJaccardPairs(
-      df: DataFrame, id: Column, text: Column,
-      n: Int, threshold: Double, maxDf: Option[Int] = None): DataFrame = {
+  /** The shared-shingle core of [[ngramJaccardPairs]] and
+    * [[containmentPairs]]: every doc pair (id_a < id_b) sharing a word
+    * `n`-gram shingle, with its common-shingle count and both set sizes
+    * (id_a, id_b, n_common, n_a, n_b). `maxDf` drops shingles present in
+    * more than `maxDf` docs first; sizes count the capped universe. */
+  private def sharedShingleCounts(
+      df: DataFrame, id: Column, text: Column, n: Int, maxDf: Option[Int]): DataFrame = {
     // The exploded shingle table feeds three branches (both self-join
     // sides + the per-doc sizes); persist it so shingle generation runs
     // once, not four times.
@@ -78,20 +74,38 @@ object Dedup {
       case None => raw
     }
     val sizes = exploded.groupBy(col("doc_id")).agg(count(lit(1)).cast("int").as("n_sh"))
-    val common = exploded.as("a")
+    exploded.as("a")
       .join(exploded.as("b"),
         col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .agg(count(lit(1)).as("n_common"))
-    common
       .join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
       .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
+  }
+
+  /** Candidate pairs by shared shingle + exact n-gram Jaccard.
+    *
+    * jaccard(A,B) = |A∩B| / (|A|+|B|-|A∩B|), computed by exploding each
+    * doc's distinct shingles, self-joining on the shingle (the blocking
+    * key), counting common shingles per pair, and joining back the set
+    * sizes. Returns pairs with id_a < id_b and jaccard >= threshold.
+    */
+  /** `maxDf`: drop blocking shingles present in more than `maxDf` docs
+    * before the self-join. A stop-shingle ("of the and") is a hot key
+    * whose candidate set grows quadratically — at corpus scale it is the
+    * skew-killer. Sizes and Jaccard are computed over the capped shingle
+    * universe, so the semantics stay well-defined (df-capped Jaccard,
+    * the standard stop-shingle removal) and an oracle applying the same
+    * cap stays bit-identical. */
+  def ngramJaccardPairs(
+      df: DataFrame, id: Column, text: Column,
+      n: Int, threshold: Double, maxDf: Option[Int] = None): DataFrame =
+    sharedShingleCounts(df, id, text, n, maxDf)
       .withColumn("jaccard",
         round(col("n_common").cast("double") /
           (col("n_a") + col("n_b") - col("n_common")), 6))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-  }
 
   /** Prefix-filtered exact Jaccard pairs (PPJoin-style, Xiao et al.,
     * WWW'08 — public algorithm): candidates come from shared tokens in
@@ -171,24 +185,7 @@ object Dedup {
   def containmentPairs(
       df: DataFrame, id: Column, text: Column,
       n: Int, threshold: Double, maxDf: Option[Int] = None): DataFrame = {
-    val raw = explodedWordShingles(df, id, text, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val exploded = maxDf match {
-      case Some(cap) =>
-        val hot = raw.groupBy(col("sh")).agg(count(lit(1)).as("__df"))
-          .filter(col("__df") > cap).select(col("sh"))
-        raw.join(hot, Seq("sh"), "left_anti")
-      case None => raw
-    }
-    val sizes = exploded.groupBy(col("doc_id")).agg(count(lit(1)).cast("int").as("n_sh"))
-    val common = exploded.as("a")
-      .join(exploded.as("b"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("n_common"))
-    val withSizes = common
-      .join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-      .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
+    val withSizes = sharedShingleCounts(df, id, text, n, maxDf)
     // one row per direction that clears the bar: contained -> container
     val aInB = withSizes
       .withColumn("containment", round(col("n_common").cast("double") / col("n_a"), 6))
@@ -252,8 +249,9 @@ object Dedup {
 
   /** Embedding-cosine near-duplicate pairs, IVF-cell blocked — the default
     * and the 100 TB shape: assign every vector to its nearest of `nlist`
-    * deterministic centroids (lowest-id vector per id-residue class, no
-    * RNG), then compute exact cosine only within cells. The only large
+    * deterministic centroids ([[Clustering.seedCentroids]]: lowest-id
+    * vector per id-residue class, no RNG), then compute exact cosine only
+    * within cells. The only large
     * shuffle is the equi self-join on cell id — never all-pairs. Pairs
     * split across cells are missed (recall < 1, like any single-probe
     * blocking); [[embeddingNearDupPairsExact]] is the quadratic baseline
@@ -264,16 +262,10 @@ object Dedup {
     val cos = graft.functions.VectorFunctions.cosineNative _
     val e = df.select(id.cast("long").as("vid"),
       graft.functions.VectorFunctions.toDoubleArray(vec).as("v"))
-    val centroids = broadcast(Joins.top1PerGroup(
-      e.withColumn("cell", pmod(col("vid"), lit(nlist))),
-      Seq(col("cell")), Seq(col("vid")))
-      .select(col("cell"), col("v").as("centroid")))
-    // rounded similarity + cell tiebreak: assignment is deterministic and
-    // engine-replicable (float ties cannot flip cells across runs/engines)
-    val assigned = Joins.top1PerGroup(
-      e.crossJoin(centroids)
-        .withColumn("cdist", round(cos(col("v"), col("centroid")), 6)),
-      Seq(col("vid")), Seq(col("cdist").desc, col("cell").asc))
+    // Clustering's cells: rounded similarity + cell tiebreak, so the
+    // assignment is deterministic and engine-replicable
+    val assigned = Clustering
+      .assign(e, Clustering.seedCentroids(e, "vid", "v", nlist), "vid", "v")
       .select(col("cell"), col("vid"), col("v"))
     assigned.as("a")
       .join(assigned.as("b"),
@@ -472,6 +464,20 @@ object Dedup {
           s => s.getField("chunk")), " ").as("dedup_text"))
   }
 
+  /** Fixed non-overlapping `segmentWords`-token windows of each doc as
+    * (doc_id, idx, seg) rows: the segmentation of [[segmentDedup]] and
+    * [[indocDedup]]. */
+  private def wordSegments(
+      df: DataFrame, id: Column, text: Column, segmentWords: Int): DataFrame = {
+    require(segmentWords > 0, "segmentWords must be positive")
+    df.select(id.cast("long").as("doc_id"), split(trim(text), "\\s+").as("toks"))
+      .select(col("doc_id"),
+        posexplode(transform(
+          sequence(lit(0), floor((size(col("toks")) - 1) / lit(segmentWords)).cast("int")),
+          i => concat_ws(" ", slice(col("toks"), i * segmentWords + 1, lit(segmentWords)))))
+          .as(Seq("idx", "seg")))
+  }
+
   /** Corpus-frequency segment suppression (the CCNet/RefinedWeb
     * paragraph-dedup shape, e.g. Wenzek et al. 2019 §4.1): hash every
     * segment of every document, count each hash's corpus-wide occurrence
@@ -502,17 +508,8 @@ object Dedup {
     * Returns (doc_id, n_segments, n_removed, removed_ratio, kept_text). */
   def segmentDedup(
       df: DataFrame, id: Column, text: Column,
-      segmentWords: Int, maxDf: Int): DataFrame = {
-    require(segmentWords > 0, "segmentWords must be positive")
-    val toks = df.select(id.cast("long").as("doc_id"),
-      split(trim(text), "\\s+").as("toks"))
-    val segs = toks.select(col("doc_id"),
-      posexplode(transform(
-        sequence(lit(0), floor((size(col("toks")) - 1) / lit(segmentWords)).cast("int")),
-        i => concat_ws(" ", slice(col("toks"), i * segmentWords + 1, lit(segmentWords)))))
-        .as(Seq("idx", "seg")))
-    segmentDedupFrom(segs, maxDf)
-  }
+      segmentWords: Int, maxDf: Int): DataFrame =
+    segmentDedupFrom(wordSegments(df, id, text, segmentWords), maxDf)
 
   /** Core of [[segmentDedup]] over pre-segmented rows
     * (doc_id, idx, seg): drop every occurrence of segments whose total
@@ -563,17 +560,8 @@ object Dedup {
     *
     * Returns (doc_id, n_segments, n_removed, removed_ratio, dedup_text). */
   def indocDedup(
-      df: DataFrame, id: Column, text: Column, segmentWords: Int): DataFrame = {
-    require(segmentWords > 0, "segmentWords must be positive")
-    val toks = df.select(id.cast("long").as("doc_id"),
-      split(trim(text), "\\s+").as("toks"))
-    val segs = toks.select(col("doc_id"),
-      posexplode(transform(
-        sequence(lit(0), floor((size(col("toks")) - 1) / lit(segmentWords)).cast("int")),
-        i => concat_ws(" ", slice(col("toks"), i * segmentWords + 1, lit(segmentWords)))))
-        .as(Seq("idx", "seg")))
-    indocDedupFrom(segs)
-  }
+      df: DataFrame, id: Column, text: Column, segmentWords: Int): DataFrame =
+    indocDedupFrom(wordSegments(df, id, text, segmentWords))
 
   /** Core of [[indocDedup]] over pre-segmented (doc_id, idx, seg) rows:
     * keep each distinct segment's first in-doc occurrence, reassemble in

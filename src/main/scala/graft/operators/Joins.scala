@@ -62,19 +62,25 @@ object Joins {
     */
   def nearestMatchJoin(
       fact: DataFrame, dim: DataFrame, equi: Column,
-      factIdCols: Seq[Column], distance: Column, tiebreak: Seq[Column]): DataFrame = {
-    val joined = fact.join(dim, equi, "inner")
-    val w = Window.partitionBy(factIdCols: _*).orderBy(abs(distance) +: tiebreak: _*)
-    joined.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-  }
+      factIdCols: Seq[Column], distance: Column, tiebreak: Seq[Column]): DataFrame =
+    top1PerGroup(fact.join(dim, equi, "inner"), factIdCols, abs(distance) +: tiebreak)
+
+  /** Per-group top-k: number each `part` group's rows by `order` into the
+    * int column `rank` and keep the first `k` (up to
+    * `spark.sql.optimizer.windowGroupLimitThreshold`, Spark pushes the cut
+    * below the window as a WindowGroupLimit). An empty `part` ranks the
+    * whole frame. The caller keeps, renames or drops `rank`; a total
+    * `order` makes the cut deterministic. */
+  def topKPerGroup(df: DataFrame, part: Seq[Column], order: Seq[Column], k: Int,
+      rank: String = "__rn"): DataFrame =
+    df.withColumn(rank, row_number().over(Window.partitionBy(part: _*).orderBy(order: _*)))
+      .filter(col(rank) <= k)
 
   /** Top-1-per-group (J10/W2 — every decorrelated `TOP 1` subquery and
     * `ROW_NUMBER ... rn=1` in the reference, e.g.
-    * `sql/transforms/09-policies.sql:188-205`). */
-  def top1PerGroup(df: DataFrame, part: Seq[Column], order: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(part: _*).orderBy(order: _*)
-    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-  }
+    * `sql/transforms/09-policies.sql:188-205`): [[topKPerGroup]] at k = 1. */
+  def top1PerGroup(df: DataFrame, part: Seq[Column], order: Seq[Column]): DataFrame =
+    topKPerGroup(df, part, order, 1).drop("__rn")
 
   /** Bloom-prefiltered semi join: build a bloom filter over the key side's
     * join column (a distributed aggregate; the filter itself is MBs even
@@ -151,10 +157,8 @@ object Joins {
     }.reduce(_ && _)
     val joined = tagged.join(broadcast(allTiers.alias("__r")), cond, "left")
     // first (lowest-tier) hit per fact row wins
-    val w = Window.partitionBy(col("__rh"), col("__ro"))
-      .orderBy(col("__tier").asc_nulls_last)
-    joined.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-      .drop("__rn", "__tier", "__rh", "__ro")
+    top1PerGroup(joined, Seq(col("__rh"), col("__ro")), Seq(col("__tier").asc_nulls_last))
+      .drop("__tier", "__rh", "__ro")
   }
 
   /** Blocked record linkage (Fellegi–Sunter-shaped): candidate pairs come

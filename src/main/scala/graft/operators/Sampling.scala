@@ -53,12 +53,8 @@ object Sampling {
     * group key. */
   def groupSample(
       df: DataFrame, group: Seq[Column], id: Column, k: Int,
-      salt: String = "", buckets: Int = DefaultBuckets): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(group: _*)
-      .orderBy(sampleBucket(id, salt, buckets), id)
-    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k).drop("__rn")
-  }
+      salt: String = "", buckets: Int = DefaultBuckets): DataFrame =
+    Joins.topKPerGroup(df, group, Seq(sampleBucket(id, salt, buckets), id), k).drop("__rn")
 
   /** Per-row weighted deterministic sample: keep each row with probability
     * `min(1, max(0, weight))` — e.g. quality-weighted corpus downsampling

@@ -11,8 +11,23 @@ import graft.functions.VectorFunctions
   * is a broadcast-join when the query set is small — the common "probe"
   * shape); the LSH path buckets the corpus once (narrow, no shuffle) and
   * then only joins within buckets, which is the 100 TB-viable shape.
+  *
+  * Building blocks, each defined once: IVF cells are
+  * [[Clustering.seedCentroids]] + [[Clustering.assign]] (also k-means'
+  * and `Dedup.embeddingNearDupPairs`' cells); every per-query or per-node
+  * top-k cut is [[Joins.topKPerGroup]] (`rankNeighbors` for the
+  * (query_id, neighbor_id, cos, rank) shape); [[pqAdcTopK]] and
+  * [[ivfPqTopK]] share one PQ trainer (`subspaces` + `pqCodebook`).
   */
 object Similarity {
+
+  /** Each query's k best neighbors by rounded cosine, id tiebreak: the
+    * (query_id, neighbor_id, cos, rank) shape every cosine ANN operator
+    * here emits. */
+  private def rankNeighbors(scored: DataFrame, k: Int): DataFrame =
+    Joins.topKPerGroup(scored, Seq(col("query_id")),
+      Seq(col("cos").desc, col("neighbor_id").asc), k, "rank")
+      .select("query_id", "neighbor_id", "cos", "rank")
 
   /** Exact cosine top-k: for each query vector, the k nearest corpus
     * vectors by cosine similarity. Query set should be small enough to
@@ -29,17 +44,15 @@ object Similarity {
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cos", round(VectorFunctions.cosineNative(col("qv"), col("cv")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
+    rankNeighbors(scored, k)
   }
 
   /** IVF (inverted-file) ANN: partition the corpus into `nlist` cells
-    * around deterministic seed centroids (lowest-id vector per id-residue
-    * class — no RNG, reproducible across runs), then answer queries by
-    * probing the `nprobe` nearest cells with exact rerank inside.
+    * around deterministic seed centroids ([[Clustering.seedCentroids]]:
+    * lowest-id vector per id-residue class — no RNG, reproducible across
+    * runs; [[Clustering.assign]]: nearest by rounded cosine, lower cell on
+    * ties), then answer queries by probing the `nprobe` nearest cells with
+    * exact rerank inside.
     *
     * Scale shape: centroids are broadcast (nlist is small); corpus
     * assignment is one narrow pass; the probe join shuffles only on
@@ -51,34 +64,20 @@ object Similarity {
       k: Int, nlist: Int = 16, nprobe: Int = 4): DataFrame = {
     val c = corpus.select(col(cId).as("neighbor_id"),
       VectorFunctions.toDoubleArray(col(cVec)).as("cv"))
-    val centroids = broadcast(
-      Joins.top1PerGroup(
-        c.withColumn("cell", pmod(col("neighbor_id"), lit(nlist))),
-        Seq(col("cell")), Seq(col("neighbor_id")))
-        .select(col("cell"), col("cv").as("centroid")))
-    // rounded similarity + cell tiebreak: cell assignment is deterministic
-    // and engine-replicable (float ties cannot flip cells across engines)
-    val assigned = Joins.top1PerGroup(
-      c.crossJoin(centroids)
-        .withColumn("cdist", round(VectorFunctions.cosineNative(col("cv"), col("centroid")), 6)),
-      Seq(col("neighbor_id")), Seq(col("cdist").desc, col("cell").asc))
+    val centroids = broadcast(Clustering.seedCentroids(c, "neighbor_id", "cv", nlist))
+    val assigned = Clustering.assign(c, centroids, "neighbor_id", "cv")
       .select(col("neighbor_id"), col("cv"), col("cell"))
     val q = queries.select(col(qId).as("query_id"),
       VectorFunctions.toDoubleArray(col(qVec)).as("qv"))
-    val probes = q.crossJoin(centroids)
-      .withColumn("cdist", round(VectorFunctions.cosineNative(col("qv"), col("centroid")), 6))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cdist").desc, col("cell").asc)))
-      .filter(col("__rn") <= nprobe)
+    // a query probes its nprobe nearest cells, ranked like the assignment
+    val probes = Joins.topKPerGroup(q.crossJoin(centroids)
+        .withColumn("cdist", round(VectorFunctions.cosineNative(col("qv"), col("centroid")), 6)),
+      Seq(col("query_id")), Seq(col("cdist").desc, col("cell").asc), nprobe)
       .select(col("query_id"), col("qv"), col("cell"))
     val scored = assigned.join(broadcast(probes), Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cos", round(VectorFunctions.cosineNative(col("qv"), col("cv")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
+    rankNeighbors(scored, k)
   }
 
   /** Multi-probe LSH ANN: like [[lshCosineTopK]], but each query also
@@ -105,11 +104,7 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"),
         round(VectorFunctions.cosineNative(col("qv"), col("cv")), 6).as("cos"))
       .distinct() // a pair can match via several probes; score is identical
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
+    rankNeighbors(scored, k)
   }
 
   /** LSH-bucketed ANN: random-hyperplane buckets, exact rerank within the
@@ -128,11 +123,7 @@ object Similarity {
     val scored = c.join(broadcast(q), Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cos", round(VectorFunctions.cosineNative(col("qv"), col("cv")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
+    rankNeighbors(scored, k)
   }
 
   /** Late-interaction retrieval (MaxSim, ColBERT-style — Khattab &
@@ -162,10 +153,8 @@ object Similarity {
         .cast("decimal(10,6)").as("__mx"))
     val scored = perTok.groupBy(col("query_doc"), col("doc_id"))
       .agg(sum(col("__mx")).as("__score"))
-    val w = Window.partitionBy(col("query_doc"))
-      .orderBy(col("__score").desc, col("doc_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Joins.topKPerGroup(scored, Seq(col("query_doc")),
+        Seq(col("__score").desc, col("doc_id").asc), k, "rank")
       .select(col("query_doc"), col("doc_id"),
         col("__score").cast("double").as("maxsim"), col("rank"))
   }
@@ -183,13 +172,10 @@ object Similarity {
       VectorFunctions.toDoubleArray(col(aVec)).as("qv"))
     val c = corpus.select(col(cId).as("neg_id"), cLabel.as("neg_label"),
       VectorFunctions.toDoubleArray(col(cVec)).as("cv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neg_id").asc)
-    c.crossJoin(broadcast(q))
-      .filter(col("__ql") =!= col("neg_label") && col("query_id") =!= col("neg_id"))
-      .withColumn("cos", round(VectorFunctions.cosineNative(col("qv"), col("cv")), 6))
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
+    Joins.topKPerGroup(c.crossJoin(broadcast(q))
+        .filter(col("__ql") =!= col("neg_label") && col("query_id") =!= col("neg_id"))
+        .withColumn("cos", round(VectorFunctions.cosineNative(col("qv"), col("cv")), 6)),
+      Seq(col("query_id")), Seq(col("cos").desc, col("neg_id").asc), k, "rank")
       .select(col("query_id"), col("rank"), col("neg_id"), col("neg_label"), col("cos"))
   }
 
@@ -199,21 +185,55 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0.0), (acc, x) => acc + x)
 
-  /** Product-quantization ANN (Jégou et al. 2011): split every vector
-    * into `m` subvectors, train a deterministic per-subspace codebook
-    * (lowest-id seeds per id-residue class + one Lloyd step, euclidean,
-    * distances and means rounded at 6 with cell-id tiebreaks — any engine
-    * replays the exact trajectory), encode the corpus to m small codes,
-    * and answer a query by ADC: per-subspace distance table (m x ksub
-    * rows, broadcast) + one grouped sum over the code columns.
-    *
-    * Scale shape: ALL m subspaces train in one grouped-aggregate chain
-    * keyed by (subspace, cell) — no per-subspace loop; the corpus is
-    * touched in narrow passes only (explode to subvectors, assign against
-    * a broadcast codebook, hash-agg the ADC sum); the final top-k is
-    * TakeOrdered, never a global sort. At 100 TB the codes table is
-    * ~m bytes/vector — the point of PQ: the reranking working set drops
-    * two orders of magnitude below the raw embeddings. */
+  /** The k rows of smallest `adc_dist` (vid tiebreak) as
+    * (neighbor_id, adc_dist, rank): TakeOrdered, never a global sort, then
+    * a rank window over the k survivors. The tail of the quantized
+    * operators ([[pqAdcTopK]], [[ivfPqTopK]], [[sq8TopK]]). */
+  private def nearestByDist(scored: DataFrame, k: Int): DataFrame =
+    scored.orderBy(col("adc_dist").asc, col("vid").asc).limit(k)
+      .withColumn("rank", row_number().over(
+        Window.orderBy(col("adc_dist").asc, col("vid").asc)).cast("int"))
+      .select(col("vid").as("neighbor_id"), col("adc_dist"), col("rank"))
+
+  /** PQ subspace split: `v` cut into `m` equal slices, exploded to
+    * (j = subspace, `sub` = subvector) rows. */
+  private def subspaces(v: Column, m: Int, sub: String): Column = {
+    val subLen = (size(v) / lit(m)).cast("int")
+    posexplode(transform(sequence(lit(0), lit(m - 1)),
+      j => slice(v, j * subLen + 1, subLen))).as(Seq("j", sub))
+  }
+
+  /** The PQ trainer shared by [[pqAdcTopK]] and [[ivfPqTopK]] over
+    * (vid, j, s) subvector rows: per subspace, `ksub` seeds (lowest vid
+    * per `vid % ksub` class), nearest-seed assignment (squared L2 rounded
+    * at 6, ties to the lower cell) and one Lloyd step. Returns the
+    * codebook (j, cell, cen) and every subvector assigned to its codeword
+    * (the input columns plus cell, cen, d). */
+  private def pqCodebook(subs: DataFrame, ksub: Int): (DataFrame, DataFrame) = {
+    val seeds = Joins.top1PerGroup(
+      subs.withColumn("cell", pmod(col("vid"), lit(ksub))),
+      Seq(col("j"), col("cell")), Seq(col("vid").asc))
+      .select(col("j"), col("cell"), col("s").as("cen"))
+    def assign(cb: DataFrame): DataFrame =
+      Joins.top1PerGroup(
+        subs.join(broadcast(cb), Seq("j"))
+          .withColumn("d", round(sqDist(col("s"), col("cen")), 6)),
+        Seq(col("vid"), col("j")), Seq(col("d").asc, col("cell").asc))
+    // one Lloyd step on the seed assignment -> the codebook
+    val cb = assign(seeds)
+      .select(col("j"), col("cell"), posexplode(col("s")).as(Seq("pos", "x")))
+      .groupBy(col("j"), col("cell"), col("pos"))
+      // decimal-exact sum then ONE double division: avg over doubles is
+      // partial-sum-order-dependent, and an ulp shift at a .5e-6 rounding
+      // boundary would fork the codebook trajectory between engines
+      .agg(round(sum(col("x").cast("decimal(27,6)")).cast("double")
+        / count(lit(1)), 6).as("mc"))
+      .groupBy(col("j"), col("cell"))
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("mc")))),
+        p => p.getField("mc")).as("cen"))
+    (cb, assign(cb))
+  }
+
   /** IVF-PQ (the FAISS IVFADC architecture, Jégou et al. 2011 §IV): a
     * coarse inverted file restricts the search to `nprobe` cells, and a
     * product quantizer over RESIDUALS (vector minus its coarse centroid)
@@ -250,49 +270,22 @@ object Similarity {
     // residuals (rounded so the trajectory replays in any engine)
     val resid = casg.select(col("vid"), col("cell").as("ccell"),
       zip_with(col("v"), col("cen"), (x, c) => round(x - c, 6)).as("r"))
-    val subLen = (size(col("r")) / lit(m)).cast("int")
-    val subs = resid.select(col("vid"), col("ccell"),
-      posexplode(transform(sequence(lit(0), lit(m - 1)),
-        j => slice(col("r"), j * subLen + 1, subLen))).as(Seq("j", "s")))
-    val seeds = Joins.top1PerGroup(
-      subs.withColumn("cell", pmod(col("vid"), lit(ksub))),
-      Seq(col("j"), col("cell")), Seq(col("vid").asc))
-      .select(col("j"), col("cell"), col("s").as("pcen"))
-    def assign(cb: DataFrame): DataFrame =
-      Joins.top1PerGroup(
-        subs.join(broadcast(cb), Seq("j"))
-          .withColumn("d", round(sqDist(col("s"), col("pcen")), 6)),
-        Seq(col("vid"), col("j")), Seq(col("d").asc, col("cell").asc))
-    // one Lloyd step over residual subvectors -> the PQ codebook
-    val cb = assign(seeds)
-      .select(col("j"), col("cell"), posexplode(col("s")).as(Seq("pos", "x")))
-      .groupBy(col("j"), col("cell"), col("pos"))
-      // decimal-exact sum then ONE double division: avg over doubles is
-      // partial-sum-order-dependent, and an ulp shift at a .5e-6 rounding
-      // boundary would fork the codebook trajectory between engines
-      .agg(round(sum(col("x").cast("decimal(27,6)")).cast("double")
-        / count(lit(1)), 6).as("mc"))
-      .groupBy(col("j"), col("cell"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("mc")))),
-        p => p.getField("mc")).as("pcen"))
-    val codes = assign(cb).select(col("vid"), col("ccell"), col("j"), col("cell"))
+    // the PQ codebook is trained over residual subvectors
+    val (cb, coded) = pqCodebook(
+      resid.select(col("vid"), col("ccell"), subspaces(col("r"), m, "s")), ksub)
+    val codes = coded.select(col("vid"), col("ccell"), col("j"), col("cell"))
     // query: probe the nprobe nearest coarse cells, residualize per probe
     val qv = e.filter(col("vid") === queryId)
-    val probes = qv.crossJoin(broadcast(coarse))
-      .withColumn("cd", round(sqDist(col("v"), col("cen")), 6))
-      .withColumn("rn", row_number().over(
-        Window.orderBy(col("cd").asc, col("cell").asc)))
-      .filter(col("rn") <= nprobe)
+    val probes = Joins.topKPerGroup(qv.crossJoin(broadcast(coarse))
+        .withColumn("cd", round(sqDist(col("v"), col("cen")), 6)),
+      Nil, Seq(col("cd").asc, col("cell").asc), nprobe)
       .select(col("cell").as("pcell"),
         zip_with(col("v"), col("cen"), (x, c) => round(x - c, 6)).as("qr"))
-    val qsubLen = (size(col("qr")) / lit(m)).cast("int")
-    val qsubs = probes.select(col("pcell"),
-      posexplode(transform(sequence(lit(0), lit(m - 1)),
-        j => slice(col("qr"), j * qsubLen + 1, qsubLen))).as(Seq("j", "qs")))
+    val qsubs = probes.select(col("pcell"), subspaces(col("qr"), m, "qs"))
     // per-probe ADC table: nprobe x m x ksub rows — always broadcastable
     val dt = broadcast(cb.join(qsubs, Seq("j"))
       .select(col("pcell"), col("j"), col("cell"),
-        round(sqDist(col("qs"), col("pcen")), 6).as("qd")))
+        round(sqDist(col("qs"), col("cen")), 6).as("qd")))
     // DECIMAL-exact ADC sum: qd values are 6-decimal, so the decimal sum
     // is exact and addition-order-independent (a double sum can flip the
     // 6th decimal at rounding boundaries between engines)
@@ -301,44 +294,33 @@ object Similarity {
         codes("j") === dt("j") && codes("cell") === dt("cell"))
       .groupBy(col("vid"))
       .agg(sum(col("qd").cast("decimal(18,6)")).cast("double").as("adc_dist"))
-      .orderBy(col("adc_dist").asc, col("vid").asc).limit(k) // TakeOrdered
-    scored.withColumn("rank", row_number().over(
-        Window.orderBy(col("adc_dist").asc, col("vid").asc)).cast("int"))
-      .select(col("vid").as("neighbor_id"), col("adc_dist"), col("rank"))
+    nearestByDist(scored, k)
   }
 
+  /** Product-quantization ANN (Jégou et al. 2011): split every vector
+    * into `m` subvectors, train a deterministic per-subspace codebook
+    * (lowest-id seeds per id-residue class + one Lloyd step, euclidean,
+    * distances and means rounded at 6 with cell-id tiebreaks — any engine
+    * replays the exact trajectory), encode the corpus to m small codes,
+    * and answer a query by ADC: per-subspace distance table (m x ksub
+    * rows, broadcast) + one grouped sum over the code columns.
+    *
+    * Scale shape: ALL m subspaces train in one grouped-aggregate chain
+    * keyed by (subspace, cell) — no per-subspace loop; the corpus is
+    * touched in narrow passes only (explode to subvectors, assign against
+    * a broadcast codebook, hash-agg the ADC sum); the final top-k is
+    * TakeOrdered, never a global sort. At 100 TB the codes table is
+    * ~m bytes/vector — the point of PQ: the reranking working set drops
+    * two orders of magnitude below the raw embeddings. */
   def pqAdcTopK(
       corpus: DataFrame, cId: String, cVec: String,
       queryId: Long, m: Int, ksub: Int, k: Int): DataFrame = {
     require(m > 0 && ksub > 0 && k > 0, "m, ksub, k must be positive")
     val e = corpus.select(col(cId).cast("long").as("vid"),
       VectorFunctions.toDoubleArray(col(cVec)).as("v"))
-    val subLen = (size(col("v")) / lit(m)).cast("int")
-    val subs = e.select(col("vid"),
-      posexplode(transform(sequence(lit(0), lit(m - 1)),
-        j => slice(col("v"), j * subLen + 1, subLen))).as(Seq("j", "s")))
-    val seeds = Joins.top1PerGroup(
-      subs.withColumn("cell", pmod(col("vid"), lit(ksub))),
-      Seq(col("j"), col("cell")), Seq(col("vid").asc))
-      .select(col("j"), col("cell"), col("s").as("cen"))
-    def assign(cb: DataFrame): DataFrame =
-      Joins.top1PerGroup(
-        subs.join(broadcast(cb), Seq("j"))
-          .withColumn("d", round(sqDist(col("s"), col("cen")), 6)),
-        Seq(col("vid"), col("j")), Seq(col("d").asc, col("cell").asc))
-    // one Lloyd step on the seed assignment -> the codebook
-    val cb = assign(seeds)
-      .select(col("j"), col("cell"), posexplode(col("s")).as(Seq("pos", "x")))
-      .groupBy(col("j"), col("cell"), col("pos"))
-      // decimal-exact sum then ONE double division: avg over doubles is
-      // partial-sum-order-dependent, and an ulp shift at a .5e-6 rounding
-      // boundary would fork the codebook trajectory between engines
-      .agg(round(sum(col("x").cast("decimal(27,6)")).cast("double")
-        / count(lit(1)), 6).as("mc"))
-      .groupBy(col("j"), col("cell"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("mc")))),
-        p => p.getField("mc")).as("cen"))
-    val codes = assign(cb).select(col("vid"), col("j"), col("cell"))
+    val subs = e.select(col("vid"), subspaces(col("v"), m, "s"))
+    val (cb, coded) = pqCodebook(subs, ksub)
+    val codes = coded.select(col("vid"), col("j"), col("cell"))
     val qsubs = subs.filter(col("vid") === queryId).select(col("j"), col("s").as("qs"))
     val dt = broadcast(cb.join(qsubs, Seq("j"))
       .select(col("j"), col("cell"), round(sqDist(col("qs"), col("cen")), 6).as("qd")))
@@ -347,10 +329,7 @@ object Similarity {
       .join(dt, Seq("j", "cell"))
       .groupBy(col("vid"))
       .agg(sum(col("qd").cast("decimal(18,6)")).cast("double").as("adc_dist"))
-      .orderBy(col("adc_dist").asc, col("vid").asc).limit(k) // TakeOrdered
-    scored.withColumn("rank", row_number().over(
-        Window.orderBy(col("adc_dist").asc, col("vid").asc)).cast("int"))
-      .select(col("vid").as("neighbor_id"), col("adc_dist"), col("rank"))
+    nearestByDist(scored, k)
   }
 
   /** SQ8 scalar-quantization ANN (the FAISS `ScalarQuantizer` QT_8bit
@@ -407,33 +386,9 @@ object Similarity {
         zip_with(col("recon"), col("qv"),
           (r, q) => round((r - q) * (r - q), 6)),
         lit(0.0), (acc, t) => acc + t), 6))
-    scored.orderBy(col("adc_dist").asc, col("vid").asc).limit(k)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("adc_dist").asc, col("vid").asc)).cast("int"))
-      .select(col("vid").as("neighbor_id"), col("adc_dist"), col("rank"))
+    nearestByDist(scored, k)
   }
 
-  /** Mutual k-NN graph construction — the edge list graph-based corpus
-    * clustering and diversity analysis start from: an undirected edge
-    * (a,b) exists iff b is among a's k nearest neighbors AND a is among
-    * b's (mutuality prunes the hub edges a plain k-NN digraph drowns in).
-    *
-    * IVF-cell blocked like [[Dedup.embeddingNearDupPairs]]: neighbors
-    * are only sought within a vector's cell, so candidate generation is
-    * an equi self-join on the cell id — never corpus × corpus. The
-    * deterministic centroid seed (min-id per `vid % nlist`) and the
-    * rounded-similarity/cell tiebreaks keep the whole graph
-    * engine-replayable. Per-node top-k is a window partitioned by the
-    * node — parallel across nodes, no global sort.
-    *
-    * SCALE DIAL: `nlist` must grow with the corpus — a FIXED cell count
-    * means cell populations grow linearly and within-cell pairs
-    * QUADRATICALLY (measured: 10x vectors at nlist=16 → 26x wall; the
-    * simhash band-saturation failure mode). Use [[adaptiveNlist]]
-    * (√(n/2), so expected cell population stays ~√(2n)) unless the cell
-    * count is pinned for oracle/test replay.
-    *
-    * Returns (id_a, id_b, cos) with id_a < id_b. */
   /** Corpus-adaptive IVF cell count: ⌊√(n/2)⌋ floored at 16, so the
     * expected cell population grows as √n instead of linearly — keeps
     * blocked pair generation near-linear in corpus size. */
@@ -486,36 +441,46 @@ object Similarity {
     val filtered = annResults.join(
       passIds.select(col(passIds.columns.head).as("neighbor_id")),
       Seq("neighbor_id"), "left_semi")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    filtered.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
+    rankNeighbors(filtered, k)
   }
 
+  /** Mutual k-NN graph construction — the edge list graph-based corpus
+    * clustering and diversity analysis start from: an undirected edge
+    * (a,b) exists iff b is among a's k nearest neighbors AND a is among
+    * b's (mutuality prunes the hub edges a plain k-NN digraph drowns in).
+    *
+    * IVF-cell blocked like [[Dedup.embeddingNearDupPairs]]: neighbors
+    * are only sought within a vector's cell, so candidate generation is
+    * an equi self-join on the cell id — never corpus × corpus. The cells
+    * are [[Clustering]]'s (min-id seed per `vid % nlist`, rounded
+    * similarity with a cell tiebreak), which keep the whole graph
+    * engine-replayable. Per-node top-k is [[Joins.topKPerGroup]]
+    * partitioned by the node — parallel across nodes, no global sort.
+    *
+    * SCALE DIAL: `nlist` must grow with the corpus — a FIXED cell count
+    * means cell populations grow linearly and within-cell pairs
+    * QUADRATICALLY (measured: 10x vectors at nlist=16 → 26x wall; the
+    * simhash band-saturation failure mode). Use [[adaptiveNlist]]
+    * (√(n/2), so expected cell population stays ~√(2n)) unless the cell
+    * count is pinned for oracle/test replay.
+    *
+    * Returns (id_a, id_b, cos) with id_a < id_b. */
   def mutualKnnGraph(
       df: DataFrame, id: Column, vec: Column, k: Int,
       nlist: Int = 16): DataFrame = {
     val cos = VectorFunctions.cosineNative _
     val e = df.select(id.cast("long").as("vid"),
       VectorFunctions.toDoubleArray(vec).as("v"))
-    val centroids = broadcast(Joins.top1PerGroup(
-      e.withColumn("cell", pmod(col("vid"), lit(nlist))),
-      Seq(col("cell")), Seq(col("vid")))
-      .select(col("cell"), col("v").as("centroid")))
-    val assigned = Joins.top1PerGroup(
-      e.crossJoin(centroids)
-        .withColumn("cdist", round(cos(col("v"), col("centroid")), 6)),
-      Seq(col("vid")), Seq(col("cdist").desc, col("cell").asc))
+    val assigned = Clustering
+      .assign(e, Clustering.seedCentroids(e, "vid", "v", nlist), "vid", "v")
       .select(col("cell"), col("vid"), col("v"))
     val directed = assigned.as("a")
       .join(assigned.as("b"),
         col("a.cell") === col("b.cell") && col("a.vid") =!= col("b.vid"))
       .select(col("a.vid").as("src"), col("b.vid").as("dst"),
         round(cos(col("a.v"), col("b.v")), 6).as("cos"))
-    val topk = directed.withColumn("__rn", row_number().over(
-        Window.partitionBy(col("src")).orderBy(col("cos").desc, col("dst").asc)))
-      .filter(col("__rn") <= k).drop("__rn")
+    val topk = Joins.topKPerGroup(directed, Seq(col("src")),
+      Seq(col("cos").desc, col("dst").asc), k).drop("__rn")
     topk.as("x").join(topk.as("y"),
         col("x.src") === col("y.dst") && col("x.dst") === col("y.src") &&
           col("x.src") < col("x.dst"))
@@ -562,26 +527,18 @@ object Similarity {
           lit("#nnd" + j))), lit(n))): _*)).as("cand"))
       .filter(col("cand") =!= col("vid")).distinct()
     // score a candidate frame and keep each node's k nearest
-    def topk(cands: DataFrame): DataFrame = {
-      val scored = cands
-        .join(e.select(col("vid"), col("v").as("sv")), Seq("vid"))
-        .join(e.select(col("vid").as("cand"), col("v").as("cv")), Seq("cand"))
-        .select(col("vid"), col("cand"),
-          round(cos(col("sv"), col("cv")), 6).as("cos"))
-      scored.withColumn("__rn", row_number().over(
-          Window.partitionBy(col("vid"))
-            .orderBy(col("cos").desc, col("cand").asc)))
-        .filter(col("__rn") <= k)
-        .select(col("vid"), col("cand"), col("cos"),
-          col("__rn").cast("int").as("rank"))
-    }
+    def topk(cands: DataFrame): DataFrame =
+      Joins.topKPerGroup(cands
+          .join(e.select(col("vid"), col("v").as("sv")), Seq("vid"))
+          .join(e.select(col("vid").as("cand"), col("v").as("cv")), Seq("cand"))
+          .select(col("vid"), col("cand"),
+            round(cos(col("sv"), col("cv")), 6).as("cos")),
+        Seq(col("vid")), Seq(col("cos").desc, col("cand").asc), k, "rank")
     var g = graft.Mat(topk(init))
     for (_ <- 1 to rounds) {
       val fwd = g.select(col("vid").as("src"), col("cand").as("dst"))
-      val rev = g.withColumn("__rr", row_number().over(
-          Window.partitionBy(col("cand"))
-            .orderBy(col("cos").desc, col("vid").asc)))
-        .filter(col("__rr") <= k)
+      val rev = Joins.topKPerGroup(g, Seq(col("cand")),
+          Seq(col("cos").desc, col("vid").asc), k, "__rr")
         .select(col("cand").as("src"), col("vid").as("dst"))
       val und = graft.Mat(fwd.unionByName(rev).distinct())
       val non = und.as("x").join(und.as("y"),
@@ -757,10 +714,8 @@ object Similarity {
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("ham", ham)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("ham").asc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
+    Joins.topKPerGroup(scored, Seq(col("query_id")),
+        Seq(col("ham").asc, col("neighbor_id").asc), k, "rank")
       .select("query_id", "neighbor_id", "ham", "rank")
   }
 

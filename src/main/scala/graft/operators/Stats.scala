@@ -1040,8 +1040,7 @@ object Stats {
       .withColumn("to_s", coalesce(lead(col("et"), 1).over(w),
         when(col("cv"), lit("CONV")).otherwise(lit("NULL"))))
       .select(col("et").as("from_s"), col("to_s"))
-    val tr2 = j.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
+    val tr2 = Joins.top1PerGroup(j, Seq(col("u")), Seq(col("t")))
       .select(lit("START").as("from_s"), col("et").as("to_s"))
     val au = base.groupBy(col("u"))
       .agg(max(when(col("et") === convType, 1).otherwise(0)).as("cv"))

@@ -6,6 +6,26 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
+/** The signature shared by the binary `array<double>` kernels
+  * ([[CosineSimilarity]], [[DotProduct]]): two `array<double>` inputs,
+  * checked at analysis with the kernel's name in the error, and a double
+  * result. */
+private[sql] trait DoubleArrayPair extends BinaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val ok = Seq(left, right).forall(_.dataType match {
+      case ArrayType(DoubleType, _) => true
+      case _ => false
+    })
+    if (ok) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects (array<double>, array<double>), got " +
+        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
+  }
+
+  override def dataType: DataType = DoubleType
+}
+
 /** Codegen'd cosine similarity over two `array<double>` columns.
   *
   * The composable form (`aggregate(zip_with(...))`, see
@@ -24,20 +44,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * mismatch the shorter length is used.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cosine_sim expects (array<double>, array<double>), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-
-  override def dataType: DataType = DoubleType
+  extends DoubleArrayPair {
 
   override def prettyName: String = "cosine_sim"
 

@@ -1,10 +1,8 @@
 package graft.sql
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Codegen'd dot product over two `array<double>` columns — one fused
   * loop in generated Java, for the LSH hyperplane projections and any
@@ -16,20 +14,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * summing in the same order. Length mismatch uses the shorter length
   * (embedding contract: equal lengths). */
 case class DotProduct(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"dot_product expects (array<double>, array<double>), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-
-  override def dataType: DataType = DoubleType
+  extends DoubleArrayPair {
 
   override def prettyName: String = "dot_product"
 

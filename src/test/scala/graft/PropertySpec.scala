@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.operators.Intervals
-import graft.domain.{Consolidate, Ingest}
+import graft.domain.{Consolidate, Ingest, Proposals}
 
 /** Property-based invariants (SURVEY §5 item 4 analog): generated inputs,
   * algebraic postconditions. Seeded ScalaCheck generators, deterministic
@@ -595,13 +595,38 @@ class PropertySpec extends SparkSpec {
       val nTyped = typed.count()
       assert(nTyped == rows.size, s"seed=$seed typed $nTyped of ${rows.size} raw rows")
       assert(ok.count() + quarantined.count() == nTyped, s"seed=$seed gate lost rows")
-      // a row conforms iff its id parses as a bigint and its group is non-blank
+      // a row conforms iff it has the header's 15 fields, its id parses as
+      // a bigint and its group is non-blank; a ragged row is quarantined
+      // with its field count named
       val expectedOk = rows.count { r =>
         val id = r.head.trim
-        id.nonEmpty && id.forall(_.isDigit) && BigInt(id) <= Long.MaxValue &&
+        r.size == Ingest.certificateSpec.size &&
+          id.nonEmpty && id.forall(_.isDigit) && BigInt(id) <= Long.MaxValue &&
           r(1).trim.nonEmpty
       }
+      val nRagged = rows.count(_.size != Ingest.certificateSpec.size)
+      if (nRagged > 0) {
+        val reasons = quarantined.filter(col(Ingest.FieldsReason).isNotNull)
+          .select(col(Ingest.FieldsReason)).as[String].collect().sorted.toSeq
+        assert(reasons == rows.map(_.size).filter(_ != 15).map(n => s"$n fields, header has 15")
+          .sorted, s"seed=$seed ragged reasons")
+      }
       assert(ok.count() == expectedOk, s"seed=$seed conformant rows")
+    }
+  }
+
+  test("hierKey reads lowercase and uppercase hex alike (3 seeds)") {
+    // businessHierKey and the versioned hierarchy keys read sha2's
+    // lowercase hex with no upper(): conv is case-insensitive, so they
+    // equal the keys of the upper-case content hashes
+    (70L to 72L).foreach { seed =>
+      val keys = sample(Gen.listOfN(40, Gen.alphaNumStr), seed)
+      val h = sha2(col("k"), 256)
+      val got = keys.toDF("k")
+        .select(Proposals.hierKey(lower(h)), Proposals.hierKey(upper(h)))
+        .as[(Long, Long)].collect()
+      assert(got.length == keys.size && got.forall { case (a, b) => a == b }, s"seed=$seed")
+      assert(got.map(_._1).distinct.length > 1, s"seed=$seed degenerate keys")
     }
   }
 }

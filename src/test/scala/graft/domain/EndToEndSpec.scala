@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** The minimum end-to-end slice (SURVEY §7.2): raw CSV -> typed ingest ->
-  * proposal inference (hashing) -> derived splits/hierarchies -> premium
+  * proposal inference (fused hashing) -> versioned splits/hierarchies -> premium
   * transactions (with cert fallback) -> 8-stage calc -> GL + audit.
   * Wired through the Pipeline orchestrator. Golden: GL total =
   * premium_total * rate / 100; all audit invariants zero.
@@ -36,18 +36,22 @@ class EndToEndSpec extends SparkSpec {
       val (ok, _) = Ingest.gate(typed, Seq("cert_id", "group_id"))
       Map("certs" -> ok)
     }),
+    // the hashing and versioned hierarchy flow the flagship ships
+    // (DomainBench.glInputs): one fused hash aggregate, split rows
+    // exploded back out of it
     Pipeline.Step("hashes", Seq("certs"), Seq("hier_hashes", "configs"), (_, ctx) => {
-      val hh = Proposals.hierarchyHashes(ctx("certs"))
-      val cfg = Proposals.routeGroups(Proposals.flagNonConformant(Proposals.configHashes(hh)))
-      Map("hier_hashes" -> hh, "configs" -> cfg)
+      val fused = Proposals.fusedHashes(ctx("certs"))
+      val cfg = Proposals.routeGroups(Proposals.flagNonConformant(fused.select(
+        col("cert_id"), col("group_id"), col("config_hash"), col("total_split_pct"),
+        col("n_splits"))))
+      Map("hier_hashes" -> Proposals.fusedSplitRows(fused), "configs" -> cfg)
     }),
     Pipeline.Step("proposals", Seq("configs", "certs", "hier_hashes"),
       Seq("proposals", "splits", "versions", "participants"), (_, ctx) => {
         val props = Proposals.normalizeDateRanges(
           Proposals.buildProposals(ctx("configs"), ctx("certs")))
-        val splits = Proposals.splitConfigs(props, ctx("configs"), ctx("hier_hashes"))
-        val (versions, participants) =
-          Proposals.hierarchyEntities(Proposals.dedupHierarchies(ctx("hier_hashes")))
+        val splits = Proposals.splitConfigsVersioned(props, ctx("configs"), ctx("hier_hashes"))
+        val (versions, participants) = Proposals.hierarchyEntitiesVersioned(ctx("certs"))
         Map("proposals" -> props, "splits" -> splits,
           "versions" -> versions, "participants" -> participants)
       }),

@@ -38,6 +38,28 @@ class IngestSpec extends SparkSpec {
     assert(badPremium) // try_cast: 'bogus' -> null, not an error
   }
 
+  test("ragged rows reach the gate quarantined, their field count named") {
+    val dir = Files.createTempDirectory("graft_ragged").toFile
+    val header = Ingest.certificateSpec.map(_._1).mkString(",")
+    Files.writeString(new java.io.File(dir, "CertificateInfo.csv").toPath, Seq(header,
+      "1,G1,PRODA,PL1,2020-01-15,TX,A,A,10.00,1,100.00,1,P1,P1,SCHED1,EXTRA",
+      "2,G1,PRODA").mkString("\n"))
+    val raw = Ingest.readRawCsv(spark, dir.getAbsolutePath)
+    val (ok, quarantined) =
+      Ingest.gate(Ingest.typedPass(raw, Ingest.certificateSpec), Seq("cert_id", "group_id"))
+    assert(ok.count() == 0)
+    assert(!ok.columns.contains(Ingest.FieldsReason))
+    val q = quarantined.select(col("cert_id"), col(Ingest.FieldsReason))
+      .as[(Long, String)].collect().sortBy(_._1).toSeq
+    assert(q == Seq((1L, "16 fields, header has 15"), (2L, "3 fields, header has 15")))
+    // a file without a ragged row reads as its header's columns only
+    Files.writeString(new java.io.File(dir, "CertificateInfo.csv").toPath,
+      Seq(header, "1,G1,PRODA,PL1,2020-01-15,TX,A,A,10.00,1,100.00,1,P1,P1,SCHED1")
+        .mkString("\n"))
+    assert(Ingest.readRawCsv(spark, dir.getAbsolutePath).columns.toSeq ==
+      Ingest.certificateSpec.map(_._1))
+  }
+
   test("S2 header sanitization mirrors the reference rules") {
     assert(Ingest.sanitizeHeader("﻿ CertificateId ", 0) == "CertificateId")
     assert(Ingest.sanitizeHeader("Cert Premium ($)", 1) == "Cert_Premium____")
