@@ -68,12 +68,8 @@ object DomainBench {
   /** The pipeline as a single composable frame (GL entries), for the
     * bench/verify query surface. The fan-in frames (hashes feed configs +
     * splits + hierarchy dedup; final feeds both GL branches) are
-    * materialized eagerly so they compute once. Default is
-    * `localCheckpoint` (right for a single JVM: truncates lineage, no
-    * recompute); on a real cluster set `SPARK_GRAFT_MAT=persist` —
-    * localCheckpoint blocks are lost on executor failure and pin executor
-    * storage, while an eagerly-counted persist(MEMORY_AND_DISK) survives
-    * recompute from lineage. */
+    * materialized eagerly through [[Mat]] so they compute once; Mat's
+    * scaladoc says which mode to run where. */
   def glPipeline(spark: SparkSession, sfDir: String): DataFrame = {
     val fin = graft.Mat(Calc.run(glInputs(spark, sfDir)))
     Calc.glEntries(fin)
@@ -86,32 +82,31 @@ object DomainBench {
     * twin, which must share EXACT inputs for the batch-identity oracle
     * to hold. */
   def glInputs(spark: SparkSession, sfDir: String): Calc.CalcInputs = {
-    def mat(df: DataFrame): DataFrame = graft.Mat(df)
-    val certs = mat(synthCertificates(spark, sfDir))
+    val certs = graft.Mat(synthCertificates(spark, sfDir))
     // Fused one-shuffle hash build (bit-equal to the two-phase
     // hierarchyHashes -> configHashes build — ProposalsSpec; measured
     // 9.3-9.6 s vs 10.7-11.2 s flagship at sf0.1): per-split rows explode
     // back out of the fused frame instead of paying a second aggregate's
     // shuffle.
-    val fused = mat(Proposals.fusedHashes(certs))
+    val fused = graft.Mat(Proposals.fusedHashes(certs))
     val hh = Proposals.fusedSplitRows(fused)
     // synthetic configs are near-unique per cert, so entropy routing is
     // relaxed (it would route almost every group); the 2% split-sum
     // carve-out still exercises the non-conformance path
-    val cfg = mat(Proposals.routeGroups(
+    val cfg = graft.Mat(Proposals.routeGroups(
       Proposals.flagNonConformant(fused.select(col("cert_id"),
         col("group_id"), col("config_hash"), col("total_split_pct"),
         col("n_splits"))),
       maxUniqueRatio = 1.0, maxEntropy = 99.0, minDominantPct = 0.0))
-    val props = mat(Proposals.normalizeDateRanges(Proposals.buildProposals(cfg, certs)))
+    val props = graft.Mat(Proposals.normalizeDateRanges(Proposals.buildProposals(cfg, certs)))
     // multi-version flow: splits reference the business slot (group x seq)
     // and the calc's as-of join resolves the slot's version island active
     // at the transaction date (07-deprecated-hierarchies.sql semantics)
     // splits and participants feed exactly ONE consumer each, so they
     // stay lazy; the islands computation inside hierarchyEntitiesVersioned
-    // is materialized via the passed-in mat (it feeds both outputs)
+    // is materialized via the passed-in Mat (it feeds both outputs)
     val splits = Proposals.splitConfigsVersioned(props, cfg, hh)
-    val (versions, participants) = Proposals.hierarchyEntitiesVersioned(certs, mat)
+    val (versions, participants) = Proposals.hierarchyEntitiesVersioned(certs, graft.Mat(_))
     val premiums = Tables.orders(spark, sfDir).select(
       col("o_orderkey").as("premium_id"), col("o_orderkey").as("cert_id"),
       concat(lit("G"), pmod(col("o_orderkey"), lit(3079))).as("group_id"),

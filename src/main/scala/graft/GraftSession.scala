@@ -28,6 +28,11 @@ object GraftSession {
     * sets this. */
   val CodegenCacheEntries = 8192
 
+  /** Parquet INT64 `TIMESTAMP(NANOS)` columns read as longs, which
+    * `Tables.events` truncates to micros. Set per session, not when a
+    * table loads, so no parquet read depends on what was loaded first. */
+  val ParquetNanosAsLong = "spark.sql.legacy.parquet.nanosAsLong" -> "true"
+
   def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
@@ -58,6 +63,7 @@ object GraftSession {
       // min-of-2 split 6/6 by sign; OPTIMIZATION_r14.md).
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config(ParquetNanosAsLong._1, ParquetNanosAsLong._2)
       .config("spark.sql.extensions", "graft.sql.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")

@@ -77,10 +77,10 @@ object Tables {
   def orders(s: SparkSession, d: String): DataFrame     = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame   = load(s, d, "lineitem")
   /** The events fixture has shipped `ts` as both TIMESTAMP(NANOS) (reads
-    * back as INT64 with `nanosAsLong`) and timestamp[us] (reads back as
-    * TIMESTAMP_NTZ under the default NTZ inference) across driver
-    * regenerations, so branch on the dtype actually read rather than
-    * assuming either:
+    * back as INT64 under `GraftSession.ParquetNanosAsLong`) and
+    * timestamp[us] (reads back as TIMESTAMP_NTZ under the default NTZ
+    * inference) across fixture regenerations, so branch on the dtype
+    * actually read rather than assuming either:
     *  - LongType → nanos; truncate to micros with integer `div` (a double
     *    division would lose precision at 1e18 nanos);
     *  - TIMESTAMP_NTZ → cast to session-TZ timestamp (session is pinned to
@@ -90,7 +90,6 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = load(s, d, "events")
     df.schema("ts").dataType match {
       case LongType      => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))

@@ -5,19 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** Data-quality audit — the reference's invariant suite
   * (`sql/transforms/99-audit-and-cleanup.sql`, 673 LoC: referential
-  * integrity §1, completeness §3, data quality §4) as one stacked report
-  * job (A9: anti-joins + counts, UNION ALL).
+  * integrity §1, completeness §3, data quality §4) as checks that
+  * [[ProductionReadiness.report]] stacks into one report job (A9:
+  * anti-joins + counts, UNION ALL).
   */
 object Audit {
-
-  case class Check(name: String, failing: DataFrame)
-
-  /** Run checks; one row per check with its failing-row count. */
-  def report(checks: Seq[Check]): DataFrame =
-    checks.map { c =>
-      c.failing.agg(count(lit(1)).as("n_failing"))
-        .select(lit(c.name).as("check"), col("n_failing"))
-    }.reduce(_ unionByName _)
+  import ProductionReadiness.Check
 
   /** One-pass column profiler: per column — null count, approximate
     * distinct, min/max (as strings). The standard first look at a new
@@ -42,25 +35,26 @@ object Audit {
     stacked.reduce(_ unionByName _)
   }
 
-  /** The commissions-entity invariants. All must report 0. */
+  /** The commissions-entity invariants, as suite `audit` checks for
+    * [[ProductionReadiness.report]]. All must report 0. */
   def commissionsChecks(
       proposals: DataFrame, splits: DataFrame, hierarchyVersions: DataFrame,
       participants: DataFrame): Seq[Check] = Seq(
     // referential integrity (99-audit §1: orphans)
-    Check("splits_without_proposal",
+    Check.rows("audit", "splits_without_proposal",
       splits.join(proposals, Seq("proposal_id"), "left_anti")),
-    Check("participants_without_version",
+    Check.rows("audit", "participants_without_version",
       participants.join(hierarchyVersions.select(col("version_id")), Seq("version_id"), "left_anti")),
     // completeness (§3: proposals without split versions)
-    Check("proposals_without_splits",
+    Check.rows("audit", "proposals_without_splits",
       proposals.join(splits, Seq("proposal_id"), "left_anti")),
     // data quality (§4: From > To ranges; null brokers)
-    Check("inverted_date_ranges",
+    Check.rows("audit", "inverted_date_ranges",
       proposals.filter(col("eff_to").isNotNull && col("eff_from") > col("eff_to"))),
-    Check("null_participant_brokers",
+    Check.rows("audit", "null_participant_brokers",
       participants.filter(col("broker_id").isNull)),
     // split percents must sum to 100 per proposal
-    Check("split_pct_not_100",
+    Check.rows("audit", "split_pct_not_100",
       splits.groupBy(col("proposal_id")).agg(sum(col("split_pct")).as("s"))
         .filter(abs(col("s") - 100.0) > 0.001)),
   )

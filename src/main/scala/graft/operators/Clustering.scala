@@ -28,8 +28,8 @@ import graft.functions.VectorFunctions
   * [[seedCentroids]] and [[assign]] are also the engine's one IVF cell
   * assignment: `Similarity.ivfCosineTopK` and `Similarity.mutualKnnGraph`
   * and `Dedup.embeddingNearDupPairs` block their candidates on these
-  * cells. (`Similarity.ivfPqTopK`'s coarse quantizer ranks by squared L2
-  * and keeps its own.)
+  * cells. `Similarity.ivfPqTopK`'s coarse quantizer starts from the same
+  * seeds and keeps only its own squared-L2 assignment.
   */
 object Clustering {
 

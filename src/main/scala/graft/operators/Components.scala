@@ -153,11 +153,12 @@ object Components {
     * the edge frame; the driver reads one (count, hash-sum) signature
     * row per round for the fixed-point check — never data.
     *
-    * Per-round edge frames route through [[graft.Mat]]: the single-JVM
-    * default is localCheckpoint, but on a real cluster set
-    * `SPARK_GRAFT_MAT=persist` — a localCheckpoint block lost with its
-    * executor cannot be recomputed (it IS the lineage root), so one
-    * executor failure mid-convergence would kill the whole run. */
+    * Per-round edge frames route through [[graft.Mat.withEdgeSig]], which
+    * folds the signature into the materializing action and follows
+    * Mat's mode: the single-JVM default is localCheckpoint, but on a real
+    * cluster set `SPARK_GRAFT_MAT=persist` — a localCheckpoint block lost
+    * with its executor cannot be recomputed (it IS the lineage root), so
+    * one executor failure mid-convergence would kill the whole run. */
   def connectedComponents(
       pairs: DataFrame, a: String, b: String, maxIter: Int = 30): DataFrame = {
     val edges0 = pairs
@@ -165,28 +166,8 @@ object Components {
       .filter(col("u") =!= col("v"))
     def symmetrize(e: DataFrame): DataFrame =
       e.unionByName(e.select(col("v").as("u"), col("u").as("v"))).distinct()
-    // Materialize a round's edge frame AND compute its order-independent
-    // edge-set signature (n_edges, Σ xxhash64(u, v)) — equal signatures
-    // across a round = fixed point — IN THE SAME ACTION
-    // (GraftPlanBridge.reRootEdgeSig): one driver round-trip per
-    // half-round instead of a materialize job PLUS a signature job (r14;
-    // the r13 shape re-scanned the fresh checkpoint blocks once per round
-    // just for the signature). Also returns a release for the round's
-    // blocks so the PREVIOUS round's can be freed as soon as its last
-    // consumer ran (guide §5 "unpersist when done" — before r14 every
-    // round's blocks lived until session end). Mode is graft.Mat's.
-    def matSig(df: DataFrame): (DataFrame, () => Unit, (Long, BigInt)) =
-      if (graft.Mat.persist) {
-        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val (d, _, n, h) = org.apache.spark.sql.GraftPlanBridge
-          .reRootEdgeSig(p, localCkpt = false)
-        (d, () => { p.unpersist(false); () }, (n, h))
-      } else {
-        val (d, rdd, n, h) = org.apache.spark.sql.GraftPlanBridge
-          .reRootEdgeSig(df, localCkpt = true)
-        (d, () => { rdd.unpersist(false); () }, (n, h))
-      }
-    var (e, eFree, sig) = matSig(symmetrize(edges0))
+    // equal edge-set signatures across a round = fixed point
+    var (e, eFree, sig) = graft.Mat.withEdgeSig(symmetrize(edges0))
     var converged = sig._1 == 0L
     var i = 0
     while (!converged && i < maxIter) {
@@ -195,7 +176,7 @@ object Components {
       val lm = e.groupBy(col("u"))
         .agg(min(col("v")).as("__mv"))
         .select(col("u"), least(col("u"), col("__mv")).as("m"))
-      val (eL, eLFree, _) = matSig(symmetrize(
+      val (eL, eLFree, _) = graft.Mat.withEdgeSig(symmetrize(
         e.join(lm, Seq("u")).filter(col("v") > col("u"))
           .select(col("v").as("u"), col("m").as("v"))
           .filter(col("u") =!= col("v"))))
@@ -204,7 +185,7 @@ object Components {
       // minimum — flattens the remaining downward chains
       val sm = eL.filter(col("v") < col("u"))
       val smin = sm.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val (eS, eSFree, nextSig) = matSig(symmetrize(
+      val (eS, eSFree, nextSig) = graft.Mat.withEdgeSig(symmetrize(
         sm.join(smin, Seq("u")).filter(col("v") =!= col("m"))
           .select(col("v").as("u"), col("m").as("v"))
           .unionByName(smin.select(col("u"), col("m").as("v")))))
@@ -338,25 +319,28 @@ object Components {
     * Input may contain duplicates, self-loops, or either edge direction;
     * it is canonicalized first. Output: (vertex, n_tri) for every vertex
     * in at least one triangle. */
-  def triangleCounts(edges: DataFrame, src: Column, dst: Column): DataFrame = {
-    val e0 = canonicalEdges(edges, src, dst)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def triangleCounts(edges: DataFrame, src: Column, dst: Column): DataFrame =
+    degreesAndTriangles(graft.Mat(canonicalEdges(edges, src, dst)))._2
+
+  /** [[triangleCounts]] over a materialized canonical edge set `e0`,
+    * returning its degrees (x, d) too, which [[clusteringCoefficient]]
+    * reuses instead of canonicalizing and counting a second time. */
+  private def degreesAndTriangles(e0: DataFrame): (DataFrame, DataFrame) = {
     val deg = e0.select(col("u").as("x")).unionAll(e0.select(col("v").as("x")))
       .groupBy(col("x")).agg(count(lit(1)).as("d"))
     val fwd = col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v"))
-    val o = e0
+    val o = graft.Mat(e0
       .join(deg.select(col("x").as("u"), col("d").as("du")), Seq("u"))
       .join(deg.select(col("x").as("v"), col("d").as("dv")), Seq("v"))
       .select(when(fwd, col("u")).otherwise(col("v")).as("s"),
-        when(fwd, col("v")).otherwise(col("u")).as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        when(fwd, col("v")).otherwise(col("u")).as("t")))
     val wedges = o.as("a").join(o.as("b"), col("a.t") === col("b.s"))
       .select(col("a.s").as("x"), col("a.t").as("y"), col("b.t").as("z"))
     val tris = wedges
       .join(o.select(col("s").as("x"), col("t").as("z")), Seq("x", "z"))
-    tris
+    (deg, tris
       .select(explode(array(col("x"), col("y"), col("z"))).as("vertex"))
-      .groupBy(col("vertex")).agg(count(lit(1)).as("n_tri"))
+      .groupBy(col("vertex")).agg(count(lit(1)).as("n_tri")))
   }
 
   /** Newman–Girvan modularity of a node partition — the quality score
@@ -454,11 +438,8 @@ object Components {
     * the two global divisions round at 6. Returns 1 row:
     * (n_vertices, n_triangles, n_wedges, global_cc, avg_local_cc). */
   def clusteringCoefficient(pairs: DataFrame, a: String, b: String): DataFrame = {
-    val e0 = canonicalEdges(pairs, col(a), col(b))
-    val deg = e0.select(col("u").as("x")).unionAll(e0.select(col("v").as("x")))
-      .groupBy(col("x")).agg(count(lit(1)).as("d"))
-    val tri = triangleCounts(e0, col("u"), col("v"))
-      .select(col("vertex").as("x"), col("n_tri"))
+    val (deg, tris) = degreesAndTriangles(graft.Mat(canonicalEdges(pairs, col(a), col(b))))
+    val tri = tris.select(col("vertex").as("x"), col("n_tri"))
     val per = deg.join(tri, Seq("x"), "left")
       .withColumn("t", coalesce(col("n_tri"), lit(0L)))
       .withColumn("w", expr("d * (d - 1) div 2"))

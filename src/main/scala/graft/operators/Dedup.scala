@@ -57,10 +57,9 @@ object Dedup {
   private def sharedShingleCounts(
       df: DataFrame, id: Column, text: Column, n: Int, maxDf: Option[Int]): DataFrame = {
     // The exploded shingle table feeds three branches (both self-join
-    // sides + the per-doc sizes); persist it so shingle generation runs
-    // once, not four times.
-    val raw = explodedWordShingles(df, id, text, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // sides + the per-doc sizes); materialize it so shingle generation
+    // runs once, not four times.
+    val raw = graft.Mat(explodedWordShingles(df, id, text, n))
     val exploded = maxDf match {
       case Some(cap) =>
         // anti-join against the HOT list: it has at most
@@ -140,9 +139,8 @@ object Dedup {
       df: DataFrame, id: Column, text: Column,
       n: Int, threshold: Double): DataFrame = {
     // exploded feeds ranking, the candidate prefixes AND the verify
-    // stage — persist so shingle generation runs once
-    val exploded = explodedWordShingles(df, id, text, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // stage — materialize so shingle generation runs once
+    val exploded = graft.Mat(explodedWordShingles(df, id, text, n))
     val dfreq = exploded.groupBy(col("sh")).agg(count(lit(1)).as("__df"))
     val perDoc = exploded.join(dfreq, Seq("sh"))
       .groupBy(col("doc_id"))
@@ -381,8 +379,8 @@ object Dedup {
     // poly (Rabin–Karp rolling) is the default kernel here: passage
     // witness only needs fingerprint EQUALITY, and the rolling form is
     // O(1) per position instead of an O(k) md5 digest
-    val fps = graft.functions.TextFunctions.winnowFingerprints(df, id, text, k, w, hash)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val fps = graft.Mat(
+      graft.functions.TextFunctions.winnowFingerprints(df, id, text, k, w, hash))
     val kept = maxDf match {
       case Some(cap) =>
         // fingerprints are distinct per doc, so count(*) = document

@@ -14,7 +14,8 @@ import graft.functions.VectorFunctions
   *
   * Building blocks, each defined once: IVF cells are
   * [[Clustering.seedCentroids]] + [[Clustering.assign]] (also k-means'
-  * and `Dedup.embeddingNearDupPairs`' cells); every per-query or per-node
+  * and `Dedup.embeddingNearDupPairs`' cells; [[ivfPqTopK]] takes the
+  * seeds and assigns by squared L2); every per-query or per-node
   * top-k cut is [[Joins.topKPerGroup]] (`rankNeighbors` for the
   * (query_id, neighbor_id, cos, rank) shape); [[pqAdcTopK]] and
   * [[ivfPqTopK]] share one PQ trainer (`subspaces` + `pqCodebook`).
@@ -258,11 +259,9 @@ object Similarity {
       "nlist, nprobe, m, ksub, k must be positive")
     val e = corpus.select(col(cId).cast("long").as("vid"),
       VectorFunctions.toDoubleArray(col(cVec)).as("v"))
-    // coarse quantizer: lowest-id seed per id-residue class (RNG-free)
-    val coarse = e.withColumn("cell", pmod(col("vid"), lit(nlist)))
-      .groupBy(col("cell")).agg(min(col("vid")).as("mvid"))
-      .join(e, col("mvid") === col("vid"))
-      .select(col("cell"), col("v").as("cen"))
+    // coarse quantizer: the engine's IVF seeds, assigned by squared L2
+    val coarse = Clustering.seedCentroids(e, "vid", "v", nlist)
+      .select(col("cell"), col("centroid").as("cen"))
     val casg = Joins.top1PerGroup(
       e.crossJoin(broadcast(coarse))
         .withColumn("cd", round(sqDist(col("v"), col("cen")), 6)),

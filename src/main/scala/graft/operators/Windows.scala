@@ -7,23 +7,6 @@ import org.apache.spark.sql.functions._
 /** Window-function operators covering SURVEY.md §2.5 (W1–W6). */
 object Windows {
 
-  /** Materialize once, but never re-checkpoint a frame the caller already
-    * materialized (a localCheckpoint of a localCheckpoint copies every
-    * block) or cached. */
-  private def matOnce(df: DataFrame): DataFrame = {
-    val isLeaf = df.queryExecution.logical
-      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-    if (isLeaf || df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
-    // NOT fanned out (Tables.fanOut) before materializing: measured at
-    // sf0.1, the extra exchange lost more than the added parallelism won
-    // on every globalRank/RunningSums consumer except a27 (a17 1.0→1.6 s,
-    // a37 1.9→2.5 s, x_vocab_coverage 0.5→0.8 s) — these inputs are
-    // either already aggregated (post-shuffle) or feed one cheap pass.
-    // Callers with provably hash-heavy single-task inputs fan out at the
-    // call site instead (a24_woe_binning does).
-    else graft.Mat(df)
-  }
-
   /** Date-range normalization via LEAD (W4,
     * `sql/transforms/06g-normalize-proposal-date-ranges.sql:24-60`):
     * close each effective-dated row at the next row's start minus one day;
@@ -119,7 +102,7 @@ object Windows {
       values: Seq[(Column, String)]): DataFrame = {
     require(values.nonEmpty, "need at least one value column")
     // one materialized scan feeds all three actions (see withGlobalRank)
-    val m = matOnce(df)
+    val m = graft.Mat(df)
     val n = m.sparkSession.sessionState.conf.numShufflePartitions
     val probes = (1 until n).map(_.toDouble / n).toArray
     val edges =
@@ -159,8 +142,15 @@ object Windows {
       build: (DataFrame, Column, Column) => DataFrame): DataFrame = {
     // ONE materialized scan feeds all three actions (quantile probe,
     // bucket counts, the ranked window itself) — riders like WOE
-    // binning/MAD outliers used to re-derive this frame's lineage 3x
-    val m = matOnce(df)
+    // binning/MAD outliers used to re-derive this frame's lineage 3x.
+    // NOT fanned out (Tables.fanOut) before materializing: measured at
+    // sf0.1, the extra exchange lost more than the added parallelism won
+    // on every globalRank/RunningSums consumer except a27 (a17 1.0→1.6 s,
+    // a37 1.9→2.5 s, x_vocab_coverage 0.5→0.8 s) — these inputs are
+    // either already aggregated (post-shuffle) or feed one cheap pass.
+    // Callers with provably hash-heavy single-task inputs fan out at the
+    // call site instead (a24_woe_binning does).
+    val m = graft.Mat(df)
     val n = m.sparkSession.sessionState.conf.numShufflePartitions
     val probes = (1 until n).map(_.toDouble / n).toArray
     val edges =

@@ -533,7 +533,7 @@ object StreamOps {
               definitelyNew.unionByName(falsePos),
               spark.read.parquet(targetDir), Seq("doc_id"))
           }
-        val freshMat = fresh.localCheckpoint(true)
+        val freshMat = graft.Mat(fresh)
         freshMat.write.mode("append").parquet(targetDir)
         val newBits = freshMat
           .withColumn("__i", explode(sequence(lit(0), lit(k - 1))))
@@ -543,7 +543,7 @@ object StreamOps {
           if (bitsFs.exists(bitsPath))
             newBits.join(spark.read.parquet(bitsDir), Seq("__pos"), "left_anti")
           else newBits
-        bitsOut.localCheckpoint(true).write.mode("append").parquet(bitsDir)
+        graft.Mat(bitsOut).write.mode("append").parquet(bitsDir)
       }
       .start()
 }

@@ -143,6 +143,24 @@ class EntrySpec extends SparkSpec {
     assert(forks.isEmpty, s"${forks.size} functionExists forks: ${forks.mkString(", ")}")
   }
 
+  test("src/main materializes only through graft.Mat") {
+    // Mat is the engine's one materializer: a frame reaches its mode
+    // (SPARK_GRAFT_MAT) only through it, so a raw persist or checkpoint
+    // elsewhere ignores the setting and is never counted
+    val (repo, files) = mainSources()
+    val call = """\.(?:persist|unpersist|localCheckpoint|checkpoint)\(|\.cache\(\)""".r
+    val owners = Seq("graft/Mat.scala", "graft/plans/PlanBridge.scala")
+    val sites = for {
+      f <- files if !owners.exists(o => f.toString.endsWith(o))
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      code = line.trim
+      if !Seq("//", "*", "/*").exists(code.startsWith)
+      if call.findFirstIn(code).nonEmpty
+    } yield s"${repo.relativize(f)}:${i + 1}"
+    assert(sites.isEmpty,
+      s"${sites.size} materializations outside graft.Mat: ${sites.mkString(", ")}")
+  }
+
   test("approx_count_distinct within 5% of exact") {
     val rows = SparkEntry.queries("a10_approx_distinct")(spark, sf001)
       .select(col("within_5pct")).collect()

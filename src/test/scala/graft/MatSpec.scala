@@ -62,6 +62,41 @@ class MatSpec extends SparkSpec {
     assert(lpaP == lpa, "labelPropagation diverged in persist mode")
   }
 
+  test("dedup, triangle and global-rank operators: rows identical across Mat modes") {
+    // each operator materializes its fan-in frame through Mat; default
+    // and persist mode must agree row for row, on non-empty results
+    import graft.operators.{Components, Dedup, Stats}
+    val docs = Seq(
+      1L -> "the quick brown fox jumps over the lazy dog by the river today",
+      2L -> "the quick brown fox jumps over the lazy cat by the river today",
+      3L -> "a quick brown fox jumps over the lazy dog by the old river again",
+      4L -> "completely different words make up this short document here",
+      5L -> "the quick brown fox jumps over the lazy dog by the river today",
+      6L -> "different words make up this short document here and there",
+      7L -> "the quick brown fox jumps over the lazy dog").toDF("doc_id", "text")
+    // (i, i+1, i+2) closes a triangle for every i
+    val edges = (1 to 30).flatMap(i => Seq((i.toLong, i + 1L), (i.toLong, i + 2L)))
+      .toDF("a", "b")
+    val values = (1 to 200).map(i => (i.toLong, (i * 37 % 101).toLong)).toDF("id", "x")
+    val (id, text) = (col("doc_id"), col("text"))
+    def run(): Map[String, Set[org.apache.spark.sql.Row]] = Map(
+      "triangleCounts" -> Components.triangleCounts(edges, col("a"), col("b")),
+      "ngramJaccardPairs" -> Dedup.ngramJaccardPairs(docs, id, text, 3, 0.3),
+      "ngramJaccardPairs maxDf" ->
+        Dedup.ngramJaccardPairs(docs, id, text, 3, 0.3, maxDf = Some(3)),
+      "prefixJaccardPairs" -> Dedup.prefixJaccardPairs(docs, id, text, 3, 0.3),
+      "containmentPairs" -> Dedup.containmentPairs(docs, id, text, 3, 0.5),
+      "passageDupPairs" -> Dedup.passageDupPairs(docs, id, text, 5, 4, 2),
+      // globalRowNumber and globalRunningSums consumers
+      "giniCoefficient" -> Stats.giniCoefficient(values, col("x"), col("id")),
+      "madOutliers" -> Stats.madOutliers(values, col("x"), 1.0)
+    ).map { case (name, df) => name -> df.collect().toSet }
+    val dflt = run()
+    dflt.foreach { case (name, rows) => assert(rows.nonEmpty, s"$name returned no rows") }
+    val pers = try withMode("persist")(run()) finally Mat.releaseAll(spark)
+    dflt.keys.foreach(name => assert(pers(name) == dflt(name), s"$name diverged in persist mode"))
+  }
+
   test("default (localCheckpoint) mode computes correctly") {
     val (d, sizes) = iterate(5)
     assert(d.agg(sum("v")).as[Long].head == (1 to 64).map(_ + 5L).sum)

@@ -15,6 +15,8 @@ trait SparkSpec extends AnyFunSuite {
     // the codegen cache is JVM-wide and sized by the first session, so
     // the specs must size it as GraftSession does
     .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries.toString)
+    // parquet nanosecond timestamps read as longs, as in GraftSession
+    .config(GraftSession.ParquetNanosAsLong._1, GraftSession.ParquetNanosAsLong._2)
     .config("spark.ui.enabled", "false")
     .config("spark.driver.host", "127.0.0.1")
     .getOrCreate()
