@@ -272,7 +272,7 @@ object Similarity {
     // the PQ codebook is trained over residual subvectors
     val (cb, coded) = pqCodebook(
       resid.select(col("vid"), col("ccell"), subspaces(col("r"), m, "s")), ksub)
-    val codes = coded.select(col("vid"), col("ccell"), col("j"), col("cell"))
+    val codes = coded.select(col("vid"), col("ccell").as("pcell"), col("j"), col("cell"))
     // query: probe the nprobe nearest coarse cells, residualize per probe
     val qv = e.filter(col("vid") === queryId)
     val probes = Joins.topKPerGroup(qv.crossJoin(broadcast(coarse))
@@ -289,8 +289,7 @@ object Similarity {
     // is exact and addition-order-independent (a double sum can flip the
     // 6th decimal at rounding boundaries between engines)
     val scored = codes.filter(col("vid") =!= queryId)
-      .join(dt, codes("ccell") === dt("pcell") &&
-        codes("j") === dt("j") && codes("cell") === dt("cell"))
+      .join(dt, Seq("pcell", "j", "cell"))
       .groupBy(col("vid"))
       .agg(sum(col("qd").cast("decimal(18,6)")).cast("double").as("adc_dist"))
     nearestByDist(scored, k)

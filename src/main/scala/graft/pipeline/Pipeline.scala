@@ -8,12 +8,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * replaces the reference's script-array plan
   * (`scripts/run-pipeline.ts:125-205`) and state manager
   * (`scripts/lib/state-manager.ts`, `sql/00a-state-management-tables.sql`).
+  * The commissions flagship (`DomainBench.steps`) runs through [[Runner]].
   *
   * Each step produces named frames into a shared context; steps declare
   * inputs so the DAG stays explicit. Resume = skip steps whose outputs
   * are already present (the reference re-runs incomplete steps,
   * `run-pipeline.ts:618-657`). `--skip-*`/`--limit` CLI semantics map to
-  * `skip` and a caller-applied limit transform.
+  * `run(skip)` and [[Debug]]`.limit`.
   */
 object Pipeline {
 

@@ -1,15 +1,14 @@
 package graft.domain
 
-import graft.SparkSpec
+import graft.{DomainBench, SparkSpec}
 import graft.pipeline.Pipeline
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** The minimum end-to-end slice (SURVEY §7.2): raw CSV -> typed ingest ->
   * proposal inference (fused hashing) -> versioned splits/hierarchies -> premium
   * transactions (with cert fallback) -> 8-stage calc -> GL + audit.
-  * Wired through the Pipeline orchestrator. Golden: GL total =
+  * Runs the flagship's Pipeline step list (DomainBench.steps). Golden: GL total =
   * premium_total * rate / 100; all audit invariants zero.
   */
 class EndToEndSpec extends SparkSpec {
@@ -29,70 +28,34 @@ class EndToEndSpec extends SparkSpec {
     dir.getAbsolutePath
   }
 
-  private def steps(csvDir: String): Seq[Pipeline.Step] = Seq(
-    Pipeline.Step("ingest", Nil, Seq("certs"), (s: SparkSession, _) => {
-      val typed = Ingest.activeOnly(
-        Ingest.typedPass(Ingest.readRawCsv(s, csvDir), Ingest.certificateSpec))
-      val (ok, _) = Ingest.gate(typed, Seq("cert_id", "group_id"))
-      Map("certs" -> ok)
-    }),
-    // the hashing and versioned hierarchy flow the flagship ships
-    // (DomainBench.glInputs): one fused hash aggregate, split rows
-    // exploded back out of it
-    Pipeline.Step("hashes", Seq("certs"), Seq("hier_hashes", "configs"), (_, ctx) => {
-      val fused = Proposals.fusedHashes(ctx("certs"))
-      val cfg = Proposals.routeGroups(Proposals.flagNonConformant(fused.select(
-        col("cert_id"), col("group_id"), col("config_hash"), col("total_split_pct"),
-        col("n_splits"))))
-      Map("hier_hashes" -> Proposals.fusedSplitRows(fused), "configs" -> cfg)
-    }),
-    Pipeline.Step("proposals", Seq("configs", "certs", "hier_hashes"),
-      Seq("proposals", "splits", "versions", "participants"), (_, ctx) => {
-        val props = Proposals.normalizeDateRanges(
-          Proposals.buildProposals(ctx("configs"), ctx("certs")))
-        val splits = Proposals.splitConfigsVersioned(props, ctx("configs"), ctx("hier_hashes"))
-        val (versions, participants) = Proposals.hierarchyEntitiesVersioned(ctx("certs"))
-        Map("proposals" -> props, "splits" -> splits,
-          "versions" -> versions, "participants" -> participants)
-      }),
-    Pipeline.Step("premiums", Seq("certs"), Seq("txns"), (s: SparkSession, ctx) => {
+  // the flagship's step list (DomainBench.steps, as glInputs runs it)
+  // over the fixture: typed CSV ingest, real premiums with a cert-level
+  // fallback, one schedule at 10%, routeGroups' default thresholds and
+  // the certificates' own issued state
+  private def steps(csvDir: String): Seq[Pipeline.Step] = DomainBench.steps(
+    load = s => Ingest.gate(Ingest.activeOnly(Ingest.typedPass(
+      Ingest.readRawCsv(s, csvDir), Ingest.certificateSpec)), Seq("cert_id", "group_id"))._1,
+    premiums = (s, certs) => {
       import s.implicits._
       val real = Seq((100L, 1L, "25992", 1000.0, java.sql.Date.valueOf("2020-06-15")))
         .toDF("premium_id", "cert_id", "group_id", "amount", "txn_date")
-      val certLevel = ctx("certs").groupBy(col("cert_id"))
+      val certLevel = certs.groupBy(col("cert_id"))
         .agg(first(col("group_id")).as("group_id"), first(col("premium")).as("premium"),
           first(col("eff_date")).as("eff_date"))
-      Map("txns" -> PostTransforms.premiumTransactions(real, certLevel))
-    }),
-    Pipeline.Step("calc", Seq("txns", "certs", "proposals", "splits", "versions", "participants"),
-      Seq("final", "gl"), (s: SparkSession, ctx) => {
-        import s.implicits._
-        val calcCerts = ctx("certs").groupBy(col("cert_id"))
-          .agg(first(col("group_id")).as("group_id"), first(col("state")).as("state"),
-            first(col("product_code")).as("product_code"), first(col("plan_code")).as("plan_code"))
-          .withColumn("group_size", lit(null).cast("int"))
-          .withColumn("real_rate", lit(null).cast("double"))
-        val rates = Seq(("SCHED1", "*", "*",
-          null.asInstanceOf[java.lang.Integer], null.asInstanceOf[java.lang.Integer], 10.0))
-          .toDF("schedule_code", "product_code", "state", "size_from", "size_to", "rate")
-        val assignments = Seq.empty[(String, String, Double, java.sql.Date, java.sql.Date)]
-          .toDF("broker_id", "recipient_id", "assigned_pct", "eff_from", "eff_to")
-        val txns = ctx("txns").select(col("txn_id").as("premium_id"), col("cert_id"),
-          col("group_id"), col("amount"), col("txn_date"))
-        // proposal frame for the calc as-of join: canonical group id back to raw
-        val props = ctx("proposals").select(col("proposal_id"),
-          regexp_replace(col("group_id"), "^G", "").as("group_id"),
-          col("eff_from").cast("date").as("eff_from"), col("eff_to").cast("date").as("eff_to"))
-        val fin = Calc.run(Calc.CalcInputs(txns, calcCerts, props, ctx("splits"),
-          ctx("versions"), ctx("participants"), rates, assignments))
-        Map("final" -> fin, "gl" -> Calc.glEntries(fin))
-      }),
-  )
+      PostTransforms.premiumTransactions(real, certLevel).withColumnRenamed("txn_id", "premium_id")
+    },
+    rates = Seq("SCHED1" -> 10.0),
+    routing = (0.5, 2.0, 50.0),
+    state = first(col("state")))
 
   lazy val run = new Pipeline.Runner(spark, steps(writeFixtureCsv())).run()
+  lazy val fin = Calc.run(DomainBench.calcInputs(run.frames))
 
   test("pipeline completes every step") {
-    assert(run.runLedger.map(_.status).forall(_ == Pipeline.Completed))
+    // the flagship's step names, in order: a step the spec adds or drops
+    // is a second wiring
+    assert(run.runLedger.map(e => e.step -> e.status) == Seq("load", "hashes", "routing",
+      "proposals", "splits", "premiums", "calc_inputs").map(_ -> Pipeline.Completed))
   }
 
   test("proposal inference: one proposal, 60/40 splits, two hierarchies") {
@@ -105,19 +68,19 @@ class EndToEndSpec extends SparkSpec {
   }
 
   test("premium transactions: real + cert-fallback for uncovered cert") {
-    val t = run.frames("txns").select(col("cert_id"), col("source"),
+    val t = run.frames("premiums").select(col("cert_id"), col("source"),
       col("amount").cast("double")).as[(Long, String, Double)].collect().toSet
     assert(t == Set((1L, "PREMIUM", 1000.0), (2L, "CERT_FALLBACK", 500.0)))
   }
 
   test("golden GL: total = premium_total * rate / 100, split 60/40") {
-    val gl = run.frames("gl").select(col("broker_id"), col("amount").cast("double"))
+    val gl = Calc.glEntries(fin).select(col("broker_id"), col("amount").cast("double"))
       .as[(String, Double)].collect().groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
     assert(gl == Map("P1" -> 90.0, "P2" -> 60.0)) // 1500 * 10% split 60/40
   }
 
   test("traceability: every premium covered, no missing rates") {
-    val t = Calc.traceability(run.frames("final"))
+    val t = Calc.traceability(fin)
       .select(col("premium_id"), col("total_commission").cast("double"), col("has_missing_rate"))
       .as[(String, Double, Int)].collect()
     assert(t.length == 2)
@@ -126,7 +89,6 @@ class EndToEndSpec extends SparkSpec {
   }
 
   test("resolution validator: 100% pass rate on the built entities") {
-    val hh = Proposals.hierarchyHashes(run.frames("certs"))
     val validated = ResolutionValidator.validate(
       run.frames("certs"), run.frames("configs"), run.frames("proposals")
         .select(col("group_id"), col("config_hash"), col("proposal_id")),
