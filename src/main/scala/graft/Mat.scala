@@ -14,7 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    lineage (it IS the lineage root).
   *  - `persist`: eagerly-counted `persist(MEMORY_AND_DISK)` — survives
   *    executor loss (recompute from lineage) at the cost of keeping the
-  *    lineage around. The right setting for a 1000-executor run.
+  *    lineage around. The setting for a multi-executor cluster.
   *
   * Any other value is rejected, so a typo cannot quietly fall back to the
   * non-durable default on a cluster.
@@ -26,9 +26,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * folded into its action.
   *
   * Iterative operators (connected components, deep BPE), the dedup and
-  * triangle fan-in frames, the streaming bloom sink and the domain
-  * pipeline's fan-in frames all route through here, so one env var moves
-  * the whole engine between single-JVM and cluster-durable materialization.
+  * triangle fan-in frames and the domain pipeline's fan-in frames all
+  * route through here, so one env var moves the whole engine between
+  * single-JVM and cluster-durable materialization.
   */
 object Mat {
   /** Whether the mode is `persist`: the `graft.mat` system property
@@ -75,7 +75,7 @@ object Mat {
     } else {
       val (d, rdd, n, h) = org.apache.spark.sql.GraftPlanBridge
         .reRootEdgeSig(df, localCkpt = true)
-      (d, () => { rdd.unpersist(false); () }, (n, h))
+      (d, () => org.apache.spark.sql.GraftPlanBridge.unpersist(rdd), (n, h))
     }
 
   /** Free every cached/persisted block the session holds — what a query's
@@ -83,6 +83,7 @@ object Mat {
     * driver run starts without the last one's memory pressure. */
   def releaseAll(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(org.apache.spark.sql.GraftPlanBridge.unpersist)
   }
 }

@@ -15,7 +15,7 @@ import graft.streaming.StreamOps
   * the beyond-parity corpus operators (d* dedup, v* vectors, x* text,
   * m* multimodal, st* streaming-in-batch, iv* intervals). `oracleSql` holds
   * the DuckDB-equivalent SQL for the driver's correctness gate; every
-  * query has one (GateContractSpec asserts it).
+  * query has one (`Q.oracle` is a required field).
   */
 object SparkEntry {
 
@@ -148,8 +148,16 @@ object SparkEntry {
       .otherwise(sub)
   }
 
-  private type QFn = (SparkSession, String) => DataFrame
-  private case class Q(name: String, fn: QFn, oracle: Option[String])
+  private[graft] type QFn = (SparkSession, String) => DataFrame
+  private[graft] case class Q(name: String, fn: QFn, oracle: String)
+
+  /** `qs`, if no two share a name: `queries` and `oracleSql` are maps,
+    * where a second entry of a name would silently replace the first. */
+  private[graft] def uniqueNames(qs: Seq[Q]): Seq[Q] = {
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty, s"query names defined twice: ${dups.toSeq.sorted.mkString(", ")}")
+    qs
+  }
 
   /** Generated Poisson-bootstrap oracle: one uniform + one inverse-CDF
     * weight column per resample, 2B conditional sums, in-row sort of the
@@ -1174,7 +1182,7 @@ object SparkEntry {
                        coalesce(a.text, '') AS text
                      FROM raw r LEFT JOIN hagg a USING (doc_id))"""
 
-  private lazy val defs: Seq[Q] = Seq(
+  private lazy val defs: Seq[Q] = uniqueNames(Seq(
 
     // ===== S: scans / casts / gates / sinks (SURVEY §2.1) =====
 
@@ -1203,7 +1211,7 @@ object SparkEntry {
         .withColumn("premium", col("premium").cast("double"))
         .withColumn("split_pct", col("split_pct").cast("double"))
     },
-      Some(s"SELECT * FROM read_parquet('$repoRoot/fixtures/s1_cert_typed.parquet')")),
+      s"SELECT * FROM read_parquet('$repoRoot/fixtures/s1_cert_typed.parquet')"),
 
     Q("s2_header_gate", (s, d) => {
       // S2 archive-ingest gate (`scripts/ingest-raw-data.ts:1-676`): route
@@ -1225,14 +1233,14 @@ object SparkEntry {
           a.reason.orNull))
         .toDF("file", "target_table", "n_columns", "missing", "extra", "reason")
     },
-      Some("""SELECT * FROM (VALUES
+      """SELECT * FROM (VALUES
               ('CertificateInfo_drift.csv', 'raw_certificate_info', 13,
                'Product,PlanCode', NULL::VARCHAR, 'missing columns: Product, PlanCode'),
               ('CertificateInfo_ok.csv', 'raw_certificate_info', 16,
                NULL, 'Bonus', NULL),
               ('Premiums_2024.csv', 'raw_premiums', 3, NULL, NULL, NULL),
               ('Readme.csv', NULL, 0, NULL, NULL, 'no routing prefix matches'))
-              t(file, target_table, n_columns, missing, extra, reason)""")),
+              t(file, target_table, n_columns, missing, extra, reason)"""),
 
     Q("s4_typed_cast", (s, d) =>
       li(s, d).select(
@@ -1240,9 +1248,9 @@ object SparkEntry {
         floor(col("l_quantity")).cast("int").as("qty_int"),
         Cleaning.cleanStr(col("l_returnflag")).as("flag"),
         round(col("l_extendedprice"), 2).as("price")),
-      Some("""SELECT l_orderkey, l_linenumber, floor(l_quantity)::INT AS qty_int,
+      """SELECT l_orderkey, l_linenumber, floor(l_quantity)::INT AS qty_int,
               NULLIF(TRIM(l_returnflag), '') AS flag, round(l_extendedprice, 2) AS price
-              FROM lineitem""")),
+              FROM lineitem"""),
 
     Q("s5_conformance_gate", (s, d) => {
       val e = ev(s, d).withColumn("props_c",
@@ -1250,18 +1258,18 @@ object SparkEntry {
       val (_, bad) = Routing.conformanceGate(e, Seq("props_c", "user_id"))
       bad.select(col("event_id"), col("reason_props_c"), col("reason_user_id"))
     },
-      Some("""SELECT event_id,
+      """SELECT event_id,
               (CASE WHEN event_type='error' THEN NULL ELSE props END) IS NULL AS reason_props_c,
               user_id IS NULL AS reason_user_id
               FROM events
               WHERE (CASE WHEN event_type='error' THEN NULL ELSE props END) IS NULL
-                 OR user_id IS NULL""")),
+                 OR user_id IS NULL"""),
 
     Q("s8_export_upsert", (s, d) =>
       cst(s, d).join(ord(s, d), col("c_custkey") === col("o_custkey"), "left_anti")
         .select(col("c_custkey"), col("c_name")),
-      Some("""SELECT c_custkey, c_name FROM customer c
-              WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""")),
+      """SELECT c_custkey, c_name FROM customer c
+              WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)"""),
 
     Q("s8b_export_targets", (s, d) => {
       // the reference's production export surface as data: all 38 dbo
@@ -1275,7 +1283,7 @@ object SparkEntry {
         .toDF("target_table", "key_cols", "n_keys", "fk_dim")
         .withColumn("n_keys", col("n_keys").cast("int"))
     },
-      Some("""SELECT * FROM (VALUES
+      """SELECT * FROM (VALUES
               ('BrokerAppointments', 'BrokerId,StateCode', 2, 'Brokers'),
               ('BrokerBankingInfos', 'BrokerId', 1, 'Brokers'),
               ('BrokerEOInsurances', 'BrokerId', 1, 'Brokers'),
@@ -1314,7 +1322,7 @@ object SparkEntry {
               ('SplitDistributions', 'Id', 1, NULL),
               ('StateRuleStates', 'Id', 1, NULL),
               ('StateRules', 'Id', 1, NULL))
-              t(target_table, key_cols, n_keys, fk_dim)""")),
+              t(target_table, key_cols, n_keys, fk_dim)"""),
 
     // ===== P: projections / predicates (SURVEY §2.2) =====
 
@@ -1325,15 +1333,15 @@ object SparkEntry {
           .when(col("o_orderstatus") === "P", "PARTIAL")
           .otherwise("UNKNOWN").as("status"))
         .groupBy("status").agg(count(lit(1)).as("n")),
-      Some("""SELECT CASE o_orderstatus WHEN 'O' THEN 'OPEN' WHEN 'F' THEN 'FILLED'
+      """SELECT CASE o_orderstatus WHEN 'O' THEN 'OPEN' WHEN 'F' THEN 'FILLED'
               WHEN 'P' THEN 'PARTIAL' ELSE 'UNKNOWN' END AS status, count(*) AS n
-              FROM orders GROUP BY 1""")),
+              FROM orders GROUP BY 1"""),
 
     Q("p4_regex_filter", (s, d) =>
       doc(s, d).filter(col("text").rlike("join\\s+\\w+\\s+merge"))
         .select(col("doc_id"), col("n_chars")),
-      Some("""SELECT doc_id, n_chars FROM documents
-              WHERE regexp_matches(text, 'join\s+\w+\s+merge')""")),
+      """SELECT doc_id, n_chars FROM documents
+              WHERE regexp_matches(text, 'join\s+\w+\s+merge')"""),
 
     Q("p5_exclusion_filter", (s, d) => {
       val excl = prt(s, d).filter(col("p_size") >= 49).select(col("p_partkey"))
@@ -1341,38 +1349,38 @@ object SparkEntry {
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"), round(sum(col("l_quantity")), 2).as("qty"))
     },
-      Some("""SELECT l_returnflag, count(*) AS n, round(sum(l_quantity), 2) AS qty
+      """SELECT l_returnflag, count(*) AS n, round(sum(l_quantity), 2) AS qty
               FROM lineitem
               WHERE NOT EXISTS (SELECT 1 FROM part p
                                 WHERE p.p_partkey = l_partkey AND p.p_size >= 49)
-              GROUP BY 1""")),
+              GROUP BY 1"""),
 
     Q("p6_coalesce_chain", (s, d) =>
       cst(s, d).select(col("c_custkey"),
         coalesce(nullif(trim(col("c_mktsegment")), lit("HOUSEHOLD")),
           nullif(upper(col("c_name")), lit("")), lit("FALLBACK")).as("seg")),
-      Some("""SELECT c_custkey,
+      """SELECT c_custkey,
               COALESCE(NULLIF(TRIM(c_mktsegment), 'HOUSEHOLD'),
                        NULLIF(UPPER(c_name), ''), 'FALLBACK') AS seg
-              FROM customer""")),
+              FROM customer"""),
 
     Q("p7_date_rules", (s, d) =>
       ord(s, d).select(col("o_orderkey"),
         when(col("o_orderstatus") === "P", add_months(col("o_orderdate"), 24))
           .otherwise(to_date(col("o_orderdate"))).as("corrected")),
-      Some("""SELECT o_orderkey,
+      """SELECT o_orderkey,
               CASE WHEN o_orderstatus = 'P' THEN (o_orderdate + INTERVAL 24 MONTH)::DATE
                    ELSE o_orderdate::DATE END AS corrected
-              FROM orders""")),
+              FROM orders"""),
 
     Q("p8_sentinel_norm", (s, d) => {
       val raw = when(col("c_custkey") % 7 === 0, lit("")).otherwise(col("c_custkey").cast("string"))
       cst(s, d).select(col("c_custkey"),
         Cleaning.canonicalGroupId(Cleaning.dtcSentinel(raw)).as("group_id"))
     },
-      Some("""SELECT c_custkey,
+      """SELECT c_custkey,
               'G' || (CASE WHEN c_custkey % 7 = 0 THEN '00000' ELSE c_custkey::VARCHAR END) AS group_id
-              FROM customer""")),
+              FROM customer"""),
 
     // ===== J: joins (SURVEY §2.3) =====
 
@@ -1387,11 +1395,11 @@ object SparkEntry {
             .cast("double").as("revenue"),
           count(lit(1)).as("n"),
           countDistinct(col("o_custkey")).as("n_cust")),
-      Some("""SELECT o_orderpriority,
+      """SELECT o_orderpriority,
               round(sum(l_extendedprice::DECIMAL(12,2) * (1 - l_discount::DECIMAL(6,4))), 2)::DOUBLE AS revenue,
               count(*) AS n, count(DISTINCT o_custkey) AS n_cust
               FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-              GROUP BY 1""")),
+              GROUP BY 1"""),
 
     Q("j2_broadcast_dim", (s, d) =>
       cst(s, d)
@@ -1400,10 +1408,10 @@ object SparkEntry {
         .groupBy(col("r_name"))
         .agg(count(lit(1)).as("n_cust"),
           round(sum(col("c_acctbal").cast("decimal(12,2)")), 2).cast("double").as("acct")),
-      Some("""SELECT r_name, count(*) AS n_cust,
+      """SELECT r_name, count(*) AS n_cust,
               round(sum(c_acctbal::DECIMAL(12,2)), 2)::DOUBLE AS acct
               FROM customer JOIN nation ON c_nationkey = n_nationkey
-              JOIN region ON n_regionkey = r_regionkey GROUP BY 1""")),
+              JOIN region ON n_regionkey = r_regionkey GROUP BY 1"""),
 
     Q("j3_asof_range_join", (s, d) => {
       val o = ord(s, d)
@@ -1419,7 +1427,7 @@ object SparkEntry {
           strictUpper = true)
         .select(col("l_orderkey"), col("l_linenumber"), col("ver").as("version_key"))
     },
-      Some("""WITH dim AS (
+      """WITH dim AS (
                 SELECT o_custkey AS k, o_orderkey AS ver, o_orderdate AS f,
                        lead(o_orderdate) OVER (PARTITION BY o_custkey
                                                ORDER BY o_orderdate, o_orderkey) AS t
@@ -1429,7 +1437,7 @@ object SparkEntry {
                 FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey)
               SELECT f.l_orderkey, f.l_linenumber, d.ver AS version_key
               FROM fact f JOIN dim d
-                ON f.k = d.k AND f.ts >= d.f AND (d.t IS NULL OR f.ts < d.t)""")),
+                ON f.k = d.k AND f.ts >= d.f AND (d.t IS NULL OR f.ts < d.t)"""),
 
     Q("j3b_asof_native", (s, d) => {
       // Native sort-merge as-of exec (plans/AsOfJoinExec via the injected
@@ -1449,7 +1457,7 @@ object SparkEntry {
           o, dim, Seq("o_custkey" -> "c"), "t", "rt", "left_outer", strict = true)
         .select(col("o_orderkey"), col("prev_orderkey"))
     },
-      Some("""WITH o AS (
+      """WITH o AS (
                 SELECT o_orderkey, o_custkey,
                        datediff('day', DATE '1990-01-01', o_orderdate::DATE)::BIGINT * 1048576
                          + o_orderkey AS t
@@ -1460,7 +1468,7 @@ object SparkEntry {
                 FROM o f JOIN o d ON f.o_custkey = d.o_custkey AND d.t < f.t)
               SELECT f.o_orderkey, j.prev_orderkey
               FROM o f LEFT JOIN (SELECT o_orderkey, prev_orderkey FROM j WHERE rn = 1) j
-                USING (o_orderkey)""")),
+                USING (o_orderkey)"""),
 
     Q("j5_band_join", (s, d) => {
       val bands = {
@@ -1473,11 +1481,11 @@ object SparkEntry {
           round(sum(col("p_retailprice").cast("decimal(12,2)")).cast("double") / count(lit(1)), 4)
             .as("avg_price"))
     },
-      Some("""SELECT b.band, count(*) AS n,
+      """SELECT b.band, count(*) AS n,
               round(sum(p_retailprice::DECIMAL(12,2))::DOUBLE / count(*), 4) AS avg_price
               FROM part p JOIN (VALUES (1,10,'S'),(11,20,'M'),(21,35,'L'),(36,50,'XL'))
                 AS b(lo, hi, band) ON p.p_size BETWEEN b.lo AND b.hi
-              GROUP BY 1""")),
+              GROUP BY 1"""),
 
     Q("j6_wildcard_lookup", (s, d) => {
       val rules = {
@@ -1496,7 +1504,7 @@ object SparkEntry {
           payload = Seq("rate", "rule_id"))
         .select(col("p_partkey"), col("rate"), col("rule_id"))
     },
-      Some("""WITH r AS (SELECT * FROM (VALUES
+      """WITH r AS (SELECT * FROM (VALUES
                 ('Brand#1','STANDARD',5.0,1),('Brand#2','PROMO',4.5,2),
                 ('Brand#1','*',3.0,3),('Brand#3','*',2.5,4),
                 ('*','ECONOMY',2.0,5),('*','SMALL',1.5,6),
@@ -1508,7 +1516,7 @@ object SparkEntry {
               LEFT JOIN r e ON e.r_brand = p.p_brand AND e.r_class = p.p_type
               LEFT JOIN r b ON b.r_brand = p.p_brand AND b.r_class = '*'
               LEFT JOIN r c ON c.r_brand = '*' AND c.r_class = p.p_type
-              LEFT JOIN r g ON g.r_brand = '*' AND g.r_class = '*'""")),
+              LEFT JOIN r g ON g.r_brand = '*' AND g.r_class = '*'"""),
 
     Q("j7_nearest_match", (s, d) => {
       val pivot = to_timestamp(lit("1995-06-15")).cast("long")
@@ -1520,24 +1528,24 @@ object SparkEntry {
           tiebreak = Seq(col("o_orderkey")))
         .select(col("c_custkey"), col("o_orderkey").as("nearest_order"))
     },
-      Some("""SELECT c_custkey, o_orderkey AS nearest_order
+      """SELECT c_custkey, o_orderkey AS nearest_order
               FROM customer JOIN orders ON c_custkey = o_custkey
               QUALIFY row_number() OVER (PARTITION BY c_custkey
-                ORDER BY abs(epoch(o_orderdate) - epoch(TIMESTAMP '1995-06-15')), o_orderkey) = 1""")),
+                ORDER BY abs(epoch(o_orderdate) - epoch(TIMESTAMP '1995-06-15')), o_orderkey) = 1"""),
 
     Q("j8_semi_join", (s, d) =>
       ord(s, d).join(li(s, d).filter(col("l_quantity") >= 45),
           col("o_orderkey") === col("l_orderkey"), "left_semi")
         .select(col("o_orderkey"), col("o_totalprice")),
-      Some("""SELECT o_orderkey, o_totalprice FROM orders o
+      """SELECT o_orderkey, o_totalprice FROM orders o
               WHERE EXISTS (SELECT 1 FROM lineitem l
-                            WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity >= 45)""")),
+                            WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity >= 45)"""),
 
     Q("j9_anti_join", (s, d) =>
       cst(s, d).join(ord(s, d), col("c_custkey") === col("o_custkey"), "left_anti")
         .select(col("c_custkey"), col("c_acctbal")),
-      Some("""SELECT c_custkey, c_acctbal FROM customer c
-              WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""")),
+      """SELECT c_custkey, c_acctbal FROM customer c
+              WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)"""),
 
     Q("j10_top1_per_group", (s, d) =>
       Joins.top1PerGroup(ord(s, d),
@@ -1545,10 +1553,10 @@ object SparkEntry {
           order = Seq(col("o_orderdate").desc, col("o_orderkey").desc))
         .select(col("o_custkey"), col("o_orderkey").as("latest_order"),
           col("o_orderdate").as("latest_date")),
-      Some("""SELECT o_custkey, o_orderkey AS latest_order, o_orderdate AS latest_date
+      """SELECT o_custkey, o_orderkey AS latest_order, o_orderdate AS latest_date
               FROM orders
               QUALIFY row_number() OVER (PARTITION BY o_custkey
-                ORDER BY o_orderdate DESC, o_orderkey DESC) = 1""")),
+                ORDER BY o_orderdate DESC, o_orderkey DESC) = 1"""),
 
     Q("j4_fanout_join", (s, d) =>
       // 1:N explosion join (J4, run-calculation.sql stages 3/5): each part
@@ -1557,8 +1565,8 @@ object SparkEntry {
         .groupBy(col("p_partkey"))
         .agg(count(lit(1)).as("n_lines"),
           round(sum(col("l_quantity")), 2).as("total_qty")),
-      Some("""SELECT p_partkey, count(*) AS n_lines, round(sum(l_quantity), 2) AS total_qty
-              FROM part JOIN lineitem ON p_partkey = l_partkey GROUP BY 1""")),
+      """SELECT p_partkey, count(*) AS n_lines, round(sum(l_quantity), 2) AS total_qty
+              FROM part JOIN lineitem ON p_partkey = l_partkey GROUP BY 1"""),
 
     Q("j11_lateral_count", (s, d) => {
       // CROSS APPLY participant-count (J11, 08-hierarchy-splits.sql:313-317)
@@ -1567,9 +1575,9 @@ object SparkEntry {
       ord(s, d).join(counts, col("o_orderkey") === col("l_orderkey"), "left")
         .select(col("o_orderkey"), coalesce(col("n_lines"), lit(0L)).as("n_lines"))
     },
-      Some("""SELECT o_orderkey,
+      """SELECT o_orderkey,
               coalesce((SELECT count(*) FROM lineitem l WHERE l.l_orderkey = o.o_orderkey), 0) AS n_lines
-              FROM orders o""")),
+              FROM orders o"""),
 
     Q("j12_transferee_anti", (s, d) => {
       // transferee-exclusion shape (J12, README.md:311-335): customers in
@@ -1582,11 +1590,11 @@ object SparkEntry {
       reassigned.join(earners, col("c_custkey") === col("o_custkey"), "left_anti")
         .select(col("c_custkey"), col("c_name"))
     },
-      Some("""SELECT c_custkey, c_name FROM customer c
+      """SELECT c_custkey, c_name FROM customer c
               WHERE c_mktsegment = 'BUILDING'
                 AND NOT EXISTS (SELECT 1 FROM orders o
                                 WHERE o.o_custkey = c.c_custkey
-                                  AND year(o.o_orderdate) = 1995)""")),
+                                  AND year(o.o_orderdate) = 1995)"""),
 
     Q("j13_salted_join", (s, d) => {
       // skew-salted join must be result-identical to the plain join —
@@ -1598,9 +1606,9 @@ object SparkEntry {
       joined.groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"), round(sum(col("l_quantity")), 2).as("qty"))
     },
-      Some("""SELECT o_orderpriority, count(*) AS n, round(sum(l_quantity), 2) AS qty
+      """SELECT o_orderpriority, count(*) AS n, round(sum(l_quantity), 2) AS qty
               FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-              GROUP BY 1""")),
+              GROUP BY 1"""),
 
     Q("j15_record_linkage", (s, d) => {
       // blocked Fellegi-Sunter linkage: a 1-in-5 "inquiry" slice against a
@@ -1627,7 +1635,7 @@ object SparkEntry {
         Seq(("name", 4.0, -2.0), ("band", 2.0, -1.0), ("seg", 1.5, -1.0)),
         threshold = 4.0)
     },
-      Some("""WITH a AS (SELECT c_custkey AS id_a, c_nationkey AS blk,
+      """WITH a AS (SELECT c_custkey AS id_a, c_nationkey AS blk,
                        lower(c_name) AS name, floor(c_acctbal / 1000)::INT AS band,
                        c_mktsegment AS seg
                 FROM customer WHERE c_custkey % 5 = 0),
@@ -1649,7 +1657,7 @@ object SparkEntry {
                           + (CASE WHEN a.seg IS NULL OR b.seg IS NULL THEN 0.0
                                   WHEN a.seg = b.seg THEN 1.5 ELSE -1.0 END), 6) AS score
                     FROM a JOIN b USING (blk))
-              SELECT * FROM p WHERE score >= 4.0""")),
+              SELECT * FROM p WHERE score >= 4.0"""),
 
     Q("j16_fuzzy_join", (s, d) => {
       // Levenshtein fuzzy lookup: a deterministically-typo'd twin of the
@@ -1664,7 +1672,7 @@ object SparkEntry {
       Joins.fuzzyLookup(dirty, col("dirty_name"),
         prt(s, d), col("p_name"), maxDist = 2)
     },
-      Some("WITH " + typoPartCtes("", "dirty_name") + """,
+      "WITH " + typoPartCtes("", "dirty_name") + """,
               dn AS (SELECT dirty_name, count(*)::BIGINT AS n_rows
                      FROM dirty GROUP BY 1),
               vn AS (SELECT DISTINCT p_name AS match_cand FROM part),
@@ -1680,7 +1688,7 @@ object SparkEntry {
                       ON c.dirty_name = b.dirty_name AND c.dist = b.bd
                     GROUP BY 1)
               SELECT dn.dirty_name, m.match_name, m.best_dist, dn.n_rows
-              FROM dn LEFT JOIN m USING (dirty_name)""")),
+              FROM dn LEFT JOIN m USING (dirty_name)"""),
 
     Q("g_entity_resolution", (s, d) => {
       // fuzzy entity resolution across two source systems: the clean
@@ -1695,7 +1703,7 @@ object SparkEntry {
         .unionByName(dirty)
       Joins.fuzzyEntities(recs, col("rid"), col("nm"), maxDist = 2)
     },
-      Some("WITH RECURSIVE " + typoPartCtes("p_partkey * 2 + 1 AS rid, ", "nm") + """,
+      "WITH RECURSIVE " + typoPartCtes("p_partkey * 2 + 1 AS rid, ", "nm") + """,
               recs AS (SELECT p_partkey * 2 AS rid, p_name AS nm FROM part
                        UNION ALL SELECT rid, nm FROM dirty),
               names AS MATERIALIZED (SELECT nm, min(rid) AS nid,
@@ -1720,7 +1728,7 @@ object SparkEntry {
               SELECT entity,
                 min(CASE WHEN nid = entity THEN nm END) AS canonical_name,
                 count(*)::BIGINT AS n_names, sum(n_recs)::BIGINT AS n_records
-              FROM ent GROUP BY 1""")),
+              FROM ent GROUP BY 1"""),
 
     Q("j14_bloom_semi", (s, d) =>
       // bloom-prefiltered semi join must be result-identical to the plain
@@ -1731,9 +1739,9 @@ object SparkEntry {
         ord(s, d), li(s, d).filter(col("l_quantity") >= 49),
         "o_orderkey", "l_orderkey", expectedItems = 100000L)
         .select(col("o_orderkey"), col("o_totalprice").cast("double").as("total_price")),
-      Some("""SELECT o_orderkey, o_totalprice::DOUBLE AS total_price FROM orders
+      """SELECT o_orderkey, o_totalprice::DOUBLE AS total_price FROM orders
               WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem
-                                   WHERE l_quantity >= 49)""")),
+                                   WHERE l_quantity >= 49)"""),
 
     // ===== A: aggregations (SURVEY §2.4) =====
 
@@ -1744,9 +1752,9 @@ object SparkEntry {
         .groupBy(col("l_orderkey"), col("l_suppkey"))
         .agg(min(col("l_discount")).as("min_disc"),
           max(col("l_discount")).as("max_disc")),
-      Some("""SELECT l_orderkey, l_suppkey, min(l_discount) AS min_disc,
+      """SELECT l_orderkey, l_suppkey, min(l_discount) AS min_disc,
               max(l_discount) AS max_disc
-              FROM lineitem WHERE l_discount > 0 GROUP BY 1, 2""")),
+              FROM lineitem WHERE l_discount > 0 GROUP BY 1, 2"""),
 
     Q("a1_agg", (s, d) =>
       li(s, d).groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -1755,35 +1763,35 @@ object SparkEntry {
           round(avg(col("l_quantity")), 4).as("avg_qty"),
           count(lit(1)).as("n"),
           countDistinct(col("l_orderkey")).as("n_orders")),
-      Some("""SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 2) AS sum_qty,
+      """SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 2) AS sum_qty,
               round(sum(l_extendedprice::DECIMAL(12,2)), 2)::DOUBLE AS sum_price,
               round(avg(l_quantity), 4) AS avg_qty,
               count(*) AS n, count(DISTINCT l_orderkey) AS n_orders
-              FROM lineitem GROUP BY 1, 2""")),
+              FROM lineitem GROUP BY 1, 2"""),
 
     Q("a2_conditional_agg", (s, d) =>
       ord(s, d).groupBy(col("o_orderpriority"))
         .agg(sum(when(col("o_orderstatus") === "F", 1).otherwise(0)).as("n_filled"),
           max(when(col("o_orderstatus") === "O", col("o_totalprice"))).as("max_open_price")),
-      Some("""SELECT o_orderpriority,
+      """SELECT o_orderpriority,
               sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END)::BIGINT AS n_filled,
               max(CASE WHEN o_orderstatus = 'O' THEN o_totalprice END) AS max_open_price
-              FROM orders GROUP BY 1""")),
+              FROM orders GROUP BY 1"""),
 
     Q("a3_string_agg_ordered", (s, d) =>
       sup(s, d).join(broadcast(nat(s, d)), col("s_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name"))
         .agg(concat_ws(",", sort_array(collect_list(col("s_name")))).as("suppliers"),
           count(lit(1)).as("n")),
-      Some("""SELECT n_name, string_agg(s_name, ',' ORDER BY s_name) AS suppliers,
+      """SELECT n_name, string_agg(s_name, ',' ORDER BY s_name) AS suppliers,
               count(*) AS n
-              FROM supplier JOIN nation ON s_nationkey = n_nationkey GROUP BY 1""")),
+              FROM supplier JOIN nation ON s_nationkey = n_nationkey GROUP BY 1"""),
 
     Q("a4_having", (s, d) =>
       ord(s, d).groupBy(col("o_custkey")).agg(count(lit(1)).as("n"))
         .filter(col("n") >= 12),
-      Some("""SELECT o_custkey, count(*) AS n FROM orders
-              GROUP BY 1 HAVING count(*) >= 12""")),
+      """SELECT o_custkey, count(*) AS n FROM orders
+              GROUP BY 1 HAVING count(*) >= 12"""),
 
     Q("a5_rollup_traceability", (s, d) =>
       li(s, d).groupBy(col("l_orderkey"))
@@ -1793,16 +1801,16 @@ object SparkEntry {
             .cast("double").as("charge"),
           count(lit(1)).as("n_lines"),
           countDistinct(col("l_suppkey")).as("n_supp")),
-      Some("""SELECT l_orderkey,
+      """SELECT l_orderkey,
               round(sum(l_extendedprice::DECIMAL(12,2) * (1 + l_tax::DECIMAL(6,4))
                         * (1 - l_discount::DECIMAL(6,4))), 2)::DOUBLE AS charge,
               count(*) AS n_lines, count(DISTINCT l_suppkey) AS n_supp
-              FROM lineitem GROUP BY 1""")),
+              FROM lineitem GROUP BY 1"""),
 
     Q("a8_entropy_routing", (s, d) =>
       Routing.entropyRouting(
         Routing.entropyMetrics(doc(s, d), col("source"), col("lang"))),
-      Some("""WITH c AS (SELECT source AS grp, lang AS cfg, count(*)::BIGINT AS cnt
+      """WITH c AS (SELECT source AS grp, lang AS cfg, count(*)::BIGINT AS cnt
                          FROM documents GROUP BY 1, 2),
               m AS (SELECT grp, sum(cnt)::BIGINT AS n_members, count(*)::BIGINT AS n_configs,
                            max(cnt) AS max_cluster FROM c GROUP BY 1),
@@ -1816,7 +1824,7 @@ object SparkEntry {
                       (round(m.n_configs::DOUBLE / m.n_members, 6) > 0.5
                        OR e.entropy > 2.0
                        OR round(m.max_cluster * 100.0 / m.n_members, 2) < 50.0)) AS route_pha
-              FROM m JOIN e USING (grp)""")),
+              FROM m JOIN e USING (grp)"""),
 
     Q("f_percentile", (s, d) =>
       // exact percentiles (linear interpolation): quartile fractions are
@@ -1826,18 +1834,18 @@ object SparkEntry {
         .agg(round(expr("percentile(l_quantity, 0.5)"), 4).as("p50_qty"),
           round(expr("percentile(l_extendedprice, 0.25)"), 4).as("p25_price"),
           round(expr("percentile(l_extendedprice, 0.75)"), 4).as("p75_price")),
-      Some("""SELECT l_returnflag,
+      """SELECT l_returnflag,
               round(quantile_cont(l_quantity, 0.5), 4) AS p50_qty,
               round(quantile_cont(l_extendedprice, 0.25), 4) AS p25_price,
               round(quantile_cont(l_extendedprice, 0.75), 4) AS p75_price
-              FROM lineitem GROUP BY 1""")),
+              FROM lineitem GROUP BY 1"""),
 
     Q("g_profile", (s, d) =>
       // one-pass column profiler (nulls / distinct / min / max per column)
       // in exact-distinct mode so the whole report is oracle-checkable
       graft.domain.Audit.profile(nat(s, d), exactDistinct = true)
         .withColumnRenamed("approx_distinct", "n_distinct"),
-      Some("""SELECT 'n_nationkey' AS "column", 'int' AS type,
+      """SELECT 'n_nationkey' AS "column", 'int' AS type,
                      sum((n_nationkey IS NULL)::INT)::BIGINT AS n_nulls,
                      count(DISTINCT n_nationkey) AS n_distinct,
                      min(n_nationkey)::VARCHAR AS min, max(n_nationkey)::VARCHAR AS max
@@ -1848,7 +1856,7 @@ object SparkEntry {
               UNION ALL
               SELECT 'n_regionkey', 'int', sum((n_regionkey IS NULL)::INT)::BIGINT,
                      count(DISTINCT n_regionkey),
-                     min(n_regionkey)::VARCHAR, max(n_regionkey)::VARCHAR FROM nation""")),
+                     min(n_regionkey)::VARCHAR, max(n_regionkey)::VARCHAR FROM nation"""),
 
     Q("a12_rollup", (s, d) =>
       // rollup subtotals + grouping id (beyond the reference's UNION ALL
@@ -1856,9 +1864,9 @@ object SparkEntry {
       li(s, d).rollup(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("n"), grouping_id().cast("int").as("gid"))
         .select(col("l_returnflag"), col("l_linestatus"), col("gid"), col("n")),
-      Some("""SELECT l_returnflag, l_linestatus,
+      """SELECT l_returnflag, l_linestatus,
               GROUPING(l_returnflag, l_linestatus)::INT AS gid, count(*) AS n
-              FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""")),
+              FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)"""),
 
     Q("a21_cube", (s, d) =>
       // full CUBE: every subtotal combination + grouping id, decimal money
@@ -1869,10 +1877,10 @@ object SparkEntry {
           grouping_id().cast("int").as("gid"))
         .select(col("l_returnflag"), col("l_linestatus"), col("gid"),
           col("n"), col("total")),
-      Some("""SELECT l_returnflag, l_linestatus,
+      """SELECT l_returnflag, l_linestatus,
               GROUPING(l_returnflag, l_linestatus)::INT AS gid, count(*) AS n,
               round(sum(l_extendedprice::DECIMAL(14,2)), 2)::DOUBLE AS total
-              FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)""")),
+              FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)"""),
 
     Q("f_array_agg", (s, d) =>
       // canonical scalar form (sorted, comma-joined): raw array columns
@@ -1880,10 +1888,10 @@ object SparkEntry {
       li(s, d).groupBy(col("l_orderkey"))
         .agg(array_join(array_sort(collect_set(col("l_returnflag"))), ",").as("flags"),
           countDistinct(col("l_returnflag")).as("n_flags")),
-      Some("""SELECT l_orderkey,
+      """SELECT l_orderkey,
               array_to_string(list_sort(list(DISTINCT l_returnflag)), ',') AS flags,
               count(DISTINCT l_returnflag) AS n_flags
-              FROM lineitem GROUP BY 1""")),
+              FROM lineitem GROUP BY 1"""),
 
     Q("a13_countmin", (s, d) => {
       // deterministic count-min sketch (md5-derived hashes, no RNG):
@@ -1899,7 +1907,7 @@ object SparkEntry {
         .select(col("o_custkey"), col("true_cnt"), col("cm_estimate"),
           (col("cm_estimate") >= col("true_cnt")).as("no_undercount"))
     },
-      Some("""WITH rws AS (SELECT unnest(generate_series(0, 3)) AS r),
+      """WITH rws AS (SELECT unnest(generate_series(0, 3)) AS r),
               cells AS (SELECT r,
                           ('0x' || substr(md5(r::VARCHAR || ':' || o_custkey::VARCHAR), 1, 8))::BIGINT
                             % 256 AS c,
@@ -1915,7 +1923,7 @@ object SparkEntry {
                      min(coalesce(cells.cnt, 0))::BIGINT AS cm_estimate,
                      min(coalesce(cells.cnt, 0)) >= f.true_cnt AS no_undercount
               FROM fan f LEFT JOIN cells ON cells.r = f.r AND cells.c = f.c
-              GROUP BY f.o_custkey, f.true_cnt""")),
+              GROUP BY f.o_custkey, f.true_cnt"""),
 
     // ===== W: windows (SURVEY §2.5) =====
 
@@ -1924,17 +1932,17 @@ object SparkEntry {
           Seq(col("o_orderdate"), col("o_orderkey")), "o_orderdate", "valid_to")
         .select(col("o_custkey"), col("o_orderkey"),
           col("o_orderdate").as("valid_from"), col("valid_to")),
-      Some("""SELECT o_custkey, o_orderkey, o_orderdate AS valid_from,
+      """SELECT o_custkey, o_orderkey, o_orderdate AS valid_from,
               lead(o_orderdate) OVER (PARTITION BY o_custkey
                 ORDER BY o_orderdate, o_orderkey) - INTERVAL 1 DAY AS valid_to
-              FROM orders""")),
+              FROM orders"""),
 
     Q("w5_pct_of_total", (s, d) =>
       Windows.pctOfTotal(
         cst(s, d).groupBy(col("c_mktsegment")).agg(count(lit(1)).as("n")), "n", "pct"),
-      Some("""SELECT c_mktsegment, count(*) AS n,
+      """SELECT c_mktsegment, count(*) AS n,
               round(count(*) * 100.0 / sum(count(*)) OVER (), 2) AS pct
-              FROM customer GROUP BY 1""")),
+              FROM customer GROUP BY 1"""),
 
     Q("w6_seq_label", (s, d) =>
       Windows.seqLabel(ord(s, d),
@@ -1943,11 +1951,11 @@ object SparkEntry {
           prefix = concat(lit("CUST-"), col("o_custkey")),
           dateCol = col("o_orderdate"), outName = "label")
         .select(col("o_custkey"), col("o_orderkey"), col("label")),
-      Some("""SELECT o_custkey, o_orderkey,
+      """SELECT o_custkey, o_orderkey,
               'CUST-' || o_custkey::VARCHAR || ' - ' || strftime(o_orderdate, '%Y-%m-%d')
                 || ' - ' || (row_number() OVER (PARTITION BY o_custkey
                              ORDER BY o_orderdate, o_orderkey))::VARCHAR AS label
-              FROM orders""")),
+              FROM orders"""),
 
     Q("w8_forward_fill", (s, d) =>
       // LOCF forward fill (the time-series staple Spark spells
@@ -1965,13 +1973,13 @@ object SparkEntry {
                 .unboundedPreceding, 0)))
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("last_purchase_value")),
-      Some("""SELECT event_id, user_id, event_type,
+      """SELECT event_id, user_id, event_type,
                 last_value(CASE WHEN event_type = 'purchase'
                                 THEN round(value, 6) END IGNORE NULLS)
                   OVER (PARTITION BY user_id ORDER BY ts
                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                   AS last_purchase_value
-              FROM events""")),
+              FROM events"""),
 
     Q("w7_rank_family", (s, d) => {
       // the full SQL ranking family in one pass: rank/dense_rank/
@@ -1991,7 +1999,7 @@ object SparkEntry {
         round(cume_dist().over(wTies), 6).as("cd"),
         ntile(4).over(wTotal).as("tile"))
     },
-      Some("""SELECT o_custkey, o_orderkey,
+      """SELECT o_custkey, o_orderkey,
                 (rank() OVER w1)::INT AS rnk,
                 (dense_rank() OVER w1)::INT AS drnk,
                 round(percent_rank() OVER w1, 6) AS prnk,
@@ -2000,7 +2008,7 @@ object SparkEntry {
               FROM orders
               WINDOW w1 AS (PARTITION BY o_custkey ORDER BY month(o_orderdate)),
                      w2 AS (PARTITION BY o_custkey
-                            ORDER BY month(o_orderdate), o_orderkey)""")),
+                            ORDER BY month(o_orderdate), o_orderkey)"""),
 
     // ===== sorts / limits / set ops (SURVEY §2.6, §2.7) =====
 
@@ -2010,7 +2018,7 @@ object SparkEntry {
       // z-ordered layout gives a reader's predicate pushdown
       graft.operators.Layout.zBucketStats(li(s, d),
         col("l_partkey"), col("l_suppkey"), bits = 16, bucketShift = 20),
-      Some("""WITH z AS (SELECT l_partkey AS a, l_suppkey AS b,
+      """WITH z AS (SELECT l_partkey AS a, l_suppkey AS b,
                 list_sum([(((a >> i) & 1) << (2 * i))
                           + (((b >> i) & 1) << (2 * i + 1))
                           for i in generate_series(0, 15)])::BIGINT AS zv
@@ -2018,7 +2026,7 @@ object SparkEntry {
               SELECT (zv >> 20)::BIGINT AS bucket, count(*)::BIGINT AS n_rows,
                      min(a)::BIGINT AS min_a, max(a)::BIGINT AS max_a,
                      min(b)::BIGINT AS min_b, max(b)::BIGINT AS max_b
-              FROM z GROUP BY 1""")),
+              FROM z GROUP BY 1"""),
 
     Q("s10_bucket_join", (s, d) => {
       // Bucketed-layout co-location (the Spark answer to the reference's
@@ -2043,11 +2051,11 @@ object SparkEntry {
             .cast("double").as("line_total"),
           max(col("o_totalprice")).as("order_total"))
     },
-      Some("""SELECT l_orderkey, count(*) AS n_lines,
+      """SELECT l_orderkey, count(*) AS n_lines,
               round(sum(l_extendedprice::DECIMAL(12,2)), 2)::DOUBLE AS line_total,
               max(o_totalprice) AS order_total
               FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-              GROUP BY 1""")),
+              GROUP BY 1"""),
 
     Q("s11_gen_source", (s, d) => {
       // Custom DataSource V2 (graft.sources.GenSource): a computed corpus
@@ -2066,7 +2074,7 @@ object SparkEntry {
           min(col("score")).as("min_score"),
           max(col("score")).as("max_score"))
     },
-      Some("""WITH g AS (SELECT md5('gen-' || i::VARCHAR) AS h
+      """WITH g AS (SELECT md5('gen-' || i::VARCHAR) AS h
                 FROM generate_series(1000, 8999) t(i)),
               d AS (SELECT ('0x' || substr(h, 1, 8))::BIGINT AS a,
                            ('0x' || substr(h, 9, 8))::BIGINT AS b,
@@ -2078,20 +2086,20 @@ object SparkEntry {
               SELECT source, lang, count(*) AS n_docs,
                      sum(tokens)::BIGINT AS sum_tokens,
                      min(score) AS min_score, max(score) AS max_score
-              FROM e WHERE score < 0.75 GROUP BY 1, 2""")),
+              FROM e WHERE score < 0.75 GROUP BY 1, 2"""),
 
     Q("s6_topk", (s, d) =>
       prt(s, d).orderBy(col("p_retailprice").desc, col("p_partkey").asc)
         .limit(10).select(col("p_partkey"), col("p_name"), col("p_retailprice")),
-      Some("""SELECT p_partkey, p_name, p_retailprice FROM part
-              ORDER BY p_retailprice DESC, p_partkey ASC LIMIT 10""")),
+      """SELECT p_partkey, p_name, p_retailprice FROM part
+              ORDER BY p_retailprice DESC, p_partkey ASC LIMIT 10"""),
 
     Q("set1_union_dedup", (s, d) =>
       cst(s, d).select(col("c_nationkey").as("nationkey"))
         .union(sup(s, d).select(col("s_nationkey").as("nationkey")))
         .distinct(),
-      Some("""SELECT c_nationkey AS nationkey FROM customer
-              UNION SELECT s_nationkey FROM supplier""")),
+      """SELECT c_nationkey AS nationkey FROM customer
+              UNION SELECT s_nationkey FROM supplier"""),
 
     Q("set2_audit_counts", (s, d) => {
       val o = ord(s, d); val l = li(s, d); val c = cst(s, d)
@@ -2103,23 +2111,23 @@ object SparkEntry {
         .agg(count(lit(1)).as("n")).select(lit("lines_without_orders").as("metric"), col("n"))
       m1.unionByName(m2).unionByName(m3)
     },
-      Some("""SELECT 'orders_without_lines' AS metric, count(*) AS n FROM orders o
+      """SELECT 'orders_without_lines' AS metric, count(*) AS n FROM orders o
               WHERE NOT EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)
               UNION ALL
               SELECT 'customers_without_orders', count(*) FROM customer c
               WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
               UNION ALL
               SELECT 'lines_without_orders', count(*) FROM lineitem l
-              WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)""")),
+              WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)"""),
 
     Q("set3_intersect", (s, d) => {
       val o = ord(s, d)
       o.filter(year(col("o_orderdate")) === 1994).select(col("o_custkey"))
         .intersect(o.filter(year(col("o_orderdate")) === 1995).select(col("o_custkey")))
     },
-      Some("""SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1994
+      """SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1994
               INTERSECT
-              SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995""")),
+              SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995"""),
 
     // ===== F: scalar function families (SURVEY §2.8) =====
 
@@ -2129,9 +2137,9 @@ object SparkEntry {
         length(col("p_name")).as("nlen"),
         regexp_replace(col("p_name"), " ", "_").as("snake"),
         concat_ws(":", col("p_brand"), col("p_type")).as("bt")),
-      Some("""SELECT p_partkey, upper(substr(p_name, 1, 12)) AS uname,
+      """SELECT p_partkey, upper(substr(p_name, 1, 12)) AS uname,
               length(p_name)::INT AS nlen, replace(p_name, ' ', '_') AS snake,
-              p_brand || ':' || p_type AS bt FROM part""")),
+              p_brand || ':' || p_type AS bt FROM part"""),
 
     Q("f_dates", (s, d) =>
       ord(s, d).select(col("o_orderkey"),
@@ -2141,39 +2149,39 @@ object SparkEntry {
         date_add(col("o_orderdate"), 30).as("plus30d"),
         datediff(col("o_orderdate"), lit("1995-01-01")).as("days_since"),
         date_format(col("o_orderdate"), "yyyy-MM").as("ym")),
-      Some("""SELECT o_orderkey, year(o_orderdate)::INT AS yr, month(o_orderdate)::INT AS mo,
+      """SELECT o_orderkey, year(o_orderdate)::INT AS yr, month(o_orderdate)::INT AS mo,
               (o_orderdate + INTERVAL 3 MONTH)::DATE AS plus3m,
               (o_orderdate + INTERVAL 30 DAY)::DATE AS plus30d,
               date_diff('day', DATE '1995-01-01', o_orderdate)::INT AS days_since,
               strftime(o_orderdate, '%Y-%m') AS ym
-              FROM orders""")),
+              FROM orders"""),
 
     Q("f_hash", (s, d) =>
       cst(s, d).select(col("c_custkey"),
         md5(col("c_name")).as("h_md5"),
         sha2(concat_ws("|", col("c_custkey"), col("c_name")), 256).as("h_sha"),
         upper(sha2(concat_ws("|", col("c_custkey"), col("c_name")), 256)).as("h_sha_up")),
-      Some("""SELECT c_custkey, md5(c_name) AS h_md5,
+      """SELECT c_custkey, md5(c_name) AS h_md5,
               sha256(c_custkey::VARCHAR || '|' || c_name) AS h_sha,
               upper(sha256(c_custkey::VARCHAR || '|' || c_name)) AS h_sha_up
-              FROM customer""")),
+              FROM customer"""),
 
     Q("f_json", (s, d) =>
       ev(s, d).select(col("event_id"),
         get_json_object(col("props"), "$.k").cast("int").as("k_val"),
         get_json_object(col("props"), "$.k").isNotNull.as("has_k")),
-      Some("""SELECT event_id, json_extract_string(props, '$.k')::INT AS k_val,
+      """SELECT event_id, json_extract_string(props, '$.k')::INT AS k_val,
               json_extract_string(props, '$.k') IS NOT NULL AS has_k
-              FROM events""")),
+              FROM events"""),
 
     Q("f_split_explode", (s, d) =>
       // STRING_SPLIT + explode (§2.8): corpus word frequencies
       doc(s, d).select(explode(split(trim(col("text")), "\\s+")).as("word"))
         .groupBy(col("word")).agg(count(lit(1)).as("n"))
         .filter(col("n") >= 100),
-      Some("""SELECT word, count(*) AS n FROM (
+      """SELECT word, count(*) AS n FROM (
                 SELECT unnest(string_split_regex(trim(text), '\s+')) AS word FROM documents)
-              GROUP BY 1 HAVING count(*) >= 100""")),
+              GROUP BY 1 HAVING count(*) >= 100"""),
 
     Q("f_pivot", (s, d) =>
       // pivot: linestatus columns per returnflag (reference fakes this
@@ -2183,21 +2191,21 @@ object SparkEntry {
         .agg(count(lit(1)))
         .withColumnRenamed("F", "n_f").withColumnRenamed("O", "n_o")
         .na.fill(0L, Seq("n_f", "n_o")),
-      Some("""SELECT l_returnflag,
+      """SELECT l_returnflag,
               sum(CASE WHEN l_linestatus = 'F' THEN 1 ELSE 0 END)::BIGINT AS n_f,
               sum(CASE WHEN l_linestatus = 'O' THEN 1 ELSE 0 END)::BIGINT AS n_o
-              FROM lineitem GROUP BY 1""")),
+              FROM lineitem GROUP BY 1"""),
 
     Q("f_unpivot", (s, d) =>
       // unpivot/stack: measures to rows (inverse of the YearN pivot)
       li(s, d).selectExpr("l_orderkey", "l_linenumber",
         "stack(3, 'qty', l_quantity, 'price', l_extendedprice, 'disc', l_discount)" +
           " as (measure, value)"),
-      Some("""SELECT l_orderkey, l_linenumber, 'qty' AS measure, l_quantity AS value FROM lineitem
+      """SELECT l_orderkey, l_linenumber, 'qty' AS measure, l_quantity AS value FROM lineitem
               UNION ALL
               SELECT l_orderkey, l_linenumber, 'price', l_extendedprice FROM lineitem
               UNION ALL
-              SELECT l_orderkey, l_linenumber, 'disc', l_discount FROM lineitem""")),
+              SELECT l_orderkey, l_linenumber, 'disc', l_discount FROM lineitem"""),
 
     Q("a11_topk_aggregator", (s, d) => {
       // typed bounded-buffer top-k per group (O(k) state, map-side merge)
@@ -2209,10 +2217,10 @@ object SparkEntry {
         .select(col("o_custkey"), (col("pos") + 1).as("rank"),
           col("col._2").as("o_orderkey"), col("col._1").as("o_totalprice"))
     },
-      Some("""SELECT o_custkey, (row_number() OVER w)::INT AS rank, o_orderkey, o_totalprice
+      """SELECT o_custkey, (row_number() OVER w)::INT AS rank, o_orderkey, o_totalprice
               FROM orders
               WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey)
-              QUALIFY row_number() OVER w <= 3""")),
+              QUALIFY row_number() OVER w <= 3"""),
 
     Q("a10_approx_distinct", (s, d) =>
       // HLL sketch — the approximate path for COUNT(DISTINCT) at scale.
@@ -2225,9 +2233,9 @@ object SparkEntry {
         .select(col("l_returnflag"), col("exact_parts"),
           (abs(col("approx") - col("exact_parts")) <=
             col("exact_parts") * 0.05).as("within_5pct")),
-      Some("""SELECT l_returnflag, count(DISTINCT l_partkey) AS exact_parts,
+      """SELECT l_returnflag, count(DISTINCT l_partkey) AS exact_parts,
               true AS within_5pct
-              FROM lineitem GROUP BY 1""")),
+              FROM lineitem GROUP BY 1"""),
 
     Q("a17_approx_quantile", (s, d) =>
       // approx_percentile (GK sketch) — the scale path for quantiles.
@@ -2250,8 +2258,8 @@ object SparkEntry {
           (abs(col("rank_apx") - col("n") * 0.5) <= col("n") * 0.001 + 1)
             .as("rank_within_eps"))
       },
-      Some("""SELECT l_returnflag, count(*)::BIGINT AS n, true AS rank_within_eps
-              FROM lineitem GROUP BY 1""")),
+      """SELECT l_returnflag, count(*)::BIGINT AS n, true AS rank_within_eps
+              FROM lineitem GROUP BY 1"""),
 
     // ===== G: proposal-builder-shaped composites (SURVEY §2.10) =====
 
@@ -2265,21 +2273,21 @@ object SparkEntry {
         .agg(upper(sha2(concat_ws("|", sort_array(collect_list(col("item")))), 256)).as("cfg_hash"),
           count(lit(1)).as("n_items"))
     },
-      Some("""WITH i AS (SELECT o_custkey,
+      """WITH i AS (SELECT o_custkey,
                 o_orderkey::VARCHAR || ':' || o_orderstatus || ':'
                   || round(o_totalprice * 100)::BIGINT::VARCHAR AS item
               FROM orders)
               SELECT o_custkey, upper(sha256(string_agg(item, '|' ORDER BY item))) AS cfg_hash,
                      count(*) AS n_items
-              FROM i GROUP BY 1""")),
+              FROM i GROUP BY 1"""),
 
     Q("g_keymap_explode", (s, d) =>
       ord(s, d).groupBy(col("o_custkey"))
         .agg(min(year(col("o_orderdate"))).as("y0"), max(year(col("o_orderdate"))).as("y1"))
         .select(col("o_custkey"), explode(sequence(col("y0"), col("y1"))).as("yr")),
-      Some("""WITH g AS (SELECT o_custkey, min(year(o_orderdate)) AS y0,
+      """WITH g AS (SELECT o_custkey, min(year(o_orderdate)) AS y0,
                                 max(year(o_orderdate)) AS y1 FROM orders GROUP BY 1)
-              SELECT o_custkey, unnest(generate_series(y0, y1))::INT AS yr FROM g""")),
+              SELECT o_custkey, unnest(generate_series(y0, y1))::INT AS yr FROM g"""),
 
     Q("g_overlap_fix", (s, d) => {
       // the overlap-repair state machine (proposal-builder.ts:1503-1700) on
@@ -2299,7 +2307,7 @@ object SparkEntry {
           array_join(col("plan_codes"), ",").as("plans"),
           col("is_continuation"))
     },
-      Some("""WITH props AS (
+      """WITH props AS (
                 SELECT 'G' || o_custkey::VARCHAR AS group_id,
                        'P' || o_orderkey::VARCHAR AS proposal_id,
                        o_orderdate::DATE AS eff_from, o_orderdate::DATE + 90 AS eff_to,
@@ -2321,7 +2329,7 @@ object SparkEntry {
                      prod, plan, true
               FROM x
               WHERE nxt_from IS NOT NULL AND eff_to >= nxt_from
-                AND (prod <> nxt_prod OR plan <> nxt_plan)""")),
+                AND (prod <> nxt_prod OR plan <> nxt_plan)"""),
 
     Q("g_consolidate_islands", (s, d) => {
       // the consolidation state machine (consolidate-proposals.ts:130-245)
@@ -2330,11 +2338,11 @@ object SparkEntry {
       // sticky-null end date and product-set union rules fully exercised
       consolidateOrders(s, d, array(lit("*")))
     },
-      Some(consolidateOracle("o_orderstatus AS prod", "",
+      consolidateOracle("o_orderstatus AS prod", "",
         """array_to_string(list_sort(list(DISTINCT prod)), ',') AS products,
           |'*' AS plans,
           |count(*)::INT AS n_merged
-          |FROM i GROUP BY group_id, island, config_md5""".stripMargin))),
+          |FROM i GROUP BY group_id, island, config_md5""".stripMargin)),
 
     Q("g_consolidate_conflicts", (s, d) => {
       // rule 3 (plan conflict) exercised for real: two-element CONCRETE
@@ -2345,12 +2353,12 @@ object SparkEntry {
       // replicates relationally.
       consolidateOrders(s, d, array(col("o_orderstatus"), col("o_orderpriority")))
     },
-      Some(consolidateOracle("o_orderstatus AS st, o_orderpriority AS pri",
+      consolidateOracle("o_orderstatus AS st, o_orderpriority AS pri",
         "\nOR lag(st) OVER w IS DISTINCT FROM st",
         """st AS products,
           |array_to_string(list_sort([st, pri]), ',') AS plans,
           |count(*)::INT AS n_merged
-          |FROM i GROUP BY group_id, island, config_md5, st, pri""".stripMargin))),
+          |FROM i GROUP BY group_id, island, config_md5, st, pri""".stripMargin)),
 
     Q("g_hierarchy_versions", (s, d) => {
       // temporal hierarchy versioning (07-deprecated-hierarchies.sql):
@@ -2361,12 +2369,12 @@ object SparkEntry {
           col("eff_from").cast("date").as("eff_from"),
           col("eff_to").cast("date").as("eff_to"))
     },
-      Some("WITH " + orderVersionCtes + """
+      "WITH " + orderVersionCtes + """
               SELECT key, version_seq, signature, eff_from,
                      coalesce(lead(eff_from) OVER (PARTITION BY key
                                 ORDER BY eff_from, version_seq) - 1,
                               DATE '2099-01-01') AS eff_to
-              FROM g""")),
+              FROM g"""),
 
     Q("g_policy_waterfall", (s, d) => {
       // the 4-tier policy->proposal waterfall (09-policies.sql:128-180):
@@ -2390,7 +2398,7 @@ object SparkEntry {
       graft.domain.Policies.resolveProposals(pol, km)
         .select(col("policy_id"), col("resolved_proposal_id"), col("match_tier"))
     },
-      Some("""WITH pol AS (
+      """WITH pol AS (
                 SELECT o_orderkey AS policy_id,
                        'G' || (o_custkey % 500)::VARCHAR AS group_id,
                        o_orderpriority AS product_code, o_orderstatus AS plan_code,
@@ -2424,7 +2432,7 @@ object SparkEntry {
               SELECT policy_id,
                      CASE WHEN tier IS NOT NULL THEN proposal_id END AS resolved_proposal_id,
                      tier AS match_tier
-              FROM r WHERE rn = 1""")),
+              FROM r WHERE rn = 1"""),
 
     Q("g_products_transform", (s, d) =>
       // products core transform (03): certificate-shaped rows from part
@@ -2432,7 +2440,7 @@ object SparkEntry {
         col("p_brand").as("product_category"), col("p_type").as("product_code"),
         split(col("p_name"), " ").getItem(0).as("state"),
         col("p_partkey").cast("string").as("group_id"))),
-      Some("""WITH c AS (SELECT NULLIF(trim(p_brand), '') AS product_category,
+      """WITH c AS (SELECT NULLIF(trim(p_brand), '') AS product_category,
                                 NULLIF(trim(p_type), '') AS product_code,
                                 NULLIF(trim(split_part(p_name, ' ', 1)), '') AS state,
                                 NULLIF(trim(p_partkey::VARCHAR), '') AS group_id
@@ -2447,7 +2455,7 @@ object SparkEntry {
                      product_category || ' - ' || product_code AS description,
                      'Active' AS status,
                      row_number() OVER (ORDER BY product_category, product_code) AS id
-              FROM f GROUP BY 1, 2""")),
+              FROM f GROUP BY 1, 2"""),
 
     Q("g_banking_infos", (s, d) => {
       // broker banking extraction (12): all-3-fields gate, 'P'-strip
@@ -2478,7 +2486,7 @@ object SparkEntry {
         col("s_name").as("OrganizationName"))
       graft.domain.CoreTransforms.bankingInfos(ind, org)
     },
-      Some("""WITH ind_src AS (SELECT
+      """WITH ind_src AS (SELECT
                 CASE WHEN c_custkey % 13 = 0 THEN 'P' || c_custkey::VARCHAR || 'X'
                      ELSE 'P' || c_custkey::VARCHAR END AS pid,
                 CASE WHEN c_custkey % 7 = 0 THEN ' '
@@ -2535,7 +2543,7 @@ object SparkEntry {
               SELECT broker_id, 1 AS payment_preference, 'Unknown' AS bank_name,
                      routing_number, account_number, account_type,
                      nm AS account_holder_name, nm AS payee_name, notes
-              FROM unioned""")),
+              FROM unioned"""),
 
     Q("g_transferee_capture", (s, d) => {
       // assignment capture + transferee fix (proposal-builder.ts:642-662,
@@ -2556,7 +2564,7 @@ object SparkEntry {
         .select(col("broker_id"), col("recipient_id"),
           col("assigned_pct"), col("eff_from"))
     },
-      Some("""WITH c AS (
+      """WITH c AS (
                 SELECT l_orderkey AS cert_id, l_linenumber AS split_seq,
                        'P' || l_suppkey::VARCHAR AS broker_id,
                        CASE WHEN l_partkey % 22 = 0
@@ -2575,7 +2583,7 @@ object SparkEntry {
                            100.0::DOUBLE AS assigned_pct, eff_date AS eff_from
                     FROM cap WHERE rn = 1)
               SELECT * FROM a
-              WHERE recipient_id NOT IN (SELECT DISTINCT broker_id FROM c)""")),
+              WHERE recipient_id NOT IN (SELECT DISTINCT broker_id FROM c)"""),
 
     Q("g_pha_entities", (s, d) => {
       // PHA path (proposal-builder.ts:1189-1279): fresh per-certificate
@@ -2591,7 +2599,7 @@ object SparkEntry {
         maxUniqueRatio = 1.0, maxEntropy = 99.0, minDominantPct = 0.0)
       graft.domain.Pha.phaEntities(cfg, hh)
     },
-      Some("""WITH li AS (
+      """WITH li AS (
                 SELECT l_orderkey, l_linenumber, l_suppkey,
                        count(*) OVER (PARTITION BY l_orderkey) AS cnt,
                        row_number() OVER (PARTITION BY l_orderkey
@@ -2613,7 +2621,7 @@ object SparkEntry {
                        AS version_id,
                      1 AS tier_level, r.broker_id,
                      'SCHED' || r.sched_k::VARCHAR AS schedule_code
-              FROM rows0 r JOIN pha USING (cert_id)""")),
+              FROM rows0 r JOIN pha USING (cert_id)"""),
 
     Q("g_state_cascade", (s, d) => {
       // state-rule cascade (proposal-builder.ts:1308-1459): versions x
@@ -2633,7 +2641,7 @@ object SparkEntry {
       graft.domain.Pha.stateRuleCascade(v, st, pr, pa)
         .withColumn("distribution_pct", col("distribution_pct").cast("double"))
     },
-      Some("""WITH base AS (
+      """WITH base AS (
                 SELECT 'V' || (o_custkey % 10)::VARCHAR AS version_id,
                        o_orderpriority AS state, o_orderstatus AS product_code,
                        'B' || (o_orderkey % 7)::VARCHAR AS broker_id
@@ -2653,7 +2661,7 @@ object SparkEntry {
                      count(*) OVER (PARTITION BY split_id) AS n_participants,
                      round(100.0 / count(*) OVER (PARTITION BY split_id), 2)::DECIMAL(5,2)::DOUBLE
                        AS distribution_pct
-              FROM x""")),
+              FROM x"""),
 
     Q("g_readiness_report", (s, d) => {
       // named production-readiness verification (sql/verify/
@@ -2732,7 +2740,7 @@ object SparkEntry {
       val rep = PR.report(checks)
       rep.unionByName(PR.assessment(rep))
     },
-      Some("""WITH c AS (SELECT c_custkey, c_name FROM customer),
+      """WITH c AS (SELECT c_custkey, c_name FROM customer),
               o AS (SELECT o_orderkey, o_custkey FROM orders),
               grp AS (SELECT 'G' || c_custkey::VARCHAR AS group_id,
                         CASE WHEN c_custkey % 37 = 0 THEN 'Group G' || c_custkey::VARCHAR
@@ -2873,7 +2881,7 @@ object SparkEntry {
                         + CASE WHEN comp_ps > 0 THEN 1 ELSE 0 END
                         + CASE WHEN comp_hv > 0 THEN 1 ELSE 0 END
                         + CASE WHEN comp_hp > 0 THEN 1 ELSE 0 END) = 0
-                       THEN 'READY' ELSE 'NOT_READY' END FROM n) r""")),
+                       THEN 'READY' ELSE 'NOT_READY' END FROM n) r"""),
 
     Q("g_chain_health", (s, d) => {
       // chain-health verification (sql/utils/verify-chain-health.sql):
@@ -2928,7 +2936,7 @@ object SparkEntry {
         PR.chainIntegrityChecks(pha, hier, hv, hp, sched, schedV, rates) :+
         PR.rateReadinessCheck(pol, pha, hier, hv, hp, schedV, rates))
     },
-      Some("""WITH o AS (SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders),
+      """WITH o AS (SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders),
               c AS (SELECT c_custkey FROM customer),
               pol AS (SELECT 'PL' || o_orderkey::VARCHAR AS policy_id,
                         CASE WHEN o_orderkey % 5 = 0 THEN NULL
@@ -2999,7 +3007,7 @@ object SparkEntry {
                 UNION ALL SELECT 'chain', 'referenced_schedules_without_rates', bl_r,
                        CASE WHEN bl_r > 0 THEN 'FAIL' ELSE 'PASS' END FROM n
                 UNION ALL SELECT 'chain', 'chain_rows_without_rate', nr,
-                       CASE WHEN nr > 0 THEN 'FAIL' ELSE 'PASS' END FROM n) r""")),
+                       CASE WHEN nr > 0 THEN 'FAIL' ELSE 'PASS' END FROM n) r"""),
 
     Q("g_post_premium_tx", (s, d) => {
       // 10-premium-transactions with the certificate-premium fallback
@@ -3021,7 +3029,7 @@ object SparkEntry {
       graft.domain.PostTransforms.premiumTransactions(prem, certs)
         .withColumn("amount", col("amount").cast("double"))
     },
-      Some("""WITH certs AS (SELECT o_orderkey AS cert_id,
+      """WITH certs AS (SELECT o_orderkey AS cert_id,
                        'G' || (o_custkey % 100)::VARCHAR AS group_id,
                        o_totalprice::DECIMAL(18,2) AS premium, o_orderdate::DATE AS eff_date
                 FROM orders),
@@ -3036,7 +3044,7 @@ object SparkEntry {
               SELECT 'PT-' || cert_id::VARCHAR || '-CERT', cert_id, group_id,
                      premium::DOUBLE, (eff_date + INTERVAL 1 MONTH)::DATE, 'CERT_FALLBACK'
               FROM certs WHERE premium IS NOT NULL AND premium > 0
-                AND NOT EXISTS (SELECT 1 FROM prem WHERE prem.cert_id = certs.cert_id)""")),
+                AND NOT EXISTS (SELECT 1 FROM prem WHERE prem.cert_id = certs.cert_id)"""),
 
     Q("g_post_latest_assign", (s, d) => {
       // 12-commission-assignments (sql/transforms/12-commission-assignments
@@ -3051,7 +3059,7 @@ object SparkEntry {
         .select(concat(lit("R"), col("c_custkey")).as("broker_ext_id"))
       graft.domain.PostTransforms.latestAssignments(assigns, brokers)
     },
-      Some("""WITH a AS (SELECT 'A' || o_orderkey::VARCHAR AS assignment_id,
+      """WITH a AS (SELECT 'A' || o_orderkey::VARCHAR AS assignment_id,
                        'B' || (o_custkey % 200)::VARCHAR AS broker_id,
                        'R' || (o_orderkey % 150)::VARCHAR AS recipient_id,
                        o_orderdate::DATE AS eff_from FROM orders),
@@ -3061,7 +3069,7 @@ object SparkEntry {
               SELECT recipient_id, assignment_id, broker_id, eff_from FROM top1
               WHERE EXISTS (SELECT 1 FROM customer
                             WHERE c_custkey <= 100
-                              AND 'R' || c_custkey::VARCHAR = top1.recipient_id)""")),
+                              AND 'R' || c_custkey::VARCHAR = top1.recipient_id)"""),
 
     Q("g_conformance_report", (s, d) => {
       // 08-analyze-conformance (sql/transforms/08-analyze-conformance.sql):
@@ -3080,7 +3088,7 @@ object SparkEntry {
       graft.domain.PostTransforms.conformanceReport(configs, certs)
         .withColumn("conformant_pct", col("conformant_pct").cast("double"))
     },
-      Some("""WITH cfg AS (SELECT 'G' || (o_custkey % 50)::VARCHAR AS group_id,
+      """WITH cfg AS (SELECT 'G' || (o_custkey % 50)::VARCHAR AS group_id,
                        (o_orderkey % 7 = 0) AS nonconformant FROM orders),
               cert AS (SELECT 'G' || (o_custkey % 50)::VARCHAR AS group_id,
                        CASE WHEN o_orderkey % 11 = 0 THEN ' N/A '
@@ -3105,7 +3113,7 @@ object SparkEntry {
                      round(n_conformant * 100.0 / n_certs, 2)::DECIMAL(5,2)::DOUBLE
                        AS conformant_pct,
                      plans.plan_codes
-              FROM g LEFT JOIN plans ON plans.group_id = g.group_id""")),
+              FROM g LEFT JOIN plans ON plans.group_id = g.group_id"""),
 
     Q("g_licenses_flags", (s, d) =>
       // 12-licenses (sql/transforms/12-licenses.sql Status CASE +
@@ -3121,7 +3129,7 @@ object SparkEntry {
           .when(pmod(col("o_orderkey"), lit(4)) === 2, lit("1"))
           .otherwise(lit("N")).as("IsResidenceLicense")))
         .select(col("license_id"), col("status_code"), col("is_residence")),
-      Some("""WITH lic AS (SELECT 'L' || o_orderkey::VARCHAR AS license_id,
+      """WITH lic AS (SELECT 'L' || o_orderkey::VARCHAR AS license_id,
                        CASE WHEN o_orderkey % 3 = 0 THEN ' Active '
                             WHEN o_orderkey % 3 = 1 THEN 'inactive'
                             ELSE 'Pending' END AS status,
@@ -3134,7 +3142,7 @@ object SparkEntry {
                           WHEN upper(trim(status)) = 'INACTIVE' THEN 'I'
                           ELSE 'U' END AS status_code,
                      upper(trim(res)) IN ('Y', 'TRUE', '1') AS is_residence
-              FROM lic""")),
+              FROM lic"""),
 
     Q("g_eo_insurances", (s, d) =>
       // 13-eo-insurances (sql/transforms/13-eo-insurances.sql): literal
@@ -3155,7 +3163,7 @@ object SparkEntry {
           .otherwise(col("o_totalprice").cast("decimal(12,2)").cast("string"))
           .as("CoverageAmount")))
         .withColumn("coverage_amount", col("coverage_amount").cast("double")),
-      Some("""WITH raw AS (SELECT
+      """WITH raw AS (SELECT
                 CASE WHEN o_orderkey % 17 = 0 THEN 'NULL'
                      ELSE ' P' || (o_custkey % 500)::VARCHAR || ' ' END AS party,
                 CASE WHEN o_orderkey % 13 = 0 THEN 'N/A'
@@ -3180,7 +3188,7 @@ object SparkEntry {
                 TRY_CAST(NULLIF(trim(cov), '') AS DECIMAL(18,2)) AS coverage
                 FROM raw)
               SELECT broker_ext_id, carrier, policy_id, from_date, to_date,
-                     coverage::DOUBLE AS coverage_amount FROM cl""")),
+                     coverage::DOUBLE AS coverage_amount FROM cl"""),
 
     Q("g_fees_transform", (s, d) =>
       // 11-fees (sql/transforms/11-fees.sql): MM/DD/YYYY parsing (~:222),
@@ -3208,7 +3216,7 @@ object SparkEntry {
         col("o_orderstatus").as("FEETYPE"),
         concat(lit("P"), pmod(col("o_custkey"), lit(999))).as("PartyUniqueId")))
         .withColumn("amount", col("amount").cast("double")),
-      Some("""WITH raw AS (SELECT o_orderkey, o_custkey, o_orderpriority, o_orderstatus,
+      """WITH raw AS (SELECT o_orderkey, o_custkey, o_orderpriority, o_orderstatus,
                        o_totalprice, o_orderdate,
                        CASE WHEN o_orderkey % 7 = 0 THEN ' pctprem '
                             WHEN o_orderkey % 7 = 1 THEN 'PEPM'
@@ -3244,7 +3252,7 @@ object SparkEntry {
                      fee_method, fee_type, recipient_ext_id,
                      'FEE-' || product_num || '-' || fee_method || '-'
                        || strftime(try_strptime(ds, '%m/%d/%Y'), '%Y%m%d') AS fee_id
-              FROM f""")),
+              FROM f"""),
 
     Q("g_build_proposals", (s, d) => {
       // buildProposals (proposal-builder.ts:886-1011): one proposal per
@@ -3269,7 +3277,7 @@ object SparkEntry {
           array_join(array_sort(col("product_codes")), ",").as("product_codes"),
           array_join(array_sort(col("plan_codes")), ",").as("plan_codes"))
     },
-      Some("""WITH base AS (SELECT o_orderkey, o_custkey, o_orderstatus,
+      """WITH base AS (SELECT o_orderkey, o_custkey, o_orderstatus,
                        o_orderdate::DATE AS od FROM orders),
               certs AS (SELECT o_orderkey AS cert_id,
                        'G' || (o_custkey % 80)::VARCHAR AS group_id, od AS eff_date,
@@ -3296,7 +3304,7 @@ object SparkEntry {
                      group_id, config_hash, eff_from, max_eff_date, n_certs,
                      array_to_string(product_codes, ',') AS product_codes,
                      array_to_string(plan_codes, ',') AS plan_codes
-              FROM grouped""")),
+              FROM grouped"""),
 
     Q("g_brokers_transform", (s, d) => {
       // 01-brokers (sql/transforms/01-brokers.sql:39-44,151-191): roster
@@ -3319,7 +3327,7 @@ object SparkEntry {
         .select(concat(lit("P"), pmod(col("o_orderkey"), lit(2500))).as("broker_id"))
       graft.domain.CoreTransforms.brokers(ind, org, certIds)
     },
-      Some("""WITH ind AS (SELECT NULLIF(trim(' P' || c_custkey::VARCHAR), '') AS broker_ext_id,
+      """WITH ind AS (SELECT NULLIF(trim(' P' || c_custkey::VARCHAR), '') AS broker_ext_id,
                        NULLIF(trim(c_name), '') AS name,
                        CASE WHEN c_custkey % 5 = 0 THEN 'ACTIVE'
                             WHEN c_custkey % 5 = 1 THEN 'TERMINATED'
@@ -3340,7 +3348,7 @@ object SparkEntry {
                      FROM cert c WHERE NOT EXISTS
                        (SELECT 1 FROM roster r WHERE r.broker_ext_id = c.broker_ext_id))
               SELECT *, TRY_CAST(regexp_replace(broker_ext_id, '^P', '') AS BIGINT) AS broker_id
-              FROM (SELECT * FROM roster UNION ALL SELECT * FROM ph) u""")),
+              FROM (SELECT * FROM roster UNION ALL SELECT * FROM ph) u"""),
 
     Q("g_broker_name_backfill", (s, d) => {
       // 06z (sql/transforms/06z-update-proposal-broker-names.sql:17-31):
@@ -3363,7 +3371,7 @@ object SparkEntry {
             .otherwise(concat(lit(" "), col("c_name"), lit(" "))).as("name"))
       graft.domain.CoreTransforms.backfillBrokerNames(props, roster)
     },
-      Some("""WITH props AS (SELECT 'PR-' || o_orderkey::VARCHAR AS proposal_id,
+      """WITH props AS (SELECT 'PR-' || o_orderkey::VARCHAR AS proposal_id,
                        CASE WHEN o_orderkey % 23 = 0 THEN NULL
                             ELSE o_custkey % 2000 END::BIGINT AS broker_id,
                        CASE WHEN o_orderkey % 5 = 0 THEN NULL
@@ -3391,7 +3399,7 @@ object SparkEntry {
                        (broker_name IS NULL OR trim(broker_name) = ''
                         OR broker_name = 'Broker ' || broker_id::VARCHAR))
                        AS still_missing
-              FROM fin""")),
+              FROM fin"""),
 
     Q("g_groups_transform", (s, d) => {
       // 02-groups (sql/transforms/02-groups.sql:31-33,107-121): per-group
@@ -3414,7 +3422,7 @@ object SparkEntry {
         lit("NY").as("state"), col("c_custkey").as("group_size"))
       graft.domain.CoreTransforms.groups(certGroups, premiumGroups, perfGroups)
     },
-      Some("""WITH cg0 AS (SELECT
+      """WITH cg0 AS (SELECT
                        CASE WHEN o_orderkey % 31 = 0 THEN NULL
                             ELSE (o_custkey % 300)::VARCHAR END AS group_id_raw,
                        CASE WHEN o_orderkey % 17 = 0 THEN ''
@@ -3448,7 +3456,7 @@ object SparkEntry {
                      coalesce(perf_name, prem_name, cert_name) AS name,
                      coalesce(perf_state, cert_state) AS state,
                      group_size
-              FROM j""")),
+              FROM j"""),
 
     Q("g_nonconformant_cases", (s, d) =>
       // identifyNonConformantCases (proposal-builder.ts:740-779): total
@@ -3461,7 +3469,7 @@ object SparkEntry {
           when(pmod(col("l_orderkey"), lit(9)) === 0, lit(99.5))
             .when(pmod(col("l_orderkey"), lit(7)) === 0, lit(100.0005))
             .otherwise(lit(100.0)).as("total_split_pct"))),
-      Some("""SELECT l_orderkey AS cert_id,
+      """SELECT l_orderkey AS cert_id,
               'G' || (l_orderkey % 40)::VARCHAR AS group_id,
               CASE WHEN l_orderkey % 9 = 0 THEN 99.5
                    WHEN l_orderkey % 7 = 0 THEN 100.0005
@@ -3469,7 +3477,7 @@ object SparkEntry {
               abs(CASE WHEN l_orderkey % 9 = 0 THEN 99.5
                        WHEN l_orderkey % 7 = 0 THEN 100.0005
                        ELSE 100.0 END - 100.0) > 0.001 AS nonconformant
-              FROM lineitem WHERE l_linenumber = 1""")),
+              FROM lineitem WHERE l_linenumber = 1"""),
 
     Q("g_hierarchy_dedup", (s, d) =>
       // getOrCreateHierarchy (proposal-builder.ts:1861-1954): first-seen
@@ -3485,14 +3493,14 @@ object SparkEntry {
         concat(lit("G"), pmod(pmod(col("l_partkey"), lit(97)), lit(20))).as("group_id"),
         lit(50.0).as("split_pct"),
         concat(lit("T"), pmod(col("l_partkey"), lit(3))).as("tiers"))),
-      Some("""SELECT hierarchy_hash, group_id, split_pct, tiers FROM (
+      """SELECT hierarchy_hash, group_id, split_pct, tiers FROM (
                 SELECT 'HH' || (l_partkey % 97)::VARCHAR AS hierarchy_hash,
                        l_orderkey AS cert_id, l_partkey * 10 + l_linenumber AS split_seq,
                        'G' || ((l_partkey % 97) % 20)::VARCHAR AS group_id,
                        50.0 AS split_pct, 'T' || (l_partkey % 3)::VARCHAR AS tiers
                 FROM lineitem
                 QUALIFY row_number() OVER (PARTITION BY hierarchy_hash
-                  ORDER BY cert_id, split_seq) = 1) t""")),
+                  ORDER BY cert_id, split_seq) = 1) t"""),
 
     // ===== domain: the commissions pipeline end-to-end (vs BASELINE.md) =====
 
@@ -3505,11 +3513,10 @@ object SparkEntry {
       graft.DomainBench.glPipeline(s, d)
         .select(col("premium_id"), col("broker_id"), col("entry_type"),
           col("amount").cast("double").as("amount")),
-      Some(domainGlOracleSql)),
+      domainGlOracleSql),
 
     Q("g_incremental_gl", (s, d) => {
-      // BATCH incremental maintenance of the flagship GL (the batch twin
-      // of streaming incrementalGlSink, same identity): premiums split
+      // BATCH incremental maintenance of the flagship GL: premiums split
       // into a 'yesterday' base ledger (premium_id % 7 != 0, materialized
       // once) and a 'today' delta batch; the delta runs the full 8-stage
       // calc over ONLY its premiums against the shared reference frames,
@@ -3548,7 +3555,7 @@ object SparkEntry {
         .select(col("premium_id"), col("broker_id"), col("entry_type"),
           col("amount").cast("double").as("amount"))
     },
-      Some(domainGlOracleSql)),
+      domainGlOracleSql),
 
     Q("g_shadow_compare", (s, d) => {
       // Shadow-compare report (docs/TESTING-GUIDE.md:220-252): the
@@ -3592,7 +3599,7 @@ object SparkEntry {
           Seq("group_id", "proposal_id"),
           Seq("config_hash", "eff_from", "n_certs"))))
     },
-      Some("WITH " + certSplitCtes + ",\n" + certRowsCte("", "") + ",\n" +
+      "WITH " + certSplitCtes + ",\n" + certRowsCte("", "") + ",\n" +
         hierarchyConfigCtes + """,
               props0 AS (
                 SELECT group_id, config_hash
@@ -3610,20 +3617,20 @@ object SparkEntry {
                      0::BIGINT, 0.0::DOUBLE, true, true FROM n
               UNION ALL
               SELECT 'proposals', props_n, props_n, 0::BIGINT, 0::BIGINT,
-                     0::BIGINT, 0::BIGINT, 0.0::DOUBLE, true, true FROM n""")),
+                     0::BIGINT, 0::BIGINT, 0.0::DOUBLE, true, true FROM n"""),
 
     // ===== D: dedup (beyond-parity corpus ops) =====
 
     Q("d_exact_dedup", (s, d) =>
       Dedup.exactDedup(doc(s, d), col("doc_id"), col("text"))
         .select(col("doc_id"), col("fingerprint"), col("dup_rank"), col("is_duplicate")),
-      Some("""WITH f AS (SELECT doc_id,
+      """WITH f AS (SELECT doc_id,
                 md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fingerprint
               FROM documents)
               SELECT doc_id, fingerprint,
                      row_number() OVER (PARTITION BY fingerprint ORDER BY doc_id)::INT AS dup_rank,
                      row_number() OVER (PARTITION BY fingerprint ORDER BY doc_id) > 1 AS is_duplicate
-              FROM f""")),
+              FROM f"""),
 
     Q("d_ngram_jaccard", (s, d) =>
       // df-capped: shingles in more than 50 docs are dropped before the
@@ -3631,7 +3638,7 @@ object SparkEntry {
       // the oracle applies the identical cap
       Dedup.ngramJaccardPairs(doc(s, d), col("doc_id"), col("text"),
         n = 3, threshold = 0.1, maxDf = Some(50)),
-      Some(shingleJaccardOracle(cappedShinglesCtes, "0.1"))),
+      shingleJaccardOracle(cappedShinglesCtes, "0.1")),
 
     Q("d_prefix_jaccard", (s, d) =>
       // prefix-filtered similarity join: the oracle is the PLAIN exact
@@ -3644,12 +3651,12 @@ object SparkEntry {
       // corpus (measured 5.5M candidate pairs at sf0.1 vs 193K here)
       Dedup.prefixJaccardPairs(doc(s, d), col("doc_id"), col("text"),
         n = 3, threshold = 0.6),
-      Some(shingleJaccardOracle(trigramShinglesCte("sh"), "0.6"))),
+      shingleJaccardOracle(trigramShinglesCte("sh"), "0.6")),
 
     Q("d_minhash_lsh", (s, d) =>
       Dedup.minHashLshPairs(doc(s, d), col("doc_id"), col("text"),
         shingleWords = 3, numHashes = 16, bands = 4),
-      Some("""WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
+      """WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
                             FROM documents),
 """ + minHashSigCtes + """,
               banded AS (SELECT doc_id, sig,
@@ -3662,7 +3669,7 @@ object SparkEntry {
               SELECT id_a, id_b,
                      round(len(list_filter(generate_series(1, 16), i -> sa[i] = sb[i])) / 16.0, 6)
                        AS est_jaccard
-              FROM cand""")),
+              FROM cand"""),
 
     Q("x_dedup_eval", (s, d) =>
       // estimator-quality harness: MinHash-LSH candidates (16 hashes,
@@ -3676,7 +3683,7 @@ object SparkEntry {
       Dedup.lshQualityEval(doc(s, d), col("doc_id"), col("text"),
         shingleWords = 3, numHashes = 16, bands = 4, threshold = 0.5,
         maxTruthDocs = 400L),
-      Some("""WITH nn AS (SELECT count(*)::BIGINT AS n FROM documents),
+      """WITH nn AS (SELECT count(*)::BIGINT AS n FROM documents),
               kk AS (SELECT greatest(1, ceil(n / 400.0))::BIGINT AS k FROM nn),
               docs AS (SELECT d.* FROM documents d, kk
                        WHERE ('0x' || substr(md5(d.doc_id::VARCHAR || '#lsheval'),
@@ -3730,11 +3737,11 @@ object SparkEntry {
                       END) AS precision,
                 (CASE WHEN n_true > 0 THEN round(tp / n_true::DOUBLE, 6)
                       END) AS recall
-              FROM conf""")),
+              FROM conf"""),
 
     Q("d_simhash", (s, d) =>
       Dedup.simHashDocs(doc(s, d), col("doc_id"), col("text"), 32),
-      Some {
+      {
         // generate the 32 bit-sum aggregates + fingerprint assembly
         val sums = (0 until 32)
           .map(b => s"sum(((h >> $b) & 1) * 2 - 1)::BIGINT AS s$b").mkString(", ")
@@ -3752,7 +3759,7 @@ object SparkEntry {
       // symmetric Jaccard dilutes away; df-capped like d_ngram_jaccard
       Dedup.containmentPairs(doc(s, d), col("doc_id"), col("text"),
         n = 3, threshold = 0.8, maxDf = Some(50)),
-      Some(sharedShingleCtes(cappedShinglesCtes) + """,
+      sharedShingleCtes(cappedShinglesCtes) + """,
               ws AS (SELECT id_a, id_b, n_common, sa.n_sh AS n_a, sb.n_sh AS n_b
                      FROM pairs JOIN sizes sa ON sa.doc_id = id_a
                                 JOIN sizes sb ON sb.doc_id = id_b)
@@ -3762,7 +3769,7 @@ object SparkEntry {
               UNION ALL
               SELECT id_b AS id_small, id_a AS id_large,
                      round(n_common / n_b, 6) AS containment
-              FROM ws WHERE round(n_common / n_b, 6) >= 0.8""")),
+              FROM ws WHERE round(n_common / n_b, 6) >= 0.8"""),
 
     Q("d_simhash_pairs", (s, d) =>
       // band-blocked Hamming near-dups over the simhash fingerprints:
@@ -3770,7 +3777,7 @@ object SparkEntry {
       // any such pair agrees on >= 1 band, so blocking loses nothing)
       Dedup.simHashPairs(doc(s, d), col("doc_id"), col("text"),
         bits = 32, bands = 4, maxHamming = 3),
-      Some {
+      {
         val sums = (0 until 32)
           .map(b => s"sum(((h >> $b) & 1) * 2 - 1)::BIGINT AS s$b").mkString(", ")
         val fp = (0 until 32)
@@ -3797,12 +3804,12 @@ object SparkEntry {
       // assignment, so the blocked result is still hash-checked
       Dedup.embeddingNearDupPairs(emb(s, d), col("vec_id"), col("embedding"),
         threshold = 0.35, nlist = 16),
-      Some("""WITH e AS (SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings),
+      """WITH e AS (SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings),
 """ + ivfCellCtes("vid", "16") + """
               SELECT a.vid AS id_a, b.vid AS id_b,
                      round(list_cosine_similarity(a.v, b.v), 6) AS cos
               FROM asg a JOIN asg b ON a.cell = b.cell AND a.vid < b.vid
-              WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.35""")),
+              WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.35"""),
 
     Q("d_triangles", (s, d) =>
       // per-vertex triangle counts over the supplier co-supply graph
@@ -3811,7 +3818,7 @@ object SparkEntry {
       graft.operators.Components.triangleCounts(
         coSupplyPairs(s, d),
         col("sa"), col("sb")),
-      Some("""WITH li AS (SELECT l_orderkey, l_suppkey FROM lineitem
+      """WITH li AS (SELECT l_orderkey, l_suppkey FROM lineitem
                           WHERE l_orderkey % 20 = 0),
               e0 AS (SELECT DISTINCT least(a.l_suppkey, b.l_suppkey) AS u,
                             greatest(a.l_suppkey, b.l_suppkey) AS v
@@ -3828,7 +3835,7 @@ object SparkEntry {
               tri AS (SELECT x, y, z FROM w JOIN o ON o.s = w.x AND o.t = w.z)
               SELECT vertex, count(*)::BIGINT AS n_tri
               FROM (SELECT unnest([x, y, z]) AS vertex FROM tri)
-              GROUP BY 1""")),
+              GROUP BY 1"""),
 
     Q("d_components", (s, d) => {
       // pairs -> clusters: large-star/small-star contraction over the
@@ -3842,7 +3849,7 @@ object SparkEntry {
         .select(col("node"), col("component"),
           (col("node") === col("component")).as("is_canonical"))
     },
-      Some("""WITH RECURSIVE
+      """WITH RECURSIVE
               e AS (SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings),
 """ + ivfCellCtes("vid", "16") + """,
               prs AS (SELECT a.vid AS id_a, b.vid AS id_b
@@ -3857,7 +3864,7 @@ object SparkEntry {
                         FROM reach JOIN edges ON reach.rch = edges.src)
               SELECT node, min(rch) AS component,
                      node = min(rch) AS is_canonical
-              FROM reach GROUP BY node""")),
+              FROM reach GROUP BY node"""),
 
     Q("d_cluster_canonical", (s, d) => {
       // the END-TO-END near-dup dedup decision: MinHash-LSH candidate
@@ -3878,7 +3885,7 @@ object SparkEntry {
       members.groupBy(col("component")).agg(count(lit(1)).as("n_members"))
         .join(keep, Seq("component"))
     },
-      Some("""WITH RECURSIVE
+      """WITH RECURSIVE
               toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
                        FROM documents),
 """ + minHashSigCtes + ",\n" + lshComponentCtes + ",\n" + qualityCtes + """,
@@ -3891,7 +3898,7 @@ object SparkEntry {
                          FROM mem) WHERE rn = 1)
               SELECT m.component, count(*) AS n_members, k.keep_id, k.keep_quality
               FROM mem m JOIN keep k USING (component)
-              GROUP BY 1, 3, 4""")),
+              GROUP BY 1, 3, 4"""),
 
     Q("d_stratified_sample", (s, d) => {
       // deterministic hash-stratified sampling for training-mix
@@ -3905,12 +3912,12 @@ object SparkEntry {
         doc(s, d), col("lang"), col("doc_id"), rates)
         .select(col("doc_id"), col("lang"))
     },
-      Some("""WITH r AS (SELECT * FROM (VALUES ('en', 0.5), ('es', 0.25),
+      """WITH r AS (SELECT * FROM (VALUES ('en', 0.5), ('es', 0.25),
                            ('fr', 0.1), ('de', 1.0)) AS t(stratum, rate))
               SELECT d.doc_id, d.lang
               FROM documents d JOIN r ON d.lang = r.stratum
               WHERE ('0x' || substr(md5(d.doc_id::VARCHAR), 1, 8))::BIGINT % 10000
-                    < floor(rate * 10000)::BIGINT""")),
+                    < floor(rate * 10000)::BIGINT"""),
 
     Q("d_weighted_sample", (s, d) =>
       // quality-weighted deterministic downsampling: longer docs survive
@@ -3919,10 +3926,10 @@ object SparkEntry {
           least(col("n_chars").cast("double") / lit(2000.0), lit(1.0)))
         .select(col("doc_id"),
           round(least(col("n_chars").cast("double") / lit(2000.0), lit(1.0)), 6).as("weight")),
-      Some("""SELECT doc_id, round(least(n_chars / 2000.0, 1.0), 6) AS weight
+      """SELECT doc_id, round(least(n_chars / 2000.0, 1.0), 6) AS weight
               FROM documents
               WHERE ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 10000
-                    < floor(least(n_chars / 2000.0, 1.0) * 10000)::BIGINT""")),
+                    < floor(least(n_chars / 2000.0, 1.0) * 10000)::BIGINT"""),
 
     Q("d_dsir_resample", (s, d) =>
       // targeted data selection: importance-resample the raw pool toward
@@ -3931,7 +3938,7 @@ object SparkEntry {
       // score order-independent; the oracle replays the whole lineage.
       graft.operators.Sampling.dsirResample(doc(s, d), col("doc_id"),
         col("text"), col("source") === "src0"),
-      Some("""WITH tk AS (SELECT doc_id, source = 'src0' AS t,
+      """WITH tk AS (SELECT doc_id, source = 'src0' AS t,
                 ('0x' || substr(md5(w), 1, 8))::BIGINT % 64 AS b
               FROM (SELECT doc_id, source,
                       unnest(string_split_regex(trim(text), '\s+')) AS w
@@ -3955,7 +3962,7 @@ object SparkEntry {
                          AS gumbel_key
                      FROM sc)
               SELECT doc_id, log_w, gumbel_key FROM ky
-              ORDER BY gumbel_key DESC, doc_id LIMIT 100""")),
+              ORDER BY gumbel_key DESC, doc_id LIMIT 100"""),
 
     Q("d_split_assign", (s, d) =>
       // leakage-free train/val/test: the label hangs off the SOURCE's hash
@@ -3963,7 +3970,7 @@ object SparkEntry {
       graft.operators.Sampling.splitAssign(doc(s, d), col("source"),
           Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
         .groupBy(col("source"), col("split")).agg(count(lit(1)).as("n_docs")),
-      Some("""WITH b AS (SELECT source,
+      """WITH b AS (SELECT source,
                 ('0x' || substr(md5(source), 1, 8))::BIGINT % 10000 AS bkt
               FROM documents)
               SELECT source,
@@ -3971,7 +3978,7 @@ object SparkEntry {
                      WHEN bkt < 9000 THEN 'val'
                      ELSE 'test' END AS split,
                 count(*)::BIGINT AS n_docs
-              FROM b GROUP BY source, 2""")),
+              FROM b GROUP BY source, 2"""),
 
     // ===== V: vector similarity =====
 
@@ -3980,14 +3987,14 @@ object SparkEntry {
       Similarity.bruteForceCosineTopK(
         e.filter(col("vec_id") < 20), e, "vec_id", "embedding", "vec_id", "embedding", k = 5)
     },
-      Some("""WITH q AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id < 20),
+      """WITH q AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id < 20),
               c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
               SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                      round(list_cosine_similarity(q.v, c.v), 6) AS cos,
                      (row_number() OVER (PARTITION BY q.vec_id
                         ORDER BY round(list_cosine_similarity(q.v, c.v), 6) DESC, c.vec_id))::INT AS rank
               FROM q, c WHERE q.vec_id <> c.vec_id
-              QUALIFY rank <= 5""")),
+              QUALIFY rank <= 5"""),
 
     Q("v_maxsim", (s, d) => {
       // late-interaction retrieval: vectors chunked 4-per-doc; the 5
@@ -4001,7 +4008,7 @@ object SparkEntry {
         e.select(floor(col("vec_id") / 4).cast("long").as("cdoc"), col("embedding")),
         "qdoc", "qtok", "embedding", "cdoc", "embedding", k = 3)
     },
-      Some("""WITH q AS (SELECT vec_id // 4 AS qdoc, vec_id AS qtok,
+      """WITH q AS (SELECT vec_id // 4 AS qdoc, vec_id AS qtok,
                        embedding::DOUBLE[] AS qv
                 FROM embeddings WHERE vec_id < 20),
               c AS (SELECT vec_id // 4 AS cdoc, embedding::DOUBLE[] AS cv
@@ -4013,7 +4020,7 @@ object SparkEntry {
               SELECT qdoc AS query_doc, cdoc AS doc_id, score::DOUBLE AS maxsim,
                      (row_number() OVER (PARTITION BY qdoc
                         ORDER BY score DESC, cdoc))::INT AS rank
-              FROM s QUALIFY rank <= 3""")),
+              FROM s QUALIFY rank <= 3"""),
 
     Q("v_embedding_drift", (s, d) =>
       // embedding-space drift monitor between the stream's two halves
@@ -4046,7 +4053,7 @@ object SparkEntry {
           round(dot / (sqrt(n0sq) * sqrt(n1sq)), 6).as("centroid_cos"),
           round(sqrt(l2sq), 6).as("centroid_l2"))
       },
-      Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v,
+      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v,
                                 vec_id % 2 AS half FROM embeddings),
               cells AS (SELECT half, i AS d,
                           sum(round(v[i + 1], 9)::DECIMAL(28,9))::DOUBLE AS s,
@@ -4065,7 +4072,7 @@ object SparkEntry {
               SELECT nn.n0, nn.n1,
                      round(t.dot / (sqrt(t.n0sq) * sqrt(t.n1sq)), 6) AS centroid_cos,
                      round(sqrt(t.l2sq), 6) AS centroid_l2
-              FROM t CROSS JOIN nn""")),
+              FROM t CROSS JOIN nn"""),
 
     Q("v_norm", (s, d) =>
       // native l2_norm expression (fused loop); sequential accumulation
@@ -4073,9 +4080,9 @@ object SparkEntry {
       emb(s, d).select(col("vec_id"),
         round(call_function("l2_norm",
           VectorFunctions.toDoubleArray(col("embedding"))), 6).as("norm")),
-      Some("""SELECT vec_id,
+      """SELECT vec_id,
               round(sqrt(list_sum([x * x for x in embedding::DOUBLE[]])), 6) AS norm
-              FROM embeddings""")),
+              FROM embeddings"""),
 
     Q("v_quantize_int8", (s, d) =>
       // per-vector int8 scalar quantization (4x embedding-store
@@ -4096,7 +4103,7 @@ object SparkEntry {
           col("codes").getItem(0).as("c0"), col("codes").getItem(1).as("c1"),
           col("codes").getItem(2).as("c2"), col("codes").getItem(3).as("c3"),
           round(VectorFunctions.meanAbsError(col("v"), col("recon")), 6).as("mae")),
-      Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
               b AS (SELECT vec_id, v, list_min(v) AS vmin,
                            (list_max(v) - list_min(v)) / 255.0 AS sc FROM e),
               q AS (SELECT vec_id, v, vmin, sc,
@@ -4111,7 +4118,7 @@ object SparkEntry {
                      codes[1] AS c0, codes[2] AS c1, codes[3] AS c2, codes[4] AS c3,
                      round(list_sum([abs(v[i] - recon[i])
                                      for i in generate_series(1, len(v))]) / len(v), 6) AS mae
-              FROM r""")),
+              FROM r"""),
 
     Q("v_ann_lsh", (s, d) => {
       val e = emb(s, d)
@@ -4124,7 +4131,7 @@ object SparkEntry {
       // signed big-endian long / Long.MaxValue); dot products are rounded
       // at 9 decimals before the sign on both sides, so bucket ids match
       // bit-for-bit despite different accumulation orders
-      Some(lshBucketCtes + """,
+      lshBucketCtes + """,
               q AS (SELECT e.vec_id, e.v, b.bucket FROM e JOIN buckets b USING (vec_id)
                     WHERE e.vec_id < 20),
               c AS (SELECT e.vec_id, e.v, b.bucket FROM e JOIN buckets b USING (vec_id))
@@ -4134,7 +4141,7 @@ object SparkEntry {
                         ORDER BY round(list_cosine_similarity(q.v, c.v), 6) DESC,
                                  c.vec_id))::INT AS rank
               FROM q JOIN c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
-              QUALIFY rank <= 5""")),
+              QUALIFY rank <= 5"""),
 
     Q("v_ann_multiprobe", (s, d) => {
       val e = emb(s, d)
@@ -4144,7 +4151,7 @@ object SparkEntry {
     },
       // the v_ann_lsh replica plus Hamming-1 probe expansion on the query
       // side (xor over generate_series) and pair dedupe before ranking
-      Some(lshBucketCtes + """,
+      lshBucketCtes + """,
               qb AS (SELECT e.vec_id, e.v, b.bucket FROM e JOIN buckets b USING (vec_id)
                      WHERE e.vec_id < 20),
               probes AS (SELECT vec_id, v, bucket FROM qb
@@ -4158,7 +4165,7 @@ object SparkEntry {
               SELECT query_id, neighbor_id, cos,
                      (row_number() OVER (PARTITION BY query_id
                         ORDER BY cos DESC, neighbor_id))::INT AS rank
-              FROM pairs QUALIFY rank <= 5""")),
+              FROM pairs QUALIFY rank <= 5"""),
 
     Q("v_ann_ivf", (s, d) => {
       val e = emb(s, d)
@@ -4168,7 +4175,7 @@ object SparkEntry {
     },
       // full replica: deterministic centroids (lowest vec_id per id-residue
       // class), rounded-similarity cell assignment and probe ranking
-      Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 """ + ivfProbeCtes + """
               SELECT p.query_id, a.vec_id AS neighbor_id,
                      round(list_cosine_similarity(p.qv, a.v), 6) AS cos,
@@ -4177,7 +4184,7 @@ object SparkEntry {
                                  a.vec_id))::INT AS rank
               FROM asg a JOIN probes p USING (cell)
               WHERE p.query_id <> a.vec_id
-              QUALIFY rank <= 5""")),
+              QUALIFY rank <= 5"""),
 
     Q("v_ann_recall", (s, d) => {
       // ANN recall@k harness: IVF candidates (same dials as v_ann_ivf)
@@ -4192,7 +4199,7 @@ object SparkEntry {
       Similarity.annRecallEval(ann, q, e,
         "vec_id", "embedding", "vec_id", "embedding", k = 5)
     },
-      Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 """ + ivfProbeCtes + """,
               ivf AS (SELECT p.query_id, a.vec_id AS neighbor_id,
                              (row_number() OVER (PARTITION BY p.query_id
@@ -4214,7 +4221,7 @@ object SparkEntry {
                        AS recall_ppm
               FROM truth t LEFT JOIN ivf i
                 ON t.query_id = i.query_id AND t.neighbor_id = i.neighbor_id
-              GROUP BY t.query_id""")),
+              GROUP BY t.query_id"""),
 
     Q("v_kmeans", (s, d) => {
       // deterministic Lloyd's k-means on the embeddings (k=8, 2
@@ -4226,14 +4233,14 @@ object SparkEntry {
       Clustering.kMeansAssign(emb(s, d), col("vec_id"), col("embedding"),
         k = 8, iters = 2)
     },
-      Some(kMeansCtes(2) + """
+      kMeansCtes(2) + """
               SELECT vec_id AS point_id, cell AS cluster, cos FROM (
                 SELECT e.vec_id, c.cell,
                        round(list_cosine_similarity(e.v, c.centroid), 6) AS cos,
                        row_number() OVER (PARTITION BY e.vec_id
                          ORDER BY round(list_cosine_similarity(e.v, c.centroid), 6) DESC,
                                   c.cell) AS rn
-                FROM e CROSS JOIN c2 c) WHERE rn = 1""")),
+                FROM e CROSS JOIN c2 c) WHERE rn = 1"""),
 
     Q("v_random_proj", (s, d) => {
       // Johnson-Lindenstrauss random projection 64 -> 8 dims with the
@@ -4246,7 +4253,7 @@ object SparkEntry {
         case (p, i) => p.as(s"p$i")
       }: _*)
     },
-      Some(lshPlanesCtes + """,
+      lshPlanesCtes + """,
               dots AS (SELECT e.vec_id, pl.p, round(sum(e.v[pl.d + 1] * pl.pval), 6) AS dt
                        FROM e CROSS JOIN planes pl GROUP BY 1, 2)
               SELECT vec_id,
@@ -4258,7 +4265,7 @@ object SparkEntry {
                      max(CASE WHEN p = 5 THEN dt END) AS p5,
                      max(CASE WHEN p = 6 THEN dt END) AS p6,
                      max(CASE WHEN p = 7 THEN dt END) AS p7
-              FROM dots GROUP BY vec_id""")),
+              FROM dots GROUP BY vec_id"""),
 
     Q("d_cluster_sample", (s, d) => {
       // diversity-balanced subset: k-means cells (1 Lloyd iteration) then
@@ -4269,7 +4276,7 @@ object SparkEntry {
         assigned.select(col("point_id"), col("cluster")),
         Seq(col("cluster")), col("point_id"), k = 10)
     },
-      Some(kMeansCtes(1) + """,
+      kMeansCtes(1) + """,
               fin AS (SELECT vec_id AS point_id, cell AS cluster FROM (
                         SELECT e.vec_id, c.cell,
                                row_number() OVER (PARTITION BY e.vec_id
@@ -4281,7 +4288,7 @@ object SparkEntry {
                        row_number() OVER (PARTITION BY cluster
                          ORDER BY ('0x' || substr(md5(point_id::VARCHAR), 1, 8))::BIGINT % 10000,
                                   point_id) AS rnk
-                FROM fin) WHERE rnk <= 10""")),
+                FROM fin) WHERE rnk <= 10"""),
 
     Q("v_standardize", (s, d) => {
       // per-dimension standardization (embedding whitening prep): corpus
@@ -4297,7 +4304,7 @@ object SparkEntry {
         (0 until 4).map(i =>
           round((col(s"x$i") - col(s"m$i")) / col(s"s$i"), 4).as(s"z$i")): _*)
     },
-      Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
               s AS (SELECT avg(v[1]) AS m0, stddev_samp(v[1]) AS s0,
                            avg(v[2]) AS m1, stddev_samp(v[2]) AS s1,
                            avg(v[3]) AS m2, stddev_samp(v[3]) AS s2,
@@ -4307,7 +4314,7 @@ object SparkEntry {
                      round((v[2] - m1) / s1, 4) AS z1,
                      round((v[3] - m2) / s2, 4) AS z2,
                      round((v[4] - m3) / s3, 4) AS z3
-              FROM e CROSS JOIN s""")),
+              FROM e CROSS JOIN s"""),
 
     // ===== X: text analysis =====
 
@@ -4317,22 +4324,22 @@ object SparkEntry {
       // the hot-term safety contract at corpus scale)
       graft.operators.InvertedIndex.build(doc(s, d), col("doc_id"), col("text"),
         maxPostings = 15),
-      Some("""WITH toks AS (SELECT doc_id,
+      """WITH toks AS (SELECT doc_id,
                 unnest(string_split_regex(trim(text), '\s+')) AS term FROM documents),
               tf AS (SELECT doc_id, term, count(*)::BIGINT AS tf
                      FROM toks WHERE term <> '' GROUP BY 1, 2)
               SELECT term, count(*)::BIGINT AS df, sum(tf)::BIGINT AS cf,
                      array_to_string((list_sort(list(doc_id)))[1:15], ',') AS postings
-              FROM tf GROUP BY term""")),
+              FROM tf GROUP BY term"""),
 
     Q("x_bigram_lm", (s, d) =>
       // corpus bigram LM: ordered-pair counts + P(w2|w1); adjacency from
       // one lead window over exploded positions (no self-join)
       TextFunctions.bigramLm(doc(s, d), col("doc_id"), col("text")),
-      Some("WITH " + bigramCountCtes + """
+      "WITH " + bigramCountCtes + """
               SELECT w1, w2, cnt,
                      round(cnt / (sum(cnt) OVER (PARTITION BY w1)), 6) AS p_cond
-              FROM c""")),
+              FROM c"""),
 
     Q("x_ngram_novelty", (s, d) => {
       // per-doc novelty: the fraction of a doc's distinct trigrams that
@@ -4348,7 +4355,7 @@ object SparkEntry {
         .withColumn("novelty",
           round(col("n_unique").cast("double") / col("n_shingles"), 6))
     },
-      Some("""WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
+      """WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
                             FROM documents),
 """ + trigramShinglesCte("sh") + """,
               dfq AS (SELECT s, count(*)::BIGINT AS df FROM sh GROUP BY 1)
@@ -4356,19 +4363,19 @@ object SparkEntry {
                      sum(CASE WHEN df = 1 THEN 1 ELSE 0 END)::BIGINT AS n_unique,
                      round(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) / count(*), 6)
                        AS novelty
-              FROM sh JOIN dfq USING (s) GROUP BY 1""")),
+              FROM sh JOIN dfq USING (s) GROUP BY 1"""),
 
     Q("x_perplexity_filter", (s, d) =>
       // CCNet-shaped perplexity-band filter: mean bigram NLL under the
       // corpus's own LM (DECIMAL-exact sums), keep the low-perplexity band
       TextFunctions.perplexityFilter(doc(s, d), col("doc_id"), col("text"),
         doc(s, d), col("doc_id"), col("text"), keepBelow = 3.2),
-      Some("WITH " + bigramNllCtes + """
+      "WITH " + bigramNllCtes + """
               SELECT doc_id, count(*)::BIGINT AS n_pairs,
                      round(sum(nll)::DOUBLE / count(*), 6) AS avg_nll,
                      round(sum(nll)::DOUBLE / count(*), 6) <= 3.2 AS keep
               FROM pairs JOIN lm USING (w1, w2)
-              GROUP BY 1""")),
+              GROUP BY 1"""),
 
     Q("x_ccnet_bucket", (s, d) =>
       // CCNet head/middle/tail perplexity terciles per language (Wenzek
@@ -4377,7 +4384,7 @@ object SparkEntry {
       // integer div — no corpus-wide sort), per-(lang, band) rollup
       TextFunctions.ccnetBuckets(doc(s, d), col("doc_id"), col("text"),
         col("lang")),
-      Some("WITH " + bigramNllCtes + """,
+      "WITH " + bigramNllCtes + """,
               sc0 AS (SELECT doc_id,
                         round(sum(nll)::DOUBLE / count(*), 6) AS avg_nll
                       FROM pairs JOIN lm USING (w1, w2) GROUP BY 1),
@@ -4399,7 +4406,7 @@ object SparkEntry {
                           ELSE 'tail' END AS band
               FROM (SELECT sc.lang, bb.bucket, sc.avg_nll FROM sc JOIN bb
                     ON sc.lang = bb.lang AND sc.avg_nll = bb.avg_nll) t
-              GROUP BY 1, 2""")),
+              GROUP BY 1, 2"""),
 
     Q("d_temperature_mix", (s, d) =>
       // temperature-scaled source mixing (alpha=0.7, expected total 300):
@@ -4407,14 +4414,14 @@ object SparkEntry {
       graft.operators.Sampling.temperatureMix(
         doc(s, d).select(col("doc_id"), col("source")),
         col("source"), col("doc_id"), alpha = 0.7, targetRows = 300),
-      Some("""WITH c AS (SELECT source, count(*)::BIGINT AS n FROM documents GROUP BY 1),
+      """WITH c AS (SELECT source, count(*)::BIGINT AS n FROM documents GROUP BY 1),
               r AS (SELECT source,
                       least(1.0, round(300.0 * pow(n, 0.7)
                         / (SELECT sum(pow(n, 0.7)) FROM c) / n, 6)) AS rate
                     FROM c)
               SELECT d.doc_id, d.source FROM documents d JOIN r USING (source)
               WHERE ('0x' || substr(md5(d.doc_id::VARCHAR), 1, 8))::BIGINT % 10000
-                    < floor(rate * 10000)::BIGINT""")),
+                    < floor(rate * 10000)::BIGINT"""),
 
     Q("d_budget_waterfill", (s, d) => {
       // training-mix budget allocation: per-domain token supplies, a
@@ -4428,7 +4435,7 @@ object SparkEntry {
       val budget = sup.agg(sum(col("supply")).as("t")).head.getLong(0) / 2
       graft.operators.Sampling.budgetWaterfill(sup, budget, rounds = 3)
     },
-      Some("""WITH tok AS (SELECT source AS domain,
+      """WITH tok AS (SELECT source AS domain,
                 (CASE WHEN len(trim(text)) = 0 THEN 0
                       ELSE len(string_split_regex(trim(text), '\s+')) END)::BIGINT AS nt
               FROM documents),
@@ -4461,7 +4468,7 @@ object SparkEntry {
               SELECT domain, supply, alloc,
                      round(alloc * 100.0 / supply, 6) AS utilization_pct,
                      round(alloc * 100.0 / (SELECT budget FROM b), 6) AS budget_share_pct
-              FROM p3""")),
+              FROM p3"""),
 
     Q("x_bm25", (s, d) =>
       // BM25 top-20 for a fixed bag-of-words query: token stream scanned
@@ -4469,7 +4476,7 @@ object SparkEntry {
       // the 3 query terms (isin prunes before the aggregate)
       graft.operators.InvertedIndex.bm25TopK(doc(s, d), col("doc_id"), col("text"),
         Seq("spark", "join", "table"), k = 20),
-      Some("""WITH docs AS (SELECT doc_id,
+      """WITH docs AS (SELECT doc_id,
                 (CASE WHEN len(trim(text)) = 0 THEN 0
                       ELSE len(string_split_regex(trim(text), '\s+')) END)::DOUBLE AS dl,
                 text FROM documents),
@@ -4485,7 +4492,7 @@ object SparkEntry {
                      FROM tf JOIN dfq USING (term) CROSS JOIN stats GROUP BY 1)
               SELECT doc_id, score, rank FROM (
                 SELECT *, (row_number() OVER (ORDER BY score DESC, doc_id))::INT AS rank
-                FROM sc) WHERE rank <= 20""")),
+                FROM sc) WHERE rank <= 20"""),
 
     Q("d_pagerank", (s, d) => {
       // simplified PageRank, 3 iterations, over the customer<->supplier
@@ -4498,12 +4505,12 @@ object SparkEntry {
         .unionByName(e.select(col("p").as("src"), col("c").as("dst")))
       graft.operators.Components.pageRank(edges, "src", "dst", iters = 3)
     },
-      Some("""WITH b AS (SELECT DISTINCT o_custkey AS c, l_suppkey + 10000000 AS p
+      """WITH b AS (SELECT DISTINCT o_custkey AS c, l_suppkey + 10000000 AS p
                          FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
               e AS (SELECT c AS src, p AS dst FROM b
                     UNION SELECT p AS src, c AS dst FROM b),
 """ + pageRankCtes(3) + """
-              SELECT node, rank FROM r3""")),
+              SELECT node, rank FROM r3"""),
 
     Q("d_redirect_loops", (s, d) => {
       // redirect-loop detection: a synthetic URL redirect map (1,800
@@ -4522,7 +4529,7 @@ object SparkEntry {
           .otherwise(col("u") - pmod(col("u"), lit(10))))
       graft.operators.Components.kahnCycleCore(edges, "u", "v", rounds = 3)
     },
-      Some("""WITH uu AS (SELECT DISTINCT o_orderkey % 2000 AS u FROM orders),
+      """WITH uu AS (SELECT DISTINCT o_orderkey % 2000 AS u FROM orders),
               e0 AS (SELECT u AS src,
                        CASE WHEN u % 10 = 0
                             THEN ((u // 10) * 3 + 7) % 200 * 10
@@ -4551,7 +4558,7 @@ object SparkEntry {
               UNION ALL
               SELECT node, 3::INT, false, (SELECT c FROM conv) FROM p3
               UNION ALL
-              SELECT node, 0::INT, true, (SELECT c FROM conv) FROM l3""")),
+              SELECT node, 0::INT, true, (SELECT c FROM conv) FROM l3"""),
 
     Q("d_kcore", (s, d) => {
       // k-core decomposition (k=3) by fixed-round synchronous peeling
@@ -4563,13 +4570,13 @@ object SparkEntry {
       // the budget
       graft.operators.Components.kCore(partPairs(s, d), "u", "v", k = 3, rounds = 10)
     },
-      Some(partGraphCtes("e") + ",\n" + kCoreCtes(k = 3, rounds = 10) + """,
+      partGraphCtes("e") + ",\n" + kCoreCtes(k = 3, rounds = 10) + """,
               core AS (SELECT e.src AS node, count(*)::INT AS core_deg FROM e
                 JOIN a10 s ON e.src = s.node JOIN a10 t ON e.dst = t.node
                 GROUP BY 1),
               conv AS (SELECT CASE WHEN (SELECT count(*) FROM a9)
                   = (SELECT count(*) FROM a10) THEN 1 ELSE 0 END AS converged)
-              SELECT node, core_deg, converged FROM core CROSS JOIN conv""")),
+              SELECT node, core_deg, converged FROM core CROSS JOIN conv"""),
 
     Q("d_hits", (s, d) => {
       // HITS hubs/authorities (Kleinberg), 3 iterations over the
@@ -4581,7 +4588,7 @@ object SparkEntry {
         .select(col("o_custkey").as("c"), (col("l_suppkey") + 10000000L).as("p"))
       graft.operators.Components.hits(e, "c", "p", iters = 3)
     },
-      Some("""WITH b AS (SELECT DISTINCT o_custkey AS src, l_suppkey + 10000000 AS dst
+      """WITH b AS (SELECT DISTINCT o_custkey AS src, l_suppkey + 10000000 AS dst
                          FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
               n AS (SELECT src AS node FROM b UNION SELECT dst FROM b),
               s0 AS (SELECT node, 1.0::DOUBLE AS hub, 1.0::DOUBLE AS auth FROM n),
@@ -4634,7 +4641,7 @@ object SparkEntry {
                        (sum(hub::DECIMAL(28,9)))::DOUBLE FROM h3p), 9) AS hub
                      FROM h3p)
               SELECT h3.node, h3.hub, a3.auth
-              FROM h3 JOIN a3 USING (node)""")),
+              FROM h3 JOIN a3 USING (node)"""),
 
     Q("x_textrank_keywords", (s, d) => {
       // TextRank keyword extraction (Mihalcea & Tarau 2004): undirected
@@ -4671,7 +4678,7 @@ object SparkEntry {
       top.withColumn("rk", row_number().over(
         Window.orderBy(col("rank").desc, col("word"))).cast("int"))
     },
-      Some("WITH " + posToksCte("w0") + """,
+      "WITH " + posToksCte("w0") + """,
               cw AS (SELECT doc_id, pos, lower(w0) AS w FROM toks
                      WHERE regexp_matches(lower(w0), '^[a-z]{4,}$')),
               adj AS (SELECT w, lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
@@ -4688,7 +4695,7 @@ object SparkEntry {
                 SELECT ids.w AS word, r4.rank,
                        row_number() OVER (ORDER BY r4.rank DESC, ids.w)::INT AS rk
                 FROM r4 JOIN ids ON ids.wid = r4.node) t
-              WHERE rk <= 20""")),
+              WHERE rk <= 20"""),
 
     Q("x_tokenize_vocab", (s, d) => {
       // corpus-induced top-50 vocab (cf desc, term tiebreak), then each
@@ -4697,7 +4704,7 @@ object SparkEntry {
       graft.operators.Tokenize.encodeWithVocab(docs, col("doc_id"), col("text"),
         graft.operators.Tokenize.vocabTopN(docs, col("doc_id"), col("text"), v = 50))
     },
-      Some("WITH " + posToksCte("term") + """,
+      "WITH " + posToksCte("term") + """,
               t AS (SELECT * FROM toks WHERE term <> ''),
               cf AS (SELECT term, count(*)::BIGINT AS cf FROM t GROUP BY 1),
               vocab AS (SELECT term,
@@ -4707,7 +4714,7 @@ object SparkEntry {
                       FROM t LEFT JOIN vocab v USING (term))
               SELECT doc_id, count(*)::BIGINT AS n_tokens,
                      array_to_string(list(tok_id ORDER BY pos), ',') AS token_ids
-              FROM enc GROUP BY 1""")),
+              FROM enc GROUP BY 1"""),
 
     Q("x_vocab_coverage", (s, d) => {
       // tokenizer-design coverage curve: what fraction of the corpus
@@ -4736,7 +4743,7 @@ object SparkEntry {
         .select(col("r.k").as("k"), col("r.covered_tokens").as("covered_tokens"),
           col("r.coverage_pct").as("coverage_pct"))
     },
-      Some("""WITH toks AS (SELECT unnest(string_split_regex(trim(text), '\s+')) AS term
+      """WITH toks AS (SELECT unnest(string_split_regex(trim(text), '\s+')) AS term
                             FROM documents),
               t AS (SELECT term FROM toks WHERE term <> ''),
               f AS (SELECT term, count(*)::BIGINT AS cnt FROM t GROUP BY 1),
@@ -4746,7 +4753,7 @@ object SparkEntry {
                      round(sum(CASE WHEN rank <= k THEN cnt ELSE 0 END) * 100.0
                            / (SELECT total FROM tot), 6) AS coverage_pct
               FROM r CROSS JOIN (VALUES (100), (1000), (10000)) v(k)
-              GROUP BY 1""")),
+              GROUP BY 1"""),
 
     Q("x_zipf_slope", (s, d) =>
       // Zipf power-law fit of the corpus frequency spectrum (corpus
@@ -4754,7 +4761,7 @@ object SparkEntry {
       // ranks via the two-pass scalable global rank, regression via ONE
       // aggregate of five sums; log terms round at 9 against libm drift
       graft.operators.InvertedIndex.zipfFit(doc(s, d), col("doc_id"), col("text")),
-      Some("""WITH toks AS (SELECT unnest(string_split_regex(trim(text), '\s+')) AS term
+      """WITH toks AS (SELECT unnest(string_split_regex(trim(text), '\s+')) AS term
                             FROM documents),
               f AS (SELECT term, count(*)::BIGINT AS cnt FROM toks
                     WHERE term <> '' GROUP BY 1),
@@ -4770,7 +4777,7 @@ object SparkEntry {
                   AS intercept,
                 round(((n * sxy - sx * sy) * (n * sxy - sx * sy)) /
                       ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) AS r2
-              FROM s""")),
+              FROM s"""),
 
     Q("x_bpe_merges", (s, d) =>
       // BPE vocabulary induction, 2 merge steps: heaviest adjacent symbol
@@ -4779,7 +4786,7 @@ object SparkEntry {
       // whole trajectory (both iterations) in SQL
       graft.operators.Tokenize.bpeMerges(doc(s, d), col("doc_id"), col("text"),
         nMerges = 2),
-      Some("""WITH toks AS (SELECT doc_id,
+      """WITH toks AS (SELECT doc_id,
                 unnest(string_split_regex(trim(text), '\s+')) AS term FROM documents),
               wrd AS (SELECT term AS word, count(*)::BIGINT AS freq
                       FROM toks WHERE term <> '' GROUP BY 1),
@@ -4811,7 +4818,7 @@ object SparkEntry {
                        trim(replace(' ' || seg || ' ',
                          ' ' || a || '  ' || b || ' ', ' ' || a || b || ' ')) AS seg
                      FROM w1 CROSS JOIN t2)
-              SELECT word, freq, replace(seg, '  ', ' ') AS seg FROM w2""")),
+              SELECT word, freq, replace(seg, '  ', ' ') AS seg FROM w2"""),
 
     Q("x_bpe_deep", (s, d) =>
       // deep BPE run (12 merges, one materialized constant-shape job per
@@ -4820,7 +4827,7 @@ object SparkEntry {
       // replays all 12 iterations via a generated CTE chain
       graft.operators.Tokenize.bpeMerges(doc(s, d), col("doc_id"), col("text"),
         nMerges = 12, matEvery = 1),
-      Some(bpeOracleSql(12))),
+      bpeOracleSql(12)),
 
     Q("x_bpe_encode", (s, d) =>
       // tokenizer APPLICATION: encode the corpus under 8 learned merges
@@ -4832,7 +4839,7 @@ object SparkEntry {
       graft.operators.Tokenize.bpeEncodeStats(doc(s, d), col("doc_id"),
         col("text"), col("lang"), nMerges = 8, matEvery = 1)
         .withColumnRenamed("grp", "lang"),
-      Some(s"""${bpeOracleCtes(8)},
+      s"""${bpeOracleCtes(8)},
               enc AS (SELECT word, len(string_split(seg, '  '))::INT AS n_sym
                       FROM w8),
               occ AS (SELECT lang, term, count(*)::BIGINT AS cnt FROM (
@@ -4845,7 +4852,7 @@ object SparkEntry {
                 round(sum(cnt * n_sym) / sum(cnt)::DOUBLE, 6) AS fertility,
                 round(sum(cnt * length(word)) / sum(cnt * n_sym)::DOUBLE, 6)
                   AS chars_per_token
-              FROM occ JOIN enc ON occ.term = enc.word GROUP BY 1""")),
+              FROM occ JOIN enc ON occ.term = enc.word GROUP BY 1"""),
 
     Q("x_unigram_segment", (s, d) =>
       // SentencePiece-style unigram tokenizer, Viterbi half: per-word
@@ -4855,7 +4862,7 @@ object SparkEntry {
       // CTE chain replaying every DP step (the x_bpe_deep pattern)
       graft.operators.Tokenize.unigramSegment(doc(s, d), col("doc_id"), col("text"),
         maxPieceLen = 3, vocabSize = 40),
-      Some(unigramSegmentOracle(3, 40, 16))),
+      unigramSegmentOracle(3, 40, 16)),
 
     Q("x_wordpiece", (s, d) =>
       // WordPiece (Wu et al. 2016) — the third subword family: form-marked
@@ -4865,7 +4872,7 @@ object SparkEntry {
       // generated greedy-step CTE chain
       graft.operators.Tokenize.wordPieceSegment(doc(s, d), col("doc_id"), col("text"),
         maxPieceLen = 3, vocabSize = 40),
-      Some(wordPieceOracle(3, 40, 16))),
+      wordPieceOracle(3, 40, 16)),
 
     Q("x_unigram_em", (s, d) =>
       // the EM half: two hard-EM rounds (Viterbi E-step, Laplace-smoothed
@@ -4874,7 +4881,7 @@ object SparkEntry {
       // replays both full Viterbi chains plus both M-steps
       graft.operators.Tokenize.unigramVocab(doc(s, d), col("doc_id"), col("text"),
         maxPieceLen = 3, vocabSize = 40, emIters = 2),
-      Some(unigramEmOracle(3, 40, 16, 2))),
+      unigramEmOracle(3, 40, 16, 2)),
 
     Q("x_unigram_encode", (s, d) =>
       // tokenizer ECONOMICS under the EM-trained unigram vocab: per-lang
@@ -4884,7 +4891,7 @@ object SparkEntry {
       graft.operators.Tokenize.unigramEncodeStats(
         doc(s, d), col("doc_id"), col("text"), col("lang"),
         maxPieceLen = 3, vocabSize = 40, emIters = 1),
-      Some(unigramHeadCtes(3, 40, 16) +
+      unigramHeadCtes(3, 40, 16) +
         unigramViterbiCtes("s1", "v0", 3, 16) + unigramMStepCtes(1, "s1") +
         unigramViterbiCtes("s2", "v1", 3, 16) +
         """,
@@ -4899,7 +4906,7 @@ object SparkEntry {
           |  FROM occ JOIN enc ON occ.term = enc.word GROUP BY 1)
           |SELECT grp, n_words, n_tokens,
           |  round(n_tokens / n_words, 6) AS fertility,
-          |  round(n_chars / n_tokens, 6) AS chars_per_token FROM g""".stripMargin)),
+          |  round(n_chars / n_tokens, 6) AS chars_per_token FROM g""".stripMargin),
 
     Q("x_seq_pack", (s, d) =>
       // deterministic sequence packing: per source, docs in id order fill
@@ -4909,21 +4916,21 @@ object SparkEntry {
         doc(s, d).select(col("doc_id"), col("source"),
           TextFunctions.tokenCountWs(col("text")).cast("long").as("n_tok")),
         col("source"), col("doc_id"), col("n_tok"), seqLen = 2048),
-      Some("""WITH d AS (SELECT doc_id, source,
+      """WITH d AS (SELECT doc_id, source,
                 (CASE WHEN len(trim(text)) = 0 THEN 0
                       ELSE len(string_split_regex(trim(text), '\s+')) END)::BIGINT AS n_tok
               FROM documents)
               SELECT doc_id, source, n_tok,
                      floor((sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id
                               ROWS UNBOUNDED PRECEDING) - n_tok) / 2048)::BIGINT AS seq_id
-              FROM d""")),
+              FROM d"""),
 
     Q("a20_decayed_sum", (s, d) =>
       // recency-weighted per-user activity: half-life 7 days against the
       // newest event; weights are exact powers of two (shift, not pow)
       graft.operators.Stats.decayedSum(ev(s, d), col("user_id"),
         col("value"), col("ts"), halfLifeDays = 7),
-      Some("""WITH r AS (SELECT max(ts::DATE) AS ref FROM events),
+      """WITH r AS (SELECT max(ts::DATE) AS ref FROM events),
               w AS (SELECT user_id AS key, value,
                       date_diff('day', ts::DATE, ref) // 7 AS k
                     FROM events, r)
@@ -4931,7 +4938,7 @@ object SparkEntry {
                      sum(round(value * (1.0 / (1::BIGINT << k)), 6)::DECIMAL(18,6))
                        ::DOUBLE AS decayed_value,
                      count(*)::BIGINT AS n_events
-              FROM w GROUP BY 1""")),
+              FROM w GROUP BY 1"""),
 
     Q("a18_incremental_agg", (s, d) => {
       // incremental rollup maintenance: base slice (orders % 10 != 0)
@@ -4949,16 +4956,16 @@ object SparkEntry {
       merged.select(col("o_custkey"), col("total").cast("double").as("total"),
         col("n_orders"))
     },
-      Some("""SELECT o_custkey,
+      """SELECT o_custkey,
                      sum(o_totalprice::DECIMAL(14,2))::DOUBLE AS total,
                      count(*)::BIGINT AS n_orders
-              FROM orders GROUP BY 1""")),
+              FROM orders GROUP BY 1"""),
 
     Q("a16_skew_report", (s, d) =>
       // the pre-join skew diagnostic: hot-key share/cumulative-share/
       // ratio-to-mean over the event stream's type key
       graft.operators.Skew.keySkewReport(ev(s, d), col("event_type"), topK = 20),
-      Some("""WITH c AS (SELECT event_type::VARCHAR AS key, count(*)::BIGINT AS cnt
+      """WITH c AS (SELECT event_type::VARCHAR AS key, count(*)::BIGINT AS cnt
                          FROM events GROUP BY 1),
               t AS (SELECT sum(cnt)::BIGINT AS total, count(*)::BIGINT AS nkeys FROM c),
               top AS (SELECT key, cnt FROM c ORDER BY cnt DESC, key LIMIT 20)
@@ -4969,32 +4976,32 @@ object SparkEntry {
                              ROWS UNBOUNDED PRECEDING) * 100.0 / total, 6)
                        AS cum_share_pct,
                      round(cnt::DOUBLE * nkeys / total, 6) AS ratio_to_avg
-              FROM top, t""")),
+              FROM top, t"""),
 
     Q("a14_histogram", (s, d) =>
       // fixed-width histogram with edge clamping: portable floor of a
       // linear map, one hash aggregate
       graft.operators.Stats.histogram(li(s, d), col("l_extendedprice"),
         lo = 0.0, hi = 60000.0, bins = 20),
-      Some("""WITH b AS (SELECT
+      """WITH b AS (SELECT
                 least(greatest(floor(l_extendedprice / 3000), 0), 19)::BIGINT AS bin,
                 l_extendedprice AS v
               FROM lineitem WHERE l_extendedprice IS NOT NULL)
               SELECT bin, count(*)::BIGINT AS n,
                      round(min(v), 6) AS vmin, round(max(v), 6) AS vmax
-              FROM b GROUP BY 1""")),
+              FROM b GROUP BY 1"""),
 
     Q("x_phrase_search", (s, d) =>
       // positional phrase search "join table": token stream pruned to the
       // phrase terms before the (doc, pos+i) adjacency joins
       graft.operators.InvertedIndex.phraseSearch(doc(s, d),
         col("doc_id"), col("text"), Seq("join", "table")),
-      Some("WITH " + posToksCte("term") + """,
+      "WITH " + posToksCte("term") + """,
               a AS (SELECT doc_id, pos FROM toks WHERE term = 'join'),
               b AS (SELECT doc_id, pos FROM toks WHERE term = 'table')
               SELECT a.doc_id, count(*)::BIGINT AS n_occurrences
               FROM a JOIN b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-              GROUP BY 1""")),
+              GROUP BY 1"""),
 
     Q("a17_equidepth", (s, d) =>
       // equi-DEPTH histogram (complement of a14's equi-width): ntile-
@@ -5010,14 +5017,14 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"),
           round(min(col("value")), 6).as("vmin"),
           round(max(col("value")), 6).as("vmax")),
-      Some("""WITH b AS (SELECT value,
+      """WITH b AS (SELECT value,
                 row_number() OVER (ORDER BY value, event_id) AS rn FROM events),
               c AS (SELECT value,
                 (((rn - 1) * 8) // (SELECT count(*) FROM events) + 1)::INT AS bucket
                 FROM b)
               SELECT bucket, count(*)::BIGINT AS n,
                      round(min(value), 6) AS vmin, round(max(value), 6) AS vmax
-              FROM c GROUP BY 1""")),
+              FROM c GROUP BY 1"""),
 
     Q("a18_corr_panel", (s, d) =>
       // Pearson correlation panel in one aggregate pass
@@ -5026,11 +5033,11 @@ object SparkEntry {
         round(corr(col("l_discount"), col("l_tax")), 6).as("c_disc_tax"),
         round(corr(col("l_extendedprice"), col("l_discount")), 6).as("c_price_disc"),
         count(lit(1)).as("n")),
-      Some("""SELECT round(corr(l_extendedprice, l_quantity), 6) AS c_price_qty,
+      """SELECT round(corr(l_extendedprice, l_quantity), 6) AS c_price_qty,
                      round(corr(l_discount, l_tax), 6) AS c_disc_tax,
                      round(corr(l_extendedprice, l_discount), 6) AS c_price_disc,
                      count(*)::BIGINT AS n
-              FROM lineitem""")),
+              FROM lineitem"""),
 
     Q("a19_retention", (s, d) => {
       // weekly cohort retention: users bucketed by first-seen week, then
@@ -5044,13 +5051,13 @@ object SparkEntry {
         .groupBy(col("cohort_wk"), col("wk").as("activity_wk"))
         .agg(countDistinct(col("user_id")).as("n_users"))
     },
-      Some("""WITH e AS (SELECT user_id, date_trunc('week', ts)::DATE AS wk FROM events),
+      """WITH e AS (SELECT user_id, date_trunc('week', ts)::DATE AS wk FROM events),
               cohort AS (SELECT user_id, min(wk) AS cohort_wk FROM e GROUP BY 1),
               act AS (SELECT DISTINCT user_id, wk FROM e)
               SELECT c.cohort_wk, a.wk AS activity_wk,
                      count(DISTINCT a.user_id)::BIGINT AS n_users
               FROM act a JOIN cohort c USING (user_id)
-              GROUP BY 1, 2""")),
+              GROUP BY 1, 2"""),
 
     Q("a16_funnel", (s, d) =>
       // ordered view -> click -> purchase funnel per user: earliest stage
@@ -5059,7 +5066,7 @@ object SparkEntry {
         ev(s, d).select(col("user_id"), col("ts"), col("event_type")),
         col("user_id"), col("ts"), col("event_type"),
         Seq("view", "click", "purchase")),
-      Some("""WITH u AS (SELECT DISTINCT user_id FROM events),
+      """WITH u AS (SELECT DISTINCT user_id FROM events),
               s0 AS (SELECT user_id, min(ts) AS t_0 FROM events
                      WHERE event_type = 'view' GROUP BY 1),
               s1 AS (SELECT e.user_id, min(e.ts) AS t_1 FROM events e
@@ -5073,7 +5080,7 @@ object SparkEntry {
                            WHEN s1.t_1 IS NOT NULL THEN 2
                            WHEN s0.t_0 IS NOT NULL THEN 1 ELSE 0 END)::INT AS stage
               FROM u LEFT JOIN s0 USING (user_id) LEFT JOIN s1 USING (user_id)
-                     LEFT JOIN s2 USING (user_id)""")),
+                     LEFT JOIN s2 USING (user_id)"""),
 
     Q("events_e2e_engagement", (s, d) =>
       // events-side composite FLAGSHIP: sessionize (30-min gap) +
@@ -5084,7 +5091,7 @@ object SparkEntry {
       graft.operators.Engagement.cohortEngagement(ev(s, d), col("user_id"),
         col("ts"), col("event_type"), col("value"), gapSeconds = 1800L,
         funnelStages = Seq("view", "click", "purchase")),
-      Some("""WITH e AS (SELECT user_id, ts, event_type, value FROM events),
+      """WITH e AS (SELECT user_id, ts, event_type, value FROM events),
               g AS (SELECT user_id,
                       CASE WHEN lag(ts) OVER w IS NULL
                              OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
@@ -5137,7 +5144,7 @@ object SparkEntry {
                 wk1_retained,
                 round(wk1_retained * 100.0 / n_users, 6) AS wk1_retention_pct,
                 val_dec::DOUBLE AS conv_value
-              FROM rep""")),
+              FROM rep"""),
 
     Q("a15_zscore", (s, d) =>
       // per-type z-score outliers on the event stream: group stats from
@@ -5145,19 +5152,19 @@ object SparkEntry {
       graft.operators.Stats.zScoreOutliers(
         ev(s, d).select(col("event_id"), col("event_type"), col("value")),
         col("event_type"), col("event_id"), col("value"), threshold = 3.0),
-      Some("""WITH s AS (SELECT event_type, avg(value) AS m, stddev_samp(value) AS sd
+      """WITH s AS (SELECT event_type, avg(value) AS m, stddev_samp(value) AS sd
                          FROM events GROUP BY 1),
               z AS (SELECT e.event_id, e.event_type, e.value,
                       CASE WHEN s.sd IS NULL OR s.sd = 0 THEN 0.0
                            ELSE round((e.value - s.m) / s.sd, 4) END AS z
                     FROM events e JOIN s USING (event_type))
               SELECT event_id, event_type, value, z, abs(z) > 3.0 AS is_outlier
-              FROM z""")),
+              FROM z"""),
 
     Q("x_lang_id", (s, d) =>
       doc(s, d).select(col("doc_id"), TextFunctions.langId(col("text")).as("pred_lang"),
         (TextFunctions.langId(col("text")) === col("lang")).as("agrees")),
-      Some("""WITH sc AS (SELECT doc_id, lang,
+      """WITH sc AS (SELECT doc_id, lang,
                 len(regexp_extract_all(lower(text), '\b(the|and|of|is|was|that|with)\b')) AS s_en,
                 len(regexp_extract_all(lower(text), '\b(el|la|los|las|es|que|con|para)\b')) AS s_es,
                 len(regexp_extract_all(lower(text), '\b(le|la|les|est|que|avec|pour|dans)\b')) AS s_fr,
@@ -5166,7 +5173,7 @@ object SparkEntry {
               p AS (SELECT doc_id, lang,
                 """ + langArgmaxSql + """ AS pred_lang
               FROM sc)
-              SELECT doc_id, pred_lang, pred_lang = lang AS agrees FROM p""")),
+              SELECT doc_id, pred_lang, pred_lang = lang AS agrees FROM p"""),
 
     Q("x_source_kl", (s, d) =>
       // per-source token-distribution KL divergence vs the whole corpus
@@ -5176,7 +5183,7 @@ object SparkEntry {
       // per-term ln contributions round at 9, the KL at 6; the most
       // divergent term per source via deterministic struct-max argmax
       TextFunctions.sourceKl(doc(s, d), col("source"), col("text")),
-      Some("""WITH tk AS (SELECT src, term FROM (
+      """WITH tk AS (SELECT src, term FROM (
                        SELECT source AS src,
                          unnest(string_split_regex(trim(text), '\s+')) AS term
                        FROM documents) WHERE term <> ''),
@@ -5204,7 +5211,7 @@ object SparkEntry {
                             FROM k) WHERE rn = 1)
               SELECT agg.src AS source, n_tokens, vocab_size, kl_nats,
                      top_term, top_contrib
-              FROM agg JOIN top ON agg.src = top.src""")),
+              FROM agg JOIN top ON agg.src = top.src"""),
 
     Q("a32_cumulative_reach", (s, d) =>
       // growth dashboard: DAU + new users + EXACT cumulative distinct
@@ -5213,7 +5220,7 @@ object SparkEntry {
       // sum (never count(DISTINCT) OVER, which is quadratic AND
       // single-partition)
       graft.operators.Stats.cumulativeReach(ev(s, d), col("user_id"), col("ts")),
-      Some("""WITH e AS (SELECT user_id AS u, ts::DATE AS day FROM events),
+      """WITH e AS (SELECT user_id AS u, ts::DATE AS day FROM events),
               fs AS (SELECT u, min(day) AS fd FROM e GROUP BY 1),
               nn AS (SELECT fd AS day, count(*)::BIGINT AS n_new FROM fs GROUP BY 1),
               da AS (SELECT day, count(DISTINCT u)::BIGINT AS dau FROM e GROUP BY 1),
@@ -5223,7 +5230,7 @@ object SparkEntry {
                 sum(n_new) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)::BIGINT
                   AS cum_users,
                 round(n_new / dau::DOUBLE, 6) AS pct_new
-              FROM j""")),
+              FROM j"""),
 
     Q("a39_skyline", (s, d) => {
       // 2-D Pareto frontier of the corpus: the longest document available
@@ -5237,7 +5244,7 @@ object SparkEntry {
         .select(col("x").as("quality"), col("max_y").cast("int").as("max_tokens"),
           col("n_pts"))
     },
-      Some("""WITH b AS (SELECT
+      """WITH b AS (SELECT
                 (CASE WHEN length(trim(text)) = 0 THEN 0
                       ELSE len(string_split_regex(trim(text), '\s+')) END)::INT AS n_tok_ws,
                 (length(text) - length(regexp_replace(text, '[.,;:!?''"()\[\]{}-]', '', 'g')))::INT AS n_punct,
@@ -5257,7 +5264,7 @@ object SparkEntry {
                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS suf
                     FROM p)
               SELECT quality, max_tokens, n_pts FROM s
-              WHERE suf IS NULL OR max_tokens > suf""")),
+              WHERE suf IS NULL OR max_tokens > suf"""),
 
     Q("a40_kaplan_meier", (s, d) =>
       // Kaplan-Meier survival curve for time-to-first-purchase (right-
@@ -5268,7 +5275,7 @@ object SparkEntry {
       // quantized before accumulation), exponentiated once at the end
       graft.operators.Stats.kaplanMeier(ev(s, d), col("user_id"),
         col("ts"), col("event_type"), convType = "purchase"),
-      Some("""WITH e AS (SELECT user_id AS u, ts::DATE AS day, event_type AS et FROM events),
+      """WITH e AS (SELECT user_id AS u, ts::DATE AS day, event_type AS et FROM events),
               sp AS (SELECT u, min(day) AS birth,
                        min(CASE WHEN et = 'purchase' THEN day END) AS conv
                      FROM e GROUP BY 1),
@@ -5288,7 +5295,7 @@ object SparkEntry {
                        ELSE -1000000000000000000 END AS fx FROM r)
               SELECT dur AS dur_days, n_risk, n_events, n_censored,
                 round(exp(sum(fx) OVER (ORDER BY dur ROWS UNBOUNDED PRECEDING)::DOUBLE / 1e9), 6) AS surv
-              FROM sx""")),
+              FROM sx"""),
 
     Q("a41_markov_attribution", (s, d) =>
       // data-driven (removal-effect) attribution: per-user journeys up
@@ -5300,7 +5307,7 @@ object SparkEntry {
         col("ts"), col("event_type"), col("value"),
         channels = Seq("click", "view", "signup", "error"),
         convType = "purchase"),
-      Some("""WITH e AS (SELECT user_id AS u, ts AS t, event_type AS et, value AS v FROM events),
+      """WITH e AS (SELECT user_id AS u, ts AS t, event_type AS et, value AS v FROM events),
               fc AS (SELECT u, min(t) AS cus FROM e WHERE et = 'purchase' GROUP BY 1),
               j AS MATERIALIZED (SELECT e.u, e.t, e.et, (fc.cus IS NOT NULL) AS cv
                     FROM e LEFT JOIN fc ON e.u = fc.u
@@ -5337,7 +5344,7 @@ object SparkEntry {
                 CASE WHEN sr.sre > 0
                      THEN floor(rv.rev * re.removal_effect / sr.sre * 1e6 + 0.5) / 1e6
                      ELSE 0.0 END AS attributed_rev
-              FROM re CROSS JOIN rv CROSS JOIN sr""")),
+              FROM re CROSS JOIN rv CROSS JOIN sr"""),
 
     Q("a42_ab_test", (s, d) =>
       // A/B readout with CUPED: arms = user-id parity, metric = per-user
@@ -5349,7 +5356,7 @@ object SparkEntry {
       graft.operators.Stats.abTestCuped(ev(s, d), col("user_id"),
         col("ts"), col("event_type"), col("value"),
         convType = "purchase", armOf = u => pmod(u, lit(2))),
-      Some("""WITH b AS (SELECT user_id AS u, epoch_us(ts) AS us, event_type AS et, value AS v FROM events),
+      """WITH b AS (SELECT user_id AS u, epoch_us(ts) AS us, event_type AS et, value AS v FROM events),
               mid AS (SELECT CAST(floor((min(us) + max(us)) / 2) AS BIGINT) AS mid FROM b),
               pu AS (SELECT u,
                        coalesce(sum(CASE WHEN et = 'purchase' AND us >= mid.mid
@@ -5421,7 +5428,7 @@ object SparkEntry {
                 round((am_a - am_b) / 1e6, 6) AS adj_diff,
                 round((am_a - am_b) / sqrt(ase2), 6) AS adj_t_stat,
                 round(1.0 - (av_a + av_b) / (vy_a + vy_b), 6) AS var_reduction
-              FROM w6""")),
+              FROM w6"""),
 
     Q("a38_incremental_join", (s, d) =>
       // incremental JOIN maintenance (the join sibling of a18's
@@ -5448,10 +5455,10 @@ object SparkEntry {
             round(sum(col("l_extendedprice").cast("decimal(14,2)")), 2)
               .cast("double").as("revenue"))
       },
-      Some("""SELECT o_orderstatus, l_returnflag, count(*)::BIGINT AS n,
+      """SELECT o_orderstatus, l_returnflag, count(*)::BIGINT AS n,
                      round(sum(l_extendedprice::DECIMAL(14,2)), 2)::DOUBLE AS revenue
               FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-              GROUP BY 1, 2""")),
+              GROUP BY 1, 2"""),
 
     Q("a35_grouping_sets", (s, d) => {
       // explicit GROUPING SETS — the arbitrary-set sibling of a12
@@ -5468,13 +5475,13 @@ object SparkEntry {
                GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
                                        (l_returnflag), ())""")
     },
-      Some("""SELECT l_returnflag AS rf, l_linestatus AS ls,
+      """SELECT l_returnflag AS rf, l_linestatus AS ls,
                      grouping_id(l_returnflag, l_linestatus)::INT AS gid,
                      count(*)::BIGINT AS n,
                      sum(l_quantity::DECIMAL(12,2))::DOUBLE AS qty
               FROM lineitem
               GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-                                      (l_returnflag), ())""")),
+                                      (l_returnflag), ())"""),
 
     Q("a36_gap_fill", (s, d) =>
       // dense calendar spine + gap fill: every day between min and max
@@ -5492,14 +5499,14 @@ object SparkEntry {
           .select(col("day"), coalesce(col("n"), lit(0L)).as("n_events"),
             when(col("n").isNull, 1).otherwise(0).as("is_gap"))
       },
-      Some("""WITH daily AS (SELECT ts::DATE AS day, count(*)::BIGINT AS n
+      """WITH daily AS (SELECT ts::DATE AS day, count(*)::BIGINT AS n
                              FROM events GROUP BY 1),
               bounds AS (SELECT min(day) AS lo, max(day) AS hi FROM daily),
               spine AS (SELECT unnest(generate_series(lo, hi,
                                  INTERVAL 1 DAY))::DATE AS day FROM bounds)
               SELECT spine.day, coalesce(daily.n, 0)::BIGINT AS n_events,
                      (CASE WHEN daily.n IS NULL THEN 1 ELSE 0 END)::INT AS is_gap
-              FROM spine LEFT JOIN daily ON spine.day = daily.day""")),
+              FROM spine LEFT JOIN daily ON spine.day = daily.day"""),
 
     Q("a37_conversion_lag", (s, d) =>
       // time-to-convert distribution: per converting user the minutes
@@ -5528,7 +5535,7 @@ object SparkEntry {
           .select(col("n").as("n_converted"), col("median_lag_min"),
             col("p90_lag_min"))
       },
-      Some("""WITH s0 AS (SELECT user_id, min(ts) AS t_0 FROM events
+      """WITH s0 AS (SELECT user_id, min(ts) AS t_0 FROM events
                           WHERE event_type = 'view' GROUP BY 1),
               s1 AS (SELECT e.user_id, min(e.ts) AS t_1 FROM events e
                      JOIN s0 ON s0.user_id = e.user_id
@@ -5547,7 +5554,7 @@ object SparkEntry {
               t AS (SELECT sum(c)::BIGINT AS n FROM per)
               SELECT t.n AS n_converted, med.m AS median_lag_min,
                      p90.p AS p90_lag_min
-              FROM t CROSS JOIN med CROSS JOIN p90""")),
+              FROM t CROSS JOIN med CROSS JOIN p90"""),
 
     Q("a34_markov_transitions", (s, d) =>
       // first-order Markov transition matrix of per-user event sequences
@@ -5556,7 +5563,7 @@ object SparkEntry {
       // state-space-sized per-from totals
       graft.operators.Stats.transitionMatrix(ev(s, d), col("user_id"),
         col("ts"), col("event_type")),
-      Some("""WITH pr AS (SELECT event_type AS from_type,
+      """WITH pr AS (SELECT event_type AS from_type,
                        lead(event_type) OVER (PARTITION BY user_id ORDER BY ts)
                          AS to_type
                      FROM events),
@@ -5565,7 +5572,7 @@ object SparkEntry {
               t AS (SELECT from_type, sum(n)::BIGINT AS tt FROM c GROUP BY 1)
               SELECT c.from_type, c.to_type, c.n,
                      round(c.n / t.tt::DOUBLE, 6) AS p
-              FROM c JOIN t USING (from_type)""")),
+              FROM c JOIN t USING (from_type)"""),
 
     Q("x_shard_balance", (s, d) =>
       // deterministic corpus sharding (pmod(md5(doc_id), 16) — stable
@@ -5574,7 +5581,7 @@ object SparkEntry {
       // cross-products through one double division
       graft.operators.Sampling.shardBalance(doc(s, d), col("doc_id"),
         col("text"), nShards = 16),
-      Some("""WITH b AS (SELECT
+      """WITH b AS (SELECT
                 ('0x' || substr(md5(doc_id::VARCHAR || '#shard'), 1, 8))::BIGINT
                   % 16 AS shard,
                 (CASE WHEN length(trim(text)) = 0 THEN 0
@@ -5588,7 +5595,7 @@ object SparkEntry {
                            count(*)::BIGINT AS n_shards FROM per)
               SELECT shard, n_docs, n_tokens, n_chars,
                 round((n_tokens * n_shards) / t_tok::DOUBLE, 6) AS balance
-              FROM per CROSS JOIN t""")),
+              FROM per CROSS JOIN t"""),
 
     Q("v_power_iteration", (s, d) =>
       // top principal direction of the embedding cloud by 2-step power
@@ -5600,7 +5607,7 @@ object SparkEntry {
       // the full trajectory
       graft.operators.Similarity.powerIteration(emb(s, d), col("vec_id"),
         col("embedding"), dim = 64, iters = 2),
-      Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
               s1 AS (SELECT vec_id, round(sum(v[i + 1] * 0.125), 9) AS s
                      FROM e, range(64) r(i) GROUP BY vec_id),
               w1 AS (SELECT i AS d,
@@ -5622,7 +5629,7 @@ object SparkEntry {
                 (SELECT vd FROM u2 WHERE d = 0) AS v0,
                 (SELECT vd FROM u2 WHERE d = 1) AS v1,
                 (SELECT vd FROM u2 WHERE d = 2) AS v2,
-                (SELECT vd FROM u2 WHERE d = 3) AS v3""")),
+                (SELECT vd FROM u2 WHERE d = 3) AS v3"""),
 
     Q("x_langid_eval", (s, d) =>
       // language-ID EVALUATION against the labeled corpus: the
@@ -5640,20 +5647,20 @@ object SparkEntry {
             round(col("n") / col("__t"), 6).as("share"),
             when(col("lang") === col("pred"), 1).otherwise(0).as("is_correct"))
       },
-      Some("WITH " + langGuessCte("lang", "pred") + """,
+      "WITH " + langGuessCte("lang", "pred") + """,
               cells AS (SELECT lang, pred, count(*)::BIGINT AS n FROM p GROUP BY 1, 2),
               t AS (SELECT lang, sum(n)::BIGINT AS tt FROM cells GROUP BY 1)
               SELECT cells.lang, pred, n,
                      round(n / t.tt::DOUBLE, 6) AS share,
                      (CASE WHEN cells.lang = pred THEN 1 ELSE 0 END)::INT AS is_correct
-              FROM cells JOIN t USING (lang)""")),
+              FROM cells JOIN t USING (lang)"""),
 
     Q("x_corpus_card", (s, d) =>
       // the per-source dataset-release report: size, token budget, mean
       // quality (DECIMAL-exact sum), predicted-English share, exact-dup
       // rate — one projection + one hash aggregate over the corpus
       TextFunctions.corpusCard(doc(s, d), col("source"), col("text"), col("n_chars")),
-      Some("""WITH b AS (SELECT source, n_chars, lower(text) AS lt, text,
+      """WITH b AS (SELECT source, n_chars, lower(text) AS lt, text,
                 (CASE WHEN length(trim(text)) = 0 THEN 0
                       ELSE len(string_split_regex(trim(text), '\s+')) END)::BIGINT AS n_tok,
                 (length(text) - length(regexp_replace(text, '[.,;:!?''"()\[\]{}-]', '', 'g')))::INT AS n_punct,
@@ -5682,13 +5689,13 @@ object SparkEntry {
                        AS pct_pred_en,
                      round((count(*) - count(DISTINCT fp)) * 100.0 / count(*), 6)
                        AS dup_rate_pct
-              FROM q GROUP BY 1""")),
+              FROM q GROUP BY 1"""),
 
     Q("x_winnow", (s, d) =>
       // winnowing document fingerprints (k-gram hash, window-min, dedupe)
       TextFunctions.winnowFingerprints(doc(s, d), col("doc_id"), col("text"),
         k = 5, w = 4),
-      Some("""WITH h AS (SELECT doc_id,
+      """WITH h AS (SELECT doc_id,
                 [('0x' || substr(md5(substr(text, i, 5)), 1, 8))::BIGINT
                  for i in generate_series(1, len(text) - 4)] AS hs
               FROM documents WHERE len(text) >= 5),
@@ -5696,7 +5703,7 @@ object SparkEntry {
                       list_distinct([list_min(hs[j:j+3])
                                      for j in generate_series(1, len(hs) - 3)]) AS fps
                     FROM h WHERE len(hs) >= 4)
-              SELECT doc_id, unnest(fps) AS fp FROM f""")),
+              SELECT doc_id, unnest(fps) AS fp FROM f"""),
 
     Q("x_passage_dup", (s, d) =>
       // duplicate-passage pairs: docs sharing >= 2 winnowing fingerprints
@@ -5707,7 +5714,7 @@ object SparkEntry {
       // oracle replays the Rabin-Karp rolling kernel as a per-gram fold
       // (acc * B + codepoint) mod M — exact integer arithmetic, bit-equal
       // to the native O(1)-per-position recurrence by construction
-      Some("""WITH cs AS (SELECT doc_id, string_split(text, '') AS cs
+      """WITH cs AS (SELECT doc_id, string_split(text, '') AS cs
                           FROM documents WHERE len(text) >= 5),
               h AS (SELECT doc_id,
                 [list_reduce([ord(ch)::BIGINT for ch in cs[i:i + 4]],
@@ -5723,7 +5730,7 @@ object SparkEntry {
                      WHERE fp IN (SELECT fp FROM fp0 GROUP BY fp HAVING count(*) <= 50))
               SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*)::BIGINT AS n_shared
               FROM fp a JOIN fp b ON a.fp = b.fp AND a.doc_id < b.doc_id
-              GROUP BY 1, 2 HAVING count(*) >= 2""")),
+              GROUP BY 1, 2 HAVING count(*) >= 2"""),
 
     Q("x_decontaminate", (s, d) => {
       // benchmark decontamination: docs with doc_id % 97 = 0 stand in for
@@ -5734,7 +5741,7 @@ object SparkEntry {
         docs.filter(col("doc_id") % 97 === 0),
         col("doc_id"), col("text"), col("text"), n = 5)
     },
-      Some("""WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
+      """WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
                             FROM documents),
               grams AS (SELECT doc_id,
                           unnest(list_distinct([array_to_string(w[i:i+4], ' ')
@@ -5748,7 +5755,7 @@ object SparkEntry {
               SELECT s.doc_id, s.n_grams,
                      coalesce(h.n_contaminated, 0)::BIGINT AS n_contaminated,
                      round(coalesce(h.n_contaminated, 0) / s.n_grams, 6) AS contamination
-              FROM sizes s LEFT JOIN hit h USING (doc_id)""")),
+              FROM sizes s LEFT JOIN hit h USING (doc_id)"""),
 
     Q("x_quality", (s, d) =>
       doc(s, d).select(col("doc_id"),
@@ -5757,7 +5764,7 @@ object SparkEntry {
         TextFunctions.punctCount(col("text")).as("n_punct"),
         TextFunctions.stopwordCount(col("text")).as("n_stop"),
         TextFunctions.qualityScore(col("text")).as("quality")),
-      Some("""WITH b AS (SELECT doc_id, text,
+      """WITH b AS (SELECT doc_id, text,
                 (CASE WHEN length(trim(text)) = 0 THEN 0
                       ELSE len(string_split_regex(trim(text), '\s+')) END)::INT AS n_tok_ws,
                 len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))::INT AS n_tok_bpe,
@@ -5771,14 +5778,14 @@ object SparkEntry {
                   + least((CASE WHEN n_tok_ws > 0 THEN n_stop / n_tok_ws::DOUBLE ELSE 0 END) * 4.0, 1.0) * 0.4
                   + (1.0 - least((CASE WHEN length(text) > 0 THEN n_punct / length(text)::DOUBLE ELSE 0 END) * 10.0, 1.0)) * 0.2,
                   0.0), 1.0), 6) AS quality
-              FROM b""")),
+              FROM b"""),
 
     Q("x_repetition", (s, d) =>
       // Gopher-style repetition filters: top-2-gram occupancy and
       // duplicated-3-gram fraction per document, via explode + one hash
       // aggregate per gram size (map-side partials; no arrays in the agg)
       TextFunctions.repetitionMetrics(doc(s, d), col("doc_id"), col("text")),
-      Some("""WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
+      """WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
                             FROM documents),
               g2 AS (SELECT doc_id,
                        unnest([array_to_string(t[i:i+1], ' ')
@@ -5799,7 +5806,7 @@ object SparkEntry {
                      round(coalesce(t2.top_frac, 0), 6) AS top2gram_frac,
                      round(coalesce(t3.dup_frac, 0), 6) AS dup3gram_frac
               FROM documents d
-              LEFT JOIN t2 USING (doc_id) LEFT JOIN t3 USING (doc_id)""")),
+              LEFT JOIN t2 USING (doc_id) LEFT JOIN t3 USING (doc_id)"""),
 
     Q("x_kneser_ney", (s, d) =>
       // interpolated Kneser-Ney bigram LM — every formula input is an
@@ -5807,7 +5814,7 @@ object SparkEntry {
       // the continuation-probability redistribution is what separates it
       // from x_bigram_lm's MLE estimates
       TextFunctions.kneserNeyBigram(doc(s, d), col("doc_id"), col("text")),
-      Some("WITH " + bigramCountCtes + """,
+      "WITH " + bigramCountCtes + """,
               fw AS (SELECT w1, sum(cnt)::BIGINT AS c1, count(*)::BIGINT AS n1fw
                      FROM c GROUP BY 1),
               bw AS (SELECT w2, count(*)::BIGINT AS n1bw FROM c GROUP BY 1),
@@ -5816,7 +5823,7 @@ object SparkEntry {
                 round(greatest(c.cnt - 0.75, 0.0) / fw.c1
                   + 0.75 * fw.n1fw / fw.c1
                     * round(bw.n1bw / b.n_types, 9), 6) AS p_kn
-              FROM c JOIN fw USING (w1) JOIN bw USING (w2) CROSS JOIN b""")),
+              FROM c JOIN fw USING (w1) JOIN bw USING (w2) CROSS JOIN b"""),
 
     Q("x_gopher_rules", (s, d) =>
       // the Gopher quality battery (Rae et al. 2021) — per-doc named-rule
@@ -5833,7 +5840,7 @@ object SparkEntry {
           when(col("doc_id") % 13 === 0,
             repeat(lit(" #"), 12)).otherwise(lit(""))).as("t")),
         col("doc_id"), col("t")),
-      Some("""WITH t AS (SELECT doc_id, text
+      """WITH t AS (SELECT doc_id, text
                 || CASE WHEN doc_id % 5 = 0
                         THEN repeat(chr(10) || '- x', 10) ELSE '' END
                 || CASE WHEN doc_id % 7 = 0
@@ -5880,14 +5887,14 @@ object SparkEntry {
               FROM r)
               SELECT *, (r_word_count * r_word_len * r_symbol * r_bullet
                          * r_ellipsis * r_alpha * r_stop) AS passes
-              FROM v""")),
+              FROM v"""),
 
     Q("x_tfidf", (s, d) =>
       // TF-IDF top-3 terms per doc: one explode, two hash aggregates, a
       // broadcast scalar (N), one window — rank on the ROUNDED score with
       // a term tiebreak so near-ties can't flip across engines
       TextFunctions.tfIdfTopK(doc(s, d), col("doc_id"), col("text"), 3),
-      Some("""WITH toks AS (SELECT doc_id,
+      """WITH toks AS (SELECT doc_id,
                 unnest(string_split_regex(trim(text), '\s+')) AS term FROM documents),
               tf AS (SELECT doc_id, term, count(*)::BIGINT AS tf
                      FROM toks WHERE term <> '' GROUP BY 1, 2),
@@ -5899,7 +5906,7 @@ object SparkEntry {
               SELECT doc_id, term, tf, tfidf, rnk FROM (
                 SELECT *, (row_number() OVER (PARTITION BY doc_id
                   ORDER BY tfidf DESC, term))::INT AS rnk FROM sc)
-              WHERE rnk <= 3""")),
+              WHERE rnk <= 3"""),
 
     Q("x_redact", (s, d) =>
       // PII scrub: emails/URLs/phones redacted in a fixed order; counts
@@ -5914,7 +5921,7 @@ object SparkEntry {
           TextFunctions.piiMatchCount(col("t"), TextFunctions.piiPatterns(1)._1).as("n_urls"),
           TextFunctions.piiMatchCount(col("t"), TextFunctions.piiPatterns(2)._1).as("n_phones"),
           md5(TextFunctions.redactPii(col("t"))).as("redacted_md5")),
-      Some("""WITH t AS (SELECT doc_id,
+      """WITH t AS (SELECT doc_id,
                 text || ' contact user' || doc_id::VARCHAR || '@example.com via http://site'
                      || doc_id::VARCHAR || '.org or 555-' || doc_id::VARCHAR AS t
               FROM documents)
@@ -5926,7 +5933,7 @@ object SparkEntry {
                   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
                   'https?://[^\s]+', '[URL]', 'g'),
                   '\b555-[0-9]+\b', '[PHONE]', 'g')) AS redacted_md5
-              FROM t""")),
+              FROM t"""),
 
     Q("x_pii_redact", (s, d) =>
       // structured-identifier PII scrub (the deeper cousin of x_redact):
@@ -5953,7 +5960,7 @@ object SparkEntry {
             concat(lit(" from 10.0."), col("doc_id") % 256,
               lit(".77"))).otherwise(lit(""))).as("t")),
         col("doc_id"), col("t")),
-      Some("""WITH t AS (SELECT doc_id, text
+      """WITH t AS (SELECT doc_id, text
                 || CASE WHEN doc_id % 4 = 0 THEN ' Contact: user'
                      || doc_id::VARCHAR || '@example.com' ELSE '' END
                 || CASE WHEN doc_id % 8 = 0
@@ -6001,7 +6008,7 @@ object SparkEntry {
                      (n_email + n_card + n_ssn + n_phone + n_ip) AS n_pii,
                      length(t0)::INT AS orig_len,
                      length(t5)::INT AS redacted_len
-              FROM s5""")),
+              FROM s5"""),
 
     Q("x_code_detect", (s, d) =>
       // code-vs-prose routing (the corpus-mixing gate): 5 independent
@@ -6016,7 +6023,7 @@ object SparkEntry {
             lit("import foo.bar\npublic void doThing() {\n  int rowCount = 0;\n  if (rowCount < 10) {\n    total_count = rowCount + otherValue\n  }\n}"))
             .otherwise(col("text")).as("t")),
         col("doc_id"), col("t")),
-      Some("""WITH t AS (SELECT doc_id,
+      """WITH t AS (SELECT doc_id,
                 CASE WHEN doc_id % 3 = 0 THEN
                   'import foo.bar' || chr(10) ||
                   'public void doThing() {' || chr(10) ||
@@ -6067,7 +6074,7 @@ object SparkEntry {
                      s_kw,
                      CASE WHEN s_symbol + s_semi + s_indent + s_camel + s_kw
                           >= 2 THEN 1 ELSE 0 END AS is_code
-              FROM v""")),
+              FROM v"""),
 
     Q("x_char_entropy", (s, d) => {
       // per-document character entropy (a cheap perplexity proxy:
@@ -6079,7 +6086,7 @@ object SparkEntry {
         .select(col("grp").as("doc_id"), col("n_members").as("n_chars"),
           col("n_configs").as("n_distinct_chars"), col("entropy"))
     },
-      Some("""WITH ch AS (SELECT doc_id, unnest(string_split(text, '')) AS ch
+      """WITH ch AS (SELECT doc_id, unnest(string_split(text, '')) AS ch
                           FROM documents),
               c AS (SELECT doc_id, ch, count(*)::BIGINT AS cnt
                     FROM ch WHERE ch <> '' GROUP BY 1, 2),
@@ -6091,7 +6098,7 @@ object SparkEntry {
                         AS entropy
                     FROM c JOIN m USING (doc_id) GROUP BY c.doc_id, m.n_chars)
               SELECT m.doc_id, m.n_chars, m.n_distinct_chars, e.entropy
-              FROM m JOIN e USING (doc_id)""")),
+              FROM m JOIN e USING (doc_id)"""),
 
     Q("x_corpus_filter", (s, d) => {
       // the end-to-end corpus curation decision: exact-dup canonical
@@ -6115,7 +6122,7 @@ object SparkEntry {
             .otherwise("keep"))
         .select(col("doc_id"), (col("reason") === "keep").as("keep"), col("reason"))
     },
-      Some("""WITH b AS (SELECT doc_id, text,
+      """WITH b AS (SELECT doc_id, text,
                 (CASE WHEN length(trim(text)) = 0 THEN 0
                       ELSE len(string_split_regex(trim(text), '\s+')) END)::INT AS n_tok_ws,
                 len(regexp_extract_all(lower(text),
@@ -6155,7 +6162,7 @@ object SparkEntry {
                        WHEN quality < 0.4 THEN 'low_quality'
                        WHEN dup3 > 0.6 THEN 'repetitive'
                        ELSE 'keep' END AS reason
-                FROM j)""")),
+                FROM j)"""),
 
     // ===== M: multimodal plumbing =====
 
@@ -6193,9 +6200,9 @@ object SparkEntry {
           regexp_extract(col("path"), "doc_(\\d+)\\.bin", 1).cast("int").as("doc_id"),
           col("length"), md5(col("content")).as("content_md5"))
     },
-      Some("""SELECT i::INT AS doc_id, 32::BIGINT AS length,
+      """SELECT i::INT AS doc_id, 32::BIGINT AS length,
               md5(md5(i::VARCHAR)) AS content_md5
-              FROM (SELECT unnest(generate_series(0, 49)) AS i) t""")),
+              FROM (SELECT unnest(generate_series(0, 49)) AS i) t"""),
 
     Q("m_real_meta", (s, d) =>
       // REAL image-header metadata (not a stub): binaryFile scan over the
@@ -6213,7 +6220,7 @@ object SparkEntry {
           regexp_extract(col("path"), "img_(\\d+)\\.", 1).cast("int").as("img_id"),
           col("length").as("n_bytes"),
           col("format"), col("width"), col("height")),
-      Some(s"""WITH RECURSIVE b AS (SELECT
+      s"""WITH RECURSIVE b AS (SELECT
                  regexp_extract(filename, 'img_(\\d+)\\.', 1)::INT AS img_id,
                  size::BIGINT AS n_bytes, hex(content) AS hx
                FROM read_blob('$repoRoot/fixtures/media/*')),
@@ -6309,7 +6316,7 @@ object SparkEntry {
               UNION ALL
               SELECT img_id, n_bytes, 'unknown' AS format,
                      NULL::INT AS width, NULL::INT AS height
-              FROM b WHERE img_id NOT IN (SELECT img_id FROM known)""")),
+              FROM b WHERE img_id NOT IN (SELECT img_id FROM known)"""),
 
     Q("m_audio_meta", (s, d) =>
       // REAL audio-header metadata — the audio twin of m_real_meta:
@@ -6327,7 +6334,7 @@ object SparkEntry {
           col("length").as("n_bytes"),
           col("format"), col("channels"), col("sample_rate"),
           col("bits_per_sample")),
-      Some(s"""WITH RECURSIVE b AS (SELECT
+      s"""WITH RECURSIVE b AS (SELECT
                  regexp_extract(filename, 'aud_(\\d+)\\.', 1)::INT AS aud_id,
                  size::BIGINT AS n_bytes, hex(content) AS hx
                FROM read_blob('$repoRoot/fixtures/audio/*')),
@@ -6430,7 +6437,7 @@ object SparkEntry {
               SELECT aud_id, n_bytes, 'unknown' AS format,
                      NULL::INT AS channels, NULL::INT AS sample_rate,
                      NULL::INT AS bits_per_sample
-              FROM b WHERE aud_id NOT IN (SELECT aud_id FROM known)""")),
+              FROM b WHERE aud_id NOT IN (SELECT aud_id FROM known)"""),
 
     Q("m_video_meta", (s, d) =>
       // REAL video-header metadata — completes the image/audio/video
@@ -6447,7 +6454,7 @@ object SparkEntry {
           regexp_extract(col("path"), "vid_(\\d+)\\.", 1).cast("int").as("vid_id"),
           col("length").as("n_bytes"),
           col("format"), col("width"), col("height"), col("duration_ms")),
-      Some(s"""WITH RECURSIVE b AS (SELECT
+      s"""WITH RECURSIVE b AS (SELECT
                  regexp_extract(filename, 'vid_(\\d+)\\.', 1)::INT AS vid_id,
                  size::BIGINT AS n_bytes, hex(content) AS hx,
                  size::BIGINT AS n
@@ -6611,7 +6618,7 @@ object SparkEntry {
               SELECT vid_id, n_bytes, 'unknown' AS format,
                      NULL::INT AS width, NULL::INT AS height,
                      NULL::BIGINT AS duration_ms
-              FROM b WHERE vid_id NOT IN (SELECT vid_id FROM known)""")),
+              FROM b WHERE vid_id NOT IN (SELECT vid_id FROM known)"""),
 
     Q("m_media_scale", (s, d) => {
       // CORPUS-SCALE audio-kernel round-trip: synthesize REAL header
@@ -6664,7 +6671,7 @@ object SparkEntry {
       parsed.groupBy(col("format"), col("channels"), col("bits_per_sample"))
         .agg(count(lit(1)).as("n"), sum(col("sample_rate")).cast("long").as("rate_sum"))
     },
-      Some("""WITH base AS (SELECT doc_id, doc_id % 3 AS kind,
+      """WITH base AS (SELECT doc_id, doc_id % 3 AS kind,
                        (1 + doc_id % 8)::INT AS p_ch,
                        (8000 * (1 + doc_id % 6))::BIGINT AS p_rate,
                        (8 * (1 + doc_id % 4))::INT AS p_bits
@@ -6679,15 +6686,15 @@ object SparkEntry {
                FROM base)
               SELECT format, channels::INT AS channels, bits_per_sample,
                      count(*)::BIGINT AS n, sum(rate)::BIGINT AS rate_sum
-              FROM derived GROUP BY 1, 2, 3""")),
+              FROM derived GROUP BY 1, 2, 3"""),
 
     Q("m_media_meta", (s, d) =>
       Multimodal.asMediaTable(doc(s, d), "doc_id", "text", "text/plain")
         .select(col("media_id"), col("meta.mime").as("mime"),
           col("meta.n_bytes").as("n_bytes"), col("meta.checksum").as("checksum")),
-      Some("""SELECT doc_id AS media_id, 'text/plain' AS mime,
+      """SELECT doc_id AS media_id, 'text/plain' AS mime,
               octet_length(encode(text))::BIGINT AS n_bytes, md5(text) AS checksum
-              FROM documents""")),
+              FROM documents"""),
 
     Q("m_patch_grid", (s, d) =>
       // ViT patchification bookkeeping: synthetic per-doc image dims
@@ -6699,7 +6706,7 @@ object SparkEntry {
             (lit(32) + pmod(col("meta.n_bytes"), lit(48))).as("w"),
             (lit(16) + pmod(col("meta.n_bytes"), lit(32))).as("h")),
         col("media_id"), col("w"), col("h"), patch = 16),
-      Some("""WITH m AS (SELECT doc_id AS media_id,
+      """WITH m AS (SELECT doc_id AS media_id,
                        (32 + octet_length(encode(text)) % 48)::INT AS w,
                        (16 + octet_length(encode(text)) % 32)::INT AS h
                 FROM documents),
@@ -6715,7 +6722,7 @@ object SparkEntry {
                      least(py * 16 + 16, h)::INT AS y1,
                      ((least(px * 16 + 16, w) - px * 16)
                       * (least(py * 16 + 16, h) - py * 16))::INT AS n_px
-              FROM p""")),
+              FROM p"""),
 
     Q("m_decode_stub", (s, d) =>
       // per-element double columns (not the raw array — unhashable in the
@@ -6726,11 +6733,11 @@ object SparkEntry {
           (0 until 8).map(i => col("features").getItem(i).as(s"f$i")): _*),
       // the stub feature = md5-digest bytes / 255 — replicable in SQL, so
       // even the placeholder decode is oracle-checked end to end
-      Some("SELECT doc_id AS media_id, " +
+      "SELECT doc_id AS media_id, " +
         (0 until 8).map(i =>
           s"(('0x' || substr(md5(text), ${i * 2 + 1}, 2))::INT)::DOUBLE / 255 AS f$i")
           .mkString(", ") +
-        " FROM documents")),
+        " FROM documents"),
 
     Q("m_resize_stub", (s, d) =>
       // stride-downsample "resize" of the opaque payload (every 4th byte);
@@ -6742,22 +6749,22 @@ object SparkEntry {
         .select(col("media_id"),
           octet_length(col("resized")).cast("long").as("rs_bytes"),
           md5(col("resized")).as("rs_checksum")),
-      Some("""WITH r AS (SELECT doc_id,
+      """WITH r AS (SELECT doc_id,
                 array_to_string([substr(text, i, 1)
                                  for i in generate_series(1, len(text), 4)], '') AS rz
               FROM documents)
               SELECT doc_id AS media_id,
                      octet_length(encode(rz))::BIGINT AS rs_bytes,
                      md5(rz) AS rs_checksum
-              FROM r""")),
+              FROM r"""),
 
     // ===== ST / IV: streaming-in-batch + intervals =====
 
     Q("st_tumbling", (s, d) =>
       StreamOps.tumblingCounts(ev(s, d), "1 hour", "30 minutes"),
-      Some("""SELECT date_trunc('hour', ts) AS window_start, event_type,
+      """SELECT date_trunc('hour', ts) AS window_start, event_type,
               count(*) AS n, round(sum(value::DECIMAL(12,2)), 2)::DOUBLE AS total_value
-              FROM events GROUP BY 1, 2""")),
+              FROM events GROUP BY 1, 2"""),
 
     Q("st_interval_join", (s, d) => {
       // batch twin of the stream-stream time-band join (watermarked in
@@ -6768,10 +6775,10 @@ object SparkEntry {
         e.filter(col("event_type") === "purchase"), 3600, "1 hour")
         .select(col("user_id"), col("cause_id"), col("effect_id"))
     },
-      Some("""SELECT l.user_id, l.event_id AS cause_id, r.event_id AS effect_id
+      """SELECT l.user_id, l.event_id AS cause_id, r.event_id AS effect_id
               FROM events l JOIN events r ON l.user_id = r.user_id
                 AND r.ts > l.ts AND r.ts <= l.ts + INTERVAL 1 HOUR
-              WHERE l.event_type = 'error' AND r.event_type = 'purchase'""")),
+              WHERE l.event_type = 'error' AND r.event_type = 'purchase'"""),
 
     Q("st_sliding", (s, d) =>
       // sliding windows: 1-hour windows every 30 minutes — each event
@@ -6780,19 +6787,19 @@ object SparkEntry {
       ev(s, d).groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(col("window.start").as("window_start"), col("event_type"), col("n")),
-      Some("""WITH w AS (SELECT event_type,
+      """WITH w AS (SELECT event_type,
                 unnest([time_bucket(INTERVAL 30 MINUTE, ts),
                         time_bucket(INTERVAL 30 MINUTE, ts) - INTERVAL 30 MINUTE])
                   AS window_start
               FROM events)
               SELECT window_start, event_type, count(*) AS n
-              FROM w GROUP BY 1, 2""")),
+              FROM w GROUP BY 1, 2"""),
 
     Q("st_session_window", (s, d) =>
       // the BUILT-IN session_window operator (merge-on-overlap semantics:
       // an event extends a session iff it lands strictly before prev+gap)
       StreamOps.sessionWindowCounts(ev(s, d), "30 minutes", "1 hour"),
-      Some("""WITH s AS (
+      """WITH s AS (
                 SELECT user_id, ts, value,
                        CASE WHEN lag(ts) OVER w IS NULL
                               OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
@@ -6806,7 +6813,7 @@ object SparkEntry {
                      max(ts) + INTERVAL 30 MINUTE AS session_end,
                      count(*)::BIGINT AS n_events,
                      round(sum(value::DECIMAL(12,2)), 2)::DOUBLE AS total_value
-              FROM i GROUP BY user_id, sid""")),
+              FROM i GROUP BY user_id, sid"""),
 
     Q("m_frame_sample", (s, d) => {
       // frame-sample plumbing arithmetic (stride block sampling of the
@@ -6817,7 +6824,7 @@ object SparkEntry {
           aggregate(transform(col("frames"), f => octet_length(f)),
             lit(0), (a, b) => a + b).as("frame_bytes"))
     },
-      Some("""WITH m AS (SELECT doc_id AS media_id,
+      """WITH m AS (SELECT doc_id AS media_id,
                                 octet_length(encode(text)) AS L
                          FROM documents),
               f AS (SELECT media_id, L,
@@ -6827,7 +6834,7 @@ object SparkEntry {
                      list_sum([least(16, L - i * 64)
                                for i in generate_series(0, n_frames - 1)])::INT
                        AS frame_bytes
-              FROM f""")),
+              FROM f"""),
 
     Q("st_sessionize", (s, d) =>
       Intervals.sessionize(ev(s, d), col("user_id"), col("ts"), 1800)
@@ -6835,7 +6842,7 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_events"), min(col("ts")).as("session_start"),
           max(col("ts")).as("session_end"),
           round(sum(col("value").cast("decimal(12,2)")), 2).cast("double").as("total_value")),
-      Some("""WITH g AS (SELECT user_id, ts, value,
+      """WITH g AS (SELECT user_id, ts, value,
                 CASE WHEN lag(ts) OVER w IS NULL
                        OR epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1 ELSE 0 END AS brk
               FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
@@ -6845,13 +6852,13 @@ object SparkEntry {
               SELECT user_id, session_seq, count(*) AS n_events, min(ts) AS session_start,
                      max(ts) AS session_end,
                      round(sum(value::DECIMAL(12,2)), 2)::DOUBLE AS total_value
-              FROM s GROUP BY 1, 2""")),
+              FROM s GROUP BY 1, 2"""),
 
     Q("iv_gaps", (s, d) =>
       // coverage holes between merged order-coverage windows per customer
       Intervals.coverageGaps(
         orderCoverage(s, d), col("o_custkey"), col("o_orderdate"), col("o_end")),
-      Some("WITH " + coverageIslandCtes + """,
+      "WITH " + coverageIslandCtes + """,
               m AS (SELECT key, min(f) AS range_from, max(t) AS range_to
                     FROM y GROUP BY key, isl),
               g AS (SELECT key, range_to AS gap_from,
@@ -6859,7 +6866,7 @@ object SparkEntry {
                     FROM m)
               SELECT key, gap_from, gap_to,
                      date_diff('day', gap_from::DATE, gap_to::DATE)::BIGINT AS gap_days
-              FROM g WHERE gap_to IS NOT NULL""")),
+              FROM g WHERE gap_to IS NOT NULL"""),
 
     Q("iv_overlap_join", (s, d) =>
       // interval x interval overlap as an EQUI join on 32-day buckets +
@@ -6875,7 +6882,7 @@ object SparkEntry {
             col("l_shipdate"), (col("l_shipdate") + expr("INTERVAL 7 DAY")).as("l_end")),
         col("o_orderkey"), col("o_orderdate"), col("o_end"),
         col("li_id"), col("l_shipdate"), col("l_end")),
-      Some("""WITH a AS (SELECT o_orderkey AS a_id, o_orderdate::DATE AS a_from,
+      """WITH a AS (SELECT o_orderkey AS a_id, o_orderdate::DATE AS a_from,
                        (o_orderdate + INTERVAL 30 DAY)::DATE AS a_to
                 FROM orders WHERE o_orderkey % 500 = 0),
               b AS (SELECT l_orderkey::VARCHAR || '-' || l_linenumber::VARCHAR
@@ -6888,7 +6895,7 @@ object SparkEntry {
                      least(a_to, b_to) AS ov_to,
                      (date_diff('day', greatest(a_from, b_from), least(a_to, b_to))
                       + 1)::BIGINT AS ov_days
-              FROM a JOIN b ON a_from <= b_to AND b_from <= a_to""")),
+              FROM a JOIN b ON a_from <= b_to AND b_from <= a_to"""),
 
     Q("iv_time_weighted", (s, d) => {
       // interval-weighted average order value per customer: each order's
@@ -6917,7 +6924,7 @@ object SparkEntry {
           (expr("__icents * 10000 div total_days") / lit(1000000.0))
             .as("tw_avg"))
     },
-      Some("""WITH o AS (SELECT o_custkey, o_orderkey, o_orderdate::DATE AS d,
+      """WITH o AS (SELECT o_custkey, o_orderkey, o_orderdate::DATE AS d,
                        o_totalprice::DECIMAL(12,2) AS v FROM orders),
               iv AS (SELECT o_custkey, v,
                        date_diff('day', d, lead(d) OVER (PARTITION BY o_custkey
@@ -6928,7 +6935,7 @@ object SparkEntry {
                     FROM iv WHERE days IS NOT NULL GROUP BY 1)
               SELECT custkey, n_intervals, total_days,
                 (((wsum * 100)::BIGINT * 10000) // total_days) / 1000000.0 AS tw_avg
-              FROM g WHERE total_days > 0""")),
+              FROM g WHERE total_days > 0"""),
 
     Q("iv_allen", (s, d) =>
       // Allen interval-algebra relations over co-occurring pairs — the
@@ -6946,7 +6953,7 @@ object SparkEntry {
             col("l_shipdate"), (col("l_shipdate") + expr("INTERVAL 7 DAY")).as("l_end")),
         col("o_orderkey"), col("o_orderdate"), col("o_end"),
         col("li_id"), col("l_shipdate"), col("l_end")),
-      Some("""WITH a AS (SELECT o_orderkey AS a_id, o_orderdate::DATE AS a_from,
+      """WITH a AS (SELECT o_orderkey AS a_id, o_orderdate::DATE AS a_from,
                        (o_orderdate + INTERVAL 30 DAY)::DATE AS a_to
                 FROM orders WHERE o_orderkey % 100 = 0),
               b AS (SELECT l_orderkey::VARCHAR || '-' || l_linenumber::VARCHAR
@@ -6966,14 +6973,14 @@ object SparkEntry {
                           WHEN b_to = a_from THEN 'met_by'
                           WHEN a_from < b_from THEN 'overlaps'
                           ELSE 'overlapped_by' END AS relation
-              FROM a JOIN b ON a_from <= b_to AND b_from <= a_to""")),
+              FROM a JOIN b ON a_from <= b_to AND b_from <= a_to"""),
 
     Q("iv_merge_intervals", (s, d) =>
       Intervals.mergeIntervals(
         orderCoverage(s, d), col("o_custkey"), col("o_orderdate"), col("o_end")),
-      Some("WITH " + coverageIslandCtes + """
+      "WITH " + coverageIslandCtes + """
               SELECT key, min(f) AS range_from, max(t) AS range_to, count(*)::INT AS n_merged
-              FROM y GROUP BY key, isl""")),
+              FROM y GROUP BY key, isl"""),
 
     Q("iv_scd2_snapshot", (s, d) => {
       // SCD2 as-of snapshot: the versioned-hierarchy table filtered to the
@@ -6986,7 +6993,7 @@ object SparkEntry {
           col("eff_from").cast("date").as("eff_from"),
           col("eff_to").cast("date").as("eff_to"))
     },
-      Some("WITH " + orderVersionCtes + """,
+      "WITH " + orderVersionCtes + """,
               ver AS (
                 SELECT key, version_seq, signature, eff_from,
                        coalesce(lead(eff_from) OVER (PARTITION BY key
@@ -6994,7 +7001,7 @@ object SparkEntry {
                                 DATE '2099-01-01') AS eff_to
                 FROM g)
               SELECT * FROM ver
-              WHERE eff_from <= DATE '1995-06-01' AND eff_to >= DATE '1995-06-01'""")),
+              WHERE eff_from <= DATE '1995-06-01' AND eff_to >= DATE '1995-06-01'"""),
 
     Q("x_chunk_dedup", (s, d) =>
       // C4-style corpus chunk dedup: fixed 12-word chunks, keep only the
@@ -7002,7 +7009,7 @@ object SparkEntry {
       // order), reassemble the surviving text. First-occurrence is ONE
       // hash agg (min(struct)) with map-side partials — no windows
       Dedup.chunkDedup(doc(s, d), col("doc_id"), col("text"), chunkWords = 12),
-      Some("""WITH toks AS (SELECT doc_id,
+      """WITH toks AS (SELECT doc_id,
                 string_split_regex(trim(text), '\s+') AS t FROM documents),
               ch0 AS (SELECT doc_id, t,
                         unnest(range((len(t) - 1) // 12 + 1)) AS cidx FROM toks),
@@ -7017,7 +7024,7 @@ object SparkEntry {
                      sum(CASE WHEN rn = 1 THEN 0 ELSE 1 END)::BIGINT AS n_removed,
                      coalesce(string_agg(chunk, ' ' ORDER BY cidx) FILTER (WHERE rn = 1),
                               '') AS dedup_text
-              FROM k GROUP BY doc_id""")),
+              FROM k GROUP BY doc_id"""),
 
     Q("d_span_dedup", (s, d) =>
       // ExactSubstr-style duplicate-span REMOVAL (Lee et al. 2022) over
@@ -7028,7 +7035,7 @@ object SparkEntry {
       // kept_text by a different route (exploded covered positions +
       // anti-join) — the output contract is the meeting point.
       Dedup.spanDedup(doc(s, d), col("doc_id"), col("text"), spanWords = 8),
-      Some("""WITH toks AS (SELECT doc_id,
+      """WITH toks AS (SELECT doc_id,
                 string_split_regex(trim(text), '\s+') AS t FROM documents),
               w0 AS (SELECT doc_id, t, len(t) AS n FROM toks),
               wins AS (SELECT doc_id, t, unnest(range(n - 7)) AS p
@@ -7062,7 +7069,7 @@ object SparkEntry {
                      (f.n_removed_tokens * 1000000 // f.n_tokens)::BIGINT
                        AS removed_ppm,
                      f.kept_text
-              FROM fin f LEFT JOIN dagg a USING (doc_id)""")),
+              FROM fin f LEFT JOIN dagg a USING (doc_id)"""),
 
     Q("d_semdedup", (s, d) =>
       // SemDeDup (Abbas et al. 2023): deterministic k-means cells (1 Lloyd
@@ -7071,7 +7078,7 @@ object SparkEntry {
       // cosine >= 0.35. Pairwise work stays within cells (O(n^2/k))
       Dedup.semDedup(emb(s, d), col("vec_id"), col("embedding"),
         k = 8, iters = 1, threshold = 0.35),
-      Some(kMeansCtes(1) + """,
+      kMeansCtes(1) + """,
               fin AS (SELECT vec_id, v, cell AS cluster FROM (
                         SELECT e.vec_id, e.v, c.cell,
                                row_number() OVER (PARTITION BY e.vec_id
@@ -7084,7 +7091,7 @@ object SparkEntry {
                       WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.35)
               SELECT f.vec_id AS doc_id, f.cluster,
                      (d.vec_id IS NOT NULL) AS is_semdup
-              FROM fin f LEFT JOIN dup d ON f.vec_id = d.vec_id""")),
+              FROM fin f LEFT JOIN dup d ON f.vec_id = d.vec_id"""),
 
     Q("a22_join_size_est", (s, d) => {
       // count-min join-cardinality estimate (Cormode & Muthukrishnan §4.2):
@@ -7102,7 +7109,7 @@ object SparkEntry {
             col("exact_join_rows"), 6).as("rel_overcount"),
           (col("est_join_rows") >= col("exact_join_rows")).as("no_undercount"))
     },
-      Some("""WITH rws AS (SELECT unnest(generate_series(0, 3)) AS r),
+      """WITH rws AS (SELECT unnest(generate_series(0, 3)) AS r),
               sa AS (SELECT r,
                        ('0x' || substr(md5(r::VARCHAR || ':' || l_orderkey::VARCHAR), 1, 8))::BIGINT
                          % 1024 AS c,
@@ -7122,7 +7129,7 @@ object SparkEntry {
                      round((est_join_rows - exact_join_rows) / exact_join_rows::DOUBLE, 6)
                        AS rel_overcount,
                      est_join_rows >= exact_join_rows AS no_undercount
-              FROM est CROSS JOIN ex""")),
+              FROM est CROSS JOIN ex"""),
 
     Q("x_url_canon", (s, d) => {
       // crawl URL canonicalization: messy synthetic URLs (case-mixed
@@ -7151,7 +7158,7 @@ object SparkEntry {
           countDistinct(col("canon")).as("n_pages"),
           min(col("canon")).as("first_page"))
     },
-      Some("""WITH u AS (SELECT 'https://' ||
+      """WITH u AS (SELECT 'https://' ||
                 CASE WHEN o_orderkey % 4 = 0 THEN 'WWW.'
                      WHEN o_orderkey % 4 = 1 THEN 'www.'
                      WHEN o_orderkey % 4 = 2 THEN 'img.' ELSE '' END ||
@@ -7183,7 +7190,7 @@ object SparkEntry {
               SELECT domain, count(*)::BIGINT AS n_urls,
                      count(DISTINCT canon)::BIGINT AS n_pages,
                      min(canon) AS first_page
-              FROM c GROUP BY domain""")),
+              FROM c GROUP BY domain"""),
 
     Q("v_pq_adc", (s, d) =>
       // product-quantization ANN (Jégou 2011): 8 subspaces x 16-entry
@@ -7193,7 +7200,7 @@ object SparkEntry {
       // replays the whole trajectory: training, encoding and ADC
       Similarity.pqAdcTopK(emb(s, d), "vec_id", "embedding",
         queryId = 0L, m = 8, ksub = 16, k = 10),
-      Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
               sub AS (SELECT vec_id, j, list_slice(v, j*8 + 1, j*8 + 8) AS s
                       FROM e CROSS JOIN (SELECT unnest(range(8)) AS j)),
               seed AS (SELECT m.j, m.cell, s.s AS cen
@@ -7225,7 +7232,7 @@ object SparkEntry {
                         WHERE code.vec_id <> 0 GROUP BY 1)
               SELECT vec_id AS neighbor_id, adc_dist,
                      (row_number() OVER (ORDER BY adc_dist ASC, vec_id))::INT AS rank
-              FROM score QUALIFY rank <= 10""")),
+              FROM score QUALIFY rank <= 10"""),
 
     Q("v_sq8", (s, d) =>
       // SQ8 scalar-quantization ANN (FAISS QT_8bit): per-DIMENSION
@@ -7237,7 +7244,7 @@ object SparkEntry {
       // score
       Similarity.sq8TopK(emb(s, d), "vec_id", "embedding",
         queryId = 0L, k = 10),
-      Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
               x AS (SELECT vec_id, generate_subscripts(v, 1) AS pos,
                            unnest(v) AS x FROM e),
               st AS (SELECT pos, min(x) AS mn, max(x) AS mx,
@@ -7261,7 +7268,7 @@ object SparkEntry {
                      FROM t GROUP BY 1)
               SELECT vec_id AS neighbor_id, adc_dist,
                      (row_number() OVER (ORDER BY adc_dist ASC, vec_id))::INT AS rank
-              FROM sc QUALIFY rank <= 10""")),
+              FROM sc QUALIFY rank <= 10"""),
 
     Q("v_ivf_pq", (s, d) =>
       // IVF-PQ (FAISS IVFADC): coarse inverted file (8 cells, probe 2)
@@ -7272,7 +7279,7 @@ object SparkEntry {
       // the grouped ADC sum
       Similarity.ivfPqTopK(emb(s, d), "vec_id", "embedding",
         queryId = 0L, nlist = 8, nprobe = 2, m = 8, ksub = 16, k = 10),
-      Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
               cent AS (SELECT m.cell, e.v AS cen
                        FROM (SELECT vec_id % 8 AS cell, min(vec_id) AS mvid
                              FROM e GROUP BY 1) m
@@ -7324,7 +7331,7 @@ object SparkEntry {
                         WHERE code.vec_id <> 0 GROUP BY 1)
               SELECT vec_id AS neighbor_id, adc_dist,
                      (row_number() OVER (ORDER BY adc_dist ASC, vec_id))::INT AS rank
-              FROM score QUALIFY rank <= 10""")),
+              FROM score QUALIFY rank <= 10"""),
 
     Q("a23_trailing_window", (s, d) => {
       // trailing 90-day revenue per customer: the RANGE-frame window
@@ -7346,14 +7353,14 @@ object SparkEntry {
           coalesce(col("t90"), lit(0)).cast("decimal(18,2)")
             .cast("double").as("trailing_90d"))
     },
-      Some("""WITH o AS (SELECT o_custkey, o_orderkey, o_orderdate::DATE AS od,
+      """WITH o AS (SELECT o_custkey, o_orderkey, o_orderdate::DATE AS od,
                        o_totalprice::DECIMAL(18,2) AS price FROM orders)
               SELECT a.o_custkey, a.o_orderkey, a.od,
                      coalesce(sum(b.price), 0)::DECIMAL(18,2)::DOUBLE AS trailing_90d
               FROM o a LEFT JOIN o b
                 ON a.o_custkey = b.o_custkey
                AND b.od >= a.od - 90 AND b.od <= a.od - 1
-              GROUP BY 1, 2, 3""")),
+              GROUP BY 1, 2, 3"""),
 
     Q("v_mrl_recall", (s, d) => {
       // matryoshka-style truncation check: top-10 cosine neighbors of one
@@ -7375,7 +7382,7 @@ object SparkEntry {
       full.join(trunc, Seq("rank"))
         .withColumn("agree", col("id_full") === col("id_trunc"))
     },
-      Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
               q AS (SELECT v FROM e WHERE vec_id = 0),
               fl AS (SELECT e.vec_id AS id_full,
                             round(list_cosine_similarity(q.v, e.v), 6) AS cos_full,
@@ -7393,7 +7400,7 @@ object SparkEntry {
                      FROM e CROSS JOIN q WHERE e.vec_id <> 0 QUALIFY rank <= 10)
               SELECT fl.rank, fl.id_full, fl.cos_full, tr.id_trunc, tr.cos_trunc,
                      fl.id_full = tr.id_trunc AS agree
-              FROM fl JOIN tr ON fl.rank = tr.rank""")),
+              FROM fl JOIN tr ON fl.rank = tr.rank"""),
 
     Q("v_hard_negatives", (s, d) => {
       // contrastive-training hard-negative mining: for each anchor
@@ -7406,7 +7413,7 @@ object SparkEntry {
         "vec_id", "embedding", pmod(col("vec_id"), lit(5)).cast("int"),
         "vec_id", "embedding", pmod(col("vec_id"), lit(5)).cast("int"), k = 3)
     },
-      Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
               q AS (SELECT vec_id, v FROM e WHERE vec_id % 100 = 0)
               SELECT query_id, rank, neg_id, neg_label, cos FROM (
                 SELECT q.vec_id AS query_id, e.vec_id AS neg_id,
@@ -7417,7 +7424,7 @@ object SparkEntry {
                                    e.vec_id))::INT AS rank
                 FROM q JOIN e ON q.vec_id <> e.vec_id
                 WHERE (q.vec_id % 5) <> (e.vec_id % 5))
-              WHERE rank <= 3""")),
+              WHERE rank <= 3"""),
 
     Q("a24_woe_binning", (s, d) => {
       // feature binning + weight-of-evidence encoding: 10 deterministic
@@ -7449,7 +7456,7 @@ object SparkEntry {
             ((col("n") - col("n_event")).cast("double") /
              (col("tot_n") - col("tot_ev")).cast("double"))), 6).as("woe"))
     },
-      Some("""WITH l AS (SELECT l_orderkey, l_linenumber,
+      """WITH l AS (SELECT l_orderkey, l_linenumber,
                        l_extendedprice::DECIMAL(12,2) AS x,
                        CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y
                 FROM lineitem),
@@ -7465,7 +7472,7 @@ object SparkEntry {
               SELECT bin, n, n_event, lo, hi,
                      round(ln((n_event::DOUBLE / tot_ev::DOUBLE) /
                               ((n - n_event)::DOUBLE / (tot_n - tot_ev)::DOUBLE)), 6) AS woe
-              FROM g CROSS JOIN t""")),
+              FROM g CROSS JOIN t"""),
 
     Q("a25_target_encoding", (s, d) => {
       // leakage-safe target encoding: per-category out-of-fold target
@@ -7486,7 +7493,7 @@ object SparkEntry {
                 (col("c_n") - col("f_n")).cast("double"), 6).as("oof_target_mean"),
           col("f_n").as("fold_rows"))
     },
-      Some("""WITH l AS (SELECT l_linestatus || '-' || (l_partkey % 8)::VARCHAR AS cat,
+      """WITH l AS (SELECT l_linestatus || '-' || (l_partkey % 8)::VARCHAR AS cat,
                        l_orderkey % 5 AS fold,
                        CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y
                 FROM lineitem),
@@ -7497,7 +7504,7 @@ object SparkEntry {
               SELECT pf.cat, pf.fold,
                      round((c_ev - f_ev)::DOUBLE / (c_n - f_n)::DOUBLE, 6) AS oof_target_mean,
                      f_n AS fold_rows
-              FROM pf JOIN pc ON pf.cat = pc.cat""")),
+              FROM pf JOIN pc ON pf.cat = pc.cat"""),
 
     Q("s16_partitioned_scan", (s, d) => {
       // hive-style partitioned layout + PARTITION PRUNING: write the
@@ -7516,12 +7523,12 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"),
           countDistinct(col("lang")).as("n_langs"))
     },
-      Some("""SELECT source, count(*)::BIGINT AS n_docs,
+      """SELECT source, count(*)::BIGINT AS n_docs,
                 sum(n_chars)::BIGINT AS n_chars,
                 count(DISTINCT lang)::BIGINT AS n_langs
               FROM documents
               WHERE source IN ('src1', 'src2', 'src3')
-              GROUP BY 1""")),
+              GROUP BY 1"""),
 
     Q("s17_column_stats", (s, d) => {
       // ANALYZE-style table statistics in ONE scan: per profiled column
@@ -7559,7 +7566,7 @@ object SparkEntry {
           col("r.ndv").as("ndv"), col("r.n_nulls").as("n_nulls"),
           col("r.min_val").as("min_val"), col("r.max_val").as("max_val"))
     },
-      Some("""WITH a AS (SELECT count(*)::BIGINT AS n,
+      """WITH a AS (SELECT count(*)::BIGINT AS n,
                 count(DISTINCT l_orderkey)::BIGINT AS ndv_ok,
                 sum(CASE WHEN l_orderkey IS NULL THEN 1 ELSE 0 END)::BIGINT AS nn_ok,
                 min(l_orderkey)::DOUBLE AS min_ok, max(l_orderkey)::DOUBLE AS max_ok,
@@ -7574,7 +7581,7 @@ object SparkEntry {
               UNION ALL
               SELECT 'l_quantity', n, ndv_qty, nn_qty, min_qty, max_qty FROM a
               UNION ALL
-              SELECT 'l_returnflag', n, ndv_rf, nn_rf, NULL, NULL FROM a""")),
+              SELECT 'l_returnflag', n, ndv_rf, nn_rf, NULL, NULL FROM a"""),
 
     Q("s18_compaction_plan", (s, d) => {
       // small-file compaction planner (the OPTIMIZE posture): a synthetic
@@ -7591,7 +7598,7 @@ object SparkEntry {
       graft.operators.Maintenance.compactionPlan(inv,
         col("part"), col("file"), col("size_bytes"), targetBytes = 32768L)
     },
-      Some("""WITH inv AS (SELECT substr(l_shipdate::VARCHAR, 1, 7) AS part,
+      """WITH inv AS (SELECT substr(l_shipdate::VARCHAR, 1, 7) AS part,
                        (l_orderkey % 199)::INT AS file,
                        sum(l_quantity::BIGINT * 7 + l_linenumber)::BIGINT AS size_bytes
                      FROM lineitem GROUP BY 1, 2),
@@ -7602,7 +7609,7 @@ object SparkEntry {
               SELECT part, (cb // 32768)::BIGINT AS bin, count(*)::BIGINT AS n_files,
                      sum(size_bytes)::BIGINT AS total_bytes,
                      min(file) AS file_from, max(file) AS file_to
-              FROM cum GROUP BY 1, 2""")),
+              FROM cum GROUP BY 1, 2"""),
 
     Q("s19_snapshot_diff", (s, d) => {
       // table-snapshot diff (the lakehouse version-compare / audit job):
@@ -7633,7 +7640,7 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_rows"),
           min(col("key")).as("key_min"), max(col("key")).as("key_max"))
     },
-      Some("""WITH o AS (SELECT o_orderkey, o_custkey, o_orderstatus FROM orders),
+      """WITH o AS (SELECT o_orderkey, o_custkey, o_orderstatus FROM orders),
               v1 AS (SELECT * FROM o WHERE o_orderkey % 50 <> 0),
               v2 AS (SELECT o_orderkey, o_custkey,
                        CASE WHEN o_orderkey % 13 = 0 THEN 'X'
@@ -7649,7 +7656,7 @@ object SparkEntry {
               SELECT status, count(*)::BIGINT AS n_rows,
                      min(coalesce(ka, kb)) AS key_min,
                      max(coalesce(ka, kb)) AS key_max
-              FROM j GROUP BY 1""")),
+              FROM j GROUP BY 1"""),
 
     Q("s20_zonemap_prune", (s, d) => {
       // zone-map data-skipping report: per-"file" [min,max] maps
@@ -7670,7 +7677,7 @@ object SparkEntry {
               ("pr_all", 0.0, 1000000000.0)))
             .withColumn("zone_col", lit("l_extendedprice")))
     },
-      Some("""WITH r AS (SELECT l_orderkey // 4096 AS file_id,
+      """WITH r AS (SELECT l_orderkey // 4096 AS file_id,
                        l_orderkey::DOUBLE AS v, l_extendedprice::DOUBLE AS pv
                      FROM lineitem),
               z1 AS (SELECT file_id, min(v) AS mn, max(v) AS mx,
@@ -7738,7 +7745,7 @@ object SparkEntry {
                      sum(m_all)::BIGINT,
                      round(1.0 - sum(CASE WHEN mx >= 0 AND mn <= 1000000000 THEN n_rows ELSE 0 END)::DOUBLE
                            / sum(n_rows), 6)
-              FROM z2""")),
+              FROM z2"""),
 
     Q("s21_mv_rewrite", (s, d) => {
       // materialized-view matching (plans/MvRewrite.scala): build a
@@ -7787,12 +7794,12 @@ object SparkEntry {
         s"MV rewrite did not fire; scans:\n$scanned")
       report
     },
-      Some("""SELECT l_returnflag, round(sum(l_quantity), 2) AS sum_qty,
+      """SELECT l_returnflag, round(sum(l_quantity), 2) AS sum_qty,
                      count(*)::BIGINT AS n,
                      min(l_quantity) AS min_qty, max(l_quantity) AS max_qty,
                      round(avg(l_quantity), 6) AS avg_qty
               FROM lineitem WHERE l_linestatus = 'F'
-              GROUP BY 1""")),
+              GROUP BY 1"""),
 
     Q("a45_benford", (s, d) =>
       // Benford's-law first-digit audit over order amounts — the
@@ -7812,7 +7819,7 @@ object SparkEntry {
         .withColumn("expected", round(log10(lit(1.0) + lit(1.0) / col("digit")), 6))
         .withColumn("dev", round(col("share") - col("expected"), 6))
         .select(col("digit"), col("n"), col("share"), col("expected"), col("dev")),
-      Some("""WITH d0 AS (SELECT substr(floor(l_extendedprice)::BIGINT::VARCHAR, 1, 1)::INT
+      """WITH d0 AS (SELECT substr(floor(l_extendedprice)::BIGINT::VARCHAR, 1, 1)::INT
                        AS digit
                      FROM lineitem WHERE l_extendedprice > 0),
               c AS (SELECT digit, count(*)::BIGINT AS n FROM d0 GROUP BY 1)
@@ -7821,7 +7828,7 @@ object SparkEntry {
                      round(log10(1.0 + 1.0 / digit), 6) AS expected,
                      round(round(n / (sum(n) OVER ())::DOUBLE, 6)
                            - round(log10(1.0 + 1.0 / digit), 6), 6) AS dev
-              FROM c""")),
+              FROM c"""),
 
     Q("a47_hll_merge", (s, d) => {
       // mergeable-sketch architecture check (the 100 TB distinct-count
@@ -7852,10 +7859,10 @@ object SparkEntry {
         (abs(col("est_8").cast("double") - col("exact_nd")) * 100 <=
           col("exact_nd") * 5).as("within_5pct"))
     },
-      Some("""SELECT 8::BIGINT AS n_shards,
+      """SELECT 8::BIGINT AS n_shards,
                      count(DISTINCT o_custkey)::BIGINT AS exact_nd,
                      true AS merge_consistent, true AS within_5pct
-              FROM orders""")),
+              FROM orders"""),
 
     Q("a46_ewma_anomaly", (s, d) =>
       // EWMA drift monitor over per-type daily event volume: alpha=1/2
@@ -7867,7 +7874,7 @@ object SparkEntry {
       graft.operators.Stats.ewmaAnomalies(ev(s, d),
         col("event_type"), col("ts"))
         .withColumnRenamed("grp", "event_type"),
-      Some("""WITH daily AS (SELECT event_type, ts::DATE AS day,
+      """WITH daily AS (SELECT event_type, ts::DATE AS day,
                        count(*)::BIGINT AS n
                      FROM events GROUP BY 1, 2),
               idx AS (SELECT *, (row_number() OVER (PARTITION BY event_type
@@ -7888,7 +7895,7 @@ object SparkEntry {
                           THEN 1 ELSE 0 END AS flag_high,
                      CASE WHEN j > 0 AND n::HUGEINT * pj < (sp - wgt)
                           THEN 1 ELSE 0 END AS flag_low
-              FROM s""")),
+              FROM s"""),
 
     Q("s12_format_roundtrip", (s, d) => {
       // JSONL + ORC sink/source fidelity: parquet -> write JSONL -> read
@@ -7913,10 +7920,10 @@ object SparkEntry {
           min(col("o_orderdate")).as("first_date"),
           max(col("o_orderkey")).as("max_key"))
     },
-      Some("""SELECT o_orderstatus, count(*) AS n,
+      """SELECT o_orderstatus, count(*) AS n,
               round(sum(o_totalprice::DECIMAL(12,2)), 2)::DOUBLE AS total,
               min(o_orderdate) AS first_date, max(o_orderkey) AS max_key
-              FROM orders GROUP BY 1""")),
+              FROM orders GROUP BY 1"""),
 
     Q("s15_xml_roundtrip", (s, d) => {
       // XML sink/source fidelity (Spark 4 built-in XML data source):
@@ -7943,11 +7950,11 @@ object SparkEntry {
           min(col("od_s")).as("first_date"),
           max(col("o_orderkey")).as("max_key"))
     },
-      Some("""SELECT o_orderstatus, count(*) AS n,
+      """SELECT o_orderstatus, count(*) AS n,
               round(sum(o_totalprice::DECIMAL(12,2)), 2)::DOUBLE AS total,
               min(strftime(o_orderdate, '%Y-%m-%d')) AS first_date,
               max(o_orderkey) AS max_key
-              FROM orders GROUP BY 1""")),
+              FROM orders GROUP BY 1"""),
 
     Q("s14_schema_merge", (s, d) => {
       // schema-evolution read: two parquet batches written with DIFFERENT
@@ -7967,10 +7974,10 @@ object SparkEntry {
       s.read.option("mergeSchema", "true").parquet(s"$base/b1", s"$base/b2")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
     },
-      Some("""SELECT o_orderkey, o_custkey,
+      """SELECT o_orderkey, o_custkey,
                      CASE WHEN o_orderkey % 2 = 0 THEN NULL
                           ELSE o_totalprice END AS o_totalprice
-              FROM orders""")),
+              FROM orders"""),
 
     Q("s13_cdc_apply", (s, d) => {
       // MERGE INTO without a table format: a synthetic changelog off
@@ -7990,7 +7997,7 @@ object SparkEntry {
         Seq("c_acctbal" -> col("o_totalprice")))
         .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"))
     },
-      Some("""WITH log AS (SELECT o_custkey AS k, o_orderkey AS seq,
+      """WITH log AS (SELECT o_custkey AS k, o_orderkey AS seq,
                        CASE WHEN o_orderkey % 13 = 0 THEN 'D' ELSE 'U' END AS op,
                        o_totalprice AS val FROM orders),
               latest AS (SELECT k, op, val FROM (
@@ -8002,7 +8009,7 @@ object SparkEntry {
               WHERE NOT EXISTS (SELECT 1 FROM latest l WHERE l.k = c.c_custkey)
               UNION ALL
               SELECT k AS c_custkey, NULL::INT AS c_nationkey, val AS c_acctbal
-              FROM latest WHERE op <> 'D'""")),
+              FROM latest WHERE op <> 'D'"""),
 
     Q("a26_expectations", (s, d) => {
       // declarative data-quality suite (the reference's scattered audit
@@ -8019,7 +8026,7 @@ object SparkEntry {
         Unique("li_line_unique", Seq("l_orderkey", "l_linenumber")),
         RefIntegrity("li_orders_fk", Seq("l_orderkey"), ord(s, d), Seq("o_orderkey"))))
     },
-      Some("""SELECT 'li_orderkey_not_null' AS check_name, 'not_null' AS kind,
+      """SELECT 'li_orderkey_not_null' AS check_name, 'not_null' AS kind,
                      count(*) FILTER (WHERE l_orderkey IS NULL)::BIGINT AS violations,
                      count(*) FILTER (WHERE l_orderkey IS NULL) = 0 AS pass
               FROM lineitem
@@ -8048,7 +8055,7 @@ object SparkEntry {
               SELECT 'li_orders_fk', 'ref', count(*)::BIGINT, count(*) = 0
               FROM lineitem l
               WHERE l_orderkey IS NOT NULL AND NOT EXISTS
-                (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)""")),
+                (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)"""),
 
     Q("x_sentence_split", (s, d) =>
       // sentence segmentation WITHOUT lookbehind (RE2-safe, so any engine
@@ -8071,7 +8078,7 @@ object SparkEntry {
             .as("max_sent_chars"))
         .withColumn("avg_words",
           round(col("total_words").cast("double") / col("n_sent"), 6)),
-      Some("""WITH s0 AS (SELECT doc_id,
+      """WITH s0 AS (SELECT doc_id,
                 list_filter(regexp_extract_all(text, '[^.!?]+[.!?]*'),
                             x -> length(trim(x)) > 0) AS sents
               FROM documents),
@@ -8083,7 +8090,7 @@ object SparkEntry {
                      FROM s0 WHERE len(sents) > 0)
               SELECT doc_id, n_sent, total_words, max_sent_chars,
                      round(total_words::DOUBLE / n_sent, 6) AS avg_words
-              FROM s1""")),
+              FROM s1"""),
 
     Q("x_feature_hash", (s, d) =>
       // hashing-trick featurization (Weinberger 2009): token -> md5
@@ -8099,7 +8106,7 @@ object SparkEntry {
           .otherwise(-1))
         .groupBy(col("doc_id"), col("idx"))
         .agg(sum(col("sgn")).as("val"), count(lit(1)).as("n_toks")),
-      Some("""WITH toks AS (SELECT doc_id,
+      """WITH toks AS (SELECT doc_id,
                 unnest(string_split_regex(trim(text), '\s+')) AS w FROM documents),
               h AS (SELECT doc_id,
                       ('0x' || substr(md5(w), 1, 8))::BIGINT AS h FROM toks),
@@ -8107,7 +8114,7 @@ object SparkEntry {
                       CASE WHEN (h // 64) % 2 = 0 THEN 1 ELSE -1 END AS sgn
                     FROM h)
               SELECT doc_id, idx, sum(sgn)::BIGINT AS val, count(*)::BIGINT AS n_toks
-              FROM f GROUP BY 1, 2""")),
+              FROM f GROUP BY 1, 2"""),
 
     Q("d_incremental_dedup", (s, d) => {
       // incremental (daily-batch) dedup: docs with doc_id % 10 = 0 are
@@ -8121,7 +8128,7 @@ object SparkEntry {
       Dedup.incrementalDedup(newB, corp, col("doc_id"), col("text"),
         n = 3, threshold = 0.1, maxDf = Some(50))
     },
-      Some(batchFingerprintCtes + """,
+      batchFingerprintCtes + """,
               ex AS (SELECT doc_id FROM nfp WHERE fp IN (SELECT fp FROM cfp)),
               shn0 AS (SELECT doc_id,
                         unnest(list_distinct([array_to_string(w[i:i+2], ' ')
@@ -8154,7 +8161,7 @@ object SparkEntry {
                           THEN 'drop' ELSE 'keep' END AS verdict
               FROM nfp n
               LEFT JOIN ex e ON n.doc_id = e.doc_id
-              LEFT JOIN nr r ON n.doc_id = r.doc_id""")),
+              LEFT JOIN nr r ON n.doc_id = r.doc_id"""),
 
     Q("d_bloom_dedup", (s, d) => {
       // bloom-filter pre-screen for the d_incremental_dedup ingest shape
@@ -8169,7 +8176,7 @@ object SparkEntry {
         docs.filter(pmod(col("doc_id"), lit(10)) =!= 0),
         col("doc_id"), col("text"), mBits = 1 << 18, k = 3)
     },
-      Some(batchFingerprintCtes + """,
+      batchFingerprintCtes + """,
               bits AS (SELECT DISTINCT
                          ('0x' || substr(md5(fp || ':' || i::VARCHAR), 1, 8))::BIGINT
                            % 262144 AS pos
@@ -8196,7 +8203,7 @@ object SparkEntry {
                                      / (n_batch - n_exact_dup)::DOUBLE, 6) END AS fp_rate,
                      n_bits_set,
                      round(n_bits_set / 262144.0, 6) AS fill_ratio
-              FROM agg, bc""")),
+              FROM agg, bc"""),
 
     Q("d_lsh_tuning", (s, d) => {
       // MinHash-LSH parameter planner: for each (bands, rows) split of a
@@ -8227,7 +8234,7 @@ object SparkEntry {
           lit(1.0) / col("rows_per_band")), 6))
         .withColumn("total_err", round(col("fp_area") + col("fn_area"), 6))
     },
-      Some("""WITH c AS (SELECT unnest([64, 32, 16, 8, 4]) AS bands,
+      """WITH c AS (SELECT unnest([64, 32, 16, 8, 4]) AS bands,
                        unnest([2, 4, 8, 16, 32]) AS rows_per_band),
               g AS (SELECT bands, rows_per_band,
                       unnest(generate_series(0, 99)) AS i FROM c),
@@ -8244,7 +8251,7 @@ object SparkEntry {
                      round(round(sum(CASE WHEN s < 0.8 THEN p ELSE 0 END) / 100.0, 6)
                            + round(sum(CASE WHEN s >= 0.8 THEN 1.0 - p ELSE 0 END) / 100.0, 6), 6)
                        AS total_err
-              FROM p0 GROUP BY 1, 2""")),
+              FROM p0 GROUP BY 1, 2"""),
 
     Q("x_quality_classifier", (s, d) =>
       // fastText-style hashed linear classifier inference (bag of
@@ -8255,7 +8262,7 @@ object SparkEntry {
       // sigmoid touches floats (round-6 guards libm ulp drift, the
       // a24 ln precedent)
       TextFunctions.hashedClassifierScore(doc(s, d), col("doc_id"), col("text")),
-      Some("""WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
+      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
                          FROM documents),
               f AS (SELECT doc_id,
                       list_concat(w,
@@ -8271,7 +8278,7 @@ object SparkEntry {
               SELECT doc_id, n_feats, w_sum,
                      round(1.0 / (1.0 + exp(-(w_sum / (1000.0 * n_feats)))), 6) AS prob,
                      (w_sum >= 0) AS label
-              FROM sc""")),
+              FROM sc"""),
 
     Q("x_chunk_windows", (s, d) =>
       // sliding-window chunking (RAG / training-sequence prep): 64-word
@@ -8283,7 +8290,7 @@ object SparkEntry {
         .select(col("doc_id"), col("cidx").cast("long").as("cidx"),
           col("start_w").cast("long").as("start_w"),
           col("n_w").cast("long").as("n_w"), col("chunk_md5")),
-      Some("""WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
+      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
                          FROM documents),
               n AS (SELECT doc_id, w, len(w) AS nw FROM t),
               c AS (SELECT doc_id, i::BIGINT AS cidx, (i * 48)::BIGINT AS start_w,
@@ -8292,7 +8299,7 @@ object SparkEntry {
                     FROM (SELECT doc_id, w, nw,
                             unnest(generate_series(0, (greatest(nw - 64, 0) + 47) // 48)) AS i
                           FROM n))
-              SELECT doc_id, cidx, start_w, n_w, chunk_md5 FROM c""")),
+              SELECT doc_id, cidx, start_w, n_w, chunk_md5 FROM c"""),
 
     Q("x_line_fix", (s, d) =>
       // RefinedWeb-style line-wise corrections: drop fragment /
@@ -8304,7 +8311,7 @@ object SparkEntry {
       TextFunctions.lineCorrections(doc(s, d), col("doc_id"), col("text"),
         lineWords = 8, minWords = 3, distinctRatioPct = 70,
         maxRemovedPct = 50),
-      Some("""WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
+      """WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
                             FROM documents),
               lines AS (SELECT doc_id, len(w)::BIGINT AS n_words, i AS idx,
                           w[(i*8+1):(i*8+8)] AS l
@@ -8326,7 +8333,7 @@ object SparkEntry {
                 coalesce(string_agg(CASE WHEN NOT dropped
                                          THEN array_to_string(l, ' ') END, ' '
                                     ORDER BY idx), '') AS kept_text
-              FROM fl GROUP BY 1""")),
+              FROM fl GROUP BY 1"""),
 
     Q("a27_psi_drift", (s, d) => {
       // population-stability-index drift check between two halves of the
@@ -8363,7 +8370,7 @@ object SparkEntry {
         .select(col("bin"), col("n_train"), col("n_score"),
           round((q - p) * log(q / p), 6).as("psi_term"))
     },
-      Some("""WITH l AS (SELECT l_orderkey, l_linenumber, l_extendedprice AS x,
+      """WITH l AS (SELECT l_orderkey, l_linenumber, l_extendedprice AS x,
                        l_orderkey % 2 AS half FROM lineitem),
               tr AS (SELECT x, l_orderkey, l_linenumber FROM l WHERE half = 0),
               r AS (SELECT x, row_number() OVER (ORDER BY x, l_orderkey, l_linenumber) AS rn
@@ -8389,7 +8396,7 @@ object SparkEntry {
                      round(((n_score + 0.5) / (ts + 5.0) - (n_train + 0.5) / (tn + 5.0)) *
                            ln(((n_score + 0.5) / (ts + 5.0)) /
                               ((n_train + 0.5) / (tn + 5.0))), 6) AS psi_term
-              FROM g CROSS JOIN t""")),
+              FROM g CROSS JOIN t"""),
 
     Q("x_curriculum_order", (s, d) =>
       // curriculum ordering with source interleaving: easy→hard within
@@ -8402,7 +8409,7 @@ object SparkEntry {
         col("source"), col("n_chars"), Seq(col("doc_id")))
         .select(col("doc_id"), col("source"), col("n_chars").cast("long").as("n_chars"),
           col("rank_in_source"), col("pos")),
-      Some("""WITH s AS (SELECT src AS source,
+      """WITH s AS (SELECT src AS source,
                       row_number() OVER (ORDER BY src) - 1 AS src_idx,
                       (SELECT count(DISTINCT source) FROM documents) AS ns
                     FROM (SELECT DISTINCT source AS src FROM documents)),
@@ -8412,7 +8419,7 @@ object SparkEntry {
                     FROM documents)
               SELECT r.doc_id, r.source, r.n_chars, r.rank_in_source,
                      (r.rank_in_source - 1) * s.ns + s.src_idx AS pos
-              FROM r JOIN s ON r.source = s.source""")),
+              FROM r JOIN s ON r.source = s.source"""),
 
     Q("d_dataset_card", (s, d) => {
       // per-source corpus datasheet (the "dataset card" summary a data
@@ -8445,7 +8452,7 @@ object SparkEntry {
         .groupBy(col("source")).agg(min(col("n_chars")).as("median_chars"))
       stats.join(med, Seq("source"))
     },
-      Some("""WITH base AS (SELECT source, lang, n_chars, md5(text) AS fp,
+      """WITH base AS (SELECT source, lang, n_chars, md5(text) AS fp,
                 (CASE WHEN len(trim(text)) = 0 THEN 0
                       ELSE len(string_split_regex(trim(text), '\s+'))
                  END)::BIGINT AS toks
@@ -8467,7 +8474,7 @@ object SparkEntry {
                       FROM cum WHERE c * 2 >= n GROUP BY 1)
               SELECT s.source, s.n_docs, s.n_chars_total, s.n_tokens,
                      s.n_en_docs, s.n_dup_docs, m.median_chars
-              FROM stats s JOIN med m USING (source)""")),
+              FROM stats s JOIN med m USING (source)"""),
 
     Q("d_dedup_report", (s, d) =>
       // per-source dedup retention report: exact fingerprint dedup
@@ -8477,7 +8484,7 @@ object SparkEntry {
       // nothing all-pairs; the report itself is one hash aggregate
       Dedup.dedupRetentionReport(doc(s, d), col("doc_id"), col("text"),
         col("source"), shingleWords = 3, numHashes = 16, bands = 4),
-      Some("""WITH RECURSIVE
+      """WITH RECURSIVE
               toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
                        FROM documents),
 """ + minHashSigCtes + ",\n" + lshComponentCtes + ",\n" + qualityCtes + """,
@@ -8503,7 +8510,7 @@ object SparkEntry {
                 sum(CASE WHEN NOT exact_drop AND NOT near_member THEN 1 ELSE 0 END)::BIGINT AS n_kept,
                 round(sum(CASE WHEN NOT exact_drop AND NOT near_member THEN 1 ELSE 0 END) * 100.0
                       / count(*), 6) AS retention_pct
-              FROM fl GROUP BY 1""")),
+              FROM fl GROUP BY 1"""),
 
     Q("d_segment_dedup", (s, d) =>
       // CCNet-style corpus-frequency segment suppression: 8-word
@@ -8514,7 +8521,7 @@ object SparkEntry {
       // reassembly is an in-row array_sort, no per-doc window
       Dedup.segmentDedup(doc(s, d), col("doc_id"), col("text"),
         segmentWords = 8, maxDf = 2),
-      Some("""WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
+      """WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
                             FROM documents),
               segs AS (SELECT doc_id, i AS idx,
                          array_to_string(w[(i*8+1):(i*8+8)], ' ') AS seg
@@ -8529,7 +8536,7 @@ object SparkEntry {
                       / count(*), 6) AS removed_ratio,
                 coalesce(string_agg(CASE WHEN NOT is_hot THEN seg END, ' '
                                     ORDER BY idx), '') AS kept_text
-              FROM fl GROUP BY 1""")),
+              FROM fl GROUP BY 1"""),
 
     Q("d_indoc_dedup", (s, d) =>
       // WITHIN-document duplicate-segment removal, keep first occurrence
@@ -8542,7 +8549,7 @@ object SparkEntry {
       // synthetic corpus actually exhibits in-doc repeats
       Dedup.indocDedup(doc(s, d), col("doc_id"), col("text"),
         segmentWords = 2),
-      Some("""WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
+      """WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
                             FROM documents),
               segs AS (SELECT doc_id, i AS idx,
                          array_to_string(w[(i*2+1):(i*2+2)], ' ') AS seg
@@ -8556,7 +8563,7 @@ object SparkEntry {
                 sum(n - 1)::BIGINT AS n_removed,
                 round(sum(n - 1) / sum(n)::DOUBLE, 6) AS removed_ratio,
                 string_agg(seg, ' ' ORDER BY keep_idx) AS dedup_text
-              FROM fst GROUP BY 1""")),
+              FROM fst GROUP BY 1"""),
 
     Q("d_source_overlap", (s, d) =>
       // cross-source provenance matrix: distinct 3-gram shingles per
@@ -8565,7 +8572,7 @@ object SparkEntry {
       // bounded by sources-per-shingle), never sources x sources on
       // content
       Dedup.sourceOverlap(doc(s, d), col("text"), col("source"), n = 3),
-      Some("""WITH toks AS (SELECT source AS src,
+      """WITH toks AS (SELECT source AS src,
                        string_split_regex(trim(text), '\s+') AS w FROM documents),
               g AS (SELECT DISTINCT src, array_to_string(w[i:i+2], ' ') AS sh
                     FROM toks,
@@ -8582,7 +8589,7 @@ object SparkEntry {
                   AS jaccard
               FROM pr
               JOIN per pa ON pr.source_a = pa.src
-              JOIN per pb ON pr.source_b = pb.src""")),
+              JOIN per pb ON pr.source_b = pb.src"""),
 
     Q("docs_e2e_curation", (s, d) => {
       // the documents-side FLAGSHIP: full sequential curation funnel
@@ -8598,7 +8605,7 @@ object SparkEntry {
         docs.filter(col("doc_id") % 97 === 0),
         col("doc_id"), col("text"), col("source"), col("lang"))
     },
-      Some("WITH RECURSIVE\n" + curationFunnelOracle)),
+      "WITH RECURSIVE\n" + curationFunnelOracle),
 
     Q("x_html_extract", (s, d) =>
       // HTML -> text extraction with boilerplate stripping — the FIRST
@@ -8610,8 +8617,8 @@ object SparkEntry {
         s.read.format("binaryFile").load(s"$repoRoot/fixtures/html"),
         regexp_extract(col("path"), "doc_(\\d+)\\.html", 1).cast("long"),
         col("content").cast("string")),
-      Some("WITH " + htmlExtractOracle.replace("@ROOT@", repoRoot) +
-        " SELECT * FROM hx")),
+      "WITH " + htmlExtractOracle.replace("@ROOT@", repoRoot) +
+        " SELECT * FROM hx"),
 
     Q("docs_html_funnel", (s, d) => {
       // the curation funnel COMPOSED on raw HTML: extraction feeds the
@@ -8635,13 +8642,13 @@ object SparkEntry {
         docs.filter(col("doc_id") % 97 === 0),
         col("doc_id"), col("text"), col("source"), col("lang"))
     },
-      Some("WITH RECURSIVE " + htmlExtractOracle.replace("@ROOT@", repoRoot) +
+      "WITH RECURSIVE " + htmlExtractOracle.replace("@ROOT@", repoRoot) +
         """, documents AS (SELECT doc_id, text,
                CASE WHEN doc_id = 13 THEN 'es'
                     WHEN doc_id = 7 THEN 'fr' ELSE 'en' END AS lang,
                CASE WHEN doc_id % 2 = 0 THEN 'web' ELSE 'blog' END AS source
              FROM hx),
-        """ + curationFunnelOracle)),
+        """ + curationFunnelOracle),
 
     Q("d_curation_log", (s, d) => {
       // per-doc audit surface of the funnel: FIRST stage that dropped
@@ -8654,7 +8661,7 @@ object SparkEntry {
         docs.filter(col("doc_id") % 97 === 0),
         col("doc_id"), col("text"), col("source"), col("lang"))
     },
-      Some("WITH RECURSIVE\n" + curationFunnelCtes + """
+      "WITH RECURSIVE\n" + curationFunnelCtes + """
                             SELECT doc_id, source, lang, quality, pred_lang,
                 n_tok_ws::BIGINT AS n_tok,
                 CASE WHEN NOT pass_q THEN 'quality'
@@ -8663,7 +8670,7 @@ object SparkEntry {
                      WHEN NOT s4ok THEN 'near_dup'
                      WHEN NOT s5ok THEN 'contaminated'
                      ELSE 'kept' END AS verdict
-              FROM fin2""")),
+              FROM fin2"""),
 
     Q("v_knn_graph", (s, d) => {
       // mutual k-NN graph over the embedding corpus (the seed for
@@ -8678,7 +8685,7 @@ object SparkEntry {
       Similarity.mutualKnnGraph(e, col("vec_id"), col("embedding"),
         k = 3, nlist = Similarity.adaptiveNlist(e.count()))
     },
-      Some("""WITH e AS (SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings),
+      """WITH e AS (SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings),
               nl AS (SELECT greatest(16, floor(sqrt(count(*) / 2.0))::BIGINT) AS nlist
                      FROM e),
 """ + ivfCellCtes("vid", "(SELECT nlist FROM nl)") + """,
@@ -8692,7 +8699,7 @@ object SparkEntry {
                        FROM dg) WHERE rn <= 3)
               SELECT x.src AS id_a, x.dst AS id_b, x.cos AS cos
               FROM tk x JOIN tk y
-                ON x.src = y.dst AND x.dst = y.src AND x.src < x.dst""")),
+                ON x.src = y.dst AND x.dst = y.src AND x.src < x.dst"""),
 
     Q("v_nn_descent", (s, d) => {
       // NN-descent k-NN graph (Dong 2011) — the LINEAR-build scale path
@@ -8705,9 +8712,9 @@ object SparkEntry {
       Similarity.nnDescentGraph(e, col("vec_id"), col("embedding"),
         k = 3, rounds = 2, n = e.count())
     },
-      Some(nnDescentCtes(2, materializeLast = false) + """
+      nnDescentCtes(2, materializeLast = false) + """
               SELECT vid AS src_id, cand AS nbr_id, cos, rn::INT AS rank
-              FROM g2""")),
+              FROM g2"""),
 
     Q("a28_ks_drift", (s, d) => {
       // two-sample Kolmogorov-Smirnov drift statistic between the two
@@ -8735,7 +8742,7 @@ object SparkEntry {
       best.select(round(col("b.dd"), 6).as("ks"), (-col("b.nx")).as("at_x"),
         col("n_values"), col("n_train"), col("n_score"))
     },
-      Some("""WITH l AS (SELECT l_extendedprice AS x, l_orderkey % 2 AS half
+      """WITH l AS (SELECT l_extendedprice AS x, l_orderkey % 2 AS half
                          FROM lineitem),
               p AS (SELECT x,
                       sum(CASE WHEN half = 0 THEN 1 ELSE 0 END)::BIGINT AS n0,
@@ -8749,7 +8756,7 @@ object SparkEntry {
                      FROM c CROSS JOIN t)
               SELECT round(dd.d, 6) AS ks, dd.x AS at_x, t.nv AS n_values,
                      t.t0 AS n_train, t.t1 AS n_score
-              FROM dd CROSS JOIN t ORDER BY dd.d DESC, dd.x ASC LIMIT 1""")),
+              FROM dd CROSS JOIN t ORDER BY dd.d DESC, dd.x ASC LIMIT 1"""),
 
     Q("a29_seasonality", (s, d) =>
       // day-of-week multiplicative seasonal index of the event stream:
@@ -8757,7 +8764,7 @@ object SparkEntry {
       // broadcast; the index is ONE double division of exact long
       // cross-products (no float accumulation to drift)
       graft.operators.Stats.seasonalIndex(ev(s, d), col("ts")),
-      Some("""WITH daily AS (SELECT ts::DATE AS day, count(*)::BIGINT AS cnt
+      """WITH daily AS (SELECT ts::DATE AS day, count(*)::BIGINT AS cnt
                              FROM events GROUP BY 1),
               dw AS (SELECT isodow(day)::INT AS dow, count(*)::BIGINT AS n_days,
                        sum(cnt)::BIGINT AS n_events
@@ -8768,7 +8775,7 @@ object SparkEntry {
                 round(n_events / n_days::DOUBLE, 6) AS events_per_day,
                 round((n_events * t_days) / (n_days * t_events)::DOUBLE, 6)
                   AS seasonal_idx
-              FROM dw CROSS JOIN t""")),
+              FROM dw CROSS JOIN t"""),
 
     Q("a43_cusum", (s, d) =>
       // CUSUM change-point on the daily error-event count (Page 1954):
@@ -8779,7 +8786,7 @@ object SparkEntry {
       graft.operators.Stats.cusumChangepoint(ev(s, d), col("ts"),
         col("event_type") === "error",
         baselineDays = 10, slack = 1, threshold = 50),
-      Some("""WITH daily AS (SELECT ts::DATE AS day, count(*)::BIGINT AS x
+      """WITH daily AS (SELECT ts::DATE AS day, count(*)::BIGINT AS x
                              FROM events WHERE event_type = 'error' GROUP BY 1),
               r AS (SELECT day, x, row_number() OVER (ORDER BY day) AS rk
                     FROM daily),
@@ -8799,7 +8806,7 @@ object SparkEntry {
                      (pp - runmin)::BIGINT AS cusum_scaled,
                      ((pp - runmin) * 1000 // bn)::BIGINT AS cusum_milli,
                      (pp - runmin) > 50 * bn AS alarm
-              FROM m""")),
+              FROM m"""),
 
     Q("a44_dp_counts", (s, d) =>
       // Laplace-mechanism noisy per-source corpus counts (deterministic
@@ -8808,7 +8815,7 @@ object SparkEntry {
       // dyadic-exact u, round-9 ln, round-6 result
       graft.operators.Stats.dpNoisyCounts(doc(s, d), col("source"),
         eps = 1.0, seed = "graft"),
-      Some("""WITH c AS (SELECT source AS key, count(*)::BIGINT AS n
+      """WITH c AS (SELECT source AS key, count(*)::BIGINT AS n
                          FROM documents GROUP BY 1),
               h AS (SELECT key, n,
                       ('0x' || substr(md5('graft' || key), 1, 6))::BIGINT AS v
@@ -8818,7 +8825,7 @@ object SparkEntry {
                        round((-1.0) * (CASE WHEN u >= 0.5 THEN 1.0 ELSE -1.0 END)
                              * round(ln(1.0 - 2.0 * abs(u - 0.5)), 9), 6) AS noise
                      FROM u)
-              SELECT key, round(n + noise, 6) AS noisy_count FROM nz""")),
+              SELECT key, round(n + noise, 6) AS noisy_count FROM nz"""),
 
     Q("a31_attribution", (s, d) =>
       // multi-touch revenue attribution (last-touch + linear) of
@@ -8831,7 +8838,7 @@ object SparkEntry {
         col("event_type"), col("value"),
         touchTypes = Seq("view", "click"), convType = "purchase",
         lookbackSeconds = 604800L),
-      Some("""WITH e AS (SELECT user_id AS u, epoch_us(ts) AS us, event_type AS et,
+      """WITH e AS (SELECT user_id AS u, epoch_us(ts) AS us, event_type AS et,
                 value AS v,
                 CASE event_type WHEN 'view' THEN 1 WHEN 'click' THEN 2 END AS code
               FROM events),
@@ -8870,7 +8877,7 @@ object SparkEntry {
                   AS last_touch_rev,
                 (CASE ch WHEN 'view' THEN li1 WHEN 'click' THEN li2 ELSE li0 END)::DOUBLE
                   AS linear_rev
-              FROM a CROSS JOIN (VALUES ('view'), ('click'), ('none')) c(ch)""")),
+              FROM a CROSS JOIN (VALUES ('view'), ('click'), ('none')) c(ch)"""),
 
     Q("a30_mad_outliers", (s, d) =>
       // robust outlier report: EXACT lower median + MAD with a 3-MAD
@@ -8880,7 +8887,7 @@ object SparkEntry {
       // oracle window replay lands on the same values
       graft.operators.Stats.madOutliers(li(s, d),
         col("l_extendedprice"), k = 3.0),
-      Some("""WITH x AS (SELECT l_extendedprice::DOUBLE AS x FROM lineitem),
+      """WITH x AS (SELECT l_extendedprice::DOUBLE AS x FROM lineitem),
               t AS (SELECT count(*)::BIGINT AS n FROM x),
               med AS (SELECT min(x) AS med FROM (
                         SELECT x, sum(c) OVER (ORDER BY x) AS cum,
@@ -8903,7 +8910,7 @@ object SparkEntry {
                 round(sum(CASE WHEN abs(x.x - med.med) > 3.0 * mad.mad
                                THEN 1 ELSE 0 END) / t.n::DOUBLE, 6) AS outlier_pct
               FROM x CROSS JOIN med CROSS JOIN mad CROSS JOIN t
-              GROUP BY t.n, med.med, mad.mad""")),
+              GROUP BY t.n, med.med, mad.mad"""),
 
     Q("v_binary_hamming", (s, d) =>
       // sign-binarized ANN: 64 float dims -> 2x32 packed bits, Hamming
@@ -8912,7 +8919,7 @@ object SparkEntry {
       Similarity.binaryHammingTopK(
         emb(s, d).filter(col("vec_id") < 20), emb(s, d),
         "vec_id", "embedding", "vec_id", "embedding", dim = 64, k = 5),
-      Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
               p AS (SELECT vec_id,
                 list_sum(list_transform(range(0, 32), i ->
                   CASE WHEN v[i + 1] > 0 THEN (1::BIGINT << i) ELSE 0::BIGINT END))::BIGINT AS w0,
@@ -8926,7 +8933,7 @@ object SparkEntry {
                    ORDER BY (bit_count(xor(w0, q0)) + bit_count(xor(w1, q1))),
                             p.vec_id))::INT AS rank
               FROM p, q WHERE p.vec_id <> query_id
-              QUALIFY rank <= 5""")),
+              QUALIFY rank <= 5"""),
 
     Q("x_pmi_collocations", (s, d) =>
       // PMI collocation mining: adjacent-pair counts vs endpoint
@@ -8934,7 +8941,7 @@ object SparkEntry {
       // four-term ln sum on exact integer counts, rounded at 6
       TextFunctions.pmiCollocations(doc(s, d), col("doc_id"), col("text"),
         minCount = 5L, topN = 20),
-      Some("WITH " + posToksCte("w") + """,
+      "WITH " + posToksCte("w") + """,
               pr AS (SELECT doc_id, w AS w1,
                        lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
                      FROM toks WHERE w <> ''),
@@ -8949,7 +8956,7 @@ object SparkEntry {
                      WHERE c_xy >= 5)
               SELECT (row_number() OVER (ORDER BY pmi DESC, w1, w2))::INT AS rank,
                      w1, w2, c_xy, c_x, c_y, pmi
-              FROM sc ORDER BY pmi DESC, w1, w2 LIMIT 20""")),
+              FROM sc ORDER BY pmi DESC, w1, w2 LIMIT 20"""),
 
     Q("a48_gini", (s, d) =>
       // revenue-concentration audit: Gini over per-customer spend via
@@ -8960,14 +8967,14 @@ object SparkEntry {
           .agg(sum(col("o_totalprice").cast("decimal(12,2)")).as("v"))
           .select(col("o_custkey"), (col("v") * 100).cast("long").as("cents")),
         col("cents"), col("o_custkey")),
-      Some("""WITH x AS (SELECT o_custkey AS k,
+      """WITH x AS (SELECT o_custkey AS k,
                 (sum(o_totalprice::DECIMAL(12,2)) * 100)::BIGINT AS cents
               FROM orders GROUP BY 1),
               r AS (SELECT cents, row_number() OVER (ORDER BY cents, k) AS r FROM x)
               SELECT count(*)::BIGINT AS n, sum(cents)::DOUBLE AS total,
                 round((2 * sum(r * cents) - (count(*) + 1) * sum(cents))::DOUBLE
                       / (sum(cents) * count(*))::DOUBLE, 6) AS gini
-              FROM r""")),
+              FROM r"""),
 
     Q("a49_basket_pairs", (s, d) =>
       // market-basket pair mining (Apriori k=2): support / confidence /
@@ -8978,7 +8985,7 @@ object SparkEntry {
             col("l_partkey") === col("p_partkey"))
           .select(col("l_orderkey").as("basket"), col("p_brand").as("item")),
         col("basket"), col("item"), minSupportPpt = 15),
-      Some("""WITH bi AS (SELECT DISTINCT l_orderkey AS b, p_brand AS i
+      """WITH bi AS (SELECT DISTINCT l_orderkey AS b, p_brand AS i
                 FROM lineitem JOIN part ON l_partkey = p_partkey),
               nb AS (SELECT count(DISTINCT b)::BIGINT AS n_baskets FROM bi),
               sg AS (SELECT i, count(*)::BIGINT AS supp FROM bi GROUP BY 1),
@@ -8992,7 +8999,7 @@ object SparkEntry {
                            / (sa.supp::DOUBLE * sb.supp), 6) AS lift
               FROM p JOIN sg sa ON item_a = sa.i JOIN sg sb ON item_b = sb.i
               CROSS JOIN nb
-              WHERE supp_ab * 1000 >= n_baskets * 15""")),
+              WHERE supp_ab * 1000 >= n_baskets * 15"""),
 
     Q("a50_kmv_overlap", (s, d) =>
       // KMV bottom-k sketches with set-algebra readout (the theta-sketch
@@ -9004,7 +9011,7 @@ object SparkEntry {
         ord(s, d).select(col("o_orderpriority").as("sid"),
           col("o_custkey").as("el")),
         col("sid"), col("el"), k = 256),
-      Some("""WITH el AS (SELECT DISTINCT o_orderpriority AS sid,
+      """WITH el AS (SELECT DISTINCT o_orderpriority AS sid,
                 o_custkey::VARCHAR AS el FROM orders),
               hs AS (SELECT sid, ('0x' || substr(md5(el), 1, 13))::BIGINT AS h FROM el),
               ex AS (SELECT sid, count(*)::BIGINT AS exact_n FROM el GROUP BY 1),
@@ -9037,7 +9044,7 @@ object SparkEntry {
                 round(est_a + est_b - est_union, 4) AS est_intersect,
                 (len(list_filter(kmin, x -> list_contains(ma, x)
                    AND list_contains(mb, x)))::BIGINT * 1000000) // kk AS jaccard_ppm
-              FROM e""")),
+              FROM e"""),
 
     Q("d_link_predict", (s, d) => {
       // topological link prediction over the sparsified part
@@ -9048,7 +9055,7 @@ object SparkEntry {
       graft.operators.Components.linkPrediction(partPairs(s, d), "u", "v",
         minCommon = 2, maxHubDeg = 30)
     },
-      Some(partGraphCtes("e") + """,
+      partGraphCtes("e") + """,
               deg AS MATERIALIZED (
                 SELECT src AS x, count(*)::BIGINT AS d FROM e GROUP BY 1),
               c AS (SELECT e.src, e.dst, deg.d AS dz FROM e
@@ -9065,14 +9072,14 @@ object SparkEntry {
                      du.d AS deg_u, dv.d AS deg_v,
                      round(cn / (du.d + dv.d - cn)::DOUBLE, 6) AS jaccard,
                      round(aa::DOUBLE, 6) AS adamic_adar
-              FROM cand JOIN deg du ON wu = du.x JOIN deg dv ON wv = dv.x""")),
+              FROM cand JOIN deg du ON wu = du.x JOIN deg dv ON wv = dv.x"""),
 
     Q("x_heaps_law", (s, d) =>
       // vocabulary-growth (Heaps'-law) fit over n/2^j doc-count
       // prefixes: V(N) ~ K*N^beta via closed-form OLS of ln V on ln N;
       // terms enter at their FIRST doc rank so prefixes never re-scan
       graft.operators.InvertedIndex.heapsLaw(doc(s, d), col("doc_id"), col("text")),
-      Some("""WITH tp AS MATERIALIZED (
+      """WITH tp AS MATERIALIZED (
                 SELECT doc_id, term, count(*)::BIGINT AS tf FROM (
                   SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS term
                   FROM documents) t
@@ -9102,7 +9109,7 @@ object SparkEntry {
                       / k), 6) AS k_factor FROM fit)
               SELECT c AS checkpoint_docs, ntoks AS n_tokens, v AS n_terms,
                      beta, k_factor
-              FROM pts CROSS JOIN fin""")),
+              FROM pts CROSS JOIN fin"""),
 
     Q("x_rouge_overlap", (s, d) =>
       // ROUGE-1/ROUGE-2 between consecutive-id doc pairs: clipped n-gram
@@ -9111,7 +9118,7 @@ object SparkEntry {
       TextFunctions.rougeOverlap(doc(s, d), col("doc_id"), col("text"), 1)
         .unionByName(
           TextFunctions.rougeOverlap(doc(s, d), col("doc_id"), col("text"), 2)),
-      Some("""WITH tk AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
+      """WITH tk AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
                 FROM documents),
               gg AS (SELECT doc_id, gn,
                        unnest(list_transform(range(1, len(toks) - gn + 2),
@@ -9136,7 +9143,7 @@ object SparkEntry {
                            / (tc.tot + tr.tot)::DOUBLE, 6) AS rouge_f1
               FROM tot tc JOIN tot tr ON tr.doc_id = tc.doc_id + 1 AND tr.gn = tc.gn
               LEFT JOIN ov ON ov.pair_id = tc.doc_id AND ov.gn = tc.gn
-              WHERE tc.doc_id % 2 = 0""")),
+              WHERE tc.doc_id % 2 = 0"""),
 
     Q("d_lpa_communities", (s, d) => {
       // synchronous label propagation (4 fixed rounds, count-desc /
@@ -9145,11 +9152,11 @@ object SparkEntry {
       // modularity methods
       graft.operators.Components.labelPropagation(partPairs(s, d), "u", "v", iters = 4)
     },
-      Some(partGraphCtes("e") + ",\n" + lpaCtes(4) + """,
+      partGraphCtes("e") + ",\n" + lpaCtes(4) + """,
               sz AS (SELECT lab, count(*)::BIGINT AS community_size
                      FROM l4 GROUP BY 1)
               SELECT node, l4.lab AS community, community_size
-              FROM l4 JOIN sz USING (lab)""")),
+              FROM l4 JOIN sz USING (lab)"""),
 
     Q("v_graph_search", (s, d) => {
       // greedy best-first routing over the mutual k-NN graph (the HNSW
@@ -9164,7 +9171,7 @@ object SparkEntry {
         "vec_id", "embedding", "vec_id", "embedding",
         k = 3, nlist = Similarity.adaptiveNlist(e.count()), hops = 4)
     },
-      Some("""WITH e AS MATERIALIZED (
+      """WITH e AS MATERIALIZED (
                 SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings),
               nl AS (SELECT greatest(16, floor(sqrt(count(*) / 2.0))::BIGINT)
                        AS nlist FROM e),
@@ -9190,7 +9197,7 @@ object SparkEntry {
                   ON x.src = y.dst AND x.dst = y.src AND x.src < x.dst),
               ed AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM mu
                 UNION ALL SELECT id_b, id_a FROM mu),
-""" + greedyWalkOracle(4))),
+""" + greedyWalkOracle(4)),
 
     Q("v_nnd_search", (s, d) => {
       // greedy best-first routing over the NN-DESCENT graph — the same
@@ -9207,12 +9214,12 @@ object SparkEntry {
       Similarity.greedySearchOverEdges(e.filter(col("vec_id") < 20), e,
         "vec_id", "embedding", "vec_id", "embedding", ed, hops = 4)
     },
-      Some(nnDescentCtes(2, materializeLast = true) + """,
+      nnDescentCtes(2, materializeLast = true) + """,
               ed AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
                       SELECT vid AS src, cand AS dst FROM g2
                       UNION ALL
                       SELECT cand AS src, vid AS dst FROM g2) w),
-""" + greedyWalkOracle(4))),
+""" + greedyWalkOracle(4)),
 
     Q("x_stupid_backoff", (s, d) =>
       // stupid-backoff trigram scoring of the odd-doc half under counts
@@ -9223,7 +9230,7 @@ object SparkEntry {
         doc(s, d).filter(pmod(col("doc_id"), lit(2)) === 0),
         doc(s, d).filter(pmod(col("doc_id"), lit(2)) === 1),
         col("doc_id"), col("text")),
-      Some("""WITH tk AS MATERIALIZED (SELECT doc_id, w, pos FROM (
+      """WITH tk AS MATERIALIZED (SELECT doc_id, w, pos FROM (
                 SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS w,
                   generate_subscripts(string_split_regex(trim(text), '\s+'), 1) AS pos
                 FROM documents) z WHERE w <> ''),
@@ -9264,7 +9271,7 @@ object SparkEntry {
                 sum(CASE WHEN tier = 0 THEN 1 ELSE 0 END)::BIGINT AS n_oov,
                 round(sum(CASE WHEN tier > 0 THEN round(ln(s), 9)::DECIMAL(28,9)
                                ELSE 0::DECIMAL(28,9) END)::DOUBLE, 6) AS sb_logscore
-              FROM sc GROUP BY 1""")),
+              FROM sc GROUP BY 1"""),
 
     Q("d_bfs_levels", (s, d) => {
       // multi-source BFS over the sparsified part co-occurrence graph:
@@ -9274,10 +9281,10 @@ object SparkEntry {
       graft.operators.Components.bfsLevels(partPairs(s, d), "u", "v", seedParts(s, d),
         rounds = 6)
     },
-      Some(partGraphCtes("e") + ",\n" + bfsCtes(6) + """,
+      partGraphCtes("e") + ",\n" + bfsCtes(6) + """,
               conv AS (SELECT CASE WHEN (SELECT count(*) FROM d5)
                   = (SELECT count(*) FROM d6) THEN 1 ELSE 0 END AS converged)
-              SELECT node, dist, converged FROM d6 CROSS JOIN conv""")),
+              SELECT node, dist, converged FROM d6 CROSS JOIN conv"""),
 
     Q("a51_mann_whitney", (s, d) =>
       // nonparametric A/B: Mann-Whitney U with midranks + tie-corrected
@@ -9286,7 +9293,7 @@ object SparkEntry {
       // z-score chain at the end
       graft.operators.Stats.mannWhitneyU(li(s, d),
         col("l_quantity"), pmod(col("l_orderkey"), lit(2))),
-      Some("""WITH per AS (SELECT x,
+      """WITH per AS (SELECT x,
                 sum(CASE WHEN g = 0 THEN 1 ELSE 0 END)::BIGINT AS c0,
                 sum(CASE WHEN g = 1 THEN 1 ELSE 0 END)::BIGINT AS c1
               FROM (SELECT l_quantity::DOUBLE AS x, l_orderkey % 2 AS g
@@ -9307,7 +9314,7 @@ object SparkEntry {
                       / (2.0 * sqrt((n_a::DOUBLE * n_b / 12.0)
                           * ((n + 1) - tcorr::DOUBLE
                              / (n::DOUBLE * (n - 1))))), 6) AS z
-              FROM u""")),
+              FROM u"""),
 
     Q("a52_cramers_v", (s, d) =>
       // feature-association screen: chi-square independence + Cramer's V
@@ -9316,7 +9323,7 @@ object SparkEntry {
       // per-cell terms round-9 into DECIMAL sums
       graft.operators.Stats.chiSquareCramersV(li(s, d),
         col("l_returnflag"), col("l_linestatus")),
-      Some("""WITH obs AS (SELECT l_returnflag AS r, l_linestatus AS c,
+      """WITH obs AS (SELECT l_returnflag AS r, l_linestatus AS c,
                 count(*)::BIGINT AS o FROM lineitem GROUP BY 1, 2),
               cells AS (SELECT rr.r, cc.c, coalesce(obs.o, 0)::BIGINT AS o
                 FROM (SELECT DISTINCT r FROM obs) rr
@@ -9342,7 +9349,7 @@ object SparkEntry {
                 round(sqrt(chi2d::DOUBLE
                   / (n::DOUBLE * (least(n_rows_cat, n_cols_cat) - 1))), 6)
                   AS cramers_v
-              FROM a""")),
+              FROM a"""),
 
     Q("a53_mutual_info", (s, d) =>
       // information-theoretic column-pair dependence (the feature-
@@ -9351,7 +9358,7 @@ object SparkEntry {
       // expectation of x_pmi_collocations' PMI
       graft.operators.Stats.mutualInformation(ord(s, d),
         col("o_orderpriority"), col("o_orderstatus")),
-      Some("""WITH cells AS (SELECT o_orderpriority AS x, o_orderstatus AS y,
+      """WITH cells AS (SELECT o_orderpriority AS x, o_orderstatus AS y,
                 count(*)::BIGINT AS o FROM orders GROUP BY 1, 2),
               m AS (SELECT x, y, o,
                       sum(o) OVER (PARTITION BY x) AS xt,
@@ -9377,7 +9384,7 @@ object SparkEntry {
               SELECT n, round(hxd::DOUBLE, 6) AS h_x, round(hyd::DOUBLE, 6) AS h_y,
                 round(mid::DOUBLE, 6) AS mi,
                 round(mid::DOUBLE / sqrt(hxd::DOUBLE * hyd::DOUBLE), 6) AS nmi
-              FROM a""")),
+              FROM a"""),
 
     Q("a54_yoy_growth", (s, d) => {
       // period-over-period report: monthly revenue + same-month
@@ -9396,7 +9403,7 @@ object SparkEntry {
           round((col("rev_cents") - col("prior_cents")).cast("double")
             / col("prior_cents"), 6).as("yoy_pct"))
     },
-      Some("""WITH mo AS (SELECT year(o_orderdate)::INT AS y,
+      """WITH mo AS (SELECT year(o_orderdate)::INT AS y,
                 month(o_orderdate)::INT AS m,
                 sum((o_totalprice::DECIMAL(12,2) * 100)::BIGINT)::BIGINT AS rev_cents
               FROM orders GROUP BY 1, 2),
@@ -9405,7 +9412,7 @@ object SparkEntry {
                     FROM mo)
               SELECT y, m, rev_cents, prior_cents,
                 round((rev_cents - prior_cents) / prior_cents::DOUBLE, 6) AS yoy_pct
-              FROM l WHERE prior_cents IS NOT NULL""")),
+              FROM l WHERE prior_cents IS NOT NULL"""),
 
     Q("a55_abc_class", (s, d) => {
       // ABC / Pareto inventory classification: parts by revenue into
@@ -9435,7 +9442,7 @@ object SparkEntry {
           round(col("class_cents").cast("double") / col("total"), 6)
             .as("share"))
     },
-      Some("""WITH per AS (SELECT l_partkey AS p,
+      """WITH per AS (SELECT l_partkey AS p,
                 sum((l_extendedprice::DECIMAL(12,2) * 100)::BIGINT)::BIGINT AS rev
               FROM lineitem GROUP BY 1),
               t AS (SELECT sum(rev)::BIGINT AS total FROM per),
@@ -9449,14 +9456,14 @@ object SparkEntry {
               SELECT cls, count(*)::BIGINT AS n_items,
                      sum(rev)::BIGINT AS class_cents,
                      round(sum(rev) / (SELECT total FROM t)::DOUBLE, 6) AS share
-              FROM k GROUP BY 1""")),
+              FROM k GROUP BY 1"""),
 
     Q("x_readability", (s, d) =>
       // Flesch-Kincaid grade + reading ease per doc: three row-local
       // regex counts (words, [.!?]+ sentence ends, [aeiouy]+ vowel-group
       // syllables), two exact-int divisions, one multiply-add chain
       TextFunctions.readability(doc(s, d), col("doc_id"), col("text")),
-      Some("""WITH c AS (SELECT doc_id,
+      """WITH c AS (SELECT doc_id,
                 len(regexp_extract_all(text, '\S+'))::INT AS n_words,
                 greatest(len(regexp_extract_all(text, '[.!?]+')), 1)::INT
                   AS n_sentences,
@@ -9470,7 +9477,7 @@ object SparkEntry {
               SELECT doc_id, n_words, n_sentences, n_syllables,
                 round(0.39 * wps + 11.8 * spw - 15.59, 6) AS fk_grade,
                 round(206.835 - 1.015 * wps - 84.6 * spw, 6) AS reading_ease
-              FROM r""")),
+              FROM r"""),
 
     Q("d_assortativity", (s, d) =>
       // degree assortativity (Newman r) over the supplier co-supply
@@ -9480,7 +9487,7 @@ object SparkEntry {
       graft.operators.Components.assortativity(
         coSupplyPairs(s, d),
         "sa", "sb"),
-      Some("""WITH li AS (SELECT l_orderkey, l_suppkey FROM lineitem
+      """WITH li AS (SELECT l_orderkey, l_suppkey FROM lineitem
                           WHERE l_orderkey % 20 = 0),
               e0 AS (SELECT DISTINCT least(a.l_suppkey, b.l_suppkey) AS u,
                             greatest(a.l_suppkey, b.l_suppkey) AS v
@@ -9506,7 +9513,7 @@ object SparkEntry {
                        / (sqrt((m * sxx - sx * sx)::DOUBLE)
                          * sqrt((m * syy - sy * sy)::DOUBLE)), 6)
                 END AS r
-              FROM a""")),
+              FROM a"""),
 
     Q("d_clustering_coeff", (s, d) =>
       // transitivity readout over the supplier co-supply graph: global
@@ -9515,7 +9522,7 @@ object SparkEntry {
       graft.operators.Components.clusteringCoefficient(
         coSupplyPairs(s, d),
         "sa", "sb"),
-      Some("""WITH li AS (SELECT l_orderkey, l_suppkey FROM lineitem
+      """WITH li AS (SELECT l_orderkey, l_suppkey FROM lineitem
                           WHERE l_orderkey % 20 = 0),
               e0 AS MATERIALIZED (
                 SELECT DISTINCT least(a.l_suppkey, b.l_suppkey) AS u,
@@ -9545,7 +9552,7 @@ object SparkEntry {
                       THEN round(t / w::DOUBLE, 9)::DECIMAL(28,9)
                       ELSE 0::DECIMAL(28,9) END)::DOUBLE
                   / sum(CASE WHEN d >= 2 THEN 1 ELSE 0 END), 6) AS avg_local_cc
-              FROM per""")),
+              FROM per"""),
 
     Q("a56_gains_table", (s, d) =>
       // decile gains/lift table for a propensity score (acctbal scoring
@@ -9559,7 +9566,7 @@ object SparkEntry {
           .select(col("c_custkey"), col("c_acctbal"),
             coalesce(col("has"), lit(0L)).as("y")),
         col("c_acctbal"), col("y"), col("c_custkey"), k = 10),
-      Some("""WITH lbl AS (SELECT c_custkey, c_acctbal,
+      """WITH lbl AS (SELECT c_custkey, c_acctbal,
                 CASE WHEN o.k IS NULL THEN 0 ELSE 1 END AS y
               FROM customer LEFT JOIN
                 (SELECT DISTINCT o_custkey AS k FROM orders) o
@@ -9576,7 +9583,7 @@ object SparkEntry {
                 round((sum(n_pos) OVER (ORDER BY decile)) / pt::DOUBLE, 6)
                   AS capture,
                 round((n_pos::DOUBLE * nt) / (n::DOUBLE * pt), 6) AS lift
-              FROM bins CROSS JOIN t""")),
+              FROM bins CROSS JOIN t"""),
 
     Q("d_modularity", (s, d) => {
       // partition quality for the LPA communities on the sparsified
@@ -9593,7 +9600,7 @@ object SparkEntry {
         .select(col("node"), col("community"))
       graft.operators.Components.modularity(pairs, "u", "v", lab)
     },
-      Some(partGraphCtes("e") + ",\n" + lpaCtes(4) + """,
+      partGraphCtes("e") + ",\n" + lpaCtes(4) + """,
               tg AS MATERIALIZED (SELECT b.u, b.v, lu.lab AS cu, lv.lab AS cv
                 FROM b JOIN l4 lu ON b.u = lu.node
                 JOIN l4 lv ON b.v = lv.node),
@@ -9610,7 +9617,7 @@ object SparkEntry {
               SELECT count(*)::BIGINT AS n_communities,
                 max(m)::BIGINT AS n_edges,
                 round(sum(term::DECIMAL(28,9))::DOUBLE, 6) AS modularity
-              FROM t""")),
+              FROM t"""),
 
     Q("a57_bootstrap_ci", (s, d) =>
       // Poisson-bootstrap CI for mean order value (the fleet-scale
@@ -9622,14 +9629,14 @@ object SparkEntry {
           (col("o_totalprice").cast("decimal(12,2)") * 100).cast("long")
             .as("cents"), col("o_orderkey")),
         col("cents"), col("o_orderkey"), b = 32),
-      Some(bootstrapCiOracle(32))),
+      bootstrapCiOracle(32)),
 
     Q("v_ood_outliers", (s, d) =>
       // embedding-quality outlier screen: diagonal-Mahalanobis OOD score
       // (sum of per-dim z^2 vs corpus mean/std), top-20; stats are one
       // posexplode aggregate, scoring a row-local HOF fold
       Similarity.oodOutliers(emb(s, d), "vec_id", "embedding", k = 20),
-      Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
               st AS (SELECT i AS pos,
                        sum(round(v[i + 1], 9)::DECIMAL(28,9)) AS s,
                        sum(round(v[i + 1] * v[i + 1], 9)::DECIMAL(28,9)) AS ss,
@@ -9648,7 +9655,7 @@ object SparkEntry {
                      FROM e CROSS JOIN arr)
               SELECT vec_id, ood_score,
                 (row_number() OVER (ORDER BY ood_score DESC, vec_id))::INT AS rank
-              FROM sc ORDER BY ood_score DESC, vec_id LIMIT 20""")),
+              FROM sc ORDER BY ood_score DESC, vec_id LIMIT 20"""),
 
     Q("a62_fd_discovery", (s, d) => {
       // functional-dependency discovery (TANE level 1) over four orders
@@ -9661,7 +9668,7 @@ object SparkEntry {
       graft.operators.Stats.fdDiscovery(
         ord(s, d), Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"))
     },
-      Some((for {
+      (for {
         lhs <- Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
         rhs <- Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
         if lhs != rhs
@@ -9673,7 +9680,7 @@ object SparkEntry {
             FROM (SELECT $lhs,
                     count(distinct $rhs)
                       + max(CASE WHEN $rhs IS NULL THEN 1 ELSE 0 END) AS d
-                  FROM orders GROUP BY 1)""").mkString("\nUNION ALL\n"))),
+                  FROM orders GROUP BY 1)""").mkString("\nUNION ALL\n")),
 
     Q("a58_trimmed_means", (s, d) =>
       // robust-center report: 5%-trimmed and winsorized means of order
@@ -9684,7 +9691,7 @@ object SparkEntry {
         ord(s, d).select((col("o_totalprice").cast("decimal(12,2)") * 100)
           .cast("long").as("cents")),
         col("cents"), trimPct = 5),
-      Some("""WITH per AS (SELECT (o_totalprice::DECIMAL(12,2) * 100)::BIGINT AS x,
+      """WITH per AS (SELECT (o_totalprice::DECIMAL(12,2) * 100)::BIGINT AS x,
                 count(*)::BIGINT AS c FROM orders GROUP BY 1),
               cum AS (SELECT x, c, sum(c) OVER (ORDER BY x) AS cum FROM per),
               tot AS (SELECT sum(c)::BIGINT AS n,
@@ -9706,7 +9713,7 @@ object SparkEntry {
                 round((tsum + v_lo::DECIMAL(38,0) * k
                        + v_hi::DECIMAL(38,0) * k)::DOUBLE / n, 6)
                   AS winsorized_mean
-              FROM inner_s CROSS JOIN lo CROSS JOIN hi""")),
+              FROM inner_s CROSS JOIN lo CROSS JOIN hi"""),
 
     Q("d_ppr_seeds", (s, d) => {
       // personalized PageRank from the p%997==0 seed parts over the
@@ -9716,7 +9723,7 @@ object SparkEntry {
       graft.operators.Components.personalizedPageRank(
         partPairs(s, d), "u", "v", seedParts(s, d), iters = 3)
     },
-      Some(partGraphCtes("ed") + """,
+      partGraphCtes("ed") + """,
               dg AS (SELECT src, count(*)::BIGINT AS outdeg FROM ed GROUP BY 1),
               nd AS (SELECT DISTINCT src AS node FROM ed),
               sd AS (SELECT DISTINCT l_partkey AS node FROM lineitem
@@ -9727,7 +9734,7 @@ object SparkEntry {
                     FROM nd LEFT JOIN sd ON nd.node = sd.node CROSS JOIN ns),
               r0 AS MATERIALIZED (SELECT node, e AS rank FROM bs),
 """ + pprCtes(3) + """
-              SELECT node, rank FROM r3""")),
+              SELECT node, rank FROM r3"""),
 
     Q("a59_roc_auc", (s, d) =>
       // classifier-evaluation readout: ROC-AUC of the quality score as a
@@ -9738,7 +9745,7 @@ object SparkEntry {
       graft.operators.Stats.rocAuc(doc(s, d),
         TextFunctions.qualityScore(col("text")),
         (col("lang") === "en").cast("int")),
-      Some("WITH " + enQualityCtes(" AS x") + """,
+      "WITH " + enQualityCtes(" AS x") + """,
               per AS (SELECT x, sum(y)::BIGINT AS c1, sum(1 - y)::BIGINT AS c0
                       FROM sc GROUP BY 1),
               cum AS (SELECT c0, c1, sum(c0 + c1) OVER (ORDER BY x) - c0 - c1 AS cb
@@ -9751,7 +9758,7 @@ object SparkEntry {
                             / (2.0 * n_pos::DOUBLE * n_neg), 6) AS auc
                     FROM agg)
               SELECT n_pos, n_neg, auc, round(auc * 2 - 1, 6) AS gini_idx
-              FROM f""")),
+              FROM f"""),
 
     Q("a60_calibration", (s, d) =>
       // is the quality score CALIBRATED as P(english)? ECE/MCE over 10
@@ -9762,7 +9769,7 @@ object SparkEntry {
       graft.operators.Stats.calibrationReport(doc(s, d),
         TextFunctions.qualityScore(col("text")),
         (col("lang") === "en").cast("int"), bins = 10),
-      Some("WITH " + enQualityCtes("::DECIMAL(8,6) AS p") + """,
+      "WITH " + enQualityCtes("::DECIMAL(8,6) AS p") + """,
               pb AS (SELECT least(floor(p::DOUBLE * 10), 9)::BIGINT AS bin,
                        count(*)::BIGINT AS n_b,
                        sum(p)::DECIMAL(38,6) AS sum_p,
@@ -9777,7 +9784,7 @@ object SparkEntry {
                 round(sum(absgap)::DOUBLE / sum(n_b), 6) AS ece,
                 max(gap_b) AS mce,
                 round(sum(sq)::DOUBLE / sum(n_b), 6) AS brier
-              FROM g""")),
+              FROM g"""),
 
     Q("a61_cohens_kappa", (s, d) =>
       // annotator/model agreement QC: Cohen's kappa between the langId
@@ -9788,7 +9795,7 @@ object SparkEntry {
       // first agg
       graft.operators.Stats.cohensKappa(doc(s, d),
         TextFunctions.langId(col("text")), col("lang")),
-      Some("WITH " + langGuessCte("lang AS b", "a") + """,
+      "WITH " + langGuessCte("lang AS b", "a") + """,
               cells AS (SELECT a, b, count(*)::BIGINT AS o FROM p GROUP BY 1, 2),
               tot AS (SELECT sum(o)::BIGINT AS n,
                         sum(CASE WHEN a = b THEN o ELSE 0 END)::BIGINT AS diag
@@ -9806,7 +9813,7 @@ object SparkEntry {
                 round((diag::DECIMAL(18,0) * n::DECIMAL(18,0) - pe_num)::DOUBLE
                       / ((n::DECIMAL(18,0) * n::DECIMAL(18,0)) - pe_num)::DOUBLE,
                       6) AS kappa
-              FROM tot CROSS JOIN pe""")),
+              FROM tot CROSS JOIN pe"""),
 
     Q("x_llr_keyness", (s, d) =>
       // corpus-comparison keyness (Dunning 1993 log-likelihood): the
@@ -9817,7 +9824,7 @@ object SparkEntry {
       // rounded statistic with a term tiebreak
       TextFunctions.llrKeyness(doc(s, d), col("text"), col("lang") === "en",
         minCount = 5L, topN = 20),
-      Some("""WITH toks AS (SELECT
+      """WITH toks AS (SELECT
                 unnest(string_split_regex(trim(lower(text)), '\s+')) AS term,
                 (CASE WHEN lang = 'en' THEN 1 ELSE 0 END)::BIGINT AS in_a
               FROM documents),
@@ -9843,7 +9850,7 @@ object SparkEntry {
                         > c_b::DECIMAL(18,0) * tot_a::DECIMAL(18,0))
               SELECT (row_number() OVER (ORDER BY g2 DESC, term))::INT AS rank,
                 term, c_a, c_b, g2
-              FROM g ORDER BY g2 DESC, term LIMIT 20""")),
+              FROM g ORDER BY g2 DESC, term LIMIT 20"""),
 
     Q("v_filtered_ann", (s, d) => {
       // FILTERED vector search eval: top-5 under a metadata predicate
@@ -9862,7 +9869,7 @@ object SparkEntry {
       Similarity.annRecallEval(filtered, q, e.filter(col("label") < 3),
         "vec_id", "embedding", "vec_id", "embedding", k = 5)
     },
-      Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
+      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
 """ + ivfProbeCtes + """,
               ivf AS (SELECT p.query_id, a.vec_id AS neighbor_id,
                              round(list_cosine_similarity(p.qv, a.v), 6) AS cos,
@@ -9891,8 +9898,8 @@ object SparkEntry {
                        AS recall_ppm
               FROM truth t LEFT JOIN filt f
                 ON t.query_id = f.query_id AND t.neighbor_id = f.neighbor_id
-              GROUP BY t.query_id""")),
-  )
+              GROUP BY t.query_id"""),
+  ))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     defs.map(q => q.name -> q.fn).toMap
@@ -9913,5 +9920,5 @@ object SparkEntry {
     }
 
   def oracleSql: Map[String, String] =
-    defs.flatMap(q => q.oracle.map(o => q.name -> o.linesIterator.map(_.trim).mkString(" "))).toMap
+    defs.map(q => q.name -> q.oracle.linesIterator.map(_.trim).mkString(" ")).toMap
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed-table helpers: pre-shuffle once at write time so repeated
   * joins/aggregations on the bucket key run with ZERO exchanges.
@@ -32,16 +32,4 @@ object Bucketing {
       .format("parquet")
       .saveAsTable(table)
   }
-
-  /** Join two tables bucketed on the same key with the same bucket count:
-    * planned with no shuffle on either side. */
-  def bucketedJoin(
-      spark: SparkSession, leftTable: String, rightTable: String,
-      key: String, joinType: String = "inner"): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), Seq(key), joinType)
-
-  /** True when the physical plan contains no shuffle exchange — the
-    * assertion that bucketing actually removed the shuffles. */
-  def hasNoShuffle(df: DataFrame): Boolean =
-    !df.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning")
 }

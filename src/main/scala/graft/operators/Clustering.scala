@@ -80,11 +80,4 @@ object Clustering {
     assign(points, centroids, "__id", "__v")
       .select(col("__id").as("point_id"), col("cell").as("cluster"), col("cos"))
   }
-
-  /** Per-cluster summary of [[kMeansAssign]]: size and mean similarity of
-    * members to their centroid (a compactness measure). */
-  def kMeansSummary(assigned: DataFrame): DataFrame =
-    assigned.groupBy(col("cluster"))
-      .agg(count(lit(1)).as("n_points"),
-        round(avg(col("cos")), 6).as("mean_cos"))
 }

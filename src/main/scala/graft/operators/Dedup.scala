@@ -901,19 +901,12 @@ object Dedup {
     * is md5-derived (no RNG), so any engine replays the exact bit
     * pattern. Returns ONE row: (n_batch, n_bloom_hit, n_exact_dup,
     * n_false_pos, fp_rate, n_bits_set, fill_ratio). */
-  /** The i-th bloom bit position for a fingerprint — md5-derived (no
-    * RNG), so any engine (and any replay) derives the identical bit
-    * pattern. Shared by [[bloomDedupReport]] and the streaming
-    * [[graft.streaming.StreamOps.bloomIngestSink]] so their filters are
-    * interchangeable. */
-  def bloomBitPos(fp: Column, i: Column, mBits: Int): Column =
-    pmod(conv(substring(md5(concat(fp, lit(":"), i.cast("string"))), 1, 8),
-      16, 10).cast("long"), lit(mBits.toLong))
-
   def bloomDedupReport(
       newDocs: DataFrame, corpus: DataFrame, id: Column, text: Column,
       mBits: Int = 1 << 20, k: Int = 3): DataFrame = {
-    def bitPos(fp: Column, i: Column): Column = bloomBitPos(fp, i, mBits)
+    def bitPos(fp: Column, i: Column): Column =
+      pmod(conv(substring(md5(concat(fp, lit(":"), i.cast("string"))), 1, 8),
+        16, 10).cast("long"), lit(mBits.toLong))
     val newFp = newDocs.select(id.cast("long").as("doc_id"),
       TextFunctions.fingerprint(text).as("fp"))
     val corpFp = corpus.select(TextFunctions.fingerprint(text).as("fp")).distinct()

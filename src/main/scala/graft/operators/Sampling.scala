@@ -25,12 +25,6 @@ object Sampling {
   def sampleBucket(id: Column, salt: String = "", buckets: Int = DefaultBuckets): Column =
     pmod(Dedup.md5Int(concat(id.cast("string"), lit(salt))), lit(buckets))
 
-  /** Uniform deterministic sample: keeps ~`rate` of rows. */
-  def hashSample(
-      df: DataFrame, id: Column, rate: Double,
-      salt: String = "", buckets: Int = DefaultBuckets): DataFrame =
-    df.filter(sampleBucket(id, salt, buckets) < math.floor(rate * buckets).toLong)
-
   /** Stratified deterministic sample for training-mix construction:
     * `rates` is a (stratum, rate) configuration frame; each row is kept
     * when its bucket falls under its stratum's rate. Strata missing from
@@ -58,9 +52,9 @@ object Sampling {
 
   /** Per-row weighted deterministic sample: keep each row with probability
     * `min(1, max(0, weight))` — e.g. quality-weighted corpus downsampling
-    * where high-quality documents survive at a higher rate. Same hash
-    * bucketing as [[hashSample]] (a pure filter, no shuffle, replicable),
-    * with the rate read from a column instead of a constant. */
+    * where high-quality documents survive at a higher rate. A pure filter
+    * on [[sampleBucket]] (no shuffle, replicable); a constant weight
+    * `lit(rate)` is the uniform sample of ~`rate` of rows. */
   def weightedSample(
       df: DataFrame, id: Column, weight: Column,
       salt: String = "", buckets: Int = DefaultBuckets): DataFrame =

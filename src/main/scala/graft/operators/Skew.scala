@@ -29,20 +29,6 @@ object Skew {
     saltedLeft.join(saltedRight, Seq(key, "__salt"), joinType).drop("__salt")
   }
 
-  /** Hot-key split: route rows whose key is in `hotKeys` through a
-    * broadcast join, the long tail through a shuffle join, and union —
-    * the classic two-path plan for extreme skew where even salting
-    * leaves the hot partition too large. */
-  def hotKeySplitJoin(
-      left: DataFrame, right: DataFrame, key: String,
-      hotKeys: Seq[Any]): DataFrame = {
-    val hotLeft = left.filter(col(key).isin(hotKeys: _*))
-    val coldLeft = left.filter(!col(key).isin(hotKeys: _*) || col(key).isNull)
-    val hotJoined = hotLeft.join(broadcast(right.filter(col(key).isin(hotKeys: _*))), Seq(key))
-    val coldJoined = coldLeft.join(right, Seq(key))
-    hotJoined.unionByName(coldJoined)
-  }
-
   /** Key-skew diagnostic: the report you run BEFORE choosing a join
     * strategy at 100 TB — top-`topK` hot keys with their share of the
     * table, cumulative share, and ratio to the mean key load. A

@@ -10,6 +10,17 @@ object GraftPlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Free an RDD's cached blocks without blocking. A locally checkpointed
+    * RDD is freed through the `SparkContext`: `RDD.unpersist` logs a
+    * "lineage has been truncated" WARN for each one, and every default-mode
+    * `Mat` leaves one behind. */
+  def unpersist(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.checkpointData match {
+      case Some(_: org.apache.spark.rdd.LocalRDDCheckpointData[_]) =>
+        rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+      case _ => rdd.unpersist(blocking = false)
+    }
+
   /** Re-root `df` on its own execution RDD (a `LogicalRDD` leaf): the
     * catalyst plan chain is truncated — iterative operators otherwise
     * nest each round's whole plan inside the next, and analysis blows

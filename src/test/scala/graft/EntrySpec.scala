@@ -161,6 +161,35 @@ class EntrySpec extends SparkSpec {
       s"${sites.size} materializations outside graft.Mat: ${sites.mkString(", ")}")
   }
 
+  test("every operators/ and streaming/ def is called from src/main") {
+    // an operator earns its place by a query or main that runs it; a def
+    // only a spec calls is deleted. A mention in a comment is no call.
+    val exempt = Map(
+      "embeddingNearDupPairsExact" ->
+        "exact all-pairs baseline DedupSpec checks embeddingNearDupPairs against",
+      "simHash" -> "column form DedupSpec checks simHashDocs' fingerprints against")
+    val (repo, files) = mainSources()
+    val code = files.map { f =>
+      f -> Files.readAllLines(f).asScala.zipWithIndex.filterNot { case (line, _) =>
+        Seq("//", "*", "/*").exists(line.trim.startsWith)
+      }.toVector
+    }
+    // how many code lines each word is on: a def's own line is one of them
+    val linesWith = code.flatMap(_._2)
+      .flatMap { case (line, _) => """\w+""".r.findAllIn(line).toSet }
+      .groupMapReduce(identity)(_ => 1)(_ + _)
+    val defName = """^\s*(?:(?:private|protected)(?:\[\w+\])?\s+|final\s+)*def\s+(\w+)""".r
+    val uncalled = for {
+      (f, lines) <- code
+      if Seq("graft/operators/", "graft/streaming/").exists(f.toString.contains)
+      (line, i) <- lines
+      name <- defName.findFirstMatchIn(line).map(_.group(1)).toSeq
+      if !exempt.contains(name) && linesWith(name) < 2
+    } yield s"${repo.relativize(f)}:${i + 1} $name"
+    assert(uncalled.isEmpty,
+      s"${uncalled.size} defs with no caller in src/main: ${uncalled.mkString(", ")}")
+  }
+
   test("approx_count_distinct within 5% of exact") {
     val rows = SparkEntry.queries("a10_approx_distinct")(spark, sf001)
       .select(col("within_5pct")).collect()

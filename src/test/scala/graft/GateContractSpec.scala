@@ -38,4 +38,14 @@ class GateContractSpec extends SparkSpec {
     // keep the set empty so every component has the full hash gate
     assert((q -- o).isEmpty, s"queries without an oracle: ${(q -- o).toSeq.sorted}")
   }
+
+  test("the registry rejects a query name defined twice") {
+    val q = SparkEntry.Q("dup_q", (s, _) => s.range(1).toDF(), "SELECT 0 AS id")
+    val other = SparkEntry.Q("other_q", q.fn, q.oracle)
+    assert(SparkEntry.uniqueNames(Seq(q, other)) == Seq(q, other))
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.uniqueNames(Seq(q, other, q.copy(oracle = "SELECT 1 AS id")))
+    }
+    assert(e.getMessage.contains("dup_q") && !e.getMessage.contains("other_q"), e.getMessage)
+  }
 }

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -95,6 +99,34 @@ class MatSpec extends SparkSpec {
     dflt.foreach { case (name, rows) => assert(rows.nonEmpty, s"$name returned no rows") }
     val pers = try withMode("persist")(run()) finally Mat.releaseAll(spark)
     dflt.keys.foreach(name => assert(pers(name) == dflt(name), s"$name diverged in persist mode"))
+  }
+
+  test("releaseAll frees every persistent RDD in both modes, without a WARN per RDD") {
+    // RDD.unpersist logs "was locally checkpointed, its lineage has been
+    // truncated..." for each default-mode Mat; a driver run frees hundreds
+    val truncatedWarns = new java.util.concurrent.atomic.AtomicInteger
+    val appender = new AbstractAppender("mat-spec", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("was locally checkpointed"))
+          truncatedWarns.incrementAndGet()
+    }
+    appender.start()
+    spark.sparkContext // Spark's log setup on session start would drop the appender
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    try for (mode <- Seq(None, Some("persist"))) {
+      def run() = {
+        val m = Mat((1 to 50).toDF("v").withColumn("w", col("v") % 7))
+        val pairs = (1 to 60).map(i => (i.toLong, (i % 5).toLong)).toDF("u", "v")
+        (m.count(), graft.operators.Components.connectedComponents(pairs, "u", "v").count())
+      }
+      assert(mode.fold(run())(withMode(_)(run())) == (50L, 61L))
+      assert(spark.sparkContext.getPersistentRDDs.nonEmpty, s"mode $mode left nothing to free")
+      Mat.releaseAll(spark)
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+        s"mode $mode: ${spark.sparkContext.getPersistentRDDs.keys.toSeq.sorted} still persistent")
+    } finally root.removeAppender(appender)
+    assert(truncatedWarns.get == 0, s"${truncatedWarns.get} lineage-truncated WARNs")
   }
 
   test("default (localCheckpoint) mode computes correctly") {

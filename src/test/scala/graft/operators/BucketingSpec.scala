@@ -15,8 +15,9 @@ class BucketingSpec extends SparkSpec {
         "b_lineitem", "l_orderkey", 8)
       Bucketing.writeBucketed(ord.select(col("o_orderkey").as("l_orderkey"), col("o_totalprice")),
         "b_orders", "l_orderkey", 8)
-      val joined = Bucketing.bucketedJoin(spark, "b_lineitem", "b_orders", "l_orderkey")
-      assert(Bucketing.hasNoShuffle(joined), joined.queryExecution.executedPlan.toString)
+      val joined = spark.table("b_lineitem").join(spark.table("b_orders"), Seq("l_orderkey"))
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange hashpartitioning"), plan)
       val expected = li.join(ord, col("l_orderkey") === col("o_orderkey")).count()
       assert(joined.count() == expected)
     } finally {

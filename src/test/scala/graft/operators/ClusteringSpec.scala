@@ -34,9 +34,11 @@ class ClusteringSpec extends SparkSpec {
       v((i % 2).toInt) += 3.0
       (i, v.toSeq)
     }.toDF("vec_id", "embedding")
+    // compactness: the unweighted mean over clusters of each cluster's mean
+    // similarity of members to their centroid
     def meanCos(iters: Int): Double =
-      Clustering.kMeansSummary(
-        Clustering.kMeansAssign(df, col("vec_id"), col("embedding"), k = 2, iters = iters))
+      Clustering.kMeansAssign(df, col("vec_id"), col("embedding"), k = 2, iters = iters)
+        .groupBy(col("cluster")).agg(round(avg(col("cos")), 6).as("mean_cos"))
         .agg(avg(col("mean_cos"))).as[Double].head()
     assert(meanCos(2) >= meanCos(0) - 1e-9) // Lloyd's never degrades assignment quality
   }

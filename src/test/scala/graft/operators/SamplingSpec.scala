@@ -1,28 +1,32 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class SamplingSpec extends SparkSpec {
   import spark.implicits._
 
-  test("hashSample is deterministic and close to the nominal rate") {
+  // a constant weight is a uniform sample of ~rate of the rows
+  private def uniform(df: DataFrame, rate: Double, salt: String = ""): Set[Long] =
+    Sampling.weightedSample(df, col("id"), lit(rate), salt)
+      .select(col("id")).as[Long].collect().toSet
+
+  test("constant-weight weightedSample is deterministic and near the rate") {
     val df = (1L to 10000L).toDF("id")
-    val a = Sampling.hashSample(df, col("id"), 0.3).select(col("id")).as[Long].collect().toSet
-    val b = Sampling.hashSample(df, col("id"), 0.3).select(col("id")).as[Long].collect().toSet
+    val a = uniform(df, 0.3)
+    val b = uniform(df, 0.3)
     assert(a == b) // pure function of id: identical across runs
     assert(math.abs(a.size / 10000.0 - 0.3) < 0.02)
     // a lower rate's sample NESTS inside a higher rate's (same bucket fn)
-    val c = Sampling.hashSample(df, col("id"), 0.1).select(col("id")).as[Long].collect().toSet
+    val c = uniform(df, 0.1)
     assert(c.subsetOf(a))
   }
 
   test("different salts draw different samples") {
     val df = (1L to 5000L).toDF("id")
-    val a = Sampling.hashSample(df, col("id"), 0.5, salt = "s1")
-      .select(col("id")).as[Long].collect().toSet
-    val b = Sampling.hashSample(df, col("id"), 0.5, salt = "s2")
-      .select(col("id")).as[Long].collect().toSet
+    val a = uniform(df, 0.5, salt = "s1")
+    val b = uniform(df, 0.5, salt = "s2")
     assert(a != b)
     assert(math.abs((a intersect b).size / 5000.0 - 0.25) < 0.03) // independent draws
   }

@@ -26,14 +26,6 @@ class SkewSpec extends SparkSpec {
     assert(out.length == 4)
   }
 
-  test("hotKeySplitJoin equals plain join") {
-    val plain = left.join(right, Seq("k")).select(col("k"), col("lv"), col("rv"))
-      .as[(Int, String, String)].collect().toSet
-    val split = Skew.hotKeySplitJoin(left, right, "k", hotKeys = Seq(1))
-      .select(col("k"), col("lv"), col("rv")).as[(Int, String, String)].collect().toSet
-    assert(split == plain)
-  }
-
   test("keySkewReport surfaces the hot key with the right shares") {
     // 80 rows of "hot", 10 of "warm", 10 singletons -> 12 keys, 100 rows
     val rows = Seq.fill(80)("hot") ++ Seq.fill(10)("warm") ++

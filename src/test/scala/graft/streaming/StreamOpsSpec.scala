@@ -1,22 +1,28 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.operators.Intervals
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+object StreamOpsSpec {
+  /** One row of the `events` schema, for memory streams. */
+  case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
+                   event_type: String, value: Double)
+}
+
 class StreamOpsSpec extends SparkSpec {
+  import StreamOpsSpec.Event
   import spark.implicits._
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("tumblingCounts over a memory stream matches batch group-by") {
     implicit val sc = spark.sqlContext
-    val input = MemoryStream[StreamOps.Event]
+    val input = MemoryStream[Event]
     val events = Seq(
-      StreamOps.Event(1, ts("2024-01-01 00:10:00"), 1, "click", 1.0),
-      StreamOps.Event(2, ts("2024-01-01 00:50:00"), 1, "click", 2.0),
-      StreamOps.Event(3, ts("2024-01-01 01:10:00"), 2, "view", 3.0))
+      Event(1, ts("2024-01-01 00:10:00"), 1, "click", 1.0),
+      Event(2, ts("2024-01-01 00:50:00"), 1, "click", 2.0),
+      Event(3, ts("2024-01-01 01:10:00"), 2, "view", 3.0))
     input.addData(events: _*)
     val q = StreamOps.tumblingCounts(input.toDF(), "1 hour", "10 minutes")
       .writeStream.outputMode("complete").format("memory").queryName("tumbling_out").start()
@@ -29,41 +35,15 @@ class StreamOpsSpec extends SparkSpec {
       ("2024-01-01 01:00:00", "view", 1L, 3.0)))
   }
 
-  test("stream-static enrichment joins each micro-batch against the current dim") {
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[StreamOps.Event]
-    val dim = Seq(("click", "engagement"), ("view", "passive"))
-      .toDF("event_type", "category")
-    val q = StreamOps.enrichWithDim(input.toDF(), dim, Seq("event_type"))
-      .writeStream.outputMode("append").format("memory").queryName("enrich_out").start()
-    input.addData(
-      StreamOps.Event(1, ts("2024-01-01 00:10:00"), 1, "click", 1.0),
-      StreamOps.Event(2, ts("2024-01-01 00:11:00"), 2, "view", 2.0))
-    q.processAllAvailable()
-    input.addData(
-      StreamOps.Event(3, ts("2024-01-01 00:12:00"), 3, "purchase", 9.0)) // no dim row
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("enrich_out")
-      .select(col("event_id"), col("category")).as[(Long, Option[String])]
-      .collect().toMap
-    assert(got == Map(1L -> Some("engagement"), 2L -> Some("passive"), 3L -> None))
-    // batch twin: identical operator, identical result
-    val batch = StreamOps.enrichWithDim(
-      Seq(StreamOps.Event(1, ts("2024-01-01 00:10:00"), 1, "click", 1.0)).toDF(),
-      dim, Seq("event_type"))
-      .select(col("event_id"), col("category")).as[(Long, Option[String])].collect().toMap
-    assert(batch == Map(1L -> Some("engagement")))
-  }
-
   test("stream-stream interval join attributes effects within the horizon") {
     implicit val sc = spark.sqlContext
-    val li = MemoryStream[StreamOps.Event]
-    val ri = MemoryStream[StreamOps.Event]
-    li.addData(StreamOps.Event(1, ts("2024-01-01 00:00:00"), 1, "error", 0.0))
+    val li = MemoryStream[Event]
+    val ri = MemoryStream[Event]
+    li.addData(Event(1, ts("2024-01-01 00:00:00"), 1, "error", 0.0))
     ri.addData(
-      StreamOps.Event(10, ts("2024-01-01 00:30:00"), 1, "purchase", 5.0), // within 1h
-      StreamOps.Event(11, ts("2024-01-01 02:00:00"), 1, "purchase", 7.0), // outside
-      StreamOps.Event(12, ts("2024-01-01 00:30:00"), 2, "purchase", 9.0)) // other user
+      Event(10, ts("2024-01-01 00:30:00"), 1, "purchase", 5.0), // within 1h
+      Event(11, ts("2024-01-01 02:00:00"), 1, "purchase", 7.0), // outside
+      Event(12, ts("2024-01-01 00:30:00"), 2, "purchase", 9.0)) // other user
     val q = StreamOps.intervalJoinStreams(li.toDF(), ri.toDF(), 3600, "2 hours")
       .writeStream.outputMode("append").format("memory").queryName("ij_out").start()
     q.processAllAvailable(); q.stop()
@@ -74,23 +54,23 @@ class StreamOpsSpec extends SparkSpec {
 
   test("left-outer stream-stream join emits unmatched rows after watermark eviction") {
     implicit val sc = spark.sqlContext
-    val li = MemoryStream[StreamOps.Event]
-    val ri = MemoryStream[StreamOps.Event]
+    val li = MemoryStream[Event]
+    val ri = MemoryStream[Event]
     val q = StreamOps.intervalJoinStreams(li.toDF(), ri.toDF(), 3600, "0 seconds",
         joinType = "leftOuter")
       .writeStream.outputMode("append").format("memory").queryName("loj_out").start()
     // user 1's error never gets a purchase; user 2's does
-    li.addData(StreamOps.Event(1, ts("2024-01-01 00:00:00"), 1, "error", 0.0),
-      StreamOps.Event(2, ts("2024-01-01 00:00:00"), 2, "error", 0.0))
-    ri.addData(StreamOps.Event(10, ts("2024-01-01 00:30:00"), 2, "purchase", 5.0))
+    li.addData(Event(1, ts("2024-01-01 00:00:00"), 1, "error", 0.0),
+      Event(2, ts("2024-01-01 00:00:00"), 2, "error", 0.0))
+    ri.addData(Event(10, ts("2024-01-01 00:30:00"), 2, "purchase", 5.0))
     q.processAllAvailable()
     // advance BOTH watermarks well past 00:00 + 1h so the unmatched left
     // row's state is evicted and the null-extended row emits
-    li.addData(StreamOps.Event(3, ts("2024-01-01 06:00:00"), 9, "error", 0.0))
-    ri.addData(StreamOps.Event(11, ts("2024-01-01 06:00:00"), 9, "purchase", 0.0))
+    li.addData(Event(3, ts("2024-01-01 06:00:00"), 9, "error", 0.0))
+    ri.addData(Event(11, ts("2024-01-01 06:00:00"), 9, "purchase", 0.0))
     q.processAllAvailable()
-    li.addData(StreamOps.Event(4, ts("2024-01-01 07:00:00"), 9, "error", 0.0))
-    ri.addData(StreamOps.Event(12, ts("2024-01-01 07:00:00"), 9, "purchase", 0.0))
+    li.addData(Event(4, ts("2024-01-01 07:00:00"), 9, "error", 0.0))
+    ri.addData(Event(12, ts("2024-01-01 07:00:00"), 9, "purchase", 0.0))
     q.processAllAvailable()
     q.stop()
     val got = spark.table("loj_out")
@@ -102,8 +82,8 @@ class StreamOpsSpec extends SparkSpec {
 
   test("left-outer stream-stream join state stays bounded under watermark advance") {
     implicit val sc = spark.sqlContext
-    val li = MemoryStream[StreamOps.Event]
-    val ri = MemoryStream[StreamOps.Event]
+    val li = MemoryStream[Event]
+    val ri = MemoryStream[Event]
     val q = StreamOps.intervalJoinStreams(li.toDF(), ri.toDF(), 3600, "0 seconds",
         joinType = "leftOuter")
       .writeStream.outputMode("append").format("memory").queryName("state_out").start()
@@ -112,9 +92,9 @@ class StreamOpsSpec extends SparkSpec {
     // batch 1: 50 never-matched lefts + 50 other-user rights, all at t0 —
     // every row buffers in join state
     li.addData((1 to 50).map(i =>
-      StreamOps.Event(i, ts("2024-01-01 00:00:00"), i, "error", 0.0)): _*)
+      Event(i, ts("2024-01-01 00:00:00"), i, "error", 0.0)): _*)
     ri.addData((1 to 50).map(i =>
-      StreamOps.Event(100 + i, ts("2024-01-01 00:00:00"), 1000 + i, "purchase", 0.0)): _*)
+      Event(100 + i, ts("2024-01-01 00:00:00"), 1000 + i, "purchase", 0.0)): _*)
     q.processAllAvailable()
     val peak = stateRows
     // the 50 lefts must buffer awaiting a match-or-timeout; rights at
@@ -126,8 +106,8 @@ class StreamOpsSpec extends SparkSpec {
     // only the fresh rows' state. Two ticks: one to move the watermark,
     // one to apply eviction.
     for (h <- Seq("06", "07")) {
-      li.addData(StreamOps.Event(900, ts(s"2024-01-01 $h:00:00"), 900, "error", 0.0))
-      ri.addData(StreamOps.Event(901, ts(s"2024-01-01 $h:00:00"), 901, "purchase", 0.0))
+      li.addData(Event(900, ts(s"2024-01-01 $h:00:00"), 900, "error", 0.0))
+      ri.addData(Event(901, ts(s"2024-01-01 $h:00:00"), 901, "purchase", 0.0))
       q.processAllAvailable()
     }
     val after = stateRows
@@ -136,128 +116,6 @@ class StreamOpsSpec extends SparkSpec {
     // all 50 unmatched lefts emitted null-extended on eviction
     val unmatched = spark.table("state_out").filter(col("effect_id").isNull).count()
     assert(unmatched == 50L, s"unmatched=$unmatched")
-  }
-
-  test("transformWithState running totals accumulate across micro-batches") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, StreamOps.RocksDbProvider)
-    try {
-      implicit val sc = spark.sqlContext
-      val input = MemoryStream[StreamOps.Event]
-      val q = StreamOps.runningTotals(input.toDS())
-        .writeStream.outputMode("update").format("memory").queryName("rt_out").start()
-      input.addData(StreamOps.Event(1, ts("2024-01-01 00:00:00"), 1, "click", 1.5))
-      q.processAllAvailable()
-      input.addData(StreamOps.Event(2, ts("2024-01-01 00:01:00"), 1, "click", 2.0),
-        StreamOps.Event(3, ts("2024-01-01 00:02:00"), 2, "view", 4.0))
-      q.processAllAvailable(); q.stop()
-      val got = spark.table("rt_out").as[StreamOps.RunningTotal].collect()
-        .groupBy(_.user_id).map { case (u, rows) => u -> rows.maxBy(_.n_events) }
-      assert(got(1L).n_events == 2 && got(1L).total_value == 3.5)
-      assert(got(2L).n_events == 1 && got(2L).total_value == 4.0)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
-  test("ListState last-N buffer trims across micro-batches") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, StreamOps.RocksDbProvider)
-    try {
-      implicit val sc = spark.sqlContext
-      val input = MemoryStream[StreamOps.Event]
-      val q = StreamOps.recentEvents(input.toDS(), keep = 3)
-        .writeStream.outputMode("update").format("memory").queryName("recent_out").start()
-      input.addData(
-        StreamOps.Event(1, ts("2024-01-01 00:00:00"), 1, "click", 1.0),
-        StreamOps.Event(2, ts("2024-01-01 00:01:00"), 1, "click", 1.0))
-      q.processAllAvailable()
-      input.addData(
-        StreamOps.Event(3, ts("2024-01-01 00:02:00"), 1, "click", 1.0),
-        StreamOps.Event(4, ts("2024-01-01 00:03:00"), 1, "click", 1.0))
-      q.processAllAvailable(); q.stop()
-      val byBatch = spark.table("recent_out").as[StreamOps.RecentWindow].collect()
-      // batch 1 kept both; batch 2 trimmed to the newest 3 of [1,2,3,4]
-      assert(byBatch.map(_.event_ids.toList).toSet ==
-        Set(List(1L, 2L), List(2L, 3L, 4L)), byBatch.toSeq)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
-  test("MapState per-type counts update only touched entries") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, StreamOps.RocksDbProvider)
-    try {
-      implicit val sc = spark.sqlContext
-      val input = MemoryStream[StreamOps.Event]
-      val q = StreamOps.perTypeCounts(input.toDS())
-        .writeStream.outputMode("update").format("memory").queryName("ptype_out").start()
-      input.addData(
-        StreamOps.Event(1, ts("2024-01-01 00:00:00"), 1, "click", 1.5),
-        StreamOps.Event(2, ts("2024-01-01 00:01:00"), 1, "view", 2.0))
-      q.processAllAvailable()
-      // second batch touches only "click": the "view" entry must persist
-      // in state but NOT re-emit
-      input.addData(StreamOps.Event(3, ts("2024-01-01 00:02:00"), 1, "click", 0.5))
-      q.processAllAvailable(); q.stop()
-      val rows = spark.table("ptype_out").as[StreamOps.TypeCount].collect()
-      val lastClick = rows.filter(_.event_type == "click").maxBy(_.n)
-      assert(lastClick.n == 2 && lastClick.total_value == 2.0)
-      assert(rows.count(_.event_type == "view") == 1) // emitted once only
-      assert(rows.filter(_.event_type == "view").head.total_value == 2.0)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
-  test("event-time timers close idle sessions when the watermark passes") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, StreamOps.RocksDbProvider)
-    try {
-      implicit val sc = spark.sqlContext
-      val input = MemoryStream[StreamOps.Event]
-      val sessions = StreamOps.sessionizeWithTimers(
-        input.toDF().withWatermark("ts", "0 seconds").as[StreamOps.Event], 1800)
-      val q = sessions.writeStream.outputMode("append")
-        .format("memory").queryName("tw_sessions").start()
-      // batch 1: two close events for user 1
-      input.addData(
-        StreamOps.Event(1, ts("2024-01-01 00:00:00"), 1, "click", 1.0),
-        StreamOps.Event(2, ts("2024-01-01 00:05:00"), 1, "click", 1.0))
-      q.processAllAvailable()
-      // batch 2: a far-future event advances the watermark past 00:05+gap,
-      // firing user 1's close timer; user 2 opens a session
-      input.addData(StreamOps.Event(3, ts("2024-01-01 10:00:00"), 2, "view", 1.0))
-      q.processAllAvailable()
-      // batch 3: push the watermark further so timers from batch 2 can fire
-      input.addData(StreamOps.Event(4, ts("2024-01-01 12:00:00"), 2, "view", 1.0))
-      q.processAllAvailable()
-      q.stop()
-      val got = spark.table("tw_sessions")
-        .select(col("user_id"), col("session_start").cast("string"),
-          col("session_end").cast("string"), col("n_events"))
-        .as[(Long, String, String, Int)].collect().toSet
-      assert(got.contains((1L, "2024-01-01 00:00:00", "2024-01-01 00:05:00", 2)), got)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
   }
 
   test("file-source streaming: readStream over parquet matches batch aggregation") {
@@ -281,278 +139,24 @@ class StreamOpsSpec extends SparkSpec {
 
   test("watermark drops late data in append mode") {
     implicit val sc = spark.sqlContext
-    val input = MemoryStream[StreamOps.Event]
+    val input = MemoryStream[Event]
     val agg = StreamOps.tumblingCounts(input.toDF(), "1 hour", "30 minutes")
     val q = agg.writeStream.outputMode("append").format("memory")
       .queryName("late_out").start()
     // batch 1: events up to 03:00 -> watermark advances to 02:30
     input.addData(
-      StreamOps.Event(1, ts("2024-01-01 00:10:00"), 1, "click", 1.0),
-      StreamOps.Event(2, ts("2024-01-01 03:00:00"), 1, "click", 1.0))
+      Event(1, ts("2024-01-01 00:10:00"), 1, "click", 1.0),
+      Event(2, ts("2024-01-01 03:00:00"), 1, "click", 1.0))
     q.processAllAvailable()
     // batch 2: an hour-00 event arrives way past the watermark -> dropped
-    input.addData(StreamOps.Event(3, ts("2024-01-01 00:20:00"), 1, "click", 5.0))
+    input.addData(Event(3, ts("2024-01-01 00:20:00"), 1, "click", 5.0))
     q.processAllAvailable()
     // batch 3: advance watermark far enough to finalize all windows
-    input.addData(StreamOps.Event(4, ts("2024-01-01 09:00:00"), 1, "click", 1.0))
+    input.addData(Event(4, ts("2024-01-01 09:00:00"), 1, "click", 1.0))
     q.processAllAvailable(); q.stop()
     val hour0 = spark.table("late_out")
       .filter(col("window_start") === ts("2024-01-01 00:00:00"))
       .select(col("n")).as[Long].collect()
     assert(hour0.toSeq == Seq(1L), s"late event must not count: ${hour0.toSeq}")
-  }
-
-  test("dedupStream drops duplicate event ids within the watermark") {
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[StreamOps.Event]
-    input.addData(
-      StreamOps.Event(1, ts("2024-01-01 00:00:00"), 1, "a", 1.0),
-      StreamOps.Event(1, ts("2024-01-01 00:00:05"), 1, "a", 1.0), // dup id
-      StreamOps.Event(2, ts("2024-01-01 00:01:00"), 1, "b", 2.0))
-    val q = StreamOps.dedupStream(input.toDF(), Seq("event_id"), "10 minutes")
-      .writeStream.outputMode("append").format("memory").queryName("dedup_out").start()
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("dedup_out").select(col("event_id")).as[Long].collect().sorted
-    assert(got.toSeq == Seq(1L, 2L))
-  }
-
-  test("sessionizeStream agrees with batch sessionize on session counts") {
-    implicit val sc = spark.sqlContext
-    val events = Seq(
-      StreamOps.Event(1, ts("2024-01-01 00:00:00"), 7, "a", 1.0),
-      StreamOps.Event(2, ts("2024-01-01 00:10:00"), 7, "a", 2.0),
-      StreamOps.Event(3, ts("2024-01-01 02:00:00"), 7, "a", 3.0), // new session
-      StreamOps.Event(4, ts("2024-01-01 00:00:00"), 8, "a", 4.0))
-    val input = MemoryStream[StreamOps.Event]
-    input.addData(events: _*)
-    val q = StreamOps.sessionizeStream(input.toDS(), 1800)
-      .writeStream.outputMode("append").format("memory").queryName("sess_out").start()
-    q.processAllAvailable(); q.stop()
-    // append mode emits only CLOSED sessions: user 7 closed one (2 events)
-    val streamed = spark.table("sess_out")
-      .select(col("user_id"), col("n_events")).as[(Long, Int)].collect().toSet
-    assert(streamed == Set((7L, 2)))
-    // batch twin sees all sessions
-    val batch = Intervals.sessionize(events.toDF(), col("user_id"), col("ts"), 1800)
-      .groupBy(col("user_id"), col("session_seq")).count()
-      .as[(Long, Long, Long)].collect().toSet
-    assert(batch == Set((7L, 1L, 2L), (7L, 2L, 1L), (8L, 1L, 1L)))
-  }
-  test("stream-stream AS-OF join matches the batch as-of over the same rows") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, StreamOps.RocksDbProvider)
-    try {
-      implicit val sc = spark.sqlContext
-      val lIn = MemoryStream[(Long, java.sql.Timestamp, Double)]
-      val rIn = MemoryStream[(Long, java.sql.Timestamp, Double)]
-      val joined = StreamOps.streamAsOfJoin(
-        lIn.toDF().toDF("k", "ts", "v"),
-        rIn.toDF().toDF("k", "ts", "v"), "0 seconds")
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName("asof_out").start()
-      // batch 1: quotes at 10/20, a tick at 15 and one BEFORE any quote
-      rIn.addData((1L, ts("2024-01-01 00:00:10"), 100.0),
-        (1L, ts("2024-01-01 00:00:20"), 200.0))
-      lIn.addData((1L, ts("2024-01-01 00:00:15"), 1.0),
-        (1L, ts("2024-01-01 00:00:05"), 2.0))
-      q.processAllAvailable()
-      // batch 2: later activity pushes the watermark past 15 -> both
-      // pending ticks resolve; tick at 30 stays pending
-      rIn.addData((1L, ts("2024-01-01 00:00:25"), 300.0))
-      lIn.addData((1L, ts("2024-01-01 00:00:30"), 3.0))
-      q.processAllAvailable()
-      // batch 3: far-future row drives the watermark past 30
-      rIn.addData((2L, ts("2024-01-01 00:02:00"), 999.0))
-      q.processAllAvailable()
-      q.processAllAvailable(); q.stop()
-      val got = spark.table("asof_out")
-        .select(col("k"), col("left_ts").cast("string"), col("left_v"),
-          col("right_ts").cast("string"), col("right_v"))
-        .as[(Long, String, Double, Option[String], Option[Double])]
-        .collect().toSet
-      assert(got == Set(
-        (1L, "2024-01-01 00:00:05", 2.0, None, None),
-        (1L, "2024-01-01 00:00:15", 1.0, Some("2024-01-01 00:00:10"), Some(100.0)),
-        (1L, "2024-01-01 00:00:30", 3.0, Some("2024-01-01 00:00:25"), Some(300.0))))
-      // batch twin: exact same answer from a plain batch as-of
-      val lB = Seq((1L, ts("2024-01-01 00:00:15"), 1.0),
-        (1L, ts("2024-01-01 00:00:05"), 2.0),
-        (1L, ts("2024-01-01 00:00:30"), 3.0)).toDF("k", "ts", "v")
-      val rB = Seq((1L, ts("2024-01-01 00:00:10"), 100.0),
-        (1L, ts("2024-01-01 00:00:20"), 200.0),
-        (1L, ts("2024-01-01 00:00:25"), 300.0),
-        (2L, ts("2024-01-01 00:02:00"), 999.0)).toDF("k", "ts", "v")
-      val batch = lB.as("l").join(rB.as("r"),
-          col("l.k") === col("r.k") && col("r.ts") <= col("l.ts"), "left")
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("l.k"), col("l.ts"), col("l.v"))
-            .orderBy(col("r.ts").desc_nulls_last, col("r.v").desc_nulls_last)))
-        .filter(col("rn") === 1)
-        .select(col("l.k"), col("l.ts").cast("string"), col("l.v"),
-          col("r.ts").cast("string"), col("r.v"))
-        .as[(Long, String, Double, Option[String], Option[Double])]
-        .collect().toSet
-      assert(got == batch)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
-  test("incrementalGlSink: streamed premiums converge to the one-shot batch GL") {
-    implicit val sc = spark.sqlContext
-    def d(s: String) = java.sql.Date.valueOf(s)
-    val statics = graft.domain.Calc.CalcInputs(
-      premiums = null, // supplied per micro-batch
-      certificates = Seq(
-        (1L, "G1", "ST", 25, null.asInstanceOf[java.lang.Double], "PRODA", "*"),
-        (2L, "G1", "ST", 25, null.asInstanceOf[java.lang.Double], "PRODA", "*"))
-        .toDF("cert_id", "group_id", "state", "group_size", "real_rate",
-          "product_code", "plan_code"),
-      proposals = Seq(("PR1", "G1", d("2020-01-01"), null.asInstanceOf[java.sql.Date]))
-        .toDF("proposal_id", "group_id", "eff_from", "eff_to"),
-      splits = Seq(("PR1", 1, 100.0, "H1"))
-        .toDF("proposal_id", "split_seq", "split_pct", "hierarchy_id"),
-      hierarchyVersions = Seq(("H1", "H1V1", d("2020-01-01"),
-        null.asInstanceOf[java.sql.Date]))
-        .toDF("hierarchy_id", "version_id", "eff_from", "eff_to"),
-      participants = Seq(("H1V1", 1, "B1", "SCHED1", Some(10.0)))
-        .toDF("version_id", "tier_level", "broker_id", "schedule_code",
-          "participant_rate"),
-      scheduleRates = Seq(("SCHED1", "*", "*",
-        None: Option[Int], None: Option[Int], 5.0))
-        .toDF("schedule_code", "product_code", "state", "size_from", "size_to", "rate"),
-      assignments = Seq.empty[(String, String, Double, java.sql.Date, java.sql.Date)]
-        .toDF("broker_id", "recipient_id", "assigned_pct", "eff_from", "eff_to"))
-    val allPremiums = Seq(
-      (100L, 1L, "G1", 1000.0, d("2020-06-15")),
-      (101L, 2L, "G1", 500.0, d("2020-06-15")),
-      (102L, 1L, "G1", 800.0, d("2020-07-15")))
-    val dir = java.nio.file.Files.createTempDirectory("graft_glsink").toString
-    val target = s"$dir/gl"; val ckpt = s"$dir/ckpt"
-    val input = MemoryStream[(Long, Long, String, Double, java.sql.Date)]
-    val stream = input.toDF()
-      .toDF("premium_id", "cert_id", "group_id", "amount", "txn_date")
-    val q = StreamOps.incrementalGlSink(stream, statics, target, ckpt)
-    input.addData(allPremiums(0), allPremiums(1))
-    q.processAllAvailable()
-    input.addData(allPremiums(1), allPremiums(2)) // 101 replayed + new 102
-    q.processAllAvailable(); q.stop()
-    val streamed = spark.read.parquet(target)
-      .select(col("premium_id"), col("broker_id"), col("entry_type"),
-        col("amount").cast("double"))
-      .as[(Long, String, String, Double)].collect().toSet
-    val batch = graft.domain.Calc.glEntries(graft.domain.Calc.run(
-      statics.copy(premiums = allPremiums
-        .toDF("premium_id", "cert_id", "group_id", "amount", "txn_date"))))
-      .select(col("premium_id"), col("broker_id"), col("entry_type"),
-        col("amount").cast("double"))
-      .as[(Long, String, String, Double)].collect().toSet
-    assert(streamed == batch)
-    assert(streamed.nonEmpty && streamed.size == 3) // one Original entry per premium
-  }
-
-  test("idempotentKeyedSink: overlapping micro-batches converge to unique keys") {
-    implicit val sc = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    val target = s"$dir/table"; val ckpt = s"$dir/ckpt"
-    val input = MemoryStream[StreamOps.Event]
-    val q = StreamOps.idempotentKeyedSink(input.toDF(), Seq("event_id"), target, ckpt)
-    input.addData(
-      StreamOps.Event(1, ts("2024-01-01 00:00:00"), 1, "a", 1.0),
-      StreamOps.Event(2, ts("2024-01-01 00:00:01"), 1, "a", 2.0))
-    q.processAllAvailable()
-    input.addData( // batch 2 replays key 2 with different payload, adds 3
-      StreamOps.Event(2, ts("2024-01-01 00:00:02"), 9, "b", 9.0),
-      StreamOps.Event(3, ts("2024-01-01 00:00:03"), 1, "a", 3.0))
-    q.processAllAvailable(); q.stop()
-    val got = spark.read.parquet(target)
-    assert(got.count() == 3)
-    assert(got.select(col("event_id")).as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
-    // first write wins: the replayed key kept its original payload
-    val k2 = got.filter(col("event_id") === 2).select(col("user_id")).as[Long].head()
-    assert(k2 == 1L)
-    // a fresh query over the same target (restart) re-appends nothing
-    val input2 = MemoryStream[StreamOps.Event]
-    val q2 = StreamOps.idempotentKeyedSink(input2.toDF(), Seq("event_id"), target, s"$dir/ckpt2")
-    input2.addData(StreamOps.Event(1, ts("2024-01-01 00:00:00"), 1, "a", 1.0))
-    q2.processAllAvailable(); q2.stop()
-    assert(spark.read.parquet(target).count() == 3)
-  }
-
-  test("dedupIngestSink: streaming corpus store admits each content once") {
-    implicit val sc = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_ingest").toString
-    val target = s"$dir/corpus"; val ckpt = s"$dir/ckpt"
-    val input = MemoryStream[(Long, String)]
-    val q = StreamOps.dedupIngestSink(
-      input.toDF().toDF("doc_id", "text"), target, ckpt, n = 3, threshold = 0.5)
-    // batch 1 seeds the store; 11 is a batch-internal exact dup of 10
-    input.addData(
-      (10L, "alpha beta gamma delta epsilon"),
-      (11L, "alpha  beta gamma delta epsilon "),
-      (12L, "one two three four five six"))
-    q.processAllAvailable()
-    assert(spark.read.parquet(target).select(col("doc_id")).as[Long]
-      .collect().sorted.toSeq == Seq(10L, 12L))
-    // batch 2: exact dup of stored content, a near dup, and a novel doc
-    input.addData(
-      (20L, "alpha beta gamma delta epsilon"),      // exact vs store
-      (21L, "one two three four five seven"),       // near vs store (J=5/7)
-      (22L, "totally novel content appears here now"))
-    q.processAllAvailable(); q.stop()
-    val store = spark.read.parquet(target).select(col("doc_id")).as[Long]
-      .collect().sorted.toSeq
-    assert(store == Seq(10L, 12L, 22L))
-    // restart with a replayed batch: the store is unchanged (convergent)
-    val input2 = MemoryStream[(Long, String)]
-    val q2 = StreamOps.dedupIngestSink(
-      input2.toDF().toDF("doc_id", "text"), target, s"$dir/ckpt2", n = 3, threshold = 0.5)
-    input2.addData((22L, "totally novel content appears here now"))
-    q2.processAllAvailable(); q2.stop()
-    assert(spark.read.parquet(target).count() == 3)
-  }
-
-  test("bloomIngestSink: bloom-gated store admits each content once, bit store grows idempotently") {
-    implicit val sc = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloom_ingest").toString
-    val target = s"$dir/corpus"; val bits = s"$dir/bits"; val ckpt = s"$dir/ckpt"
-    val input = MemoryStream[(Long, String)]
-    val q = StreamOps.bloomIngestSink(
-      input.toDF().toDF("doc_id", "text"), target, bits, ckpt, mBits = 1 << 16)
-    // batch 1 seeds corpus + bit store; 11 is an exact dup of 10
-    input.addData(
-      (10L, "alpha beta gamma delta epsilon"),
-      (11L, "alpha  beta gamma delta epsilon "),
-      (12L, "one two three four five six"))
-    q.processAllAvailable()
-    assert(spark.read.parquet(target).select(col("doc_id")).as[Long]
-      .collect().sorted.toSeq == Seq(10L, 12L))
-    val bits1 = spark.read.parquet(bits).count()
-    assert(bits1 >= 2 && bits1 <= 6) // 2 docs x k=3, minus collisions
-    // batch 2: exact dup of stored content (bloom-hit -> exact-dropped)
-    // and a novel doc (bloom miss -> admitted without a corpus probe)
-    input.addData(
-      (20L, "alpha beta gamma delta epsilon"),
-      (22L, "totally novel content appears here now"))
-    q.processAllAvailable(); q.stop()
-    assert(spark.read.parquet(target).select(col("doc_id")).as[Long]
-      .collect().sorted.toSeq == Seq(10L, 12L, 22L))
-    val bits2 = spark.read.parquet(bits)
-    assert(bits2.count() == bits2.select(col("__pos")).distinct().count(),
-      "bit upserts must stay duplicate-free")
-    // replay batch: store and bit store both unchanged (convergent)
-    val input2 = MemoryStream[(Long, String)]
-    val q2 = StreamOps.bloomIngestSink(
-      input2.toDF().toDF("doc_id", "text"), target, bits, s"$dir/ckpt2",
-      mBits = 1 << 16)
-    input2.addData((22L, "totally novel content appears here now"))
-    q2.processAllAvailable(); q2.stop()
-    assert(spark.read.parquet(target).count() == 3)
-    assert(spark.read.parquet(bits).count() == bits2.count())
   }
 }
