@@ -74,6 +74,45 @@ object SparkEntry {
           col("a.l_suppkey") < col("b.l_suppkey"))
       .select(col("a.l_suppkey").as("sa"), col("b.l_suppkey").as("sb"))
 
+  /** [[coSupplyPairs]]' SQL twin: `e0(u, v)`, the distinct supplier
+    * pairs (u < v) sharing an order of the 1-in-20 slice `li`. Starts
+    * with WITH. */
+  private val coSupplyEdgeCtes: String = """WITH li AS (SELECT l_orderkey, l_suppkey FROM lineitem
+                          WHERE l_orderkey % 20 = 0),
+              e0 AS MATERIALIZED (
+                SELECT DISTINCT least(a.l_suppkey, b.l_suppkey) AS u,
+                       greatest(a.l_suppkey, b.l_suppkey) AS v
+                FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
+                                   AND a.l_suppkey < b.l_suppkey)"""
+
+  /** Over [[coSupplyEdgeCtes]], as Components' degree-oriented triangle
+    * count builds them: degrees `deg(x, d)`, each edge oriented `o(s, t)`
+    * from the lower (degree, id) end, the wedges `w` and each triangle
+    * once as `tri(x, y, z)`. */
+  private val coSupplyTriangleCtes: String = coSupplyEdgeCtes + """,
+              deg AS MATERIALIZED (SELECT x, count(*)::BIGINT AS d
+                FROM (SELECT u AS x FROM e0 UNION ALL SELECT v AS x FROM e0) z
+                GROUP BY 1),
+              o AS (SELECT CASE WHEN (du.d, u) < (dv.d, v) THEN u ELSE v END AS s,
+                           CASE WHEN (du.d, u) < (dv.d, v) THEN v ELSE u END AS t
+                    FROM e0 JOIN deg du ON du.x = u JOIN deg dv ON dv.x = v),
+              w AS (SELECT a.s AS x, a.t AS y, b.t AS z
+                    FROM o a JOIN o b ON a.t = b.s),
+              tri AS (SELECT x, y, z FROM w JOIN o ON o.s = w.x AND o.t = w.z)"""
+
+  /** The SQL twin of Stats.funnel over `events` for view -> click ->
+    * purchase: `s0(user_id, t_0)` (first view),
+    * `s1(user_id, t_1)` (first click after it) and `s2(user_id, t_2)`
+    * (first purchase after that click). */
+  private val funnelStepCtes: String = """s0 AS (SELECT user_id, min(ts) AS t_0 FROM events
+                     WHERE event_type = 'view' GROUP BY 1),
+              s1 AS (SELECT e.user_id, min(e.ts) AS t_1 FROM events e
+                     JOIN s0 ON s0.user_id = e.user_id
+                     WHERE e.event_type = 'click' AND e.ts > s0.t_0 GROUP BY 1),
+              s2 AS (SELECT e.user_id, min(e.ts) AS t_2 FROM events e
+                     JOIN s1 ON s1.user_id = e.user_id
+                     WHERE e.event_type = 'purchase' AND e.ts > s1.t_1 GROUP BY 1)"""
+
   /** The sparsified part co-occurrence graph: part pairs (u < v) sharing
     * an order, kept by a 4% md5 slice so graph algorithms see real
     * structure on the uniform synthetic data. Pair expansion is bounded
@@ -128,6 +167,72 @@ object SparkEntry {
   private def orderCoverage(s: SparkSession, d: String): DataFrame =
     ord(s, d).select(col("o_custkey"), col("o_orderdate"),
       (col("o_orderdate") + expr("INTERVAL 30 DAY")).as("o_end"))
+
+  /** 30-day order intervals (o_orderkey, o_orderdate, o_end) of a
+    * 1-in-`slice` order sample: the interval-join queries' left side. */
+  private def orderIntervals(s: SparkSession, d: String, slice: Int): DataFrame =
+    ord(s, d).filter(pmod(col("o_orderkey"), lit(slice)) === 0)
+      .select(col("o_orderkey"), col("o_orderdate"),
+        (col("o_orderdate") + expr("INTERVAL 30 DAY")).as("o_end"))
+
+  /** 7-day ship intervals (li_id, l_shipdate, l_end) of a 1-in-`slice`
+    * lineitem sample: the interval-join queries' right side. */
+  private def lineIntervals(s: SparkSession, d: String, slice: Int): DataFrame =
+    li(s, d).filter(pmod(col("l_orderkey") * 7 + col("l_linenumber"), lit(slice)) === 0)
+      .select(concat_ws("-", col("l_orderkey"), col("l_linenumber"),
+          col("l_suppkey"), col("l_partkey")).as("li_id"),
+        col("l_shipdate"), (col("l_shipdate") + expr("INTERVAL 7 DAY")).as("l_end"))
+
+  /** The SQL twins of [[orderIntervals]] `a(a_id, a_from, a_to)` and
+    * [[lineIntervals]] `b(b_id, b_from, b_to)`. Starts with WITH. */
+  private def intervalSideCtes(slice: Int): String =
+    s"""WITH a AS (SELECT o_orderkey AS a_id, o_orderdate::DATE AS a_from,
+       |         (o_orderdate + INTERVAL 30 DAY)::DATE AS a_to
+       |  FROM orders WHERE o_orderkey % $slice = 0),
+       |b AS (SELECT l_orderkey::VARCHAR || '-' || l_linenumber::VARCHAR
+       |           || '-' || l_suppkey::VARCHAR || '-' || l_partkey::VARCHAR AS b_id,
+       |         l_shipdate::DATE AS b_from,
+       |         (l_shipdate + INTERVAL 7 DAY)::DATE AS b_to
+       |  FROM lineitem WHERE (l_orderkey * 7 + l_linenumber) % $slice = 0)""".stripMargin
+
+  /** s20_zonemap_prune's range probes `(label, lo, hi)` per zone-mapped
+    * lineitem column (integral bounds: the oracle prints them as such). */
+  private val zoneProbes: Seq[(String, Seq[(String, Double, Double)])] = Seq(
+    "l_orderkey" -> Seq(("ok_narrow", 1000.0, 2000.0), ("ok_mid", 1.0, 100000.0),
+      ("ok_all", 0.0, 1000000000.0)),
+    "l_extendedprice" -> Seq(("pr_low", 0.0, 2000.0), ("pr_mid", 10000.0, 20000.0),
+      ("pr_all", 0.0, 1000000000.0)))
+
+  /** Maintenance.zoneMapPrune's SQL twin over [[zoneProbes]]: per column
+    * the zone map `z<i>` of its 4096-orderkey files with one true-match
+    * count per probe, then one report row per probe. */
+  private val zoneMapOracle: String = {
+    def num(x: Double) = x.toLong.toString
+    val maps = zoneProbes.zipWithIndex.map { case ((c, preds), z) =>
+      val matched = preds.zipWithIndex.map { case ((_, lo, hi), i) =>
+        s"sum(CASE WHEN v >= ${num(lo)} AND v <= ${num(hi)} THEN 1 ELSE 0 END)::BIGINT AS m$i"
+      }
+      s"""z$z AS (SELECT file_id, min(v) AS mn, max(v) AS mx, count(*)::BIGINT AS n_rows,
+         |    ${matched.mkString(",\n    ")}
+         |  FROM (SELECT l_orderkey // 4096 AS file_id, $c::DOUBLE AS v FROM lineitem)
+         |  GROUP BY 1)""".stripMargin
+    }
+    val rows = for {
+      ((c, preds), z) <- zoneProbes.zipWithIndex
+      ((label, lo, hi), i) <- preds.zipWithIndex
+    } yield {
+      val keep = s"mx >= ${num(lo)} AND mn <= ${num(hi)}"
+      s"""SELECT '$c' AS zone_col, '$label' AS predicate, count(*)::BIGINT AS n_files,
+         |  sum(CASE WHEN NOT ($keep) THEN 1 ELSE 0 END)::BIGINT AS n_pruned,
+         |  sum(n_rows)::BIGINT AS rows_total,
+         |  sum(CASE WHEN $keep THEN n_rows ELSE 0 END)::BIGINT AS rows_scanned,
+         |  sum(m$i)::BIGINT AS rows_matched,
+         |  round(1.0 - sum(CASE WHEN $keep THEN n_rows ELSE 0 END)::DOUBLE
+         |    / sum(n_rows), 6) AS skip_frac
+         |FROM z$z""".stripMargin
+    }
+    "WITH " + maps.mkString(",\n") + "\n" + rows.mkString("\nUNION ALL\n")
+  }
 
   /** The j16 typo generator over part(p_partkey, p_name): delete, swap or
     * substitute one character at a key-derived position; every 17th name
@@ -192,13 +297,12 @@ object SparkEntry {
        |       $b AS n_resamples FROM m""".stripMargin
   }
 
-  /** Generated unigram-LM oracle CTEs (the x_bpe_deep pattern applied to
-    * Kudo-2018 Viterbi segmentation): head = word frequencies, substring
-    * candidates, the frequency-seeded vocab `v0`; then one CTE per prefix
-    * length replaying the DP step (extend best paths at positions
-    * `p-maxPieceLen..p-1` by the connecting vocab piece, keep the
-    * rounded-score / longest-piece winner per word). */
-  private def unigramHeadCtes(pLen: Int, vSize: Int, wLen: Int): String =
+  /** The shared head of the generated tokenizer oracles: `toks` (the
+    * whitespace split of `documents`), `uw` (word frequencies, words of
+    * at most `wLen` chars) and `subs` (total frequency per piece over
+    * every substring of up to `pLen` chars; `piece` turns the substring
+    * SQL into the piece, as `Tokenize.pieceFreqs`' function does). */
+  private def substringFreqCtes(pLen: Int, wLen: Int)(piece: String => String): String =
     s"""WITH toks AS (SELECT unnest(string_split_regex(trim(text), '\\s+')) AS term
        |  FROM documents),
        |uw AS MATERIALIZED (SELECT * FROM (
@@ -206,11 +310,21 @@ object SparkEntry {
        |    FROM toks WHERE term <> '' GROUP BY 1)
        |  WHERE length(word) <= $wLen),
        |subs AS (SELECT piece, sum(freq)::BIGINT AS pfreq FROM (
-       |    SELECT freq, substr(word, st, ln) AS piece FROM uw,
+       |    SELECT freq, ${piece("substr(word, st, ln)")} AS piece FROM uw,
        |      LATERAL unnest(generate_series(1, length(word))) AS s(st),
        |      LATERAL unnest(generate_series(1,
        |        least($pLen, length(word) - st + 1))) AS l(ln))
-       |  GROUP BY 1),
+       |  GROUP BY 1)""".stripMargin
+
+  /** Generated unigram-LM oracle CTEs (the x_bpe_deep pattern applied to
+    * Kudo-2018 Viterbi segmentation): head = word frequencies, substring
+    * candidates, the frequency-seeded vocab `v0`; then one CTE per prefix
+    * length replaying the DP step (extend best paths at positions
+    * `p-maxPieceLen..p-1` by the connecting vocab piece, keep the
+    * rounded-score / longest-piece winner per word). */
+  private def unigramHeadCtes(pLen: Int, vSize: Int, wLen: Int): String =
+    substringFreqCtes(pLen, wLen)(identity) +
+      s""",
        |vsel AS MATERIALIZED (
        |  SELECT piece, pfreq FROM subs WHERE length(piece) = 1
        |  UNION ALL
@@ -286,27 +400,15 @@ object SparkEntry {
     * (at most one piece per length can match, so `rn = 1` by length desc
     * IS the greedy choice), finished words pass through. */
   private def wordPieceOracle(pLen: Int, vSize: Int, wLen: Int): String = {
-    val head =
-      s"""WITH toks AS (SELECT unnest(string_split_regex(trim(text), '\\s+')) AS term
-         |  FROM documents),
-         |uw AS MATERIALIZED (SELECT * FROM (
-         |    SELECT term AS word, count(*)::BIGINT AS freq
-         |    FROM toks WHERE term <> '' GROUP BY 1)
-         |  WHERE length(word) <= $wLen),
-         |wsubs AS (SELECT piece, sum(freq)::BIGINT AS pfreq FROM (
-         |    SELECT freq, CASE WHEN st = 1 THEN substr(word, st, ln)
-         |                      ELSE '##' || substr(word, st, ln) END AS piece
-         |    FROM uw,
-         |      LATERAL unnest(generate_series(1, length(word))) AS s(st),
-         |      LATERAL unnest(generate_series(1,
-         |        least($pLen, length(word) - st + 1))) AS l(ln))
-         |  GROUP BY 1),
+    val head = substringFreqCtes(pLen, wLen)(sub =>
+      s"CASE WHEN st = 1 THEN $sub ELSE '##' || $sub END") +
+      s""",
          |wv AS MATERIALIZED (
-         |  SELECT piece FROM wsubs
+         |  SELECT piece FROM subs
          |  WHERE length(piece) = 1 OR (starts_with(piece, '##') AND length(piece) = 3)
          |  UNION ALL
          |  SELECT piece FROM (
-         |    SELECT piece, pfreq FROM wsubs
+         |    SELECT piece, pfreq FROM subs
          |    WHERE NOT (length(piece) = 1
          |               OR (starts_with(piece, '##') AND length(piece) = 3))
          |    ORDER BY pfreq DESC, piece LIMIT $vSize)),
@@ -466,6 +568,17 @@ object SparkEntry {
                          JOIN sizes sb ON sb.doc_id = id_b
               WHERE round(n_common / (sa.n_sh + sb.n_sh - n_common), 6) >= """ + threshold
 
+  /** Word 3-gram counts `c3(doc_id, gram, cnt)` per document over
+    * `toks(doc_id, t)`, the whitespace split of `documents`
+    * (TextFunctions.repetitionMetrics' duplicated-3-gram side). */
+  private val trigramCountCtes: String = """toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
+                       FROM documents),
+              g3 AS (SELECT doc_id,
+                       unnest([array_to_string(t[i:i+2], ' ')
+                               for i in generate_series(1, len(t) - 2)]) AS gram
+                     FROM toks WHERE len(t) >= 3),
+              c3 AS (SELECT doc_id, gram, count(*) AS cnt FROM g3 GROUP BY 1, 2)"""
+
   /** MinHash signatures of word-trigram shingles over `toks(doc_id, w)`:
     * 16 universal hashes, as Dedup.minHashLshPairs draws them. */
   private val minHashSigCtes: String = trigramShinglesCte("sh") + """,
@@ -475,6 +588,21 @@ object SparkEntry {
                     FROM sh, (SELECT unnest(generate_series(0, 15)) AS i)
                     GROUP BY 1, 2),
               sig AS (SELECT doc_id, list(m ORDER BY i) AS sig FROM h GROUP BY 1)"""
+
+  /** `s(doc_id, simhash)`: Dedup.simHashDocs' 32-bit fingerprint of each
+    * document (per bit, the sign of the +-1 bit sum over its md5 token
+    * hashes). Starts with WITH. */
+  private val simHashCtes: String = {
+    val sums = (0 until 32)
+      .map(b => s"sum(((h >> $b) & 1) * 2 - 1)::BIGINT AS s$b").mkString(", ")
+    val fp = (0 until 32)
+      .map(b => s"(CASE WHEN s$b > 0 THEN (1::BIGINT << $b) ELSE 0 END)").mkString(" | ")
+    s"""WITH toks AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok
+            FROM documents),
+            h AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 8))::BIGINT AS h FROM toks),
+            sums AS (SELECT doc_id, $sums FROM h GROUP BY 1),
+            s AS (SELECT doc_id, ($fp)::BIGINT AS simhash FROM sums)"""
+  }
 
   /** 4x4 LSH banding of [[minHashSigCtes]], the candidate pairs, and their
     * connected components `comp(node, component = min member)` by
@@ -543,6 +671,43 @@ object SparkEntry {
       |      ORDER BY round(list_cosine_similarity(e.v, c.centroid), 6) DESC,
       |        c.cell) AS rn
       |  FROM e CROSS JOIN cent c WHERE e.vec_id < 20) WHERE rn <= 4)""".stripMargin
+
+  /** Over [[ivfProbeCtes]]: each query's top `k` corpus neighbors
+    * (query_id, neighbor_id, cos, rank) inside its probed cells, as
+    * Similarity.ivfCosineTopK ranks them. */
+  private def ivfProbeTopK(k: Int): String =
+    s"""SELECT p.query_id, a.vec_id AS neighbor_id,
+       |  round(list_cosine_similarity(p.qv, a.v), 6) AS cos,
+       |  (row_number() OVER (PARTITION BY p.query_id
+       |    ORDER BY round(list_cosine_similarity(p.qv, a.v), 6) DESC,
+       |      a.vec_id))::INT AS rank
+       |FROM asg a JOIN probes p USING (cell)
+       |WHERE p.query_id <> a.vec_id
+       |QUALIFY rank <= $k""".stripMargin
+
+  /** Squared euclidean distance of the `dim`-long lists `a` and `b`,
+    * summed in index order and rounded at 6 (Similarity's PQ kernels). */
+  private def sqL2Sql(a: String, b: String, dim: Int): String =
+    s"round(list_reduce(list_transform(range($dim), fi -> ($a[fi+1]-$b[fi+1])*($a[fi+1]-$b[fi+1])), (facc,fx) -> facc+fx), 6)"
+
+  /** PQ codebook training over `sub(vec_id, j, s)` (8 subspaces of 8
+    * dims), as Similarity's product quantizer trains it: seeds
+    * `seed(j, cell, cen)` (lowest vec_id of each `vec_id % 16` class per
+    * subspace), one Lloyd step (`a1`, `m1`) and the codebook
+    * `cb(j, cell, cen)`. */
+  private val pqCodebookCtes: String =
+    s"""seed AS (SELECT m.j, m.cell, s.s AS cen
+       |  FROM (SELECT j, vec_id % 16 AS cell, min(vec_id) AS mvid
+       |        FROM sub GROUP BY 1, 2) m
+       |  JOIN sub s ON s.vec_id = m.mvid AND s.j = m.j),
+       |a1 AS (SELECT vec_id, j, s, cell FROM (
+       |  SELECT sub.vec_id, sub.j, sub.s, seed.cell,
+       |    row_number() OVER (PARTITION BY sub.vec_id, sub.j
+       |      ORDER BY ${sqL2Sql("sub.s", "seed.cen", 8)} ASC, seed.cell) AS rn
+       |  FROM sub JOIN seed ON sub.j = seed.j) WHERE rn = 1),
+       |m1 AS (SELECT j, cell, i, round((sum(s[i + 1]::DECIMAL(27,6)))::DOUBLE / count(*), 6) AS mc
+       |  FROM a1, range(8) r(i) GROUP BY 1, 2, 3),
+       |cb AS (SELECT j, cell, list(mc ORDER BY i) AS cen FROM m1 GROUP BY 1, 2)""".stripMargin
 
   /** Generated Lloyd k-means oracle CTEs (Clustering.kMeansAssign, k = 8,
     * 64 dims): seeds `c0`, then per iteration the assignment `aI`, the
@@ -3741,18 +3906,8 @@ object SparkEntry {
 
     Q("d_simhash", (s, d) =>
       Dedup.simHashDocs(doc(s, d), col("doc_id"), col("text"), 32),
-      {
-        // generate the 32 bit-sum aggregates + fingerprint assembly
-        val sums = (0 until 32)
-          .map(b => s"sum(((h >> $b) & 1) * 2 - 1)::BIGINT AS s$b").mkString(", ")
-        val fp = (0 until 32)
-          .map(b => s"(CASE WHEN s$b > 0 THEN (1::BIGINT << $b) ELSE 0 END)").mkString(" | ")
-        s"""WITH toks AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok
-            FROM documents),
-            h AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 8))::BIGINT AS h FROM toks),
-            s AS (SELECT doc_id, $sums FROM h GROUP BY 1)
-            SELECT doc_id, ($fp)::BIGINT AS simhash FROM s"""
-      }),
+      simHashCtes + """
+            SELECT doc_id, simhash FROM s"""),
 
     Q("d_containment", (s, d) =>
       // asymmetric containment |A∩B|/|A| >= 0.8 — near-subset detection
@@ -3777,16 +3932,7 @@ object SparkEntry {
       // any such pair agrees on >= 1 band, so blocking loses nothing)
       Dedup.simHashPairs(doc(s, d), col("doc_id"), col("text"),
         bits = 32, bands = 4, maxHamming = 3),
-      {
-        val sums = (0 until 32)
-          .map(b => s"sum(((h >> $b) & 1) * 2 - 1)::BIGINT AS s$b").mkString(", ")
-        val fp = (0 until 32)
-          .map(b => s"(CASE WHEN s$b > 0 THEN (1::BIGINT << $b) ELSE 0 END)").mkString(" | ")
-        s"""WITH toks AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok
-            FROM documents),
-            h AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 8))::BIGINT AS h FROM toks),
-            sums AS (SELECT doc_id, $sums FROM h GROUP BY 1),
-            s AS (SELECT doc_id, ($fp)::BIGINT AS simhash FROM sums),
+      simHashCtes + """,
             banded AS (SELECT doc_id, simhash, band,
                          (simhash >> (band * 8)) & 255 AS bv
                        FROM s, (SELECT unnest(generate_series(0, 3)) AS band)),
@@ -3795,8 +3941,7 @@ object SparkEntry {
                      FROM banded a JOIN banded b
                        ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id)
             SELECT id_a, id_b, bit_count(xor(sa, sb))::INT AS hamming
-            FROM cand WHERE bit_count(xor(sa, sb)) <= 3"""
-      }),
+            FROM cand WHERE bit_count(xor(sa, sb)) <= 3"""),
 
     Q("d_embedding_neardup", (s, d) =>
       // IVF-cell blocked (the 100 TB default): deterministic centroids,
@@ -3818,21 +3963,7 @@ object SparkEntry {
       graft.operators.Components.triangleCounts(
         coSupplyPairs(s, d),
         col("sa"), col("sb")),
-      """WITH li AS (SELECT l_orderkey, l_suppkey FROM lineitem
-                          WHERE l_orderkey % 20 = 0),
-              e0 AS (SELECT DISTINCT least(a.l_suppkey, b.l_suppkey) AS u,
-                            greatest(a.l_suppkey, b.l_suppkey) AS v
-                     FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-                                        AND a.l_suppkey < b.l_suppkey),
-              deg AS (SELECT x, count(*)::BIGINT AS d
-                      FROM (SELECT u AS x FROM e0 UNION ALL SELECT v AS x FROM e0)
-                      GROUP BY 1),
-              o AS (SELECT CASE WHEN (du.d, u) < (dv.d, v) THEN u ELSE v END AS s,
-                           CASE WHEN (du.d, u) < (dv.d, v) THEN v ELSE u END AS t
-                    FROM e0 JOIN deg du ON du.x = u JOIN deg dv ON dv.x = v),
-              w AS (SELECT a.s AS x, a.t AS y, b.t AS z
-                    FROM o a JOIN o b ON a.t = b.s),
-              tri AS (SELECT x, y, z FROM w JOIN o ON o.s = w.x AND o.t = w.z)
+      coSupplyTriangleCtes + """
               SELECT vertex, count(*)::BIGINT AS n_tri
               FROM (SELECT unnest([x, y, z]) AS vertex FROM tri)
               GROUP BY 1"""),
@@ -4176,15 +4307,7 @@ object SparkEntry {
       // full replica: deterministic centroids (lowest vec_id per id-residue
       // class), rounded-similarity cell assignment and probe ranking
       """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-""" + ivfProbeCtes + """
-              SELECT p.query_id, a.vec_id AS neighbor_id,
-                     round(list_cosine_similarity(p.qv, a.v), 6) AS cos,
-                     (row_number() OVER (PARTITION BY p.query_id
-                        ORDER BY round(list_cosine_similarity(p.qv, a.v), 6) DESC,
-                                 a.vec_id))::INT AS rank
-              FROM asg a JOIN probes p USING (cell)
-              WHERE p.query_id <> a.vec_id
-              QUALIFY rank <= 5"""),
+""" + ivfProbeCtes + "\n" + ivfProbeTopK(5)),
 
     Q("v_ann_recall", (s, d) => {
       // ANN recall@k harness: IVF candidates (same dials as v_ann_ivf)
@@ -5008,8 +5131,7 @@ object SparkEntry {
       // equivalent bins over a TOTAL order (value, unique id), computed
       // via the scalable two-pass global rank (range-partition + offset
       // merge) — NO single-partition Window.orderBy sort. The oracle
-      // replays the same contract with row_number + the closed-form
-      // bin(r) = (r-1)*k/N + 1 (exactly ntile's remainder-first split)
+      // is DuckDB's ntile over the same order
       Windows.equiDepthBin(
         ev(s, d).select(col("event_id"), col("value")),
         8, "value", Seq(col("event_id")), "bucket")
@@ -5017,11 +5139,8 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"),
           round(min(col("value")), 6).as("vmin"),
           round(max(col("value")), 6).as("vmax")),
-      """WITH b AS (SELECT value,
-                row_number() OVER (ORDER BY value, event_id) AS rn FROM events),
-              c AS (SELECT value,
-                (((rn - 1) * 8) // (SELECT count(*) FROM events) + 1)::INT AS bucket
-                FROM b)
+      """WITH c AS (SELECT value,
+                (ntile(8) OVER (ORDER BY value, event_id))::INT AS bucket FROM events)
               SELECT bucket, count(*)::BIGINT AS n,
                      round(min(value), 6) AS vmin, round(max(value), 6) AS vmax
               FROM c GROUP BY 1"""),
@@ -5067,14 +5186,7 @@ object SparkEntry {
         col("user_id"), col("ts"), col("event_type"),
         Seq("view", "click", "purchase")),
       """WITH u AS (SELECT DISTINCT user_id FROM events),
-              s0 AS (SELECT user_id, min(ts) AS t_0 FROM events
-                     WHERE event_type = 'view' GROUP BY 1),
-              s1 AS (SELECT e.user_id, min(e.ts) AS t_1 FROM events e
-                     JOIN s0 ON s0.user_id = e.user_id
-                     WHERE e.event_type = 'click' AND e.ts > s0.t_0 GROUP BY 1),
-              s2 AS (SELECT e.user_id, min(e.ts) AS t_2 FROM events e
-                     JOIN s1 ON s1.user_id = e.user_id
-                     WHERE e.event_type = 'purchase' AND e.ts > s1.t_1 GROUP BY 1)
+              """ + funnelStepCtes + """
               SELECT u.user_id, s0.t_0, s1.t_1, s2.t_2,
                      (CASE WHEN s2.t_2 IS NOT NULL THEN 3
                            WHEN s1.t_1 IS NOT NULL THEN 2
@@ -5535,14 +5647,7 @@ object SparkEntry {
           .select(col("n").as("n_converted"), col("median_lag_min"),
             col("p90_lag_min"))
       },
-      """WITH s0 AS (SELECT user_id, min(ts) AS t_0 FROM events
-                          WHERE event_type = 'view' GROUP BY 1),
-              s1 AS (SELECT e.user_id, min(e.ts) AS t_1 FROM events e
-                     JOIN s0 ON s0.user_id = e.user_id
-                     WHERE e.event_type = 'click' AND e.ts > s0.t_0 GROUP BY 1),
-              s2 AS (SELECT e.user_id, min(e.ts) AS t_2 FROM events e
-                     JOIN s1 ON s1.user_id = e.user_id
-                     WHERE e.event_type = 'purchase' AND e.ts > s1.t_1 GROUP BY 1),
+      "WITH " + funnelStepCtes + """,
               lag AS (SELECT ((epoch_us(s2.t_2) - epoch_us(s0.t_0)) // 60000000)
                         ::BIGINT AS lag_min
                       FROM s2 JOIN s0 USING (user_id)),
@@ -5785,8 +5890,7 @@ object SparkEntry {
       // duplicated-3-gram fraction per document, via explode + one hash
       // aggregate per gram size (map-side partials; no arrays in the agg)
       TextFunctions.repetitionMetrics(doc(s, d), col("doc_id"), col("text")),
-      """WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                            FROM documents),
+      "WITH " + trigramCountCtes + """,
               g2 AS (SELECT doc_id,
                        unnest([array_to_string(t[i:i+1], ' ')
                                for i in generate_series(1, len(t) - 1)]) AS gram
@@ -5794,11 +5898,6 @@ object SparkEntry {
               c2 AS (SELECT doc_id, gram, count(*) AS cnt FROM g2 GROUP BY 1, 2),
               t2 AS (SELECT doc_id, max(cnt)::DOUBLE / sum(cnt) AS top_frac
                      FROM c2 GROUP BY 1),
-              g3 AS (SELECT doc_id,
-                       unnest([array_to_string(t[i:i+2], ' ')
-                               for i in generate_series(1, len(t) - 2)]) AS gram
-                     FROM toks WHERE len(t) >= 3),
-              c3 AS (SELECT doc_id, gram, count(*) AS cnt FROM g3 GROUP BY 1, 2),
               t3 AS (SELECT doc_id,
                        sum(CASE WHEN cnt > 1 THEN cnt ELSE 0 END)::DOUBLE / sum(cnt) AS dup_frac
                      FROM c3 GROUP BY 1)
@@ -6136,13 +6235,7 @@ object SparkEntry {
                   + (1.0 - least((CASE WHEN length(text) > 0 THEN n_punct / length(text)::DOUBLE ELSE 0 END) * 10.0, 1.0)) * 0.2,
                   0.0), 1.0), 6) AS quality
               FROM b),
-              toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                       FROM documents),
-              g3 AS (SELECT doc_id,
-                       unnest([array_to_string(t[i:i+2], ' ')
-                               for i in generate_series(1, len(t) - 2)]) AS gram
-                     FROM toks WHERE len(t) >= 3),
-              c3 AS (SELECT doc_id, gram, count(*) AS cnt FROM g3 GROUP BY 1, 2),
+              """ + trigramCountCtes + """,
               t3 AS (SELECT doc_id,
                        round(sum(CASE WHEN cnt > 1 THEN cnt ELSE 0 END)::DOUBLE / sum(cnt), 6) AS dup3
                      FROM c3 GROUP BY 1),
@@ -6873,23 +6966,10 @@ object SparkEntry {
       // residual predicate — the oracle runs the plain range join, so a
       // green hash proves the bucketed plan finds exactly the same pairs
       Intervals.overlapJoin(
-        ord(s, d).filter(pmod(col("o_orderkey"), lit(500)) === 0)
-          .select(col("o_orderkey"), col("o_orderdate"),
-            (col("o_orderdate") + expr("INTERVAL 30 DAY")).as("o_end")),
-        li(s, d).filter(pmod(col("l_orderkey") * 7 + col("l_linenumber"), lit(500)) === 0)
-          .select(concat_ws("-", col("l_orderkey"), col("l_linenumber"),
-              col("l_suppkey"), col("l_partkey")).as("li_id"),
-            col("l_shipdate"), (col("l_shipdate") + expr("INTERVAL 7 DAY")).as("l_end")),
+        orderIntervals(s, d, 500), lineIntervals(s, d, 500),
         col("o_orderkey"), col("o_orderdate"), col("o_end"),
         col("li_id"), col("l_shipdate"), col("l_end")),
-      """WITH a AS (SELECT o_orderkey AS a_id, o_orderdate::DATE AS a_from,
-                       (o_orderdate + INTERVAL 30 DAY)::DATE AS a_to
-                FROM orders WHERE o_orderkey % 500 = 0),
-              b AS (SELECT l_orderkey::VARCHAR || '-' || l_linenumber::VARCHAR
-                         || '-' || l_suppkey::VARCHAR || '-' || l_partkey::VARCHAR AS b_id,
-                       l_shipdate::DATE AS b_from,
-                       (l_shipdate + INTERVAL 7 DAY)::DATE AS b_to
-                    FROM lineitem WHERE (l_orderkey * 7 + l_linenumber) % 500 = 0)
+      intervalSideCtes(500) + """
               SELECT a_id, b_id,
                      greatest(a_from, b_from) AS ov_from,
                      least(a_to, b_to) AS ov_to,
@@ -6944,23 +7024,10 @@ object SparkEntry {
       // force an all-pairs join). Oracle = plain range join + the same
       // CASE chain
       Intervals.allenJoin(
-        ord(s, d).filter(pmod(col("o_orderkey"), lit(100)) === 0)
-          .select(col("o_orderkey"), col("o_orderdate"),
-            (col("o_orderdate") + expr("INTERVAL 30 DAY")).as("o_end")),
-        li(s, d).filter(pmod(col("l_orderkey") * 7 + col("l_linenumber"), lit(100)) === 0)
-          .select(concat_ws("-", col("l_orderkey"), col("l_linenumber"),
-              col("l_suppkey"), col("l_partkey")).as("li_id"),
-            col("l_shipdate"), (col("l_shipdate") + expr("INTERVAL 7 DAY")).as("l_end")),
+        orderIntervals(s, d, 100), lineIntervals(s, d, 100),
         col("o_orderkey"), col("o_orderdate"), col("o_end"),
         col("li_id"), col("l_shipdate"), col("l_end")),
-      """WITH a AS (SELECT o_orderkey AS a_id, o_orderdate::DATE AS a_from,
-                       (o_orderdate + INTERVAL 30 DAY)::DATE AS a_to
-                FROM orders WHERE o_orderkey % 100 = 0),
-              b AS (SELECT l_orderkey::VARCHAR || '-' || l_linenumber::VARCHAR
-                         || '-' || l_suppkey::VARCHAR || '-' || l_partkey::VARCHAR AS b_id,
-                       l_shipdate::DATE AS b_from,
-                       (l_shipdate + INTERVAL 7 DAY)::DATE AS b_to
-                    FROM lineitem WHERE (l_orderkey * 7 + l_linenumber) % 100 = 0)
+      intervalSideCtes(100) + """
               SELECT a_id, b_id,
                      CASE WHEN a_from = b_from AND a_to = b_to THEN 'equals'
                           WHEN a_from = b_from AND a_to < b_to THEN 'starts'
@@ -7203,28 +7270,15 @@ object SparkEntry {
       """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
               sub AS (SELECT vec_id, j, list_slice(v, j*8 + 1, j*8 + 8) AS s
                       FROM e CROSS JOIN (SELECT unnest(range(8)) AS j)),
-              seed AS (SELECT m.j, m.cell, s.s AS cen
-                       FROM (SELECT j, vec_id % 16 AS cell, min(vec_id) AS mvid
-                             FROM sub GROUP BY 1, 2) m
-                       JOIN sub s ON s.vec_id = m.mvid AND s.j = m.j),
-              a1 AS (SELECT vec_id, j, s, cell FROM (
-                       SELECT sub.vec_id, sub.j, sub.s, seed.cell,
-                              row_number() OVER (PARTITION BY sub.vec_id, sub.j
-                                ORDER BY round(list_reduce(list_transform(range(8), fi -> (sub.s[fi+1]-seed.cen[fi+1])*(sub.s[fi+1]-seed.cen[fi+1])), (facc,fx) -> facc+fx), 6) ASC,
-                                         seed.cell) AS rn
-                       FROM sub JOIN seed ON sub.j = seed.j) WHERE rn = 1),
-              m1 AS (SELECT j, cell, i, round((sum(s[i + 1]::DECIMAL(27,6)))::DOUBLE / count(*), 6) AS mc
-                     FROM a1, range(8) r(i) GROUP BY 1, 2, 3),
-              cb AS (SELECT j, cell, list(mc ORDER BY i) AS cen FROM m1 GROUP BY 1, 2),
+""" + pqCodebookCtes + s""",
               code AS (SELECT vec_id, j, cell FROM (
                        SELECT sub.vec_id, sub.j, cb.cell,
                               row_number() OVER (PARTITION BY sub.vec_id, sub.j
-                                ORDER BY round(list_reduce(list_transform(range(8), fi -> (sub.s[fi+1]-cb.cen[fi+1])*(sub.s[fi+1]-cb.cen[fi+1])), (facc,fx) -> facc+fx), 6) ASC,
+                                ORDER BY ${sqL2Sql("sub.s", "cb.cen", 8)} ASC,
                                          cb.cell) AS rn
                        FROM sub JOIN cb ON sub.j = cb.j) WHERE rn = 1),
               q AS (SELECT j, s FROM sub WHERE vec_id = 0),
-              dt AS (SELECT cb.j, cb.cell,
-                            round(list_reduce(list_transform(range(8), fi -> (q.s[fi+1]-cb.cen[fi+1])*(q.s[fi+1]-cb.cen[fi+1])), (facc,fx) -> facc+fx), 6) AS qd
+              dt AS (SELECT cb.j, cb.cell, ${sqL2Sql("q.s", "cb.cen", 8)} AS qd
                      FROM cb JOIN q ON cb.j = q.j),
               score AS (SELECT code.vec_id,
                                sum(dt.qd::DECIMAL(18,6))::DOUBLE AS adc_dist
@@ -7279,7 +7333,7 @@ object SparkEntry {
       // the grouped ADC sum
       Similarity.ivfPqTopK(emb(s, d), "vec_id", "embedding",
         queryId = 0L, nlist = 8, nprobe = 2, m = 8, ksub = 16, k = 10),
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
               cent AS (SELECT m.cell, e.v AS cen
                        FROM (SELECT vec_id % 8 AS cell, min(vec_id) AS mvid
                              FROM e GROUP BY 1) m
@@ -7287,7 +7341,7 @@ object SparkEntry {
               casg AS (SELECT vec_id, v, cell, cen FROM (
                          SELECT e.vec_id, e.v, c.cell, c.cen,
                                 row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY round(list_reduce(list_transform(range(64), fi -> (e.v[fi+1]-c.cen[fi+1])*(e.v[fi+1]-c.cen[fi+1])), (facc,fx) -> facc+fx), 6) ASC,
+                                  ORDER BY ${sqL2Sql("e.v", "c.cen", 64)} ASC,
                                            c.cell) AS rn
                          FROM e CROSS JOIN cent c) WHERE rn = 1),
               res AS (SELECT vec_id, cell AS ccell,
@@ -7295,34 +7349,21 @@ object SparkEntry {
                       FROM casg),
               sub AS (SELECT vec_id, ccell, j, list_slice(r, j*8 + 1, j*8 + 8) AS s
                       FROM res CROSS JOIN (SELECT unnest(range(8)) AS j)),
-              seed AS (SELECT m.j, m.cell, s.s AS pcen
-                       FROM (SELECT j, vec_id % 16 AS cell, min(vec_id) AS mvid
-                             FROM sub GROUP BY 1, 2) m
-                       JOIN sub s ON s.vec_id = m.mvid AND s.j = m.j),
-              a1 AS (SELECT vec_id, j, s, cell FROM (
-                       SELECT sub.vec_id, sub.j, sub.s, seed.cell,
-                              row_number() OVER (PARTITION BY sub.vec_id, sub.j
-                                ORDER BY round(list_reduce(list_transform(range(8), fi -> (sub.s[fi+1]-seed.pcen[fi+1])*(sub.s[fi+1]-seed.pcen[fi+1])), (facc,fx) -> facc+fx), 6) ASC,
-                                         seed.cell) AS rn
-                       FROM sub JOIN seed ON sub.j = seed.j) WHERE rn = 1),
-              m1 AS (SELECT j, cell, i, round((sum(s[i + 1]::DECIMAL(27,6)))::DOUBLE / count(*), 6) AS mc
-                     FROM a1, range(8) r(i) GROUP BY 1, 2, 3),
-              cb AS (SELECT j, cell, list(mc ORDER BY i) AS pcen FROM m1 GROUP BY 1, 2),
+              """ + pqCodebookCtes + s""",
               code AS (SELECT vec_id, ccell, j, cell FROM (
                          SELECT sub.vec_id, sub.ccell, sub.j, cb.cell,
                                 row_number() OVER (PARTITION BY sub.vec_id, sub.j
-                                  ORDER BY round(list_reduce(list_transform(range(8), fi -> (sub.s[fi+1]-cb.pcen[fi+1])*(sub.s[fi+1]-cb.pcen[fi+1])), (facc,fx) -> facc+fx), 6) ASC,
+                                  ORDER BY ${sqL2Sql("sub.s", "cb.cen", 8)} ASC,
                                            cb.cell) AS rn
                          FROM sub JOIN cb ON sub.j = cb.j) WHERE rn = 1),
               probes AS (SELECT c.cell AS pcell,
                                 list_transform(range(64), i -> round(q.v[i + 1] - c.cen[i + 1], 6)) AS qr
                          FROM cent c CROSS JOIN (SELECT v FROM e WHERE vec_id = 0) q
                          QUALIFY row_number() OVER (
-                           ORDER BY round(list_reduce(list_transform(range(64), fi -> (q.v[fi+1]-c.cen[fi+1])*(q.v[fi+1]-c.cen[fi+1])), (facc,fx) -> facc+fx), 6) ASC, c.cell) <= 2),
+                           ORDER BY ${sqL2Sql("q.v", "c.cen", 64)} ASC, c.cell) <= 2),
               qsub AS (SELECT pcell, j, list_slice(qr, j*8 + 1, j*8 + 8) AS qs
                        FROM probes CROSS JOIN (SELECT unnest(range(8)) AS j)),
-              dt AS (SELECT q.pcell, cb.j, cb.cell,
-                            round(list_reduce(list_transform(range(8), fi -> (q.qs[fi+1]-cb.pcen[fi+1])*(q.qs[fi+1]-cb.pcen[fi+1])), (facc,fx) -> facc+fx), 6) AS qd
+              dt AS (SELECT q.pcell, cb.j, cb.cell, ${sqL2Sql("q.qs", "cb.cen", 8)} AS qd
                      FROM cb JOIN qsub q ON cb.j = q.j),
               score AS (SELECT code.vec_id,
                                sum(dt.qd::DECIMAL(18,6))::DOUBLE AS adc_dist
@@ -7460,12 +7501,8 @@ object SparkEntry {
                        l_extendedprice::DECIMAL(12,2) AS x,
                        CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y
                 FROM lineitem),
-              r AS (SELECT x, y,
-                      row_number() OVER (ORDER BY x, l_orderkey, l_linenumber) AS rn
-                    FROM l),
-              b AS (SELECT x, y,
-                      (((rn - 1) * 10) // (SELECT count(*) FROM l) + 1)::INT AS bin
-                    FROM r),
+              b AS (SELECT x, y, (ntile(10) OVER
+                      (ORDER BY x, l_orderkey, l_linenumber))::INT AS bin FROM l),
               t AS (SELECT sum(y)::BIGINT AS tot_ev, count(*)::BIGINT AS tot_n FROM b),
               g AS (SELECT bin, count(*)::BIGINT AS n, sum(y)::BIGINT AS n_event,
                            min(x)::DOUBLE AS lo, max(x)::DOUBLE AS hi FROM b GROUP BY 1)
@@ -7667,85 +7704,10 @@ object SparkEntry {
       // planner step makes visible before paying for a re-sort
       import graft.operators.Maintenance
       val fid = expr("l_orderkey div 4096")
-      Maintenance.zoneMapPrune(li(s, d), fid, col("l_orderkey"), Seq(
-          ("ok_narrow", 1000.0, 2000.0), ("ok_mid", 1.0, 100000.0),
-          ("ok_all", 0.0, 1000000000.0)))
-        .withColumn("zone_col", lit("l_orderkey"))
-        .unionByName(
-          Maintenance.zoneMapPrune(li(s, d), fid, col("l_extendedprice"), Seq(
-              ("pr_low", 0.0, 2000.0), ("pr_mid", 10000.0, 20000.0),
-              ("pr_all", 0.0, 1000000000.0)))
-            .withColumn("zone_col", lit("l_extendedprice")))
-    },
-      """WITH r AS (SELECT l_orderkey // 4096 AS file_id,
-                       l_orderkey::DOUBLE AS v, l_extendedprice::DOUBLE AS pv
-                     FROM lineitem),
-              z1 AS (SELECT file_id, min(v) AS mn, max(v) AS mx,
-                       count(*)::BIGINT AS n_rows,
-                       sum(CASE WHEN v >= 1000 AND v <= 2000 THEN 1 ELSE 0 END)::BIGINT AS m_narrow,
-                       sum(CASE WHEN v >= 1 AND v <= 100000 THEN 1 ELSE 0 END)::BIGINT AS m_mid,
-                       sum(CASE WHEN v >= 0 AND v <= 1000000000 THEN 1 ELSE 0 END)::BIGINT AS m_all
-                     FROM r GROUP BY 1),
-              z2 AS (SELECT file_id, min(pv) AS mn, max(pv) AS mx,
-                       count(*)::BIGINT AS n_rows,
-                       sum(CASE WHEN pv >= 0 AND pv <= 2000 THEN 1 ELSE 0 END)::BIGINT AS m_low,
-                       sum(CASE WHEN pv >= 10000 AND pv <= 20000 THEN 1 ELSE 0 END)::BIGINT AS m_mid,
-                       sum(CASE WHEN pv >= 0 AND pv <= 1000000000 THEN 1 ELSE 0 END)::BIGINT AS m_all
-                     FROM r GROUP BY 1)
-              SELECT 'l_orderkey' AS zone_col, 'ok_narrow' AS predicate,
-                     count(*)::BIGINT AS n_files,
-                     sum(CASE WHEN NOT (mx >= 1000 AND mn <= 2000) THEN 1 ELSE 0 END)::BIGINT AS n_pruned,
-                     sum(n_rows)::BIGINT AS rows_total,
-                     sum(CASE WHEN mx >= 1000 AND mn <= 2000 THEN n_rows ELSE 0 END)::BIGINT AS rows_scanned,
-                     sum(m_narrow)::BIGINT AS rows_matched,
-                     round(1.0 - sum(CASE WHEN mx >= 1000 AND mn <= 2000 THEN n_rows ELSE 0 END)::DOUBLE
-                           / sum(n_rows), 6) AS skip_frac
-              FROM z1
-              UNION ALL
-              SELECT 'l_orderkey', 'ok_mid', count(*)::BIGINT,
-                     sum(CASE WHEN NOT (mx >= 1 AND mn <= 100000) THEN 1 ELSE 0 END)::BIGINT,
-                     sum(n_rows)::BIGINT,
-                     sum(CASE WHEN mx >= 1 AND mn <= 100000 THEN n_rows ELSE 0 END)::BIGINT,
-                     sum(m_mid)::BIGINT,
-                     round(1.0 - sum(CASE WHEN mx >= 1 AND mn <= 100000 THEN n_rows ELSE 0 END)::DOUBLE
-                           / sum(n_rows), 6)
-              FROM z1
-              UNION ALL
-              SELECT 'l_orderkey', 'ok_all', count(*)::BIGINT,
-                     sum(CASE WHEN NOT (mx >= 0 AND mn <= 1000000000) THEN 1 ELSE 0 END)::BIGINT,
-                     sum(n_rows)::BIGINT,
-                     sum(CASE WHEN mx >= 0 AND mn <= 1000000000 THEN n_rows ELSE 0 END)::BIGINT,
-                     sum(m_all)::BIGINT,
-                     round(1.0 - sum(CASE WHEN mx >= 0 AND mn <= 1000000000 THEN n_rows ELSE 0 END)::DOUBLE
-                           / sum(n_rows), 6)
-              FROM z1
-              UNION ALL
-              SELECT 'l_extendedprice', 'pr_low', count(*)::BIGINT,
-                     sum(CASE WHEN NOT (mx >= 0 AND mn <= 2000) THEN 1 ELSE 0 END)::BIGINT,
-                     sum(n_rows)::BIGINT,
-                     sum(CASE WHEN mx >= 0 AND mn <= 2000 THEN n_rows ELSE 0 END)::BIGINT,
-                     sum(m_low)::BIGINT,
-                     round(1.0 - sum(CASE WHEN mx >= 0 AND mn <= 2000 THEN n_rows ELSE 0 END)::DOUBLE
-                           / sum(n_rows), 6)
-              FROM z2
-              UNION ALL
-              SELECT 'l_extendedprice', 'pr_mid', count(*)::BIGINT,
-                     sum(CASE WHEN NOT (mx >= 10000 AND mn <= 20000) THEN 1 ELSE 0 END)::BIGINT,
-                     sum(n_rows)::BIGINT,
-                     sum(CASE WHEN mx >= 10000 AND mn <= 20000 THEN n_rows ELSE 0 END)::BIGINT,
-                     sum(m_mid)::BIGINT,
-                     round(1.0 - sum(CASE WHEN mx >= 10000 AND mn <= 20000 THEN n_rows ELSE 0 END)::DOUBLE
-                           / sum(n_rows), 6)
-              FROM z2
-              UNION ALL
-              SELECT 'l_extendedprice', 'pr_all', count(*)::BIGINT,
-                     sum(CASE WHEN NOT (mx >= 0 AND mn <= 1000000000) THEN 1 ELSE 0 END)::BIGINT,
-                     sum(n_rows)::BIGINT,
-                     sum(CASE WHEN mx >= 0 AND mn <= 1000000000 THEN n_rows ELSE 0 END)::BIGINT,
-                     sum(m_all)::BIGINT,
-                     round(1.0 - sum(CASE WHEN mx >= 0 AND mn <= 1000000000 THEN n_rows ELSE 0 END)::DOUBLE
-                           / sum(n_rows), 6)
-              FROM z2"""),
+      zoneProbes.map { case (c, preds) =>
+        Maintenance.zoneMapPrune(li(s, d), fid, col(c), preds).withColumn("zone_col", lit(c))
+      }.reduce(_ unionByName _)
+    }, zoneMapOracle),
 
     Q("s21_mv_rewrite", (s, d) => {
       // materialized-view matching (plans/MvRewrite.scala): build a
@@ -8373,11 +8335,8 @@ object SparkEntry {
       """WITH l AS (SELECT l_orderkey, l_linenumber, l_extendedprice AS x,
                        l_orderkey % 2 AS half FROM lineitem),
               tr AS (SELECT x, l_orderkey, l_linenumber FROM l WHERE half = 0),
-              r AS (SELECT x, row_number() OVER (ORDER BY x, l_orderkey, l_linenumber) AS rn
-                    FROM tr),
-              b AS (SELECT x,
-                      (((rn - 1) * 10) // (SELECT count(*) FROM tr) + 1)::INT AS bin
-                    FROM r),
+              b AS (SELECT x, (ntile(10) OVER
+                      (ORDER BY x, l_orderkey, l_linenumber))::INT AS bin FROM tr),
               e AS (SELECT bin, max(x) AS mx FROM b WHERE bin <= 9 GROUP BY 1),
               a AS (SELECT half,
                       1 + (SELECT count(*) FROM e WHERE e.mx < l.x) AS bin
@@ -9487,12 +9446,7 @@ object SparkEntry {
       graft.operators.Components.assortativity(
         coSupplyPairs(s, d),
         "sa", "sb"),
-      """WITH li AS (SELECT l_orderkey, l_suppkey FROM lineitem
-                          WHERE l_orderkey % 20 = 0),
-              e0 AS (SELECT DISTINCT least(a.l_suppkey, b.l_suppkey) AS u,
-                            greatest(a.l_suppkey, b.l_suppkey) AS v
-                     FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-                                        AND a.l_suppkey < b.l_suppkey),
+      coSupplyEdgeCtes + """,
               ee AS (SELECT u AS src, v AS dst FROM e0
                      UNION ALL SELECT v, u FROM e0),
               deg AS (SELECT src AS x, count(*)::BIGINT AS d FROM ee GROUP BY 1),
@@ -9522,22 +9476,7 @@ object SparkEntry {
       graft.operators.Components.clusteringCoefficient(
         coSupplyPairs(s, d),
         "sa", "sb"),
-      """WITH li AS (SELECT l_orderkey, l_suppkey FROM lineitem
-                          WHERE l_orderkey % 20 = 0),
-              e0 AS MATERIALIZED (
-                SELECT DISTINCT least(a.l_suppkey, b.l_suppkey) AS u,
-                       greatest(a.l_suppkey, b.l_suppkey) AS v
-                FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-                                   AND a.l_suppkey < b.l_suppkey),
-              deg AS MATERIALIZED (SELECT x, count(*)::BIGINT AS d
-                FROM (SELECT u AS x FROM e0 UNION ALL SELECT v AS x FROM e0) z
-                GROUP BY 1),
-              o AS (SELECT CASE WHEN (du.d, u) < (dv.d, v) THEN u ELSE v END AS s,
-                           CASE WHEN (du.d, u) < (dv.d, v) THEN v ELSE u END AS t
-                    FROM e0 JOIN deg du ON du.x = u JOIN deg dv ON dv.x = v),
-              w AS (SELECT a.s AS x, a.t AS y, b.t AS z
-                    FROM o a JOIN o b ON a.t = b.s),
-              tri AS (SELECT x, y, z FROM w JOIN o ON o.s = w.x AND o.t = w.z),
+      coSupplyTriangleCtes + """,
               pv AS (SELECT vertex AS x, count(*)::BIGINT AS t
                      FROM (SELECT unnest([x, y, z]) AS vertex FROM tri) z
                      GROUP BY 1),
@@ -9870,15 +9809,7 @@ object SparkEntry {
         "vec_id", "embedding", "vec_id", "embedding", k = 5)
     },
       """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
-""" + ivfProbeCtes + """,
-              ivf AS (SELECT p.query_id, a.vec_id AS neighbor_id,
-                             round(list_cosine_similarity(p.qv, a.v), 6) AS cos,
-                             (row_number() OVER (PARTITION BY p.query_id
-                                ORDER BY round(list_cosine_similarity(p.qv, a.v), 6) DESC,
-                                         a.vec_id))::INT AS rank
-                      FROM asg a JOIN probes p USING (cell)
-                      WHERE p.query_id <> a.vec_id
-                      QUALIFY rank <= 20),
+""" + ivfProbeCtes + ",\nivf AS (" + ivfProbeTopK(20) + """),
               filt AS (SELECT query_id, neighbor_id FROM (
                          SELECT i.query_id, i.neighbor_id,
                                 row_number() OVER (PARTITION BY i.query_id

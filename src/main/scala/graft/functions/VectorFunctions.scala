@@ -10,9 +10,11 @@ import org.apache.spark.sql.functions._
   * Element order is preserved by `zip_with`+`aggregate` (sequential fold),
   * so results are bit-deterministic for a given input — important for
   * oracle parity and for reproducible ANN buckets at scale. [[dot]],
-  * [[norm2]] and [[cosine]] are the composable references; the cosine,
-  * LSH and projection helpers call the bit-identical native kernels
-  * that `graft.sql.GraftExtensions` registers.
+  * [[norm2]] and [[cosine]] are the composable references, run as
+  * written (no optimizer rule swaps them for a kernel); the cosine, LSH
+  * and projection helpers call the bit-identical native kernels that
+  * `graft.sql.GraftExtensions` registers, and `VectorFunctionsSpec`
+  * checks the two agree bit for bit.
   */
 object VectorFunctions {
 

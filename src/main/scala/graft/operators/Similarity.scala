@@ -90,19 +90,12 @@ object Similarity {
       queries: DataFrame, corpus: DataFrame,
       qId: String, qVec: String, cId: String, cVec: String,
       k: Int, dim: Int, nPlanes: Int = 8): DataFrame = {
-    val q = queries.select(col(qId).as("query_id"),
-        VectorFunctions.toDoubleArray(col(qVec)).as("qv"))
-      .withColumn("bucket", VectorFunctions.lshBucket(col("qv"), dim, nPlanes))
-      .withColumn("probe", explode(array(
-        col("bucket") +: (0 until nPlanes).map(p =>
-          col("bucket").bitwiseXOR(lit(1 << p))): _*)))
-      .select(col("query_id"), col("qv"), col("probe").as("bucket"))
-    val c = corpus.select(col(cId).as("neighbor_id"),
-        VectorFunctions.toDoubleArray(col(cVec)).as("cv"))
-      .withColumn("bucket", VectorFunctions.lshBucket(col("cv"), dim, nPlanes))
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
+    val scored = lshCandidates(queries, corpus, qId, qVec, cId, cVec, dim, nPlanes) { q =>
+      q.withColumn("probe", explode(array(
+          col("bucket") +: (0 until nPlanes).map(p =>
+            col("bucket").bitwiseXOR(lit(1 << p))): _*)))
+        .select(col("query_id"), col("qv"), col("probe").as("bucket"))
+    }.select(col("query_id"), col("neighbor_id"),
         round(VectorFunctions.cosineNative(col("qv"), col("cv")), 6).as("cos"))
       .distinct() // a pair can match via several probes; score is identical
     rankNeighbors(scored, k)
@@ -115,16 +108,28 @@ object Similarity {
       queries: DataFrame, corpus: DataFrame,
       qId: String, qVec: String, cId: String, cVec: String,
       k: Int, dim: Int, nPlanes: Int = 8): DataFrame = {
+    val scored = lshCandidates(queries, corpus, qId, qVec, cId, cVec, dim, nPlanes)(identity)
+      .withColumn("cos", round(VectorFunctions.cosineNative(col("qv"), col("cv")), 6))
+    rankNeighbors(scored, k)
+  }
+
+  /** The LSH candidate pairs: query (`query_id`, `qv`) and corpus
+    * (`neighbor_id`, `cv`) rows bucketed by the same hyperplanes, the
+    * corpus bucketed once and equi-joined to the broadcast query side on
+    * the bucket id, self-pairs dropped. `probes` maps the query rows
+    * (`query_id`, `qv`, `bucket`) to the buckets each one probes. */
+  private def lshCandidates(
+      queries: DataFrame, corpus: DataFrame,
+      qId: String, qVec: String, cId: String, cVec: String,
+      dim: Int, nPlanes: Int)(probes: DataFrame => DataFrame): DataFrame = {
     val q = queries.select(col(qId).as("query_id"),
         VectorFunctions.toDoubleArray(col(qVec)).as("qv"))
       .withColumn("bucket", VectorFunctions.lshBucket(col("qv"), dim, nPlanes))
     val c = corpus.select(col(cId).as("neighbor_id"),
         VectorFunctions.toDoubleArray(col(cVec)).as("cv"))
       .withColumn("bucket", VectorFunctions.lshBucket(col("cv"), dim, nPlanes))
-    val scored = c.join(broadcast(q), Seq("bucket"))
+    c.join(broadcast(probes(q)), Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", round(VectorFunctions.cosineNative(col("qv"), col("cv")), 6))
-    rankNeighbors(scored, k)
   }
 
   /** Late-interaction retrieval (MaxSim, ColBERT-style — Khattab &

@@ -134,15 +134,23 @@ object Tokenize {
       .groupBy(col("term").as("word")).agg(sum(col("tf")).as("freq"))
       .filter(length(col("word")) <= maxWordLen)
 
-  private def unigramInitVocab(
-      words: DataFrame, maxPieceLen: Int, vocabSize: Int): DataFrame = {
-    val subs = words.select(col("freq"), explode(flatten(
+  /** Total word frequency per piece over every substring (up to
+    * `maxPieceLen` chars) of the distinct-word frame; `piece(st, sub)`
+    * turns the substring that starts at 1-based char `st` into its
+    * vocabulary piece. */
+  private def pieceFreqs(words: DataFrame, maxPieceLen: Int)(
+      piece: (Column, Column) => Column): DataFrame =
+    words.select(col("freq"), explode(flatten(
       transform(sequence(lit(1), length(col("word"))), st =>
         transform(
           sequence(lit(1), least(lit(maxPieceLen),
             length(col("word")) - st + 1)),
-          ln => col("word").substr(st, ln))))).as("piece"))
+          ln => piece(st, col("word").substr(st, ln)))))).as("piece"))
       .groupBy(col("piece")).agg(sum(col("freq")).as("pfreq"))
+
+  private def unigramInitVocab(
+      words: DataFrame, maxPieceLen: Int, vocabSize: Int): DataFrame = {
+    val subs = pieceFreqs(words, maxPieceLen)((_, sub) => sub)
     val singles = subs.filter(length(col("piece")) === 1)
     val multi = subs.filter(length(col("piece")) > 1)
       .orderBy(col("pfreq").desc, col("piece").asc).limit(vocabSize)
@@ -339,14 +347,8 @@ object Tokenize {
     * 3 (`##c` continuation). */
   private def wordPieceVocab(
       words: DataFrame, maxPieceLen: Int, vocabSize: Int): DataFrame = {
-    val subs = words.select(col("freq"), explode(flatten(
-      transform(sequence(lit(1), length(col("word"))), st =>
-        transform(
-          sequence(lit(1), least(lit(maxPieceLen),
-            length(col("word")) - st + 1)),
-          ln => when(st === 1, col("word").substr(st, ln))
-            .otherwise(concat(lit("##"), col("word").substr(st, ln))))))).as("piece"))
-      .groupBy(col("piece")).agg(sum(col("freq")).as("pfreq"))
+    val subs = pieceFreqs(words, maxPieceLen)((st, sub) =>
+      when(st === 1, sub).otherwise(concat(lit("##"), sub)))
     val isSingle = length(col("piece")) === 1 ||
       (col("piece").startsWith("##") && length(col("piece")) === 3)
     val singles = subs.filter(isSingle)

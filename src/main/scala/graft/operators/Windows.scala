@@ -42,20 +42,9 @@ object Windows {
   /** Exact global row number over a total order WITHOUT the
     * single-partition sort `Window.orderBy` (no partition spec) would
     * run — the shape that funnels the whole table through ONE task and
-    * dies at cluster scale.
-    *
-    * Method: (1) compute ~numShufflePartitions split points of the
-    * LEADING sort column once, driver-side, via approxQuantile —
-    * approximate is fine, the edges only need to be order-compatible
-    * and FIXED (every later pass is a pure function of data + these
-    * literals, so the count pass and the rank pass always agree; a
-    * range-exchange formulation would NOT have this property, because
-    * its reservoir sampling reseeds per job). (2) assign each row its
-    * bucket by a pure projection (count of edges below the key).
-    * (3) count rows per bucket — a metadata-sized driver read, the
-    * same per-partition count `RDD.zipWithIndex` makes. (4) rank =
-    * per-bucket row_number (one hash shuffle on the bucket id) + the
-    * bucket's cumulative offset. Every data-bearing stage is linear.
+    * dies at cluster scale. Over a total order a row number is the
+    * running count of a constant 1, so this is [[globalRunningSums]]'
+    * bucket machinery (see [[globalPrefix]]) summing `1L`.
     *
     * `leadKey` must be numeric and the first sort key; `tiebreaks`
     * must make the order total (rows equal on the full key would get
@@ -66,48 +55,77 @@ object Windows {
   def globalRowNumber(
       df: DataFrame, leadKey: String, tiebreaks: Seq[Column],
       outName: String): DataFrame =
-    withGlobalRank(df, leadKey, tiebreaks)((b, rank, _) => b.withColumn(outName, rank))
+    globalPrefix(df, leadKey, tiebreaks, Seq(lit(1L) -> outName))._1
 
-  /** ntile(k)-equivalent equi-depth binning over a total order, computed
-    * scalably via [[globalRowNumber]]'s machinery: bin(r) = (r-1)*k / N
-    * + 1 (integral division) reproduces ntile's remainder-first
-    * distribution exactly — bucket sizes differ by at most one, larger
-    * buckets first — without ntile's single-partition global window.
-    * Output column is INT like ntile's. */
+  /** ntile(k) over a total order, without ntile's single-partition
+    * global window: the [[globalRowNumber]] r of [[globalPrefix]], cut
+    * as ntile cuts N rows (N = the row count [[globalPrefix]] returns as
+    * the grand total, floored at 1) — the first N % k bins hold
+    * N / k + 1 rows, the rest N / k. Output column is INT like ntile's. */
   def equiDepthBin(
       df: DataFrame, k: Int, leadKey: String, tiebreaks: Seq[Column],
-      outName: String): DataFrame =
-    withGlobalRank(df, leadKey, tiebreaks) { (b, rank, total) =>
-      // integral `div`, not `/`: Spark's `/` is double division, whose
-      // rounding could cross an integer boundary for huge rank*k products
-      b.withColumn("__gr_rn", rank).withColumn("__gr_tt", total)
-        .withColumn(outName,
-          expr(s"CAST(((__gr_rn - 1L) * ${k}L) div __gr_tt AS INT) + 1"))
-        .drop("__gr_rn", "__gr_tt")
-    }
+      outName: String): DataFrame = {
+    val (ranked, totals) = globalPrefix(df, leadKey, tiebreaks, Seq(lit(1L) -> outName))
+    val n = math.max(totals.head, 1L)
+    val (q, rem) = (n / k, n % k)
+    val big = rem * (q + 1) // rows in the larger bins
+    // integral `div`, not `/`: Spark's `/` is double division
+    ranked.withColumn(outName, expr(
+      s"CAST(CASE WHEN `$outName` <= ${big}L THEN (`$outName` - 1L) div ${q + 1}L " +
+        s"ELSE ${rem}L + (`$outName` - 1L - ${big}L) div ${math.max(q, 1L)}L END AS INT) + 1"))
+  }
 
-  /** Exact global running sums over a total order, same two-pass bucket
-    * machinery as [[globalRowNumber]] (approxQuantile edges → per-bucket
-    * partial-sum offsets computed in-plan over the bucket-sized frame,
-    * broadcast back → within-bucket window + offset) — the scalable form of
-    * `sum(v) OVER (ORDER BY key)`, which as written funnels the table
-    * through ONE task. Each `(valueCol, outName)` pair gets its own
-    * cumulative column in the same single pass; values must be LONG
-    * (exact integer prefix sums — engine-replayable).
+  /** Exact global running sums over a total order (see [[globalPrefix]])
+    * — the scalable form of `sum(v) OVER (ORDER BY key)`, which as
+    * written funnels the table through ONE task. Each `(valueCol,
+    * outName)` pair gets its own cumulative column in the same single
+    * pass; values must be LONG (exact integer prefix sums —
+    * engine-replayable).
     *
     * `leadKey` must be numeric; `tiebreaks` must make the order total
     * (the prefix sum at a row is order-dependent across ties). */
   def globalRunningSums(
       df: DataFrame, leadKey: String, tiebreaks: Seq[Column],
-      values: Seq[(Column, String)]): DataFrame = {
+      values: Seq[(Column, String)]): DataFrame =
+    globalPrefix(df, leadKey, tiebreaks, values)._1
+
+  /** The one global-order pass behind [[globalRowNumber]],
+    * [[equiDepthBin]] and [[globalRunningSums]]: `df` with a prefix-sum
+    * column per `(value, outName)` pair, plus each value's grand total.
+    *
+    * Method: (1) compute ~numShufflePartitions split points of the
+    * LEADING sort column once, driver-side, via approxQuantile —
+    * approximate is fine, the edges only need to be order-compatible
+    * and FIXED (every later pass is a pure function of data + these
+    * literals, so the partials pass and the prefix pass always agree; a
+    * range-exchange formulation would NOT have this property, because
+    * its reservoir sampling reseeds per job). (2) assign each row its
+    * bucket by a pure projection (count of edges below the key).
+    * (3) sum each value per bucket — a metadata-sized driver read.
+    * (4) prefix = within-bucket running sum (one hash shuffle on the
+    * bucket id) + the bucket's cumulative offset. Every data-bearing
+    * stage is linear. */
+  private def globalPrefix(
+      df: DataFrame, leadKey: String, tiebreaks: Seq[Column],
+      values: Seq[(Column, String)]): (DataFrame, Seq[Long]) = {
     require(values.nonEmpty, "need at least one value column")
-    // one materialized scan feeds all three actions (see withGlobalRank)
+    // ONE materialized scan feeds all three actions (quantile probe,
+    // bucket partials, the prefix window itself). NOT fanned out
+    // (Tables.fanOut) before materializing: measured at sf0.1, the extra
+    // exchange lost more than the added parallelism won on every
+    // consumer except a27 (a17 1.0→1.6 s, a37 1.9→2.5 s,
+    // x_vocab_coverage 0.5→0.8 s) — these inputs are either already
+    // aggregated (post-shuffle) or feed one cheap pass. Callers with
+    // provably hash-heavy single-task inputs fan out at the call site
+    // instead (a24_woe_binning does).
     val m = graft.Mat(df)
     val n = m.sparkSession.sessionState.conf.numShufflePartitions
     val probes = (1 until n).map(_.toDouble / n).toArray
     val edges =
       if (probes.isEmpty) Array.empty[Double]
       else m.stat.approxQuantile(leadKey, probes, 0.001).distinct.sorted
+    // bucket = #edges strictly below the key: ties on an edge value all
+    // land in the same bucket, null keys land in bucket 0 (nulls-first)
     val bucketCol =
       if (edges.isEmpty) lit(0)
       else size(filter(typedLit(edges), e => e < col(leadKey).cast("double")))
@@ -130,53 +148,13 @@ object Windows {
     val w = Window.partitionBy(col("__gs_b"))
       .orderBy((col(leadKey) +: tiebreaks): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    named.zipWithIndex.foldLeft(bucketed) { case (acc, ((v, out, _), i)) =>
+    val prefixed = named.zipWithIndex.foldLeft(bucketed) { case (acc, ((v, out, _), i)) =>
       val offCol =
         if (offsets.isEmpty) lit(0L)
         else element_at(typedLit(offsets.map { case (b, o) => b -> o(i) }), col("__gs_b"))
       acc.withColumn(out, sum(v.cast("long")).over(w) + offCol)
     }.drop("__gs_b")
-  }
-
-  private def withGlobalRank(df: DataFrame, leadKey: String, tiebreaks: Seq[Column])(
-      build: (DataFrame, Column, Column) => DataFrame): DataFrame = {
-    // ONE materialized scan feeds all three actions (quantile probe,
-    // bucket counts, the ranked window itself) — riders like WOE
-    // binning/MAD outliers used to re-derive this frame's lineage 3x.
-    // NOT fanned out (Tables.fanOut) before materializing: measured at
-    // sf0.1, the extra exchange lost more than the added parallelism won
-    // on every globalRank/RunningSums consumer except a27 (a17 1.0→1.6 s,
-    // a37 1.9→2.5 s, x_vocab_coverage 0.5→0.8 s) — these inputs are
-    // either already aggregated (post-shuffle) or feed one cheap pass.
-    // Callers with provably hash-heavy single-task inputs fan out at the
-    // call site instead (a24_woe_binning does).
-    val m = graft.Mat(df)
-    val n = m.sparkSession.sessionState.conf.numShufflePartitions
-    val probes = (1 until n).map(_.toDouble / n).toArray
-    val edges =
-      if (probes.isEmpty) Array.empty[Double]
-      else m.stat.approxQuantile(leadKey, probes, 0.001).distinct.sorted
-    // bucket = #edges strictly below the key: ties on an edge value all
-    // land in the same bucket, null keys land in bucket 0 (nulls-first)
-    val bucketCol =
-      if (edges.isEmpty) lit(0)
-      else size(filter(typedLit(edges), e => e < col(leadKey).cast("double")))
-    val bucketed = m.withColumn("__gr_b", bucketCol)
-    // metadata-sized driver read off the SAME materialized blocks: one
-    // (bucket, count) row per edge gap; literal offsets keep the final
-    // plan a pure projection (no extra join in the hot job)
-    val counts = bucketed.groupBy(col("__gr_b")).agg(count(lit(1)).as("c"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    var acc = 0L
-    val offsets = counts.map { case (b, c) => val o = acc; acc += c; (b, o) }.toMap
-    val offCol =
-      if (offsets.isEmpty) lit(0L)
-      else element_at(typedLit(offsets), col("__gr_b"))
-    val sortCols = col(leadKey) +: tiebreaks
-    val w = Window.partitionBy(col("__gr_b")).orderBy(sortCols: _*)
-    build(bucketed, row_number().over(w).cast("long") + offCol,
-      lit(math.max(acc, 1L)))
-      .drop("__gr_b")
+    (prefixed, accs.toSeq)
   }
 
   /** Display-name sequencing (W6,

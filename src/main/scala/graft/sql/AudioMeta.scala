@@ -1,9 +1,7 @@
 package graft.sql
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -118,13 +116,11 @@ object AudioMetaKernel {
 /** `audio_meta(binary)` -> struct(format string, channels int,
   * sample_rate int, bits_per_sample int). Codegen'd call into the
   * row-local [[AudioMetaKernel]]; null payload -> null struct. */
-case class AudioMeta(child: Expression) extends UnaryExpression {
+case class AudioMeta(child: Expression) extends MediaMeta {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"audio_meta expects binary, got ${other.simpleString}")
-  }
+  override protected def parse(bytes: Array[Byte]): InternalRow = AudioMetaKernel.parse(bytes)
+
+  override protected def parseCall: String = "graft.sql.AudioMetaKernel.parse"
 
   override def dataType: DataType = StructType(Seq(
     StructField("format", StringType, nullable = false),
@@ -133,14 +129,6 @@ case class AudioMeta(child: Expression) extends UnaryExpression {
     StructField("bits_per_sample", IntegerType, nullable = true)))
 
   override def prettyName: String = "audio_meta"
-
-  override protected def nullSafeEval(b: Any): Any =
-    AudioMetaKernel.parse(b.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b => {
-      s"${ev.value} = graft.sql.AudioMetaKernel.parse($b);"
-    })
 
   override protected def withNewChildInternal(newChild: Expression): AudioMeta =
     copy(child = newChild)

@@ -1,27 +1,17 @@
 package graft.sql
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** The signature shared by the binary `array<double>` kernels
-  * ([[CosineSimilarity]], [[DotProduct]]): two `array<double>` inputs,
-  * checked at analysis with the kernel's name in the error, and a double
-  * result. */
-private[sql] trait DoubleArrayPair extends BinaryExpression {
+  * ([[CosineSimilarity]], [[DotProduct]]): two `array<double>` inputs
+  * (either element nullability), checked at analysis by Spark's
+  * [[ExpectsInputTypes]], and a double result. */
+private[sql] trait DoubleArrayPair extends BinaryExpression with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (array<double>, array<double>), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType), ArrayType(DoubleType))
 
   override def dataType: DataType = DoubleType
 }
@@ -37,7 +27,9 @@ private[sql] trait DoubleArrayPair extends BinaryExpression {
   *
   * Accumulation order matches the HOF form (independent sequential sums),
   * so results are bit-identical to the composable version and to the
-  * DuckDB oracle.
+  * DuckDB oracle. Engine paths call `cosine_sim` directly; nothing
+  * rewrites the HOF form into this kernel, which stays the reference
+  * `VectorFunctionsSpec` compares it against.
   *
   * Semantics: zero norm on either side -> 0.0; arrays are assumed
   * equal-length with non-null elements (embedding contract); on length

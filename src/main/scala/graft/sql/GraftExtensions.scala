@@ -15,8 +15,6 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, 
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // composable HOF cosine -> native codegen'd expression (bit-exact)
-    ext.injectOptimizerRule(_ => RewriteHofCosine)
     // aggregate-over-base -> aggregate-over-summary MV matching (no-op
     // until an MvDef is registered in graft.plans.MvRegistry)
     ext.injectOptimizerRule(_ => graft.plans.MvRewrite)

@@ -1,8 +1,7 @@
 package graft.sql
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
@@ -129,16 +128,33 @@ object ImageMetaKernel {
   }
 }
 
+/** The shape shared by the media header kernels ([[AudioMeta]],
+  * [[ImageMeta]], [[VideoMeta]]): one `binary` input, checked at analysis
+  * by Spark's [[ExpectsInputTypes]], and a codegen'd call into the
+  * row-local kernel `parse` (`parseCall` is its static name for
+  * generated code); null payload -> null struct. */
+private[sql] trait MediaMeta extends UnaryExpression with ExpectsInputTypes {
+
+  protected def parse(bytes: Array[Byte]): InternalRow
+
+  protected def parseCall: String
+
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
+
+  override protected def nullSafeEval(b: Any): Any = parse(b.asInstanceOf[Array[Byte]])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, b => s"${ev.value} = $parseCall($b);")
+}
+
 /** `image_meta(binary)` -> struct(format string, width int, height int).
   * Codegen'd call into the row-local [[ImageMetaKernel]]; null payload ->
   * null struct. */
-case class ImageMeta(child: Expression) extends UnaryExpression {
+case class ImageMeta(child: Expression) extends MediaMeta {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"image_meta expects binary, got ${other.simpleString}")
-  }
+  override protected def parse(bytes: Array[Byte]): InternalRow = ImageMetaKernel.parse(bytes)
+
+  override protected def parseCall: String = "graft.sql.ImageMetaKernel.parse"
 
   override def dataType: DataType = StructType(Seq(
     StructField("format", StringType, nullable = false),
@@ -146,14 +162,6 @@ case class ImageMeta(child: Expression) extends UnaryExpression {
     StructField("height", IntegerType, nullable = true)))
 
   override def prettyName: String = "image_meta"
-
-  override protected def nullSafeEval(b: Any): Any =
-    ImageMetaKernel.parse(b.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b => {
-      s"${ev.value} = graft.sql.ImageMetaKernel.parse($b);"
-    })
 
   override protected def withNewChildInternal(newChild: Expression): ImageMeta =
     copy(child = newChild)

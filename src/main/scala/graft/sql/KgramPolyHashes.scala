@@ -1,7 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
@@ -68,14 +67,9 @@ object PolyHash {
   * (fingerprint identity), not a cryptographic digest.
   */
 case class KgramPolyHashes(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends BinaryExpression with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, IntegerType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"kgram_poly_hashes expects (string, int), got (${l.simpleString}, ${r.simpleString})")
-    }
+  override def inputTypes: Seq[DataType] = Seq(StringType, IntegerType)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 

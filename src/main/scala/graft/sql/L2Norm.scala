@@ -1,7 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -11,13 +10,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * normalization and magnitude filters. Sequential accumulation (index
   * 0..n-1), bit-identical to `sqrt(aggregate(...))` HOF folds and to an
   * oracle summing in the same order. */
-case class L2Norm(child: Expression) extends UnaryExpression {
+case class L2Norm(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"l2_norm expects array<double>, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
 
   override def dataType: DataType = DoubleType
 

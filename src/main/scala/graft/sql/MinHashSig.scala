@@ -1,7 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
@@ -66,15 +65,9 @@ object MinHashKernel {
 
 /** `minhash_sig(text, n, num_hashes)` -> `array<long>`. */
 case class MinHashSig(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression {
+  extends TernaryExpression with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (StringType, IntegerType, IntegerType) => TypeCheckResult.TypeCheckSuccess
-      case (a, b, c) => TypeCheckResult.TypeCheckFailure(
-        s"minhash_sig expects (string, int, int), got " +
-          s"(${a.simpleString}, ${b.simpleString}, ${c.simpleString})")
-    }
+  override def inputTypes: Seq[DataType] = Seq(StringType, IntegerType, IntegerType)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 

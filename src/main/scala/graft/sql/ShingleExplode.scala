@@ -1,10 +1,9 @@
 package graft.sql
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Generator}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `shingle_explode(text, n)` — native Generator emitting one row per
@@ -27,16 +26,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * that matters.
   */
 case class ShingleExplode(text: Expression, n: Expression)
-  extends Generator with CodegenFallback {
+  extends Generator with ExpectsInputTypes with CodegenFallback {
 
   override def children: Seq[Expression] = Seq(text, n)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (text.dataType, n.dataType) match {
-      case (StringType, IntegerType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"shingle_explode expects (string, int), got (${l.simpleString}, ${r.simpleString})")
-    }
+  override def inputTypes: Seq[DataType] = Seq(StringType, IntegerType)
 
   override def elementSchema: StructType =
     StructType(StructField("sh", StringType, nullable = false) :: Nil)

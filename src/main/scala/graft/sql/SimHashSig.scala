@@ -1,7 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -51,14 +50,9 @@ object SimHashKernel {
 
 /** `simhash_sig(text, bits)` -> `long`. */
 case class SimHashSig(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends BinaryExpression with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, IntegerType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"simhash_sig expects (string, int), got (${l.simpleString}, ${r.simpleString})")
-    }
+  override def inputTypes: Seq[DataType] = Seq(StringType, IntegerType)
 
   override def dataType: DataType = LongType
 

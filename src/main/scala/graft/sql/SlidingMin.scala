@@ -1,7 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
@@ -37,14 +36,9 @@ object SlidingMinKernel {
   * final dedupe as the only aggregation.
   */
 case class SlidingMin(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends BinaryExpression with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), IntegerType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"sliding_min expects (array<bigint>, int), got (${l.simpleString}, ${r.simpleString})")
-    }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType), IntegerType)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 

@@ -1,9 +1,7 @@
 package graft.sql
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -147,13 +145,11 @@ object VideoMetaKernel {
 /** `video_meta(binary)` -> struct(format string, width int, height int,
   * duration_ms long). Codegen'd call into the row-local
   * [[VideoMetaKernel]]; null payload -> null struct. */
-case class VideoMeta(child: Expression) extends UnaryExpression {
+case class VideoMeta(child: Expression) extends MediaMeta {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"video_meta expects binary, got ${other.simpleString}")
-  }
+  override protected def parse(bytes: Array[Byte]): InternalRow = VideoMetaKernel.parse(bytes)
+
+  override protected def parseCall: String = "graft.sql.VideoMetaKernel.parse"
 
   override def dataType: DataType = StructType(Seq(
     StructField("format", StringType, nullable = false),
@@ -162,14 +158,6 @@ case class VideoMeta(child: Expression) extends UnaryExpression {
     StructField("duration_ms", LongType, nullable = true)))
 
   override def prettyName: String = "video_meta"
-
-  override protected def nullSafeEval(b: Any): Any =
-    VideoMetaKernel.parse(b.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b => {
-      s"${ev.value} = graft.sql.VideoMetaKernel.parse($b);"
-    })
 
   override protected def withNewChildInternal(newChild: Expression): VideoMeta =
     copy(child = newChild)

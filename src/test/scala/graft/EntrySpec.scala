@@ -105,14 +105,14 @@ class EntrySpec extends SparkSpec {
     assert(empty.getMessage.contains("names no query"), empty.getMessage)
   }
 
-  test("src/main repeats no run of 8 lines") {
+  test("src/main repeats no run of 6 lines") {
     // each shared query input, operator block or oracle fragment has one
-    // definition: a run of 8 consecutive lines (each trimmed, >= 200
+    // definition: a run of 6 consecutive lines (each trimmed, >= 200
     // characters in all) that appears twice in the tree is a copy to fold
     // into a helper. `package` and `import` lines cannot be folded, so
     // they are left out before the windows are formed.
     val (repo, files) = mainSources()
-    val window = 8
+    val window = 6
     val seen = scala.collection.mutable.LinkedHashMap[Seq[String], List[String]]()
     for (f <- files) {
       val lines = Files.readAllLines(f).asScala.map(_.trim).zipWithIndex

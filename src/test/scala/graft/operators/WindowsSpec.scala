@@ -52,16 +52,54 @@ class WindowsSpec extends SparkSpec {
     assert(got == want)
   }
 
+  // 500 rows over 4 partitions: duplicate lead keys (tiebreak on id), one
+  // null lead key and one hot lead value (k = 7 on every third row)
+  private def orderFrames = {
+    val rows = (1 to 500).map { i =>
+      (if (i == 250) None else if (i % 3 == 0) Some(7) else Some((i * 7919) % 50), i.toLong)
+    }
+    val df = rows.toDF("k", "id").repartition(4)
+    Seq("500 rows" -> df, "single row" -> df.filter(col("id") === 250),
+      "empty" -> df.filter(lit(false)))
+  }
+
+  private val totalOrder = org.apache.spark.sql.expressions.Window.orderBy(col("k"), col("id"))
+
+  test("globalRowNumber equals row_number() over the same total order") {
+    orderFrames.foreach { case (name, df) =>
+      val got = Windows.globalRowNumber(df, "k", Seq(col("id")), "rn")
+        .select(col("id"), col("rn")).as[(Long, Long)].collect().toMap
+      val want = df.select(col("id"), row_number().over(totalOrder).cast("long"))
+        .as[(Long, Long)].collect().toMap
+      assert(got == want, name)
+    }
+  }
+
+  test("equiDepthBin(k) equals ntile(k) over the same total order") {
+    for ((name, df) <- orderFrames; k <- Seq(1, 3, 10, 64)) {
+      val got = Windows.equiDepthBin(df, k, "k", Seq(col("id")), "bin")
+        .select(col("id"), col("bin")).as[(Long, Int)].collect().toMap
+      val want = df.select(col("id"), ntile(k).over(totalOrder))
+        .as[(Long, Int)].collect().toMap
+      assert(got == want, s"$name, k = $k")
+    }
+  }
+
   test("globalRunningSums plans no global (unpartitioned) window") {
     val df = (1 to 100).map(i => (i % 10, i.toLong, 1L)).toDF("k", "id", "a")
-    val p = Windows.globalRunningSums(df, "k", Seq(col("id")), Seq(col("a") -> "c"))
-      .queryExecution.executedPlan.toString
-    val wlines = p.linesIterator
-      .filter(l => """(^|[-+: ])Window \[""".r.findFirstIn(l).isDefined).toList
-    assert(wlines.nonEmpty, p)
-    wlines.foreach { l =>
-      assert("""\], \[""".r.findAllIn(l).length >= 2,
-        s"global (unpartitioned) Window:\n$l")
+    val frames = Seq(
+      Windows.globalRunningSums(df, "k", Seq(col("id")), Seq(col("a") -> "c")),
+      Windows.globalRowNumber(df, "k", Seq(col("id")), "c"),
+      Windows.equiDepthBin(df, 4, "k", Seq(col("id")), "c"))
+    frames.foreach { f =>
+      val p = f.queryExecution.executedPlan.toString
+      val wlines = p.linesIterator
+        .filter(l => """(^|[-+: ])Window \[""".r.findFirstIn(l).isDefined).toList
+      assert(wlines.nonEmpty, p)
+      wlines.foreach { l =>
+        assert("""\], \[""".r.findAllIn(l).length >= 2,
+          s"global (unpartitioned) Window:\n$l")
+      }
     }
   }
 }
