@@ -5635,17 +5635,14 @@ object SparkEntry {
           .select((floor((unix_micros(col("t_2")) - unix_micros(col("t_0")))
             / 60000000L)).cast("long").as("lag_min"))
         val per = lags.groupBy(col("lag_min")).agg(count(lit(1)).as("c"))
-        val cum = graft.operators.Windows.globalRunningSums(
+        val (cum, Seq(n)) = graft.operators.Windows.globalRunningSums(
           per, "lag_min", Nil, Seq(col("c") -> "cum"))
-        val tot = per.agg(sum(col("c")).as("n"))
-        val med = cum.crossJoin(broadcast(tot)).filter(col("cum") * 2 >= col("n"))
-          .agg(min(col("lag_min")).as("median_lag_min"))
-        val p90 = cum.crossJoin(broadcast(tot))
-          .filter(col("cum") * 10 >= col("n") * 9)
-          .agg(min(col("lag_min")).as("p90_lag_min"))
-        tot.crossJoin(broadcast(med)).crossJoin(broadcast(p90))
-          .select(col("n").as("n_converted"), col("median_lag_min"),
-            col("p90_lag_min"))
+        cum.agg(
+            min(when(col("cum") * 2 >= n, col("lag_min"))).as("median_lag_min"),
+            min(when(col("cum") * 10 >= n * 9, col("lag_min"))).as("p90_lag_min"))
+          // no conversions: NULL, as the oracle's sum over no rows
+          .select(typedLit(Option(n).filter(_ > 0)).as("n_converted"),
+            col("median_lag_min"), col("p90_lag_min"))
       },
       "WITH " + funnelStepCtes + """,
               lag AS (SELECT ((epoch_us(s2.t_2) - epoch_us(s0.t_0)) // 60000000)
@@ -8309,8 +8306,8 @@ object SparkEntry {
       // (+0.5/bin) so an empty serving bin can't produce ln(0)
       val base = li(s, d).select(col("l_orderkey"), col("l_linenumber"),
         col("l_extendedprice").as("x"), pmod(col("l_orderkey"), lit(2)).as("half"))
-      val train = graft.Mat(base.filter(col("half") === 0)
-        .select(col("x"), col("l_orderkey"), col("l_linenumber")))
+      val train = base.filter(col("half") === 0)
+        .select(col("x"), col("l_orderkey"), col("l_linenumber"))
       val binned = Windows.equiDepthBin(train, 10, "x",
         Seq(col("l_orderkey"), col("l_linenumber")), "bin")
       // bins 1..9's maxima are the assignment edges (bin 10's max is the
@@ -8684,22 +8681,18 @@ object SparkEntry {
       // doubles of exact longs, so the argmax value is engine-stable
       val base = li(s, d).select(col("l_extendedprice").as("x"),
         pmod(col("l_orderkey"), lit(2)).as("half"))
-      val per = graft.Mat(base.groupBy(col("x")).agg(
+      val per = base.groupBy(col("x")).agg(
         sum(when(col("half") === 0, 1L).otherwise(0L)).as("n0"),
-        sum(when(col("half") === 1, 1L).otherwise(0L)).as("n1")))
-      val cum = Windows.globalRunningSums(per, "x", Nil,
-        Seq(col("n0") -> "c0", col("n1") -> "c1"))
-      val tot = per.agg(sum(col("n0")).as("t0"), sum(col("n1")).as("t1"),
-        count(lit(1)).as("nv"))
-      val best = cum.crossJoin(broadcast(tot))
-        .select(col("x"), col("t0"), col("t1"), col("nv"),
-          abs(col("c0").cast("double") / col("t0") -
-              col("c1").cast("double") / col("t1")).as("dd"))
-        .agg(max(struct(col("dd"), (-col("x")).as("nx"))).as("b"),
-          first(col("t0")).as("n_train"), first(col("t1")).as("n_score"),
-          first(col("nv")).as("n_values"))
-      best.select(round(col("b.dd"), 6).as("ks"), (-col("b.nx")).as("at_x"),
-        col("n_values"), col("n_train"), col("n_score"))
+        sum(when(col("half") === 1, 1L).otherwise(0L)).as("n1"))
+      // the pass's grand totals are the half sizes and the value count
+      val (cum, Seq(t0, t1, nv)) = Windows.globalRunningSums(per, "x", Nil,
+        Seq(col("n0") -> "c0", col("n1") -> "c1", lit(1L) -> "__nv"))
+      cum
+        .select(col("x"), abs(col("c0").cast("double") / t0 -
+            col("c1").cast("double") / t1).as("dd"))
+        .agg(max(struct(col("dd"), (-col("x")).as("nx"))).as("b"))
+        .select(round(col("b.dd"), 6).as("ks"), (-col("b.nx")).as("at_x"),
+          lit(nv).as("n_values"), lit(t0).as("n_train"), lit(t1).as("n_score"))
     },
       """WITH l AS (SELECT l_extendedprice AS x, l_orderkey % 2 AS half
                          FROM lineitem),
@@ -9379,26 +9372,24 @@ object SparkEntry {
       // C (rest); descending-revenue cumulative rides the bucketed
       // global running sums (no single-partition sort), class gates are
       // integer cross-multiplications
-      val per = graft.Mat(li(s, d)
+      val per = li(s, d)
         .select(col("l_partkey").as("p"),
           (col("l_extendedprice").cast("decimal(12,2)") * 100).cast("long")
             .as("cents"))
         .groupBy(col("p")).agg(sum(col("cents")).as("rev"))
-        .withColumn("neg", -col("rev")))
-      val cum = graft.operators.Windows.globalRunningSums(
+        .withColumn("neg", -col("rev"))
+      val (cum, Seq(total)) = graft.operators.Windows.globalRunningSums(
         per, "neg", Seq(col("p")), Seq(col("rev") -> "cum"))
-      val tot = per.agg(sum(col("rev")).as("total"))
-      cum.crossJoin(broadcast(tot))
+      cum
         .withColumn("before", col("cum") - col("rev"))
         .withColumn("cls",
-          when(col("before") * 100 < col("total") * 80, "A")
-            .when(col("before") * 100 < col("total") * 95, "B")
+          when(col("before") * 100 < lit(total) * 80, "A")
+            .when(col("before") * 100 < lit(total) * 95, "B")
             .otherwise("C"))
         .groupBy(col("cls"))
         .agg(count(lit(1)).as("n_items"), sum(col("rev")).as("class_cents"))
-        .crossJoin(broadcast(tot))
         .select(col("cls"), col("n_items"), col("class_cents"),
-          round(col("class_cents").cast("double") / col("total"), 6)
+          round(col("class_cents").cast("double") / total, 6)
             .as("share"))
     },
       """WITH per AS (SELECT l_partkey AS p,

@@ -102,17 +102,6 @@ object InvertedIndex {
       .withColumn("rank", row_number().over(w))
   }
 
-  /** Zipf power-law fit of the corpus frequency spectrum (corpus health
-    * check: natural text fits alpha ~ 1, synthetic/templated corpora
-    * deviate): closed-form OLS of ln(freq) on ln(rank) over the
-    * vocabulary. Ranks ride [[Windows.globalRowNumber]]'s two-pass
-    * machinery (no single-partition sort); the regression itself is ONE
-    * aggregate of five sums — distributed exact least squares, no
-    * iterative fitting. Log terms round at 9 (the iterative-algorithm
-    * rounding discipline) so engine libm ulp differences can't seep
-    * into the sums.
-    *
-    * Returns 1 row: (n_terms, alpha, intercept, r2). */
   /** Heaps'-law vocabulary-growth fit — the [[zipfFit]] companion corpus
     * health check: V(N) ≈ K·N^β (β ~ 0.4-0.6 for natural text; β near 1
     * = unbounded novel vocabulary, near 0 = templated). Checkpoints are
@@ -122,18 +111,20 @@ object InvertedIndex {
     * never re-scan), then closed-form OLS of ln V on ln N, the zipfFit
     * regression discipline (log terms round at 9).
     *
-    * Scale shape: doc ranks ride [[Windows.globalRowNumber]]; the
-    * checkpoint frame is ≤ 6 rows (broadcast), so prefix aggregation is
-    * two small fan-out joins — never a running sort. Returns one row per
-    * checkpoint: (checkpoint_docs, n_tokens, n_terms, beta, k_factor). */
+    * Scale shape: doc ranks are [[Windows.globalRunningSums]] of a
+    * constant 1, whose grand total is the doc count n; the ≤ 6
+    * checkpoints are computed from n on the driver and joined as a
+    * literal frame, so prefix aggregation is two small fan-out joins —
+    * never a running sort. Returns one row per checkpoint:
+    * (checkpoint_docs, n_tokens, n_terms, beta, k_factor). */
   def heapsLaw(df: DataFrame, id: Column, text: Column): DataFrame = {
     val tp = termPairs(df, id, text)
     val perDoc = tp.groupBy(col("doc_id")).agg(sum(col("tf")).as("ntok"))
-    val ranked = Windows.globalRowNumber(perDoc, "doc_id", Nil, "rank")
-    val cps = broadcast(ranked.agg(count(lit(1)).as("n"))
-      .select(explode(array((0 to 5).map(j => lit(1L << j)): _*)).as("p"),
-        col("n"))
-      .select(expr("n div p").as("c")).filter(col("c") >= 2).distinct())
+    val (ranked, Seq(n)) =
+      Windows.globalRunningSums(perDoc, "doc_id", Nil, Seq(lit(1L) -> "rank"))
+    val spark = perDoc.sparkSession
+    import spark.implicits._
+    val cps = broadcast((0 to 5).map(j => n / (1L << j)).filter(_ >= 2).distinct.toDF("c"))
     val nC = ranked.crossJoin(cps).filter(col("rank") <= col("c"))
       .groupBy(col("c")).agg(sum(col("ntok")).as("ntoks"))
     // first-rank histogram (one row per distinct first rank — ≤ n docs)
@@ -160,6 +151,17 @@ object InvertedIndex {
         col("v").as("n_terms"), col("beta"), col("k_factor"))
   }
 
+  /** Zipf power-law fit of the corpus frequency spectrum (corpus health
+    * check: natural text fits alpha ~ 1, synthetic/templated corpora
+    * deviate): closed-form OLS of ln(freq) on ln(rank) over the
+    * vocabulary. Ranks ride [[Windows.globalRowNumber]]'s two-pass
+    * machinery (no single-partition sort); the regression itself is ONE
+    * aggregate of five sums — distributed exact least squares, no
+    * iterative fitting. Log terms round at 9 (the iterative-algorithm
+    * rounding discipline) so engine libm ulp differences can't seep
+    * into the sums.
+    *
+    * Returns 1 row: (n_terms, alpha, intercept, r2). */
   def zipfFit(df: DataFrame, id: Column, text: Column): DataFrame = {
     val freq = termPairs(df, id, text)
       .groupBy(col("term")).agg(sum(col("tf")).as("cnt"))

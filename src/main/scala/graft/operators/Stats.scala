@@ -368,7 +368,7 @@ object Stats {
     val joined = dau.join(firstSeen, Seq("day"), "left")
       .withColumn("n_new", coalesce(col("n_new"), lit(0L)))
       .withColumn("__dn", datediff(col("day"), lit("1970-01-01")).cast("long"))
-    Windows.globalRunningSums(joined, "__dn", Nil, Seq(col("n_new") -> "cum_users"))
+    Windows.globalRunningSums(joined, "__dn", Nil, Seq(col("n_new") -> "cum_users"))._1
       .select(col("day"), col("dau"), col("n_new"), col("cum_users"),
         round(col("n_new") / col("dau"), 6).as("pct_new"))
   }
@@ -469,25 +469,23 @@ object Stats {
     * bucketed two-pass machinery over per-VALUE counts: no
     * `ORDER BY`-everything single-partition funnel anywhere, and the
     * "smallest value whose cumulative count reaches half" contract is
-    * exact-integer, so any engine replays it. The median/MAD frames are
-    * one-row aggregates (broadcast is metadata-sized by construction).
+    * exact-integer, so any engine replays it. The row count n is the
+    * first pass's grand total (a driver-side literal, so the half-count
+    * filters join nothing); the median/MAD frames are one-row aggregates
+    * (broadcast is metadata-sized by construction).
     *
     * Returns 1 row: (n, median, mad, n_outliers, n_high, n_low,
     * outlier_pct). */
   def madOutliers(df: DataFrame, value: Column, k: Double): DataFrame = {
     val x = df.select(value.cast("double").as("x"))
-    val per = graft.Mat(x.groupBy(col("x")).agg(count(lit(1)).as("c")))
-    val tot = per.agg(sum(col("c")).as("n"))
-    val med = Windows.globalRunningSums(per, "x", Nil, Seq(col("c") -> "cum"))
-      .crossJoin(broadcast(tot))
-      .filter(col("cum") * 2 >= col("n"))
-      .agg(min(col("x")).as("med"))
+    val per = x.groupBy(col("x")).agg(count(lit(1)).as("c"))
+    val (cum, Seq(n)) = Windows.globalRunningSums(per, "x", Nil, Seq(col("c") -> "cum"))
+    val med = cum.filter(col("cum") * 2 >= n).agg(min(col("x")).as("med"))
     val dv = x.crossJoin(broadcast(med))
       .select(abs(col("x") - col("med")).as("dv"))
-    val perD = graft.Mat(dv.groupBy(col("dv")).agg(count(lit(1)).as("c")))
-    val mad = Windows.globalRunningSums(perD, "dv", Nil, Seq(col("c") -> "cum"))
-      .crossJoin(broadcast(tot))
-      .filter(col("cum") * 2 >= col("n"))
+    val perD = dv.groupBy(col("dv")).agg(count(lit(1)).as("c"))
+    val mad = Windows.globalRunningSums(perD, "dv", Nil, Seq(col("c") -> "cum"))._1
+      .filter(col("cum") * 2 >= n)
       .agg(min(col("dv")).as("mad"))
     x.crossJoin(broadcast(med)).crossJoin(broadcast(mad))
       .agg(
@@ -563,7 +561,7 @@ object Stats {
     require(trimPct > 0 && trimPct < 50, "trim percent must be in (0, 50)")
     val per = graft.Mat(df.select(value.cast("long").as("x"))
       .groupBy(col("x")).agg(count(lit(1)).as("c")))
-    val cum = Windows.globalRunningSums(per, "x", Nil, Seq(col("c") -> "cum"))
+    val cum = Windows.globalRunningSums(per, "x", Nil, Seq(col("c") -> "cum"))._1
     val tot = per.agg(sum(col("c")).as("n"),
       sum(col("x").cast("decimal(38,0)") * col("c")).as("sx"))
     val base = cum.crossJoin(broadcast(tot))
@@ -800,13 +798,13 @@ object Stats {
     * `group` must map rows to {0, 1}. Returns one row:
     * (n_a, n_b, u_a_x2, z). */
   def mannWhitneyU(df: DataFrame, value: Column, group: Column): DataFrame = {
-    val per = graft.Mat(df
+    val per = df
       .select(value.cast("double").as("x"), group.cast("int").as("g"))
       .groupBy(col("x")).agg(
         sum(when(col("g") === 0, 1L).otherwise(0L)).as("c0"),
-        sum(when(col("g") === 1, 1L).otherwise(0L)).as("c1")))
+        sum(when(col("g") === 1, 1L).otherwise(0L)).as("c1"))
     val cum = Windows.globalRunningSums(per, "x", Nil,
-      Seq((col("c0") + col("c1")) -> "cumT"))
+      Seq((col("c0") + col("c1")) -> "cumT"))._1
     cum
       .select(col("c0"), col("c1"),
         (col("cumT") - col("c0") - col("c1")).as("cb"))
@@ -1110,6 +1108,8 @@ object Stats {
     * Both running sums over that frame ride
     * [[Windows.globalRunningSums]]' bucketed two-pass, so no
     * single-partition ORDER BY exists even if the calendar ever got wide.
+    * The cohort size is the first pass's grand total, so no aggregate
+    * re-scans the users for it.
     *
     * Determinism at the engine boundary: the survival product is carried
     * as an integer fixed-point sum of per-step logs —
@@ -1140,20 +1140,18 @@ object Stats {
     val g = durs.groupBy(col("dur")).agg(
       sum(col("ev")).as("n_events"),
       sum(lit(1L) - col("ev")).as("n_censored"))
-    val tot = durs.agg(count(lit(1)).as("n"))
     // pass 1: inclusive running (events+censored) -> at-risk counts
-    val r = Windows.globalRunningSums(g, "dur", Nil,
-        Seq((col("n_events") + col("n_censored")) -> "__cum"))
-      .crossJoin(broadcast(tot))
-      .withColumn("n_risk",
-        col("n") - col("__cum") + col("n_events") + col("n_censored"))
+    val (cum, Seq(n)) = Windows.globalRunningSums(g, "dur", Nil,
+      Seq((col("n_events") + col("n_censored")) -> "__cum"))
+    val r = cum.withColumn("n_risk",
+        lit(n) - col("__cum") + col("n_events") + col("n_censored"))
       .withColumn("__fx",
         when(col("n_events") < col("n_risk"),
           round(log((col("n_risk") - col("n_events")) / col("n_risk"))
             * lit(1e9), 0).cast("long"))
         .otherwise(lit(-1000000000000000000L)))
     // pass 2: inclusive running log-sum -> survival
-    Windows.globalRunningSums(r, "dur", Nil, Seq(col("__fx") -> "__lf"))
+    Windows.globalRunningSums(r, "dur", Nil, Seq(col("__fx") -> "__lf"))._1
       .select(col("dur").as("dur_days"), col("n_risk"),
         col("n_events"), col("n_censored"),
         round(exp(col("__lf") / lit(1e9)), 6).as("surv"))
@@ -1174,13 +1172,13 @@ object Stats {
     *
     * Returns 1 row: (n_pos, n_neg, auc, gini_idx = 2·AUC − 1). */
   def rocAuc(df: DataFrame, score: Column, label: Column): DataFrame = {
-    val per = graft.Mat(df
+    val per = df
       .select(score.cast("double").as("x"), label.cast("int").as("y"))
       .groupBy(col("x")).agg(
         sum(when(col("y") === 1, 1L).otherwise(0L)).as("c1"),
-        sum(when(col("y") === 1, 0L).otherwise(1L)).as("c0")))
+        sum(when(col("y") === 1, 0L).otherwise(1L)).as("c0"))
     val cum = Windows.globalRunningSums(per, "x", Nil,
-      Seq((col("c0") + col("c1")) -> "cumT"))
+      Seq((col("c0") + col("c1")) -> "cumT"))._1
     cum
       .select(col("c0"), col("c1"),
         (col("cumT") - col("c0") - col("c1")).as("cb"))

@@ -43,8 +43,8 @@ object Windows {
     * single-partition sort `Window.orderBy` (no partition spec) would
     * run — the shape that funnels the whole table through ONE task and
     * dies at cluster scale. Over a total order a row number is the
-    * running count of a constant 1, so this is [[globalRunningSums]]'
-    * bucket machinery (see [[globalPrefix]]) summing `1L`.
+    * running count of a constant 1, so this is [[globalRunningSums]]
+    * summing `1L`.
     *
     * `leadKey` must be numeric and the first sort key; `tiebreaks`
     * must make the order total (rows equal on the full key would get
@@ -55,17 +55,17 @@ object Windows {
   def globalRowNumber(
       df: DataFrame, leadKey: String, tiebreaks: Seq[Column],
       outName: String): DataFrame =
-    globalPrefix(df, leadKey, tiebreaks, Seq(lit(1L) -> outName))._1
+    globalRunningSums(df, leadKey, tiebreaks, Seq(lit(1L) -> outName))._1
 
   /** ntile(k) over a total order, without ntile's single-partition
-    * global window: the [[globalRowNumber]] r of [[globalPrefix]], cut
-    * as ntile cuts N rows (N = the row count [[globalPrefix]] returns as
-    * the grand total, floored at 1) — the first N % k bins hold
-    * N / k + 1 rows, the rest N / k. Output column is INT like ntile's. */
+    * global window: the [[globalRowNumber]] r, cut as ntile cuts N rows
+    * (N = the row count [[globalRunningSums]] returns as the grand
+    * total, floored at 1) — the first N % k bins hold N / k + 1 rows,
+    * the rest N / k. Output column is INT like ntile's. */
   def equiDepthBin(
       df: DataFrame, k: Int, leadKey: String, tiebreaks: Seq[Column],
       outName: String): DataFrame = {
-    val (ranked, totals) = globalPrefix(df, leadKey, tiebreaks, Seq(lit(1L) -> outName))
+    val (ranked, totals) = globalRunningSums(df, leadKey, tiebreaks, Seq(lit(1L) -> outName))
     val n = math.max(totals.head, 1L)
     val (q, rem) = (n / k, n % k)
     val big = rem * (q + 1) // rows in the larger bins
@@ -75,23 +75,16 @@ object Windows {
         s"ELSE ${rem}L + (`$outName` - 1L - ${big}L) div ${math.max(q, 1L)}L END AS INT) + 1"))
   }
 
-  /** Exact global running sums over a total order (see [[globalPrefix]])
-    * — the scalable form of `sum(v) OVER (ORDER BY key)`, which as
-    * written funnels the table through ONE task. Each `(valueCol,
-    * outName)` pair gets its own cumulative column in the same single
-    * pass; values must be LONG (exact integer prefix sums —
-    * engine-replayable).
+  /** Exact global running sums over a total order — the scalable form of
+    * `sum(v) OVER (ORDER BY key)`, which as written funnels the table
+    * through ONE task. Returns `df` with a cumulative column per
+    * `(value, outName)` pair, all from the same single pass, plus each
+    * value's grand total (0 on an empty frame), so callers need no
+    * second aggregate for the totals. Values must be LONG (exact integer
+    * prefix sums — engine-replayable).
     *
     * `leadKey` must be numeric; `tiebreaks` must make the order total
-    * (the prefix sum at a row is order-dependent across ties). */
-  def globalRunningSums(
-      df: DataFrame, leadKey: String, tiebreaks: Seq[Column],
-      values: Seq[(Column, String)]): DataFrame =
-    globalPrefix(df, leadKey, tiebreaks, values)._1
-
-  /** The one global-order pass behind [[globalRowNumber]],
-    * [[equiDepthBin]] and [[globalRunningSums]]: `df` with a prefix-sum
-    * column per `(value, outName)` pair, plus each value's grand total.
+    * (the prefix sum at a row is order-dependent across ties).
     *
     * Method: (1) compute ~numShufflePartitions split points of the
     * LEADING sort column once, driver-side, via approxQuantile —
@@ -101,11 +94,11 @@ object Windows {
     * range-exchange formulation would NOT have this property, because
     * its reservoir sampling reseeds per job). (2) assign each row its
     * bucket by a pure projection (count of edges below the key).
-    * (3) sum each value per bucket — a metadata-sized driver read.
-    * (4) prefix = within-bucket running sum (one hash shuffle on the
-    * bucket id) + the bucket's cumulative offset. Every data-bearing
-    * stage is linear. */
-  private def globalPrefix(
+    * (3) sum each value per bucket — a metadata-sized driver read whose
+    * running sum is also the grand total. (4) prefix = within-bucket
+    * running sum (one hash shuffle on the bucket id) + the bucket's
+    * cumulative offset. Every data-bearing stage is linear. */
+  def globalRunningSums(
       df: DataFrame, leadKey: String, tiebreaks: Seq[Column],
       values: Seq[(Column, String)]): (DataFrame, Seq[Long]) = {
     require(values.nonEmpty, "need at least one value column")

@@ -5,18 +5,20 @@ import scala.jdk.CollectionConverters._
 
 /** Generates MANIFEST.md — the mechanical queries→operators index: one
   * row per `SparkEntry.queries` key listing the graft operator/function
-  * defs its definition calls (resolved to file:line) and whether it has
-  * a DuckDB oracle. SURVEY §2.0's prose table claims coverage; this
-  * manifest keeps the claim CHECKABLE: the judge/driver can cross-check
-  * query keys against operator implementations without reading 10k
-  * lines, and `ManifestSpec` regenerates the table and diffs it against
+  * defs its definition calls (resolved to file:line). SURVEY §2.0's
+  * prose table claims coverage; this manifest keeps the claim
+  * CHECKABLE: a reader can cross-check query keys against operator
+  * implementations without reading 10k lines, and `ManifestSpec`
+  * regenerates the table and diffs it against
   * the committed file so any drift between `SparkEntry.defs` and the
   * manifest fails the build.
   *
   * Resolution is source-level (no reflection): every `object X` under
   * src/main/scala/graft is scanned for `def y` lines; each query's body
-  * in SparkEntry.scala is scanned for `X.y(` call tokens. Only graft
-  * objects are indexed, so Spark API calls never appear.
+  * in SparkEntry.scala, string literals removed, is scanned for `X.y`
+  * tokens, together with the bodies of the private SparkEntry helpers
+  * it calls, followed transitively. Only graft objects are indexed, so
+  * Spark API calls never appear.
   */
 object ManifestGen {
 
@@ -51,40 +53,43 @@ object ManifestGen {
     }.toMap // later files win on collision; names are unique in practice
   }
 
-  /** Query name -> body text, sliced from SparkEntry.scala's defs list. */
-  private def queryBodies(): Seq[(String, String)] = {
-    val text = new String(Files.readAllBytes(
-      srcRoot.resolve("SparkEntry.scala")), "UTF-8")
-    val starts = "(?m)^    Q\\(\"([a-z0-9_]+)\"".r.findAllMatchIn(text).toVector
-    starts.zipWithIndex.map { case (m, i) =>
-      val end = if (i + 1 < starts.size) starts(i + 1).start else text.length
-      m.group(1) -> text.substring(m.start, end)
-    }
+  /** Slices of SparkEntry.scala without comments and string literals
+    * (so neither prose nor oracle SQL reads as code): each query's body,
+    * from its `Q(` line to the next or to the end of the query list, and
+    * each private helper's, from its `private def`/`val` line to the
+    * object's next member. */
+  private def entrySources(): (Seq[(String, String)], Map[String, String]) = {
+    val text = new String(Files.readAllBytes(srcRoot.resolve("SparkEntry.scala")), "UTF-8")
+    val members = "(?m)^  [^\\s}]".r.findAllMatchIn(text).map(_.start).toVector
+    def slices(start: String, ends: Seq[Int]) = start.r.findAllMatchIn(text).map { m =>
+      m.group(1) -> text.substring(m.start, ends.find(_ > m.start).getOrElse(text.length))
+        .replaceAll("(?s)\"\"\".*?\"\"\"|\"(?:\\\\.|[^\"\\\\\n])*\"|//[^\n]*|/\\*.*?\\*/", " ")
+    }.toVector
+    val queries = "(?m)^    Q\\(\"([a-z0-9_]+)\""
+    (slices(queries, (queries.r.findAllMatchIn(text).map(_.start) ++ members).toVector.sorted),
+      slices("(?m)^  private(?:\\[\\w+\\])? +(?:lazy +)?(?:def|val) +(\\w+)", members).toMap)
   }
 
   def render(): String = {
     val idx = defIndex()
-    val known = idx.keys.map(_._1).toSet
     // matches both calls (X.y(...)) and val references (X.y); the
     // uppercase-object + def-index containment filter keeps noise out
     val callRe = "\\b([A-Z][A-Za-z0-9_]*)\\.([a-zA-Z0-9_]+)\\b".r
-    val oracles = graft.SparkEntry.oracleSql.keySet
     val queryNames = graft.SparkEntry.queries.keySet
-    val rows = queryBodies().filter(q => queryNames.contains(q._1)).map {
+    val (queries, helpers) = entrySources()
+    // the private helpers `code` calls (identifiers not after a `.`),
+    // followed transitively
+    def reach(seen: Set[String], code: String): Set[String] =
+      ("(?<![.\\w])\\w+".r.findAllIn(code).filter(helpers.contains).toSet -- seen)
+        .foldLeft(seen)((s, h) => reach(s + h, helpers(h)))
+    val rows = queries.filter(q => queryNames.contains(q._1)).map {
       case (name, body) =>
-        // the body includes the oracle SQL string; only scan the Spark
-        // lambda (everything before the `Some("""`/`Some("` oracle arg)
-        val sparkPart = body.indexOf("Some(\"") match {
-          case -1 => body
-          case i  => body.substring(0, i)
-        }
-        val refs = callRe.findAllMatchIn(sparkPart)
+        val refs = callRe.findAllMatchIn((reach(Set.empty, body).map(helpers) + body).mkString("\n"))
           .map(m => (m.group(1), m.group(2)))
-          .filter { case (obj, d) => known.contains(obj) && idx.contains((obj, d)) }
+          .filter(idx.contains)
           .toVector.distinct.sortBy(t => (t._1, t._2))
           .map { case (obj, d) => s"`$obj.$d` ${idx((obj, d))}" }
-        val oracle = if (oracles.contains(name)) "oracle" else "rows-only"
-        s"| `$name` | ${if (refs.isEmpty) "inline (SparkEntry only)" else refs.mkString("; ")} | $oracle |"
+        s"| `$name` | ${if (refs.isEmpty) "inline (SparkEntry only)" else refs.mkString("; ")} |"
     }
     // rows are appended OUTSIDE the stripMargin block: table rows start
     // with '|', which stripMargin would eat as a margin character
@@ -94,13 +99,14 @@ object ManifestGen {
       "Generated by `graft.tools.ManifestGen` (run: see tools/gen_manifest.sh);",
       "`ManifestSpec` regenerates this table and fails on drift. One row per",
       "`SparkEntry.queries` key: the graft operator/function defs the query's",
-      "Spark definition calls (source-resolved to file:line) and whether the",
-      "driver gate has a DuckDB oracle for it.",
+      "Spark definition calls, directly or through SparkEntry's private",
+      "helpers (source-resolved to file:line). Every query has a DuckDB",
+      "oracle (`GateContractSpec`).",
       "",
       s"${rows.size} queries.",
       "",
-      "| query | operators | gate |",
-      "|---|---|---|").mkString("\n") + "\n" + rows.mkString("\n") + "\n"
+      "| query | operators |",
+      "|---|---|").mkString("\n") + "\n" + rows.mkString("\n") + "\n"
   }
 
   def main(args: Array[String]): Unit = {

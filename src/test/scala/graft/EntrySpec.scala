@@ -34,6 +34,16 @@ class EntrySpec extends SparkSpec {
     }
   }
 
+  test("a37_conversion_lag on events with no purchase is one all-NULL row, as its oracle") {
+    val dir = Files.createTempDirectory("graft_no_purchase")
+    try {
+      Tables.events(spark, sf001).filter(col("event_type") =!= "purchase")
+        .write.parquet(s"$dir/events.parquet")
+      val rows = SparkEntry.queries("a37_conversion_lag")(spark, dir.toString).collect()
+      assert(rows.map(_.toSeq).toSeq == Seq(Seq(null, null, null)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("a warm domain_e2e_gl pass compiles no generated classes") {
     // the flagship's generated classes fit the codegen cache that
     // GraftSession sizes, so a warm pass finds every one of them; under

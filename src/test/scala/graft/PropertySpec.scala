@@ -242,7 +242,7 @@ class PropertySpec extends SparkSpec {
       val rows = sample(runningSumGen, seed)
       val got = graft.operators.Windows.globalRunningSums(
           rows.toDF("k", "id", "a", "b").repartition(3),
-          "k", Seq(col("id")), Seq(col("a") -> "ca", col("b") -> "cb"))
+          "k", Seq(col("id")), Seq(col("a") -> "ca", col("b") -> "cb"))._1
         .orderBy(col("k"), col("id"))
         .select(col("ca"), col("cb")).as[(Long, Long)].collect().toSeq
       val want = rows.sortBy(r => (r._1, r._2))

@@ -204,7 +204,7 @@ class StatsMiscSpec extends SparkSpec {
     val per = Seq((1L, 50L), (2L, 30L), (3L, 15L), (4L, 5L)).toDF("p", "rev")
       .withColumn("neg", -col("rev"))
     val cum = Windows.globalRunningSums(per, "neg", Seq(col("p")),
-      Seq(col("rev") -> "cum"))
+      Seq(col("rev") -> "cum"))._1
     val got = cum
       .withColumn("before", col("cum") - col("rev"))
       .withColumn("cls",

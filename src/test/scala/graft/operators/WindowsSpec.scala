@@ -44,7 +44,7 @@ class WindowsSpec extends SparkSpec {
     val rows = (1 to 500).map(i => ((i * 7919) % 50, i.toLong, (i % 13).toLong, (i % 5).toLong))
     val df = rows.toDF("k", "id", "a", "b").repartition(4)
     val got = Windows.globalRunningSums(df, "k", Seq(col("id")),
-        Seq(col("a") -> "ca", col("b") -> "cb"))
+        Seq(col("a") -> "ca", col("b") -> "cb"))._1
       .orderBy(col("k"), col("id"))
       .select(col("ca"), col("cb")).as[(Long, Long)].collect().toSeq
     val want = rows.sortBy(r => (r._1, r._2))
@@ -75,6 +75,15 @@ class WindowsSpec extends SparkSpec {
     }
   }
 
+  test("globalRunningSums returns each value's column sum as its total") {
+    orderFrames.foreach { case (name, df) =>
+      val (_, got) = Windows.globalRunningSums(df, "k", Seq(col("id")),
+        Seq(col("id") -> "c_id", (col("id") % 7 - 3) -> "c_signed", lit(1L) -> "c_rows"))
+      val ids = df.select(col("id")).as[Long].collect().toSeq
+      assert(got == Seq(ids.sum, ids.map(_ % 7 - 3).sum, ids.size.toLong), name)
+    }
+  }
+
   test("equiDepthBin(k) equals ntile(k) over the same total order") {
     for ((name, df) <- orderFrames; k <- Seq(1, 3, 10, 64)) {
       val got = Windows.equiDepthBin(df, k, "k", Seq(col("id")), "bin")
@@ -88,7 +97,7 @@ class WindowsSpec extends SparkSpec {
   test("globalRunningSums plans no global (unpartitioned) window") {
     val df = (1 to 100).map(i => (i % 10, i.toLong, 1L)).toDF("k", "id", "a")
     val frames = Seq(
-      Windows.globalRunningSums(df, "k", Seq(col("id")), Seq(col("a") -> "c")),
+      Windows.globalRunningSums(df, "k", Seq(col("id")), Seq(col("a") -> "c"))._1,
       Windows.globalRowNumber(df, "k", Seq(col("id")), "c"),
       Windows.equiDepthBin(df, 4, "k", Seq(col("id")), "c"))
     frames.foreach { f =>

@@ -1,16 +1,18 @@
 package graft.sql
 
-import org.apache.spark.sql.AnalysisException
-import org.apache.spark.sql.catalyst.analysis.AnalysisErrorAt
+import org.apache.spark.sql.{AnalysisException, GraftPlanBridge}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToScala
+import org.apache.spark.sql.catalyst.analysis.{AnalysisErrorAt, UnresolvedAttribute}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.DataTypeMismatch
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Generator, GreaterThanOrEqual, If, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The native kernels' analysis-time input-type check, on expressions
   * built directly: `GraftExtensions` casts registered calls to the right
-  * types, so no query reaches the failing branch. */
-class KernelTypeCheckSpec extends AnyFunSuite {
+  * types, so no query reaches the failing branch. The same table's
+  * rightly typed builds also run inside executor tasks. */
+class KernelTypeCheckSpec extends graft.SparkSpec {
   private val str = Literal("abc")
   private val int = Literal(3)
   private val bin = Literal(Array[Byte](1, 2, 3))
@@ -47,5 +49,32 @@ class KernelTypeCheckSpec extends AnyFunSuite {
     test(s"$name: input-type check passes on the right types") {
       right.foreach(e => assert(e.checkInputDataTypes().isSuccess, e))
     }
+  }
+
+  test("every kernel evaluates in executor tasks to its driver-side value") {
+    // a multi-partition Range and inputs that depend on its column: a
+    // literal input would be constant-folded on the driver, and a local
+    // (toDF) frame is evaluated there too, so neither ships the kernel
+    val ids = spark.range(0, 16, 1, 4).queryExecution.logical
+    val id = UnresolvedAttribute("id")
+    val nonNeg = GreaterThanOrEqual(id, Literal(0L))
+    // whole-stage codegen ships only the generated code; without it each
+    // task deserializes the kernel objects themselves
+    val wholeStage = "spark.sql.codegen.wholeStage"
+    val prev = spark.conf.getOption(wholeStage)
+    try for (ws <- Seq("true", "false"); e <- kernels.map(_._1.head)) {
+      spark.conf.set(wholeStage, ws)
+      val fromId = e.withNewChildren(e.children.map(c =>
+        If(nonNeg, c, Literal.create(null, c.dataType))))
+      val want = e match {
+        case g: Generator => g.eval(null).iterator.map(convertToScala(_, g.elementSchema)).toSeq
+        case _ => Seq(convertToScala(e.eval(), e.dataType))
+      }
+      val got = GraftPlanBridge.ofRows(spark, Project(Seq(id, Alias(fromId, "v")()), ids))
+        .collect().toSeq.groupBy(_.getLong(0)).map { case (i, rows) => i -> rows.map(_.get(1)) }
+      (0L until 16L).foreach { i =>
+        assert(got.getOrElse(i, Nil) == want, s"${e.prettyName} on id $i, $wholeStage=$ws")
+      }
+    } finally prev.fold(spark.conf.unset(wholeStage))(spark.conf.set(wholeStage, _))
   }
 }
