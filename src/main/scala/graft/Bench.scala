@@ -116,9 +116,11 @@ object Bench {
     // line is truncated by the archiver to ~2000 chars; r12's four
     // phantom 3-4x "regressions" were only dismissible by git
     // archaeology — a committed per-query file makes round-over-round
-    // diffs mechanical). SPARK_GRAFT_BENCH_OUT overrides the path.
+    // diffs mechanical). The default path is relative to the working
+    // directory, so a run from another checkout writes into that one;
+    // SPARK_GRAFT_BENCH_OUT overrides it.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "/root/repo/bench_local/bench_detail_latest.json")
+      "bench_local/bench_detail_latest.json")
     try {
       val queriesJson = results.sortBy(_._1)
         .map { case (k, v) => "\"" + k + "\":" + f(v) }

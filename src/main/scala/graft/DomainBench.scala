@@ -13,7 +13,7 @@ import graft.pipeline.Pipeline
   * Synthesizes reference-shaped certificate/premium inputs
   * deterministically from the TPC-H-ish testdata (lineitem rows become
   * (cert x split) rows; orders become premiums), then runs the inference
-  * lineage as one [[Pipeline]] step list through its `Runner` (hashing ->
+  * lineage as one [[Pipeline]] step list through [[Pipeline.run]] (hashing ->
   * routing -> proposals -> splits/versions -> premiums -> calc inputs);
   * the 8-stage calc and GL consume the result. `EndToEndSpec` runs the
   * same steps over a fixture CSV, and `perfbench/run.py --trace 1`
@@ -74,12 +74,12 @@ object DomainBench {
     Calc.glEntries(graft.Mat(Calc.run(glInputs(spark, sfDir))))
 
   /** The flagship's [[Calc.CalcInputs]]: [[steps]] over synthesized
-    * certificates, run by a default [[Pipeline.Runner]] — the substrate
+    * certificates, run by [[Pipeline.run]] — the substrate
     * for both the one-shot flagship run and the incremental (base + delta
     * batch) maintenance twin, which must share EXACT inputs for the
     * batch-identity oracle to hold. */
   def glInputs(spark: SparkSession, sfDir: String): Calc.CalcInputs =
-    calcInputs(new Pipeline.Runner(spark, steps(
+    calcInputs(Pipeline.run(spark, steps(
       load = synthCertificates(_, sfDir),
       premiums = (s, _) => Tables.orders(s, sfDir).select(
         col("o_orderkey").as("premium_id"), col("o_orderkey").as("cert_id"),
@@ -91,7 +91,7 @@ object DomainBench {
       // relaxed (it would route almost every group); the 2% split-sum
       // carve-out still exercises the non-conformance path
       routing = (1.0, 99.0, 0.0),
-      state = lit("TX"))).run().frames)
+      state = lit("TX"))))
 
   /** The inference lineage as one [[Pipeline]] step list: load -> fused
     * hashes -> routing -> proposals -> splits/versions -> premiums -> calc

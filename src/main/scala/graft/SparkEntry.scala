@@ -8,7 +8,7 @@ import graft.functions.{Cleaning, TextFunctions, VectorFunctions}
 import graft.operators.{Clustering, Curation, Dedup, Intervals, Joins, Multimodal, Routing, Similarity, Windows}
 import graft.streaming.StreamOps
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query registry — see SURVEY.md §7.
   *
   * Each `queries` entry exercises one operator family from SURVEY.md §2
   * (names carry the survey ids: s*, p*, j*, a*, w*, set*, f*, g*) or one of
@@ -1071,12 +1071,11 @@ object SparkEntry {
        |      || substr(p_name, pos + 1, length(p_name)) END AS $alias
        |  FROM base)""".stripMargin
 
-  /** Repo root for committed fixtures — env-overridable so a checkout at a
-    * different location resolves the same files. Note: the value is baked
-    * into the rendered oracle SQL, so the Spark side and the oracle engine
-    * must see the repo at the SAME path; if those containers ever diverge,
-    * add a separate oracle-side override here. */
-  private val repoRoot = sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo")
+  /** Repo root for committed fixtures: the working directory (run from
+    * the checkout's root), or `SPARK_GRAFT_REPO_DIR`. Note: the value is
+    * baked into the rendered oracle SQL, so the Spark side and the oracle
+    * engine must see the repo at the SAME path. */
+  private val repoRoot = sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", sys.props("user.dir"))
 
   /** Full-lineage DuckDB replica of the flagship GL (hashing -> routing ->
     * proposals -> versioned hierarchies -> 8-stage calc -> GL) — shared by
@@ -1386,26 +1385,30 @@ object SparkEntry {
       // why a file quarantines. Header reads are per-file metadata (one
       // line via the Hadoop FS API), exactly like the reference's
       // driver-side readCsvHeaders; only actual loads are distributed.
-      // The oracle is a VALUES literal of the expected plan — the
-      // fixtures are committed, so the result is a constant.
+      // Each file then loads through ingestFiles: n_rows is the data rows
+      // it loaded, NULL for a quarantined file. The oracle is a VALUES
+      // literal of the expected plan — the fixtures are committed, so the
+      // result is a constant.
       import s.implicits._
       val files = Seq("CertificateInfo_drift.csv", "CertificateInfo_ok.csv",
         "Premiums_2024.csv", "Readme.csv").map(f => s"$repoRoot/fixtures/s2/$f")
-      graft.domain.Ingest.ingestPlan(s, files)
-        .map(a => (a.file, a.table.orNull, a.nColumns,
+      val rows = files.map(f =>
+        graft.domain.Ingest.ingestFiles(s, Seq(f))._1.values.headOption.map(_.count().toInt))
+      graft.domain.Ingest.ingestPlan(s, files).zip(rows)
+        .map { case (a, n) => (a.file, a.table.orNull, a.nColumns, n,
           if (a.missing.isEmpty) null else a.missing.mkString(","),
           if (a.extra.isEmpty) null else a.extra.mkString(","),
-          a.reason.orNull))
-        .toDF("file", "target_table", "n_columns", "missing", "extra", "reason")
+          a.reason.orNull) }
+        .toDF("file", "target_table", "n_columns", "n_rows", "missing", "extra", "reason")
     },
       """SELECT * FROM (VALUES
-              ('CertificateInfo_drift.csv', 'raw_certificate_info', 13,
+              ('CertificateInfo_drift.csv', 'raw_certificate_info', 13, NULL::INTEGER,
                'Product,PlanCode', NULL::VARCHAR, 'missing columns: Product, PlanCode'),
-              ('CertificateInfo_ok.csv', 'raw_certificate_info', 16,
+              ('CertificateInfo_ok.csv', 'raw_certificate_info', 16, 2,
                NULL, 'Bonus', NULL),
-              ('Premiums_2024.csv', 'raw_premiums', 3, NULL, NULL, NULL),
-              ('Readme.csv', NULL, 0, NULL, NULL, 'no routing prefix matches'))
-              t(file, target_table, n_columns, missing, extra, reason)"""),
+              ('Premiums_2024.csv', 'raw_premiums', 3, 1, NULL, NULL, NULL),
+              ('Readme.csv', NULL, 0, NULL, NULL, NULL, 'no routing prefix matches'))
+              t(file, target_table, n_columns, n_rows, missing, extra, reason)"""),
 
     Q("s4_typed_cast", (s, d) =>
       li(s, d).select(
@@ -1440,7 +1443,8 @@ object SparkEntry {
       // the reference's production export surface as data: all 38 dbo
       // target tables (sql/export/*.sql) with their idempotence keys and
       // FK gates — export parity is per-table config riding ONE
-      // exportSet operator (ExportSpec drives each table's round-trip)
+      // insert-if-not-exists anti-join (ExportSpec drives each table's
+      // round-trip through upsertCandidates)
       import s.implicits._
       graft.domain.Export.targets
         .map(t => (t.table, t.keyCols.mkString(","), t.keyCols.size,

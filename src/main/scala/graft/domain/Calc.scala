@@ -8,7 +8,7 @@ import graft.operators.Joins
   * (`sql/calc/run-calculation.sql`, stages at :58-78, :93-110, :125-147,
   * :162-179, :194-217, :232-297, :312-331, :346-377), re-expressed as one
   * lazy DataFrame lineage. Stage tables become named intermediate frames;
-  * GL + traceability are projections of the final cached frame.
+  * GL is a projection of the final cached frame.
   *
   * Scale design: premiums/certificates are the big facts — every join
   * keeps an equi key on certificate/group so Catalyst plans hash or SMJ
@@ -196,35 +196,8 @@ object Calc {
     original.unionByName(assigned)
   }
 
-  /** Per-premium traceability rollup (`run-calculation.sql:470-500`). */
-  def traceability(finalDf: DataFrame): DataFrame =
-    finalDf.groupBy(col("premium_id"))
-      .agg(sum(col("commission")).as("total_commission"),
-        countDistinct(col("hierarchy_id")).as("n_hierarchies"),
-        count(lit(1)).as("n_participant_rows"),
-        max(when(col("rate_source") === "NoRate", 1).otherwise(0)).as("has_missing_rate"))
-
-  /** Failure diagnosis (`run-calculation.sql:510-561`): premiums from
-    * stage 2 that never reached stage 8, with the first failing stage. */
-  def failedTraceability(
-      enriched: DataFrame, withProposal: DataFrame, withVersion: DataFrame,
-      finalDf: DataFrame): DataFrame = {
-    val p0 = enriched.select(col("premium_id")).distinct()
-    val p3 = withProposal.select(col("premium_id")).distinct()
-    val p5 = withVersion.select(col("premium_id")).distinct()
-    val p8 = finalDf.filter(col("commission").isNotNull).select(col("premium_id")).distinct()
-    p0.join(p8, Seq("premium_id"), "left_anti")
-      .join(p3.withColumn("__p3", lit(1)), Seq("premium_id"), "left")
-      .join(p5.withColumn("__p5", lit(1)), Seq("premium_id"), "left")
-      .withColumn("failure_reason",
-        when(col("__p3").isNull, "No active proposal for group/date")
-          .when(col("__p5").isNull, "No active hierarchy version")
-          .otherwise("No rate resolved"))
-      .drop("__p3", "__p5")
-  }
-
   /** The full cascade as one call; returns the final per-participant
-    * frame (callers derive GL/traceability projections from it). */
+    * frame (callers derive the GL projection from it). */
   case class CalcInputs(
       premiums: DataFrame, certificates: DataFrame, proposals: DataFrame,
       splits: DataFrame, hierarchyVersions: DataFrame, participants: DataFrame,

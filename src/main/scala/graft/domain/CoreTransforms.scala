@@ -78,17 +78,6 @@ object CoreTransforms {
       .drop("__bid", "__bname", "__fixed")
   }
 
-  /** License date-correction rules (`sql/transforms/01-brokers.sql:199-239`):
-    * null effective date <- expiration date; expired-but-Active ->
-    * sentinel '2027-01-01'. */
-  val licenseFixSentinel: String = Sentinels.LicenseFix
-  def fixLicenseDates(licenses: DataFrame, today: Column = current_date()): DataFrame =
-    licenses
-      .withColumn("eff_date", coalesce(col("eff_date"), col("exp_date")))
-      .withColumn("exp_date",
-        when(col("status") === "Active" && col("exp_date") < today,
-          to_date(lit(licenseFixSentinel))).otherwise(col("exp_date")))
-
   /** Groups with fallback name/state chains — perf-group beats premium
     * beats certificate source (`sql/transforms/02-groups.sql:108-121`),
     * conditional-aggregate best-non-empty per group (`:31-33`), canonical
@@ -113,25 +102,6 @@ object CoreTransforms {
         coalesce(col("perf_name"), col("prem_name"), col("cert_name")).as("name"),
         coalesce(col("perf_state"), col("cert_state")).as("state"),
         col("group_size"))
-  }
-
-  /** Schedule-rate unpivot: the reference fakes nested data with wide
-    * Year1..Year16, Year66, Year99 pivot columns
-    * (`sql/01-raw-tables.sql:219-237`); here they become (year_key, rate)
-    * rows via stack — first-class rows, not 18 columns.
-    * Coverage classing per `sql/transforms/04-schedules.sql:259-265`:
-    * heaped (year rates), level-only, zero. */
-  val yearCols: Seq[String] = (1 to 16).map(i => s"Year$i") ++ Seq("Year66", "Year99")
-
-  def unpivotScheduleRates(rates: DataFrame): DataFrame = {
-    val stackExpr = yearCols.map(y =>
-      s"'${y.stripPrefix("Year")}', try_cast(`$y` as decimal(9,4))").mkString(", ")
-    rates.selectExpr("*", s"stack(${yearCols.size}, $stackExpr) as (year_key, rate)")
-      .drop(yearCols: _*)
-      .withColumn("coverage_class",
-        when(col("rate").isNotNull && col("rate") =!= 0, "HEAPED")
-          .when(col("Level").isNotNull && trim(col("Level")) =!= "", "LEVEL_ONLY")
-          .otherwise("ZERO"))
   }
 
   /** Fee-method canonicalization (`sql/transforms/11-fees.sql:125-190`):
@@ -261,15 +231,4 @@ object CoreTransforms {
       .join(ind.select(col("broker_id")), Seq("broker_id"), "left_anti")
     ind.unionByName(org)
   }
-
-  /** 51-entry state code -> name lookup as a broadcast map literal
-    * (`scripts/proposal-builder.ts:84-101`). Subset here; the operator
-    * shape (typedLit map + element_at) is the point. */
-  val stateNames: Map[String, String] = Map(
-    "AL" -> "Alabama", "AK" -> "Alaska", "AZ" -> "Arizona", "CA" -> "California",
-    "CO" -> "Colorado", "FL" -> "Florida", "GA" -> "Georgia", "IL" -> "Illinois",
-    "NY" -> "New York", "TX" -> "Texas", "WA" -> "Washington")
-
-  def stateName(c: Column): Column =
-    coalesce(element_at(typedLit(stateNames), upper(trim(c))), lit("Unknown"))
 }

@@ -3,43 +3,19 @@ package graft.domain
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Idempotent export (SURVEY §2.1 S8): insert-if-not-exists with key
-  * validation and exclusion filtering, the pattern of the reference's 30+
-  * export scripts (`sql/export/07-export-proposals.sql:12-73`).
+/** Idempotent export (SURVEY §2.1 S8): insert-if-not-exists, the
+  * pattern of the reference's 30+ export scripts
+  * (`sql/export/07-export-proposals.sql:12-73`).
   *
-  * Relational form: left-anti join against the target's existing keys
-  * (idempotence), left-semi against a referenced dimension (FK validity),
-  * left-anti against an exclusion list. At scale the target-keys frame is
-  * a column-pruned scan of the sink table; appends stay deterministic so
-  * re-runs converge.
+  * Relational form: a left-anti join against the target's existing keys,
+  * so a re-run appends nothing and appends stay deterministic. At scale
+  * the target-keys frame is a column-pruned scan of the sink table.
   */
 object Export {
 
   def upsertCandidates(
       source: DataFrame, existingKeys: DataFrame, keyCols: Seq[String]): DataFrame =
     source.join(existingKeys.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
-
-  def validateFk(
-      source: DataFrame, dim: DataFrame, fkCol: String, dimKeyCol: String): DataFrame =
-    source.join(dim.select(col(dimKeyCol)).distinct(),
-      source(fkCol) === dim(dimKeyCol), "left_semi")
-
-  def applyExclusions(
-      source: DataFrame, exclusions: DataFrame, keyCol: String, exclCol: String): DataFrame =
-    source.join(broadcast(exclusions.select(col(exclCol)).distinct()),
-      source(keyCol) === exclusions(exclCol), "left_anti")
-
-  /** Full export shape: exclusions -> FK validation -> anti-join append set. */
-  def exportSet(
-      source: DataFrame, existingKeys: DataFrame, keyCols: Seq[String],
-      fkDim: Option[(DataFrame, String, String)] = None,
-      exclusions: Option[(DataFrame, String, String)] = None): DataFrame = {
-    val afterExcl = exclusions.map { case (e, k, ek) => applyExclusions(source, e, k, ek) }
-      .getOrElse(source)
-    val afterFk = fkDim.map { case (d, fk, dk) => validateFk(afterExcl, d, fk, dk) }
-      .getOrElse(afterExcl)
-    upsertCandidates(afterFk, existingKeys, keyCols)
-  }
 
   /** One production export target: sink table plus the natural key its
     * script de-dupes on (the NOT EXISTS / NOT IN / run-scoped-delete
@@ -55,7 +31,7 @@ object Export {
     * 12-export-assignments.sql, 10-export-premium-transactions.sql),
     * `NOT IN (SELECT Id ...)` (05/06/08/09/11 et al.), or a run-scoped
     * DELETE+INSERT keyed by CommissionRunId (03-export-gl-entries.sql:68).
-    * Breadth is config — every table below rides the same exportSet. */
+    * Breadth is config — every table below rides the same [[upsertCandidates]]. */
   val targets: Seq[ExportTarget] = Seq(
     ExportTarget("BrokerAppointments", Seq("BrokerId", "StateCode"), Some(("Brokers", "BrokerId"))),
     ExportTarget("BrokerBankingInfos", Seq("BrokerId"), Some(("Brokers", "BrokerId"))),

@@ -126,7 +126,7 @@ object Ingest {
   def activeOnly(typedCerts: DataFrame): DataFrame =
     typedCerts.filter(col("rec_status") === "A" && col("cert_status") === "A")
 
-  // ===== S2: archive ingest with header validation / preview / dry-run =====
+  // ===== S2: archive ingest with header validation / dry-run =====
   // (`scripts/ingest-raw-data.ts:1-676`). Header work is per-FILE metadata
   // (one line each), so it runs on the driver through the Hadoop FS API —
   // no Spark job; only the actual loads are distributed scans.
@@ -234,8 +234,7 @@ object Ingest {
 
   /** Dry-run plan (`--dry-run`): route each file by prefix, validate its
     * headers, decide load vs quarantine. Pure metadata — no data scan. */
-  def ingestPlan(spark: SparkSession, files: Seq[String],
-                 skipValidation: Boolean = false): Seq[IngestAction] =
+  def ingestPlan(spark: SparkSession, files: Seq[String]): Seq[IngestAction] =
     files.map { f =>
       val base = f.substring(f.lastIndexOf('/') + 1)
       routeFile(base) match {
@@ -244,7 +243,7 @@ object Ingest {
         case Some(table) =>
           val headers = readCsvHeaders(spark, f)
           val expected = expectedColumns(table)
-          if (skipValidation || expected.isEmpty)
+          if (expected.isEmpty)
             IngestAction(base, f, Some(table), headers, Nil, Nil, None)
           else {
             val v = validateHeaders(headers, expected)
@@ -260,15 +259,12 @@ object Ingest {
     * renamed to the sanitized headers its validation saw (Spark keeps
     * padding in header names: `"CertificateId "` would pass validation,
     * then fail to resolve or union into a separate column), unioned per
-    * target table; preview mode caps each table at
-    * `previewRows` (`--preview`, `ingest-raw-data.ts:576`). Returns the
-    * loaded frames plus the quarantine report (file, table, reason) as a
-    * DataFrame so DQ failures land in a queryable sink, not a log. */
-  def ingestFiles(spark: SparkSession, files: Seq[String],
-                  preview: Boolean = false, previewRows: Int = 10,
-                  skipValidation: Boolean = false)
+    * target table. Returns the loaded frames plus the quarantine report
+    * (file, table, reason) as a DataFrame so DQ failures land in a
+    * queryable sink, not a log. */
+  def ingestFiles(spark: SparkSession, files: Seq[String])
       : (Map[String, DataFrame], DataFrame) = {
-    val plan = ingestPlan(spark, files, skipValidation)
+    val plan = ingestPlan(spark, files)
     // Spark's line-based reader splits a header holding a quoted newline
     // into fewer fields than the RFC-4180 header read; such a file would
     // load shifted columns, so it is quarantined like a header mismatch
@@ -276,10 +272,9 @@ object Ingest {
       .map(a => a -> readRawCsv(spark, a.path))
       .partition { case (a, raw) => raw.columns.count(_ != FieldsReason) == a.nColumns }
     val loaded = readable.groupBy(_._1.table.get).map { case (table, reads) =>
-      val df = reads.map { case (a, raw) =>
+      table -> reads.map { case (a, raw) =>
           raw.toDF(a.headers ++ raw.columns.filter(_ == FieldsReason): _*) }
         .reduce(_ unionByName (_, allowMissingColumns = true))
-      table -> (if (preview) df.limit(previewRows) else df)
     }
     import spark.implicits._
     val quarantine = (plan.filterNot(_.loadable).map(a => (a.file, a.table.orNull, a.reason.get)) ++

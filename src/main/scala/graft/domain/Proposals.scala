@@ -63,7 +63,7 @@ object Proposals {
     * no codegen), so this trades per-row CPU for a stage. The flagship
     * build (`DomainBench.glInputs`) uses this form: 9.3-9.6 s against
     * 10.7-11.2 s for the two-phase build at sf0.1. The two-phase form
-    * stays for `ResolutionValidator` and `g_pha_entities`, and as the
+    * stays for `g_pha_entities`, and as the
     * reference that `ProposalsSpec` and `g_shadow_compare` check this one
     * against. */
   def fusedHashes(certificates: DataFrame): DataFrame = {
@@ -176,17 +176,6 @@ object Proposals {
       .select(col("proposal_id"), col("group_id"), col("yr"),
         col("product_code"), col("plan_code"))
 
-  /** Key-mapping dedup with continuation priority
-    * (`proposal-builder.ts:1465-1477`): when a base proposal and a
-    * `-CONT` continuation both map the same (group, year, product, plan),
-    * the continuation wins (it carries the corrected coverage tail). */
-  def dedupeKeyMappings(km: DataFrame): DataFrame =
-    Joins.top1PerGroup(
-      km.withColumn("__is_cont", col("proposal_id").endsWith("-CONT")),
-      part = Seq(col("group_id"), col("yr"), col("product_code"), col("plan_code")),
-      order = Seq(col("__is_cont").desc, col("proposal_id").asc))
-      .drop("__is_cont")
-
   /** Hierarchy dedup by hash (`proposal-builder.ts:1861-1954`,
     * `getOrCreateHierarchy`): first-seen hash creates the hierarchy;
     * deterministic representative = lowest cert then split_seq. */
@@ -198,9 +187,9 @@ object Proposals {
 
   /** Compact 60-bit join key from the content hash: shuffling/sorting
     * 64-char hex strings is the dominant cost at hundreds of thousands of
-    * hierarchies; the full hash remains the content address
-    * ([[hashCollisions]] audits content collisions, [[hierKeyCollisions]]
-    * audits truncated-prefix collisions). */
+    * hierarchies; the full hash remains the content address (the
+    * specs' collision audits check both the content hash and this
+    * truncated prefix). */
   def hierKey(hash: Column): Column =
     conv(substring(hash, 1, 15), 16, 10).cast("long") // conv reads either hex case
 
@@ -274,21 +263,4 @@ object Proposals {
         (col("__pseq") + 1).cast("int").as("__pseq"))
     (versions.drop("signature"), participants)
   }
-
-  /** Hash-collision audit (`proposal-builder.ts:1972-1984`): same hash,
-    * different content -> a row here (must be empty). */
-  def hashCollisions(hierHashes: DataFrame): DataFrame =
-    hierHashes.groupBy(col("hierarchy_hash"))
-      .agg(countDistinct(col("group_id"), col("split_pct"), col("tier_sig")).as("n_variants"))
-      .filter(col("n_variants") > 1)
-
-  /** Truncated-key audit: [[hierKey]] keeps only 60 bits of the content
-    * hash as the join key, so two DISTINCT full hashes colliding on the
-    * truncated prefix would silently merge hierarchies without tripping
-    * [[hashCollisions]]. This surfaces exactly that case (must be empty). */
-  def hierKeyCollisions(hierHashes: DataFrame): DataFrame =
-    hierHashes.select(col("hierarchy_hash")).distinct()
-      .groupBy(hierKey(col("hierarchy_hash")).as("hierarchy_id"))
-      .agg(countDistinct(col("hierarchy_hash")).as("n_hashes"))
-      .filter(col("n_hashes") > 1)
 }

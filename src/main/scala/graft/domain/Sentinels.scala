@@ -7,14 +7,7 @@ package graft.domain
   * - OPEN_END `'2099-01-01'`: open-ended effective range
   *   (`scripts/proposal-builder.ts:1072,1104`;
   *   `sql/transforms/07-deprecated-hierarchies.sql:266`)
-  * - LICENSE_FIX `'2027-01-01'`: expired-but-Active license repair
-  *   (`sql/transforms/01-brokers.sql:199-239`)
-  * - DTC `'00000'` / `'G00000'`: direct-to-consumer group
-  *   (`sql/transforms/02-groups.sql:144-161`, `09-policies.sql:47`)
   */
 object Sentinels {
   val OpenEnd = "2099-01-01"
-  val LicenseFix = "2027-01-01"
-  val DtcRaw = "00000"
-  val DtcCanonical = "G00000"
 }

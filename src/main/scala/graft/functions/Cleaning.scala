@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * strings as null (`sql/transforms/00-references.sql:220`), plan-code
   * sanitization NULL/''/'NULL'/'N/A' -> `'*'`
   * (`sql/transforms/08-analyze-conformance.sql:37-43`), external broker id
-  * `'P13178'` <-> internal `13178` (`scripts/proposal-builder.ts:76-81`),
-  * group id `'25992'` <-> `'G25992'` (`sql/transforms/02-groups.sql:107`).
+  * `'P13178'` -> internal `13178` (`scripts/proposal-builder.ts:76-81`),
+  * group id `'25992'` -> `'G25992'` (`sql/transforms/02-groups.sql:107`).
   *
   * Everything is a pure `Column => Column` so Catalyst folds it into the
   * scan projection — codegen-friendly, no UDFs.
@@ -42,21 +42,11 @@ object Cleaning {
   def externalToInternalId(c: Column): Column =
     regexp_replace(trim(c), "^P", "").try_cast("long")
 
-  /** 13178 -> `'P13178'`. */
-  def internalToExternalId(c: Column): Column = concat(lit("P"), c.cast("string"))
-
   /** Raw numeric group '25992' -> canonical 'G25992'; already-prefixed ids
     * pass through (`sql/transforms/02-groups.sql:107`). */
   def canonicalGroupId(c: Column): Column = {
     val t = trim(c)
     when(t.rlike("^G"), t).otherwise(concat(lit("G"), t))
-  }
-
-  /** Invalid-group predicate: null / empty / all zeros / `G0+`
-    * (`scripts/proposal-builder.ts:1994-2001`). */
-  def isInvalidGroup(c: Column): Column = {
-    val t = trim(coalesce(c, lit("")))
-    t.rlike("^(G?0*)$")
   }
 
   /** Empty GroupId -> the `'00000'` direct-to-consumer sentinel

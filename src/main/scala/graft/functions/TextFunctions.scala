@@ -118,14 +118,6 @@ object TextFunctions {
   def fingerprint(c: Column): Column =
     md5(lower(trim(regexp_replace(c, "\\s+", " "))))
 
-  /** Character k-shingles (distinct), for MinHash / Jaccard. Empty array
-    * when the text is shorter than k. */
-  def charShingles(c: Column, k: Int): Column =
-    when(length(c) >= k,
-      array_distinct(transform(sequence(lit(1), length(c) - (k - 1)),
-        i => c.substr(i, lit(k)))))
-      .otherwise(array().cast("array<string>"))
-
   /** Word n-gram shingles (distinct). */
   def wordShingles(c: Column, n: Int): Column = {
     val toks = split(trim(c), "\\s+")

@@ -3,40 +3,24 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Dense-vector math over `array<float>` / `array<double>` columns via
-  * higher-order functions (`zip_with` / `aggregate`) — no UDFs, so the
-  * arithmetic stays in Tungsten codegen and is identical on every executor.
+/** Dense-vector math over `array<float>` / `array<double>` columns — no
+  * UDFs, so the arithmetic is identical on every executor.
   *
-  * Element order is preserved by `zip_with`+`aggregate` (sequential fold),
-  * so results are bit-deterministic for a given input — important for
-  * oracle parity and for reproducible ANN buckets at scale. [[dot]],
-  * [[norm2]] and [[cosine]] are the composable references, run as
-  * written (no optimizer rule swaps them for a kernel); the cosine, LSH
-  * and projection helpers call the bit-identical native kernels that
-  * `graft.sql.GraftExtensions` registers, and `VectorFunctionsSpec`
-  * checks the two agree bit for bit.
+  * Every fold runs in element order (a sequential fold), so results are
+  * bit-deterministic for a given input — important for oracle parity and
+  * for reproducible ANN buckets at scale. The cosine, LSH and projection
+  * helpers call the native kernels that `graft.sql.GraftExtensions`
+  * registers; `VectorFunctionsSpec` checks them bit for bit against the
+  * `zip_with` / `aggregate` forms.
   */
 object VectorFunctions {
 
   /** Cast any numeric array to array<double> once, up front. */
   def toDoubleArray(c: Column): Column = transform(c, x => x.cast("double"))
 
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  def norm2(a: Column): Column = sqrt(dot(a, a))
-
-  /** Cosine similarity; 0.0 when either vector has zero norm. */
-  def cosine(a: Column, b: Column): Column = {
-    val d  = dot(a, b)
-    val na = norm2(a)
-    val nb = norm2(b)
-    when(na === 0.0 || nb === 0.0, lit(0.0)).otherwise(d / (na * nb))
-  }
-
   /** Codegen'd cosine via the native `cosine_sim` Catalyst expression
     * (graft.sql.CosineSimilarity) — one fused loop in generated Java,
-    * bit-identical to [[cosine]]. Requires GraftExtensions on the session
+    * bit-identical to the HOF cosine. Requires GraftExtensions on the session
     * (`spark.sql.extensions=graft.sql.GraftExtensions`). */
   def cosineNative(a: Column, b: Column): Column =
     call_function("cosine_sim", a, b)
@@ -68,7 +52,7 @@ object VectorFunctions {
     * vector numerically ON the plane (|dot| below accumulation error)
     * cannot land in different buckets across engines or fold orders.
     * The dot is the codegen'd `dot_product` expression (bit-identical to
-    * [[dot]] — same accumulation order — but one fused loop instead of
+    * the HOF dot — same accumulation order — but one fused loop instead of
     * an interpreted per-element lambda). */
   def projectSign(v: Column, plane: Seq[Double]): Column = {
     val d = call_function("dot_product", v, array(plane.map(lit): _*))

@@ -252,8 +252,8 @@ object Dedup {
     * within cells. The only large
     * shuffle is the equi self-join on cell id — never all-pairs. Pairs
     * split across cells are missed (recall < 1, like any single-probe
-    * blocking); [[embeddingNearDupPairsExact]] is the quadratic baseline
-    * for specs and small corpora. */
+    * blocking); the specs check it against an exact all-pairs
+    * baseline. */
   def embeddingNearDupPairs(
       df: DataFrame, id: Column, vec: Column, threshold: Double,
       nlist: Int = 16): DataFrame = {
@@ -273,23 +273,9 @@ object Dedup {
       .select(col("a.vid").as("id_a"), col("b.vid").as("id_b"), col("cos"))
   }
 
-  /** Exact all-pairs near-dup (quadratic nested-loop): the correctness
-    * baseline for specs/oracles only — never the corpus-scale path. */
-  def embeddingNearDupPairsExact(
-      df: DataFrame, id: Column, vec: Column, threshold: Double): DataFrame = {
-    val cos = graft.functions.VectorFunctions.cosineNative _
-    val e = df.select(id.cast("long").as("vid"),
-      graft.functions.VectorFunctions.toDoubleArray(vec).as("v"))
-    e.select(col("vid").as("id_a"), col("v").as("va"))
-      .join(e.select(col("vid").as("id_b"), col("v").as("vb")), col("id_a") < col("id_b"))
-      .withColumn("cos", round(cos(col("va"), col("vb")), 6))
-      .filter(col("cos") >= threshold)
-      .select("id_a", "id_b", "cos")
-  }
-
   /** SimHash fingerprints per doc via the native `simhash_sig` kernel —
-    * the scale form of [[simHash]] (whose per-row HOF fold re-hashes per
-    * bit and stays interpreted). Same fingerprint values. */
+    * the scale form of the HOF per-bit fold (which re-hashes per bit and
+    * stays interpreted). Same fingerprint values. */
   def simHashDocs(df: DataFrame, id: Column, text: Column, bits: Int = 32): DataFrame = {
     // fanned out first: the signature build is pure per-row hashing fused
     // into the scan stage, which is single-task over the one-row-group
@@ -346,21 +332,6 @@ object Dedup {
         bit_count(col("sa").bitwiseXOR(col("sb"))).cast("int"))
       .filter(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
-  }
-
-  /** 64-bit SimHash over whitespace tokens: per bit, sum +1/-1 weighted by
-    * token md5 bits; the sign of each sum forms the fingerprint. Docs are
-    * compared by Hamming distance on band-blocked candidates. */
-  def simHash(text: Column, bits: Int = 32): Column = {
-    val toks = split(trim(text), "\\s+")
-    val bitSums = (0 until bits).map { b =>
-      // bit b of the token's md5-derived integer -> +1 / -1
-      val tokBit = (c: Column) => shiftright(md5Int(c), b % 32).bitwiseAND(1)
-      aggregate(toks, lit(0L), (acc, t) => acc + (tokBit(t) * 2 - 1))
-    }
-    bitSums.zipWithIndex.map { case (s, i) =>
-      when(s > 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
   }
 
   /** Duplicate-passage detection: document pairs sharing at least

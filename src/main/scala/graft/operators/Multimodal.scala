@@ -59,16 +59,6 @@ object Multimodal {
       .withColumn("duration_ms", m.getField("duration_ms"))
   }
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("payload", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("mime", StringType, nullable = true),
-      StructField("n_bytes", LongType, nullable = true),
-      StructField("checksum", StringType, nullable = true),
-    )), nullable = true),
-  ))
-
   /** Wrap any id + string column as a media table: payload = UTF-8 bytes,
     * metadata struct computed column-natively. */
   def asMediaTable(df: DataFrame, id: String, content: String, mime: String): DataFrame =

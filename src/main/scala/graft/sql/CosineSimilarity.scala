@@ -18,8 +18,8 @@ private[sql] trait DoubleArrayPair extends BinaryExpression with ExpectsInputTyp
 
 /** Codegen'd cosine similarity over two `array<double>` columns.
   *
-  * The composable form (`aggregate(zip_with(...))`, see
-  * `functions/VectorFunctions.cosine`) is correct but interpreted —
+  * The composable form (`aggregate(zip_with(...))`, the reference
+  * `VectorFunctionsSpec` checks it against) is correct but interpreted —
   * higher-order functions fall out of whole-stage codegen and allocate a
   * lambda frame per element. This native expression runs the dot product
   * and both norms in ONE fused loop inside generated Java, keeping the

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
   * interpreted and allocates a lambda frame per element).
   *
   * Accumulation order matches the sequential HOF fold (index 0..n-1), so
-  * results are bit-identical to `VectorFunctions.dot` (the reference
+  * results are bit-identical to the HOF dot (the reference
   * `VectorFunctionsSpec` compares it against) and to an oracle summing in
   * the same order. Length mismatch uses the shorter length (embedding
   * contract: equal lengths). */

@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Bit-equal to `Dedup.simHashDocs` (explode tokens -> md5Int -> 32
   * per-bit conditional sums in a hash aggregate), so swapping it in
   * changes NO results — but the aggregate form shuffles per-doc partial
-  * sums, and the HOF column form (`Dedup.simHash`) re-hashes every token
+  * sums, and the HOF column form (the specs' reference) re-hashes every token
   * once PER BIT in interpreted lambdas. This kernel: one md5 per token,
   * no shuffle, inside whole-stage codegen.
   *

@@ -22,9 +22,9 @@ import scala.jdk.CollectionConverters._
   */
 object ManifestGen {
 
-  private val srcRoot = Paths.get(
-    sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo"),
-    "src", "main", "scala", "graft")
+  /** The checkout: the working directory, or `SPARK_GRAFT_REPO_DIR`. */
+  private val repo = Paths.get(sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", sys.props("user.dir")))
+  private val srcRoot = repo.resolve("src/main/scala/graft")
 
   private def allScala(): Seq[java.nio.file.Path] = {
     val s = Files.walk(srcRoot)
@@ -37,7 +37,6 @@ object ManifestGen {
     * nearest enclosing `object` line above the def (graft code is flat
     * one-object-per-file except sql/, where the object name matches). */
   private def defIndex(): Map[(String, String), String] = {
-    val repo = srcRoot.getParent.getParent.getParent.getParent // /root/repo
     val objRe = "^\\s*(?:private\\s+)?(?:case\\s+)?object\\s+([A-Za-z0-9_]+)".r
     val defRe = "^\\s*(?:private(?:\\[\\w+\\])?\\s+)?(?:final\\s+)?(?:lazy\\s+)?(?:override\\s+)?(?:def|val)\\s+([a-zA-Z0-9_]+)".r
     allScala().flatMap { p =>
@@ -110,8 +109,7 @@ object ManifestGen {
   }
 
   def main(args: Array[String]): Unit = {
-    val out = Paths.get(sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo"),
-      "MANIFEST.md")
+    val out = repo.resolve("MANIFEST.md")
     Files.write(out, render().getBytes("UTF-8"))
     println(s"wrote $out")
   }

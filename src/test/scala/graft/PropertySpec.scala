@@ -75,7 +75,7 @@ class PropertySpec extends SparkSpec {
       val fps = TextFunctions.winnowFingerprints(df, col("doc_id"), col("text"), 3, 2)
         .as[(Long, Long)].collect().groupBy(_._1).view.mapValues(_.map(_._2).toSet)
       val grams = df.select(col("doc_id"),
-          explode(TextFunctions.charShingles(col("text"), 3)).as("g"))
+          explode(Reference.charShingles(col("text"), 3)).as("g"))
         .select(col("doc_id"), graft.operators.Dedup.md5Int(col("g")).as("h"))
         .as[(Long, Long)].collect().groupBy(_._1).view.mapValues(_.map(_._2).toSet)
       fps.foreach { case (d, f) =>

@@ -146,23 +146,4 @@ class CalcSpec extends SparkSpec {
     assert(gl.contains(("B3", "Original", 24.0)))
     assert(gl.contains(("B1", "Original", 60.0)))
   }
-
-  test("traceability: per-premium rollup sums participant commissions") {
-    val t = Calc.traceability(result)
-      .select(col("premium_id"), col("total_commission").cast("double"),
-        col("n_hierarchies"), col("has_missing_rate"))
-      .as[(Long, Double, Long, Int)].collect()
-      .map { case (a, b, c, dd) => a -> ((b, c, dd)) }.toMap
-    assert(t(100L) == ((140.0, 2L, 1))) // 60+48+32, B4 missing rate
-  }
-
-  test("failed traceability: no-proposal premium diagnosed; filtered premium absent") {
-    val e = Calc.enrich(premiums, certificates)
-    val p = Calc.resolveProposal(e, proposals)
-    val s = Calc.explodeSplits(p, splits)
-    val v = Calc.resolveHierarchyVersion(s, hierarchyVersions)
-    val failed = Calc.failedTraceability(e, p, v, result)
-      .select(col("premium_id"), col("failure_reason")).as[(Long, String)].collect().toMap
-    assert(failed == Map(101L -> "No active proposal for group/date"))
-  }
 }

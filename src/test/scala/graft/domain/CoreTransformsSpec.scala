@@ -21,21 +21,6 @@ class CoreTransformsSpec extends SparkSpec {
     assert(got("P9") == (("PLACEHOLDER", "PLACEHOLDER", 9L)))
   }
 
-  test("license date corrections: null eff <- exp; expired Active -> 2027 sentinel") {
-    def d(s: String) = java.sql.Date.valueOf(s)
-    val lic = Seq(
-      ("L1", "Active", null.asInstanceOf[java.sql.Date], d("2030-01-01")),
-      ("L2", "Active", d("2019-01-01"), d("2020-01-01")),   // expired but Active
-      ("L3", "Inactive", d("2019-01-01"), d("2020-01-01")), // expired, not Active
-    ).toDF("license_id", "status", "eff_date", "exp_date")
-    val got = CoreTransforms.fixLicenseDates(lic, to_date(lit("2024-06-01")))
-      .select(col("license_id"), col("eff_date").cast("string"), col("exp_date").cast("string"))
-      .as[(String, String, String)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
-    assert(got("L1") == (("2030-01-01", "2030-01-01")))
-    assert(got("L2") == (("2019-01-01", "2027-01-01"))) // sentinel
-    assert(got("L3") == (("2019-01-01", "2020-01-01")))
-  }
-
   test("groups: fallback chains perf > premium > cert; canonical ids; DTC sentinel") {
     val cg = Seq(("25992", "Cert Name", "TX"), ("", "DTC Cert", "CA"))
       .toDF("group_id_raw", "name", "state")
@@ -65,18 +50,6 @@ class CoreTransformsSpec extends SparkSpec {
     assert(rows("2") == (("0.0000", "LEVEL_ONLY")))
     assert(rows("3")._2 == "LEVEL_ONLY") // '' -> null rate, Level present
     assert(rows("4")._2 == "LEVEL_ONLY")
-  }
-
-  test("full 18-column unpivot via unpivotScheduleRates") {
-    val base = (1 to 16).map(i => s"Year$i" -> (if (i == 1) "2.5" else "0")).toMap ++
-      Map("Year66" -> "0", "Year99" -> "1.0")
-    var df = Seq(("S1", "")).toDF("sched", "Level")
-    CoreTransforms.yearCols.foreach { y => df = df.withColumn(y, lit(base(y))) }
-    val out = CoreTransforms.unpivotScheduleRates(df)
-    assert(out.count() == 18)
-    val heaped = out.filter(col("coverage_class") === "HEAPED")
-      .select(col("year_key")).as[String].collect().toSet
-    assert(heaped == Set("1", "99"))
   }
 
   test("license flags: status decode + Y/true boolean coercion") {
@@ -120,12 +93,6 @@ class CoreTransformsSpec extends SparkSpec {
     assert(got(0) == (("FEE-100-PERCENT_OF_PREMIUM-20200115",
       Some("0.0300"), "PERCENT_OF_PREMIUM", Some("2020-01-15"))))
     assert(got(1)._2.isEmpty && got(1)._3 == "OTHER_FEE" && got(1)._4.isEmpty)
-  }
-
-  test("state map lookup via broadcast map literal") {
-    val got = Seq(" tx ", "ZZ").toDF("s")
-      .select(CoreTransforms.stateName(col("s"))).as[String].collect()
-    assert(got.toSeq == Seq("Texas", "Unknown"))
   }
 
   test("products: ordered AllowedStates aggregation + distinct group counts") {

@@ -1,6 +1,6 @@
 package graft.domain
 
-import graft.{DomainBench, SparkSpec}
+import graft.{DomainBench, Reference, SparkSpec}
 import graft.pipeline.Pipeline
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -48,27 +48,30 @@ class EndToEndSpec extends SparkSpec {
     routing = (0.5, 2.0, 50.0),
     state = first(col("state")))
 
-  lazy val run = new Pipeline.Runner(spark, steps(writeFixtureCsv())).run()
-  lazy val fin = Calc.run(DomainBench.calcInputs(run.frames))
+  lazy val stepList = steps(writeFixtureCsv())
+  lazy val frames = Pipeline.run(spark, stepList)
+  lazy val fin = Calc.run(DomainBench.calcInputs(frames))
 
   test("pipeline completes every step") {
     // the flagship's step names, in order: a step the spec adds or drops
-    // is a second wiring
-    assert(run.runLedger.map(e => e.step -> e.status) == Seq("load", "hashes", "routing",
-      "proposals", "splits", "premiums", "calc_inputs").map(_ -> Pipeline.Completed))
+    // is a second wiring; every output a step declares is in the run's frames
+    assert(stepList.map(_.name) == Seq("load", "hashes", "routing",
+      "proposals", "splits", "premiums", "calc_inputs"))
+    val declared = stepList.flatMap(_.outputs)
+    assert(declared.filterNot(frames.contains).isEmpty, frames.keySet.toString)
   }
 
   test("proposal inference: one proposal, 60/40 splits, two hierarchies") {
-    assert(run.frames("proposals").count() == 1)
-    val s = run.frames("splits").select(col("split_pct").cast("double")).as[Double]
+    assert(frames("proposals").count() == 1)
+    val s = frames("splits").select(col("split_pct").cast("double")).as[Double]
       .collect().sorted.toSeq
     assert(s == Seq(40.0, 60.0))
-    assert(run.frames("versions").count() == 2)
-    assert(run.frames("participants").count() == 2)
+    assert(frames("versions").count() == 2)
+    assert(frames("participants").count() == 2)
   }
 
   test("premium transactions: real + cert-fallback for uncovered cert") {
-    val t = run.frames("premiums").select(col("cert_id"), col("source"),
+    val t = frames("premiums").select(col("cert_id"), col("source"),
       col("amount").cast("double")).as[(Long, String, Double)].collect().toSet
     assert(t == Set((1L, "PREMIUM", 1000.0), (2L, "CERT_FALLBACK", 500.0)))
   }
@@ -80,19 +83,18 @@ class EndToEndSpec extends SparkSpec {
   }
 
   test("traceability: every premium covered, no missing rates") {
-    val t = Calc.traceability(fin)
-      .select(col("premium_id"), col("total_commission").cast("double"), col("has_missing_rate"))
-      .as[(String, Double, Int)].collect()
-    assert(t.length == 2)
-    assert(t.map(_._2).sum == 150.0)
-    assert(t.forall(_._3 == 0))
+    val premiums = fin.select(col("premium_id")).distinct().count()
+    assert(premiums == 2)
+    val total = fin.agg(sum(col("commission")).cast("double")).as[Double].head()
+    assert(total == 150.0)
+    assert(fin.filter(col("rate_source") === "NoRate").isEmpty)
   }
 
   test("resolution validator: 100% pass rate on the built entities") {
     val validated = ResolutionValidator.validate(
-      run.frames("certs"), run.frames("configs"), run.frames("proposals")
+      frames("certs"), frames("configs"), frames("proposals")
         .select(col("group_id"), col("config_hash"), col("proposal_id")),
-      run.frames("splits"), run.frames("versions"), run.frames("participants"),
+      frames("splits"), frames("versions"), frames("participants"),
       sampleMod = 1) // sample everything at this scale
     val s = ResolutionValidator.summarize(validated)
     assert(s.sampled == 2, s.toString)
@@ -100,19 +102,19 @@ class EndToEndSpec extends SparkSpec {
   }
 
   test("idempotent export: re-running against existing keys appends nothing") {
-    val props = run.frames("proposals")
-    val firstExport = Export.exportSet(props,
+    val props = frames("proposals")
+    val firstExport = Export.upsertCandidates(props,
       existingKeys = props.limit(0), keyCols = Seq("proposal_id"))
     assert(firstExport.count() == props.count())
-    val secondExport = Export.exportSet(props,
+    val secondExport = Export.upsertCandidates(props,
       existingKeys = firstExport, keyCols = Seq("proposal_id"))
     assert(secondExport.count() == 0) // converged — full-rebuild idempotence (SURVEY §4)
   }
 
   test("audit invariants all zero") {
-    val rep = ProductionReadiness.report(Audit.commissionsChecks(
-      run.frames("proposals"), run.frames("splits"),
-      run.frames("versions"), run.frames("participants")))
+    val rep = ProductionReadiness.report(Reference.commissionsChecks(
+      frames("proposals"), frames("splits"),
+      frames("versions"), frames("participants")))
       .select("check", "n_failing").as[(String, Long)].collect().toMap
     assert(rep.values.forall(_ == 0L), rep.toString)
   }

@@ -4,11 +4,10 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Export breadth as config: every production target table from the
-  * reference's export-script surface rides the same exportSet
+  * reference's export-script surface rides the same upsertCandidates
   * pattern. This spec drives the FULL registry — each table's synthetic
   * source round-trips idempotently on its own natural key (first run
-  * appends all, second run appends nothing) and the FK gate drops
-  * orphans where the target declares a dimension. */
+  * appends all, second run appends nothing). */
 class ExportSpec extends SparkSpec {
   import org.apache.spark.sql.DataFrame
 
@@ -37,26 +36,14 @@ class ExportSpec extends SparkSpec {
     for (t <- Export.targets) {
       val src = synthSource(t)
       val empty = src.limit(0)
-      val first = Export.exportSet(src, empty, t.keyCols)
+      val first = Export.upsertCandidates(src, empty, t.keyCols)
       assert(first.count() == 10, s"${t.table}: first run must append all")
       // sink now holds the first run's rows; a re-run appends nothing
-      val second = Export.exportSet(src, first, t.keyCols)
+      val second = Export.upsertCandidates(src, first, t.keyCols)
       assert(second.count() == 0, s"${t.table}: second run must append nothing")
       // partial sink: only the missing keys append
-      val partial = Export.exportSet(src, first.limit(6), t.keyCols)
+      val partial = Export.upsertCandidates(src, first.limit(6), t.keyCols)
       assert(partial.count() == 4, s"${t.table}: delta run appends the gap")
-    }
-  }
-
-  test("FK-gated targets drop rows whose dimension key is absent") {
-    for (t <- Export.targets if t.fkDim.isDefined) {
-      val (_, fkCol) = t.fkDim.get
-      val src = synthSource(t).withColumn(fkCol,
-        concat(lit("B"), col(t.keyCols.head)))
-      val dimKeys = src.select(col(fkCol).as("DimKey")).limit(7)
-      val gated = Export.exportSet(src, src.limit(0), t.keyCols,
-        fkDim = Some((dimKeys.toDF(), fkCol, "DimKey")))
-      assert(gated.count() == 7, s"${t.table}: FK gate keeps only resolvable rows")
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft.domain
 
-import graft.SparkSpec
+import graft.{Reference, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -105,17 +105,6 @@ class ProposalsSpec extends SparkSpec {
     assert(km.contains((2020, "A", "x")) && km.contains((2021, "B", "y")))
   }
 
-  test("key-mapping dedup prefers -CONT continuations") {
-    val km = Seq(
-      ("P1", "G1", 2020, "A", "x"),
-      ("P0-CONT", "G1", 2020, "A", "x"), // same key -> CONT wins
-      ("P1", "G1", 2021, "A", "x"))      // unique key -> kept
-      .toDF("proposal_id", "group_id", "yr", "product_code", "plan_code")
-    val got = Proposals.dedupeKeyMappings(km)
-      .select(col("proposal_id"), col("yr")).as[(String, Int)].collect().toSet
-    assert(got == Set(("P0-CONT", 2020), ("P1", 2021)))
-  }
-
   test("hierarchy dedup keeps one row per hash; collision audit is empty") {
     val base = certs(
       (1L, "G1", 1, 100.0, 1, "B1", "S1", "B1", "A", "x", "2020-01-01"),
@@ -123,8 +112,8 @@ class ProposalsSpec extends SparkSpec {
       (3L, "G1", 1, 100.0, 1, "B3", "S1", "B3", "A", "x", "2020-03-01"))
     val hh = Proposals.hierarchyHashes(base)
     assert(Proposals.dedupHierarchies(hh).count() == 2)
-    assert(Proposals.hashCollisions(hh).count() == 0)
-    assert(Proposals.hierKeyCollisions(hh).count() == 0)
+    assert(Reference.hashCollisions(hh).count() == 0)
+    assert(Reference.hierKeyCollisions(hh).count() == 0)
   }
 
   test("hierKeyCollisions flags distinct hashes sharing a truncated prefix") {
@@ -135,6 +124,6 @@ class ProposalsSpec extends SparkSpec {
       "ABCDEF012345678" + "F" * 49,
       "1234567890ABCDE" + "0" * 49)
       .toDF("hierarchy_hash")
-    assert(Proposals.hierKeyCollisions(hh).count() == 1)
+    assert(Reference.hierKeyCollisions(hh).count() == 1)
   }
 }

@@ -18,7 +18,7 @@ class TextFunctionsSpec extends SparkSpec {
 
   test("char shingles") {
     val got = Seq("abcd", "ab").toDF("t")
-      .select(TextFunctions.charShingles(col("t"), 3)).as[Seq[String]].collect()
+      .select(graft.Reference.charShingles(col("t"), 3)).as[Seq[String]].collect()
     assert(got(0) == Seq("abc", "bcd"))
     assert(got(1).isEmpty)
   }

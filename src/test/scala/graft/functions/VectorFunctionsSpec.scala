@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** The native vector kernels against their composable references:
-  * [[VectorFunctions.cosine]] and [[VectorFunctions.dot]] run as written
+  * [[graft.Reference.cosine]] and [[graft.Reference.dot]] run as written
   * (higher-order functions), the kernels as codegen'd expressions. */
 class VectorFunctionsSpec extends SparkSpec {
   import spark.implicits._
@@ -19,7 +19,7 @@ class VectorFunctionsSpec extends SparkSpec {
 
   test("native cosine_sim results are bit-identical to the HOF cosine") {
     val hof = vecs.select(col("id"),
-      VectorFunctions.cosine(col("a"), col("b")).as("cos"))
+      graft.Reference.cosine(col("a"), col("b")).as("cos"))
       .as[(Long, Double)].collect().toMap
     val native = vecs.select(col("id"),
       VectorFunctions.cosineNative(col("a"), col("b")).as("cos"))
@@ -34,7 +34,7 @@ class VectorFunctionsSpec extends SparkSpec {
     // composable `dot` fold
     val hofBucket = (0 until 4).map { p =>
       val plane = array(VectorFunctions.planeValues(42, p, 3).map(lit): _*)
-      when(round(VectorFunctions.dot(col("a"), plane), 9) >= 0, lit(1))
+      when(round(graft.Reference.dot(col("a"), plane), 9) >= 0, lit(1))
         .otherwise(lit(0)) * lit(1 << p)
     }.reduce(_ + _)
     val hofBuckets = planeVec.select(col("id"), hofBucket.as("b"))
@@ -43,7 +43,7 @@ class VectorFunctionsSpec extends SparkSpec {
       .select(col("id"), VectorFunctions.lshBucket(col("a"), 3, 4).as("b"))
       .as[(Long, Int)].collect().toMap
     assert(hofBuckets == nativeBuckets)
-    val hofDot = vecs.select(VectorFunctions.dot(col("a"), col("b"))).as[Double].collect()
+    val hofDot = vecs.select(graft.Reference.dot(col("a"), col("b"))).as[Double].collect()
     val nativeDot = vecs.select(call_function("dot_product", col("a"), col("b")))
       .as[Double].collect()
     assert(hofDot.toSeq == nativeDot.toSeq) // exact, not tolerance

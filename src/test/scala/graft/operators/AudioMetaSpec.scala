@@ -70,7 +70,7 @@ class AudioMetaSpec extends SparkSpec {
   }
 
   test("audio_meta over the committed fixture blobs matches file-name formats") {
-    val repo = sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo")
+    val repo = sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", sys.props("user.dir"))
     val got = Multimodal.audioMeta(
         spark.read.format("binaryFile").load(s"$repo/fixtures/audio"),
         col("content"))

@@ -66,7 +66,7 @@ class DedupSpec extends SparkSpec {
     val df = vecs.toDF("vec_id", "embedding")
     val blocked = Dedup.embeddingNearDupPairs(df, col("vec_id"), col("embedding"), 0.9)
       .as[(Long, Long, Double)].collect().toSet
-    val exact = Dedup.embeddingNearDupPairsExact(df, col("vec_id"), col("embedding"), 0.9)
+    val exact = graft.Reference.embeddingNearDupPairsExact(df, col("vec_id"), col("embedding"), 0.9)
       .as[(Long, Long, Double)].collect().toSet
     assert(blocked.subsetOf(exact))
     assert(blocked.map(p => (p._1, p._2)) == Set((0L, 16L), (1L, 17L)))
@@ -159,7 +159,7 @@ class DedupSpec extends SparkSpec {
       (2L, "spark sql catalyst tungsten codegen shuffle"),
       (3L, "a b c d e f g h i j k l m n o p"))
       .toDF("doc_id", "text")
-    val viaCol = docs.select(col("doc_id"), Dedup.simHash(col("text"), 32).as("sh"))
+    val viaCol = docs.select(col("doc_id"), graft.Reference.simHash(col("text"), 32).as("sh"))
       .as[(Long, Long)].collect().toMap
     val viaOp = Dedup.simHashDocs(docs, col("doc_id"), col("text"), 32)
       .as[(Long, Long)].collect().toMap
@@ -171,7 +171,7 @@ class DedupSpec extends SparkSpec {
     val near = words + " extra"
     val far = (200 to 260).map(i => s"z$i").mkString(" ")
     val got = Seq((1L, words), (2L, near), (3L, far)).toDF("doc_id", "text")
-      .select(Dedup.simHash(col("text"), 32)).as[Long].collect()
+      .select(graft.Reference.simHash(col("text"), 32)).as[Long].collect()
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(got(0), got(1)) < ham(got(0), got(2)),
       s"near=${ham(got(0), got(1))} far=${ham(got(0), got(2))}")

@@ -72,7 +72,7 @@ class MultimodalMetaSpec extends SparkSpec {
   }
 
   test("image_meta over the committed fixture blobs matches file-name formats") {
-    val repo = sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo")
+    val repo = sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", sys.props("user.dir"))
     val got = Multimodal.imageMeta(
         spark.read.format("binaryFile").load(s"$repo/fixtures/media"),
         col("content"))

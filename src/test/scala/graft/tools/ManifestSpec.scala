@@ -11,7 +11,7 @@ class ManifestSpec extends AnyFunSuite {
 
   test("committed MANIFEST.md matches a fresh ManifestGen.render()") {
     val committed = new String(Files.readAllBytes(Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo"), "MANIFEST.md")),
+      sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", sys.props("user.dir")), "MANIFEST.md")),
       "UTF-8")
     val fresh = ManifestGen.render()
     if (committed != fresh) {

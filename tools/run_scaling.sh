@@ -12,6 +12,7 @@
 # RATIOS are the signal and survive this VM's noise windows, absolute
 # seconds at 1x remain the bench artifact's job.
 set -e
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
 RND=${1:?round number required}
 S10=${2:-/tmp/graft_scale10}
 S100=${3:-/tmp/graft_scale100}
@@ -50,11 +51,11 @@ run_one() {
   SPARK_GRAFT_ONLY="$SCALING_QUERIES" \
   java $ADD_OPENS -Xmx48g -Dspark.ui.enabled=false \
     -Dspark.sql.session.timeZone=UTC \
-    -cp "${GRAFT_CLASSES:-/root/repo/target/scala-2.13/classes}:/opt/spark/jars/*" \
+    -cp "${GRAFT_CLASSES:-$ROOT/target/scala-2.13/classes}:/opt/spark/jars/*" \
     graft.Bench | tee "$outfile.raw" | grep -v '^#bench' | tail -1 > "$outfile"
 }
 
-cd /root/repo
+cd "$ROOT"
 run_one /root/testdata/sf0.1 /tmp/scaling_1x.json
 run_one "$S10"  /tmp/scaling_10x.json
 run_one "$S100" /tmp/scaling_100x.json
